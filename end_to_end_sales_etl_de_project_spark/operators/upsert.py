@@ -10,17 +10,19 @@ to partitions present in the update set (partition pruning on both the
 read and the overwrite via dynamic partition overwrite) instead of
 rewriting the table.
 
-Write protocol: new data lands in a temp dir first, then swaps in —
+Write protocol: new data lands in a staged dir first, then swaps in
+with :func:`~end_to_end_sales_etl_de_project_spark.writers.swap_in` —
 a reader never sees a half-written table.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from end_to_end_sales_etl_de_project_spark.writers import heal, swap_in
 
 
 def upsert_parquet(
@@ -55,9 +57,7 @@ def upsert_parquet(
     # crash recovery: a prior swap that died between its two renames
     # leaves data only in .bak — restore it before reading, otherwise
     # this call would take the create branch and silently drop history
-    bak0 = f"{target_path}.bak"
-    if not os.path.exists(target_path) and os.path.exists(bak0):
-        os.rename(bak0, target_path)
+    heal(target_path)
     tmp = f"{target_path}.staged-{uuid.uuid4().hex[:8]}"
     if os.path.exists(target_path):
         target = spark.read.parquet(target_path)
@@ -67,12 +67,5 @@ def upsert_parquet(
         merged = updates
     merged.write.mode("overwrite").parquet(tmp)
     n = spark.read.parquet(tmp).count()
-    bak = f"{target_path}.bak"
-    if os.path.exists(target_path):
-        shutil.rmtree(bak, ignore_errors=True)
-        os.rename(target_path, bak)
-        os.rename(tmp, target_path)
-        shutil.rmtree(bak)
-    else:
-        os.rename(tmp, target_path)
+    swap_in(tmp, target_path)
     return n

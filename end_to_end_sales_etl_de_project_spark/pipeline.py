@@ -102,50 +102,47 @@ def run_pipeline(
     # 4. mark START
     ledger.mark_start({n: valid_names[n] for n in to_process})
 
-    try:
-        # 5. single-pass schema'd read + union
-        sales = read_sales_csv(spark, report)
+    # 5. single-pass schema'd read + union
+    sales = read_sales_csv(spark, report)
 
-        # 6. enrichment — cached: feeds 2 marts + 2 metrics below
-        enriched = enrich_sales(
-            sales, dims["customer"], dims["store"], dims["sales_team"]
-        ).cache()
+    # 6. enrichment — cached: feeds 2 marts + 2 metrics below
+    enriched = enrich_sales(
+        sales, dims["customer"], dims["store"], dims["sales_team"]
+    ).cache()
 
-        # 7/8. marts + metrics — row counts ride the WRITE pass via
-        # df.observe() (an Observation resolves once its action runs),
-        # not a second .count() action per sink: the enriched frame is
-        # cached so the old double-execution was cheap, but at cluster
-        # scale every extra action is an extra stage DAG + scheduler
-        # round-trip per sink.
-        def _write(name: str, df: DataFrame, **write_kwargs) -> None:
-            obs = Observation(f"rows-{name}")
-            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            result.outputs[name] = write_parquet(
-                observed, os.path.join(output_dir, name), timestamp=run_ts, **write_kwargs
-            )
-            result.row_counts[name] = obs.get["rows"]
-
-        _write("customer_mart", customer_mart(enriched))
-        _write(
-            "sales_team_mart",
-            sales_team_mart(enriched),
-            partition_by=["sales_month", "store_id"],
+    # 7/8. marts + metrics — row counts ride the WRITE pass via
+    # df.observe() (an Observation resolves once its action runs),
+    # not a second .count() action per sink: the enriched frame is
+    # cached so the old double-execution was cheap, but at cluster
+    # scale every extra action is an extra stage DAG + scheduler
+    # round-trip per sink.
+    def _write(name: str, df: DataFrame, **write_kwargs) -> None:
+        obs = Observation(f"rows-{name}")
+        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        result.outputs[name] = write_parquet(
+            observed, os.path.join(output_dir, name), timestamp=run_ts, **write_kwargs
         )
-        _write("customer_monthly_purchase", customer_monthly_purchase(enriched))
-        _write("sales_team_incentive", sales_team_incentive(enriched))
+        result.row_counts[name] = obs.get["rows"]
 
-        enriched.unpersist()
+    _write("customer_mart", customer_mart(enriched))
+    _write(
+        "sales_team_mart",
+        sales_team_mart(enriched),
+        partition_by=["sales_month", "store_id"],
+    )
+    _write("customer_monthly_purchase", customer_monthly_purchase(enriched))
+    _write("sales_team_incentive", sales_team_incentive(enriched))
 
-        # 9. archive processed inputs
-        processed_dir = os.path.join(output_dir, ROUTE_PROCESSED, run_ts)
-        os.makedirs(processed_dir, exist_ok=True)
-        for path in report.valid:
-            shutil.move(path, os.path.join(processed_dir, os.path.basename(path)))
-        result.processed_files = to_process
+    enriched.unpersist()
 
-        # 10. mark COMPLETED — last, so any failure above leaves START
-        ledger.mark_completed(to_process)
-    except Exception:
-        # ledger stays in START: the next run's crash check fires.
-        raise
+    # 9. archive processed inputs
+    processed_dir = os.path.join(output_dir, ROUTE_PROCESSED, run_ts)
+    os.makedirs(processed_dir, exist_ok=True)
+    for path in report.valid:
+        shutil.move(path, os.path.join(processed_dir, os.path.basename(path)))
+    result.processed_files = to_process
+
+    # 10. mark COMPLETED — last, so any failure above leaves the ledger
+    # in START and the next run's crash check fires
+    ledger.mark_completed(to_process)
     return result

@@ -118,8 +118,7 @@ def read_sales_csv(
     # Headers come from the validation report — no second peek.
     by_shape: dict[tuple[str, ...], list[str]] = {}
     for path in report.valid:
-        header = report.headers.get(path) or _peek_header(path)[0]
-        by_shape.setdefault(tuple(header), []).append(path)
+        by_shape.setdefault(tuple(report.headers[path]), []).append(path)
 
     frames: list[DataFrame] = []
     for header, paths in by_shape.items():

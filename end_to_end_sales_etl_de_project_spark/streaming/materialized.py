@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_sales_etl_de_project_spark.functions.scalar import money
+from end_to_end_sales_etl_de_project_spark.writers import heal, swap_in
 
 
 def fold_additive_batch(
@@ -45,9 +46,9 @@ def fold_additive_batch(
     upsert and a separate marker file would otherwise double-fold the
     replayed batch.
 
-    Crash recovery (same pattern as upsert_parquet): a prior fold that
+    Crash recovery (same protocol as upsert_parquet): a prior fold that
     died between its two renames leaves the mart only in .bak; without
-    the restore, the replayed epoch would find no mart/marker, take
+    :func:`heal`, the replayed epoch would find no mart/marker, take
     the merged=partial branch, and silently replace accumulated
     history with one micro-batch's aggregates.
     """
@@ -55,10 +56,9 @@ def fold_additive_batch(
         key_cols = ["user_id", "event_type"]
     import glob
     import shutil
+    import uuid
 
-    bak0 = mart_path + ".bak"
-    if not os.path.exists(mart_path) and os.path.exists(bak0):
-        os.rename(bak0, mart_path)
+    heal(mart_path)
     # a fold that died between writing its staged dir and the swap leaves
     # an orphaned .staged-<uuid>; sweep them here so crashes don't
     # accumulate stale directories across restarts
@@ -98,20 +98,11 @@ def fold_additive_batch(
     # staged write + swap directly (the merge already replaced every key,
     # so upsert_parquet's anti-join/dup machinery would be wasted mart
     # reads); one mart read per micro-batch total.
-    import uuid
-
     tmp = f"{mart_path}.staged-{uuid.uuid4().hex[:8]}"
     out.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_epoch.json"), "w") as f:
         json.dump({"last_epoch": epoch_id}, f)
-    bak = mart_path + ".bak"
-    if os.path.exists(mart_path):
-        shutil.rmtree(bak, ignore_errors=True)
-        os.rename(mart_path, bak)
-        os.rename(tmp, mart_path)
-        shutil.rmtree(bak)
-    else:
-        os.rename(tmp, mart_path)
+    swap_in(tmp, mart_path)
 
 
 def _fold_batch(spark: SparkSession, mart_path: str, batch: DataFrame, epoch_id: int) -> None:

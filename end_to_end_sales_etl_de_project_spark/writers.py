@@ -12,11 +12,25 @@ construction:
 Timestamped output directories reproduce the reference's
 ``<dir>/<ts>/`` layout (write.py:8-10) but take the timestamp as an
 argument — writers are deterministic; clocks belong to the caller.
+
+Every rewrite of an existing directory (compaction, key deletion, the
+upsert, the materialized-view fold, the ledger compaction) commits
+through one protocol: the new contents are written to a staged sibling,
+then :func:`swap_in` renames ``path`` to ``<path>.bak`` and the staged
+dir to ``path``, and deletes the backup last. POSIX has no atomic swap
+of two directories without a transactional table format, so the window
+between the two renames is the one non-atomic step; it is two metadata
+ops wide, not O(data). Because the backup name is fixed, :func:`heal`
+can finish a swap that died in that window: every reader of a swapped
+directory calls it first, so ``path`` never reads as missing or empty.
+On a real lakehouse this is exactly what Delta/Iceberg's atomic commit
+replaces.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -27,30 +41,62 @@ def write_parquet(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     timestamp: str | None = None,
-    compact_partitions: bool = True,
 ) -> str:
     """Write parquet, optionally Hive-partitioned. Returns the final
     path. Partitioning by low-cardinality keys (e.g. sales_month,
     store_id — reference main_1.py:524-529) gives downstream partition
     pruning for free.
 
-    ``compact_partitions`` repartitions on the partition keys before a
-    partitioned write: without it every upstream task emits a file into
-    every leaf it touches (measured 4x file blowup at 200k rows; at
-    cluster scale it's tasks x leaves — the canonical small-files
-    failure). One shuffle buys one file per leaf. Disable only when a
-    single leaf exceeds a comfortable file size and you want multiple
-    writers per leaf.
+    A partitioned write repartitions on the partition keys first:
+    without it every upstream task emits a file into every leaf it
+    touches (measured 4x file blowup at 200k rows; at cluster scale
+    it's tasks x leaves — the canonical small-files failure). One
+    shuffle buys one file per leaf.
     """
     if timestamp:
         path = os.path.join(path, timestamp)
-    if partition_by and compact_partitions:
+    if partition_by:
         df = df.repartition(*partition_by)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return path
+
+
+def heal(path: str) -> None:
+    """Finish a :func:`swap_in` that died between its two renames: when
+    ``path`` is missing and ``<path>.bak`` exists, rename it back."""
+    bak = path + ".bak"
+    if not os.path.exists(path) and os.path.exists(bak):
+        os.rename(bak, path)
+
+
+def swap_in(staged: str, path: str) -> None:
+    """Replace directory ``path`` (if any) with the complete directory
+    ``staged``. If the second rename raises, the original is rolled back
+    into place and the staged copy removed, so a failed swap neither
+    leaves ``path`` missing nor accumulates rewritten copies."""
+    heal(path)
+    bak = path + ".bak"
+    shutil.rmtree(bak, ignore_errors=True)  # left by a swap that died after its commit
+    if not os.path.exists(path):
+        os.rename(staged, path)
+        return
+    os.rename(path, bak)
+    try:
+        os.rename(staged, path)
+    except BaseException:
+        try:
+            os.rename(bak, path)
+        except OSError as rollback_err:
+            raise RuntimeError(
+                f"swap AND rollback failed — the original survives at {bak!r}; "
+                "restore it manually"
+            ) from rollback_err
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    shutil.rmtree(bak)
 
 
 def compact_parquet(
@@ -64,17 +110,15 @@ def compact_parquet(
     scale a million 1 MB files costs more in open/footer overhead than
     the data). Returns the new file count.
 
-    The rewrite is atomic at the directory level: the compacted output
-    lands in a staged sibling, the original is swapped out via two
-    renames, and the backup removed last — a crash before the swap
-    leaves the original untouched; after the first rename the staged
-    dir is complete and a retry just re-runs the compaction. File count
-    is computed from the ACTUAL on-disk bytes, never estimated from row
-    counts (row width varies wildly across schemas).
+    The compacted output lands in a staged sibling and is swapped in
+    with :func:`swap_in`; a crash between its renames is healed by the
+    next call. File count is computed from the ACTUAL on-disk bytes,
+    never estimated from row counts (row width varies wildly across
+    schemas).
     """
-    import shutil
     import uuid
 
+    heal(path)
     files = []
     for name in os.listdir(path):
         full = os.path.join(path, name)
@@ -83,11 +127,8 @@ def compact_parquet(
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total // target_file_bytes))  # ceil
     staged = f"{path}.staged-{uuid.uuid4().hex[:8]}"
-    bak = f"{path}.bak-{uuid.uuid4().hex[:8]}"
     spark.read.parquet(path).repartition(n_out).write.mode("overwrite").parquet(staged)
-    os.rename(path, bak)
-    os.rename(staged, path)
-    shutil.rmtree(bak)
+    swap_in(staged, path)
     return n_out
 
 
@@ -112,16 +153,9 @@ def delete_keys_parquet(
 ) -> int:
     """Targeted-row deletion by key — the right-to-be-forgotten /
     retention-expiry rewrite: every row whose ``key_col`` appears in
-    ``keys_df`` is dropped and the table is swapped in via the
-    staged-sibling + two-rename protocol (same as
-    :func:`compact_parquet`). A crash BEFORE the first rename leaves
-    the original untouched; a crash BETWEEN the two renames (the only
-    non-atomic window — POSIX gives no multi-dir atomic swap without a
-    transactional table format) is recovered here: the second rename is
-    wrapped so the .bak sibling is restored to ``path`` on failure, and
-    the window is two metadata ops wide, not O(data). On a real
-    lakehouse this is exactly what Delta/Iceberg's atomic commit
-    replaces. Returns the number of rows deleted.
+    ``keys_df`` is dropped and the table is swapped in from a staged
+    sibling with :func:`swap_in` (same as :func:`compact_parquet`).
+    Returns the number of rows deleted.
 
     Scale shape: the delete set is deduplicated and joined ANTI against
     the table. The join strategy is left to the optimizer/AQE — a
@@ -134,34 +168,17 @@ def delete_keys_parquet(
     directory, which is the correct baseline and the only safe option
     for unpartitioned layouts.
     """
-    import shutil
     import uuid
 
     from pyspark.sql import functions as F
 
+    heal(path)
     current = spark.read.parquet(path)
     doomed = keys_df.select(F.col(key_col).alias("__dk")).distinct()
     kept = current.join(doomed, current[key_col] == F.col("__dk"), "left_anti")
     n_before = current.count()
     staged = f"{path}.staged-{uuid.uuid4().hex[:8]}"
-    bak = f"{path}.bak-{uuid.uuid4().hex[:8]}"
     kept.write.mode("overwrite").parquet(staged)
     n_after = spark.read.parquet(staged).count()
-    os.rename(path, bak)
-    try:
-        os.rename(staged, path)
-    except BaseException as swap_err:
-        # roll the original back into place so a crash in the swap
-        # window never leaves `path` missing; drop the staged copy (a
-        # full rewritten table) so failed swaps don't accumulate them
-        try:
-            os.rename(bak, path)
-        except OSError as rollback_err:
-            raise RuntimeError(
-                f"delete_keys_parquet: swap AND rollback failed — the "
-                f"original table survives at {bak!r}; restore it manually"
-            ) from rollback_err
-        shutil.rmtree(staged, ignore_errors=True)
-        raise swap_err
-    shutil.rmtree(bak)
+    swap_in(staged, path)
     return n_before - n_after

@@ -41,9 +41,9 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
 
 
 def test_uncompacted_control_fans_out(spark, tmp_path):
-    out = write_parquet(
-        _df(spark), str(tmp_path / "p"), partition_by=["grp"], compact_partitions=False
-    )
+    # the layout write_parquet avoids: a plain partitioned write
+    out = str(tmp_path / "p")
+    _df(spark).write.partitionBy("grp").parquet(out)
     files = len(glob.glob(f"{out}/grp=*/*.parquet"))
     assert files > 4  # tasks x leaves blowup the default prevents
     # both layouts hold identical data (partition columns come back
