@@ -11,64 +11,47 @@ block-manager storage monotonically, and the r14 driver run exhausted
 host memory — 40/50 oracle subprocesses failed 16 KB DuckDB allocations
 (VERDICT r14, "What's wrong #1").
 
-Two rules, both enforced here so call sites cannot drift:
+Every checkpoint in the package goes through :func:`eager_checkpoint`
+(``localCheckpoint`` appears nowhere else), at one storage level:
+``MEMORY_AND_DISK_DESER``, because checkpoints are re-read hot — A/B at
+sf0.1 measured ``DISK_ONLY`` 20-100% slower on checkpoint-heavy queries
+(d28 1.31→2.23 s, d24 +0.2 s) from the serialize+read-back round trip,
+and ``MEMORY_ONLY`` turns eviction into hard failures (a local
+checkpoint has no lineage to recompute from).
 
-1. **One storage level for every checkpoint, set here.** The default
-   stays ``MEMORY_AND_DISK_DESER`` (what ``localCheckpoint`` uses when
-   no level is passed) because the artifacts are re-read hot — A/B at
-   sf0.1 measured ``DISK_ONLY`` 20-100% slower on checkpoint-heavy
-   queries (d28 1.31→2.23 s, d24 +0.2 s) from the serialize+read-back
-   round trip. ``SPARK_GRAFT_CKPT_LEVEL=DISK_ONLY`` (or
-   ``MEMORY_AND_DISK``, serialized) trades that CPU for a small JVM
-   heap on memory-constrained hosts: blocks then live in the OS page
-   cache, which the kernel can reclaim under pressure, unlike JVM
-   heap. With rule 2 below, the LIVE block set is bounded either way.
+Each checkpoint has exactly one of three lifetimes:
 
-2. **Per-invocation checkpoints are freed, not leaked.** A checkpoint
-   that only serves the plan being built (a flag set consumed by a
-   count, a candidate list consumed by per-leg scalars) is freed as
-   soon as its last consumer has materialized (``free_checkpoint``).
-   A checkpoint the RETURNED DataFrame still reads cannot be freed at
-   build time — those register under a per-call-site scope
-   (``scoped_checkpoint``) that keeps the last ``_KEEP`` generations
+1. **Session.** A session artifact (``sources.tables.session_artifact``:
+   the shingle index, MinHash signatures, LM scores, ...) is built once
+   per (session, corpus) and served to every later consumer, so it is
+   materialized with plain :func:`eager_checkpoint` and never freed
+   while its session and corpus live. It must NEVER go through a scope:
+   a scope frees generations that the memo still serves.
+2. **This plan only.** A checkpoint consumed before the plan is returned
+   (a flag set read by a count, a candidate list read by per-leg
+   scalars) is freed as soon as its last consumer has materialized
+   (:func:`free_checkpoint`).
+3. **Scoped.** A checkpoint the RETURNED DataFrame still reads cannot be
+   freed at build time — it registers under a per-call-site scope
+   (:func:`scoped_checkpoint`) that keeps the last ``_KEEP`` generations
    and frees older ones on re-entry, so repeated invocations (bench
    warm + min-of-N loops, the driver's verify sweep) hold O(1) live
    generations per site instead of O(invocations).
-
-Session-scoped artifacts (the ``plans/documents.py`` memo family) are
-NOT scoped here — they are one checkpoint per (session, corpus) by
-construction and carry a documented production rationale — but they go
-through :func:`eager_checkpoint`, so rule 1 applies to them too.
 """
 
 from __future__ import annotations
 
-import os
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_LEVELS: dict[str, StorageLevel] = {
-    "DISK_ONLY": StorageLevel.DISK_ONLY,
-    "MEMORY_AND_DISK": StorageLevel.MEMORY_AND_DISK,
-    "MEMORY_AND_DISK_DESER": StorageLevel.MEMORY_AND_DISK_DESER,
-    "MEMORY_ONLY": StorageLevel.MEMORY_ONLY,
-}
-
-
-def checkpoint_level() -> StorageLevel:
-    name = os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK_DESER")
-    try:
-        return _LEVELS[name]
-    except KeyError:
-        raise ValueError(
-            f"SPARK_GRAFT_CKPT_LEVEL={name!r} — choose one of {sorted(_LEVELS)}"
-        ) from None
-
 
 def eager_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` at the engine's storage level."""
-    return df.localCheckpoint(eager=True, storageLevel=checkpoint_level())
+    return df.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
+    )
 
 
 def free_checkpoint(df: DataFrame) -> None:
@@ -98,6 +81,10 @@ def free_checkpoint(df: DataFrame) -> None:
 # build, so generation N-2 is always dead by the time it is freed.
 _SCOPES: dict[str, list[DataFrame]] = {}
 _KEEP = 2
+# scoped_checkpoint runs on thread-pool workers (lsh_tuning_curve
+# materializes its banding legs concurrently): the append-then-trim of
+# a site's generation list must not interleave
+_SCOPES_LOCK = threading.Lock()
 
 
 def scoped_checkpoint(site: str, df: DataFrame) -> DataFrame:
@@ -107,8 +94,9 @@ def scoped_checkpoint(site: str, df: DataFrame) -> DataFrame:
     bounding a session's live checkpoint blocks at O(sites), not
     O(invocations)."""
     ckpt = eager_checkpoint(df)
-    live = _SCOPES.setdefault(site, [])
-    live.append(ckpt)
-    while len(live) > _KEEP:
-        free_checkpoint(live.pop(0))
+    with _SCOPES_LOCK:
+        live = _SCOPES.setdefault(site, [])
+        live.append(ckpt)
+        while len(live) > _KEEP:
+            free_checkpoint(live.pop(0))
     return ckpt

@@ -56,8 +56,8 @@ from end_to_end_sales_etl_de_project_spark.checkpoints import (
     scoped_checkpoint,
 )
 
-# r10-era name kept for in-repo call sites; the lifecycle rules (and the
-# r15 storage-level + scope machinery) live in checkpoints.py.
+# r10-era name kept for in-repo call sites; the lifecycle rules (storage
+# level, scopes) live in checkpoints.py.
 _free_local_checkpoint = free_checkpoint
 
 
@@ -2949,27 +2949,27 @@ CMS_DEPTH = 4
 
 
 def cms_exact_df(hashed_shingles: DataFrame, depth: int = CMS_DEPTH) -> DataFrame:
-    """The d28 ground-truth table, materialized: per distinct shingle
-    its exact document frequency plus the ``depth`` width-independent
-    seed hashes (bucket for any width = ``h_s % w``). localCheckpoint'd
-    — every grid leg reads it ~5x and Spark re-derives unshared
-    subtrees per read; a production audit stages it to parquet."""
+    """The d28 ground-truth table: per distinct shingle its exact
+    document frequency plus the ``depth`` width-independent seed hashes
+    (bucket for any width = ``h_s % w``). Returned as a plan — callers
+    materialize it (the plans layer checkpoints it as a session
+    artifact): every grid leg reads it ~5x and Spark re-derives
+    unshared subtrees per read; a production audit stages it to
+    parquet."""
     key_str = F.col("shingle").cast("string")
-    return scoped_checkpoint(
-        "cms_exact_df",
+    return (
         hashed_shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .select(
             "c", *[h60_seeded(key_str, s).alias(f"h{s}") for s in range(depth)]
-        ),
+        )
     )
 
 
 def cms_error_audit(
-    hashed_shingles: DataFrame,
+    ex: DataFrame,
     w_grid: tuple[int, ...] = CMS_W_GRID,
     depth: int = CMS_DEPTH,
-    ex: DataFrame | None = None,
 ) -> DataFrame:
     """The count-min-sketch width-dial as a hash-checked table — d23's
     sizing-curve pattern applied to COUNT estimation instead of
@@ -3004,11 +3004,9 @@ def cms_error_audit(
     # bounded bucket aggregate, and a broadcast join back. Without the
     # hoist each leg re-derived the md5s on both the probe and
     # bucket-sum sides (~50M md5 calls at sf0.1 — measured 3.9 s;
-    # hoisted ~1.6M calls once). Pass ``ex`` (built by
-    # :func:`cms_exact_df`, staged per session in the plans layer —
-    # the split_shingles/d23 pattern) to skip even the one build.
-    if ex is None:
-        ex = cms_exact_df(hashed_shingles, depth)
+    # hoisted ~1.6M calls once). ``ex`` is :func:`cms_exact_df`'s
+    # table, materialized by the caller (the plans layer stages it per
+    # session — the split_shingles/d23 pattern).
     legs = []
     for w in w_grid:
         withb = ex.select(

@@ -29,13 +29,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from end_to_end_sales_etl_de_project_spark.checkpoints import scoped_checkpoint
 from end_to_end_sales_etl_de_project_spark.functions.scalar import money, money_sum, month_key
 from end_to_end_sales_etl_de_project_spark.operators.metrics import (
     top_performer_incentive,
     windowed_partition_sum,
 )
-from end_to_end_sales_etl_de_project_spark.sources.tables import load_table, spread
+from end_to_end_sales_etl_de_project_spark.sources.tables import (
+    load_table,
+    session_artifact,
+    spread,
+)
 
 CORE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 CORE_ORACLES: dict[str, str] = {}
@@ -4300,20 +4303,14 @@ GROUP BY 1
 # layout an installation builds ONCE and joins against many times
 # (VERDICT r8 #8: charging the bench's steady-state timing for two
 # table writes per query call measured the layout, not the join — the
-# c11 fingerprint-artifact pattern applies). Keyed by applicationId so
-# a fresh session rebuilds; stale apps' entries are dropped.
-_BUCKET_TABLES: dict[tuple, tuple[str, str]] = {}
+# c11 fingerprint-artifact pattern applies). A session artifact: a
+# fresh session rebuilds the layout.
 
 
 def _bucketed_join_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from end_to_end_sales_etl_de_project_spark.sources.tables import (
-        session_memo_key,
-    )
+    import hashlib
 
-    key = session_memo_key(_BUCKET_TABLES, spark, sf_dir)
-    if key not in _BUCKET_TABLES:
-        import hashlib
-
+    def build() -> tuple[str, str]:
         out = _staging_dir(spark, "bucketrt", sf_dir)
         suffix = hashlib.md5(out.encode()).hexdigest()[:8]
         li_tbl, ord_tbl = f"b_li_{suffix}", f"b_ord_{suffix}"
@@ -4337,8 +4334,9 @@ def _bucketed_join_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .mode("overwrite")
             .saveAsTable(ord_tbl)
         )
-        _BUCKET_TABLES[key] = (li_tbl, ord_tbl)
-    return _BUCKET_TABLES[key]
+        return li_tbl, ord_tbl
+
+    return session_artifact("bucket_tables", spark, sf_dir, build=build)
 
 
 @_register("q101_bucketed_join", _Q101_ORACLE)

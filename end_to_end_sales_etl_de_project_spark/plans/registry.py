@@ -9,11 +9,9 @@ Ordering matters: the driver's correctness run checks the FIRST
 ``DRIVER_WINDOW_SIZE`` entries of ``queries()`` in dict-insertion order
 (verified rounds 1-2: each CORRECTNESS file is exactly the first 50
 names). ``DRIVER_WINDOW`` therefore front-loads queries with no driver
-row yet — round 5: the 15 new operators plus every query whose code
-path changed this round (session-memoized shingle/curation artifacts,
-per-session staging dirs, the m05 oracle promotion) — then r01-era
-evidence refresh. Rotated-out queries are green in at least one prior
-round and still run in the local parity suite
+row yet and queries whose code changed since their evidence round, then
+the oldest-evidence refresh. Rotated-out queries are green in at least
+one prior round and still run in the local parity suite
 (tests/test_oracle_parity.py covers ALL oracles at sf0.001). Union over
 rounds: every registered query has at least one driver correctness row
 (tests/test_registry_window.py enforces this).
@@ -33,46 +31,10 @@ DRIVER_WINDOW_SIZE = 50
 
 # First-50 layout for the driver correctness run. Order within the
 # window is immaterial to the driver; grouping is for human diffing.
-# Round-5 rotation: every r04-window query is green in CORRECTNESS_r04,
-# so slots go to (a) queries whose CODE PATH changed this round — the
-# shingle-index rewiring and the per-session staging dirs — (b) the
-# m05 oracle promotion, (c) r01-era evidence refresh (VERDICT r4 #3).
-# The late-round second batch (q77-q83, e26-e28, t23, c07, d13, m06,
-# d14) then displaced most of (c): new queries MUST hold a slot (the
-# union invariant), while the displaced refresh rows all retain
-# r01/r02 driver evidence and stay under local parity at sf0.001.
-# A third batch (q84-q90, d15, d16, e29-e31, c08, c09, t24, t25)
-# displaced the remaining roundtrip/refresh rows (q33/q34/q45/q46/
-# q56/q57/q61/q69, q01, d02, d03, d06, d08, d09, c01, c02) — each has
-# green driver evidence from r02 or r04, and every round-5 changed
-# path keeps an in-window representative: q58 (per-session staging
-# dirs), d16 (session shingle index), d14/t25 (component artifact),
-# c06 (curation-decision artifact, i.e. the full curate_corpus
-# chain), c08 (split-shingle artifacts + fuzzy path), t24/c09 (LM
-# score artifact), m05 (oracle promotion).
-# Everything rotated out stays under tests/test_oracle_parity.py at
-# sf0.001, and tests/test_registry_window.py enforces the union
-# invariant (every registered query has driver evidence from some round
-# or a slot here) plus the rows-only allowlist.
-# Round-7 rotation (VERDICT r6 #1 + #5): slots go to (a) the seven
-# queries with NO driver evidence — the round-6 stragglers a14/t26
-# (registered after the r6 rotation, which turned
-# tests/test_registry_window.py red) plus the round-7 additions
-# (q93 permissive rescue, q94-q97 TPC-H Q2/Q22/Q11/Q21 shapes, a15
-# recall curve, d17 substring dedup, t27 DSIR importance), (b) ALL 34
-# queries flagged STALE by
-# scripts/driver_evidence.py — green evidence but their function or a
-# directly-called package function changed since the evidence round
-# (the r6 de-broadcast touched q76/q82/q85/q86/q87/q01g; the
-# _staging_dir refactor touched the roundtrips; the shingle index/
-# df-cap work touched the d-family; the ground-truth hoist touched
-# a06; the r7 real-decode branch touched m02) — and (c)
-# oldest-evidence refresh: the remaining r02-era rows (q51/q53/q54
-# yielded their slots to the late-round-7 additions q97/d17/t27 and
-# join the r8 refresh queue). The r03-era rows (a01, c03, d04, d05,
-# e04-e06, e10-e15, q59, t04-t15, q50) are first in line for the r8
-# window; all rotated-out queries stay under local parity at sf0.001
-# every run (tests/test_oracle_parity.py).
+# Rotation history lives in CHANGES.md and git history; rotated-out
+# queries stay under local parity at sf0.001 every run
+# (tests/test_oracle_parity.py), and tests/test_registry_window.py
+# enforces the union and staleness invariants.
 DRIVER_WINDOW: list[str] = [
     # ---- Round-15 rotation (VERDICT r14 #2). The r14 verify OOM'd
     # from entry 11 on, so only the first 10 r14-window rows earned
@@ -85,8 +47,9 @@ DRIVER_WINDOW: list[str] = [
     # changed in r15; artifact-builder layout changes are excused by
     # the fingerprint-pinned r15 attestation in scripts/
     # driver_evidence.py, with the full parity-suite sweep as the
-    # verification). The remaining 15 slots are the standing refresh
-    # queue, oldest evidence first: q32 (r07 rows-only), then r08-era
+    # verification). The remaining 15 slots were the standing refresh
+    # queue (q32 has since yielded its slot to d28, see below),
+    # oldest evidence first: q32 (r07 rows-only), then r08-era
     # rows — preferring those whose r14 re-verification was lost to the
     # OOM cascade (e03/q55/q98/q99/q100/q103/q104/t12) and the four
     # rows the r14 rotation itself displaced (e01/e14/m03 + t02/t03/
@@ -128,8 +91,18 @@ DRIVER_WINDOW: list[str] = [
     "q81_cumulative_distinct",
     "t21_doc_lm_score",
     "t37_gopher_rules",
-    # -- refresh queue, oldest evidence first (15)
-    "q32_approx_aggs",
+    # -- changed by the session-artifact memo consolidation (1): d28's
+    # cms_error_audit now takes the materialized exact-DF table (and
+    # d28 has no green driver row yet). Its slot comes from the refresh
+    # head, q32: the r07 rows-only row is re-run by the in-suite
+    # rows-only check every session and its hash-green twin q92 carries
+    # r11 evidence, while every other refresh row is a documents/
+    # events/sales reader whose planted-NULL parity sweep is derived
+    # from this window. q32 heads the next refresh queue. (d11, also
+    # changed, already holds an r15 slot above; a20's docstring-only
+    # edit is attested in scripts/driver_evidence.py.)
+    "d28_cms_error_audit",
+    # -- refresh queue, oldest evidence first (14)
     "e01_tumbling_hourly",
     "e14_interarrival_native",
     "m03_frame_sample",

@@ -29,21 +29,6 @@ TABLES = (
 )
 
 
-
-# Resolved-relation memo — the catalog role a metastore plays: each
-# spark.read.parquet call re-lists the path and re-reads footers for
-# schema (~0.15 s of driver time, measured sf0.1), and every fresh
-# query construction re-paid it per table (a 6-table join chain spent
-# ~1 s here alone, PERF.md r9). DataFrames are immutable lazy plans, so
-# one resolved relation per (session, table path, data fingerprint)
-# serves every consumer; keyed by applicationId like the other session
-# artifacts so a stopped session's relations are never reused, and by
-# corpus_fingerprint so a mid-session rewrite of the files is never
-# served from the stale relation (its cached file listing would even
-# point at deleted part files).
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
-
-
 def corpus_fingerprint(path: str) -> int:
     """Content-version stamp for a local table/corpus path: hash of
     the sorted (relative path, size, mtime_ns) listing under `path`
@@ -82,9 +67,7 @@ def session_memo_key(cache: dict, spark: SparkSession, path: str, *extra) -> tup
     never be served again: stopped sessions (their checkpointed RDDs
     are gone with the executors) and same-path entries whose data
     fingerprint no longer matches (the artifact describes data that no
-    longer exists). Shared by the table catalog and every artifact
-    memo in the plans layer so the staleness rule cannot drift per
-    site."""
+    longer exists). The key rule of :func:`session_artifact`."""
     app = spark.sparkContext.applicationId
     fp = corpus_fingerprint(path)
     for key in [
@@ -94,11 +77,38 @@ def session_memo_key(cache: dict, spark: SparkSession, path: str, *extra) -> tup
     return (app, path, fp, *extra)
 
 
+# Session artifacts: anything derived once per (session, corpus) and
+# served to every later consumer — checkpointed tables (shingle index,
+# MinHash signatures, LM scores, ...), trained models, bucketed-table
+# names, and load_table's resolved relations. Catalyst shares no
+# subtrees across plans, so each consumer that re-derived these would
+# re-pay the dominant shuffle (or, for relations, the path listing and
+# footer reads) per query. One memo, keyed by session_memo_key's rule:
+# (applicationId, path, corpus_fingerprint(path), name, *params), with
+# stopped-session and stale-fingerprint entries evicted — a stopped
+# session's checkpoints are gone, and a rewritten corpus is never
+# served from an artifact of the old data. Checkpointed artifacts use
+# checkpoints.eager_checkpoint, never scoped_checkpoint: a scope frees
+# generations that this memo still serves.
+_ARTIFACTS: dict[tuple, object] = {}
+
+
+def session_artifact(name: str, spark: SparkSession, path: str, *params, build):
+    """The ``name`` artifact of the data at ``path`` (with ``params``)
+    for this session: ``build()``'s result, built on first use."""
+    key = session_memo_key(_ARTIFACTS, spark, path, name, *params)
+    if key not in _ARTIFACTS:
+        _ARTIFACTS[key] = build()
+    return _ARTIFACTS[key]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one catalog table. Plain `spark.read.parquet` (memoized per
-    session — see ``_TABLE_MEMO``) — filters and projections applied by
-    callers are pushed into the scan by Catalyst, so no eager work
-    happens here.
+    """Load one catalog table. Plain `spark.read.parquet`, resolved
+    once per session as a session artifact (each read re-lists the path
+    and re-reads footers for schema: ~0.15 s of driver time at sf0.1,
+    ~1 s for a 6-table join chain, PERF.md r9) — filters and
+    projections applied by callers are pushed into the scan by
+    Catalyst, so no eager work happens here.
 
     Pins the session timezone to UTC: timestamp→string rendering (the
     reference's month-key semantics) must not depend on whoever built
@@ -112,16 +122,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (Spark 4 default is ANSI on) — pin NULL semantics for any session
     if spark.conf.get("spark.sql.ansi.enabled", "true") != "false":
         spark.conf.set("spark.sql.ansi.enabled", "false")
-    key = session_memo_key(_TABLE_MEMO, spark, f"{sf_dir}/{name}.parquet")
-    if key not in _TABLE_MEMO:
-        if name == "events":
-            enable_nanos_as_long(spark)
-            _TABLE_MEMO[key] = normalize_event_ts(
-                spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            )
-        else:
-            _TABLE_MEMO[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _TABLE_MEMO[key]
+    path = f"{sf_dir}/{name}.parquet"
+
+    def read() -> DataFrame:
+        if name != "events":
+            return spark.read.parquet(path)
+        enable_nanos_as_long(spark)
+        return normalize_event_ts(spark.read.parquet(path))
+
+    return session_artifact("table", spark, path, build=read)
 
 
 def enable_nanos_as_long(spark: SparkSession) -> None:

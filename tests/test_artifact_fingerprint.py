@@ -89,3 +89,19 @@ def test_shingle_index_rebuilds_after_rewrite(spark, mutable_sf):
     # the rebuilt index covers only the surviving docs (NULL-text docs
     # aside, strictly fewer than before)
     assert n_after < n_before, (n_before, n_after)
+
+
+def test_cms_audit_reruns_after_other_corpora(spark, tmp_path):
+    """d28 on corpora A, B, C and then A again must serve A's exact-DF
+    artifact from the session memo. A memoized artifact materialized
+    under a per-call-site checkpoint scope was freed two generations
+    later (by C's build), and the second A run failed with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    dirs = []
+    for name in ("a", "b", "c"):
+        d = tmp_path / name
+        d.mkdir()
+        shutil.copy(f"{SRC}/documents.parquet", d / "documents.parquet")
+        dirs.append(str(d))
+    for sf in (*dirs, dirs[0]):
+        assert doc_plans.d28_cms_error_audit(spark, sf).collect(), sf

@@ -51,6 +51,46 @@ def test_scoped_checkpoint_keeps_two_generations(spark):
     C._SCOPES.pop(site, None)
 
 
+def test_scoped_checkpoint_is_thread_safe(monkeypatch):
+    """lsh_tuning_curve calls scoped_checkpoint from thread-pool
+    workers. Under heavy thread switching, every generation is either
+    still live or freed exactly once, and each site keeps exactly
+    ``_KEEP`` — a lost update would leak a generation or free one
+    twice."""
+    import itertools
+    import sys
+    import threading
+
+    tokens = itertools.count()
+    freed: list[int] = []
+    monkeypatch.setattr(C, "eager_checkpoint", lambda df: next(tokens))
+    monkeypatch.setattr(C, "free_checkpoint", freed.append)
+    sites = [f"test_r15.stress{i}" for i in range(2)]
+    n_threads, per_thread = 16, 200
+
+    def worker(i: int) -> None:
+        for _ in range(per_thread):
+            C.scoped_checkpoint(sites[i % 2], None)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        live = [g for s in sites for g in C._SCOPES[s]]
+        assert all(len(C._SCOPES[s]) == C._KEEP for s in sites)
+        assert len(freed) == len(set(freed))
+        assert sorted(freed + live) == list(range(n_threads * per_thread))
+    finally:
+        sys.setswitchinterval(old)
+        for s in sites:
+            C._SCOPES.pop(s, None)
+
+
 def test_artifact_heavy_session_storage_is_bounded(spark):
     """The driver-loop reproduction, in-suite: run the checkpoint-heavy
     query set (every operator family that materializes per-invocation
