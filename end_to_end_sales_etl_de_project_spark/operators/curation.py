@@ -57,13 +57,7 @@ from end_to_end_sales_etl_de_project_spark.operators.text import (
 # ---------------------------------------------------------------------------
 
 
-def contamination_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    sh_base: DataFrame | None = None,
-) -> DataFrame:
+def contamination_report(sh_base: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per TEST-split document: how many of its distinct k-gram shingles
     also occur anywhere in the TRAIN split. A test doc sharing verbatim
     k-grams with training data inflates eval scores; this is the check
@@ -75,52 +69,24 @@ def contamination_report(
     per test doc — (doc_id, n_shingles, n_contaminated,
     is_contaminated), including zero-overlap docs via the left join.
 
-    The (doc, split, shingles) base feeds three consumers (test sizes,
-    test inventory, train inventory); tokenize+shingle is the dominant
-    CPU cost, so the base is materialized ONCE (localCheckpoint) instead
-    of recomputed per branch — measured 3.1 s → ~1.3 s at sf0.1. On a
-    real cluster prefer a reliable checkpoint dir (executor loss
-    invalidates local checkpoints); the shape is identical.
-
-    ``sh_base``: an already-materialized (doc, split, sh) table (the
-    session contamination artifact) — passing it skips the per-call
-    tokenize+shingle+checkpoint entirely, so repeated runs (and sibling
-    audits like the agreement matrix) re-pay nothing. It SUPERSEDES
-    ``id_col``/``text_col`` (already baked into the artifact); its
-    shingle width must match ``k`` — artifacts stamped with
-    ``_shingle_k`` (the _shingle_index discipline) are verified here,
-    so a k=3 artifact against the default k=5 fails loudly instead of
-    computing wrong overlap counts (ADVICE r5).
+    ``sh_base`` is the materialized (doc, split, sh) table — each doc's
+    split and its distinct k-gram shingle array (the session 5-gram
+    artifact in plans/documents.py). It feeds three consumers (test
+    sizes, test inventory, train inventory) and tokenize+shingle is the
+    dominant CPU cost, so it is built once per corpus and every audit
+    (d07, the c08 agreement matrix) reads it. ``id_col`` names the
+    output id column.
     """
-    if sh_base is not None:
-        stamped = getattr(sh_base, "_shingle_k", None)
-        if stamped is not None and stamped != k:
-            raise ValueError(
-                f"sh_base was shingled with k={stamped}, but k={k} was "
-                "requested — pass a matching artifact or drop sh_base"
-            )
-        base = sh_base
-    else:
-        base = scoped_checkpoint(
-            "contamination_report.base",
-            docs.select(
-                F.col(id_col).alias("doc"),
-                corpus_split(text_col).alias("split"),
-                tokens(text_col).alias("toks"),
-            ).select(
-                "doc", "split", shingles_from_tokens(F.col("toks"), k).alias("sh")
-            ),
-        )
-    test_docs = base.filter(F.col("split") == "test").select(
+    test_docs = sh_base.filter(F.col("split") == "test").select(
         "doc", F.size("sh").cast("bigint").alias("n_shingles")
     )
     test_sh = (
-        base.filter(F.col("split") == "test")
+        sh_base.filter(F.col("split") == "test")
         .select("doc", F.explode("sh").alias("s"))
         .select("doc", h60(F.col("s")).alias("h"))
     )
     train_set = (
-        base.filter(F.col("split") == "train")
+        sh_base.filter(F.col("split") == "train")
         .select(F.explode("sh").alias("s"))
         .select(h60(F.col("s")).alias("h"))
         .distinct()
@@ -174,11 +140,7 @@ FROM tests t LEFT JOIN hits h USING (doc)
 
 
 def contamination_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    toks_base: DataFrame | None = None,
+    toks_base: DataFrame, id_col: str = "doc_id", k: int = 5
 ) -> DataFrame:
     """Span-level decontamination report: per TEST document, the
     longest CONSECUTIVE run of k-gram positions whose shingle also
@@ -195,21 +157,11 @@ def contamination_spans(
     (pos - row_number) per doc over just the CONTAMINATED positions.
     All counters are integers ⇒ hash-exact.
 
-    ``toks_base``: an already-materialized (doc, split, toks) table
-    (the session tokenized-split artifact) — skips re-tokenizing the
-    corpus on every run. It SUPERSEDES ``id_col``/``text_col`` (baked
-    into the artifact); ``k`` still applies here (shingling happens
-    below, on the tokens), so no width mismatch is possible.
+    ``toks_base`` is the materialized (doc, split, toks) table (the
+    session tokenized-split artifact), so no run re-tokenizes the
+    corpus; shingling at width ``k`` happens here, on the tokens.
     """
-    if toks_base is not None:
-        base = toks_base
-    else:
-        base = docs.select(
-            F.col(id_col).alias("doc"),
-            corpus_split(text_col).alias("split"),
-            tokens(text_col).alias("toks"),
-        )
-    test = base.filter(F.col("split") == "test")
+    test = toks_base.filter(F.col("split") == "test")
     test_docs = test.select(
         "doc",
         F.greatest(F.size("toks") - (k - 1), F.lit(0)).cast("bigint").alias("n_windows"),
@@ -224,7 +176,7 @@ def contamination_spans(
         .select("doc", "pos", h60(F.col("s")).alias("h"))
     )
     train_set = (
-        base.filter(F.col("split") == "train")
+        toks_base.filter(F.col("split") == "train")
         .select(F.explode(shingles_from_tokens(F.col("toks"), k)).alias("s"))
         .select(h60(F.col("s")).alias("h"))
         .distinct()
@@ -378,10 +330,10 @@ FROM ranked WHERE rank <= {top_n}
 
 def curate_corpus(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """The full curation decision per document — what an LLM-data
     pipeline runs end-to-end before training:
@@ -407,17 +359,16 @@ def curate_corpus(
     real cluster use a reliable checkpoint dir instead.
 
     ``hashed_shingles``: the corpus's materialized (doc, shingle-md5)
-    index (k=3, e.g. the session memo in plans/documents.py). The
-    near-dup stage only needs the SURVIVORS' shingles, and survivors ⊆
-    corpus — so the full-corpus artifact is reused by filtering it to
-    survivor ids instead of re-tokenizing the survivor texts inside
-    this plan (signatures + verify each re-read that subtree).
+    index (k=3, the session memo in plans/documents.py). The near-dup
+    stage only needs the SURVIVORS' shingles, and survivors ⊆ corpus —
+    so the full-corpus artifact is filtered to survivor ids instead of
+    re-tokenizing the survivor texts inside this plan.
 
     ``signatures``: the corpus's materialized MinHash signature table
     (doc, mh0..mh15). Per-doc signatures are corpus-independent (min
     over the doc's OWN shingles), so the survivor subset's signatures
-    are exactly the artifact filtered to survivor ids — the survivor
-    signature groupBy is skipped entirely.
+    are exactly the artifact filtered to survivor ids — no survivor
+    signature groupBy.
     """
     base = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
     ok = base.filter(quality_bucket("text") == "ok")
@@ -430,24 +381,9 @@ def curate_corpus(
         "curate_corpus.exact",
         ok.select("doc", "text", h60(F.col("text")).alias("th")).join(canon, "th"),
     )
-    survivors = exact.filter(F.col("doc") == F.col("canon_doc")).select("doc", "text")
-    surv_shingles = None
-    if hashed_shingles is not None:
-        surv_shingles = hashed_shingles.join(survivors.select("doc"), "doc")
-        hk = getattr(hashed_shingles, "_shingle_k", None)
-        if hk is not None:
-            # carry the width stamp through the survivor restriction so
-            # the downstream k-mismatch guard keeps working
-            surv_shingles._shingle_k = hk
-    surv_sigs = None
-    if signatures is not None and surv_shingles is not None:
-        surv_sigs = signatures.join(survivors.select("doc"), "doc")
+    survivors = exact.filter(F.col("doc") == F.col("canon_doc")).select("doc")
     pairs = dedup.minhash_lsh_pairs(
-        survivors,
-        "doc",
-        "text",
-        hashed_shingles=surv_shingles,
-        signatures=surv_sigs,
+        hashed_shingles.join(survivors, "doc"), signatures.join(survivors, "doc")
     )
     comps = dedup.neardup_components(survivors, pairs, "doc").select(
         F.col("doc_id").alias("doc"), "is_canonical"
@@ -472,13 +408,7 @@ def curate_corpus(
 
 
 def training_manifest(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 2048,
-    k: int = 5,
-    hashed_shingles: DataFrame | None = None,
-    kept: DataFrame | None = None,
+    kept: DataFrame, id_col: str = "doc_id", budget: int = 2048, k: int = 5
 ) -> DataFrame:
     """Corpus in, training manifest out — the end-to-end composition a
     training run consumes:
@@ -494,34 +424,13 @@ def training_manifest(
     absent (the manifest is what the loader reads, not an audit log —
     c01 is the audit view).
 
-    The kept set feeds three consumers (train inventory, test
-    inventory, packing), so it is materialized once, same rationale as
-    the checkpoint in :func:`contamination_report`.
-
-    ``kept``: an already-materialized curated-keeper table
-    (doc, split, text, toks) — e.g. the session's curated-corpus
-    artifact (plans/documents.py). A production pipeline persists the
-    curation stage's output and the manifest builder READS it rather
-    than re-running curation; passing it here skips the
-    curate-and-checkpoint stage. ``docs``/``hashed_shingles`` are only
-    consulted when ``kept`` is None.
+    ``kept`` is the materialized curated-keeper table (doc, split,
+    text, toks) — the session's curated-corpus artifact
+    (plans/documents.py), built from step 1's decisions. A production
+    pipeline persists the curation stage's output and the manifest
+    builder READS it rather than re-running curation; it feeds three
+    consumers here (train inventory, test inventory, packing).
     """
-    if kept is None:
-        decisions = curate_corpus(
-            docs, id_col, text_col, hashed_shingles=hashed_shingles
-        )
-        kept = scoped_checkpoint(
-            "training_manifest.kept",
-            decisions.filter(F.col("stage") == "kept")
-            .select(id_col, "split")
-            .join(docs.select(id_col, text_col), id_col)
-            .select(
-                F.col(id_col).alias("doc"),
-                "split",
-                F.col(text_col).alias("text"),
-                tokens(text_col).alias("toks"),
-            ),
-        )
     sh = kept.select(
         "doc", "split", F.explode(shingles_from_tokens(F.col("toks"), k)).alias("s")
     ).select("doc", "split", h60(F.col("s")).alias("h"))
@@ -1450,11 +1359,11 @@ DIVERSITY_CAP = 4
 
 def diversity_sample(
     docs: DataFrame,
+    fingerprints: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     bucket_bits: int = DIVERSITY_BUCKET_BITS,
     cap: int = DIVERSITY_CAP,
-    fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Cluster-capped quality selection: keep the top-``cap`` documents
     BY QUALITY within each semantic bucket — a coreset spread across
@@ -1470,23 +1379,17 @@ def diversity_sample(
     semantic signal and are excluded by the fingerprint inner join —
     same on both engines.
 
-    Scale shape: the SimHash needs one token explode + one
-    map-side-combinable groupBy(doc); the fingerprint table is
-    (id, int64) — tiny relative to the corpus — and joins back on the
-    id key; the rank and bucket-size windows share ONE
-    hashpartitioning(bucket) exchange (plan-pinned). Nothing is
-    all-pairs and no centroid iteration is needed — the bucket
-    assignment is a pure projection of the fingerprint.
-
-    ``fingerprints``: an already-materialized (doc_id, simhash) table
-    (the session's d04 artifact) — passing it skips the fingerprint
-    pass entirely, the production shape where the SimHash index is
-    computed once per corpus snapshot and every consumer reads it
-    (measured 1.9 s → 0.86 s at sf0.1).
+    Scale shape: ``fingerprints`` is the materialized (doc_id,
+    simhash) table (:func:`~.dedup.simhash`, the session's d04
+    artifact — the production shape where the SimHash index is computed
+    once per corpus snapshot and every consumer reads it; measured
+    1.9 s → 0.86 s at sf0.1). It is (id, int64) — tiny relative to the
+    corpus — and joins back on the id key; the rank and bucket-size
+    windows share ONE hashpartitioning(bucket) exchange (plan-pinned).
+    Nothing is all-pairs and no centroid iteration is needed — the
+    bucket assignment is a pure projection of the fingerprint.
     """
     shift = dedup.SIMHASH_BITS - bucket_bits
-    if fingerprints is None:
-        fingerprints = dedup.simhash(docs, id_col, text_col)
     fp = fingerprints.select(
         "doc_id",
         F.shiftright(F.col("simhash"), shift).cast("bigint").alias("bucket"),

@@ -95,116 +95,80 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def shingle_table(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(id, shingle) — one row per distinct k-word shingle per doc.
+def shingle_index(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """The hashed shingle index every shingle operator reads: (doc,
+    shingle) — one row per distinct k-word shingle per doc, the shingle
+    carried as its 60-bit md5 (``h60``), never as text.
+
+    Hashing once here means every join/group key downstream is an
+    8-byte long instead of ~20-byte shingle text (same discipline as
+    exact dedup's text_hash); the SQL twins hash with the identical
+    md5-int, so even the (vanishingly rare) collision behavior matches
+    bit-for-bit.
 
     Tokenization is materialized in its own projection step so the
     lower+split+filter chain runs once per DOC, not once per shingle
     inside the transform lambda (6.5x on the explode, measured sf0.1 —
-    see ``text.shingles_from_tokens``). This matters ×3 downstream:
-    self-join sides and the sizes aggregate each re-execute this
-    subtree."""
+    see ``text.shingles_from_tokens``). Consumers receive the index
+    already built; the plans layer materializes it once per session
+    (``plans.documents._shingle_index``), the way a production shingle
+    pipeline persists its inverted index."""
     toked = docs.select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("toks")
     )
     return toked.select(
         "doc",
         F.explode(shingles_from_tokens(F.col("toks"), k)).alias("shingle"),
+    ).select("doc", h60(F.col("shingle")).alias("shingle"))
+
+
+def df_capped(index: DataFrame, max_df: int) -> DataFrame:
+    """The stop-shingle guard: the index with every shingle occurring in
+    more than ``max_df`` docs removed from the universe (count per
+    shingle == document frequency, since the index holds distinct
+    shingles per doc). A boilerplate shingle in m docs would contribute
+    O(m²) rows to a shared-shingle self-join while carrying no near-dup
+    signal precisely because it is everywhere; consumers compute sizes
+    AFTER the cap, so Jaccard/containment stay exact over the reduced
+    universe and mirrorable in SQL (the twins' ``HAVING COUNT(*) <=
+    max_df`` CTE). One window shuffle on the shingle key — no join back
+    to a separate df table."""
+    w = Window.partitionBy("shingle")
+    return (
+        index.withColumn("df", F.count(F.lit(1)).over(w))
+        .filter(F.col("df") <= max_df)
+        .drop("df")
     )
 
 
 def jaccard_pairs(
-    shingles: DataFrame,
+    index: DataFrame,
     min_jaccard: float,
     candidates: DataFrame | None = None,
-    max_df: int | None = None,
-    pre_hashed: bool = False,
 ) -> DataFrame:
-    """All-pairs (or candidate-restricted) Jaccard over shingle sets.
+    """All-pairs (or candidate-restricted) Jaccard over the hashed
+    (doc, shingle) ``index`` (:func:`shingle_index`, df-capped by the
+    caller with :func:`df_capped` when it wants a cap).
 
     Without ``candidates``, pairs are generated by the shared-shingle
     equi-join — only docs with ≥1 common shingle are compared (never a
     cross join). With ``candidates`` (doc_a, doc_b), the intersection
     join is restricted to those pairs (the LSH verify path).
 
-    ``max_df`` is the stop-shingle guard for the all-pairs path: a
-    shingle occurring in more than ``max_df`` docs is removed from the
-    universe BEFORE the self-join (both intersection and union — the
-    Jaccard stays a true Jaccard over the reduced universe). This is
-    the df-capping every production shingle-dedup applies: a
-    boilerplate shingle in m docs would contribute O(m²) join rows
-    while carrying no near-dup signal precisely because it is
-    everywhere. Sizes are computed after the filter so semantics stay
-    exactly mirrorable in SQL.
-
-    The join/group key is the 60-bit md5 of the shingle, not the string:
-    the self-join shuffle carries 8-byte longs instead of ~20-byte
-    shingle text (same discipline as exact dedup's text_hash). The SQL
-    twins hash with the identical md5-int, so even the (vanishingly
-    rare) collision behavior matches bit-for-bit.
-
-    In the ALL-PAIRS path the hashed (doc, shingle) table feeds three
-    consumers (both self-join sides and the sizes aggregate; plus the
-    df-cap when ``max_df`` is set) and Spark does NOT reuse the
-    exchanges — the alias-renamed subtrees differ by expression ids, so
-    each consumer would re-run the corpus explode. It is therefore
-    materialized ONCE (localCheckpoint of two-long rows — measured
-    3.2 s → 1.3-1.9 s at sf0.1; on a real cluster use a reliable
-    checkpoint dir), exactly where a production shingle pipeline
-    persists its inverted index. The CANDIDATES path skips the
-    checkpoint: it runs inside larger compositions (LSH verify, the
-    curation capstone) where the eager blocking job serializes the DAG
-    and recompute is cheaper (measured: +2.5 s on the capstone with the
-    checkpoint forced).
+    The index feeds several consumers (both self-join sides and the
+    sizes aggregate) and Spark does NOT reuse the exchanges across the
+    alias-renamed subtrees, so callers hand a materialized index — the
+    session artifact in plans/documents.py.
     """
-    if pre_hashed:
-        # the caller hands the (doc, shingle-md5-60bit) table already
-        # materialized (and already df-capped if it wants a cap) — e.g.
-        # the session's memoized shingle index in plans/documents.py.
-        # Skipping the re-hash AND the per-plan checkpoints here is what
-        # lets many queries share ONE materialization of the inverted
-        # index per session, the way a production pipeline persists it.
-        if max_df is not None:
-            raise ValueError(
-                "pre_hashed inputs must be df-capped by the caller — "
-                "passing max_df too would re-cap a capped universe"
-            )
-    elif max_df is not None:
-        shingles = shingles.select("doc", h60(F.col("shingle")).alias("shingle"))
-        # checkpoints fire only on the all-pairs path: the CANDIDATES
-        # path runs inside larger compositions where the eager blocking
-        # job serializes the DAG and recompute is cheaper (see
-        # docstring) — the df-cap itself still applies either way
-        if candidates is None:
-            shingles = eager_checkpoint(shingles)
-        kept = (
-            shingles.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        # re-materialize post-cap: the reduced table is what the
-        # self-join and sizes read (3 consumers again)
-        pre_cap = shingles
-        shingles = shingles.join(kept, "shingle")
-        if candidates is None:
-            shingles = scoped_checkpoint("jaccard_pairs.capped", shingles)
-            # the capped checkpoint is materialized; the pre-cap blocks
-            # have no remaining consumer (ADVICE r10 hygiene)
-            _free_local_checkpoint(pre_cap)
-    else:
-        shingles = shingles.select("doc", h60(F.col("shingle")).alias("shingle"))
-        if candidates is None:
-            shingles = scoped_checkpoint("jaccard_pairs.allpairs", shingles)
-    sizes = shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    sizes = index.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    a = index.alias("a")
+    b = index.alias("b")
     if candidates is not None:
         # Intersections ONLY for candidate pairs: route each pair to its
         # docs' shingles and count matches. Crucially this never builds
         # the all-pairs-per-shingle blowup — a hot shingle appearing in
         # m docs costs O(m) here, not O(m²). This is what makes LSH
         # verification linear-ish at corpus scale.
-        a = shingles.alias("a")
-        b = shingles.alias("b")
         counted = (
             candidates.join(a, F.col("doc_a") == F.col("a.doc"))
             .join(
@@ -222,8 +186,6 @@ def jaccard_pairs(
             "n_common", F.coalesce(F.col("n_common"), F.lit(0))
         )
     else:
-        a = shingles.alias("a")
-        b = shingles.alias("b")
         inter = (
             a.join(
                 b,
@@ -292,18 +254,12 @@ WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int, pre_hashed: bool = False
-) -> DataFrame:
+def minhash_signatures(index: DataFrame, n_hashes: int) -> DataFrame:
     """One row per doc with columns mh0..mh{n-1}: min over the doc's
-    shingles of each hash-family member. The shingle is md5-hashed ONCE;
-    the n family members are integer ops on that value (16x fewer md5s —
-    minhash at corpus scale is hash-bound). Single groupBy, map-side
-    combinable.
-
-    ``pre_hashed``: the input is already the (doc, shingle-md5-60bit)
-    table (e.g. the session's materialized shingle index) — skip the
-    md5."""
+    shingles of each hash-family member. The ``index`` already carries
+    each shingle's md5 (:func:`shingle_index`); the n family members are
+    integer ops on that value (16x fewer md5s — minhash at corpus scale
+    is hash-bound). Single groupBy, map-side combinable."""
     from end_to_end_sales_etl_de_project_spark.functions.hashing import PERM_PARAMS
 
     if n_hashes > len(PERM_PARAMS):
@@ -312,42 +268,17 @@ def minhash_signatures(
             "parameters in functions/hashing.py — extend PERM_PARAMS (and the "
             "oracle generator) to go wider"
         )
-    if pre_hashed:
-        hashed = shingles.select("doc", F.col("shingle").alias("h"))
-    else:
-        hashed = shingles.select("doc", h60(F.col("shingle")).alias("h"))
+    hashed = index.select("doc", F.col("shingle").alias("h"))
     aggs = [F.min(minhash_family(F.col("h"), s)).alias(f"mh{s}") for s in range(n_hashes)]
     return hashed.groupBy("doc").agg(*aggs)
 
 
+def signature_width(signatures: DataFrame) -> int:
+    """n_hashes of a signature table: its mh0..mh{n-1} column count."""
+    return sum(c.startswith("mh") for c in signatures.columns)
+
+
 DEFAULT_MAX_BUCKET_SIZE = 32
-
-
-def _check_index_k(hashed_shingles: DataFrame, k: int) -> None:
-    """Refuse a pre-hashed shingle index built at a different k than
-    the caller requested: the k argument is otherwise silently ignored
-    on the pre-hashed path, and a k=5 oracle against a k=3 index is a
-    guaranteed hash mismatch (or, worse, silently wrong dedup
-    decisions). The session memo stamps ``_shingle_k`` on the artifact;
-    indexes from other sources (no stamp) pass unchecked."""
-    hk = getattr(hashed_shingles, "_shingle_k", None)
-    if hk is not None and hk != k:
-        raise ValueError(
-            f"hashed_shingles was built at k={hk} but the caller requested "
-            f"k={k} — pass a matching index or drop the override"
-        )
-
-
-def _check_sig_n(signatures: DataFrame, n_hashes: int) -> None:
-    """Refuse a pre-built signature table whose hash-family width does
-    not match the caller's n_hashes — the column set is the contract
-    (doc + mh0..mh{n-1}), so the check needs no stamp."""
-    want = {"doc"} | {f"mh{s}" for s in range(n_hashes)}
-    if set(signatures.columns) != want:
-        raise ValueError(
-            f"signatures columns {sorted(signatures.columns)} do not match "
-            f"n_hashes={n_hashes} (want doc + mh0..mh{n_hashes - 1})"
-        )
 
 
 def _pruned_buckets(
@@ -429,70 +360,29 @@ def lsh_candidate_pairs(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     n_bands: int = 4,
     min_jaccard: float = 0.5,
-    persist_shingles: bool = False,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup pairs: shingle → sign → band →
-    candidate (hot buckets dropped, see ``lsh_candidate_pairs``) →
-    verify true Jaccard ≥ threshold.
+    """End-to-end MinHash-LSH near-dup pairs: band → candidate (hot
+    buckets dropped, see ``lsh_candidate_pairs``) → verify true Jaccard
+    ≥ threshold.
 
-    ``persist_shingles`` trades recompute for cache: since the
-    single-md5 hash family made signatures cheap, re-shingling per
-    subtree is FASTER than materializing the exploded table through the
-    cache (measured 2.1s vs 13.1s at sf0.1) — default False. Turn it on
-    only when the corpus scan itself is the bottleneck (expensive
-    remote storage / decompression), and note the cached RDD then lives
-    until LRU eviction or ``spark.catalog.clearCache()``.
-
-    ``hashed_shingles``: an already-materialized (doc, shingle-md5)
-    index for the SAME corpus/k — signatures and verify both read it
-    instead of re-shingling (the session-memo path in
-    plans/documents.py). ``docs``/``text_col`` are ignored then.
-
-    ``signatures``: an already-materialized (doc, mh0..mh{n-1})
-    signature table for the same index (requires ``hashed_shingles``;
-    ``_check_sig_n`` refuses an n_hashes mismatch) — the signature
-    groupBy is the LSH family's dominant shuffle and is re-paid by
-    every consumer (d03/d06-artifact/d19/d21) unless staged once per
-    session, the shingle-index pattern one level up.
+    ``hashed_shingles`` is the (doc, shingle-md5) index
+    (:func:`shingle_index`) and ``signatures`` its (doc, mh0..mh{n-1})
+    table (:func:`minhash_signatures`; n is read from the columns). The
+    signature groupBy is the LSH family's dominant shuffle and every
+    consumer (d03/d06/d19/d21) would re-pay it, so the plans layer
+    stages both tables once per session and hands them in.
     """
+    n_hashes = signature_width(signatures)
     assert n_hashes % n_bands == 0
-    if signatures is not None and hashed_shingles is None:
-        # every sibling consumer (incremental_neardup, lsh_tuning_curve,
-        # corpus_lsh_index) honors a passed signature table
-        # unconditionally; silently recomputing from docs here would
-        # serve different signatures than the caller staged — refuse
-        raise ValueError(
-            "minhash_lsh_pairs: `signatures` requires `hashed_shingles` "
-            "(the verify step reads the shingle index; a signature table "
-            "alone cannot confirm Jaccard)"
-        )
-    if hashed_shingles is not None:
-        _check_index_k(hashed_shingles, k)
-        if signatures is not None:
-            _check_sig_n(signatures, n_hashes)
-            sigs = signatures
-        else:
-            sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
-        cands = lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size)
-        return jaccard_pairs(
-            hashed_shingles, min_jaccard, candidates=cands, pre_hashed=True
-        )
-    sh = shingle_table(docs, id_col, text_col, k)
-    if persist_shingles:
-        sh = sh.persist()
-    sigs = minhash_signatures(sh, n_hashes)
-    cands = lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size)
-    return jaccard_pairs(sh, min_jaccard, candidates=cands)
+    cands = lsh_candidate_pairs(
+        signatures, n_bands, n_hashes // n_bands, max_bucket_size
+    )
+    return jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
 
 
 def minhash_lsh_pairs_sql(
@@ -564,15 +454,13 @@ WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
 
 def fuzzy_decontaminate(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
     n_bands: int = 4,
     min_jaccard: float = 0.5,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """FUZZY train/test decontamination: (test doc, train doc) pairs
     whose true shingle Jaccard is ≥ ``min_jaccard``, found via
@@ -582,44 +470,21 @@ def fuzzy_decontaminate(
     no long verbatim run but has high Jaccard; this is the check that
     catches it (the GPT-3/PaLM-style "fuzzy dedup against benchmarks").
 
-    Shape: ONE signature pass over the whole corpus, band buckets with
-    the shared hot-bucket guard, then candidates from joining the TEST
-    side of each bucket to its TRAIN side (never test×test or
-    train×train work), verified at exact Jaccard through the candidate
-    path of :func:`jaccard_pairs`. Cost scales with bucket occupancy ×
-    split balance, never |test|×|train|.
-
-    ``hashed_shingles``: the session's materialized (doc, shingle-md5)
-    index; ``docs`` is still consulted for the split assignment (a
-    2-column projection).
-
-    ``signatures``: the corpus's materialized MinHash signature table
-    (doc, mh0..mh{n-1}, requires ``hashed_shingles`` — the
-    minhash_lsh_pairs contract). The signature groupBy is this
-    operator's dominant shuffle and was re-paid per run until r15 even
-    though the session artifact already held the identical table."""
+    Shape: the corpus's signature table (``signatures``, the
+    minhash_lsh_pairs contract) is banded with the shared hot-bucket
+    guard, then candidates come from joining the TEST side of each
+    bucket to its TRAIN side (never test×test or train×train work),
+    verified at exact Jaccard through the candidate path of
+    :func:`jaccard_pairs` over ``hashed_shingles``. Cost scales with
+    bucket occupancy × split balance, never |test|×|train|. ``docs`` is
+    consulted only for the split assignment (a 2-column projection)."""
+    n_hashes = signature_width(signatures)
     assert n_hashes % n_bands == 0
-    if signatures is not None and hashed_shingles is None:
-        raise ValueError(
-            "fuzzy_decontaminate: `signatures` requires `hashed_shingles` "
-            "(the verify step reads the shingle index; a signature table "
-            "alone cannot confirm Jaccard)"
-        )
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
     splits = docs.select(
         F.col(id_col).alias("doc"), corpus_split(text_col).alias("split")
     )
-    if signatures is not None:
-        _check_sig_n(signatures, n_hashes)
-        sigs = signatures
-    else:
-        sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
     buckets = _pruned_buckets(
-        _band_bucket_rows(sigs, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
     )
     tagged = buckets.join(splits, "doc")
     test_b = tagged.filter(F.col("split") == "test").select(
@@ -631,9 +496,7 @@ def fuzzy_decontaminate(
     cands = (
         test_b.join(train_b, ["band", "key"]).select("doc_a", "doc_b").distinct()
     )
-    pairs = jaccard_pairs(
-        hashed_shingles, min_jaccard, candidates=cands, pre_hashed=True
-    )
+    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
     return pairs.select(
         F.col("doc_a").alias("test_doc"),
         F.col("doc_b").alias("train_doc"),
@@ -946,63 +809,40 @@ SELECT doc AS doc_id, {fp} AS simhash FROM votes
 
 
 def minhash_estimate_audit(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     n_bands: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Per-candidate-pair sketch audit: the MinHash ESTIMATE of Jaccard
-    (fraction of the ``n_hashes`` signature components that collide)
-    against the EXACT Jaccard, plus the absolute error. This is the
-    calibration table behind every threshold choice — before trusting
-    "signature agreement ≥ x ⇒ near-dup" at 100 TB you measure the
-    estimator's spread on your own corpus (E[est] = J, sd ≈
-    sqrt(J(1-J)/n_hashes) ≈ 0.12 at n=16, J=0.5).
+    (fraction of the n signature components that collide) against the
+    EXACT Jaccard, plus the absolute error. This is the calibration
+    table behind every threshold choice — before trusting "signature
+    agreement ≥ x ⇒ near-dup" at 100 TB you measure the estimator's
+    spread on your own corpus (E[est] = J, sd ≈ sqrt(J(1-J)/n) ≈ 0.12
+    at n=16, J=0.5).
 
-    Costs nothing beyond the d03 pipeline it audits: same shingles,
-    same signatures, same banding; the only additions are one
-    signature-pair join (candidates are few post-banding) and the
-    candidate-restricted exact Jaccard d03 already runs. Integer
-    component counts and single divisions ⇒ hash-exact oracle.
+    Costs nothing beyond the d03 pipeline it audits: same shingle index,
+    same signatures (read THREE times: banding + both pair sides), same
+    banding; the only additions are one signature-pair join (candidates
+    are few post-banding) and the candidate-restricted exact Jaccard d03
+    already runs. Integer component counts and single divisions ⇒
+    hash-exact oracle.
     """
+    n_hashes = signature_width(signatures)
     assert n_hashes % n_bands == 0
-    if signatures is not None and hashed_shingles is None:
-        raise ValueError(
-            "minhash_estimate_audit: `signatures` requires `hashed_shingles` "
-            "(the exact-Jaccard side reads the shingle index)"
-        )
-    if hashed_shingles is not None:
-        _check_index_k(hashed_shingles, k)
-        if signatures is not None:
-            # the session signature artifact: the audit reads the sig
-            # table THREE times (banding + both pair sides) — re-paying
-            # the signature groupBy per run was d09's dominant shuffle
-            _check_sig_n(signatures, n_hashes)
-            sigs = signatures
-        else:
-            sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
-        # the candidate list is referenced TWICE (estimate join + exact
-        # verify probe) — materialize once per invocation, the d19 leg
-        # shape; the call-site scope frees the previous generation
-        cands = scoped_checkpoint(
-            "minhash_estimate_audit.cands",
-            lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size),
-        )
-        true_j = jaccard_pairs(hashed_shingles, 0.0, candidates=cands, pre_hashed=True)
-    else:
-        sh = shingle_table(docs, id_col, text_col, k)
-        sigs = minhash_signatures(sh, n_hashes)
-        cands = lsh_candidate_pairs(sigs, n_bands, n_hashes // n_bands, max_bucket_size)
-        # min_jaccard=0.0 keeps every candidate pair (zero-common pairs
-        # surface as 0.0) — the audit wants the estimator's misses too
-        true_j = jaccard_pairs(sh, 0.0, candidates=cands)
-    sa = sigs.alias("sa")
-    sb = sigs.alias("sb")
+    # the candidate list is referenced TWICE (estimate join + exact
+    # verify probe) — materialize once per invocation, the d19 leg
+    # shape; the call-site scope frees the previous generation
+    cands = scoped_checkpoint(
+        "minhash_estimate_audit.cands",
+        lsh_candidate_pairs(signatures, n_bands, n_hashes // n_bands, max_bucket_size),
+    )
+    # min_jaccard=0.0 keeps every candidate pair (zero-common pairs
+    # surface as 0.0) — the audit wants the estimator's misses too
+    true_j = jaccard_pairs(hashed_shingles, 0.0, candidates=cands)
+    sa = signatures.alias("sa")
+    sb = signatures.alias("sb")
     matches = sum(
         (F.col(f"sa.mh{s}") == F.col(f"sb.mh{s}")).cast("int")
         for s in range(n_hashes)
@@ -1186,12 +1026,7 @@ JOIN batch_min bm ON bt.th = bm.th
 """
 
 
-def containment_pairs(
-    shingles: DataFrame,
-    min_containment: float,
-    pre_hashed: bool = False,
-    max_df: int | None = None,
-) -> DataFrame:
+def containment_pairs(index: DataFrame, min_containment: float) -> DataFrame:
     """Shingle-CONTAINMENT pairs: C(A,B) = |A∩B| / min(|A|,|B|) — the
     asymmetric cousin of Jaccard that catches a SMALL document embedded
     in a much larger one (quoted article, concatenated crawl, prefix
@@ -1200,43 +1035,17 @@ def containment_pairs(
     ~1.0, so production dedup runs both.
 
     Same scale discipline as :func:`jaccard_pairs`: pairs come from the
-    shared-shingle equi-join on 8-byte md5 keys (never a cross join);
-    ``pre_hashed`` accepts the session's materialized shingle index so
-    no timed run re-pays the corpus explode. ``max_df`` is the same
-    stop-shingle guard as Jaccard's (VERDICT r5 #4): a shingle in more
-    than ``max_df`` docs leaves the universe BEFORE the self-join — a
-    boilerplate shingle in m docs is O(m²) equi-join rows and zero
-    containment signal; sizes are computed AFTER the cap so C stays a
-    true containment over the reduced universe, mirrorable in SQL.
-    Exact integer counts and one IEEE division ⇒ hash-identical to the
-    SQL twin.
+    shared-shingle equi-join on the 8-byte md5 keys of the hashed
+    ``index`` (never a cross join). Callers df-cap the index with
+    :func:`df_capped` (VERDICT r5 #4): a boilerplate shingle in m docs is
+    O(m²) equi-join rows and zero containment signal; sizes are computed
+    from the capped index so C stays a true containment over the reduced
+    universe, mirrorable in SQL. Exact integer counts and one IEEE
+    division ⇒ hash-identical to the SQL twin.
     """
-    if pre_hashed:
-        if max_df is not None:
-            raise ValueError(
-                "pre_hashed inputs must be df-capped by the caller — "
-                "passing max_df too would re-cap a capped universe"
-            )
-        hashed = shingles
-    else:
-        hashed = shingles.select("doc", h60(F.col("shingle")).alias("shingle"))
-        if max_df is not None:
-            hashed = eager_checkpoint(hashed)
-            kept = (
-                hashed.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_df)
-                .select("shingle")
-            )
-            pre_cap = hashed
-            hashed = scoped_checkpoint(
-                "containment_pairs.capped", hashed.join(kept, "shingle")
-            )
-            # capped checkpoint materialized ⇒ pre-cap blocks are dead
-            _free_local_checkpoint(pre_cap)
-    sizes = hashed.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    a = hashed.alias("a")
-    b = hashed.alias("b")
+    sizes = index.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    a = index.alias("a")
+    b = index.alias("b")
     inter = (
         a.join(
             b,
@@ -1310,11 +1119,7 @@ WHERE n_common / CAST(LEAST(sa.n, sb.n) AS DOUBLE) >= {min_containment}
 
 
 def shingle_novelty(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    hashed_shingles: DataFrame | None = None,
+    docs: DataFrame, hashed_shingles: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-document novelty: the share of a doc's distinct k-word
     shingles whose corpus-wide FIRST appearance (min doc id) is this
@@ -1325,15 +1130,12 @@ def shingle_novelty(
     Output: (doc_id, n_shingles, n_novel, novelty) for EVERY doc —
     docs shorter than k words have 0 shingles and novelty 0.0.
 
-    ``hashed_shingles`` optionally supplies the materialized (doc,
-    shingle-md5-60bit) inverted index (the session artifact) so the
-    corpus isn't re-exploded per consumer. Scale: one groupBy on the
-    shingle hash (min-doc), one shuffle back on doc — the inverted-
-    index pattern; no self-join, no pair generation.
+    ``hashed_shingles`` is the materialized (doc, shingle-md5-60bit)
+    inverted index (the session artifact); ``docs`` supplies only the
+    id spine. Scale: one groupBy on the shingle hash (min-doc), one
+    shuffle back on doc — the inverted-index pattern; no self-join, no
+    pair generation.
     """
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
     first = hashed_shingles.groupBy("shingle").agg(F.min("doc").alias("first_doc"))
     per = (
         hashed_shingles.join(first, "shingle")
@@ -1512,17 +1314,14 @@ FROM anch GROUP BY 1 HAVING COUNT(DISTINCT doc) >= 2
 
 def incremental_neardup(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
     n_bands: int = 4,
     min_jaccard: float = 0.5,
     corpus_pct: int = 80,
     salt: str = "ingest-v1",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """The near-dup gate at the ingest door: a NEW batch of documents
     arrives against an EXISTING corpus, and each batch doc gets a
@@ -1538,10 +1337,11 @@ def incremental_neardup(
     never corpus×corpus (the corpus was already deduped when it was
     ingested; re-pairing it daily would re-pay the whole d03 run on
     100 TB for a 0.1% ingest). The hot-bucket guard prunes boilerplate
-    buckets BEFORE the probe join. At steady state the corpus
-    signatures/buckets are the stored warm index; here they are
-    recomputed because the oracle needs one self-contained query —
-    shapes are identical. Batch-internal near-dups are out of scope by
+    buckets BEFORE the probe join. Per-doc signatures are
+    side-independent (min over the doc's OWN shingles), so the corpus
+    signature table serves both the corpus index and the batch probe
+    after the membership split — the stored warm index of a real
+    ingest. Batch-internal near-dups are out of scope by
     design (a d03 pass over the batch alone handles them; it is
     batch-sized, not corpus-sized).
 
@@ -1551,6 +1351,7 @@ def incremental_neardup(
     deterministic hash split as d10 (stands in for the arrival
     boundary; a real pipeline passes two frames).
     """
+    n_hashes = signature_width(signatures)
     assert n_hashes % n_bands == 0
     member = docs.select(
         F.col(id_col).alias("doc"),
@@ -1558,21 +1359,8 @@ def incremental_neardup(
             h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))), F.lit(100)
         ).alias("b"),
     )
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
-    if signatures is not None:
-        # per-doc signatures are side-independent (min over the doc's
-        # OWN shingles), so the session artifact serves both the
-        # corpus index and the batch probe after the membership split
-        _check_sig_n(signatures, n_hashes)
-        sigs = signatures
-    else:
-        sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
     buckets = _pruned_buckets(
-        _band_bucket_rows(sigs, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
     )
     tagged = buckets.join(member, "doc")
     batch_b = tagged.filter(F.col("b") >= corpus_pct).select(
@@ -1584,9 +1372,7 @@ def incremental_neardup(
     cands = (
         batch_b.join(corpus_b, ["band", "key"]).select("doc_a", "doc_b").distinct()
     )
-    pairs = jaccard_pairs(
-        hashed_shingles, min_jaccard, candidates=cands, pre_hashed=True
-    )
+    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
     best_w = Window.partitionBy("doc_a").orderBy(
         F.col("jaccard").desc(), F.col("doc_b").asc()
     )
@@ -1702,16 +1488,11 @@ WHERE m.bkt >= {corpus_pct}
 
 
 def lsh_tuning_curve(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     configs: tuple[tuple[int, int], ...] = ((2, 8), (4, 4), (8, 2)),
     min_jaccard: float = 0.5,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """The d03 tuning table: for each LSH banding configuration
     (n_bands × rows_per_band over the same 16-hash signature), the
@@ -1723,27 +1504,15 @@ def lsh_tuning_curve(
     how the (bands, rows) dial gets set from measurements instead of
     the S-curve formula alone.
 
-    One signature pass (all configs slice the SAME mh0..mh15 columns),
-    one banding + hot-bucket guard + verify per config — each a
-    bucket-bounded equi-join chain, never all-pairs. Counts are exact
-    integers; precision is one IEEE division (NULL when a config
-    yields zero candidates, identically on both engines via the
-    explicit guard).
+    One signature table (all configs slice the SAME mh0..mh15 columns;
+    staged once per session, since Spark does not reuse the signature
+    groupBy across union legs without materialization), one banding +
+    hot-bucket guard + verify per config — each a bucket-bounded
+    equi-join chain, never all-pairs. Counts are exact integers;
+    precision is one IEEE division (NULL when a config yields zero
+    candidates, identically on both engines via the explicit guard).
     """
-    n_bands_ok(configs, n_hashes)
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
-    if signatures is not None:
-        # staged once per session: all three banding legs re-slice the
-        # same table, but Spark does not reuse the signature groupBy
-        # across union legs without materialization
-        _check_sig_n(signatures, n_hashes)
-        sigs = signatures
-    else:
-        sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
+    n_bands_ok(configs, signature_width(signatures))
     # r14: each leg references its candidate set twice (the volume
     # count and the verify join's probe side) — lazy, the banding
     # self-join chain ran twice per leg. Materialize the pair list
@@ -1762,16 +1531,14 @@ def lsh_tuning_curve(
         nb, rpb = cfg
         return scoped_checkpoint(
             f"lsh_tuning_curve.cands{nb}x{rpb}",
-            lsh_candidate_pairs(sigs, nb, rpb, max_bucket_size),
+            lsh_candidate_pairs(signatures, nb, rpb, max_bucket_size),
         )
 
     with ThreadPoolExecutor(max_workers=len(configs)) as pool:
         all_cands = list(pool.map(_mk_cands, configs))
     legs = []
     for (nb, rpb), cands in zip(configs, all_cands):
-        verified = jaccard_pairs(
-            hashed_shingles, min_jaccard, candidates=cands, pre_hashed=True
-        )
+        verified = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
         n_cand = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
         n_ver = verified.agg(F.count(F.lit(1)).cast("bigint").alias("n_verified"))
         legs.append(
@@ -1948,14 +1715,12 @@ GROUP BY 1, 2
 
 def cross_source_neardup_matrix(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     source_col: str = "source",
-    k: int = 3,
     min_jaccard: float = 0.5,
     scale: int = 100_000,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Source-pair matrix of NEAR-duplicate content — d20's exact-hash
     mirror detector misses re-crawls that differ by a timestamp or a
@@ -1975,15 +1740,7 @@ def cross_source_neardup_matrix(
     ratios would be shuffle-order-dependent). NULL-source docs drop out
     (no attributable side), exactly as in d20.
     """
-    pairs = minhash_lsh_pairs(
-        docs,
-        id_col,
-        text_col,
-        k=k,
-        min_jaccard=min_jaccard,
-        hashed_shingles=hashed_shingles,
-        signatures=signatures,
-    )
+    pairs = minhash_lsh_pairs(hashed_shingles, signatures, min_jaccard=min_jaccard)
     srcs = docs.filter(F.col(source_col).isNotNull()).select(
         F.col(id_col).alias("doc"), F.col(source_col).alias("src")
     )
@@ -2069,20 +1826,20 @@ def _bloom_bit(shingle_hash: Column, seed: int, m_bits: int) -> Column:
 
 def split_shingle_tables(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    k: int = 3,
-    hashed_shingles: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three distinct split-labeled shingle-hash tables every
     Bloom-tier consumer probes: ``test_sh`` (distinct test-split
     shingle hashes — the filter's build side), ``train_sh`` (distinct
     train-split hashes — the corpus-level probe side), and
     ``train_src`` (distinct (source, hash) — the per-source probe
-    side). NULL policy matches the d22 contract: NULL-text docs
-    contribute nothing; NULL-source TRAIN docs are absent from
-    ``train_src`` only (membership needs no attribution).
+    side), from the corpus's hashed shingle index labeled with each
+    doc's split and source. NULL policy matches the d22 contract:
+    NULL-text docs contribute nothing; NULL-source TRAIN docs are absent
+    from ``train_src`` only (membership needs no attribution).
 
     These DISTINCTs are the only shuffles in the Bloom tier, and every
     consumer probe re-pays them unless materialized — d23's four grid
@@ -2096,14 +1853,6 @@ def split_shingle_tables(
         corpus_split(text_col).alias("split"),
         F.col(source_col).alias("src"),
     )
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        # same guard as every other pre-hashed consumer: a k-mismatched
-        # session index would silently yield a wrong-k Bloom audit (and
-        # a chosen m derived from it) instead of failing loudly
-        _check_index_k(hashed_shingles, k)
     labeled = hashed_shingles.join(splits, "doc")
     test_sh = labeled.filter(F.col("split") == "test").select("shingle").distinct()
     train_sh = (
@@ -2166,17 +1915,9 @@ def bloom_choose_m(
 
 
 def bloom_decontaminate(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    k: int = 3,
-    m_bits: int | None = None,
+    split_shingles: tuple[DataFrame, DataFrame, DataFrame],
+    m_bits: int,
     n_seeds: int = BLOOM_N_SEEDS,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    target_fp: float = BLOOM_TARGET_FP,
-    hashed_shingles: DataFrame | None = None,
-    split_shingles: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Bloom-prefilter audit for train/test decontamination: per
     source, how many distinct train-split shingles the m-bit Bloom
@@ -2186,15 +1927,15 @@ def bloom_decontaminate(
     ``n_probe_shingles``, ``n_bloom_pos``, ``n_exact``,
     ``n_false_pos``.
 
-    SIZING is measured, not asserted (VERDICT r9 #6): with
-    ``m_bits=None`` (the default) the operator runs the d23 sizing
-    curve over ``m_grid`` and picks the smallest filter whose measured
-    corpus FP rate meets ``target_fp`` (largest grid size if none
-    qualifies — ``bloom_choose_m``), so the audit's own dial drives
-    the operator instead of sitting beside it. The chosen size is the
-    ``m_bits`` output column; both engines choose identically because
-    fp_rate is a single division of exact BIGINTs. Pass an explicit
-    ``m_bits`` to pin a deployed filter size.
+    ``split_shingles`` is the :func:`split_shingle_tables` triple.
+    SIZING is measured, not asserted (VERDICT r9 #6): the caller picks
+    ``m_bits`` from the d23 sizing curve (:func:`bloom_sizing_curve` +
+    :func:`bloom_choose_m`: the smallest grid filter whose measured
+    corpus FP rate meets the target, the largest if none qualifies), so
+    the audit's own dial drives the operator instead of sitting beside
+    it. The chosen size is the ``m_bits`` output column; both engines
+    choose identically because fp_rate is a single division of exact
+    BIGINTs.
 
     WHY a Bloom stage at all: the exact decontamination joins
     (``contamination_report``, d07/d12) broadcast the full test
@@ -2223,22 +1964,7 @@ def bloom_decontaminate(
     (no attributable row), but NULL-source TEST docs still feed the
     filter — membership needs no attribution.
     """
-    if split_shingles is None:
-        split_shingles = split_shingle_tables(
-            docs, id_col, text_col, source_col, k, hashed_shingles
-        )
-    test_sh, train_sh, train_src = split_shingles
-    if m_bits is None:
-        curve = bloom_sizing_curve(
-            docs,
-            id_col,
-            text_col,
-            k,
-            m_grid,
-            n_seeds,
-            split_shingles=(test_sh, train_sh),
-        )
-        m_bits = bloom_choose_m(curve, m_grid, target_fp)
+    test_sh, _, train_src = split_shingles
     # Map-side Bloom probe: one broadcast hash-lookup join per family
     # member, AND-folded — no shuffle of the probe side, no groupBy.
     flagged, is_pos, _ = _bloom_probe(train_src, test_sh, m_bits, n_seeds)
@@ -2416,14 +2142,9 @@ def bloom_membership(
 
 
 def bloom_sizing_curve(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
+    split_shingles: tuple[DataFrame, DataFrame, DataFrame],
     m_grid: tuple[int, ...] = BLOOM_M_GRID,
     n_seeds: int = BLOOM_N_SEEDS,
-    hashed_shingles: DataFrame | None = None,
-    split_shingles: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The Bloom m-dial as a hash-checked table — d19's tuning-curve
     pattern applied to the d22 prefilter: for each filter size in
@@ -2437,35 +2158,18 @@ def bloom_sizing_curve(
     between re-verifying a tenth of the corpus and a rounding error.
 
     Shape: ONE shingle/split labeling, read from the staged
-    ``split_shingle_tables`` artifact when provided (the plans layer
-    shares it with d22 — pre-r10 each grid leg re-ran the two DISTINCTs
-    from the shingle index, 4x the dominant shuffle), then per grid
-    entry the same map-side broadcast-lookup probe as d22 over the
-    SHARED distinct train-shingle table; each leg's scalar aggregates
+    ``split_shingle_tables`` triple (the plans layer shares it with d22
+    — pre-r10 each grid leg re-ran the two DISTINCTs from the shingle
+    index, 4x the dominant shuffle), then per grid entry the same
+    map-side broadcast-lookup probe as d22 over the SHARED distinct
+    train-shingle table; each leg's scalar aggregates
     join back by broadcast. ``n_exact`` is m-independent by
     construction — the invariant suite pins it constant across rows,
     along with the per-row Bloom law.
 
     Ratios are single divisions of exact BIGINTs in double — bit-equal
     cross-engine."""
-    if split_shingles is not None:
-        test_sh, train_sh = split_shingles[0], split_shingles[1]
-    else:
-        splits = docs.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("doc"), corpus_split(text_col).alias("split")
-        )
-        if hashed_shingles is None:
-            sh = shingle_table(docs, id_col, text_col, k)
-            hashed_shingles = sh.select(
-                "doc", h60(F.col("shingle")).alias("shingle")
-            )
-        labeled = hashed_shingles.join(splits, "doc")
-        test_sh = (
-            labeled.filter(F.col("split") == "test").select("shingle").distinct()
-        )
-        train_sh = (
-            labeled.filter(F.col("split") == "train").select("shingle").distinct()
-        )
+    test_sh, train_sh, _ = split_shingles
     legs = []
     for m in m_grid:
         probed, is_pos, bits = _bloom_probe(train_sh, test_sh, m, n_seeds)
@@ -2575,22 +2279,15 @@ train_sh AS MATERIALIZED (
 
 def dedup_tier_attribution(
     docs: DataFrame,
+    hashed_shingles: DataFrame,
+    capped_shingles: DataFrame,
+    components: DataFrame,
+    split_shingles: tuple[DataFrame, DataFrame, DataFrame],
+    m_bits: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    source_col: str = "source",
-    k: int = 3,
-    min_jaccard: float = 0.5,
     min_containment: float = 0.9,
-    containment_max_df: int = 5,
-    m_bits: int | None = None,
     n_seeds: int = BLOOM_N_SEEDS,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    target_fp: float = BLOOM_TARGET_FP,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
-    capped_shingles: DataFrame | None = None,
-    components: DataFrame | None = None,
-    split_shingles: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Tier-by-tier drop attribution for the full curation cascade —
     per tier, how many docs it flags that NO earlier tier already
@@ -2603,18 +2300,19 @@ def dedup_tier_attribution(
 
     0. ``0_bloom_decontam`` — the d22 Bloom gate, the cheapest filter
        a real pipeline runs first: TRAIN-split docs with ≥1 shingle
-       whose probe against the test-split filter (size ``m_bits``,
-       curve-chosen at ``target_fp`` when not pinned) is positive.
+       whose probe against the test-split filter (size ``m_bits``, the
+       curve-chosen d22 size) is positive.
        Bloom-positive includes the gate's false positives by design —
        this tier prices what the GATE holds for exact verification,
        which is the deployment cost being attributed.
     1. ``1_exact`` — verbatim copies (d01's grouping): every doc whose
        text-hash group has a lower id.
-    2. ``2_neardup`` — MinHash-LSH verified near-dup components (the
-       d03 pairs resolved by d06): non-canonical members not already
-       flagged.
+    2. ``2_neardup`` — MinHash-LSH verified near-dup ``components``
+       (the d03 pairs resolved by d06): non-canonical members not
+       already flagged.
     3. ``3_containment`` — asymmetric ≥``min_containment`` shingle
-       containment (d16, df-capped universe): the CONTAINED side
+       containment over ``capped_shingles`` (d16's df-capped index):
+       the CONTAINED side
        (smaller shingle set; ties drop the larger id, keeping the min
        id like every other tier), minus docs already flagged.
 
@@ -2633,27 +2331,7 @@ def dedup_tier_attribution(
     """
     scoped = docs.filter(F.col(text_col).isNotNull())
     # tier 0: Bloom decontamination gate (d22's filter at doc grain)
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
-    if split_shingles is None:
-        split_shingles = split_shingle_tables(
-            docs, id_col, text_col, source_col, k, hashed_shingles
-        )
     test_sh, train_sh, _ = split_shingles
-    if m_bits is None:
-        curve = bloom_sizing_curve(
-            docs,
-            id_col,
-            text_col,
-            k,
-            m_grid,
-            n_seeds,
-            split_shingles=(test_sh, train_sh),
-        )
-        m_bits = bloom_choose_m(curve, m_grid, target_fp)
     probed, is_pos, _ = _bloom_probe(train_sh, test_sh, m_bits, n_seeds)
     pos_sh = probed.filter(is_pos).select("shingle")
     train_docs = scoped.filter(corpus_split(text_col) == "train").select(
@@ -2681,18 +2359,7 @@ def dedup_tier_attribution(
         .select("doc")
         .join(bloom_f, "doc", "left_anti")
     )
-    # tier 2: near-dup components (artifact or derived)
-    if components is None:
-        pairs = minhash_lsh_pairs(
-            docs,
-            id_col,
-            text_col,
-            k,
-            min_jaccard=min_jaccard,
-            hashed_shingles=hashed_shingles,
-            signatures=signatures,
-        )
-        components = neardup_components(docs, pairs, id_col)
+    # tier 2: near-dup components
     near_all = components.filter(~F.col("is_canonical")).select(
         F.col("doc_id").alias("doc")
     )
@@ -2701,15 +2368,7 @@ def dedup_tier_attribution(
         .join(exact_f, "doc", "left_anti")
     )
     # tier 3: containment (df-capped universe, d16's exact semantics)
-    if capped_shingles is None:
-        kept = (
-            hashed_shingles.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= containment_max_df)
-            .select("shingle")
-        )
-        capped_shingles = hashed_shingles.join(kept, "shingle")
-    cpairs = containment_pairs(capped_shingles, min_containment, pre_hashed=True)
+    cpairs = containment_pairs(capped_shingles, min_containment)
     contained = cpairs.select(
         F.when(F.col("n_a") < F.col("n_b"), F.col("doc_a"))
         .otherwise(F.col("doc_b"))
@@ -2891,15 +2550,10 @@ SELECT '3_containment', CAST(n3 AS BIGINT),
 
 
 def corpus_lsh_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
     n_bands: int = 4,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """The STATIC build side of the streaming near-dup gate
     (``streaming/documents.neardup_probe``): one row per (band, key,
@@ -2914,19 +2568,10 @@ def corpus_lsh_index(
     the streaming gate cannot know future arrivals, so the guard
     honestly covers only what the index can see.
     """
+    n_hashes = signature_width(signatures)
     assert n_hashes % n_bands == 0
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
-    if signatures is not None:
-        _check_sig_n(signatures, n_hashes)
-        sigs = signatures
-    else:
-        sigs = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
     buckets = _pruned_buckets(
-        _band_bucket_rows(sigs, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
     )
     sets = hashed_shingles.groupBy("doc").agg(
         F.collect_set("shingle").alias("sh_b")
@@ -3144,18 +2789,12 @@ def lsh_choose_config(
 
 
 def tuned_neardup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    configs: tuple[tuple[int, int], ...] = ((2, 8), (4, 4), (8, 2)),
+    hashed_shingles: DataFrame,
+    signatures: DataFrame,
+    curve: DataFrame,
     min_jaccard: float = 0.5,
     min_precision: float = LSH_TARGET_PRECISION,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    hashed_shingles: DataFrame | None = None,
-    signatures: DataFrame | None = None,
-    curve: DataFrame | None = None,
 ) -> DataFrame:
     """d03 with its dial set FROM the measured d19 curve instead of by
     hand — the closed tuning loop, mirroring how d22 sizes its Bloom
@@ -3165,39 +2804,16 @@ def tuned_neardup(
     on every output row so the decision itself is hash-checked:
     (doc_a, doc_b, jaccard, n_bands, rows_per_band).
 
-    Shape: the curve and the final join share ONE signature table and
-    ONE shingle index (session artifacts in the plans layer); the
-    chooser is a |configs|-row collect. At 100 TB the curve runs on a
+    Shape: ``curve`` is the :func:`lsh_tuning_curve` table, measured
+    over the SAME signature table and shingle index the final join
+    reads (session artifacts in the plans layer); the chooser is a
+    |configs|-row collect. At 100 TB the curve runs on a
     sample slice and the chosen config runs on the corpus — here both
     run on the same corpus so the choice is exactly reproducible by
     the oracle's in-SQL chooser."""
-    if hashed_shingles is None:
-        sh = shingle_table(docs, id_col, text_col, k)
-        hashed_shingles = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    else:
-        _check_index_k(hashed_shingles, k)
-    if signatures is None:
-        signatures = minhash_signatures(hashed_shingles, n_hashes, pre_hashed=True)
-    else:
-        _check_sig_n(signatures, n_hashes)
-    if curve is None:
-        curve = lsh_tuning_curve(
-            docs,
-            id_col,
-            text_col,
-            k,
-            n_hashes,
-            configs,
-            min_jaccard,
-            max_bucket_size,
-            hashed_shingles=hashed_shingles,
-            signatures=signatures,
-        )
     nb, rpb = lsh_choose_config(curve, min_precision)
     cands = lsh_candidate_pairs(signatures, nb, rpb, max_bucket_size)
-    pairs = jaccard_pairs(
-        hashed_shingles, min_jaccard, candidates=cands, pre_hashed=True
-    )
+    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
     return pairs.select(
         "doc_a",
         "doc_b",

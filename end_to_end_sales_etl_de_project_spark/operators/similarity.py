@@ -1760,15 +1760,7 @@ tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM bf)
 # ---------------------------------------------------------------------------
 
 
-def ann_recall_report(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    exact: DataFrame | None = None,
-    lsh: DataFrame | None = None,
-) -> DataFrame:
+def ann_recall_report(exact: DataFrame, lsh: DataFrame) -> DataFrame:
     """Per-query recall@k of the multiprobe sign-LSH path against the
     exact brute-force top-k — quality measurement AS A QUERY, so the
     recall/cost dial (probe count, signature width) is tuned from a
@@ -1782,18 +1774,13 @@ def ann_recall_report(
     the multiprobe lookup it audits — run it on a sampled query set at
     corpus scale; the corpus is never shuffled by either side.
 
-    ``exact`` / ``lsh`` optionally supply the already-materialized
-    brute-force and multiprobe top-k tables (the production shape: the
-    ground-truth set is computed once per corpus snapshot and every
-    audit reads it — recomputing an identical deterministic table per
-    audit query is pure waste). Must be the outputs of
-    ``brute_force_topk`` / ``lsh_topk_multiprobe`` over the SAME
-    (emb, queries, k, dim, sig_bits).
+    ``exact`` / ``lsh`` are the materialized brute-force and multiprobe
+    top-k tables (the production shape: the ground-truth set is
+    computed once per corpus snapshot and every audit reads it —
+    recomputing an identical deterministic table per audit query is
+    pure waste). They must be the outputs of ``brute_force_topk`` /
+    ``lsh_topk_multiprobe`` over the SAME (emb, queries, k).
     """
-    if exact is None:
-        exact = brute_force_topk(emb, queries, k=k, dim=dim)
-    if lsh is None:
-        lsh = lsh_topk_multiprobe(emb, queries, k=k, dim=dim, sig_bits=sig_bits)
     exact = exact.select("query_id", "neighbor_id")
     approx = lsh.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
@@ -1867,13 +1854,12 @@ def _hits_against(exact: DataFrame, approx: DataFrame, name: str) -> DataFrame:
 def ivf_recall_audit(
     emb: DataFrame,
     queries: DataFrame,
+    exact: DataFrame,
+    lsh: DataFrame,
     centroids: list[list[float]] | None = None,
     k: int = 5,
     dim: int = DIM,
-    sig_bits: int = SIG_BITS,
     floor: float = 0.3,
-    exact: DataFrame | None = None,
-    lsh: DataFrame | None = None,
 ) -> DataFrame:
     """Single-row IVF quality audit: (n_queries, n_exact, lsh_recall,
     ivf_at_least_lsh, ivf_above_floor). The first three are deterministic
@@ -1882,12 +1868,8 @@ def ivf_recall_audit(
     orders, so the whole row hash-matches a SQL twin that emits the
     booleans as the contract (TRUE).
 
-    ``exact`` / ``lsh`` optionally reuse materialized baselines —
-    see ann_recall_report's docstring."""
-    if exact is None:
-        exact = brute_force_topk(emb, queries, k=k, dim=dim)
-    if lsh is None:
-        lsh = lsh_topk_multiprobe(emb, queries, k=k, dim=dim, sig_bits=sig_bits)
+    ``exact`` / ``lsh`` are the materialized baselines — see
+    ann_recall_report's docstring."""
     exact = exact.select("query_id", "neighbor_id")
     ivf = ivf_topk(emb, queries, k=k, dim=dim, centroids=centroids)
     tot = exact.agg(
@@ -1942,12 +1924,11 @@ FROM tot, h
 def pq_recall_audit(
     emb: DataFrame,
     queries: DataFrame,
+    exact: DataFrame,
+    lsh: DataFrame,
     books: list[list[list[float]]] | None = None,
     k: int = 5,
     dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    exact: DataFrame | None = None,
-    lsh: DataFrame | None = None,
 ) -> DataFrame:
     """Single-row PQ quality audit: (n_queries, n_exact, lsh_recall,
     pq_at_least_lsh, rerank_scores_exact). rerank_scores_exact recomputes
@@ -1956,12 +1937,8 @@ def pq_recall_audit(
     equality — the 'rerank is exact, compression only shapes the
     shortlist' contract from tests/test_ivf_recall.py, as a query.
 
-    ``exact`` / ``lsh`` optionally reuse materialized baselines —
-    see ann_recall_report's docstring."""
-    if exact is None:
-        exact = brute_force_topk(emb, queries, k=k, dim=dim)
-    if lsh is None:
-        lsh = lsh_topk_multiprobe(emb, queries, k=k, dim=dim, sig_bits=sig_bits)
+    ``exact`` / ``lsh`` are the materialized baselines — see
+    ann_recall_report's docstring."""
     exact = exact.select("query_id", "neighbor_id")
     # the PQ result feeds TWO consumers (the hit count and the rerank
     # re-verification) and Spark shares no subtrees within a plan — left
@@ -2039,13 +2016,7 @@ FROM tot, h
 # ---------------------------------------------------------------------------
 
 
-def knn_label_agreement(
-    emb: DataFrame,
-    k: int = 3,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    graph: DataFrame | None = None,
-) -> DataFrame:
+def knn_label_agreement(emb: DataFrame, graph: DataFrame) -> DataFrame:
     """Per-label neighborhood purity over the multiprobe-LSH kNN graph:
     (label, n_vectors, n_edges, n_same, agreement). The standard
     embedding-quality gate before clustering-based curation (SemDeDup,
@@ -2053,15 +2024,13 @@ def knn_label_agreement(
     in this space doesn't mean similarity and every downstream
     cluster-keyed decision inherits the noise.
 
-    ``graph`` optionally supplies the already-materialized kNN graph
-    (the a09 artifact — a production pipeline builds it once and every
-    audit reads it). Must be ``lsh_topk_multiprobe(emb, emb, k=k)``.
+    ``graph`` is the materialized kNN graph
+    ``lsh_topk_multiprobe(emb, emb, k=k)`` (the a09 artifact — a
+    production pipeline builds it once and every audit reads it).
     Scale: the label lookups are joins on vec_id (co-partitioned,
     never broadcast — labels scale with the corpus); the agg output is
     |labels| rows. All counts are integers ⇒ hash-exact.
     """
-    if graph is None:
-        graph = lsh_topk_multiprobe(emb, emb, k=k, dim=dim, sig_bits=sig_bits)
     q_lab = emb.select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
     )
@@ -2510,12 +2479,9 @@ FROM (
 
 def knn_pagerank(
     emb: DataFrame,
-    graph: DataFrame | None = None,
-    k: int = 3,
+    graph: DataFrame,
     damping: float = 0.85,
     iterations: int = 2,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
 ) -> DataFrame:
     """PageRank over the corpus kNN graph, a FIXED number of power
     iterations — the graph-centrality signal for representativeness-
@@ -2551,8 +2517,6 @@ def knn_pagerank(
     (lsh_candidate_pairs) is the escape hatch if a degenerate corpus
     concentrates buckets.
     """
-    if graph is None:
-        graph = lsh_topk_multiprobe(emb, emb, k=k, dim=dim, sig_bits=sig_bits)
     edges = graph.select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("outdeg"))
     nodes = emb.select(F.col("vec_id").alias("node"))
@@ -2655,13 +2619,7 @@ FROM {prev} LEFT JOIN deg d ON {prev}.node = d.src
 # ---------------------------------------------------------------------------
 
 
-def knn_triangles(
-    emb: DataFrame,
-    graph: DataFrame | None = None,
-    k: int = 3,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-) -> DataFrame:
+def knn_triangles(emb: DataFrame, graph: DataFrame) -> DataFrame:
     """Triangle count + local clustering coefficient per vector over
     the corpus kNN graph — the neighborhood-density signal that
     complements a16's centrality: a vector whose neighbors are also
@@ -2689,8 +2647,6 @@ def knn_triangles(
     vertex), then credited to all three corners. Integer counts plus
     one guarded IEEE division per row: hash-exact vs the DuckDB twin.
     """
-    if graph is None:
-        graph = lsh_topk_multiprobe(emb, emb, k=k, dim=dim, sig_bits=sig_bits)
     und = graph.select(
         F.least("query_id", "neighbor_id").alias("a"),
         F.greatest("query_id", "neighbor_id").alias("b"),
@@ -2815,10 +2771,9 @@ LEFT JOIN tcnt t ON e.vec_id = t.node
 def matryoshka_audit(
     emb: DataFrame,
     queries: DataFrame,
+    exact: DataFrame,
     k: int = 5,
     dims: tuple[int, ...] = (8, 16, 32),
-    full_dim: int = DIM,
-    exact: DataFrame | None = None,
 ) -> DataFrame:
     """Recall@k of PREFIX-TRUNCATED embeddings against the full-dim
     exact top-k — the operational question behind Matryoshka-style
@@ -2831,16 +2786,14 @@ def matryoshka_audit(
     Both sides are exact brute force at their width (fixed-order float
     folds, total tie-break), so the audit is hash-exact — same
     contract as a06; IVF/PQ-style trained quantizers stay rows-only.
-    The full-dim ground truth is computed once (pass ``exact`` — the
-    session baseline artifact — to skip even that); each truncated
-    pass broadcasts the query set and slices the corpus vectors inside
+    The full-dim ground truth ``exact`` is the session baseline
+    artifact (``brute_force_topk`` at full width); each truncated pass
+    broadcasts the query set and slices the corpus vectors inside
     the scan, so the corpus is never shuffled and never read wider
     than the width under audit.
     """
     from functools import reduce as _reduce
 
-    if exact is None:
-        exact = brute_force_topk(emb, queries, k=k, dim=full_dim)
     exact_pairs = exact.select("query_id", "neighbor_id")
     reports = []
     for d in dims:

@@ -57,27 +57,15 @@ DOC_ORACLES: dict[str, str] = {}
 def _shingle_index(
     spark: SparkSession, sf_dir: str, k: int = 3, max_df: int | None = None
 ) -> DataFrame:
-    from pyspark.sql import Window
-
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
-
     def build() -> DataFrame:
         if max_df is not None:
             # derive the capped universe from the uncapped artifact: one
             # window shuffle over the already-materialized 2-long-col
-            # table (count per shingle == doc-frequency, shingle_table
-            # emits distinct shingles per doc), then its own checkpoint
-            base = _shingle_index(spark, sf_dir, k, None)
-            w = Window.partitionBy("shingle")
-            hashed = (
-                base.withColumn("df", F.count(F.lit(1)).over(w))
-                .filter(F.col("df") <= max_df)
-                .drop("df")
-            )
+            # table, then its own checkpoint
+            hashed = dedup.df_capped(_shingle_index(spark, sf_dir, k), max_df)
         else:
             docs = load_table(spark, sf_dir, "documents")
-            sh = dedup.shingle_table(docs, "doc_id", "text", k)
-            hashed = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
+            hashed = dedup.shingle_index(docs, "doc_id", "text", k)
         # repartition BEFORE the checkpoint (r15): a checkpointed
         # RDD keeps its build-time partitioning forever — built off
         # the 1-row-group sandbox scan (or an AQE-coalesced tiny
@@ -87,12 +75,7 @@ def _shingle_index(
         # spread: deterministic placement without the
         # sort-before-repartition pre-pass, and the production
         # analog is a shingle-bucketed index table.
-        index = eager_checkpoint(hashed.repartition("shingle"))
-        # stamp the shingle width on the artifact so consumers that
-        # take an explicit k can refuse a mismatched index instead of
-        # silently computing k'-gram Jaccard against a k-gram oracle
-        index._shingle_k = k
-        return index
+        return eager_checkpoint(hashed.repartition("shingle"))
 
     return session_artifact(
         "shingle_index", spark, f"{sf_dir}/documents.parquet", k, max_df, build=build
@@ -123,9 +106,7 @@ def _split_shingle_artifact(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     def build() -> tuple[DataFrame, ...]:
         docs = load_table(spark, sf_dir, "documents")
-        tables = dedup.split_shingle_tables(
-            docs, hashed_shingles=_shingle_index(spark, sf_dir, 3)
-        )
+        tables = dedup.split_shingle_tables(docs, _shingle_index(spark, sf_dir, 3))
         # keyed repartition: 1-partition checkpoints serialize every
         # consumer's map stage (see _shingle_index)
         return tuple(eager_checkpoint(t.repartition("shingle")) for t in tables)
@@ -147,9 +128,7 @@ def _minhash_sig_artifact(
     spark: SparkSession, sf_dir: str, n_hashes: int = 16
 ) -> DataFrame:
     def build() -> DataFrame:
-        sigs = dedup.minhash_signatures(
-            _shingle_index(spark, sf_dir, 3), n_hashes, pre_hashed=True
-        )
+        sigs = dedup.minhash_signatures(_shingle_index(spark, sf_dir, 3), n_hashes)
         # keyed repartition: the banding explode every LSH consumer
         # runs off this table would otherwise fan out from ONE partition
         return eager_checkpoint(sigs.repartition("doc"))
@@ -174,22 +153,17 @@ def _minhash_sig_artifact(
 
 
 def _chunk_shingle_index(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
-
     docs = load_table(spark, sf_dir, "documents")
     chunks = text.doc_chunks(docs).select(
         (F.col("doc_id") * 1000000 + F.col("chunk_id")).alias("cid"),
         "chunk_text",
     )
-    sh = dedup.shingle_table(chunks, "cid", "chunk_text", k)
-    hashed = sh.select("doc", h60(F.col("shingle")).alias("shingle"))
-    out = scoped_checkpoint("d11.chunk_shingles", hashed.repartition("shingle"))
-    out._shingle_k = k
-    return out
+    hashed = dedup.shingle_index(chunks, "cid", "chunk_text", k)
+    return scoped_checkpoint("d11.chunk_shingles", hashed.repartition("shingle"))
 
 
 def _chunk_signatures(chunk_shingles: DataFrame, n_hashes: int = 16) -> DataFrame:
-    sigs = dedup.minhash_signatures(chunk_shingles, n_hashes, pre_hashed=True)
+    sigs = dedup.minhash_signatures(chunk_shingles, n_hashes)
     return scoped_checkpoint("d11.chunk_sigs", sigs.repartition("doc"))
 
 
@@ -200,9 +174,7 @@ def _chunk_signatures(chunk_shingles: DataFrame, n_hashes: int = 16) -> DataFram
 
 def _bloom_m_artifact(spark: SparkSession, sf_dir: str) -> int:
     def build() -> int:
-        test_sh, train_sh, _ = _split_shingle_artifact(spark, sf_dir)
-        docs = load_table(spark, sf_dir, "documents")
-        curve = dedup.bloom_sizing_curve(docs, split_shingles=(test_sh, train_sh))
+        curve = dedup.bloom_sizing_curve(_split_shingle_artifact(spark, sf_dir))
         return dedup.bloom_choose_m(curve)
 
     return session_artifact("bloom_m", spark, f"{sf_dir}/documents.parquet", build=build)
@@ -220,11 +192,7 @@ def _component_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         pairs = dedup.minhash_lsh_pairs(
-            docs,
-            "doc_id",
-            "text",
-            hashed_shingles=_shingle_index(spark, sf_dir, 3),
-            signatures=_minhash_sig_artifact(spark, sf_dir),
+            _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
         )
         return eager_checkpoint(dedup.neardup_components(docs, pairs, "doc_id"))
 
@@ -252,9 +220,7 @@ def _curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         decisions = curation.curate_corpus(
-            docs,
-            hashed_shingles=_shingle_index(spark, sf_dir, 3),
-            signatures=_minhash_sig_artifact(spark, sf_dir),
+            docs, _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
         )
         return eager_checkpoint(decisions)
 
@@ -318,12 +284,7 @@ def _split_shingles5(spark: SparkSession, sf_dir: str) -> DataFrame:
             text.shingles_from_tokens(F.col("toks"), 5).alias("sh"),
         )
         # keyed repartition: d07/c08's explodes fan out off this
-        out = eager_checkpoint(sh.repartition("doc"))
-        # stamp the shingle width (same discipline as _shingle_index):
-        # consumers taking an explicit k refuse a mismatched artifact
-        # instead of silently computing k'-gram overlap (ADVICE r5)
-        out._shingle_k = 5
-        return out
+        return eager_checkpoint(sh.repartition("doc"))
 
     return session_artifact(
         "split_shingles5", spark, f"{sf_dir}/documents.parquet", build=build
@@ -456,21 +417,15 @@ def d01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs word-3-gram Jaccard ≥ 0.5 via the shared-shingle
     equi-join (never a cross join)."""
-    sh = _shingle_index(spark, sf_dir, 3)
-    return dedup.jaccard_pairs(sh, 0.5, pre_hashed=True)
+    return dedup.jaccard_pairs(_shingle_index(spark, sf_dir, 3), 0.5)
 
 
 @_register("d03_minhash_lsh", dedup.minhash_lsh_pairs_sql("doc_id", "text"))
 def d03_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands x 4 rows) candidates, verified at true
     Jaccard ≥ 0.5 — the linear-time near-dedup scale path."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs,
-        "doc_id",
-        "text",
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -491,8 +446,7 @@ def d08_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     appears (a shingle in m docs is O(m²) join rows and zero near-dup
     signal). Jaccard is exact over the reduced universe; the oracle
     applies the identical cap."""
-    sh = _shingle_index(spark, sf_dir, 3, max_df=_D08_MAX_DF)
-    return dedup.jaccard_pairs(sh, 0.5, pre_hashed=True)
+    return dedup.jaccard_pairs(_shingle_index(spark, sf_dir, 3, max_df=_D08_MAX_DF), 0.5)
 
 
 @_register("d04_simhash", dedup.simhash_sql("doc_id", "text"))
@@ -536,11 +490,7 @@ def d06_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate. Oracle: recursive transitive-closure CTE."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        docs,
-        "doc_id",
-        "text",
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
     return dedup.neardup_components(docs, pairs, "doc_id")
 
@@ -849,9 +799,9 @@ def a12_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_recall_audit(
         emb,
         emb.filter(F.col("vec_id") < 8),
+        exact,
+        lsh,
         centroids=_ivf_model(spark, sf_dir),
-        exact=exact,
-        lsh=lsh,
     )
 
 
@@ -877,11 +827,7 @@ def a13_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     exact, lsh = _ann_baselines(spark, sf_dir)
     return similarity.pq_recall_audit(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        books=_pq_model(spark, sf_dir),
-        exact=exact,
-        lsh=lsh,
+        emb, emb.filter(F.col("vec_id") < 8), exact, lsh, books=_pq_model(spark, sf_dir)
     )
 
 
@@ -961,10 +907,7 @@ def d07_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equi-join on 8-byte shingle hashes; the train inventory is
     deduplicated BEFORE the join (no hot-shingle fanout). Reads the
     session (doc, split, 5-gram shingle) artifact."""
-    docs = load_table(spark, sf_dir, "documents")
-    return curation.contamination_report(
-        docs, sh_base=_split_shingles5(spark, sf_dir)
-    )
+    return curation.contamination_report(_split_shingles5(spark, sf_dir))
 
 
 @_register("t09_tfidf_top_terms", curation.tfidf_top_terms_sql())
@@ -1210,10 +1153,7 @@ def c02_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) — one row per kept doc with its split, bin, and
     contamination flag. The end-to-end composition a training run
     consumes; oracle composes the same stages as chained CTEs."""
-    docs = load_table(spark, sf_dir, "documents")
-    return curation.training_manifest(
-        docs, kept=_kept_corpus(spark, sf_dir)
-    )
+    return curation.training_manifest(_kept_corpus(spark, sf_dir))
 
 
 # Promoted from rows-only (VERDICT r5 #5, the m05 pattern): on a pure-
@@ -1262,13 +1202,8 @@ def d09_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute error) for every LSH candidate pair — the audit behind any
     signature-agreement threshold. Reuses d03's shingles, signatures,
     and banding; adds one signature-pair join over the (few) candidates."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup.minhash_estimate_audit(
-        docs,
-        "doc_id",
-        "text",
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -1308,10 +1243,7 @@ def a06_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of the multiprobe LSH path vs exact brute force, per
     query — the tuning table for the recall/cost dial. Deterministic on
     both sides, so fully oracle-checked (IVF/PQ recall stays test-bounded)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8)
-    exact, lsh = _ann_baselines(spark, sf_dir)
-    return similarity.ann_recall_report(emb, q, exact=exact, lsh=lsh)
+    return similarity.ann_recall_report(*_ann_baselines(spark, sf_dir))
 
 
 def _t18_oracle() -> str:
@@ -1439,13 +1371,7 @@ def d11_chunk_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard-verify subtrees, which previously each re-paid the full
     chunk explode per run."""
     chunk_sh = _chunk_shingle_index(spark, sf_dir, 3)
-    return dedup.minhash_lsh_pairs(
-        None,
-        "cid",
-        "chunk_text",
-        hashed_shingles=chunk_sh,
-        signatures=_chunk_signatures(chunk_sh),
-    )
+    return dedup.minhash_lsh_pairs(chunk_sh, _chunk_signatures(chunk_sh))
 
 
 @_register("a08_source_drift", similarity.source_drift_report_sql())
@@ -1486,9 +1412,7 @@ def a14_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherits the noise. Reads the session graph artifact (build once,
     audit many); integer counts + one ratio ⇒ hash-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_label_agreement(
-        emb, k=3, graph=_knn_graph_artifact(spark, sf_dir)
-    )
+    return similarity.knn_label_agreement(emb, _knn_graph_artifact(spark, sf_dir))
 
 
 @_register("a16_knn_pagerank", similarity.knn_pagerank_sql(k=3))
@@ -1501,7 +1425,7 @@ def a16_knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the DuckDB twin exactly (see operator docstring for the
     scale tradeoff of that pin)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_pagerank(emb, graph=_knn_graph_artifact(spark, sf_dir), k=3)
+    return similarity.knn_pagerank(emb, _knn_graph_artifact(spark, sf_dir))
 
 
 def _t19_oracle() -> str:
@@ -1634,8 +1558,7 @@ def t20_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate). Positional explode on the small test split only;
     gaps-and-islands over just the contaminated positions. Reads the
     session tokenized-split artifact."""
-    docs = load_table(spark, sf_dir, "documents")
-    return curation.contamination_spans(docs, toks_base=_split_toks(spark, sf_dir))
+    return curation.contamination_spans(_split_toks(spark, sf_dir))
 
 
 @_register("d12_fuzzy_decontaminate", dedup.fuzzy_decontaminate_sql())
@@ -1650,9 +1573,7 @@ def d12_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized — the d03 pattern)."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.fuzzy_decontaminate(
-        docs,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        docs, _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -2378,14 +2299,10 @@ def c08_decontamination_agreement(spark: SparkSession, sf_dir: str) -> DataFrame
     the k=3 shingle index).
     """
     docs = load_table(spark, sf_dir, "documents")
-    verbatim = curation.contamination_report(
-        docs, sh_base=_split_shingles5(spark, sf_dir)
-    )
+    verbatim = curation.contamination_report(_split_shingles5(spark, sf_dir))
     fuzzy = (
         dedup.fuzzy_decontaminate(
-            docs,
-            hashed_shingles=_shingle_index(spark, sf_dir, 3),
-            signatures=_minhash_sig_artifact(spark, sf_dir),
+            docs, _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
         )
         .select("test_doc")
         .distinct()
@@ -2614,7 +2531,7 @@ def d16_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and both sizes) is exact over the reduced universe, and the
     oracle applies the same cap. Never all-pairs."""
     return dedup.containment_pairs(
-        _shingle_index(spark, sf_dir, 3, max_df=_D16_MAX_DF), 0.9, pre_hashed=True
+        _shingle_index(spark, sf_dir, 3, max_df=_D16_MAX_DF), 0.9
     )
 
 
@@ -2720,10 +2637,7 @@ def t26_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-doc per shingle, count-back per doc), never pair generation.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.shingle_novelty(
-        docs, "doc_id", "text", 3,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-    )
+    return dedup.shingle_novelty(docs, _shingle_index(spark, sf_dir, 3))
 
 
 @_register(
@@ -2990,11 +2904,8 @@ def d19_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d03 dial gets set from measurements before a 100 TB dedup run.
     One signature pass shared across configs; reads the session
     shingle index."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup.lsh_tuning_curve(
-        docs,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -3008,7 +2919,7 @@ def a17_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
     exact, _ = _ann_baselines(spark, sf_dir)
-    return similarity.matryoshka_audit(emb, q, exact=exact)
+    return similarity.matryoshka_audit(emb, q, exact)
 
 
 @_register("t34_char_entropy", text.char_entropy_sql())
@@ -3044,9 +2955,7 @@ def d18_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     story extended to near-dups); reads the session shingle index."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.incremental_neardup(
-        docs,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        docs, _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -3059,9 +2968,7 @@ def c11_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows share one hashpartitioning(bucket) exchange (plan
     pinned); reads the session fingerprint artifact (d04's output)."""
     docs = load_table(spark, sf_dir, "documents")
-    return curation.diversity_sample(
-        docs, fingerprints=_simhash_fp_artifact(spark, sf_dir)
-    )
+    return curation.diversity_sample(docs, _simhash_fp_artifact(spark, sf_dir))
 
 
 @_register("t33_bpe_pairs", text.bpe_pair_stats_sql())
@@ -3163,9 +3070,7 @@ def d21_cross_source_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     session shingle index; |sources|²-bounded output."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.cross_source_neardup_matrix(
-        docs,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
+        docs, _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
     )
 
 
@@ -3181,11 +3086,8 @@ def d22_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     column. Map-side probe (one broadcast hash-lookup join per
     hash-family member, never a probe-side shuffle); reads the staged
     split-shingle artifact shared with d23."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup.bloom_decontaminate(
-        docs,
-        m_bits=_bloom_m_artifact(spark, sf_dir),
-        split_shingles=_split_shingle_artifact(spark, sf_dir),
+        _split_shingle_artifact(spark, sf_dir), _bloom_m_artifact(spark, sf_dir)
     )
 
 
@@ -3197,9 +3099,7 @@ def d23_bloom_sizing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes falsely where 64 KB flags ~0.16% on this corpus. Probes the
     staged split-shingle artifact (shared with d22), one map-side
     probe per grid entry."""
-    test_sh, train_sh, _ = _split_shingle_artifact(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.bloom_sizing_curve(docs, split_shingles=(test_sh, train_sh))
+    return dedup.bloom_sizing_curve(_split_shingle_artifact(spark, sf_dir))
 
 
 @_register(
@@ -3219,12 +3119,11 @@ def d24_dedup_tier_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.dedup_tier_attribution(
         docs,
-        containment_max_df=_D16_MAX_DF,
-        m_bits=_bloom_m_artifact(spark, sf_dir),
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        capped_shingles=_shingle_index(spark, sf_dir, 3, max_df=_D16_MAX_DF),
-        components=_component_artifact(spark, sf_dir),
-        split_shingles=_split_shingle_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3),
+        _shingle_index(spark, sf_dir, 3, max_df=_D16_MAX_DF),
+        _component_artifact(spark, sf_dir),
+        _split_shingle_artifact(spark, sf_dir),
+        _bloom_m_artifact(spark, sf_dir),
     )
 
 
@@ -3683,9 +3582,7 @@ def a24_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph artifact (build once, audit many — the a14/a16 pattern);
     integer counts + one guarded division ⇒ hash-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_triangles(
-        emb, graph=_knn_graph_artifact(spark, sf_dir), k=3
-    )
+    return similarity.knn_triangles(emb, _knn_graph_artifact(spark, sf_dir))
 
 
 # d19's measured curve as a session artifact (3 rows, checkpointed):
@@ -3696,11 +3593,8 @@ def a24_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_curve_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
         curve = dedup.lsh_tuning_curve(
-            docs,
-            hashed_shingles=_shingle_index(spark, sf_dir, 3),
-            signatures=_minhash_sig_artifact(spark, sf_dir),
+            _shingle_index(spark, sf_dir, 3), _minhash_sig_artifact(spark, sf_dir)
         )
         return eager_checkpoint(curve)
 
@@ -3720,10 +3614,8 @@ def d29_tuned_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus the pick genuinely varies by scale ((4,4) at sf0.001,
     (2,8) at sf0.01). Reads the session curve/signature/shingle
     artifacts; the chooser is a 3-row control-plane collect."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup.tuned_neardup(
-        docs,
-        hashed_shingles=_shingle_index(spark, sf_dir, 3),
-        signatures=_minhash_sig_artifact(spark, sf_dir),
-        curve=_lsh_curve_artifact(spark, sf_dir),
+        _shingle_index(spark, sf_dir, 3),
+        _minhash_sig_artifact(spark, sf_dir),
+        _lsh_curve_artifact(spark, sf_dir),
     )

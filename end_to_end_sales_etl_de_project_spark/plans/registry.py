@@ -118,130 +118,6 @@ DRIVER_WINDOW: list[str] = [
     "t03_quality_score",
     "t10_pii_redact",
 ]
-_R14_WINDOW_HISTORY: list[str] = [
-    # ---- Round-14 rotation (VERDICT r13 #1). Every r13-window query
-    # is green in CORRECTNESS_r13 (50/50 hash), so slots go to the
-    # standing refresh queue, oldest evidence first: ALL 37 r08-era
-    # rows. The tail carries the eight r14 code-changed queries and
-    # the five r14 additions. q32 (r07 rows-only) was slated for the
-    # head slot but yielded it to q41, whose oracle changed this round
-    # (stale queries outrank evidence refreshes): q32's rows-only row
-    # cannot regress beyond what the in-suite rows-only check already
-    # reruns every session, its hash-green audit twin q92 carries r11
-    # evidence, and it heads the r15 queue.
-    # (Historical note — the r13 rotation consumed the r06+r07 queues
-    # and the r13 additions q109-q112/e32-e34/t40/d27; see
-    # CORRECTNESS_r13.json and git history for the full narration.)
-    # -- r08-era rows (complete, 37)
-    "a16_knn_pagerank",
-    "a17_matryoshka_audit",
-    "a19_isotropy_histogram",
-    "c11_diversity_sample",
-    "c12_corpus_datasheet",
-    "c13_corpus_delta",
-    "c14_packing_fragmentation",
-    "d17_substring_dedup",
-    "d20_cross_source_dups",
-    "e02_sliding_hourly_30m",
-    "e03_session_window",
-    "q55_string_agg",
-    "q59_data_profile",
-    "q98_line_priority",
-    "q99_profit_by_nation",
-    "q100_heavy_small_part_suppliers",
-    "q103_partition_completeness",
-    "q104_promo_revenue",
-    "t12_source_cap",
-    "t27_dsir_importance",
-    "t29_vocab_overlap",
-    "t30_zipf_slope",
-    "t31_token_concentration",
-    "t32_domain_mixture",
-    "t33_bpe_pairs",
-    "t35_language_confidence",
-    "t36_length_drift",
-    "t37_gopher_rules",
-    "t38_unigram_entropy",
-    "t39_pii_density",
-    # -- r14 code-changed queries (must re-earn evidence):
-    # e33's minute bucketing moved to floor(unix_micros/60e6) and
-    # e18's oracle cast goes DECIMAL->VARCHAR->DOUBLE (both: the r14
-    # fractional pre-epoch axis, ADVICE r13); e08 rides
-    # operators/grouped.py, whose docstring changed (function-source
-    # diff is the staleness contract, so it re-earns); a12/a13
-    # restated their strict 'beats LSH' invariant as >= with renamed
-    # columns (the identical_emb axis: a perfect LSH baseline makes a
-    # strict win unsatisfiable); m02/m07 ride the real-decode seams
-    # hardened against zero-byte payloads (m07 via phash_signatures,
-    # an indirect call the function-level differ doesn't flag —
-    # included deliberately); e28/e30 moved their Spark-side second
-    # bucketing from unix_timestamp (truncates toward zero) to floored
-    # epoch seconds, matching their FLOOR(epoch) oracles on fractional
-    # pre-epoch timestamps (the e33 class — previously masked by hour
-    # bucketing / quintile coarseness). Their slots displace e14 and
-    # e01 from the r08 refresh block (stale outranks refresh): e14
-    # shares in-window e08's oracle verbatim (the most redundant
-    # refresh of the 37) and e01's tumbling shape is the hop=width
-    # special case of in-window e02's sliding window; both keep green
-    # r08 evidence + local parity and head the r15 queue with q32.
-    "e28_concurrency_peak",
-    "e30_rfm_segments",
-    # e05's ORACLE was restated as an explicit argmax pinning the
-    # duplicate-(key,ts) tie rule (the r14 identical_events axis:
-    # DuckDB's native ASOF leaves that pick unspecified). The Spark
-    # side is unchanged, but the oracle is half the contract, so e05
-    # re-earns driver evidence (the q41/q90 precedent). Its slot
-    # displaces m03_frame_sample from the r08 block: the multimodal
-    # family keeps three in-window representatives (m02/m05/m07)
-    # riding the same decode seams and documents_as_assets path; m03
-    # keeps r08 evidence + local parity and heads the r15 queue.
-    "e05_asof_join",
-    # q41's shared final-projection text now
-    # roundtrips every moment sum DECIMAL->STRING->DOUBLE (DuckDB's
-    # direct hugeint-decimal cast double-rounds — the e18 class,
-    # proven by direct probe at the money-edge squared magnitudes; the
-    # old text passed the extreme axis by cancellation luck only).
-    "q41_exact_moment_stats",
-    "e33_burst_detection",
-    "e18_rolling_zscore",
-    "e08_interarrival_stats",
-    "a12_ivf_recall_audit",
-    "a13_pq_recall_audit",
-    "m02_multimodal_features",
-    "m07_phash_neardup",
-    # -- r14 additions (new queries must hold a slot)
-    "t41_tfidf_top_terms",
-    "c16_mixture_reweight",
-    "e35_dwell_histogram",
-    "q113_pareto_coverage",
-    "q114_key_skew_audit",
-    # -- r14 continuation additions (post-close session): the
-    # sketch-then-verify heavy hitters, the CMS width audit, and the
-    # kNN triangle census. Their slots displace t02/t03/t10 from the
-    # r08 refresh block (new queries outrank refreshes, the e01/e14
-    # precedent): each displaced row keeps green r08 evidence + local
-    # parity, and its shape keeps an in-window representative —
-    # in-window t35 is t02's n-gram language scorer with confidence
-    # margins, t37 composes the same quality primitives as t03, and
-    # t39 rides t10's PII regex set verbatim. All three head the r15
-    # queue with q32/e01/e14/m03.
-    "t42_frequent_tokens",
-    "d28_cms_error_audit",
-    "a24_knn_triangles",
-    # d29 (curve-driven near-dup, the closed d19 tuning loop)
-    # displaces t11_token_packing: in-window c14_packing_fragmentation
-    # audits the same two-level-prefix-sum packing family; t11 keeps
-    # green r08 evidence + local parity and joins the r15 queue.
-    "d29_tuned_neardup",
-]
-# ---- Standing r15 refresh queue (generated from the COVERAGE evidence
-# table: oldest-evidence rows NOT holding an r14 slot). The r14
-# rotation consumed the r08 queue except e01/e14/m03 (displaced by
-# the late-round e28/e30/e05 contract changes, see above); next up:
-# q32 (r07 rows-only), e01, e14, m03, then the 39 r09-era rows (see COVERAGE.md's evidence table), plus whatever
-# scripts/driver_evidence.py flags stale from the r15 diffs.
-# tests/test_registry_window.py enforces the union invariant either
-# way.
 
 # Queries registered WITHOUT a DuckDB oracle — the driver records a
 # rows-only check for these. This is a closed, documented allowlist

@@ -415,7 +415,7 @@ def _py_h60(s: str) -> int:
 
 def _doc_shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document DISTINCT hashed k-shingles as (shingle) rows — the
-    per-row-expression form of ``dedup.shingle_table`` + h60 (the same
+    per-row-expression form of ``dedup.shingle_index`` (the same
     array pipeline the decontamination gate runs), so each (doc,
     shingle) contributes exactly once: document-frequency semantics,
     identical to the batch d28 ground truth."""

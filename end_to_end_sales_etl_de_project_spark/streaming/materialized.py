@@ -105,10 +105,6 @@ def fold_additive_batch(
     swap_in(tmp, mart_path)
 
 
-def _fold_batch(spark: SparkSession, mart_path: str, batch: DataFrame, epoch_id: int) -> None:
-    fold_additive_batch(spark, mart_path, batch, epoch_id)
-
-
 def start_materialized_rollup(
     spark: SparkSession,
     events_stream: DataFrame,
@@ -119,7 +115,7 @@ def start_materialized_rollup(
     streaming events DataFrame. Returns the StreamingQuery."""
 
     def fold(batch: DataFrame, epoch_id: int) -> None:
-        _fold_batch(batch.sparkSession, mart_path, batch, epoch_id)
+        fold_additive_batch(batch.sparkSession, mart_path, batch, epoch_id)
 
     return (
         events_stream.writeStream.foreachBatch(fold)

@@ -217,20 +217,93 @@ _A20_DOC_NOTE = (
     "Post-change a20 re-verified hash-green by the full local parity "
     "suite at sf0.001 (tests/test_oracle_parity.py)."
 )
+_ONE_PATH_NOTE = (
+    "One path per corpus operator: the 25 operators in operators/dedup.py, "
+    "curation.py and similarity.py take their artifacts (hashed shingle "
+    "index, signatures, ANN baselines, kNN graph, kept corpus, split "
+    "tables, fingerprints, Bloom size) as required parameters and lost "
+    "the branches that rebuilt them when a caller left one out, with the "
+    "parameters only those branches or the k/n_hashes mismatch guards "
+    "read; jaccard_pairs, containment_pairs and minhash_signatures take "
+    "only the hashed (doc, shingle) index (dedup.shingle_index, df-capped "
+    "by dedup.df_capped), and the builders and query functions pass the "
+    "same artifacts positionally. Every registered query keeps its plan "
+    "and ORACLES is byte-identical. Post-change, ALL registered oracles "
+    "re-verified hash-green by the full local parity suite at sf0.001 "
+    "(tests/test_oracle_parity.py), with tests/test_plan_shapes.py and "
+    "the NULL, empty, degenerate-duplication and extreme-value suites "
+    "green. This pin supersedes the memo-consolidation pins of the same "
+    "builders, whose verification stands. d11 (chunk index, chunk "
+    "signatures and query function) is NOT excused: its "
+    "memo-consolidation change is still unattested and it holds a window "
+    "slot."
+)
 INFRA_ATTESTATIONS: list[dict] = [
+    {"function": f, "fingerprint": fp, "round": 16, "note": _ONE_PATH_NOTE}
+    for f, fp in [
+        ("_bloom_m_artifact", "e1df5986cab91456"),
+        ("_component_artifact", "55dd2c8f627dd273"),
+        ("_curation_decisions", "c7c18131210a09cd"),
+        ("_minhash_sig_artifact", "2f8f92743edad5b6"),
+        ("_shingle_index", "3181369ae1d0d43f"),
+        ("_split_shingle_artifact", "c67e9c9fa0c6885c"),
+        ("_split_shingles5", "7707278a1650831a"),
+        ("a06_ann_recall_report", "bebe8a200da73c93"),
+        ("a12_ivf_recall_audit", "994783f681293fa7"),
+        ("a13_pq_recall_audit", "4790a4d72aa433d2"),
+        ("a14_knn_label_agreement", "b2d2b3a4b2badd6c"),
+        ("a16_knn_pagerank", "47a9d928b65d9da0"),
+        ("a17_matryoshka_audit", "03f71f2c7220398f"),
+        ("ann_recall_report", "a32c85b8b1bf5b08"),
+        ("bloom_decontaminate", "a76149053e87209e"),
+        ("bloom_sizing_curve", "04c5911b86144655"),
+        ("c02_training_manifest", "20c9cd49501159e3"),
+        ("c08_decontamination_agreement", "c73daf536d66fed1"),
+        ("c11_diversity_sample", "fb8d251060f80f9b"),
+        ("containment_pairs", "dfd622ed99601512"),
+        ("contamination_report", "39038f9303183a70"),
+        ("contamination_spans", "6f44ac813ce4c0fe"),
+        ("cross_source_neardup_matrix", "124a4d47ed956378"),
+        ("curate_corpus", "059740f5c702594e"),
+        ("d02_ngram_jaccard", "7fd60f8f49240e09"),
+        ("d03_minhash_lsh", "37682f5185585200"),
+        ("d06_neardup_resolve", "edb0c91a1bc19176"),
+        ("d07_decontaminate", "fdc342baa9abbbad"),
+        ("d08_jaccard_stopshingle", "c5e01bc35b69253f"),
+        ("d09_minhash_estimate_audit", "b58f911b84b731f1"),
+        ("d12_fuzzy_decontaminate", "6e353111d88ef7cf"),
+        ("d16_containment_pairs", "51798bd0c36a531f"),
+        ("d18_incremental_neardup", "0cdc963401378618"),
+        ("d19_lsh_tuning_curve", "8c672d74f7e0a294"),
+        ("d21_cross_source_neardup", "2c8576a27d216f3b"),
+        ("d22_bloom_decontaminate", "278bd73aa2097971"),
+        ("d23_bloom_sizing_curve", "2dbbe35320685c38"),
+        ("d24_dedup_tier_attribution", "e1006f977d1431c6"),
+        ("dedup_tier_attribution", "5fe58520e6d75be1"),
+        ("diversity_sample", "db46cc48deffc9e8"),
+        ("fuzzy_decontaminate", "0d944110c0d2c259"),
+        ("incremental_neardup", "f0d78874f38ed392"),
+        ("ivf_recall_audit", "048f73b5c89b1d82"),
+        ("jaccard_pairs", "8e471b9e24b11168"),
+        ("knn_label_agreement", "5535bf0e7e5abf75"),
+        ("knn_pagerank", "33d40c92319657f1"),
+        ("lsh_tuning_curve", "20d3133a34666b4b"),
+        ("matryoshka_audit", "b2920aaa4b223a4b"),
+        ("minhash_estimate_audit", "5e551e94259b1248"),
+        ("minhash_lsh_pairs", "d63d8f024917bd4d"),
+        ("pq_recall_audit", "3c808759d3f43c7c"),
+        ("shingle_novelty", "e7b7c65146dc564b"),
+        ("t20_contamination_spans", "67f195a6c4e20bc0"),
+        ("t26_shingle_novelty", "18a1399770ebdea5"),
+        ("training_manifest", "a7c8155311d52e81"),
+    ]
+] + [
     {"function": f, "fingerprint": fp, "round": 16, "note": _MEMO_NOTE}
     for f, fp in [
         ("load_table", "249ef9231393ea5d"),
         ("_bucketed_join_tables", "208d4cdf7754f6d6"),
-        ("_shingle_index", "baa4fff2615e1351"),
-        ("_split_shingle_artifact", "feecf8250016a8d8"),
-        ("_minhash_sig_artifact", "45af15b46f42222f"),
-        ("_bloom_m_artifact", "f0b86b68edb1ffb9"),
-        ("_component_artifact", "f0f18b10405dc25e"),
-        ("_curation_decisions", "094e3468a03d668c"),
         ("_kept_corpus", "832e352b870121ba"),
         ("_split_toks", "69684556a67a66fc"),
-        ("_split_shingles5", "140ab45861d1c893"),
         ("_ann_baselines", "195ee32c6488f427"),
         ("_simhash_fp_artifact", "ed85847589c6e9a2"),
         ("_knn_graph_artifact", "a05b778289674f5b"),
@@ -238,7 +311,6 @@ INFRA_ATTESTATIONS: list[dict] = [
         ("_pq_model", "6a4e50803e79b7eb"),
         ("_lm_score_artifact", "1dbc8bcfc539bef9"),
         ("_cms_ex_artifact", "cdeb159c7bc9c082"),
-        ("_lsh_curve_artifact", "943ef7b1ab44f441"),
     ]
 ] + [
     {

@@ -17,7 +17,9 @@ from end_to_end_sales_etl_de_project_spark.config import (
 )
 from end_to_end_sales_etl_de_project_spark.ledger import LEDGER_SCHEMA, Ledger
 from end_to_end_sales_etl_de_project_spark.pipeline import CrashDetectedError, run_pipeline
-from end_to_end_sales_etl_de_project_spark.streaming.materialized import _fold_batch
+from end_to_end_sales_etl_de_project_spark.streaming.materialized import (
+    fold_additive_batch,
+)
 from end_to_end_sales_etl_de_project_spark.writers import (
     compact_parquet,
     delete_keys_parquet,
@@ -59,13 +61,15 @@ def _batch(spark, rows):
 
 def test_fold_batch_crash_between_renames_keeps_history(spark, tmp_path):
     mart = str(tmp_path / "mart")
-    _fold_batch(spark, mart, _batch(spark, [(1, "click", 10.0), (2, "buy", 5.0)]), 0)
+    fold_additive_batch(
+        spark, mart, _batch(spark, [(1, "click", 10.0), (2, "buy", 5.0)]), 0
+    )
 
     # simulate the fold of epoch 1 dying after rename(mart -> .bak)
     os.rename(mart, mart + ".bak")
 
     # replay of epoch 1 must restore history and fold on top of it
-    _fold_batch(spark, mart, _batch(spark, [(1, "click", 2.0)]), 1)
+    fold_additive_batch(spark, mart, _batch(spark, [(1, "click", 2.0)]), 1)
     got = {
         (r.user_id, r.event_type): (r.n_events, r.total_value)
         for r in spark.read.parquet(mart).collect()
@@ -76,12 +80,12 @@ def test_fold_batch_crash_between_renames_keeps_history(spark, tmp_path):
 
 def test_fold_batch_replayed_epoch_after_crash_not_double_folded(spark, tmp_path):
     mart = str(tmp_path / "mart2")
-    _fold_batch(spark, mart, _batch(spark, [(1, "click", 10.0)]), 0)
-    _fold_batch(spark, mart, _batch(spark, [(1, "click", 1.0)]), 1)
+    fold_additive_batch(spark, mart, _batch(spark, [(1, "click", 10.0)]), 0)
+    fold_additive_batch(spark, mart, _batch(spark, [(1, "click", 1.0)]), 1)
 
     # crash after epoch 1 committed; restart replays epoch 1
     os.rename(mart, mart + ".bak")
-    _fold_batch(spark, mart, _batch(spark, [(1, "click", 1.0)]), 1)
+    fold_additive_batch(spark, mart, _batch(spark, [(1, "click", 1.0)]), 1)
 
     got = spark.read.parquet(mart).collect()[0]
     assert (got.n_events, got.total_value) == (2, 11.0)  # not 3 / 12.0

@@ -7,10 +7,34 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from end_to_end_sales_etl_de_project_spark.operators import curation, text
+from end_to_end_sales_etl_de_project_spark.operators import curation, dedup, text
 
 LONG_A = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(20))
 LONG_B = " ".join(f"delta{i} epsilon{i} zeta{i}" for i in range(20))
+
+
+def _index_and_sigs(docs):
+    """The k=3 shingle index and its 16-hash signature table — the two
+    artifacts the near-dup operators read."""
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    return sh, dedup.minhash_signatures(sh, 16)
+
+
+def _split_toks(docs):
+    """(doc, split, toks): the tokenized-split base of the
+    decontamination operators."""
+    return docs.select(
+        F.col("doc_id").alias("doc"),
+        text.corpus_split("text").alias("split"),
+        text.tokens("text").alias("toks"),
+    )
+
+
+def _split_shingles(docs, k: int = 5):
+    """(doc, split, sh): each doc's distinct k-gram shingle array."""
+    return _split_toks(docs).select(
+        "doc", "split", text.shingles_from_tokens(F.col("toks"), k).alias("sh")
+    )
 
 
 def test_curate_corpus_stages(spark):
@@ -27,7 +51,8 @@ def test_curate_corpus_stages(spark):
         (6, "unique " + LONG_A.replace("beta", "kappa")),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in curation.curate_corpus(docs).collect()}
+    decisions = curation.curate_corpus(docs, *_index_and_sigs(docs))
+    out = {r["doc_id"]: r for r in decisions.collect()}
     assert out[1]["stage"] == "dropped_quality"
     assert out[2]["stage"] == "kept"
     assert out[3]["stage"] == "dropped_exact_dup"
@@ -64,7 +89,10 @@ def test_contamination_planted(spark):
     docs2 = spark.createDataFrame(
         sorted(texts.items()), "doc_id long, text string"
     )
-    rep = {r["doc_id"]: r for r in curation.contamination_report(docs2).collect()}
+    rep = {
+        r["doc_id"]: r
+        for r in curation.contamination_report(_split_shingles(docs2)).collect()
+    }
     # appending text changes the train doc's hash bucket only for itself;
     # the chosen test doc keeps its split (text unchanged)
     if t_id in rep:
@@ -106,8 +134,19 @@ def test_training_manifest_composition(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    manifest = curation.training_manifest(docs)
-    decisions = curation.curate_corpus(docs)
+    decisions = curation.curate_corpus(docs, *_index_and_sigs(docs))
+    kept = (
+        decisions.filter(F.col("stage") == "kept")
+        .select("doc_id", "split")
+        .join(docs.select("doc_id", "text"), "doc_id")
+        .select(
+            F.col("doc_id").alias("doc"),
+            "split",
+            "text",
+            text.tokens("text").alias("toks"),
+        )
+    )
+    manifest = curation.training_manifest(kept)
     kept_ids = {r["doc_id"] for r in decisions.filter(F.col("stage") == "kept").collect()}
     rows = manifest.collect()
     assert {r["doc_id"] for r in rows} == kept_ids
@@ -282,7 +321,10 @@ def test_contamination_spans_planted(spark):
     docs = spark.createDataFrame(
         [(1, t_doc), (2, tr_doc), (3, clean)], "doc_id long, text string"
     )
-    rep = {r["doc_id"]: r for r in curation.contamination_spans(docs).collect()}
+    rep = {
+        r["doc_id"]: r
+        for r in curation.contamination_spans(_split_toks(docs)).collect()
+    }
     assert set(rep) == {1, 3}  # test-split docs only
     assert rep[1]["longest_run"] == 8
     assert rep[1]["n_runs"] == 2
@@ -296,8 +338,6 @@ def test_fuzzy_decontaminate_planted(spark):
     """A test-split doc that paraphrases a train-split doc (one word
     changed out of 60) must be flagged with jaccard >= 0.5; unrelated
     docs must not pair."""
-    from end_to_end_sales_etl_de_project_spark.operators import dedup
-
     base = " ".join(f"tok{i}" for i in range(60))
     para = base.replace("tok30", "changed", 1)
 
@@ -320,41 +360,11 @@ def test_fuzzy_decontaminate_planted(spark):
     docs = spark.createDataFrame(
         [(1, train_doc), (2, test_doc), (3, other)], "doc_id long, text string"
     )
-    rows = dedup.fuzzy_decontaminate(docs).collect()
+    rows = dedup.fuzzy_decontaminate(docs, *_index_and_sigs(docs)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["test_doc"], r["train_doc"]) == (2, 1)
     assert r["jaccard"] >= 0.5
-
-
-def test_contamination_report_rejects_mismatched_artifact(spark):
-    """A shingle artifact stamped with one width must be refused when a
-    different k is requested (ADVICE r5) — a k=3 artifact against the
-    default k=5 would compute wrong overlap counts without error."""
-    import pytest
-
-    from end_to_end_sales_etl_de_project_spark.operators import curation
-    from end_to_end_sales_etl_de_project_spark.operators.text import (
-        corpus_split,
-        shingles_from_tokens,
-        tokens,
-    )
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon doc{i} words here") for i in range(6)],
-        "doc_id long, text string",
-    )
-    art = docs.select(
-        F.col("doc_id").alias("doc"),
-        corpus_split("text").alias("split"),
-        shingles_from_tokens(tokens("text"), 3).alias("sh"),
-    )
-    art._shingle_k = 3
-    with pytest.raises(ValueError, match="k=3"):
-        curation.contamination_report(docs, sh_base=art)  # default k=5
-    # matching width passes through fine
-    curation.contamination_report(docs, k=3, sh_base=art).collect()
 
 
 def test_dsir_importance_null_lang_matches_oracle(spark, tmp_path):

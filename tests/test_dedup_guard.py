@@ -26,7 +26,7 @@ def _corpus(spark, n_boiler: int):
 
 def test_guard_drops_boilerplate_bucket(spark):
     docs = _corpus(spark, n_boiler=100)
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     sigs = dedup.minhash_signatures(sh, 16)
 
     unguarded = dedup.lsh_candidate_pairs(sigs, 4, 4, max_bucket_size=None)
@@ -42,7 +42,7 @@ def test_guard_drops_boilerplate_bucket(spark):
 def test_guard_off_below_threshold(spark):
     # with fewer boilerplate copies than the cap, guard changes nothing
     docs = _corpus(spark, n_boiler=5)
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     sigs = dedup.minhash_signatures(sh, 16)
     a = {
         (r["doc_a"], r["doc_b"])
@@ -67,14 +67,14 @@ def test_stop_shingle_cap_removes_boilerplate_pairs(spark):
     rows = [(i, f"unique words row{i} anchor{i} filler{i} end{i}" + footer) for i in range(30)]
     rows += [(1000, greek + " one"), (1001, greek + " two")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
 
     uncapped = {
         (r["doc_a"], r["doc_b"]) for r in dedup.jaccard_pairs(sh, 0.0).collect()
     }
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.jaccard_pairs(sh, 0.0, max_df=5).collect()
+        for r in dedup.jaccard_pairs(dedup.df_capped(sh, 5), 0.0).collect()
     }
     # footer shingles relate every boilerplate doc pairwise when uncapped
     assert any(a < 30 and b < 30 for a, b in uncapped)
@@ -100,7 +100,7 @@ def test_containment_cap_removes_boilerplate_pairs(spark):
     # small doc fully embedded in a larger one: containment ~1.0
     rows += [(1000, greek), (1001, greek + " plus extra trailing context words here")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
 
     # threshold 0: the guard is about CANDIDATE generation (the O(df²)
     # equi-join rows exist before any threshold filters them)
@@ -110,7 +110,7 @@ def test_containment_cap_removes_boilerplate_pairs(spark):
     }
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.containment_pairs(sh, 0.0, max_df=5).collect()
+        for r in dedup.containment_pairs(dedup.df_capped(sh, 5), 0.0).collect()
     }
     # footer shingles relate every boilerplate doc pairwise when uncapped
     assert any(a < 30 and b < 30 for a, b in uncapped)
@@ -145,14 +145,15 @@ def test_lsh_pairs_subset_of_exact_jaccard(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.jaccard_pairs(sh, 0.5).collect()
     }
+    sigs = dedup.minhash_signatures(sh, 16)
     lsh = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
+        for r in dedup.minhash_lsh_pairs(sh, sigs).collect()
     }
     for pair, j in lsh.items():
         assert pair in exact, f"LSH invented pair {pair}"
@@ -175,7 +176,8 @@ def test_minhash_estimate_audit_bounds(spark):
         (4, "unrelated content words only once each time period"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = minhash_estimate_audit(docs, "doc_id", "text")
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    out = minhash_estimate_audit(sh, dedup.minhash_signatures(sh, 16))
     rows_out = {(r["doc_a"], r["doc_b"]): r for r in out.collect()}
     assert rows_out, "no candidate pairs — planted dups not detected"
     exact = rows_out[(1, 2)]
@@ -222,22 +224,6 @@ def test_incremental_dedup_decisions(spark):
     assert out[b_lo]["canonical_id"] == b_lo
 
 
-def test_prehashed_index_k_mismatch_fails_loudly(spark):
-    """A session shingle index stamped k=3 must be refused by any
-    consumer requesting a different k — the override would otherwise be
-    silently ignored and verified against the wrong-width oracle."""
-    import pytest
-
-    from end_to_end_sales_etl_de_project_spark.plans.documents import _shingle_index
-
-    idx = _shingle_index(spark, "/root/testdata/sf0.001", 3)
-    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="built at k=3"):
-        dedup.minhash_lsh_pairs(docs, "doc_id", "text", k=5, hashed_shingles=idx)
-    with pytest.raises(ValueError, match="built at k=3"):
-        dedup.fuzzy_decontaminate(docs, k=5, hashed_shingles=idx)
-
-
 def test_prefix_blocking_fails_loudly_on_short_text(spark, sf_dir):
     """d15's 16-char block width is an enforced precondition (ADVICE
     r5): a corpus containing a text shorter than the block width must
@@ -282,7 +268,7 @@ def test_skewed_bucket_prunes_and_balances_partitions(spark):
     import statistics
 
     docs = _corpus(spark, n_boiler=400)
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     sigs = dedup.minhash_signatures(sh, 16)
 
     # (a) the guard's own drop-list is non-empty on this fixture

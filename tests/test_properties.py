@@ -255,7 +255,7 @@ def test_containment_dominates_jaccard_on_shared_corpus(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     cont = {
         (r["doc_a"], r["doc_b"]): r
         for r in dedup.containment_pairs(sh, 0.0).collect()

@@ -73,18 +73,3 @@ def test_d24_plan_is_truncated(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan
     assert "Exchange" not in plan, plan
-
-
-def test_signature_width_guard_refuses_mismatch(spark):
-    """A staged signature table built at a different n_hashes than the
-    caller requests must be refused loudly — silently banding a 16-hash
-    table as 8-hash would produce wrong buckets with no error."""
-    import pytest
-
-    sigs8 = spark.createDataFrame(
-        [tuple([1] + [0] * 8)],
-        "doc long, " + ", ".join(f"mh{i} long" for i in range(8)),
-    )
-    with pytest.raises(ValueError, match="n_hashes"):
-        dedup._check_sig_n(sigs8, 16)
-    dedup._check_sig_n(sigs8, 8)  # matching width passes

@@ -91,37 +91,71 @@ def test_scoped_checkpoint_is_thread_safe(monkeypatch):
             C._SCOPES.pop(s, None)
 
 
-def test_artifact_heavy_session_storage_is_bounded(spark):
-    """The driver-loop reproduction, in-suite: run the checkpoint-heavy
-    query set (every operator family that materializes per-invocation
-    blocks) THREE times each in one session and pin that (a) live
+# every operator family that materializes per-invocation blocks
+_HEAVY = [
+    "d24_dedup_tier_attribution",  # 5 per-invocation checkpoints
+    "d19_lsh_tuning_curve",        # 3 per-leg candidate lists
+    "m07_phash_neardup",           # signature seam checkpoint
+    "d11_chunk_neardup",           # per-invocation chunk index + sigs
+    "d09_minhash_estimate_audit",  # candidate list checkpoint
+    "d28_cms_error_audit",         # exact-df checkpoint
+    "c02_training_manifest",       # kept-corpus consumer
+    "c08_decontamination_agreement",
+]
+
+
+def _three_sweeps() -> None:
+    """Run the checkpoint-heavy query set three times in a FRESH session
+    and print the (persisted RDDs, storage bytes) pair after each sweep
+    as one JSON line. Run in its own interpreter so the counts hold
+    only what these sweeps persisted."""
+    import json
+
+    from end_to_end_sales_etl_de_project_spark.session import get_spark_session
+
+    spark = get_spark_session(
+        app_name="storage-sweeps",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "3g"},
+    )
+    counts = []
+    for _ in range(3):
+        for name in _HEAVY:
+            QUERIES[name](spark, SF).write.mode("overwrite").format("noop").save()
+        counts.append((_n_persisted(spark), _storage_bytes(spark)))
+    print(json.dumps(counts))
+    spark.stop()
+
+
+def test_artifact_heavy_session_storage_is_bounded():
+    """The driver-loop reproduction: run the checkpoint-heavy query set
+    THREE times each in one fresh session and pin that (a) live
     persisted-RDD count stays bounded and (b) the second and third
     sweeps add NO net persisted RDDs or storage bytes — re-entry frees
     the previous generation, so repeated invocations are storage-flat.
-    Pre-r15 every sweep leaked one generation per site (d24 alone: 5)."""
-    heavy = [
-        "d24_dedup_tier_attribution",  # 5 per-invocation checkpoints
-        "d19_lsh_tuning_curve",        # 3 per-leg candidate lists
-        "m07_phash_neardup",           # signature seam checkpoint
-        "d11_chunk_neardup",           # per-invocation chunk index + sigs
-        "d09_minhash_estimate_audit",  # candidate list checkpoint
-        "d28_cms_error_audit",         # exact-df checkpoint
-        "c02_training_manifest",       # kept-corpus consumer
-        "c08_decontamination_agreement",
-    ]
+    Pre-r15 every sweep leaked one generation per site (d24 alone: 5).
+    The sweeps run in a subprocess: in the suite's shared session the
+    count would include RDDs that earlier tests persisted."""
+    import json
+    import os
+    import subprocess
+    import sys
 
-    def sweep() -> None:
-        for name in heavy:
-            QUERIES[name](spark, SF).write.mode("overwrite").format(
-                "noop"
-            ).save()
-
-    sweep()  # builds session artifacts + first per-invocation generation
-    n1, b1 = _n_persisted(spark), _storage_bytes(spark)
-    sweep()  # second generation: scopes now hold their _KEEP=2 maximum
-    n2, b2 = _n_persisted(spark), _storage_bytes(spark)
-    sweep()  # third: every new checkpoint must free one old one
-    n3, b3 = _n_persisted(spark), _storage_bytes(spark)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from tests.test_r15_invariants import _three_sweeps; _three_sweeps()",
+        ],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=1500,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    (n1, b1), (n2, b2), (n3, b3) = json.loads(out.stdout.strip().splitlines()[-1])
 
     # flat from sweep 2 to sweep 3: zero net persisted-RDD growth, and
     # storage bytes within 5% (block sizes jitter with partitioning)

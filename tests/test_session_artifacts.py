@@ -1,8 +1,11 @@
 """One mechanism per concern, pinned structurally: every checkpoint in
-the package is taken by ``checkpoints.eager_checkpoint``, and the only
+the package is taken by ``checkpoints.eager_checkpoint``, the only
 cross-call memo is the session-artifact memo in ``sources/tables.py``
-(``session_artifact``). A new hand-rolled memo dict or a direct
-``localCheckpoint`` call fails here instead of drifting in."""
+(``session_artifact``), and the artifacts are built only by the
+``plans/documents.py`` builders — operators read the artifacts they are
+handed and never rebuild them. A new hand-rolled memo dict, a direct
+``localCheckpoint`` call or an operator fallback that rebuilds an
+artifact fails here instead of drifting in."""
 
 from __future__ import annotations
 
@@ -54,3 +57,42 @@ def test_module_level_dicts_are_the_allowed_three():
         "plans/registry.py:_ALL_QUERIES",
         "checkpoints.py:_SCOPES",
     }, sorted(found)
+
+
+def test_operators_have_no_optional_dataframe_parameters():
+    """An optional DataFrame parameter is a second path: the operator
+    rebuilds the artifact when the caller leaves it out. The one
+    exception is ``jaccard_pairs(candidates=)``, a real mode — d02/d08
+    run all-pairs and d03 verifies LSH candidates."""
+    found = []
+    for p in sorted((PKG / "operators").glob("*.py")):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+            pairs = list(zip(positional, defaults)) + list(
+                zip(a.kwonlyargs, a.kw_defaults)
+            )
+            for arg, default in pairs:
+                if (
+                    isinstance(default, ast.Constant)
+                    and default.value is None
+                    and arg.annotation is not None
+                    and "DataFrame" in ast.unparse(arg.annotation)
+                ):
+                    found.append(f"{p.name}:{fn.name}({arg.arg}=)")
+    assert found == ["dedup.py:jaccard_pairs(candidates=)"], found
+
+
+def test_one_shingle_index_format():
+    """Shingle operators take only the hashed (doc, shingle) index, so
+    the markers of a second, string-shingle format are gone for good."""
+    offenders = [
+        f"{p.relative_to(PKG).as_posix()}: {word}"
+        for p in _modules()
+        for word in ("pre_hashed", "persist_shingles", "_shingle_k")
+        if word in p.read_text()
+    ]
+    assert not offenders, offenders

@@ -611,14 +611,11 @@ def _test_bloom_words(spark, sf_dir):
     deployed gate would load from the decontamination build."""
     from pyspark.sql import functions as F
 
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
     from end_to_end_sales_etl_de_project_spark.operators import dedup
     from end_to_end_sales_etl_de_project_spark.operators.text import corpus_split
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = dedup.shingle_table(docs, "doc_id", "text", 3).select(
-        "doc", h60(F.col("shingle")).alias("shingle")
-    )
+    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     splits = docs.filter(F.col("text").isNotNull()).select(
         F.col("doc_id").alias("doc"), corpus_split("text").alias("split")
     )
@@ -648,7 +645,6 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, docs_src):
     every doc sharing ≥1 shingle with the test split is flagged."""
     from pyspark.sql import functions as F
 
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
     from end_to_end_sales_etl_de_project_spark.operators import dedup
     from end_to_end_sales_etl_de_project_spark.streaming.documents import (
         decontamination_gate,
@@ -671,8 +667,7 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, docs_src):
     landing = spark.read.parquet(docs_src)
     exact_docs = {
         r.doc
-        for r in dedup.shingle_table(landing, "doc_id", "text", 3)
-        .select("doc", h60(F.col("shingle")).alias("shingle"))
+        for r in dedup.shingle_index(landing, "doc_id", "text", 3)
         .join(test_sh, "shingle", "semi")
         .select("doc")
         .distinct()
@@ -712,7 +707,10 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
     )
     corpus = docs.join(member.filter(F.col("b") < 80).select("doc_id"), "doc_id")
     batch = docs.join(member.filter(F.col("b") >= 80).select("doc_id"), "doc_id")
-    idx = dedup.corpus_lsh_index(corpus).localCheckpoint(eager=True)
+    corpus_sh = dedup.shingle_index(corpus, "doc_id", "text", 3)
+    idx = dedup.corpus_lsh_index(
+        corpus_sh, dedup.minhash_signatures(corpus_sh, 16)
+    ).localCheckpoint(eager=True)
 
     # batch docs land as TWO files so the gate crosses a trigger boundary
     src = f"{tmpdir}/neardup-landing"
@@ -740,9 +738,12 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
     got = decide(rows)
     via_static = decide(neardup_probe(spark.read.parquet(src), idx))
     assert got == via_static  # stream ≡ batch, same code path
+    docs_sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     want = {
         r["doc_id"]: (r["decision"], r["matched_doc"], r["jaccard"])
-        for r in dedup.incremental_neardup(docs).collect()
+        for r in dedup.incremental_neardup(
+            docs, docs_sh, dedup.minhash_signatures(docs_sh, 16)
+        ).collect()
     }
     assert got == want  # gate ≡ d18 on the same split, bit-exact
     assert sum(1 for v in got.values() if v[0] != "novel") > 0  # non-vacuous
@@ -817,7 +818,6 @@ def test_cms_probe_stream_equals_batch(spark, sf_dir, docs_src):
     law against the exact shingle-DF ground truth."""
     from pyspark.sql import functions as F
 
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
     from end_to_end_sales_etl_de_project_spark.operators import dedup
     from end_to_end_sales_etl_de_project_spark.streaming.documents import (
         cms_probe_batch,
@@ -828,8 +828,7 @@ def test_cms_probe_stream_equals_batch(spark, sf_dir, docs_src):
 
     landing = spark.read.parquet(docs_src)
     exact = (
-        dedup.shingle_table(landing, "doc_id", "text", 3)
-        .select("doc", h60(F.col("shingle")).alias("shingle"))
+        dedup.shingle_index(landing, "doc_id", "text", 3)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     )
@@ -891,12 +890,10 @@ def test_cms_probe_stream_state_survives_restart(spark, sf_dir, tmpdir):
     probes = [424242]  # plus two live keys chosen below
 
     landing1 = spark.read.parquet(f"{src}/docs-000.parquet")
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
     from end_to_end_sales_etl_de_project_spark.operators import dedup
 
     top = (
-        dedup.shingle_table(landing1, "doc_id", "text", 3)
-        .select("doc", h60(F.col("shingle")).alias("shingle"))
+        dedup.shingle_index(landing1, "doc_id", "text", 3)
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.desc("df"), "shingle")
