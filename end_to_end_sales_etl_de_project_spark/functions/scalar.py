@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 # for consumers and oracles alike).
 MONEY_DECIMAL = "decimal(18,2)"
 
+# Fixed-point scale for quantizing logs and ratios to bigint before an
+# exact (order-independent) integer fold.
+FIXED_POINT_SCALE = 100_000
+
 
 def money(col: Column | str) -> Column:
     """Cast a raw money column to the exact decimal working type."""

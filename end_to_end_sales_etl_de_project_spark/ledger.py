@@ -115,18 +115,17 @@ class Ledger:
         """Latest status per file_name, as a DataFrame view of the fold."""
         return self.spark.createDataFrame(list(self._state().values()), LEDGER_SCHEMA)
 
-    def stuck_in_start(self, file_names: list[str] | None = None) -> list[str]:
+    def stuck_in_start(self) -> list[str]:
         """Crash check (main_1.py:45-86): files whose latest status is
         START. A non-empty result means a previous run died mid-flight.
 
-        ``file_names=None`` checks the WHOLE ledger — the correct scope
-        for a pipeline preflight: a crashed run may have already
-        archived its inputs out of the landing dir, so filtering by
-        currently-present files would wave the crash through."""
-        stuck = {n for n, e in self._state().items() if e["status"] == STATUS_START}
-        if file_names is not None:
-            stuck &= set(file_names)
-        return sorted(stuck)
+        It checks the WHOLE ledger — the correct scope for a pipeline
+        preflight: a crashed run may have already archived its inputs
+        out of the landing dir, so filtering by currently-present files
+        would wave the crash through."""
+        return sorted(
+            n for n, e in self._state().items() if e["status"] == STATUS_START
+        )
 
     def split_processed(self, file_names: list[str]) -> tuple[list[str], list[str]]:
         """Idempotency filter (staging.py:51-113): returns

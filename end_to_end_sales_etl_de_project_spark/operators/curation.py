@@ -57,7 +57,7 @@ from end_to_end_sales_etl_de_project_spark.operators.text import (
 # ---------------------------------------------------------------------------
 
 
-def contamination_report(sh_base: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def contamination_report(sh_base: DataFrame) -> DataFrame:
     """Per TEST-split document: how many of its distinct k-gram shingles
     also occur anywhere in the TRAIN split. A test doc sharing verbatim
     k-grams with training data inflates eval scores; this is the check
@@ -74,8 +74,7 @@ def contamination_report(sh_base: DataFrame, id_col: str = "doc_id") -> DataFram
     artifact in plans/documents.py). It feeds three consumers (test
     sizes, test inventory, train inventory) and tokenize+shingle is the
     dominant CPU cost, so it is built once per corpus and every audit
-    (d07, the c08 agreement matrix) reads it. ``id_col`` names the
-    output id column.
+    (d07, the c08 agreement matrix) reads it.
     """
     test_docs = sh_base.filter(F.col("split") == "test").select(
         "doc", F.size("sh").cast("bigint").alias("n_shingles")
@@ -97,7 +96,7 @@ def contamination_report(sh_base: DataFrame, id_col: str = "doc_id") -> DataFram
     return (
         test_docs.join(hits, "doc", "left")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "n_shingles",
             F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("bigint").alias(
                 "n_contaminated"
@@ -139,9 +138,11 @@ FROM tests t LEFT JOIN hits h USING (doc)
 """
 
 
-def contamination_spans(
-    toks_base: DataFrame, id_col: str = "doc_id", k: int = 5
-) -> DataFrame:
+# k-gram size of the train/test contamination check.
+CONTAMINATION_K = 5
+
+
+def contamination_spans(toks_base: DataFrame) -> DataFrame:
     """Span-level decontamination report: per TEST document, the
     longest CONSECUTIVE run of k-gram positions whose shingle also
     occurs in the TRAIN split, plus run count and total contaminated
@@ -159,25 +160,29 @@ def contamination_spans(
 
     ``toks_base`` is the materialized (doc, split, toks) table (the
     session tokenized-split artifact), so no run re-tokenizes the
-    corpus; shingling at width ``k`` happens here, on the tokens.
+    corpus; shingling at width ``CONTAMINATION_K`` happens here, on the tokens.
     """
     test = toks_base.filter(F.col("split") == "test")
     test_docs = test.select(
         "doc",
-        F.greatest(F.size("toks") - (k - 1), F.lit(0)).cast("bigint").alias("n_windows"),
+        F.greatest(F.size("toks") - (CONTAMINATION_K - 1), F.lit(0))
+        .cast("bigint")
+        .alias("n_windows"),
     )
     test_pos = (
         test.select(
             "doc",
-            F.posexplode(positional_shingles_from_tokens(F.col("toks"), k)).alias(
-                "pos", "s"
-            ),
+            F.posexplode(
+                positional_shingles_from_tokens(F.col("toks"), CONTAMINATION_K)
+            ).alias("pos", "s"),
         )
         .select("doc", "pos", h60(F.col("s")).alias("h"))
     )
     train_set = (
         toks_base.filter(F.col("split") == "train")
-        .select(F.explode(shingles_from_tokens(F.col("toks"), k)).alias("s"))
+        .select(
+            F.explode(shingles_from_tokens(F.col("toks"), CONTAMINATION_K)).alias("s")
+        )
         .select(h60(F.col("s")).alias("h"))
         .distinct()
     )
@@ -191,7 +196,7 @@ def contamination_spans(
         F.max("run_len").cast("bigint").alias("longest_run"),
     )
     return test_docs.join(per_doc, "doc", "left").select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         "n_windows",
         F.coalesce("n_contaminated_pos", F.lit(0)).cast("bigint").alias(
             "n_contaminated_pos"
@@ -256,7 +261,7 @@ FROM tests t LEFT JOIN per_doc p USING (doc)
 
 
 def tfidf_top_terms(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", top_n: int = 3
+    docs: DataFrame, top_n: int = 3
 ) -> DataFrame:
     """Top-``top_n`` characteristic terms per document by TF-IDF with
     reciprocal-df weighting: score = tf * (N / df) in double.
@@ -269,7 +274,7 @@ def tfidf_top_terms(
     textbook formula. Ties rank alphabetically.
     """
     tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("token")
+        F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("token")
     )
     tf = tok.groupBy("doc", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -286,7 +291,7 @@ def tfidf_top_terms(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_n)
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             F.col("rank").cast("int").alias("rank"),
             "token",
             F.col("tf").cast("bigint").alias("tf"),
@@ -332,8 +337,6 @@ def curate_corpus(
     docs: DataFrame,
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The full curation decision per document — what an LLM-data
     pipeline runs end-to-end before training:
@@ -370,7 +373,7 @@ def curate_corpus(
     are exactly the artifact filtered to survivor ids — no survivor
     signature groupBy.
     """
-    base = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+    base = docs.select(F.col("doc_id").alias("doc"), F.col("text"))
     ok = base.filter(quality_bucket("text") == "ok")
     canon = (
         ok.select("doc", h60(F.col("text")).alias("th"))
@@ -401,22 +404,20 @@ def curate_corpus(
         .otherwise("kept")
     )
     return decided.select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         stage.alias("stage"),
         F.when(stage == "kept", corpus_split("text")).alias("split"),
     )
 
 
-def training_manifest(
-    kept: DataFrame, id_col: str = "doc_id", budget: int = 2048, k: int = 5
-) -> DataFrame:
+def training_manifest(kept: DataFrame) -> DataFrame:
     """Corpus in, training manifest out — the end-to-end composition a
     training run consumes:
 
     1. :func:`curate_corpus` decides keep/drop + split per doc
     2. TEST keepers are flagged if any of their k-gram shingles occur
        in the TRAIN keepers (decontamination, d07's join shape)
-    3. TRAIN keepers are packed into ``budget``-token bins in salted
+    3. TRAIN keepers are packed into 2048-token bins in salted
        hash order (t11's window shape)
 
     Output: one row per KEPT doc — (doc_id, split, n_tokens,
@@ -432,7 +433,9 @@ def training_manifest(
     consumers here (train inventory, test inventory, packing).
     """
     sh = kept.select(
-        "doc", "split", F.explode(shingles_from_tokens(F.col("toks"), k)).alias("s")
+        "doc",
+        "split",
+        F.explode(shingles_from_tokens(F.col("toks"), CONTAMINATION_K)).alias("s"),
     ).select("doc", "split", h60(F.col("s")).alias("h"))
     train_set = sh.filter(F.col("split") == "train").select("h").distinct()
     contaminated = (
@@ -464,12 +467,12 @@ def training_manifest(
     return (
         packed.join(contaminated, "doc", "left")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "split",
             "n_tokens",
             F.when(
                 F.col("split") == "train",
-                F.expr(f"cum_before div {budget}"),
+                F.expr("cum_before div 2048"),
             )
             .cast("bigint")
             .alias("bin_id"),
@@ -529,8 +532,6 @@ FROM packed p LEFT JOIN contaminated c USING (doc)
 
 def token_rarity(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     rare_max: int = 2,
 ) -> DataFrame:
     """Corpus-relative token-rarity profile per document — a unigram
@@ -554,7 +555,7 @@ def token_rarity(
     output (identically in both engines).
     """
     tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("token")
+        F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("token")
     )
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     return (
@@ -566,7 +567,7 @@ def token_rarity(
             F.sum(F.when(F.col("freq") <= rare_max, 1).otherwise(0)).alias("n_rare"),
         )
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "n_tokens",
             "freq_sum",
             (F.col("freq_sum").cast("double") / F.col("n_tokens")).alias(
@@ -610,13 +611,8 @@ FROM rolled
 
 def boilerplate_ngrams(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    top: int = 5,
-    min_df: int = 2,
 ) -> DataFrame:
-    """Per-source boilerplate discovery: the ``top`` k-gram shingles by
+    """Per-source boilerplate discovery: the top 5 3-gram shingles by
     document frequency within each source (ties broken on the shingle
     text). This is the AUDIT behind stop-shingle capping (d08) — before
     capping hot shingles you look at what they are, per source, because
@@ -628,26 +624,26 @@ def boilerplate_ngrams(
     carries each (source, shingle, doc) once, not once per occurrence)
     → one rank window over the aggregated frame. The window's input is
     bounded by |sources| x |distinct shingles per source| — at 100 TB
-    apply ``min_df`` first (done here) so the rank only sees shingles
+    apply the DF floor of 2 first (done here) so the rank only sees shingles
     that repeat at all. Counts exact, ordering totally tie-broken ⇒
     hash-exact oracle.
     """
     from pyspark.sql import Window
 
     sh = docs.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         "source",
-        F.explode(shingles_from_tokens(tokens(text_col), k)).alias("shingle"),
+        F.explode(shingles_from_tokens(tokens("text"), 3)).alias("shingle"),
     )
     df_counts = (
         sh.groupBy("source", "shingle")
         .agg(F.count_distinct("doc").alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 2)
     )
     w = Window.partitionBy("source").orderBy(F.desc("df"), "shingle")
     return (
         df_counts.withColumn("rank_in_source", F.row_number().over(w))
-        .filter(F.col("rank_in_source") <= top)
+        .filter(F.col("rank_in_source") <= 5)
         .select(
             "source",
             F.col("rank_in_source").cast("bigint"),
@@ -685,9 +681,7 @@ FROM ranked WHERE rank_in_source <= {top}
 """
 
 
-def dataset_mix_report(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def dataset_mix_report(docs: DataFrame) -> DataFrame:
     """The dataset-card table: per (split, source, language) — document
     count, token total, and the cell's share of its split's tokens.
     This is the mix report every training run publishes (and the input
@@ -704,10 +698,10 @@ def dataset_mix_report(
 
     per = (
         docs.select(
-            corpus_split(text_col).alias("split"),
+            corpus_split("text").alias("split"),
             "source",
             "lang",
-            token_count(text_col).cast("bigint").alias("toks"),
+            token_count("text").cast("bigint").alias("toks"),
         )
         .groupBy("split", "source", "lang")
         .agg(
@@ -797,10 +791,7 @@ LEFT JOIN comp ON d.{id_col} = comp.doc_id
 
 def weighted_source_sample(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     target_frac: float = 0.5,
-    salt: str = "mix-v1",
 ) -> DataFrame:
     """Sqrt-temperature source rebalancing: each source's target share
     of the sampled corpus is proportional to the SQUARE ROOT of its
@@ -826,7 +817,7 @@ def weighted_source_sample(
     from pyspark.sql import Window
 
     per = (
-        docs.select("source", token_count(text_col).cast("bigint").alias("toks"))
+        docs.select("source", token_count("text").cast("bigint").alias("toks"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -852,13 +843,13 @@ def weighted_source_sample(
         "source", F.when(total_wt > 0, keep_rate).alias("keep_rate")
     )
     bucket = F.pmod(
-        h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))), F.lit(1000000)
+        h60(F.concat(F.lit("mix-v1"), F.col("doc_id").cast("string"))), F.lit(1000000)
     )
     return (
-        docs.select(F.col(id_col), "source")
+        docs.select(F.col("doc_id"), "source")
         .join(F.broadcast(rates), "source")
         .filter(bucket < F.floor(F.col("keep_rate") * 1000000.0).cast("bigint"))
-        .select(id_col, "source", "keep_rate")
+        .select("doc_id", "source", "keep_rate")
     )
 
 
@@ -902,10 +893,7 @@ WHERE ({h}) % 1000000 < CAST(FLOOR(r.keep_rate * 1000000.0) AS BIGINT)
 
 def training_shards(
     docs: DataFrame,
-    id_col: str = "doc_id",
     n_shards: int = 8,
-    shard_salt: str = "shard-v1",
-    order_salt: str = "order-v1",
 ) -> DataFrame:
     """Deterministic global shuffle + sharding: each doc lands in a
     hash-assigned shard and gets a dense position from a SECOND,
@@ -925,18 +913,18 @@ def training_shards(
     from pyspark.sql import Window
 
     shard = F.pmod(
-        h60(F.concat(F.lit(shard_salt), F.col(id_col).cast("string"))),
+        h60(F.concat(F.lit("shard-v1"), F.col("doc_id").cast("string"))),
         F.lit(n_shards),
     )
-    order_key = h60(F.concat(F.lit(order_salt), F.col(id_col).cast("string")))
+    order_key = h60(F.concat(F.lit("order-v1"), F.col("doc_id").cast("string")))
     sel = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         shard.alias("shard"),
         order_key.alias("ok"),
     )
-    w = Window.partitionBy("shard").orderBy("ok", id_col)
+    w = Window.partitionBy("shard").orderBy("ok", "doc_id")
     return sel.select(
-        id_col,
+        "doc_id",
         "shard",
         (F.row_number().over(w) - 1).cast("bigint").alias("position"),
     )
@@ -967,9 +955,7 @@ FROM sel
 # ---------------------------------------------------------------------------
 
 
-def curriculum_phases(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def curriculum_phases(docs: DataFrame) -> DataFrame:
     """Curriculum-learning phase assignment: docs bucketed into 4
     phases by length quartile (short/easy first — the standard
     length-based curriculum), with EXACT discrete quartile cutoffs
@@ -994,7 +980,7 @@ def curriculum_phases(
     no length, no curriculum position.
     """
     sized = docs.select(
-        F.col(id_col), word_count(text_col).cast("bigint").alias("n_words")
+        F.col("doc_id"), word_count("text").cast("bigint").alias("n_words")
     )
     hist = (
         sized.filter(F.col("n_words").isNotNull())
@@ -1021,7 +1007,7 @@ def curriculum_phases(
         + F.when(F.col("n_words") > F.col("c75"), 1).otherwise(0),
     )
     return sized.crossJoin(F.broadcast(cuts)).select(
-        F.col(id_col), "n_words", phase.cast("bigint").alias("phase")
+        F.col("doc_id"), "n_words", phase.cast("bigint").alias("phase")
     )
 
 
@@ -1061,18 +1047,13 @@ FROM sized, cuts
 
 def dsir_importance(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    target_col: str = "lang",
-    target_value: str = "en",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR; Xie et al.
     2023) re-expressed: score every document by how much more likely
     its hashed-bigram features are under the TARGET distribution
-    (docs where ``target_col == target_value``) than under the
+    (docs where ``lang == 'en'``) than under the
     complement (source) distribution, using add-1-smoothed bucket
-    counts over ``n_buckets`` hash buckets.
+    counts over 4096 hash buckets.
 
     DETERMINISM DEVIATION (documented, deliberate): the paper sums
     log-ratios; natural log is NOT bit-identical across DuckDB and
@@ -1089,7 +1070,7 @@ def dsir_importance(
     scores.
 
     Scale: the bucket-count model is ONE map-side-combinable
-    aggregation to exactly ``n_buckets`` rows + a 1-row totals
+    aggregation to exactly 4096 rows + a 1-row totals
     aggregate — both broadcast; decorating the positional feature
     stream is a broadcast join, so the only corpus-sized exchange is
     the per-doc rollup. Counts stay exact in doubles up to 2^53
@@ -1100,9 +1081,9 @@ def dsir_importance(
     # CASE WHEN ... ELSE 0 END — a bare (col == value).cast("int") would
     # null-propagate, silently dropping NULL-lang docs from BOTH
     # smoothed distributions and emitting is_target = NULL
-    is_tgt = F.when(F.col(target_col) == target_value, 1).otherwise(0)
+    is_tgt = F.when(F.col("lang") == "en", 1).otherwise(0)
     toked = docs.select(
-        F.col(id_col).alias("doc"), is_tgt.alias("tgt"), tokens(text_col).alias("toks")
+        F.col("doc_id").alias("doc"), is_tgt.alias("tgt"), tokens("text").alias("toks")
     )
     n1 = F.greatest(F.size("toks") - 1, F.lit(0))
     pairs = toked.select(
@@ -1120,7 +1101,7 @@ def dsir_importance(
         "tgt",
         (F.col("pos0") + 1).cast("bigint").alias("pos"),
         (
-            h60(F.concat(F.col("bg.w1"), F.lit(" "), F.col("bg.w2"))) % n_buckets
+            h60(F.concat(F.col("bg.w1"), F.lit(" "), F.col("bg.w2"))) % 4096
         ).alias("bucket"),
     )
     # the model is <= n_buckets rows: persist() it so the totals
@@ -1151,11 +1132,11 @@ def dsir_importance(
             (
                 (
                     (F.col("ct") + 1).cast("double")
-                    / (F.col("t_total") + n_buckets).cast("double")
+                    / (F.col("t_total") + 4096).cast("double")
                 )
                 / (
                     (F.col("cs") + 1).cast("double")
-                    / (F.col("s_total") + n_buckets).cast("double")
+                    / (F.col("s_total") + 4096).cast("double")
                 )
             ).alias("ratio"),
         )
@@ -1178,7 +1159,7 @@ def dsir_importance(
         (sum_ratio / F.col("n_features")).alias("avg_ratio"),
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"), is_tgt.alias("is_target"))
+        docs.select(F.col("doc_id"), is_tgt.alias("is_target"))
         .join(per, F.col("doc_id") == per.doc, "left")
         .select(
             "doc_id",
@@ -1257,9 +1238,6 @@ MIXTURE_WEIGHT_CAP = 5.0
 
 def domain_mixture(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    cap: float = MIXTURE_WEIGHT_CAP,
 ) -> DataFrame:
     """Per-source mixture weights toward a UNIFORM token target — the
     control table a mixture-aware sampler consumes (Doremi, Xie et al.
@@ -1268,7 +1246,7 @@ def domain_mixture(
     first).
 
     For each source: document count, token mass, realized token share,
-    and ``mix_weight = min(cap, target_share / token_share)`` — >1
+    and ``mix_weight = min(MIXTURE_WEIGHT_CAP, target_share / token_share)`` — >1
     upsamples an under-represented source, <1 downsamples an
     over-represented one, and the cap bounds the repetition factor any
     single source can be asked for (unbounded upsampling of a tiny
@@ -1287,17 +1265,15 @@ def domain_mixture(
     IEEE ops over exact integers — identical under any partitioning,
     hence hash-exact vs the oracle.
     """
-    toks = F.coalesce(token_count(F.col(text_col)).cast("bigint"), F.lit(0))
-    per_source = docs.groupBy(F.col(source_col).alias("source")).agg(
+    toks = F.coalesce(token_count(F.col("text")).cast("bigint"), F.lit(0))
+    per_source = docs.groupBy(F.col("source")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(toks).cast("bigint").alias("n_tokens"),
     )
-    return mixture_weights_from_totals(per_source, cap=cap)
+    return mixture_weights_from_totals(per_source)
 
 
-def mixture_weights_from_totals(
-    per_source: DataFrame, cap: float = MIXTURE_WEIGHT_CAP
-) -> DataFrame:
+def mixture_weights_from_totals(per_source: DataFrame) -> DataFrame:
     """The t32 weight math from an ALREADY-AGGREGATED (source, n_docs,
     n_tokens) table — shared by the batch query and the streaming
     mixture monitor's per-trigger fold, so the live weights can never
@@ -1313,8 +1289,8 @@ def mixture_weights_from_totals(
         "n_docs",
         "n_tokens",
         share.alias("token_share"),
-        F.when(F.col("n_tokens") == 0, F.lit(float(cap)))
-        .otherwise(F.least(F.lit(float(cap)), target / share))
+        F.when(F.col("n_tokens") == 0, F.lit(float(MIXTURE_WEIGHT_CAP)))
+        .otherwise(F.least(F.lit(float(MIXTURE_WEIGHT_CAP)), target / share))
         .alias("mix_weight"),
     )
 
@@ -1360,16 +1336,12 @@ DIVERSITY_CAP = 4
 def diversity_sample(
     docs: DataFrame,
     fingerprints: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_bits: int = DIVERSITY_BUCKET_BITS,
-    cap: int = DIVERSITY_CAP,
 ) -> DataFrame:
-    """Cluster-capped quality selection: keep the top-``cap`` documents
+    """Cluster-capped quality selection: keep the top-``DIVERSITY_CAP`` documents
     BY QUALITY within each semantic bucket — a coreset spread across
     semantic space instead of dominated by the head cluster (the
     selection step of SemDeDup-style pipelines, Abbas et al. 2023,
-    with the cluster assignment made exact: the top ``bucket_bits``
+    with the cluster assignment made exact: the top ``DIVERSITY_BUCKET_BITS``
     bits of the d04 SimHash fingerprint, so near-identical docs share
     a bucket and compete for the same slots).
 
@@ -1389,14 +1361,14 @@ def diversity_sample(
     Nothing is all-pairs and no centroid iteration is needed — the
     bucket assignment is a pure projection of the fingerprint.
     """
-    shift = dedup.SIMHASH_BITS - bucket_bits
+    shift = dedup.SIMHASH_BITS - DIVERSITY_BUCKET_BITS
     fp = fingerprints.select(
         "doc_id",
         F.shiftright(F.col("simhash"), shift).cast("bigint").alias("bucket"),
     )
     scored = docs.select(
-        F.col(id_col).alias("doc_id"),
-        composite_quality(F.col(text_col)).alias("quality_score"),
+        F.col("doc_id"),
+        composite_quality(F.col("text")).alias("quality_score"),
     )
     joined = fp.join(scored, "doc_id")
     by_bucket = Window.partitionBy("bucket")
@@ -1409,7 +1381,7 @@ def diversity_sample(
         "quality_score",
         F.row_number().over(order).cast("bigint").alias("bucket_rank"),
         F.count(F.lit(1)).over(by_bucket).cast("bigint").alias("bucket_size"),
-    ).filter(F.col("bucket_rank") <= cap)
+    ).filter(F.col("bucket_rank") <= DIVERSITY_CAP)
 
 
 def diversity_sample_sql(
@@ -1452,10 +1424,6 @@ FROM ranked WHERE bucket_rank <= {cap}
 
 def corpus_datasheet(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """Per-source corpus datasheet (the quantitative core of "Datasheets
     for Datasets", Gebru et al. 2021 — the table a corpus release ships
@@ -1480,13 +1448,13 @@ def corpus_datasheet(
     integers; the one IEEE division per row is identical across
     engines.
     """
-    toks_n = F.coalesce(token_count(F.col(text_col)).cast("bigint"), F.lit(0))
+    toks_n = F.coalesce(token_count(F.col("text")).cast("bigint"), F.lit(0))
     base = docs.select(
-        F.col(source_col).alias("source"),
-        F.col(lang_col).alias("lang"),
+        F.col("source"),
+        F.col("lang"),
         toks_n.alias("toks"),
-        F.col(text_col).isNull().alias("text_is_null"),
-        h60(text_col).alias("th"),
+        F.col("text").isNull().alias("text_is_null"),
+        h60("text").alias("th"),
     )
     per_source = base.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1624,14 +1592,14 @@ LEFT JOIN top_lang t ON p.source = t.source
 # Corpus snapshot delta: the release-notes diff between two versions
 # ---------------------------------------------------------------------------
 
+# The salted-hash split of one corpus into the OLD snapshot (OLD_PCT %)
+# and the NEW one.
+OLD_PCT = 80
+SNAPSHOT_SALT = "snapshot-v1"
+
 
 def corpus_delta(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    old_pct: int = 80,
-    salt: str = "snapshot-v1",
 ) -> DataFrame:
     """Per-source delta between two corpus snapshots — the quantitative
     release notes a corpus version bump ships with: documents and token
@@ -1652,17 +1620,17 @@ def corpus_delta(
     in docs/tokens but never in the novel-content join (no content to
     compare) — both engines agree via COUNT(th) semantics.
     """
-    toks = F.coalesce(token_count(F.col(text_col)).cast("bigint"), F.lit(0))
+    toks = F.coalesce(token_count(F.col("text")).cast("bigint"), F.lit(0))
     base = docs.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         toks.alias("toks"),
-        h60(text_col).alias("th"),
+        h60("text").alias("th"),
         (
             F.pmod(
-                h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
+                h60(F.concat(F.lit(SNAPSHOT_SALT), F.col("doc_id").cast("string"))),
                 F.lit(100),
             )
-            < old_pct
+            < OLD_PCT
         ).alias("is_old"),
     )
     per_side = base.groupBy("source").agg(
@@ -1765,11 +1733,6 @@ FROM per_side p LEFT JOIN novel n ON p.source = n.source
 
 def length_drift(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    old_pct: int = 80,
-    salt: str = "snapshot-v1",
 ) -> DataFrame:
     """Per-source Kolmogorov-Smirnov statistic between the OLD and NEW
     snapshot's document-length (token-count) distributions — the drift
@@ -1789,16 +1752,16 @@ def length_drift(
     two-sample test exists), identically via the explicit guard.
     Snapshot membership is the shared c13/d10 hash split.
     """
-    toks = F.coalesce(token_count(F.col(text_col)).cast("bigint"), F.lit(0))
+    toks = F.coalesce(token_count(F.col("text")).cast("bigint"), F.lit(0))
     base = docs.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         toks.alias("toks"),
         (
             F.pmod(
-                h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
+                h60(F.concat(F.lit(SNAPSHOT_SALT), F.col("doc_id").cast("string"))),
                 F.lit(100),
             )
-            < old_pct
+            < OLD_PCT
         ).alias("is_old"),
     )
     hist = base.groupBy("source", "toks").agg(

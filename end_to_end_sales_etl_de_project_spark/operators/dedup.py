@@ -41,6 +41,7 @@ from end_to_end_sales_etl_de_project_spark.functions.hashing import (
     minhash_family,
     minhash_family_sql,
 )
+from end_to_end_sales_etl_de_project_spark.functions.scalar import FIXED_POINT_SCALE
 from end_to_end_sales_etl_de_project_spark.operators.text import (
     corpus_split,
     corpus_split_sql,
@@ -55,10 +56,6 @@ from end_to_end_sales_etl_de_project_spark.checkpoints import (
     free_checkpoint,
     scoped_checkpoint,
 )
-
-# r10-era name kept for in-repo call sites; the lifecycle rules (storage
-# level, scopes) live in checkpoints.py.
-_free_local_checkpoint = free_checkpoint
 
 
 # ---------------------------------------------------------------------------
@@ -279,6 +276,11 @@ def signature_width(signatures: DataFrame) -> int:
 
 
 DEFAULT_MAX_BUCKET_SIZE = 32
+# MinHash-LSH banding: 16 hashes in 4 bands of 4 rows, and the true
+# shingle Jaccard a candidate pair must reach.
+N_HASHES = 16
+N_BANDS = 4
+MIN_JACCARD = 0.5
 
 
 def _pruned_buckets(
@@ -362,9 +364,6 @@ def lsh_candidate_pairs(
 def minhash_lsh_pairs(
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs: band → candidate (hot
     buckets dropped, see ``lsh_candidate_pairs``) → verify true Jaccard
@@ -378,11 +377,9 @@ def minhash_lsh_pairs(
     stages both tables once per session and hands them in.
     """
     n_hashes = signature_width(signatures)
-    assert n_hashes % n_bands == 0
-    cands = lsh_candidate_pairs(
-        signatures, n_bands, n_hashes // n_bands, max_bucket_size
-    )
-    return jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
+    assert n_hashes % N_BANDS == 0
+    cands = lsh_candidate_pairs(signatures, N_BANDS, n_hashes // N_BANDS)
+    return jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
 
 
 def minhash_lsh_pairs_sql(
@@ -456,14 +453,9 @@ def fuzzy_decontaminate(
     docs: DataFrame,
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """FUZZY train/test decontamination: (test doc, train doc) pairs
-    whose true shingle Jaccard is ≥ ``min_jaccard``, found via
+    whose true shingle Jaccard is ≥ ``MIN_JACCARD``, found via
     MinHash-LSH banding — the near-duplicate generalization of the
     verbatim-overlap check (``curation.contamination_report``). A test
     doc that is a light paraphrase or re-wrap of a training doc shares
@@ -479,12 +471,13 @@ def fuzzy_decontaminate(
     bucket occupancy × split balance, never |test|×|train|. ``docs`` is
     consulted only for the split assignment (a 2-column projection)."""
     n_hashes = signature_width(signatures)
-    assert n_hashes % n_bands == 0
+    assert n_hashes % N_BANDS == 0
     splits = docs.select(
-        F.col(id_col).alias("doc"), corpus_split(text_col).alias("split")
+        F.col("doc_id").alias("doc"), corpus_split("text").alias("split")
     )
     buckets = _pruned_buckets(
-        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, N_BANDS, n_hashes // N_BANDS),
+        DEFAULT_MAX_BUCKET_SIZE,
     )
     tagged = buckets.join(splits, "doc")
     test_b = tagged.filter(F.col("split") == "test").select(
@@ -496,7 +489,7 @@ def fuzzy_decontaminate(
     cands = (
         test_b.join(train_b, ["band", "key"]).select("doc_a", "doc_b").distinct()
     )
-    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
+    pairs = jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
     return pairs.select(
         F.col("doc_a").alias("test_doc"),
         F.col("doc_b").alias("train_doc"),
@@ -577,9 +570,7 @@ WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
 # ---------------------------------------------------------------------------
 
 
-def neardup_components(
-    docs: DataFrame, pairs: DataFrame, id_col: str, max_iterations: int = 20
-) -> DataFrame:
+def neardup_components(docs: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """Resolve near-dup PAIRS into dedup DECISIONS: one row per doc with
     its connected-component representative (the component's min id) and
     whether this doc is the canonical keeper.
@@ -598,8 +589,8 @@ def neardup_components(
     rounds, while halving the pointer paths each round converges in
     O(log2(diameter)) + O(1) rounds — the same bound class as the
     large-star/small-star MapReduce CC algorithm, with one extra
-    equi-join per round instead of a reshaped edge set. The default
-    ``max_iterations = 20`` therefore covers diameters ~2^18, not 20
+    equi-join per round instead of a reshaped edge set. The bound of
+    20 rounds therefore covers diameters ~2^18, not 20
     (``tests/test_neardup_resolve.py`` pins the log bound on a planted
     deep chain). Near-dup components are shallow in practice (pairs
     share content, so diameters of 2-4 dominate) — the hop costs one
@@ -655,7 +646,7 @@ def neardup_components(
     # is fully materialized (ADVICE r10: without this, a deep chain
     # pins O(rounds × |edge nodes|) storage until ContextCleaner GC)
     prev_ckpt = labels
-    for _ in range(max_iterations):
+    for _ in range(20):
         rounds += 1
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["node"])
@@ -697,21 +688,21 @@ def neardup_components(
         # `stepped` is materialized (eager checkpoint + the collect
         # above), so the prior round's blocks are now unreachable by
         # any future plan — free them instead of waiting for GC
-        _free_local_checkpoint(prev_ckpt)
+        free_checkpoint(prev_ckpt)
         prev_ckpt = stepped
         labels = stepped.select("node", "lbl")
         if n_changed == 0:
             converged = True
             break
     if not converged:
-        # a component with diameter > max_iterations would return
+        # a component the round bound cannot close would return
         # part-merged labels that silently diverge from the exact
         # transitive-closure oracle — fail loudly instead
         edges.unpersist()
         raise RuntimeError(
-            f"neardup_components: min-label propagation did not converge "
-            f"within {max_iterations} iterations — a pair-graph component "
-            f"has diameter > {max_iterations}; raise max_iterations"
+            "neardup_components: min-label propagation did not converge "
+            "within 20 rounds — a pair-graph component is deeper than "
+            "pointer doubling closes in that bound"
         )
     final = labels
     edges.unpersist()
@@ -811,8 +802,6 @@ SELECT doc AS doc_id, {fp} AS simhash FROM votes
 def minhash_estimate_audit(
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    n_bands: int = 4,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Per-candidate-pair sketch audit: the MinHash ESTIMATE of Jaccard
     (fraction of the n signature components that collide) against the
@@ -830,13 +819,13 @@ def minhash_estimate_audit(
     hash-exact oracle.
     """
     n_hashes = signature_width(signatures)
-    assert n_hashes % n_bands == 0
+    assert n_hashes % N_BANDS == 0
     # the candidate list is referenced TWICE (estimate join + exact
     # verify probe) — materialize once per invocation, the d19 leg
     # shape; the call-site scope frees the previous generation
     cands = scoped_checkpoint(
         "minhash_estimate_audit.cands",
-        lsh_candidate_pairs(signatures, n_bands, n_hashes // n_bands, max_bucket_size),
+        lsh_candidate_pairs(signatures, N_BANDS, n_hashes // N_BANDS),
     )
     # min_jaccard=0.0 keeps every candidate pair (zero-common pairs
     # surface as 0.0) — the audit wants the estimator's misses too
@@ -943,13 +932,16 @@ JOIN sigs gb ON t.doc_b = gb.doc
 # Incremental-ingest exact dedup (new batch vs existing corpus)
 # ---------------------------------------------------------------------------
 
+# The salted-hash split of one snapshot into the existing corpus
+# (CORPUS_PCT %) and the arriving batch.
+CORPUS_PCT = 80
+INGEST_SALT = "ingest-v1"
+
 
 def incremental_dedup(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    corpus_pct: int = 80,
-    salt: str = "ingest-v1",
 ) -> DataFrame:
     """The production ingest shape: a NEW batch of documents arrives
     against an EXISTING corpus, and each batch doc gets a decision —
@@ -971,11 +963,11 @@ def incremental_dedup(
         F.col(id_col).alias("doc"),
         h60(text_col).alias("th"),
         F.pmod(
-            h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))), F.lit(100)
+            h60(F.concat(F.lit(INGEST_SALT), F.col(id_col).cast("string"))), F.lit(100)
         ).alias("b"),
     )
-    corpus = base.filter(F.col("b") < corpus_pct)
-    batch = base.filter(F.col("b") >= corpus_pct)
+    corpus = base.filter(F.col("b") < CORPUS_PCT)
+    batch = base.filter(F.col("b") >= CORPUS_PCT)
     corpus_canon = corpus.groupBy("th").agg(F.min("doc").alias("corpus_canon"))
     batch_min = batch.groupBy("th").agg(F.min("doc").alias("batch_min"))
     decision = (
@@ -1118,9 +1110,7 @@ WHERE n_common / CAST(LEAST(sa.n, sb.n) AS DOUBLE) >= {min_containment}
 # ---------------------------------------------------------------------------
 
 
-def shingle_novelty(
-    docs: DataFrame, hashed_shingles: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def shingle_novelty(docs: DataFrame, hashed_shingles: DataFrame) -> DataFrame:
     """Per-document novelty: the share of a doc's distinct k-word
     shingles whose corpus-wide FIRST appearance (min doc id) is this
     doc — the redundancy/freshness signal curriculum schedulers and
@@ -1148,7 +1138,7 @@ def shingle_novelty(
         )
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(per, F.col("doc_id") == per.doc, "left")
         .select(
             "doc_id",
@@ -1190,36 +1180,32 @@ def substring_dup_groups(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    win: int = 32,
-    anchor: int = 8,
-    modulus: int = 4,
-    fanout_partitions: int | None = None,
 ) -> DataFrame:
-    """Substring-level duplicate detection: exact ``win``-char spans
+    """Substring-level duplicate detection: exact 32-char spans
     repeated across documents (the ExactSubstr signal of Lee et al.
     2022, "Deduplicating Training Data Makes Language Models Better"),
     re-expressed over content-defined anchors instead of a suffix
     array.
 
     A position is an *anchor* when the 60-bit hash of its leading
-    ``anchor``-char gram is ``0 (mod modulus)`` — content-defined, so
+    8-char gram is ``0 (mod 4)`` — content-defined, so
     the sampled positions survive insertions/offset shifts that break
     fixed-stride sampling (the CDC idea from LBFS/rsync). Each anchor
-    contributes one hashed ``win``-char window; windows whose hash
+    contributes one hashed 32-char window; windows whose hash
     lands in >= 2 distinct docs are repeated spans.
 
     Output: (win_hash, n_docs, n_occ) per duplicated window —
     order-independent integer counts, so fully hash-checkable.
 
-    Scale: the ``win``-char candidate windows are SLICED OUT array-side
+    Scale: the 32-char candidate windows are SLICED OUT array-side
     (a cheap substring lambda) and exploded as 32-char strings — never
     raw positions, which would duplicate the full document text into
     every position row (measured 3.5x slower at sf0.1). The anchor
     test and md5 then run ROW-side, inside whole-stage codegen, right
     after the explode (hashing inside the lambda would leave codegen
     and ran ~2x slower when measured) — so all ~len(text) window rows
-    do materialize briefly, but each is 32 bytes and ~(modulus-1)/
-    modulus of them die in the same codegen stage without ever being
+    do materialize briefly, but each is 32 bytes and ~3/4 of them die
+    in the same codegen stage without ever being
     shuffled. Everything that reaches the exchange is 16-byte
     (hash, doc) rows, and the rollup is map-side combinable. At extreme scale a rolling Rabin-Karp hash
     via ``mapInPandas`` is a drop-in that cuts the per-position md5
@@ -1230,7 +1216,7 @@ def substring_dup_groups(
     """
     base = docs.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias("t")
-    ).filter(F.length("t") >= win)
+    ).filter(F.length("t") >= 32)
     # the explode fans out ~len(text) rows per input row, so a
     # file-count-bound scan (one small parquet file = ONE partition)
     # serializes the whole hot stage on a single core — spread the
@@ -1238,8 +1224,8 @@ def substring_dup_groups(
     # (measured 3.5x at sf0.1; no-op on any real multi-split table)
     from end_to_end_sales_etl_de_project_spark.sources.tables import spread
 
-    base = spread(base, fanout_partitions)
-    # per-doc: slice out the win-char candidate windows array-side
+    base = spread(base)
+    # per-doc: slice out the 32-char candidate windows array-side
     # (plain substring, cheap interpreted lambda), then explode the
     # 32-char windows — NOT raw positions, which would duplicate the
     # full text into every row; md5 stays row-side in codegen (hashing
@@ -1248,13 +1234,13 @@ def substring_dup_groups(
         "doc",
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.length("t") - F.lit(win - 1)),
-                lambda i: F.substring(F.col("t"), i, win),
+                F.sequence(F.lit(1), F.length("t") - F.lit(31)),
+                lambda i: F.substring(F.col("t"), i, 32),
             )
         ).alias("w"),
     )
     wins = windows.filter(
-        h60(F.substring("w", 1, anchor)) % modulus == 0
+        h60(F.substring("w", 1, 8)) % 4 == 0
     ).select("doc", h60(F.col("w")).alias("win_hash"))
     return (
         wins.groupBy("win_hash")
@@ -1316,12 +1302,6 @@ def incremental_neardup(
     docs: DataFrame,
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    corpus_pct: int = 80,
-    salt: str = "ingest-v1",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """The near-dup gate at the ingest door: a NEW batch of documents
     arrives against an EXISTING corpus, and each batch doc gets a
@@ -1352,27 +1332,29 @@ def incremental_neardup(
     boundary; a real pipeline passes two frames).
     """
     n_hashes = signature_width(signatures)
-    assert n_hashes % n_bands == 0
+    assert n_hashes % N_BANDS == 0
     member = docs.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.pmod(
-            h60(F.concat(F.lit(salt), F.col(id_col).cast("string"))), F.lit(100)
+            h60(F.concat(F.lit(INGEST_SALT), F.col("doc_id").cast("string"))),
+            F.lit(100),
         ).alias("b"),
     )
     buckets = _pruned_buckets(
-        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, N_BANDS, n_hashes // N_BANDS),
+        DEFAULT_MAX_BUCKET_SIZE,
     )
     tagged = buckets.join(member, "doc")
-    batch_b = tagged.filter(F.col("b") >= corpus_pct).select(
+    batch_b = tagged.filter(F.col("b") >= CORPUS_PCT).select(
         F.col("doc").alias("doc_a"), "band", "key"
     )
-    corpus_b = tagged.filter(F.col("b") < corpus_pct).select(
+    corpus_b = tagged.filter(F.col("b") < CORPUS_PCT).select(
         F.col("doc").alias("doc_b"), "band", "key"
     )
     cands = (
         batch_b.join(corpus_b, ["band", "key"]).select("doc_a", "doc_b").distinct()
     )
-    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
+    pairs = jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
     best_w = Window.partitionBy("doc_a").orderBy(
         F.col("jaccard").desc(), F.col("doc_b").asc()
     )
@@ -1383,9 +1365,9 @@ def incremental_neardup(
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    batch_docs = member.filter(F.col("b") >= corpus_pct).select("doc")
+    batch_docs = member.filter(F.col("b") >= CORPUS_PCT).select("doc")
     return batch_docs.join(best, batch_docs["doc"] == best["doc_a"], "left").select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         F.when(F.col("doc_b").isNull(), "novel")
         .otherwise("near_dup_of_corpus")
         .alias("decision"),
@@ -1486,13 +1468,13 @@ WHERE m.bkt >= {corpus_pct}
 # LSH tuning curve: candidate volume and precision per banding config
 # ---------------------------------------------------------------------------
 
+# (n_bands, rows_per_band) configs; each tiles the 16-hash signature.
+LSH_CONFIGS = ((2, 8), (4, 4), (8, 2))
+
 
 def lsh_tuning_curve(
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    configs: tuple[tuple[int, int], ...] = ((2, 8), (4, 4), (8, 2)),
-    min_jaccard: float = 0.5,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """The d03 tuning table: for each LSH banding configuration
     (n_bands × rows_per_band over the same 16-hash signature), the
@@ -1512,7 +1494,7 @@ def lsh_tuning_curve(
     precision is one IEEE division (NULL when a config yields zero
     candidates, identically on both engines via the explicit guard).
     """
-    n_bands_ok(configs, signature_width(signatures))
+    n_bands_ok(LSH_CONFIGS, signature_width(signatures))
     # r14: each leg references its candidate set twice (the volume
     # count and the verify join's probe side) — lazy, the banding
     # self-join chain ran twice per leg. Materialize the pair list
@@ -1531,14 +1513,14 @@ def lsh_tuning_curve(
         nb, rpb = cfg
         return scoped_checkpoint(
             f"lsh_tuning_curve.cands{nb}x{rpb}",
-            lsh_candidate_pairs(signatures, nb, rpb, max_bucket_size),
+            lsh_candidate_pairs(signatures, nb, rpb),
         )
 
-    with ThreadPoolExecutor(max_workers=len(configs)) as pool:
-        all_cands = list(pool.map(_mk_cands, configs))
+    with ThreadPoolExecutor(max_workers=len(LSH_CONFIGS)) as pool:
+        all_cands = list(pool.map(_mk_cands, LSH_CONFIGS))
     legs = []
-    for (nb, rpb), cands in zip(configs, all_cands):
-        verified = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
+    for (nb, rpb), cands in zip(LSH_CONFIGS, all_cands):
+        verified = jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
         n_cand = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
         n_ver = verified.agg(F.count(F.lit(1)).cast("bigint").alias("n_verified"))
         legs.append(
@@ -1656,8 +1638,6 @@ SELECT CAST({nb} AS BIGINT) AS n_bands,
 
 def cross_source_dup_matrix(
     docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> DataFrame:
     """Source-pair matrix of EXACT shared content — how many distinct
     documents each pair of sources both carry verbatim. The mirror-site
@@ -1676,8 +1656,8 @@ def cross_source_dup_matrix(
     both engines (no content / no attributable side).
     """
     th_src = (
-        docs.filter(F.col(text_col).isNotNull() & F.col(source_col).isNotNull())
-        .select(h60(text_col).alias("th"), F.col(source_col).alias("src"))
+        docs.filter(F.col("text").isNotNull() & F.col("source").isNotNull())
+        .select(h60("text").alias("th"), F.col("source").alias("src"))
         .distinct()
     )
     a = th_src.alias("a")
@@ -1717,10 +1697,6 @@ def cross_source_neardup_matrix(
     docs: DataFrame,
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    min_jaccard: float = 0.5,
-    scale: int = 100_000,
 ) -> DataFrame:
     """Source-pair matrix of NEAR-duplicate content — d20's exact-hash
     mirror detector misses re-crawls that differ by a timestamp or a
@@ -1735,17 +1711,17 @@ def cross_source_neardup_matrix(
     additions are two doc→source hash joins and a |sources|²-bounded
     rollup. Exactness: the mean rides the t30/a08 quantized-integer
     grid — each verified Jaccard (an exact ratio of BIGINT counts)
-    rounds to ``scale`` BEFORE the order-free integer SUM, so the mean
+    rounds to ``FIXED_POINT_SCALE`` BEFORE the order-free integer SUM, so the mean
     is two IEEE divisions on exact integers (the float sum of raw
     ratios would be shuffle-order-dependent). NULL-source docs drop out
     (no attributable side), exactly as in d20.
     """
-    pairs = minhash_lsh_pairs(hashed_shingles, signatures, min_jaccard=min_jaccard)
-    srcs = docs.filter(F.col(source_col).isNotNull()).select(
-        F.col(id_col).alias("doc"), F.col(source_col).alias("src")
+    pairs = minhash_lsh_pairs(hashed_shingles, signatures)
+    srcs = docs.filter(F.col("source").isNotNull()).select(
+        F.col("doc_id").alias("doc"), F.col("source").alias("src")
     )
     sa, sb = srcs.alias("sa"), srcs.alias("sb")
-    qj = F.round(F.col("jaccard") * scale).cast("bigint")
+    qj = F.round(F.col("jaccard") * FIXED_POINT_SCALE).cast("bigint")
     lab = (
         pairs.join(sa, F.col("doc_a") == F.col("sa.doc"))
         .join(sb, F.col("doc_b") == F.col("sb.doc"))
@@ -1759,7 +1735,7 @@ def cross_source_neardup_matrix(
     return lab.groupBy("source_a", "source_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         (
-            (F.sum("qj").cast("double") / F.lit(float(scale)))
+            (F.sum("qj").cast("double") / F.lit(float(FIXED_POINT_SCALE)))
             / F.count(F.lit(1)).cast("double")
         ).alias("mean_jaccard"),
     )
@@ -1827,9 +1803,6 @@ def _bloom_bit(shingle_hash: Column, seed: int, m_bits: int) -> Column:
 def split_shingle_tables(
     docs: DataFrame,
     hashed_shingles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three distinct split-labeled shingle-hash tables every
     Bloom-tier consumer probes: ``test_sh`` (distinct test-split
@@ -1848,10 +1821,10 @@ def split_shingle_tables(
     pattern) shared by d22's curve + report and all of d23's legs; on
     a real cluster the equivalent is a bucketed parquet of the three
     tables, refreshed with the corpus."""
-    splits = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc"),
-        corpus_split(text_col).alias("split"),
-        F.col(source_col).alias("src"),
+    splits = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("doc"),
+        corpus_split("text").alias("split"),
+        F.col("source").alias("src"),
     )
     labeled = hashed_shingles.join(splits, "doc")
     test_sh = labeled.filter(F.col("split") == "test").select("shingle").distinct()
@@ -1917,7 +1890,6 @@ def bloom_choose_m(
 def bloom_decontaminate(
     split_shingles: tuple[DataFrame, DataFrame, DataFrame],
     m_bits: int,
-    n_seeds: int = BLOOM_N_SEEDS,
 ) -> DataFrame:
     """Bloom-prefilter audit for train/test decontamination: per
     source, how many distinct train-split shingles the m-bit Bloom
@@ -1943,7 +1915,7 @@ def bloom_decontaminate(
     the CONSTANT-size alternative (m bits regardless of probe volume —
     8-32 KB on the grid here; ~10 bits per test shingle for ~1% FP at
     any scale),
-    and the probe is pure map-side compute: each of the ``n_seeds``
+    and the probe is pure map-side compute: each of the ``BLOOM_N_SEEDS``
     bit positions is checked with its own broadcast hash-lookup join,
     so the 100 TB train side is NEVER shuffled to decide membership —
     the only shuffle in this plan is the one distinct() that
@@ -1967,7 +1939,7 @@ def bloom_decontaminate(
     test_sh, _, train_src = split_shingles
     # Map-side Bloom probe: one broadcast hash-lookup join per family
     # member, AND-folded — no shuffle of the probe side, no groupBy.
-    flagged, is_pos, _ = _bloom_probe(train_src, test_sh, m_bits, n_seeds)
+    flagged, is_pos, _ = _bloom_probe(train_src, test_sh, m_bits, BLOOM_N_SEEDS)
     report = flagged.select(
         "src",
         is_pos.alias("is_pos"),
@@ -2094,27 +2066,22 @@ FROM reps WHERE m_bits = (SELECT m FROM chosen)
 """
 
 
-def bloom_bitmap_words(bits: DataFrame, m_bits: int = BLOOM_M_BITS) -> list[int]:
+def bloom_bitmap_words(bits: DataFrame) -> list[int]:
     """Pack a bit-position table (the d22 ``bits`` frame) into
-    ``m_bits/64`` signed 64-bit words — the representation a deployed
+    ``BLOOM_M_BITS/64`` signed 64-bit words — the representation a deployed
     Bloom gate ships to executors (a CONSTANT-size literal/broadcast,
     never a join side). The collect is control-plane and bounded by
-    ``m_bits`` positions regardless of corpus size; words are folded to
+    ``BLOOM_M_BITS`` positions regardless of corpus size; words are folded to
     signed two's complement so they round-trip through Spark's LongType
     exactly."""
-    n_words = (m_bits + 63) // 64
+    n_words = (BLOOM_M_BITS + 63) // 64
     words = [0] * n_words
     for (bit,) in bits.select("bit").collect():
         words[bit // 64] |= 1 << (bit % 64)
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bloom_membership(
-    shingle_hash: Column,
-    words: list[int],
-    m_bits: int = BLOOM_M_BITS,
-    n_seeds: int = BLOOM_N_SEEDS,
-) -> Column:
+def bloom_membership(shingle_hash: Column, words: list[int]) -> Column:
     """TRUE iff every hash-family bit of ``shingle_hash`` is set in the
     packed bitmap — the pure-projection Bloom probe (the join-free twin
     of d22's broadcast-lookup probe, usable inside higher-order-function
@@ -2133,8 +2100,8 @@ def bloom_membership(
         ]
     )
     member = F.lit(True)
-    for s in range(n_seeds):
-        bit = _bloom_bit(shingle_hash, s, m_bits)
+    for s in range(BLOOM_N_SEEDS):
+        bit = _bloom_bit(shingle_hash, s, BLOOM_M_BITS)
         word = F.get(arr, (bit / F.lit(64)).cast("int"))
         mask = F.get(masks, (bit % F.lit(64)).cast("int"))
         member = member & (word.bitwiseAND(mask) != F.lit(0))
@@ -2143,12 +2110,10 @@ def bloom_membership(
 
 def bloom_sizing_curve(
     split_shingles: tuple[DataFrame, DataFrame, DataFrame],
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    n_seeds: int = BLOOM_N_SEEDS,
 ) -> DataFrame:
     """The Bloom m-dial as a hash-checked table — d19's tuning-curve
     pattern applied to the d22 prefilter: for each filter size in
-    ``m_grid``, the corpus-wide probe outcome (``m_bits``,
+    ``BLOOM_M_GRID``, the corpus-wide probe outcome (``m_bits``,
     ``n_bits_set``, ``n_probe``, ``n_bloom_pos``, ``n_exact``,
     ``n_false_pos``, ``fill_ratio``, ``fp_rate``). The table that
     answers "how many bits do I actually need per test shingle" with
@@ -2171,8 +2136,8 @@ def bloom_sizing_curve(
     cross-engine."""
     test_sh, train_sh, _ = split_shingles
     legs = []
-    for m in m_grid:
-        probed, is_pos, bits = _bloom_probe(train_sh, test_sh, m, n_seeds)
+    for m in BLOOM_M_GRID:
+        probed, is_pos, bits = _bloom_probe(train_sh, test_sh, m, BLOOM_N_SEEDS)
         flagged = probed.select(
             is_pos.alias("is_pos"), F.col("mx").isNotNull().alias("is_exact")
         )
@@ -2284,10 +2249,6 @@ def dedup_tier_attribution(
     components: DataFrame,
     split_shingles: tuple[DataFrame, DataFrame, DataFrame],
     m_bits: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_containment: float = 0.9,
-    n_seeds: int = BLOOM_N_SEEDS,
 ) -> DataFrame:
     """Tier-by-tier drop attribution for the full curation cascade —
     per tier, how many docs it flags that NO earlier tier already
@@ -2310,7 +2271,7 @@ def dedup_tier_attribution(
     2. ``2_neardup`` — MinHash-LSH verified near-dup ``components``
        (the d03 pairs resolved by d06): non-canonical members not
        already flagged.
-    3. ``3_containment`` — asymmetric ≥``min_containment`` shingle
+    3. ``3_containment`` — asymmetric ≥0.9 shingle
        containment over ``capped_shingles`` (d16's df-capped index):
        the CONTAINED side
        (smaller shingle set; ties drop the larger id, keeping the min
@@ -2329,13 +2290,13 @@ def dedup_tier_attribution(
     (broadcast 1-row join-backs). Counts are exact integers —
     hash-exact oracle.
     """
-    scoped = docs.filter(F.col(text_col).isNotNull())
+    scoped = docs.filter(F.col("text").isNotNull())
     # tier 0: Bloom decontamination gate (d22's filter at doc grain)
     test_sh, train_sh, _ = split_shingles
-    probed, is_pos, _ = _bloom_probe(train_sh, test_sh, m_bits, n_seeds)
+    probed, is_pos, _ = _bloom_probe(train_sh, test_sh, m_bits, BLOOM_N_SEEDS)
     pos_sh = probed.filter(is_pos).select("shingle")
-    train_docs = scoped.filter(corpus_split(text_col) == "train").select(
-        F.col(id_col).alias("doc")
+    train_docs = scoped.filter(corpus_split("text") == "train").select(
+        F.col("doc_id").alias("doc")
     )
     # r14: each tier's flag set is referenced by every LATER tier's
     # anti-joins AND by all four count legs — left as lazy plans the
@@ -2351,7 +2312,7 @@ def dedup_tier_attribution(
         .distinct()
     )
     # tier 1: exact (marginal: minus the gate's holds)
-    th = scoped.select(F.col(id_col).alias("doc"), h60(text_col).alias("h"))
+    th = scoped.select(F.col("doc_id").alias("doc"), h60("text").alias("h"))
     canon = th.groupBy("h").agg(F.min("doc").alias("c"))
     exact_f = eager_checkpoint(
         th.join(canon, "h")
@@ -2368,7 +2329,7 @@ def dedup_tier_attribution(
         .join(exact_f, "doc", "left_anti")
     )
     # tier 3: containment (df-capped universe, d16's exact semantics)
-    cpairs = containment_pairs(capped_shingles, min_containment)
+    cpairs = containment_pairs(capped_shingles, 0.9)
     contained = cpairs.select(
         F.when(F.col("n_a") < F.col("n_b"), F.col("doc_a"))
         .otherwise(F.col("doc_b"))
@@ -2398,7 +2359,7 @@ def dedup_tier_attribution(
     # (VERDICT r14 "What's wrong #1": these four were the never-freed
     # bulk of the d24 leak)
     for flag_set in (bloom_f, exact_f, near_f, cont_f):
-        _free_local_checkpoint(flag_set)
+        free_checkpoint(flag_set)
     legs = [
         row.select(
             F.lit("0_bloom_decontam").alias("tier"),
@@ -2552,8 +2513,6 @@ SELECT '3_containment', CAST(n3 AS BIGINT),
 def corpus_lsh_index(
     hashed_shingles: DataFrame,
     signatures: DataFrame,
-    n_bands: int = 4,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """The STATIC build side of the streaming near-dup gate
     (``streaming/documents.neardup_probe``): one row per (band, key,
@@ -2569,9 +2528,10 @@ def corpus_lsh_index(
     honestly covers only what the index can see.
     """
     n_hashes = signature_width(signatures)
-    assert n_hashes % n_bands == 0
+    assert n_hashes % N_BANDS == 0
     buckets = _pruned_buckets(
-        _band_bucket_rows(signatures, n_bands, n_hashes // n_bands), max_bucket_size
+        _band_bucket_rows(signatures, N_BANDS, n_hashes // N_BANDS),
+        DEFAULT_MAX_BUCKET_SIZE,
     )
     sets = hashed_shingles.groupBy("doc").agg(
         F.collect_set("shingle").alias("sh_b")
@@ -2593,9 +2553,9 @@ CMS_W_GRID: tuple[int, ...] = (512, 2048, 8192, 32768)
 CMS_DEPTH = 4
 
 
-def cms_exact_df(hashed_shingles: DataFrame, depth: int = CMS_DEPTH) -> DataFrame:
+def cms_exact_df(hashed_shingles: DataFrame) -> DataFrame:
     """The d28 ground-truth table: per distinct shingle its exact
-    document frequency plus the ``depth`` width-independent seed hashes
+    document frequency plus the ``CMS_DEPTH`` width-independent seed hashes
     (bucket for any width = ``h_s % w``). Returned as a plan — callers
     materialize it (the plans layer checkpoints it as a session
     artifact): every grid leg reads it ~5x and Spark re-derives
@@ -2606,19 +2566,17 @@ def cms_exact_df(hashed_shingles: DataFrame, depth: int = CMS_DEPTH) -> DataFram
         hashed_shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .select(
-            "c", *[h60_seeded(key_str, s).alias(f"h{s}") for s in range(depth)]
+            "c", *[h60_seeded(key_str, s).alias(f"h{s}") for s in range(CMS_DEPTH)]
         )
     )
 
 
 def cms_error_audit(
     ex: DataFrame,
-    w_grid: tuple[int, ...] = CMS_W_GRID,
-    depth: int = CMS_DEPTH,
 ) -> DataFrame:
     """The count-min-sketch width-dial as a hash-checked table — d23's
     sizing-curve pattern applied to COUNT estimation instead of
-    membership: for each sketch width in ``w_grid``, the measured
+    membership: for each sketch width in ``CMS_W_GRID``, the measured
     estimation error over every distinct shingle's document frequency
     (``w_buckets``, ``depth``, ``n_keys``, ``n_over``, ``over_rate``,
     ``sum_err``, ``max_err``). The table that answers "how wide a CMS
@@ -2626,7 +2584,7 @@ def cms_error_audit(
     caps and d19's band tuning both key off DF) with measured
     overcounts instead of the eps=e/w asymptotic bound.
 
-    CMS semantics (Cormode & Muthukrishnan 2005): ``depth`` hash rows
+    CMS semantics (Cormode & Muthukrishnan 2005): ``CMS_DEPTH`` hash rows
     of ``w`` counters; est(key) = min over rows of the counter at
     ``h_s(key) mod w``. One-sided by construction (est >= exact — the
     bucket sum contains the key's own count), so error = est - exact
@@ -2653,21 +2611,21 @@ def cms_error_audit(
     # table, materialized by the caller (the plans layer stages it per
     # session — the split_shingles/d23 pattern).
     legs = []
-    for w in w_grid:
+    for w in CMS_W_GRID:
         withb = ex.select(
             "c",
             *[
                 (F.col(f"h{s}") % F.lit(w)).alias(f"b{s}")
-                for s in range(depth)
+                for s in range(CMS_DEPTH)
             ],
         )
         joined = withb
-        for s in range(depth):
+        for s in range(CMS_DEPTH):
             bs = withb.groupBy(f"b{s}").agg(
                 F.sum("c").cast("bigint").alias(f"s{s}")
             )
             joined = joined.join(F.broadcast(bs), f"b{s}")
-        err = F.least(*[F.col(f"s{s}") for s in range(depth)]) - F.col("c")
+        err = F.least(*[F.col(f"s{s}") for s in range(CMS_DEPTH)]) - F.col("c")
         legs.append(
             joined.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_keys"),
@@ -2676,7 +2634,7 @@ def cms_error_audit(
                 F.max(err).cast("bigint").alias("max_err"),
             ).select(
                 F.lit(w).cast("bigint").alias("w_buckets"),
-                F.lit(depth).cast("bigint").alias("depth"),
+                F.lit(CMS_DEPTH).cast("bigint").alias("depth"),
                 "n_keys",
                 "n_over",
                 F.when(
@@ -2760,10 +2718,9 @@ LSH_TARGET_PRECISION = 0.9
 
 def lsh_choose_config(
     curve: DataFrame,
-    min_precision: float = LSH_TARGET_PRECISION,
 ) -> tuple[int, int]:
     """Pick the banding config from the MEASURED d19 curve: among
-    configs whose candidate precision meets ``min_precision``, the one
+    configs whose candidate precision meets ``LSH_TARGET_PRECISION``, the one
     finding the most verified pairs (recall proxy), ties to fewer
     candidates (cheaper join) then fewer bands; if none qualifies, the
     same order ignoring the precision gate (most pairs wins). The
@@ -2779,7 +2736,7 @@ def lsh_choose_config(
     def order(r):
         q = (
             1
-            if r["precision"] is not None and r["precision"] >= min_precision
+            if r["precision"] is not None and r["precision"] >= LSH_TARGET_PRECISION
             else 0
         )
         return (-q, -r["n_verified"], r["n_candidates"], r["n_bands"])
@@ -2792,9 +2749,6 @@ def tuned_neardup(
     hashed_shingles: DataFrame,
     signatures: DataFrame,
     curve: DataFrame,
-    min_jaccard: float = 0.5,
-    min_precision: float = LSH_TARGET_PRECISION,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """d03 with its dial set FROM the measured d19 curve instead of by
     hand — the closed tuning loop, mirroring how d22 sizes its Bloom
@@ -2811,9 +2765,9 @@ def tuned_neardup(
     sample slice and the chosen config runs on the corpus — here both
     run on the same corpus so the choice is exactly reproducible by
     the oracle's in-SQL chooser."""
-    nb, rpb = lsh_choose_config(curve, min_precision)
-    cands = lsh_candidate_pairs(signatures, nb, rpb, max_bucket_size)
-    pairs = jaccard_pairs(hashed_shingles, min_jaccard, candidates=cands)
+    nb, rpb = lsh_choose_config(curve)
+    cands = lsh_candidate_pairs(signatures, nb, rpb)
+    pairs = jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
     return pairs.select(
         "doc_a",
         "doc_b",

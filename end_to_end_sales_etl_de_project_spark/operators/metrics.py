@@ -88,29 +88,23 @@ def top_performer_incentive(
     monthly: DataFrame,
     rank_partition: Sequence[str],
     total_col: str,
-    rate_pct: float = 0.01,
-    incentive_col: str = "incentive",
-    use_rank: bool = True,
 ) -> DataFrame:
     """Rank groups by monthly total desc; rank-1 rows earn
-    ``round(total * rate, 2)``, everyone else 0.
+    ``round(total * 1%, 2)`` as ``incentive``, everyone else 0.
 
-    Mirrors ``src/transform/transform.py:150-154``. ``use_rank=True``
-    keeps the reference's tie semantics (all tied leaders paid);
-    ``use_rank=False`` switches to ``row_number`` (exactly one winner,
-    tie broken arbitrarily — documented alternative, not default).
+    Mirrors ``src/transform/transform.py:150-154``: ``rank()`` keeps the
+    reference's tie semantics (all tied leaders paid).
 
     The incentive is computed in decimal (exact 4-dp product, HALF_UP
     round to cents) and emitted as double, so results are engine- and
     partitioning-independent.
     """
     w = Window.partitionBy(*rank_partition).orderBy(F.col(total_col).desc())
-    rank_fn = F.rank() if use_rank else F.row_number()
-    rate = F.lit(rate_pct).cast("decimal(9,6)")
+    rate = F.lit(0.01).cast("decimal(9,6)")
     total_dec = F.col(total_col).cast("decimal(18,2)")
     paid = F.round(total_dec * rate, 2).cast("double")
     return (
-        monthly.withColumn("rnk", rank_fn.over(w))
-        .withColumn(incentive_col, F.when(F.col("rnk") == 1, paid).otherwise(F.lit(0.0)))
+        monthly.withColumn("rnk", F.rank().over(w))
+        .withColumn("incentive", F.when(F.col("rnk") == 1, paid).otherwise(F.lit(0.0)))
         .drop("rnk")
     )

@@ -293,7 +293,6 @@ def sample_frames(
     assets: DataFrame,
     frame_size: int = 256,
     hop: int = 1024,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """Frame sampling over opaque payloads via ``mapInPandas`` — the
     1:N fan-out shape of video frame extraction (one asset row in, one
@@ -319,11 +318,6 @@ def sample_frames(
         import pandas as pd
 
         for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real frame extraction requires a video library; "
-                    "this environment ships none (stub only)"
-                )
             cols: dict[str, list] = {k: [] for k in (
                 "asset_id", "frame_id", "frame_offset", "frame_bytes", "frame_checksum"
             )}
@@ -356,9 +350,7 @@ def sample_frames(
     return assets.mapInPandas(frame_batches, schema=FRAME_SCHEMA)
 
 
-def decode_batch_plan(
-    assets: DataFrame, batch_size: int = 64, bucket_bytes: int = 1024
-) -> DataFrame:
+def decode_batch_plan(assets: DataFrame, batch_size: int = 64) -> DataFrame:
     """Decode-batch assignment: group assets into (format, size-bucket)
     cells and number off fixed-size batches inside each cell — the
     scheduling table a multimodal pipeline computes BEFORE running the
@@ -377,7 +369,7 @@ def decode_batch_plan(
     sel = assets.select(
         "asset_id",
         F.col("meta.format").alias("format"),
-        F.floor(F.col("meta.n_bytes") / F.lit(bucket_bytes))
+        F.floor(F.col("meta.n_bytes") / F.lit(1024))
         .cast("bigint")
         .alias("size_bucket"),
     )
@@ -429,9 +421,7 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_assets(
-    assets: DataFrame, factor: int = 4, decode_stub: bool = True
-) -> DataFrame:
+def resize_assets(assets: DataFrame, factor: int = 4) -> DataFrame:
     """Downscale pass over opaque payloads via ``mapInPandas`` — the
     1:1 resize/transcode shape (decode → scale → re-encode) between
     ingest and feature extraction. With the stub, "resizing" keeps
@@ -452,11 +442,6 @@ def resize_assets(
         import pandas as pd
 
         for pdf in batches:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real resizing requires an image/video library; "
-                    "this environment ships none (stub only)"
-                )
             cols: dict[str, list] = {k: [] for k in (
                 "asset_id", "format", "orig_bytes", "resized",
                 "resized_bytes", "resized_checksum",
@@ -613,26 +598,20 @@ def phash_signatures(assets: DataFrame, decode_stub: bool = True) -> DataFrame:
     return assets.mapInPandas(sig_batches, schema=SIG_SCHEMA)
 
 
-def phash_neardup_pairs(
-    assets: DataFrame, hamming_max: int = 3, decode_stub: bool = True
-) -> DataFrame:
+def phash_neardup_pairs(assets: DataFrame) -> DataFrame:
     """Perceptual near-duplicate asset pairs: signatures within
-    ``hamming_max`` bits — re-encoded crops, metadata-stamped copies,
+    3 bits — re-encoded crops, metadata-stamped copies,
     and re-uploads that exact dedup (m06's payload-md5) can never
     match. Output: (asset_a, asset_b, hamming), asset_a < asset_b.
 
     Scale shape: candidates come from a banded equi-join on the
     (band, 15-bit band value) key — 4 bands over 60 bits, so any pair
     within 3 flipped bits shares at least one intact band (pigeonhole:
-    3 flips cannot touch 4 bands) — candidate recall is LOSSLESS for
-    ``hamming_max`` <= 3, never all-pairs. The exact ``bit_count(xor)``
+    3 flips cannot touch 4 bands) — candidate recall is LOSSLESS,
+    never all-pairs. The exact ``bit_count(xor)``
     filter then removes band-collision false positives. Everything
     after the signature pass is |assets| x 4 16-byte rows.
     """
-    if hamming_max >= PHASH_BANDS:
-        raise ValueError(
-            f"banded recall is lossless only for hamming_max < {PHASH_BANDS}"
-        )
     # r14: materialize the signature table before the self-join. Both
     # sides of the banded join hang off the SAME Python seam, and Spark
     # shares no subtrees within a plan — without this the mapInPandas
@@ -644,7 +623,7 @@ def phash_neardup_pairs(
     # here — the call-site scope frees the previous invocation's blocks
     # on re-entry (r14 leaked one generation per invocation).
     sigs = scoped_checkpoint(
-        "phash_neardup.sigs", phash_signatures(assets, decode_stub=decode_stub)
+        "phash_neardup.sigs", phash_signatures(assets)
     )
     bands = sigs.select(
         "asset_id",
@@ -682,7 +661,7 @@ def phash_neardup_pairs(
         .withColumn(
             "hamming", F.expr("bit_count(sig_a ^ sig_b)").cast("bigint")
         )
-        .filter(F.col("hamming") <= hamming_max)
+        .filter(F.col("hamming") <= 3)
         .select("asset_a", "asset_b", "hamming")
     )
 

@@ -338,8 +338,6 @@ FROM spine s LEFT JOIN per_month p ON s.month_start = p.month_start
 def violation_monitor_agg(
     events: DataFrame,
     row_checks: RowChecks,
-    time_col: str = "ts",
-    size: str = "1 hour",
 ) -> DataFrame:
     """Hourly-windowed violation totals for a declarative check list —
     the SHARED aggregation body behind the batch audit and the live
@@ -360,7 +358,7 @@ def violation_monitor_agg(
         for name, pred in row_checks
     ]
     return (
-        events.groupBy(F.window(time_col, size).alias("w"))
+        events.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(*aggs)
         .select(F.col("w.start").alias("window_start"), "*")
         .drop("w")

@@ -83,11 +83,9 @@ def swept_peaks(
 def pack_sequences(
     docs: DataFrame,
     capacity: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bucket_width: int = 4096,
 ) -> DataFrame:
-    """GPT-style sequence packing: concatenate the corpus in ``id_col``
+    """GPT-style sequence packing: concatenate the corpus in ``doc_id``
     order and cut it into fixed-``capacity`` token sequences, letting
     documents SPAN sequence boundaries — the layout a pretraining data
     loader actually materializes. Per doc:
@@ -112,8 +110,8 @@ def pack_sequences(
     from end_to_end_sales_etl_de_project_spark.operators.text import token_count
 
     base = docs.select(
-        F.col(id_col).alias("doc"),
-        token_count(text_col).cast("bigint").alias("n_tokens"),
+        F.col("doc_id").alias("doc"),
+        token_count("text").cast("bigint").alias("n_tokens"),
     ).withColumn("bkt", F.expr("doc div " + str(int(bucket_width))))
     tot = base.groupBy("bkt").agg(F.sum("n_tokens").alias("bkt_tokens"))
     w_spine = Window.orderBy("bkt").rowsBetween(
@@ -137,7 +135,7 @@ def pack_sequences(
     first_seq = F.expr(f"cum_start div {int(capacity)}")
     last_seq = F.expr(f"(cum_end - 1) div {int(capacity)}")
     return enriched.select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         F.col("n_tokens"),
         first_seq.alias("first_seq"),
         F.when(F.col("n_tokens") > 0, last_seq - first_seq + 1)
@@ -182,8 +180,6 @@ FROM c
 def packing_fragmentation(
     packed: DataFrame,
     docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-source fragmentation audit of the c10 spanning layout: how
     many documents a sequence boundary CUTS, total cut points, and the
@@ -197,9 +193,9 @@ def packing_fragmentation(
     bit-exact. ``docs_cut = n_seqs > 1``; ``cut_points = n_seqs − 1``
     summed over token-bearing docs.
     """
-    src = docs.select(F.col(id_col), F.col(source_col).alias("source"))
+    src = docs.select(F.col("doc_id"), F.col("source"))
     return (
-        packed.join(src, id_col)
+        packed.join(src, "doc_id")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),

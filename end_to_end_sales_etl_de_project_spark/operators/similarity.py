@@ -33,9 +33,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from end_to_end_sales_etl_de_project_spark.checkpoints import scoped_checkpoint
+from end_to_end_sales_etl_de_project_spark.functions.scalar import FIXED_POINT_SCALE
 
 DIM = 64
 SIG_BITS = 8
+TOP_K = 5
+N_CENTROIDS = 16
+KMEANS_ITERATIONS = 2
+PROBE_COUNTS = (1, 2, 4)
 
 
 def _dot_col(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
@@ -91,10 +96,10 @@ def _sig_sql(a: str, bits: int, one_based: bool) -> str:
     )
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding", dim: int = DIM) -> DataFrame:
+def with_norm(emb: DataFrame, dim: int = DIM) -> DataFrame:
     """Attach the L2 norm as a column (sequential fold — bit-equal to
     the SQL twin's unrolled sum)."""
-    return emb.withColumn("norm", _norm_col(vec_col, dim))
+    return emb.withColumn("norm", _norm_col("embedding", dim))
 
 
 def brute_force_topk(
@@ -164,26 +169,24 @@ def lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign-LSH
     bucket, then exact cosine rank within candidates. Equi-join on the
     signature instead of a cross join — the 100 TB shape."""
-    sig = lambda c: _sig_col(c, sig_bits)  # noqa: E731
-    q = with_norm(queries, dim=dim).select(
+    sig = lambda c: _sig_col(c, SIG_BITS)  # noqa: E731
+    q = with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
         sig("embedding").alias("sig"),
     )
-    n = with_norm(emb, dim=dim).select(
+    n = with_norm(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
         F.col("norm").alias("n_norm"),
         sig("embedding").alias("sig"),
     )
-    dot = _dot_col("q_emb", "n_emb", dim)
+    dot = _dot_col("q_emb", "n_emb")
     scored = (
         F.broadcast(q)
         .join(n, "sig")
@@ -233,9 +236,6 @@ WHERE rank <= {k}
 def embedding_neardup_pairs(
     emb: DataFrame,
     threshold: float,
-    block_col: str = "label",
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold): candidates are
     vectors sharing (block, sign-LSH bucket), then exact cosine verify.
@@ -244,7 +244,7 @@ def embedding_neardup_pairs(
     all-pairs-within-block cross join (which is quadratic in block size
     and a scale killer when one label dominates). Expected bucket
     occupancy is |block| / 2^sig_bits, so pairwise work drops by
-    ~2^sig_bits; ``sig_bits`` is the recall/cost dial (candidates that
+    ~2^sig_bits; ``SIG_BITS`` is the recall/cost dial (candidates that
     land in different sign buckets are missed — acceptable for
     near-DUP detection, where targets have cosine near 1 and thus
     nearly always share the sign pattern). Residual hot buckets are
@@ -257,23 +257,23 @@ def embedding_neardup_pairs(
     within sign buckets — a 0.8 threshold would hash-match
     empty-vs-empty and prove nothing).
     """
-    sig = _sig_col("embedding", sig_bits)
-    e = with_norm(emb, dim=dim)
+    sig = _sig_col("embedding", SIG_BITS)
+    e = with_norm(emb)
     a = e.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("emb_a"),
         F.col("norm").alias("norm_a"),
-        F.col(block_col).alias("blk"),
+        F.col("label").alias("blk"),
         sig.alias("sig"),
     )
     b = e.select(
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
-        F.col(block_col).alias("blk"),
+        F.col("label").alias("blk"),
         sig.alias("sig"),
     )
-    dot = _dot_col("emb_a", "emb_b", dim)
+    dot = _dot_col("emb_a", "emb_b")
     return (
         a.join(b, ["blk", "sig"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -338,9 +338,9 @@ WHERE ({dot}) / (({an}) * ({bn})) >= {threshold}
 QUANT_SCALE = 1 << 20
 
 
-def _valid_vecs(emb: DataFrame, vec_col: str = "embedding", dim: int = DIM) -> DataFrame:
+def _valid_vecs(emb: DataFrame) -> DataFrame:
     """Rows an ANN index can hold: non-NULL id, non-NULL full-length
-    vector with NO NULL ELEMENT in the first ``dim`` positions. The
+    vector with NO NULL ELEMENT in the first ``DIM`` positions. The
     element-nullity clause is load-bearing (ADVICE r9): a full-length
     vector with a NULL element passes the size gate but would reach
     the numpy seams as a None→int64 cast (garbage codes) while the
@@ -349,17 +349,17 @@ def _valid_vecs(emb: DataFrame, vec_col: str = "embedding", dim: int = DIM) -> D
     the identical predicate (``list_filter`` over the same slice)."""
     return emb.filter(
         F.col("vec_id").isNotNull()
-        & F.col(vec_col).isNotNull()
-        & (F.size(vec_col) >= dim)
-        & ~F.exists(F.slice(F.col(vec_col), 1, dim), lambda x: x.isNull())
+        & F.col("embedding").isNotNull()
+        & (F.size("embedding") >= DIM)
+        & ~F.exists(F.slice(F.col("embedding"), 1, DIM), lambda x: x.isNull())
     )
 
 
-def _vq_col(vec_col: Column | str, dim: int = DIM, scale: int = QUANT_SCALE) -> Column:
+def _vq_col(vec_col: Column | str, dim: int = DIM) -> Column:
     vc = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return F.transform(
         F.slice(vc, 1, dim),
-        lambda x: F.round(x.cast("double") * F.lit(float(scale))).cast("bigint"),
+        lambda x: F.round(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("bigint"),
     )
 
 
@@ -558,8 +558,6 @@ def _with_codes_np(
 def _with_lut_np(
     df: DataFrame,
     books: list[list[list[int]]],
-    vq_col: str = "q_vq",
-    out_col: str = "__lut",
 ) -> DataFrame:
     """Per-QUERY ADC lookup table: ``array<array<bigint>>`` of
     dot(q_s, codeword) for every (subspace, codeword) — exact int64
@@ -572,7 +570,7 @@ def _with_lut_np(
 
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.ArrayType(T.LongType())))]
+        + [T.StructField("__lut", T.ArrayType(T.ArrayType(T.LongType())))]
     )
 
     def lut_batches(batches):
@@ -583,14 +581,14 @@ def _with_lut_np(
         sub = Cs[0].shape[1]
         for pdf in batches:
             if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype="object")
+                pdf["__lut"] = pd.Series([], dtype="object")
                 yield pdf
                 continue
-            V = np.stack([np.asarray(v, dtype=np.int64) for v in pdf[vq_col]])
+            V = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["q_vq"]])
             luts = [
                 V[:, s * sub : (s + 1) * sub] @ C.T for s, C in enumerate(Cs)
             ]
-            pdf[out_col] = [
+            pdf["__lut"] = [
                 [lut[i].tolist() for lut in luts] for i in range(len(pdf))
             ]
             yield pdf
@@ -601,13 +599,10 @@ def _with_lut_np(
 def ivf_train(
     emb: DataFrame,
     n_centroids: int,
-    dim: int = DIM,
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
 ) -> list[list[int]]:
     """Lloyd's k-means on cosine assignment over the quantized-integer
     grid: deterministic seeding (the ``n_centroids`` lowest vec_ids'
-    quantized vectors), then ``iterations`` rounds of assign →
+    quantized vectors), then ``KMEANS_ITERATIONS`` rounds of assign →
     per-dimension round-half-away integer mean (see the section
     comment). The model (k x dim ints) is control-plane sized and
     collected to the driver each round — the same shape as any
@@ -616,8 +611,8 @@ def ivf_train(
     combinable, shuffle-order-free). Bit-deterministic ⇒ exactly
     reproduced by :func:`ivf_topk_sql`'s DuckDB twin (promoted from
     rows-only, VERDICT r8 #4)."""
-    base = _valid_vecs(emb, dim=dim).select(
-        "vec_id", _vq_col("embedding", dim, scale).alias("vq")
+    base = _valid_vecs(emb).select(
+        "vec_id", _vq_col("embedding").alias("vq")
     )
     cents = [
         [int(x) for x in r["vq"]]
@@ -628,7 +623,7 @@ def ivf_train(
     n_centroids = len(cents)
     if n_centroids == 0:
         raise ValueError("ivf_train: empty corpus — no centroids to seed")
-    for _ in range(iterations):
+    for _ in range(KMEANS_ITERATIONS):
         assigned = _with_cells_np(base.select("vq"), cents, vq_col="vq")
         cells = (
             assigned.select("cid", F.posexplode("vq").alias("pos", "val"))
@@ -641,7 +636,7 @@ def ivf_train(
             by_cid.setdefault(r["cid"], {})[r["pos"]] = _int_mean(r["s"], r["n"])
         # empty cells keep their previous centroid (standard practice)
         cents = [
-            [by_cid[i][p] for p in range(dim)] if i in by_cid else cents[i]
+            [by_cid[i][p] for p in range(DIM)] if i in by_cid else cents[i]
             for i in range(n_centroids)
         ]
     return cents
@@ -651,49 +646,46 @@ def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    dim: int = DIM,
-    n_centroids: int = 16,
-    n_probe: int = 4,
     centroids: list[list[int]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their
-    nearest-centroid cell; each query probes its ``n_probe`` nearest
+    nearest-centroid cell; each query probes its 4 nearest
     cells; exact cosine ranks the candidates.
 
     Same equi-join shape as the sign-LSH path (a02/a03) — corpus is
     never cross-joined — but cells adapt to the DATA distribution
     instead of axis signs, which is what lifts recall on corpora where
     fixed hyperplanes split neighborhoods. Scan fraction ≈
-    n_probe / n_centroids of the corpus per query. Cell assignment and
+    4 / ``N_CENTROIDS`` of the corpus per query. Cell assignment and
     probing run on the quantized grid (bit-deterministic, see the
     section comment); candidate ranking is the exact float cosine —
     the whole query is hash-exact against :func:`ivf_topk_sql`."""
     if centroids is None:
-        centroids = ivf_train(emb, n_centroids, dim)
+        centroids = ivf_train(emb, N_CENTROIDS)
     # quantize JVM-side (the only rounding), then run the k x dim sim
     # fold as one Arrow-batched int64 matmul per batch — the
     # interpreted HOF fold was the measured ANN hot path (PERF.md r9)
     n = _with_cells_np(
-        with_norm(_valid_vecs(emb, dim=dim), dim=dim).select(
+        with_norm(_valid_vecs(emb)).select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("n_emb"),
             F.col("norm").alias("n_norm"),
-            _vq_col("embedding", dim).alias("__vq"),
+            _vq_col("embedding").alias("__vq"),
         ),
         centroids,
     ).select("neighbor_id", "n_emb", "n_norm", "cid")
     q = _with_cells_np(
-        with_norm(_valid_vecs(queries, dim=dim), dim=dim).select(
+        with_norm(_valid_vecs(queries)).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("norm").alias("q_norm"),
-            _vq_col("embedding", dim).alias("__vq"),
+            _vq_col("embedding").alias("__vq"),
         ),
         centroids,
-        n_probe=n_probe,
+        n_probe=4,
         out_col="probe_cids",
     ).select("query_id", "q_emb", "q_norm", F.explode("probe_cids").alias("cid"))
-    dot = _dot_col("q_emb", "n_emb", dim)
+    dot = _dot_col("q_emb", "n_emb")
     scored = (
         F.broadcast(q)
         .join(n, "cid")
@@ -897,8 +889,6 @@ WHERE rank <= {k}
 
 def ivf_cell_balance(
     emb: DataFrame,
-    dim: int = DIM,
-    n_centroids: int = 16,
     centroids: list[list[int]] | None = None,
 ) -> DataFrame:
     """IVF cell-occupancy audit: one row per centroid cell with its
@@ -915,10 +905,10 @@ def ivf_cell_balance(
     counts, one IEEE division per output row ⇒ hash-exact against
     :func:`ivf_cell_balance_sql` (same unrolled Lloyd CTEs as a04)."""
     if centroids is None:
-        centroids = ivf_train(emb, n_centroids, dim)
+        centroids = ivf_train(emb, N_CENTROIDS)
     cells = _with_cells_np(
-        _valid_vecs(emb, dim=dim).select(
-            "vec_id", _vq_col("embedding", dim).alias("__vq")
+        _valid_vecs(emb).select(
+            "vec_id", _vq_col("embedding").alias("__vq")
         ),
         centroids,
     ).select("vec_id", "cid")
@@ -978,8 +968,6 @@ def ivf_probe_cost(
     emb: DataFrame,
     queries: DataFrame,
     centroids: list[list[int]],
-    dim: int = DIM,
-    probe_counts: tuple[int, ...] = (1, 2, 4),
 ) -> DataFrame:
     """Predicted IVF probe COST per probe width — the companion table
     to :func:`ivf_cell_balance` and :func:`ivf_recall_curve` that
@@ -996,18 +984,18 @@ def ivf_probe_cost(
     shuffled); each width is a filter over the max-width probe table —
     one assignment pass serves every leg. Exact integer counts, one
     IEEE division per row ⇒ hash-exact vs the unrolled DuckDB twin."""
-    base = _valid_vecs(emb, dim=dim).select(
-        "vec_id", _vq_col("embedding", dim).alias("__vq")
+    base = _valid_vecs(emb).select(
+        "vec_id", _vq_col("embedding").alias("__vq")
     )
     cells = _with_cells_np(base, centroids).select("vec_id", "cid")
     counts = cells.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_cell")
     )
     tot = cells.agg(F.count(F.lit(1)).cast("bigint").alias("n_corpus"))
-    qv = _valid_vecs(queries, dim=dim).select(
-        F.col("vec_id").alias("query_id"), _vq_col("embedding", dim).alias("__vq")
+    qv = _valid_vecs(queries).select(
+        F.col("vec_id").alias("query_id"), _vq_col("embedding").alias("__vq")
     )
-    max_p = max(probe_counts)
+    max_p = max(PROBE_COUNTS)
     pr = _with_cells_np(qv, centroids, n_probe=max_p, out_col="probe_cids").select(
         "query_id", F.posexplode("probe_cids").alias("pos", "cid")
     )
@@ -1015,7 +1003,7 @@ def ivf_probe_cost(
         "query_id", "pos", F.coalesce("n_cell", F.lit(0)).alias("n_cell")
     )
     legs = []
-    for p in probe_counts:
+    for p in PROBE_COUNTS:
         # groupBy the (constant) corpus total rather than a global agg:
         # with an EMPTY query set each leg must emit ZERO rows exactly
         # like the twin's GROUP BY over zero input — a global agg would
@@ -1101,31 +1089,29 @@ def lsh_topk_multiprobe(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
 ) -> DataFrame:
     """Multiprobe sign-LSH top-k: each query probes its own bucket plus
     every Hamming-distance-1 bucket (sig XOR 2^b), widening recall
     ~(1+bits)x at (1+bits)x candidate cost — still an equi-join, never a
     cross join. Deterministic, hence oracle-checkable like a02."""
     probes = F.array(
-        F.lit(0), *[F.lit(1 << b) for b in range(sig_bits)]
+        F.lit(0), *[F.lit(1 << b) for b in range(SIG_BITS)]
     )
-    q = with_norm(queries, dim=dim).select(
+    q = with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
         F.explode(
-            F.transform(probes, lambda m: _sig_col("embedding", sig_bits).bitwiseXOR(m))
+            F.transform(probes, lambda m: _sig_col("embedding", SIG_BITS).bitwiseXOR(m))
         ).alias("sig"),
     )
-    n = with_norm(emb, dim=dim).select(
+    n = with_norm(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
         F.col("norm").alias("n_norm"),
-        _sig_col("embedding", sig_bits).alias("sig"),
+        _sig_col("embedding", SIG_BITS).alias("sig"),
     )
-    dot = _dot_col("q_emb", "n_emb", dim)
+    dot = _dot_col("q_emb", "n_emb")
     scored = (
         F.broadcast(q)
         .join(n, "sig")
@@ -1186,8 +1172,6 @@ def pq_train(
     emb: DataFrame,
     n_subspaces: int = 4,
     n_codes: int = 16,
-    dim: int = DIM,
-    iterations: int = 2,
 ) -> list[list[list[float]]]:
     """Per-subspace codebooks (n_subspaces x n_codes x dim/n_subspaces):
     the embedding is split into contiguous coordinate blocks and each
@@ -1203,9 +1187,9 @@ def pq_train(
     IVF section comment): assignment sims and mean updates are exact
     integer arithmetic, so training is bit-deterministic and exactly
     reproduced by :func:`pq_topk_sql`'s DuckDB twin (VERDICT r8 #4)."""
-    sub = dim // n_subspaces
-    base = _valid_vecs(emb, dim=dim).select(
-        "vec_id", _vq_col("embedding", dim).alias("vq")
+    sub = DIM // n_subspaces
+    base = _valid_vecs(emb).select(
+        "vec_id", _vq_col("embedding").alias("vq")
     )
     seed_rows = base.orderBy("vec_id").limit(n_codes).collect()
     if not seed_rows:
@@ -1225,7 +1209,7 @@ def pq_train(
     # rescan the corpus n_subspaces times per round — at 100 TB that
     # multiplies the dominant cost (the scan) by the subspace count
     # for zero extra information.
-    for _ in range(iterations):
+    for _ in range(KMEANS_ITERATIONS):
         assigned = _with_codes_np(base.select("vq"), books, vq_col="vq")
         parts = []
         for s in range(n_subspaces):
@@ -1286,15 +1270,13 @@ def pq_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    dim: int = DIM,
     books: list[list[list[int]]] | None = None,
-    rerank_factor: int = 4,
 ) -> DataFrame:
     """PQ approximate top-k — the memory-bound ANN shape: the corpus is
     scanned as CODES (n_subspaces small ints per vector, a 64x
     compression of a 64-dim float vector), each (query, code) score is
     a sum of n_subspaces codebook dot-products instead of a dim-term
-    fold, the top ``k * rerank_factor`` candidates per query are
+    fold, the top ``k * 4`` candidates per query are
     re-scored EXACTLY against their real vectors (hash join back to
     the corpus — the candidate fetch every PQ serving system does),
     and the exact top-k is returned.
@@ -1307,27 +1289,27 @@ def pq_topk(
     rerank is the exact float cosine — bit-deterministic end to end
     and hash-exact against :func:`pq_topk_sql` (VERDICT r8 #4)."""
     n_subspaces = 4 if books is None else len(books)
-    sub = dim // n_subspaces
+    sub = DIM // n_subspaces
     if books is None:
-        books = pq_train(emb, n_subspaces, dim=dim)
+        books = pq_train(emb, n_subspaces)
 
     # quantize JVM-side, then per-subspace code assignment as one
     # Arrow-batched matmul per subspace (_with_codes_np — the measured
     # ANN hot path, PERF.md r9)
     codes_tbl = _with_codes_np(
-        _valid_vecs(emb, dim=dim).select(
+        _valid_vecs(emb).select(
             F.col("vec_id").alias("neighbor_id"),
-            _vq_col("embedding", dim).alias("__vq"),
+            _vq_col("embedding").alias("__vq"),
         ),
         books,
         with_recon_sq=True,
     ).select("neighbor_id", "codes", "recon_sq")
 
-    q = with_norm(_valid_vecs(queries, dim=dim), dim=dim).select(
+    q = with_norm(_valid_vecs(queries)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
-        _vq_col("embedding", dim).alias("q_vq"),
+        _vq_col("embedding").alias("q_vq"),
     ).withColumn("q_aq", _aq_col(F.col("q_vq")))
 
     # approx dot via the classic ADC lookup table: dot(q_s, codeword)
@@ -1363,16 +1345,16 @@ def pq_topk(
         F.col("approx_cosine").desc(), F.col("neighbor_id")
     )
     shortlist = cand.withColumn("arank", F.row_number().over(w_approx)).filter(
-        F.col("arank") <= k * rerank_factor
+        F.col("arank") <= k * 4
     )
 
     # exact rerank: fetch the real vectors for the shortlist only
-    corpus = with_norm(emb, dim=dim).select(
+    corpus = with_norm(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
         F.col("norm").alias("n_norm"),
     )
-    dot = _dot_col("q_emb", "n_emb", dim)
+    dot = _dot_col("q_emb", "n_emb")
     rescored = shortlist.join(corpus, "neighbor_id").select(
         "query_id",
         "neighbor_id",
@@ -1484,9 +1466,6 @@ WHERE rank <= {k}
 def pq_distortion_by_label(
     emb: DataFrame,
     books: list[list[list[int]]],
-    label_col: str = "label",
-    dim: int = DIM,
-    scale: int = QUANT_SCALE,
 ) -> DataFrame:
     """Per-label PQ reconstruction distortion — the codebook-quality
     audit run before trusting 64x-compressed codes for a corpus slice:
@@ -1505,15 +1484,15 @@ def pq_distortion_by_label(
     vector. Malformed vectors are excluded (the a18/a07 rule). One
     scan of codes vs codebook literals; |labels| state rows."""
     staged = _with_codes_np(
-        _valid_vecs(emb, dim=dim).select(
-            F.col(label_col).alias("label"),
-            _vq_col("embedding", dim).alias("__vq"),
+        _valid_vecs(emb).select(
+            F.col("label"),
+            _vq_col("embedding").alias("__vq"),
         ),
         books,
         out_col="__codes",
         with_err=True,
     )
-    sq = float(scale) * float(scale)
+    sq = float(QUANT_SCALE) * float(QUANT_SCALE)
     per_vec = staged.select("label", F.col("err_sq").alias("e"))
     return per_vec.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
@@ -1590,9 +1569,6 @@ def ivf_recall_curve(
     queries: DataFrame,
     exact: DataFrame,
     centroids: list[list[int]],
-    k: int = 5,
-    dim: int = DIM,
-    probe_counts: tuple[int, ...] = (1, 2, 4),
 ) -> DataFrame:
     """Recall@k of the IVF path at several probe widths against the
     exact baseline — the n_probe dial measured from a table (the a15
@@ -1615,11 +1591,11 @@ def ivf_recall_curve(
     cells = scoped_checkpoint(
         "ivf_recall_curve.cells",
         _with_cells_np(
-            with_norm(_valid_vecs(emb, dim=dim), dim=dim).select(
+            with_norm(_valid_vecs(emb)).select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("embedding").alias("n_emb"),
                 F.col("norm").alias("n_norm"),
-                _vq_col("embedding", dim).alias("__vq"),
+                _vq_col("embedding").alias("__vq"),
             ),
             centroids,
         ).select("neighbor_id", "n_emb", "n_norm", "cid"),
@@ -1627,20 +1603,20 @@ def ivf_recall_curve(
     q_ranked = scoped_checkpoint(
         "ivf_recall_curve.probes",
         _with_cells_np(
-            with_norm(_valid_vecs(queries, dim=dim), dim=dim).select(
+            with_norm(_valid_vecs(queries)).select(
                 F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("q_emb"),
                 F.col("norm").alias("q_norm"),
-                _vq_col("embedding", dim).alias("__vq"),
+                _vq_col("embedding").alias("__vq"),
             ),
             centroids,
-            n_probe=max(probe_counts),
+            n_probe=max(PROBE_COUNTS),
             out_col="probe_cids",
         ).select("query_id", "q_emb", "q_norm", "probe_cids"),
     )
-    dot = _dot_col("q_emb", "n_emb", dim)
+    dot = _dot_col("q_emb", "n_emb")
     legs = []
-    for p in probe_counts:
+    for p in PROBE_COUNTS:
         q = q_ranked.select(
             "query_id",
             "q_emb",
@@ -1662,7 +1638,7 @@ def ivf_recall_curve(
         )
         approx = (
             scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "neighbor_id")
         )
         legs.append(
@@ -1857,9 +1833,6 @@ def ivf_recall_audit(
     exact: DataFrame,
     lsh: DataFrame,
     centroids: list[list[float]] | None = None,
-    k: int = 5,
-    dim: int = DIM,
-    floor: float = 0.3,
 ) -> DataFrame:
     """Single-row IVF quality audit: (n_queries, n_exact, lsh_recall,
     ivf_at_least_lsh, ivf_above_floor). The first three are deterministic
@@ -1871,7 +1844,7 @@ def ivf_recall_audit(
     ``exact`` / ``lsh`` are the materialized baselines — see
     ann_recall_report's docstring."""
     exact = exact.select("query_id", "neighbor_id")
-    ivf = ivf_topk(emb, queries, k=k, dim=dim, centroids=centroids)
+    ivf = ivf_topk(emb, queries, k=TOP_K, centroids=centroids)
     tot = exact.agg(
         F.countDistinct("query_id").alias("n_queries"),
         F.count(F.lit(1)).alias("n_exact"),
@@ -1892,7 +1865,7 @@ def ivf_recall_audit(
         # signature baseline", and the strict win on realistic corpora
         # is still pinned by tests/test_ivf_recall.py
         (F.col("ivf_hits") >= F.col("lsh_hits")).alias("ivf_at_least_lsh"),
-        (recall_ivf >= F.lit(floor)).alias("ivf_above_floor"),
+        (recall_ivf >= F.lit(0.3)).alias("ivf_above_floor"),
     )
 
 
@@ -1927,8 +1900,6 @@ def pq_recall_audit(
     exact: DataFrame,
     lsh: DataFrame,
     books: list[list[list[float]]] | None = None,
-    k: int = 5,
-    dim: int = DIM,
 ) -> DataFrame:
     """Single-row PQ quality audit: (n_queries, n_exact, lsh_recall,
     pq_at_least_lsh, rerank_scores_exact). rerank_scores_exact recomputes
@@ -1946,23 +1917,23 @@ def pq_recall_audit(
     # ran twice per run. Materialize the |queries|·k-row result once per
     # invocation (guide §4/§5; the call-site scope frees it on re-entry).
     pq = scoped_checkpoint(
-        "pq_recall_audit.pq", pq_topk(emb, queries, k=k, dim=dim, books=books)
+        "pq_recall_audit.pq", pq_topk(emb, queries, k=TOP_K, books=books)
     )
     tot = exact.agg(
         F.countDistinct("query_id").alias("n_queries"),
         F.count(F.lit(1)).alias("n_exact"),
     )
-    qv = with_norm(queries, dim=dim).select(
+    qv = with_norm(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
     )
-    nv = with_norm(emb, dim=dim).select(
+    nv = with_norm(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
         F.col("norm").alias("n_norm"),
     )
-    recomputed = _dot_col("q_emb", "n_emb", dim) / (
+    recomputed = _dot_col("q_emb", "n_emb") / (
         F.col("q_norm") * F.col("n_norm")
     )
     scores_ok = (
@@ -2088,9 +2059,7 @@ GROUP BY ql.label
 # ---------------------------------------------------------------------------
 
 
-def quantization_audit(
-    emb: DataFrame, vec_col: str = "embedding", dim: int = DIM
-) -> DataFrame:
+def quantization_audit(emb: DataFrame) -> DataFrame:
     """Per-vector audit of symmetric int8 quantization — the 4x (fp32)
     / 8x (fp64) storage compression every large embedding store applies
     before ANN serving: scale = 127/max|x|, q_i = floor(x_i·scale+0.5),
@@ -2112,15 +2081,15 @@ def quantization_audit(
     dequantize tree once for max_err and once per MSE term — measured
     14x (2.4 s → 0.17 s at sf0.1) for identical arithmetic.
 
-    Malformed vectors (NULL or shorter than ``dim``) emit an all-NULL
+    Malformed vectors (NULL or shorter than ``DIM``) emit an all-NULL
     stats row in BOTH engines — the r9 embeddings NULL sweep caught the
     divergence (Spark's slice+fold half-audited a truncated vector and
     called an empty one a zero vector; DuckDB's unrolled ``arr[i]``
     past the end NULLed the MSE chain but not the NULL-skipping
     GREATEST) — the a18 rule applied here.
     """
-    well_formed = F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim)
-    x = F.slice(F.col(vec_col), 1, dim)
+    well_formed = F.col("embedding").isNotNull() & (F.size("embedding") >= DIM)
+    x = F.slice(F.col("embedding"), 1, DIM)
     absx = F.transform(x, lambda v: F.abs(v.cast("double")))
     max_abs = F.when(
         well_formed, F.aggregate(absx, F.lit(0.0), lambda a, v: F.greatest(a, v))
@@ -2150,7 +2119,7 @@ def quantization_audit(
         F.when(
             guard,
             F.aggregate(F.col("__err"), F.lit(0.0), lambda a, v: a + v * v)
-            / F.lit(float(dim)),
+            / F.lit(float(DIM)),
         ).alias("mse"),
     )
 
@@ -2191,8 +2160,6 @@ FROM m
 def source_drift_report(
     emb: DataFrame,
     docs: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = DIM,
 ) -> DataFrame:
     """Dataset-shift audit: per source, the cosine between that
     source's mean embedding and the corpus mean — the table that flags
@@ -2214,7 +2181,7 @@ def source_drift_report(
     # Python-side tree construction was ~20k py4j round trips ≈ 6 s of
     # DRIVER time per fresh plan (PERF.md r9) — the resolved expression
     # trees, and therefore the bits, are identical either way.
-    x = F.slice(F.col(vec_col), 1, dim)
+    x = F.slice(F.col("embedding"), 1, DIM)
     absx = F.transform(x, lambda v: F.abs(v.cast("double")))
     row_max = F.aggregate(absx, F.lit(0.0), lambda a, v: F.greatest(a, v))
     gmax = emb.agg(F.max(row_max).alias("gmax"))
@@ -2222,25 +2189,25 @@ def source_drift_report(
                       emb.vec_id == F.col("doc_id")).crossJoin(F.broadcast(gmax))
     q = [
         F.expr(
-            f"CAST(FLOOR(CAST({vec_col}[{i}] AS DOUBLE) * (CAST(127.0 AS DOUBLE)"
+            f"CAST(FLOOR(CAST(embedding[{i}] AS DOUBLE) * (CAST(127.0 AS DOUBLE)"
             f" / gmax) + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q{i}"
         )
-        for i in range(dim)
+        for i in range(DIM)
     ]
     quantized = joined.select("source", *q)
     per_src = quantized.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        *[F.expr(f"sum(q{i}) AS s{i}") for i in range(dim)],
+        *[F.expr(f"sum(q{i}) AS s{i}") for i in range(DIM)],
     )
     total = quantized.agg(
-        *[F.expr(f"sum(q{i}) AS t{i}") for i in range(dim)]
+        *[F.expr(f"sum(q{i}) AS t{i}") for i in range(DIM)]
     )
     both = per_src.crossJoin(F.broadcast(total))
 
     def _pairsum(a: str, b: str) -> str:
         return " + ".join(
             f"CAST({a}{i} AS DOUBLE) * CAST({b}{i} AS DOUBLE)"
-            for i in range(dim)
+            for i in range(DIM)
         )
 
     cos = F.expr(
@@ -2310,8 +2277,6 @@ def semantic_decontaminate(
     emb: DataFrame,
     test_pred: Column,
     threshold: float,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
 ) -> DataFrame:
     """Train vectors semantically too close to ANY test vector (cosine ≥
     threshold): the embedding-space analogue of d07's shingle
@@ -2330,7 +2295,7 @@ def semantic_decontaminate(
     ``embedding_neardup_pairs``: true matches have cosine near 1 and
     almost surely share the sign pattern.
     """
-    e = with_norm(emb, dim=dim).withColumn("sig", _sig_col("embedding", sig_bits))
+    e = with_norm(emb).withColumn("sig", _sig_col("embedding", SIG_BITS))
     test = e.filter(test_pred).select(
         F.col("vec_id").alias("matched_test_id"),
         F.col("embedding").alias("emb_t"),
@@ -2343,7 +2308,7 @@ def semantic_decontaminate(
         F.col("norm").alias("norm_a"),
         "sig",
     )
-    dot = _dot_col("emb_a", "emb_t", dim)
+    dot = _dot_col("emb_a", "emb_t")
     cand = (
         train.join(F.broadcast(test), "sig")
         .select(
@@ -2397,11 +2362,11 @@ SELECT train_id, matched_test_id, cosine FROM (
 # cutoffs in one pass), round 7
 # ---------------------------------------------------------------------------
 
+RECALL_KS = (1, 3, 5)
 
-def recall_curve(
-    exact: DataFrame, approx: DataFrame, ks: tuple[int, ...] = (1, 3, 5)
-) -> DataFrame:
-    """Recall@k for each cutoff in ``ks``, computed from two ranked
+
+def recall_curve(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Recall@k for each cutoff in ``RECALL_KS``, computed from two ranked
     top-k tables (query_id, neighbor_id, rank, ...) in ONE pass: the
     pair tables join once on (query_id, neighbor_id), every cutoff's
     hit count comes out of a single aggregate over the joined ranks,
@@ -2422,11 +2387,11 @@ def recall_curve(
     hits = pairs.agg(
         *[
             F.sum(((F.col("er") <= k) & (F.col("ar") <= k)).cast("long")).alias(f"h{k}")
-            for k in ks
+            for k in RECALL_KS
         ]
     )
     totals = exact.agg(
-        *[F.sum((F.col("rank") <= k).cast("long")).alias(f"n{k}") for k in ks]
+        *[F.sum((F.col("rank") <= k).cast("long")).alias(f"n{k}") for k in RECALL_KS]
     )
     row = totals.crossJoin(F.broadcast(hits))
     structs = [
@@ -2435,7 +2400,7 @@ def recall_curve(
             F.coalesce(F.col(f"n{k}"), F.lit(0)).cast("bigint").alias("n_exact"),
             F.coalesce(F.col(f"h{k}"), F.lit(0)).cast("bigint").alias("hits"),
         )
-        for k in ks
+        for k in RECALL_KS
     ]
     return row.select(F.explode(F.array(*structs)).alias("r")).select(
         F.col("r.k").alias("k"),
@@ -2476,20 +2441,20 @@ FROM (
 # kNN PageRank (graph-centrality data selection over the corpus kNN graph)
 # ---------------------------------------------------------------------------
 
+PAGERANK_DAMPING = 0.85
+
 
 def knn_pagerank(
     emb: DataFrame,
     graph: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 2,
 ) -> DataFrame:
     """PageRank over the corpus kNN graph, a FIXED number of power
     iterations — the graph-centrality signal for representativeness-
     based data selection (a highly-linked vector sits in a dense
     semantic region; leaves are outliers): (vec_id, outdeg, pagerank).
 
-    Fixed-iteration design: ``iterations`` power steps from the uniform
-    vector, damping ``d``:  ``p'(v) = (1-d)/n + d * sum_{u->v}
+    Fixed-iteration design: 2 power steps from the uniform vector,
+    damping ``d = PAGERANK_DAMPING``:  ``p'(v) = (1-d)/n + d * sum_{u->v}
     p(u)/outdeg(u)``. Dangling mass (vectors whose LSH buckets yielded
     no neighbors) is deliberately DROPPED, not redistributed — the
     output is a ranking signal, not a probability distribution, and
@@ -2525,7 +2490,7 @@ def knn_pagerank(
     # both engines: DuckDB would otherwise evaluate 1.0 - 0.85 in exact
     # DECIMAL (0.15) while Spark folds doubles (0x3FC3333333333332) —
     # a one-ULP divergence the a16 oracle caught at first run
-    base = F.lit(1.0 - damping) / F.col("n")
+    base = F.lit(1.0 - PAGERANK_DAMPING) / F.col("n")
 
     def _fold(contribs: DataFrame) -> DataFrame:
         # pinned-order float fold per dst (bit-identical cross-engine)
@@ -2539,7 +2504,7 @@ def knn_pagerank(
 
     # iteration state: (node, p); start uniform
     ranks = nodes.crossJoin(n_row).select("node", (F.lit(1.0) / F.col("n")).alias("p"))
-    for _ in range(iterations):
+    for _ in range(2):
         contribs = (
             edges.join(deg, "src")
             .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -2550,7 +2515,10 @@ def knn_pagerank(
             .crossJoin(n_row)
             .select(
                 "node",
-                (base + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("p"),
+                (
+                    base
+                    + F.lit(PAGERANK_DAMPING) * F.coalesce(F.col("s"), F.lit(0.0))
+                ).alias("p"),
             )
         )
     return (
@@ -2772,8 +2740,6 @@ def matryoshka_audit(
     emb: DataFrame,
     queries: DataFrame,
     exact: DataFrame,
-    k: int = 5,
-    dims: tuple[int, ...] = (8, 16, 32),
 ) -> DataFrame:
     """Recall@k of PREFIX-TRUNCATED embeddings against the full-dim
     exact top-k — the operational question behind Matryoshka-style
@@ -2796,8 +2762,8 @@ def matryoshka_audit(
 
     exact_pairs = exact.select("query_id", "neighbor_id")
     reports = []
-    for d in dims:
-        trunc = brute_force_topk(emb, queries, k=k, dim=d).select(
+    for d in (8, 16, 32):
+        trunc = brute_force_topk(emb, queries, k=TOP_K, dim=d).select(
             "query_id", "neighbor_id", F.lit(1).alias("hit")
         )
         reports.append(
@@ -2859,10 +2825,6 @@ LEFT JOIN (SELECT query_id, neighbor_id, 1 AS hit FROM trunc_{d}) t
 
 def norm_audit(
     emb: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = DIM,
-    scale: int = 100_000,
 ) -> DataFrame:
     """Per-label L2-norm distribution audit — the vector-quality gate
     run before building any ANN index: zero vectors make cosine
@@ -2885,11 +2847,11 @@ def norm_audit(
     slice+fold sums the elements that exist). One scan, |labels| state
     rows — the plan survives any corpus size.
     """
-    well_formed = F.col(vec_col).isNotNull() & (F.size(vec_col) >= dim)
-    norm = F.when(well_formed, _norm_col(vec_col, dim))
-    q = F.round(norm * scale).cast("bigint")
+    well_formed = F.col("embedding").isNotNull() & (F.size("embedding") >= DIM)
+    norm = F.when(well_formed, _norm_col("embedding"))
+    q = F.round(norm * FIXED_POINT_SCALE).cast("bigint")
     return (
-        emb.select(F.col(label_col).alias("label"), norm.alias("nrm"), q.alias("q"))
+        emb.select(F.col("label"), norm.alias("nrm"), q.alias("q"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
@@ -2899,10 +2861,14 @@ def norm_audit(
             F.sum(F.when(F.col("nrm") == 0.0, 1).otherwise(0))
             .cast("bigint")
             .alias("zero_vectors"),
-            (F.min("q").cast("double") / F.lit(float(scale))).alias("min_norm"),
-            (F.max("q").cast("double") / F.lit(float(scale))).alias("max_norm"),
+            (F.min("q").cast("double") / F.lit(float(FIXED_POINT_SCALE))).alias(
+                "min_norm"
+            ),
+            (F.max("q").cast("double") / F.lit(float(FIXED_POINT_SCALE))).alias(
+                "max_norm"
+            ),
             (
-                (F.sum("q").cast("double") / F.lit(float(scale)))
+                (F.sum("q").cast("double") / F.lit(float(FIXED_POINT_SCALE)))
                 / F.count("q").cast("double")
             ).alias("mean_norm"),
         )
@@ -2953,10 +2919,6 @@ ISOTROPY_SHIFT = 137
 
 def isotropy_histogram(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = DIM,
-    shift: int = ISOTROPY_SHIFT,
 ) -> DataFrame:
     """Histogram of pairwise cosines over a DETERMINISTIC id-shift
     pairing (vector i vs vector i+shift) — the embedding-collapse
@@ -2967,26 +2929,26 @@ def isotropy_histogram(
 
     The fixed-shift pairing replaces random sampling so the audit is
     exactly reproducible AND an equi-join: ids join on ``b = a +
-    shift`` — never a cross join, one shuffle on the id key, any
+    ISOTROPY_SHIFT`` — never a cross join, one shuffle on the id key, any
     corpus size. Each cosine is the fixed-order fold (bit-identical
     cross-engine); the bucket floor is exact on identical doubles.
     Bucket 20 (cos == 1.0 exactly) folds into bucket 19 so the grid
     stays 20 buckets.
     """
-    a = with_norm(emb, vec_col, dim).select(
-        F.col(id_col).alias("ida"),
-        F.col(vec_col).alias("va"),
+    a = with_norm(emb).select(
+        F.col("vec_id").alias("ida"),
+        F.col("embedding").alias("va"),
         F.col("norm").alias("na"),
     )
-    b = with_norm(emb, vec_col, dim).select(
-        (F.col(id_col) - shift).alias("join_id"),
-        F.col(vec_col).alias("vb"),
+    b = with_norm(emb).select(
+        (F.col("vec_id") - ISOTROPY_SHIFT).alias("join_id"),
+        F.col("embedding").alias("vb"),
         F.col("norm").alias("nb"),
     )
     paired = a.join(b, a["ida"] == b["join_id"]).filter(
         (F.col("na") > 0) & (F.col("nb") > 0)
     )
-    cos = _dot_col("va", "vb", dim) / (F.col("na") * F.col("nb"))
+    cos = _dot_col("va", "vb") / (F.col("na") * F.col("nb"))
     bucket = F.least(F.floor((cos + 1.0) * 10).cast("bigint"), F.lit(19))
     return (
         paired.select(bucket.alias("bucket"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from end_to_end_sales_etl_de_project_spark.functions.scalar import money
@@ -34,17 +34,15 @@ def salted_sum(
     measure: str,
     out_col: str,
     salt_buckets: int = 16,
-    salt_source: Column | None = None,
 ) -> DataFrame:
     """Two-phase skew-safe exact sum: groupBy(key, salt) → groupBy(key).
 
-    ``salt_source`` defaults to seeded ``rand()`` (uniform across
-    duplicate rows, reproduced exactly on task retry). Result is
-    bit-identical to the single-phase decimal sum for ANY salt.
+    The salt is seeded ``rand()`` (uniform across duplicate rows,
+    reproduced exactly on task retry). Result is bit-identical to the
+    single-phase decimal sum for ANY salt.
     """
-    if salt_source is None:
-        salt_source = F.floor(F.rand(seed=42) * salt_buckets).cast("long")
-    salted = df.withColumn("__salt", F.pmod(salt_source, F.lit(salt_buckets)))
+    salt = F.floor(F.rand(seed=42) * salt_buckets).cast("long")
+    salted = df.withColumn("__salt", F.pmod(salt, F.lit(salt_buckets)))
     partial = salted.groupBy(*group_keys, "__salt").agg(
         F.sum(money(measure)).alias("__partial")
     )
@@ -60,7 +58,6 @@ def salted_join(
     big_key: str,
     small_key: str,
     n_salts: int = 8,
-    salt_source: Column | None = None,
 ) -> DataFrame:
     """Skew-safe equi-join: the SMALL side is replicated ``n_salts``
     times (one copy per salt value) and the BIG side scatters each row
@@ -74,7 +71,7 @@ def salted_join(
     Join OUTPUT is provably independent of the salt assignment (every
     big row still meets every matching small row exactly once), so the
     oracle for a salted join is the PLAIN join — correctness of the
-    rewrite is hash-checked, not argued. ``salt_source`` defaults to a
+    rewrite is hash-checked, not argued. The salt is a
     deterministic hash of ALL big-side columns: it must vary per ROW
     (hashing only the join key would re-collapse a hot key's rows into
     one salt, defeating the spread; identical full rows landing on the
@@ -92,11 +89,10 @@ def salted_join(
                 f"salted_join: {side} side already has a '__salt' column — "
                 "rename it first (the operator would silently clobber it)"
             )
-    if salt_source is None:
-        salt_source = F.pmod(
-            F.xxhash64(*[F.col(c) for c in big.columns], F.lit(41)), F.lit(n_salts)
-        )
-    salted_big = big.withColumn("__salt", salt_source.cast("int"))
+    salt = F.pmod(
+        F.xxhash64(*[F.col(c) for c in big.columns], F.lit(41)), F.lit(n_salts)
+    )
+    salted_big = big.withColumn("__salt", salt.cast("int"))
     replicated_small = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )

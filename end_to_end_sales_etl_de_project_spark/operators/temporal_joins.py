@@ -32,11 +32,10 @@ def asof_join(
     on: str,
     by: str,
     right_cols: list[str],
-    suffix: str = "_right",
 ) -> DataFrame:
     """Backward as-of join: latest right row (by ``on``) per ``by`` key
     with ``right.on <= left.on``. Left rows keep all their columns;
-    matched ``right_cols`` arrive suffixed; unmatched → null (left
+    matched ``right_cols`` arrive suffixed ``_right``; unmatched → null (left
     semantics). Ties on ``on``: an equal-timestamp right row IS matched
     (DuckDB ASOF semantics); among DUPLICATE (by, on) right rows the
     max payload (struct ordering) wins — deterministic on any cluster
@@ -56,7 +55,9 @@ def asof_join(
         right.select(
             F.col(by),
             F.col(on).alias("__ts"),
-            F.struct(*[F.col(c).alias(c + suffix) for c in right_cols]).alias("__right"),
+            F.struct(*[F.col(c).alias(c + "_right") for c in right_cols]).alias(
+                "__right"
+            ),
         )
         # a null-ts right row can never satisfy right.ts <= left.ts
         # (three-valued logic / DuckDB ASOF) — drop it before the union
@@ -79,7 +80,7 @@ def asof_join(
         unioned.select(
             *lcols,
             "__is_left",
-            *[matched[c + suffix].alias(c + suffix) for c in right_cols],
+            *[matched[c + "_right"].alias(c + "_right") for c in right_cols],
         )
         .filter(F.col("__is_left") == 1)
         .drop("__is_left")

@@ -19,6 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from end_to_end_sales_etl_de_project_spark.functions.hashing import h60, h60_sql
+from end_to_end_sales_etl_de_project_spark.functions.scalar import FIXED_POINT_SCALE
 
 # Word-token regex (BPE-ish pre-tokenization: letter runs, digit runs,
 # or single punctuation marks — the shape GPT-style pre-tokenizers use).
@@ -246,10 +247,10 @@ def doc_fingerprint_from_tokens(toks: Column, k: int = 4) -> Column:
     return F.array_min(F.transform(shingles_from_tokens(toks, k), lambda s: h60(s)))
 
 
-def doc_fingerprint(col: Column | str, k: int = 4) -> Column:
+def doc_fingerprint(col: Column | str) -> Column:
     """Single-permutation minhash fingerprint: min 60-bit hash over the
     doc's k-word shingles (null for docs shorter than k words)."""
-    return doc_fingerprint_from_tokens(tokens(col), k)
+    return doc_fingerprint_from_tokens(tokens(col))
 
 
 def doc_fingerprint_sql(expr: str, k: int = 4) -> str:
@@ -290,7 +291,6 @@ def stratified_keep(
     content_col: Column | str,
     rates: dict[str, int],
     default_pct: int,
-    salt: str = "sample-v1",
 ) -> Column:
     """Deterministic per-stratum downsampling decision: keep a row iff
     its salted content-hash bucket (0-99) falls under the stratum's
@@ -302,7 +302,7 @@ def stratified_keep(
     a join."""
     sc = F.col(strat_col) if isinstance(strat_col, str) else strat_col
     cc = F.col(content_col) if isinstance(content_col, str) else content_col
-    bucket = F.pmod(h60(F.concat(F.lit(salt), cc)), F.lit(100))
+    bucket = F.pmod(h60(F.concat(F.lit("sample-v1"), cc)), F.lit(100))
     rate: Column = F.lit(default_pct)
     for stratum, pct in rates.items():
         rate = F.when(sc == stratum, F.lit(pct)).otherwise(rate)
@@ -327,9 +327,6 @@ def stratified_keep_sql(
 
 def corpus_split(
     col: Column | str,
-    train_pct: int = 90,
-    val_pct: int = 5,
-    salt: str = "split-v1",
 ) -> Column:
     """Deterministic train/val/test assignment by content hash — the
     reproducible-sampling primitive of a training-data pipeline: the
@@ -345,10 +342,10 @@ def corpus_split(
     percentile- or sort-based splits.
     """
     c = F.col(col) if isinstance(col, str) else col
-    bucket = F.pmod(h60(F.concat(F.lit(salt), c)), F.lit(100))
+    bucket = F.pmod(h60(F.concat(F.lit("split-v1"), c)), F.lit(100))
     return (
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 90, "train")
+        .when(bucket < 95, "val")
         .otherwise("test")
     )
 
@@ -367,8 +364,6 @@ def corpus_split_sql(
 
 def doc_chunks(
     docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_size: int = 128,
     stride: int = 96,
 ):
@@ -397,7 +392,7 @@ def doc_chunks(
     from pyspark.sql import functions as _F
 
     toked = docs.select(
-        _F.col(id_col).alias("doc"), tokens(text_col).alias("toks")
+        _F.col("doc_id").alias("doc"), tokens("text").alias("toks")
     ).withColumn("n", _F.size("toks"))
     starts = _F.sequence(
         _F.lit(0),
@@ -408,7 +403,7 @@ def doc_chunks(
         toked.filter(_F.col("n") > 0)
         .select("doc", "toks", "n", _F.explode(starts).alias("chunk_start"))
         .select(
-            _F.col("doc").alias(id_col),
+            _F.col("doc").alias("doc_id"),
             (_F.col("chunk_start") / stride).cast("bigint").alias("chunk_id"),
             _F.col("chunk_start").cast("bigint"),
             _F.least(_F.lit(chunk_size), _F.col("n") - _F.col("chunk_start"))
@@ -482,9 +477,6 @@ def normalized_text_pandas(col: Column | str) -> Column:
 def repetition_profile(
     docs: DataFrame,
     k: int = 3,
-    threshold: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Duplicated n-gram CHARACTER mass per document (the Gopher /
     MassiveText quality filter, Rae et al. 2021 §A1.1): of all the
@@ -506,7 +498,7 @@ def repetition_profile(
     sums + one IEEE division ⇒ hash-exact oracle.
     """
     toked = docs.select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("toks")
+        F.col("doc_id").alias("doc"), tokens("text").alias("toks")
     )
     grams = toked.select(
         "doc", F.explode(positional_shingles_from_tokens(F.col("toks"), k)).alias("g")
@@ -520,7 +512,7 @@ def repetition_profile(
     )
     frac = F.col("dup_chars").cast("double") / F.col("total_chars")
     return (
-        docs.select(F.col(id_col).alias("doc"))
+        docs.select(F.col("doc_id").alias("doc"))
         .join(per_doc, "doc", "left")
         .select(
             F.col("doc").alias("doc_id"),
@@ -530,7 +522,7 @@ def repetition_profile(
             .cast("bigint")
             .alias("total_chars"),
             frac.alias("dup_char_frac"),
-            F.coalesce(frac > F.lit(threshold), F.lit(False)).alias("repetitive"),
+            F.coalesce(frac > F.lit(0.1), F.lit(False)).alias("repetitive"),
         )
     )
 
@@ -575,11 +567,8 @@ FROM {table} d LEFT JOIN per_doc p ON d.{id_col} = p.doc
 
 def vocab_overlap(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    top_k: int = 50,
 ) -> DataFrame:
-    """Pairwise Jaccard of the top-``top_k`` token vocabularies between
+    """Pairwise Jaccard of the top-50 token vocabularies between
     sources — the corpus-mix drift audit: two sources whose head
     vocabularies barely overlap contribute genuinely different text;
     near-1 overlap flags a mirrored/duplicated source feeding the mix
@@ -606,14 +595,16 @@ def vocab_overlap(
     from pyspark.sql import Window
 
     counts = (
-        docs.select(F.col(source_col).alias("src"), F.explode(tokens(text_col)).alias("tok"))
+        docs.select(
+            F.col("source").alias("src"), F.explode(tokens("text")).alias("tok")
+        )
         .groupBy("src", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     w = Window.partitionBy("src").orderBy(F.col("n").desc(), F.col("tok").asc())
     top = counts.select(
         "src", "tok", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= top_k)
+    ).filter(F.col("rk") <= 50)
     sizes = top.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("vocab"))
     a = top.select(F.col("src").alias("source_a"), "tok")
     b = top.select(F.col("src").alias("source_b"), "tok")
@@ -680,18 +671,14 @@ JOIN sizes sb ON c.source_b = sb.src
 
 def zipf_slope(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    top_k: int = 300,
-    scale: int = 100_000,
 ) -> DataFrame:
     """Per-source Zipf fit: least-squares slope of ln(frequency) on
-    ln(rank) over the top-``top_k`` terms — natural text sits near -1;
+    ln(rank) over the top-300 terms — natural text sits near -1;
     a flat slope flags templated/generated content, a cliff flags a
     tiny vocabulary looping (the corpus-level cousin of t28's per-doc
     repetition mass). Output: (source, n_terms, zipf_slope, fit_r2).
 
-    Determinism: ln values are quantized to ``scale`` (=1e5) and the
+    Determinism: ln values are quantized to ``FIXED_POINT_SCALE`` (=1e5) and the
     regression runs on exact BIGINT sufficient statistics — the only
     float steps are the final divisions on identical exact integers,
     so the hash matches cross-engine. (The quantization grid is the
@@ -711,16 +698,18 @@ def zipf_slope(
     from pyspark.sql import Window
 
     counts = (
-        docs.select(F.col(source_col).alias("src"), F.explode(tokens(text_col)).alias("tok"))
+        docs.select(
+            F.col("source").alias("src"), F.explode(tokens("text")).alias("tok")
+        )
         .groupBy("src", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     w = Window.partitionBy("src").orderBy(F.col("n").desc(), F.col("tok").asc())
     ranked = counts.select(
         "src", "n", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= top_k)
-    xq = F.round(F.log(F.col("rk").cast("double")) * scale).cast("bigint")
-    yq = F.round(F.log(F.col("n").cast("double")) * scale).cast("bigint")
+    ).filter(F.col("rk") <= 300)
+    xq = F.round(F.log(F.col("rk").cast("double")) * FIXED_POINT_SCALE).cast("bigint")
+    yq = F.round(F.log(F.col("n").cast("double")) * FIXED_POINT_SCALE).cast("bigint")
     stats = ranked.select(
         "src", xq.alias("xq"), yq.alias("yq")
     ).groupBy("src").agg(
@@ -794,8 +783,6 @@ FROM stats
 
 def token_concentration(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-source token-mass concentration: the share of all token
     occurrences held by the top decile of the vocabulary (by
@@ -818,7 +805,9 @@ def token_concentration(
     from pyspark.sql import Window
 
     counts = (
-        docs.select(F.col(source_col).alias("src"), F.explode(tokens(text_col)).alias("tok"))
+        docs.select(
+            F.col("source").alias("src"), F.explode(tokens("text")).alias("tok")
+        )
         .groupBy("src", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -882,8 +871,6 @@ GROUP BY src
 
 def bpe_pair_stats(
     docs: DataFrame,
-    text_col: str = "text",
-    top_k: int = 50,
 ) -> DataFrame:
     """Adjacent character-pair frequencies over the corpus — the merge-
     candidate table of one BPE training step (Sennrich et al. 2016).
@@ -909,7 +896,7 @@ def bpe_pair_stats(
 
     words = docs.select(
         F.explode(
-            F.expr(f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)")
+            F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
         ).alias("word")
     )
     vocab = words.groupBy("word").agg(
@@ -937,7 +924,7 @@ def bpe_pair_stats(
         "pair_count",
         "n_vocab_words",
         F.row_number().over(w).cast("bigint").alias("rnk"),
-    ).filter(F.col("rnk") <= top_k)
+    ).filter(F.col("rnk") <= 50)
 
 
 def bpe_pair_stats_sql(
@@ -1073,9 +1060,6 @@ def _bigram_grid_stats_np(
 
 def char_entropy(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = 100_000,
     impl: str = "explode",
 ) -> DataFrame:
     """Per-doc character-bigram Shannon entropy (nats) — the
@@ -1087,7 +1071,7 @@ def char_entropy(
 
     Exactness: H = ln(T) − (Σ c·ln c)/T is folded on the t30/a08
     quantized-integer grid — BOTH ln(c) and ln(T) round to BIGINTs at
-    ``scale`` (jvm Math.log vs libm log differ by 1 ulp on some inputs;
+    ``FIXED_POINT_SCALE`` (jvm Math.log vs libm log differ by 1 ulp on some inputs;
     the grid absorbs it), the Σ c·qc sum is exact integer arithmetic
     (order-free, so map-side combinable and partition-independent), and
     the only float steps are divisions on identical exact integers —
@@ -1102,22 +1086,24 @@ def char_entropy(
     left join with n_bigrams=0 and NULL entropy — same on both engines.
     """
     if impl == "numpy":
-        per_doc = _bigram_grid_stats_np(docs, id_col, text_col, scale)
+        per_doc = _bigram_grid_stats_np(docs, "doc_id", "text", FIXED_POINT_SCALE)
     else:
         grams = (
-            docs.filter(F.length(text_col) >= 2)
+            docs.filter(F.length("text") >= 2)
             .select(
-                F.col(id_col).alias("doc"),
+                F.col("doc_id").alias("doc"),
                 F.explode(
                     F.expr(
-                        f"transform(sequence(1, length({text_col}) - 1),"
-                        f" i -> substring({text_col}, i, 2))"
+                        "transform(sequence(1, length(text) - 1),"
+                        " i -> substring(text, i, 2))"
                     )
                 ).alias("g"),
             )
         )
         counts = grams.groupBy("doc", "g").agg(F.count(F.lit(1)).alias("c"))
-        qc = F.round(F.log(F.col("c").cast("double")) * scale).cast("bigint")
+        qc = F.round(F.log(F.col("c").cast("double")) * FIXED_POINT_SCALE).cast(
+            "bigint"
+        )
         per_doc = counts.groupBy("doc").agg(
             F.sum("c").cast("bigint").alias("t"),
             F.sum(F.col("c") * qc).cast("bigint").alias("s"),
@@ -1126,11 +1112,11 @@ def char_entropy(
     # jvm Math.log and libm log disagree by 1 ulp on some inputs, and
     # a raw ln(T) leaks that ulp straight into the hash (observed on
     # 5/500 sf0.001 docs); round-to-grid absorbs it exactly like t30
-    qt = F.round(F.log(F.col("t").cast("double")) * scale).cast("bigint")
-    ent = qt.cast("double") / F.lit(float(scale)) - (
-        F.col("s").cast("double") / F.lit(float(scale))
+    qt = F.round(F.log(F.col("t").cast("double")) * FIXED_POINT_SCALE).cast("bigint")
+    ent = qt.cast("double") / F.lit(float(FIXED_POINT_SCALE)) - (
+        F.col("s").cast("double") / F.lit(float(FIXED_POINT_SCALE))
     ) / F.col("t").cast("double")
-    return docs.select(F.col(id_col).alias("doc_id")).join(
+    return docs.select(F.col("doc_id")).join(
         per_doc.select(
             F.col("doc").alias("doc_id"),
             F.col("t").alias("n_bigrams"),
@@ -1179,8 +1165,6 @@ FROM {table} d LEFT JOIN per_doc p ON d.{id_col} = p.doc
 
 def language_confidence(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """t02's language election plus its CONFIDENCE: the stopword-hit
     score of the elected language, the best score among the OTHER
@@ -1209,10 +1193,10 @@ def language_confidence(
     """
     langs = list(LANG_STOPWORDS)
     scored = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).isNotNull().alias("has_text"),
+        F.col("doc_id"),
+        F.col("text").isNotNull().alias("has_text"),
         *[
-            stopword_hits(text_col, lg).cast("bigint").alias(f"s_{lg}")
+            stopword_hits("text", lg).cast("bigint").alias(f"s_{lg}")
             for lg in langs
         ],
     )
@@ -1325,9 +1309,7 @@ def _gopher_parts(col: Column):
     return words, alnum, alpha_words, lines, bullets, ellipsis, hashes, stops
 
 
-def gopher_rules(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """Per-doc breakdown of the Gopher/MassiveText quality rules (Rae
     et al. 2021 §A1.1) — one named boolean per rule plus the overall
     verdict, the t03-composite's auditable sibling: a composite score
@@ -1345,7 +1327,7 @@ def gopher_rules(
     twin's NULLs propagate (the t02 divergence class; caught by the
     planted-NULL sweep before this ever shipped).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     words, alnum, alpha_words, lines, bullets, ellipsis, hashes, stops = (
         _gopher_parts(c)
     )
@@ -1365,7 +1347,7 @@ def gopher_rules(
     for expr in rules.values():
         passes = expr if passes is None else (passes & expr)
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[expr.alias(name) for name, expr in rules.items()],
         passes.alias("passes_all"),
     )
@@ -1429,16 +1411,14 @@ GOPHER_RULE_NAMES = (
 )
 
 
-def gopher_rule_attribution(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_rule_attribution(docs: DataFrame) -> DataFrame:
     """Per-rule rejection accounting over :func:`gopher_rules` — which
     named rule is doing the filtering, the table read before any
     threshold is loosened: (rule, n_eval, n_fail, fail_rate). NULL-text
     docs evaluate no rule (three-valued logic) and are excluded from
     the denominator. One corpus scan, one aggregate row exploded into
     |rules| rows — the rollup never re-reads the corpus per rule."""
-    rules = gopher_rules(docs, id_col=id_col, text_col=text_col)
+    rules = gopher_rules(docs)
     aggs = []
     # coalesce: SUM over ZERO rows is NULL; an empty corpus evaluates
     # and fails zero docs per rule (r11 empty-corpus sweep), matching
@@ -1504,9 +1484,6 @@ FROM rules"""
 
 def unigram_entropy(
     docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    scale: int = 100_000,
 ) -> DataFrame:
     """Per-source unigram Shannon entropy (nats) — the vocabulary-
     DIVERSITY number next to t30's Zipf slope and t31's concentration:
@@ -1523,21 +1500,21 @@ def unigram_entropy(
     """
     counts = (
         docs.select(
-            F.col(source_col).alias("source"),
-            F.explode(tokens(text_col)).alias("tok"),
+            F.col("source"),
+            F.explode(tokens("text")).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    qn = F.round(F.log(F.col("n").cast("double")) * scale).cast("bigint")
+    qn = F.round(F.log(F.col("n").cast("double")) * FIXED_POINT_SCALE).cast("bigint")
     per_source = counts.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("t"),
         F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
         F.sum(F.col("n") * qn).cast("bigint").alias("s"),
     )
-    qt = F.round(F.log(F.col("t").cast("double")) * scale).cast("bigint")
-    ent = qt.cast("double") / F.lit(float(scale)) - (
-        F.col("s").cast("double") / F.lit(float(scale))
+    qt = F.round(F.log(F.col("t").cast("double")) * FIXED_POINT_SCALE).cast("bigint")
+    ent = qt.cast("double") / F.lit(float(FIXED_POINT_SCALE)) - (
+        F.col("s").cast("double") / F.lit(float(FIXED_POINT_SCALE))
     ) / F.col("t").cast("double")
     return per_source.select(
         "source",
@@ -1587,7 +1564,6 @@ FROM per_source
 
 def frequent_tokens(
     docs: DataFrame,
-    text_col: str = "text",
     capacity: int = 128,
 ) -> DataFrame:
     """Corpus-wide heavy-hitter tokens — every token whose exact count
@@ -1618,7 +1594,7 @@ def frequent_tokens(
     the token grain either. The DuckDB twin is the exact GROUP BY +
     HAVING the two phases reproduce.
     """
-    toks = docs.select(F.explode(tokens(text_col)).alias("token"))
+    toks = docs.select(F.explode(tokens("text")).alias("token"))
     cap = int(capacity)
 
     def mg_partition(batches):
@@ -1652,8 +1628,8 @@ def frequent_tokens(
     # live by the planted-NULL docs sweep: two NULL-text docs shaved 2
     # off the threshold denominator), so NULL text is guarded to 0
     n_toks = F.when(
-        F.col(text_col).isNull(), F.lit(0)
-    ).otherwise(F.size(tokens(text_col)))
+        F.col("text").isNull(), F.lit(0)
+    ).otherwise(F.size(tokens("text")))
     total_df = docs.agg(
         F.coalesce(
             F.sum(n_toks.cast("bigint")), F.lit(0).cast("bigint")

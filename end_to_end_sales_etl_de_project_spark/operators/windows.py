@@ -26,9 +26,9 @@ def _timed(events: DataFrame) -> DataFrame:
     return events.filter(F.col("ts").isNotNull())
 
 
-def tumbling_agg(events: DataFrame, size: str = "1 hour") -> DataFrame:
+def tumbling_agg(events: DataFrame) -> DataFrame:
     return (
-        _timed(events).groupBy(F.window("ts", size).alias("w"), "event_type")
+        _timed(events).groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(money("value")).cast("double").alias("total_value"),
@@ -39,9 +39,10 @@ def tumbling_agg(events: DataFrame, size: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(events: DataFrame, size: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
+def sliding_agg(events: DataFrame) -> DataFrame:
     return (
-        _timed(events).groupBy(F.window("ts", size, slide).alias("w"), "event_type")
+        _timed(events)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(money("value")).cast("double").alias("total_value"),
@@ -52,9 +53,10 @@ def sliding_agg(events: DataFrame, size: str = "1 hour", slide: str = "30 minute
     )
 
 
-def session_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_agg(events: DataFrame) -> DataFrame:
     return (
-        _timed(events).groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        _timed(events)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(money("value")).cast("double").alias("total_value"),

@@ -124,17 +124,17 @@ def _split_shingle_artifact(
 # verification job reads the signature table.
 
 
-def _minhash_sig_artifact(
-    spark: SparkSession, sf_dir: str, n_hashes: int = 16
-) -> DataFrame:
+def _minhash_sig_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
-        sigs = dedup.minhash_signatures(_shingle_index(spark, sf_dir, 3), n_hashes)
+        sigs = dedup.minhash_signatures(
+            _shingle_index(spark, sf_dir, 3), dedup.N_HASHES
+        )
         # keyed repartition: the banding explode every LSH consumer
         # runs off this table would otherwise fan out from ONE partition
         return eager_checkpoint(sigs.repartition("doc"))
 
     return session_artifact(
-        "minhash_sigs", spark, f"{sf_dir}/documents.parquet", n_hashes, build=build
+        "minhash_sigs", spark, f"{sf_dir}/documents.parquet", build=build
     )
 
 
@@ -162,8 +162,8 @@ def _chunk_shingle_index(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     return scoped_checkpoint("d11.chunk_shingles", hashed.repartition("shingle"))
 
 
-def _chunk_signatures(chunk_shingles: DataFrame, n_hashes: int = 16) -> DataFrame:
-    sigs = dedup.minhash_signatures(chunk_shingles, n_hashes)
+def _chunk_signatures(chunk_shingles: DataFrame) -> DataFrame:
+    sigs = dedup.minhash_signatures(chunk_shingles, dedup.N_HASHES)
     return scoped_checkpoint("d11.chunk_sigs", sigs.repartition("doc"))
 
 

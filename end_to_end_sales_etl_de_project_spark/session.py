@@ -152,9 +152,6 @@ def get_spark_session(
 def runtime_filter_conf(
     creation_side_threshold: str = "10MB",
     application_side_scan_threshold: str = "10GB",
-    expected_num_items: int = 1_000_000,
-    max_num_bits: int = 67_108_864,
-    semi_join_reduction: bool = False,
 ) -> dict[str, str]:
     """Runtime-filter (row-level Bloom) preset for large shuffled
     joins — the Catalyst-native sibling of the explicit d22 prefilter.
@@ -179,9 +176,8 @@ def runtime_filter_conf(
     joins never inject (the build side ships whole anyway);
     ``autoBroadcastJoinThreshold`` decides that first.
 
-    ``semi_join_reduction`` additionally injects an exact semi-join
-    filter instead of a Bloom where the optimizer estimates it pays;
-    kept off by default to match Spark's default.
+    Semi-join reduction (an exact semi-join filter instead of a Bloom
+    where the optimizer estimates it pays) stays off, as in Spark.
     """
     return {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -191,11 +187,7 @@ def runtime_filter_conf(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": (
             application_side_scan_threshold
         ),
-        "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems": (
-            str(expected_num_items)
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits": str(max_num_bits),
-        "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": (
-            "true" if semi_join_reduction else "false"
-        ),
+        "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems": "1000000",
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits": "67108864",
+        "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": "false",
     }

@@ -141,7 +141,7 @@ def enable_nanos_as_long(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize the event-time column to TIMESTAMP (LTZ, UTC instants)
     whatever the parquet flavor was — shared by the batch loader and
     the streaming source so the two paths cannot drift:
@@ -151,11 +151,11 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     - timestamp_ntz (µs parquet from other engines): reinterpret as
       UTC instants (watermarks require LTZ).
     """
-    ts_type = dict(df.dtypes).get(ts_col)
+    ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
-        return df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if ts_type == "timestamp_ntz":
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -163,7 +163,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Spread a file-count-bound scan across the session's shuffle
     width before FAN-OUT-HEAVY work (explode, per-row vector math,
     shingle/window hashing).
@@ -185,9 +185,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     get rescued. Do NOT use it in front of cheap scan→filter→agg
     plans (the exchange would cost more than the serial stage; the
     q-family stays pure)."""
-    n = min_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

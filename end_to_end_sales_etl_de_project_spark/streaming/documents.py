@@ -45,17 +45,19 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
+# Word-shingle size of every gate below (the batch corpus operators' k).
+SHINGLE_K = 3
+
 
 def read_documents_stream(
     spark: SparkSession,
     src_dir: str,
     max_files_per_trigger: int | None = 1,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
-    """File-source stream over a documents landing zone. Defaults to
+    """File-source stream over a documents landing zone. Reads with
     the canonical documents schema so ingestion can be armed on an
     EMPTY directory (no batch peek needed)."""
-    reader = spark.readStream.schema(schema or DOCUMENTS_SCHEMA)
+    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(src_dir)
@@ -192,9 +194,6 @@ def start_mixture_monitor(
 def decontamination_gate(
     docs: DataFrame,
     bitmap_words: list[int],
-    m_bits: int | None = None,
-    n_seeds: int | None = None,
-    k: int = 3,
 ) -> DataFrame:
     """Streaming Bloom decontamination at the ingest door: per arriving
     document, how many of its k-word shingles hit the test-set Bloom
@@ -221,22 +220,14 @@ def decontamination_gate(
     legacy semantics — the t37 lesson — so the counts are guarded
     explicitly)."""
     from end_to_end_sales_etl_de_project_spark.functions.hashing import h60
-    from end_to_end_sales_etl_de_project_spark.operators.dedup import (
-        BLOOM_M_BITS,
-        BLOOM_N_SEEDS,
-        bloom_membership,
-    )
+    from end_to_end_sales_etl_de_project_spark.operators.dedup import bloom_membership
     from end_to_end_sales_etl_de_project_spark.operators.text import (
         shingles_from_tokens,
         tokens,
     )
 
-    m = BLOOM_M_BITS if m_bits is None else m_bits
-    seeds = BLOOM_N_SEEDS if n_seeds is None else n_seeds
-    shingles = shingles_from_tokens(tokens("text"), k)
-    flagged = F.filter(
-        shingles, lambda s: bloom_membership(h60(s), bitmap_words, m, seeds)
-    )
+    shingles = shingles_from_tokens(tokens("text"), SHINGLE_K)
+    flagged = F.filter(shingles, lambda s: bloom_membership(h60(s), bitmap_words))
     n_sh = F.when(F.col("text").isNull(), F.lit(0)).otherwise(F.size(shingles))
     n_fl = F.when(F.col("text").isNull(), F.lit(0)).otherwise(F.size(flagged))
     return docs.select(
@@ -251,10 +242,6 @@ def decontamination_gate(
 def neardup_probe(
     docs: DataFrame,
     corpus_index: DataFrame,
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Near-dup probe at the ingest door — the streaming face of d18
     (``operators/dedup.incremental_neardup``): each arriving document
@@ -278,7 +265,7 @@ def neardup_probe(
 
     Output: one row per (doc, band[, candidate]) —
     (doc_id, matched_doc, jaccard), with sub-threshold and unmatched
-    probes carrying NULLs. Every doc always emits its ``n_bands`` rows
+    probes carrying NULLs. Every doc always emits its ``N_BANDS`` rows
     (LEFT join), so the election can decide ``novel`` without an
     anti-join; a pair matching in several bands appears several times
     and collapses in the election.
@@ -292,22 +279,26 @@ def neardup_probe(
         h60,
         minhash_family,
     )
+    from end_to_end_sales_etl_de_project_spark.operators.dedup import (
+        MIN_JACCARD,
+        N_BANDS,
+        N_HASHES,
+    )
     from end_to_end_sales_etl_de_project_spark.operators.text import (
         shingles_from_tokens,
         tokens,
     )
 
-    assert n_hashes % n_bands == 0
-    rpb = n_hashes // n_bands
+    rpb = N_HASHES // N_BANDS
     sh_a = F.array_distinct(
-        F.transform(shingles_from_tokens(tokens("text"), k), lambda s: h60(s))
+        F.transform(shingles_from_tokens(tokens("text"), SHINGLE_K), lambda s: h60(s))
     )
     def _mh_member(i: int):
         # factory closure: a 2-arg lambda would be misread by pyspark's
         # HOF bridge as an (element, index) lambda
         return F.array_min(F.transform(sh_a, lambda h: minhash_family(h, i)))
 
-    mh = [_mh_member(i) for i in range(n_hashes)]
+    mh = [_mh_member(i) for i in range(N_HASHES)]
     bands = F.array(
         *[
             F.struct(
@@ -316,7 +307,7 @@ def neardup_probe(
                     "key"
                 ),
             )
-            for b in range(n_bands)
+            for b in range(N_BANDS)
         ]
     )
     probe = docs.select(
@@ -331,7 +322,7 @@ def neardup_probe(
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("bigint")
     n_a = F.size("sh_a").cast("bigint")
     jac = inter / (n_a + F.col("n_b") - inter).cast("double")
-    hit = F.col("corpus_doc").isNotNull() & (jac >= F.lit(min_jaccard))
+    hit = F.col("corpus_doc").isNotNull() & (jac >= F.lit(MIN_JACCARD))
     return joined.select(
         "doc_id",
         F.when(hit, F.col("corpus_doc")).alias("matched_doc"),
@@ -339,7 +330,7 @@ def neardup_probe(
     )
 
 
-def neardup_decisions(probe_rows: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def neardup_decisions(probe_rows: DataFrame) -> DataFrame:
     """Best-match election over ``neardup_probe`` rows — BATCH mode
     (the streaming face applies it per micro-batch via ``foreachBatch``;
     file-source micro-batches contain whole files, so one doc's probe
@@ -357,7 +348,7 @@ def neardup_decisions(probe_rows: DataFrame, id_col: str = "doc_id") -> DataFram
         .drop("rn")
     )
     return best.select(
-        F.col("doc_id").alias(id_col),
+        "doc_id",
         F.when(F.col("matched_doc").isNull(), "novel")
         .otherwise("near_dup_of_corpus")
         .alias("decision"),
@@ -372,10 +363,6 @@ def start_neardup_gate(
     corpus_index: DataFrame,
     decisions_path: str,
     checkpoint_dir: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
 ):
     """Continuous near-dup gate: as document files land, probe the
     static corpus LSH index (stream-static join, zero streaming state)
@@ -384,7 +371,7 @@ def start_neardup_gate(
     the same ``neardup_decisions`` the batch path uses, so live and
     nightly decisions are bit-identical on identical input."""
     stream = read_documents_stream(spark, src_dir)
-    rows = neardup_probe(stream, corpus_index, k, n_hashes, n_bands, min_jaccard)
+    rows = neardup_probe(stream, corpus_index)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         neardup_decisions(batch_df).write.mode("append").parquet(decisions_path)
@@ -413,7 +400,7 @@ def _py_h60(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def _doc_shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
+def _doc_shingle_rows(docs: DataFrame) -> DataFrame:
     """Per-document DISTINCT hashed k-shingles as (shingle) rows — the
     per-row-expression form of ``dedup.shingle_index`` (the same
     array pipeline the decontamination gate runs), so each (doc,
@@ -432,7 +419,7 @@ def _doc_shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
         tokens("text").alias("toks")
     )
     hashed = F.array_distinct(
-        F.transform(shingles_from_tokens(F.col("toks"), k), h60)
+        F.transform(shingles_from_tokens(F.col("toks"), SHINGLE_K), h60)
     )
     return toked.select(F.explode(hashed).alias("shingle"))
 
@@ -440,9 +427,6 @@ def _doc_shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
 def cms_probe_stream(
     docs: DataFrame,
     probes: list[int],
-    w: int = CMS_STREAM_W,
-    depth: int = CMS_STREAM_DEPTH,
-    k: int = 3,
 ) -> DataFrame:
     """Online shingle document-frequency tracking via a count-min
     sketch held IN STATE — the streaming face of d28: the batch audit
@@ -455,7 +439,7 @@ def cms_probe_stream(
     CONSTANT in corpus size, vs the unbounded map a per-key counter
     gate would grow).
 
-    State is partitioned BY HASH ROW (``depth`` groups, each holding
+    State is partitioned BY HASH ROW (``CMS_STREAM_DEPTH`` groups, each holding
     its w-counter array): rows are independent by construction, so
     this is the natural shard key; at production width shard further
     by counter block — (row, bucket // B) — since bucket updates
@@ -481,10 +465,10 @@ def cms_probe_stream(
     from end_to_end_sales_etl_de_project_spark.functions.hashing import h60_seeded
 
     probe_buckets = {
-        s: [(int(p), _py_h60(f"{p}#{s}") % w) for p in probes]
-        for s in range(depth)
+        s: [(int(p), _py_h60(f"{p}#{s}") % CMS_STREAM_W) for p in probes]
+        for s in range(CMS_STREAM_DEPTH)
     }
-    seeded = _doc_shingle_rows(docs, k).select(
+    seeded = _doc_shingle_rows(docs).select(
         F.explode(
             F.array(
                 *[
@@ -492,10 +476,10 @@ def cms_probe_stream(
                         F.lit(s).alias("row_idx"),
                         (
                             h60_seeded(F.col("shingle").cast("string"), s)
-                            % F.lit(w)
+                            % F.lit(CMS_STREAM_W)
                         ).alias("bucket"),
                     )
-                    for s in range(depth)
+                    for s in range(CMS_STREAM_DEPTH)
                 ]
             )
         ).alias("e")
@@ -511,7 +495,7 @@ def cms_probe_stream(
             counters_t, n_seen = state.get
             counters = list(counters_t)
         else:
-            counters, n_seen = [0] * w, 0
+            counters, n_seen = [0] * CMS_STREAM_W, 0
         for pdf in pdfs:
             for b, c in pdf["bucket"].value_counts().items():
                 counters[int(b)] += int(c)
@@ -539,9 +523,6 @@ def cms_probe_stream(
 def cms_probe_batch(
     docs: DataFrame,
     probes: list[int],
-    w: int = CMS_STREAM_W,
-    depth: int = CMS_STREAM_DEPTH,
-    k: int = 3,
 ) -> DataFrame:
     """BATCH twin of the final stream state: per (row, probe), the
     bucket sum over the whole corpus — bit-equal to the stream's last
@@ -550,21 +531,22 @@ def cms_probe_batch(
     a driver-built <= |probes|-row frame."""
     from end_to_end_sales_etl_de_project_spark.functions.hashing import h60_seeded
 
-    rows = _doc_shingle_rows(docs, k)
+    rows = _doc_shingle_rows(docs)
     spark = docs.sparkSession
     legs = []
-    for s in range(depth):
+    for s in range(CMS_STREAM_DEPTH):
         sums = (
             rows.select(
-                (h60_seeded(F.col("shingle").cast("string"), s) % F.lit(w)).alias(
-                    "bucket"
-                )
+                (
+                    h60_seeded(F.col("shingle").cast("string"), s)
+                    % F.lit(CMS_STREAM_W)
+                ).alias("bucket")
             )
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).cast("bigint").alias("est"))
         )
         pb = spark.createDataFrame(
-            [(s, int(p), _py_h60(f"{p}#{s}") % w) for p in probes],
+            [(s, int(p), _py_h60(f"{p}#{s}") % CMS_STREAM_W) for p in probes],
             "row_idx int, probe long, bucket long",
         )
         legs.append(

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import types as T
-
 from end_to_end_sales_etl_de_project_spark.operators.windows import (
     session_agg,
     sliding_agg,
@@ -35,51 +33,52 @@ from end_to_end_sales_etl_de_project_spark.sources.tables import (
     normalize_event_ts,
 )
 
+# Event-time lateness every streaming twin tolerates before its state
+# for a window is dropped.
+WATERMARK = "2 hours"
+
 
 def read_events_stream(
     spark: SparkSession,
     src_dir: str,
     max_files_per_trigger: int | None = 1,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
     """File-source stream over an events parquet directory.
 
-    Streaming sources need an explicit schema; when none is passed it
-    is peeked from existing files — pass ``schema`` to arm ingestion on
-    an EMPTY landing zone (the batch peek cannot infer from nothing).
-    Event-time normalization is shared with the batch loader
-    (``sources.tables.normalize_event_ts``) so the paths cannot drift.
+    Streaming sources need an explicit schema; it is peeked from the
+    files already landed, so an EMPTY landing zone fails loudly (the
+    batch peek cannot infer from nothing). Event-time normalization is
+    shared with the batch loader (``sources.tables.normalize_event_ts``)
+    so the paths cannot drift.
     """
     enable_nanos_as_long(spark)
-    if schema is None:
-        try:
-            schema = spark.read.parquet(src_dir).schema
-        except Exception as e:
-            raise ValueError(
-                f"cannot infer a streaming schema from {src_dir!r} (empty "
-                "landing zone?) — pass schema= explicitly to arm ingestion "
-                "before the first file arrives"
-            ) from e
+    try:
+        schema = spark.read.parquet(src_dir).schema
+    except Exception as e:
+        raise ValueError(
+            f"cannot infer a streaming schema from {src_dir!r} (empty "
+            "landing zone?) — arm ingestion after the first file arrives"
+        ) from e
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return normalize_event_ts(reader.parquet(src_dir))
 
 
-def tumbling_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tumbling_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Watermarked tumbling window — SAME aggregation body as
     ``e01_tumbling_hourly`` (operators/windows.py)."""
     return tumbling_agg(events.withWatermark("ts", watermark))
 
 
-def sliding_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_stream(events: DataFrame) -> DataFrame:
     """Watermarked sliding window — same body as e02."""
-    return sliding_agg(events.withWatermark("ts", watermark))
+    return sliding_agg(events.withWatermark("ts", WATERMARK))
 
 
-def session_stream(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
+def session_stream(events: DataFrame) -> DataFrame:
     """Watermarked session windows — same body as e03."""
-    return session_agg(events.withWatermark("ts", watermark), gap=gap)
+    return session_agg(events.withWatermark("ts", WATERMARK))
 
 
 def run_to_memory_sink(
@@ -108,7 +107,6 @@ def start_checkpointed_ingestion(
     src_dir: str,
     dest_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ):
     """Exactly-once file ingestion: stream parquet files from ``src_dir``
     into ``dest_dir`` with progress tracked in ``checkpoint_dir``.
@@ -120,7 +118,7 @@ def start_checkpointed_ingestion(
     the same guarantees, from the checkpoint log instead of hand-rolled
     SQL. Returns the started StreamingQuery; callers stop it.
     """
-    events = read_events_stream(spark, src_dir, max_files_per_trigger)
+    events = read_events_stream(spark, src_dir, max_files_per_trigger=None)
     return (
         events.writeStream.format("parquet")
         .option("path", dest_dir)
@@ -133,28 +131,26 @@ def start_checkpointed_ingestion(
 def interval_join_stream(
     left: DataFrame,
     right: DataFrame,
-    max_gap_seconds: int = 600,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream inner join: each left event matched to same-user
-    right events from the preceding ``max_gap_seconds`` — the streaming
+    right events from the preceding 600 seconds — the streaming
     twin of the batch range join (e06) for enrich-on-arrival pipelines
     (purchase ⋈ recent views, click ⋈ recent impressions).
 
     Both sides are watermarked and the join condition bounds right's
     event time relative to left's, which is exactly what Spark needs to
     EXPIRE join state: a buffered right row is dropped once the left
-    watermark passes ``ts + max_gap`` — state stays proportional to the
+    watermark passes ``ts + 600 s`` — state stays proportional to the
     gap window, not the stream length. Inner join ⇒ append mode; rows
     emit as soon as both sides arrive.
     """
-    l = left.withWatermark("ts", watermark).select(
+    l = left.withWatermark("ts", WATERMARK).select(
         F.col("event_id").alias("id_l"),
         F.col("user_id").alias("user_id"),
         F.col("ts").alias("ts_l"),
         F.col("value").alias("value_l"),
     )
-    r = right.withWatermark("ts", watermark).select(
+    r = right.withWatermark("ts", WATERMARK).select(
         F.col("event_id").alias("id_r"),
         F.col("user_id").alias("user_r"),
         F.col("ts").alias("ts_r"),
@@ -162,15 +158,13 @@ def interval_join_stream(
     )
     cond = (
         (l["user_id"] == r["user_r"])
-        & (r["ts_r"] >= l["ts_l"] - F.expr(f"INTERVAL {max_gap_seconds} SECONDS"))
+        & (r["ts_r"] >= l["ts_l"] - F.expr("INTERVAL 600 SECONDS"))
         & (r["ts_r"] <= l["ts_l"])
     )
     return l.join(r, cond, "inner").drop("user_r")
 
 
-def hourly_active_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def hourly_active_stream(events: DataFrame) -> DataFrame:
     """Exact distinct users per tumbling hour, streaming — the twin of
     batch ``e21_hourly_active_users``'s ``n_users`` column.
 
@@ -185,7 +179,7 @@ def hourly_active_stream(
     """
     hour = F.date_trunc("hour", F.col("ts")).alias("hour_start")
     pairs = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .select("user_id", "ts", hour)
         .dropDuplicatesWithinWatermark(["user_id", "hour_start"])
     )
@@ -196,7 +190,7 @@ def hourly_active_stream(
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup by event_id with bounded state.
 
     ``dropDuplicatesWithinWatermark`` keeps each id's state only until
@@ -204,7 +198,7 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     dedup (``operators/dedup.py``): re-delivered events (at-least-once
     sources) are emitted once, and state does not grow with the stream.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -213,12 +207,10 @@ def anomaly_score_stream(
     events: DataFrame,
     median_n: float,
     mad_n: float,
-    threshold: float = 3.5,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Online twin of ``e29_hourly_mad_outliers``: score each hourly
     window's event count against OFFLINE-fitted robust statistics
-    (median/MAD from the batch pass), flagging |z| > ``threshold``.
+    (median/MAD from the batch pass), flagging |z| > 3.5.
 
     A true streaming median is not incrementally maintainable; the
     production pattern is exactly this split — fit the robust baseline
@@ -230,7 +222,7 @@ def anomaly_score_stream(
     data with the same cutoffs.
     """
     h = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("hour"), "n_events")
@@ -240,7 +232,7 @@ def anomaly_score_stream(
         flag = F.lit(False)
     else:
         z = (F.col("n_events") - F.lit(median_n)) / (F.lit(1.4826) * F.lit(mad_n))
-        flag = F.abs(z) > threshold
+        flag = F.abs(z) > 3.5
     return h.select(
         "hour",
         "n_events",
@@ -267,8 +259,6 @@ EVENT_CHECKS: list[tuple[str, str]] = [
 
 def violation_monitor_stream(
     events: DataFrame,
-    row_checks: list[tuple[str, str]] | None = None,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Live data-quality monitor: the declarative expectations contract
     (q102 / ``profiling.expectations_report``) running continuously —
@@ -284,5 +274,5 @@ def violation_monitor_stream(
     )
 
     return violation_monitor_agg(
-        events.withWatermark("ts", watermark), row_checks or EVENT_CHECKS
+        events.withWatermark("ts", WATERMARK), EVENT_CHECKS
     )

@@ -34,10 +34,9 @@ def fold_additive_batch(
     batch: DataFrame,
     epoch_id: int,
     key_cols: list[str] | None = None,
-    value_col: str = "value",
 ) -> None:
     """Fold one micro-batch's additive aggregates (count + decimal sum
-    of ``value_col`` per ``key_cols``) into the standing parquet mart,
+    of ``value`` per ``key_cols``) into the standing parquet mart,
     exactly once per epoch.
 
     The folded epoch id lives INSIDE the mart directory (underscore-
@@ -71,7 +70,7 @@ def fold_additive_batch(
                 return  # replayed batch already folded — keep exactly-once
     partial = batch.groupBy(*key_cols).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(money(value_col)).alias("total_value_dec"),
+        F.sum(money("value")).alias("total_value_dec"),
     )
     if os.path.exists(mart_path):
         current = spark.read.parquet(mart_path)

@@ -64,13 +64,11 @@ def run_streaming_pipeline(
     user_dim: DataFrame,
     mart_path: str,
     checkpoint_dir: str,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int | None = 1,
 ):
     """Start the composed pipeline; returns the StreamingQuery (callers
     drive it with processAllAvailable()/stop() or leave it running)."""
-    stream = read_events_stream(spark, events_src, max_files_per_trigger)
-    clean = dedup_stream(stream, watermark)
+    stream = read_events_stream(spark, events_src)
+    clean = dedup_stream(stream)
     enriched = enrich_events(clean, user_dim)
 
     def fold(batch: DataFrame, epoch_id: int) -> None:

@@ -223,13 +223,13 @@ ROLLING_STATE_SCHEMA = StructType(
 )
 
 
-def rolling_window_stream(events: DataFrame, window_s: int = 3600) -> DataFrame:
+def rolling_window_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the batch ``e16_rolling_1h`` RANGE-frame
-    window: per event, the trailing-``window_s`` count and exact money
+    window: per event, the trailing-hour count and exact money
     sum for its user — the per-event rolling baseline behind rate
     limits and anomaly scores, which Structured Streaming's built-in
     (bucketed) windows cannot express. State per user is the deque of
-    per-SECOND aggregates inside the trailing window (≤ window_s+1
+    per-SECOND aggregates inside the trailing window (≤ 3601
     entries — bounded, independent of event rate within a second).
 
     Events are folded second-at-a-time: all events of one event-time
@@ -287,7 +287,7 @@ def rolling_window_stream(events: DataFrame, window_s: int = 3600) -> DataFrame:
                 secs.append(sec)
                 ns.append(n)
                 cents.append(c)
-            while secs and secs[0] < sec - window_s:
+            while secs and secs[0] < sec - 3600:
                 secs.pop(0)
                 ns.pop(0)
                 cents.pop(0)
@@ -334,14 +334,14 @@ EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def ewma_stream(events: DataFrame, alpha: float = 0.5) -> DataFrame:
+def ewma_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of batch ``e22_ewma``: per event, the running
     exponentially-weighted average of the user's values —
-    s_i = (1-alpha)·s_{i-1} + alpha·x_i, s_1 = x_1 — maintained as TWO
+    s_i = (1-α)·s_{i-1} + α·x_i, s_1 = x_1, α = 0.5 — maintained as TWO
     scalars of per-user state (the whole point of EWMA at scale: the
     batch twin's collected sequence becomes O(1) state here).
 
-    At alpha = 0.5 every multiply is exact in binary floating point, so
+    At α = 0.5 every multiply is exact in binary floating point, so
     the stream's row for a user's latest event equals the batch fold
     bit-for-bit (pinned by the batch≡stream test). Same in-order-per-key
     caveat as the other stateful operators; the fold itself sorts each
@@ -367,8 +367,8 @@ def ewma_stream(events: DataFrame, alpha: float = 0.5) -> DataFrame:
         for r in rows:
             v = float(r.value)
             # identical operation order to the batch/oracle fold:
-            # acc*(1-alpha) + x*alpha, seeded with the first value
-            s = v if n == 0 else s * (1.0 - alpha) + v * alpha
+            # acc*(1-α) + x*α, seeded with the first value
+            s = v if n == 0 else s * (1.0 - 0.5) + v * 0.5
             n += 1
             out["event_id"].append(r.event_id)
             out["user_id"].append(user_id)
@@ -413,13 +413,11 @@ BURST_STATE_SCHEMA = StructType(
 )
 
 
-def burst_stream(
-    events: DataFrame, trailing_minutes: int = 60, min_active: int = 5
-) -> DataFrame:
+def burst_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of batch ``e33_burst_detection``: per event type,
     a minute is a burst when its event count reaches 2x the trailing-
     hour per-active-minute average (PRECEDING minutes only, >=
-    ``min_active`` active trailing minutes to keep cold starts quiet).
+    5 active trailing minutes to keep cold starts quiet).
     The online form of the rate-anomaly gate — ``anomaly_score_stream``
     scores against an OFFLINE-fitted baseline; this one maintains the
     trailing baseline IN STATE, which Structured Streaming's built-in
@@ -427,7 +425,7 @@ def burst_stream(
     time).
 
     State per event type is the (minute, count) deque of the trailing
-    window — bounded at ``trailing_minutes``+1 entries regardless of
+    window — bounded at 61 entries regardless of
     event rate. Minutes are floor(epoch_us/60e6) — the e33/e28/e30
     discipline: exact integer bucketing, identical to the batch form on
     every input including fractional pre-epoch timestamps. The trailing
@@ -473,13 +471,13 @@ def burst_stream(
             else:
                 minutes.append(m)
                 counts.append(n)
-            while minutes and minutes[0] < m - trailing_minutes:
+            while minutes and minutes[0] < m - 60:
                 minutes.pop(0)
                 counts.pop(0)
             trail_n = [c for mm, c in zip(minutes, counts) if mm < m]
             if trail_n:
                 avg = float(sum(trail_n)) / float(len(trail_n))
-                burst = len(trail_n) >= min_active and float(n) >= 2.0 * avg
+                burst = len(trail_n) >= 5 and float(n) >= 2.0 * avg
             else:
                 avg, burst = None, False
             out["event_type"].append(event_type)

@@ -695,6 +695,7 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
         neardup_decisions,
         neardup_probe,
         read_documents_stream,
+        start_neardup_gate,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -729,15 +730,30 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
         neardup_probe(stream, idx), "neardup_gate_test", "append"
     )
 
-    def decide(probe_rows):
+    def by_doc(decisions):
         return {
             r["doc_id"]: (r["decision"], r["matched_doc"], r["jaccard"])
-            for r in neardup_decisions(probe_rows).collect()
+            for r in decisions.collect()
         }
+
+    def decide(probe_rows):
+        return by_doc(neardup_decisions(probe_rows))
 
     got = decide(rows)
     via_static = decide(neardup_probe(spark.read.parquet(src), idx))
     assert got == via_static  # stream ≡ batch, same code path
+    # the packaged gate over the same landing: its decisions mart holds
+    # exactly these elections, one row per document
+    gate = start_neardup_gate(
+        spark, src, idx, f"{tmpdir}/neardup-decisions", f"{tmpdir}/neardup-ckpt"
+    )
+    try:
+        gate.processAllAvailable()
+    finally:
+        gate.stop()
+    mart = spark.read.parquet(f"{tmpdir}/neardup-decisions")
+    assert mart.count() == len(got)
+    assert by_doc(mart) == got
     docs_sh = dedup.shingle_index(docs, "doc_id", "text", 3)
     want = {
         r["doc_id"]: (r["decision"], r["matched_doc"], r["jaccard"])

@@ -73,3 +73,42 @@ def test_delete_keys_parquet_removes_only_doomed(spark, tmp_path):
     assert all(rows[i] == 2 * i for i in rows)
     litter = [n for n in os.listdir(tmp_path) if "staged" in n or "bak" in n]
     assert not litter, litter
+
+
+def test_q34_salted_write_keeps_oracle_parity(spark, sf_dir, monkeypatch):
+    """q34's production write path: with SPARK_GRAFT_WRITE_SALT=4 each
+    month's rows are distributed over up to 4 write tasks (the within-
+    month salt), so a month holds at most 4 part files, and the
+    read-back still hash-matches q34's oracle.
+
+    AQE coalesces shuffle partitions smaller than its advisory size into
+    one task, which at sf0.001 puts every month in a single task and a
+    single file; months at production scale exceed that size. The test
+    turns coalescing off for the write so the salt's spread shows."""
+    from end_to_end_sales_etl_de_project_spark.plans.core import _staging_dir
+    from end_to_end_sales_etl_de_project_spark.plans.registry import ORACLES, QUERIES
+    from end_to_end_sales_etl_de_project_spark.testing import (
+        compare_spark_to_oracle,
+        duckdb_connection,
+        run_oracle,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_WRITE_SALT", "4")
+    name = "q34_partitioned_write_readback"
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    con = duckdb_connection(sf_dir)
+    try:
+        got = QUERIES[name](spark, sf_dir)
+        result = compare_spark_to_oracle(name, got, run_oracle(con, ORACLES[name]))
+    finally:
+        con.close()
+        spark.conf.set(coalesce, saved)
+    assert result.match, result.mismatches
+    out = _staging_dir(spark, "partrt", sf_dir)
+    files_per_month = [
+        len(glob.glob(f"{d}/*.parquet")) for d in glob.glob(f"{out}/sales_month=*")
+    ]
+    assert files_per_month and max(files_per_month) <= 4
+    assert max(files_per_month) > 1  # the salt actually spread a month
