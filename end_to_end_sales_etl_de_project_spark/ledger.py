@@ -23,8 +23,9 @@ for a few hundred rows: in a traced ``etl_daily`` batch of the
 repository benchmark (``perfbench/``, 4 vCPUs, ``local[4]``) it was 6 of
 the batch's 18 Spark jobs and about half (48-54 %) of its wall time,
 against 0 jobs and ~12 % (0.06 s per ledger call) folded on the
-driver. Here every read is one pyarrow pass over the log's files and a
-Python fold, and every append is one pyarrow file renamed into place,
+driver. Here every read lists the log, parses with pyarrow only the
+files this ``Ledger`` has not parsed before, and folds the events in
+Python; every append is one pyarrow file renamed into place,
 so Spark readers and file globs only ever see complete files. The
 on-disk format is the same as a Spark-written log: Spark reads these
 files and this class reads Spark-written ones. For streaming ingestion
@@ -76,6 +77,10 @@ class Ledger:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        # parsed events per log file, keyed by (name, size, mtime_ns): a
+        # pipeline batch folds the log 4 times, and re-reading every file
+        # on each fold grows with the ledger's history
+        self._parsed: dict[tuple[str, int, int], list[dict]] = {}
 
     # -- reads ---------------------------------------------------------
 
@@ -89,17 +94,26 @@ class Ledger:
     def _state(self) -> dict[str, dict]:
         """Latest event per file_name: highest seq wins; an equal-seq
         tie — possible only in pre-fix ledgers — resolves to COMPLETED,
-        the safe direction for idempotency. Reads every ``*.parquet``
+        the safe direction for idempotency. Folds every ``*.parquet``
         file of the log (Spark-written INT96/ns timestamps are cast to
-        the declared schema)."""
+        the declared schema), but parses only the files this instance
+        has not parsed yet; files that are gone (a ``compact()`` swap)
+        drop out of the memo."""
         self._recover()
-        if not os.path.exists(self.path):
-            return {}
-        events: list[dict] = []
-        for name in os.listdir(self.path):
-            if name.endswith(".parquet") and not name.startswith((".", "_")):
-                table = pq.read_table(os.path.join(self.path, name))
-                events += table.select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA).to_pylist()
+        parsed: dict[tuple[str, int, int], list[dict]] = {}
+        if os.path.exists(self.path):
+            for entry in os.scandir(self.path):
+                if entry.name.endswith(".parquet") and not entry.name.startswith((".", "_")):
+                    st = entry.stat()
+                    key = (entry.name, st.st_size, st.st_mtime_ns)
+                    if key not in self._parsed:
+                        table = pq.read_table(entry.path)
+                        self._parsed[key] = (
+                            table.select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA).to_pylist()
+                        )
+                    parsed[key] = self._parsed[key]
+        self._parsed = parsed
+        events = [e for file_events in parsed.values() for e in file_events]
         latest: dict[str, dict] = {}
         for e in sorted(events, key=lambda e: (-e["seq"], e["status"] != STATUS_COMPLETED)):
             latest.setdefault(e["file_name"], e)

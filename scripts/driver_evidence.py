@@ -410,17 +410,17 @@ INFRA_ATTESTATIONS: list[dict] = [
 
 def _attested_ok(funcname: str, fn_sources) -> bool:
     """True iff this changed function is covered by an attestation AND
-    its current normalized source matches the pinned fingerprint."""
+    its current normalized source matches the pinned fingerprint. Any
+    pin of the function counts, so a newer pin is not shadowed by an
+    older one listed before it."""
     import hashlib
 
-    for att in INFRA_ATTESTATIONS:
-        if att["function"] != funcname:
-            continue
-        for _rel, name, src_now in fn_sources:
-            if name == funcname:
-                fp = hashlib.sha256(src_now.encode()).hexdigest()[:16]
-                return fp == att["fingerprint"]
-    return False
+    pins = {att["fingerprint"] for att in INFRA_ATTESTATIONS if att["function"] == funcname}
+    return any(
+        hashlib.sha256(src_now.encode()).hexdigest()[:16] in pins
+        for _rel, name, src_now in fn_sources
+        if name == funcname
+    )
 
 
 def stale_queries() -> dict[str, str]:

@@ -151,6 +151,62 @@ def test_ledger_append_cost_bounded_by_compaction(spark, tmp_path):
     assert done == ["f001.csv"] and to_process == ["f003.csv"]
 
 
+def test_ledger_reads_each_log_file_once(spark, tmp_path, monkeypatch):
+    """A pipeline batch folds the ledger 4 times; each fold must parse
+    only the log files this Ledger has not seen, not the whole history.
+    Grow a 40-file log, then count pyarrow reads per call: after the
+    first fold every call reads at most one file (the append it
+    follows), and every answer equals a fresh Ledger's, before and
+    after compact() swaps the log's files out."""
+    from end_to_end_sales_etl_de_project_spark import ledger as ledger_mod
+
+    led = Ledger(spark, str(tmp_path / "ledger40"))
+    for i in range(20):
+        led.mark_start({f"f{i:02d}.csv": "/in"})
+        led.mark_completed([f"f{i:02d}.csv"] if i % 3 else [])
+        led.mark_start({f"g{i:02d}.csv": "/in"})
+    assert len(os.listdir(led.path)) >= 40
+
+    reads = []
+    orig = ledger_mod.pq.read_table
+
+    def counting(path, *args, **kwargs):
+        reads.append(path)
+        return orig(path, *args, **kwargs)
+
+    monkeypatch.setattr(ledger_mod.pq, "read_table", counting)
+
+    names = [f"{p}{i:02d}.csv" for p in "fgh" for i in range(20)]
+
+    def answers(ledger):
+        return ledger.stuck_in_start(), ledger.split_processed(names), ledger._max_seq()
+
+    def fresh():
+        return answers(Ledger(spark, led.path))
+
+    led.stuck_in_start()  # the first fold reads the whole log
+    for step in range(6):
+        reads.clear()
+        if step % 2:
+            led.mark_completed([f"g{step:02d}.csv"])  # folds for seq, then appends
+        else:
+            led.mark_start({f"h{step:02d}.csv": "/in"})
+        for call in (led.stuck_in_start, lambda: led.split_processed(names), led._max_seq):
+            before = len(reads)
+            call()
+            assert len(reads) - before <= 1
+        assert len(reads) <= 2  # the append's seq fold + the new file, once
+        assert answers(led) == fresh()
+
+    expected = fresh()
+    led.compact()
+    assert len(os.listdir(led.path)) == 1
+    assert answers(led) == expected == fresh()
+    reads.clear()
+    led.mark_start({"late.csv": "/in"})
+    assert answers(led) == fresh()
+
+
 # --- crash matrix: a failure at every step boundary of run_pipeline ------
 
 VALID_FILES = ["sales_extra.csv", "sales_jan.csv", "sales_mar.csv"]
@@ -219,12 +275,20 @@ def landing(spark, tmp_path):
 
 
 @pytest.mark.parametrize("step", list(AFTER_START))
-def test_crash_after_mark_start_aborts_next_run(landing, monkeypatch, step):
+def test_crash_after_mark_start_aborts_next_run(spark, landing, monkeypatch, step):
     run, ledger = landing
+    sc = spark.sparkContext
+    cached_before = sc._jsc.getPersistentRDDs().size()
     _inject(monkeypatch, *AFTER_START[step])
     with pytest.raises(InjectedCrash):
         run("run1")
     monkeypatch.undo()
+    if step.startswith("write-"):
+        # a failed write neither leaves the enriched frame pinned nor
+        # returns while the other sinks' jobs still run
+        assert sc._jsc.getPersistentRDDs().size() == cached_before
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ends reach the tracker
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
 
     assert ledger.stuck_in_start() == VALID_FILES
     with pytest.raises(CrashDetectedError) as err:

@@ -6,10 +6,12 @@ behavior and the property checks from SURVEY §5 #4."""
 from __future__ import annotations
 
 import os
+import threading
 from decimal import Decimal
 
 import pytest
 
+from end_to_end_sales_etl_de_project_spark import pipeline
 from end_to_end_sales_etl_de_project_spark.ledger import Ledger
 from end_to_end_sales_etl_de_project_spark.pipeline import (
     CrashDetectedError,
@@ -147,3 +149,40 @@ def test_crash_detected_even_after_inputs_archived(spark, env):
     env["ledger"].mark_start({"ghost.csv": "/already/archived/ghost.csv"})
     with pytest.raises(CrashDetectedError, match="ghost.csv"):
         _run(spark, env)
+
+
+def test_sink_writes_run_concurrently(spark, env, monkeypatch):
+    """The four sink writes are in flight together: each write waits on
+    a four-party barrier, so the run completes only if all four were
+    submitted at once (written one after another, the first write's
+    wait times out). Each write runs under the caller's job group, and
+    the batch's pool threads are gone when the run returns."""
+    sc = spark.sparkContext
+    barrier = threading.Barrier(4, timeout=60)
+    groups: dict[str, str | None] = {}
+    orig = pipeline.write_parquet
+
+    def rendezvous(df, path, **kwargs):
+        groups[os.path.basename(path)] = sc.getLocalProperty("spark.jobGroup.id")
+        barrier.wait()
+        return orig(df, path, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet", rendezvous)
+    threads_before = threading.active_count()
+    sc.setJobGroup("daily-batch", "one batch of the daily run")
+    try:
+        result = _run(spark, env)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    sinks = [
+        "customer_mart",
+        "sales_team_mart",
+        "customer_monthly_purchase",
+        "sales_team_incentive",
+    ]
+    assert list(result.outputs) == sinks and list(result.row_counts) == sinks
+    assert result.row_counts["customer_mart"] == 10
+    assert groups == dict.fromkeys(sinks, "daily-batch")
+    assert threading.active_count() == threads_before

@@ -142,3 +142,36 @@ def test_infra_attestation_is_fingerprint_scoped():
     finally:
         de.INFRA_ATTESTATIONS[:] = saved
     assert perturbed > baseline + 100, (perturbed, baseline)
+
+
+def test_stale_pin_does_not_shadow_current_one():
+    """An older pin of a function listed before its current pin must not
+    hide the current one: any matching pin attests the function."""
+    import hashlib
+    import importlib
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(_REPO, "scripts"))
+    try:
+        de = importlib.import_module("driver_evidence")
+    finally:
+        sys.path.pop(0)
+    src = "def f():\n    return 1\n"
+    current = hashlib.sha256(src.encode()).hexdigest()[:16]
+    saved = [dict(a) for a in de.INFRA_ATTESTATIONS]
+    baseline = de.stale_queries()
+    try:
+        de.INFRA_ATTESTATIONS[:] = [
+            {"function": "f", "fingerprint": "0" * 16},
+            {"function": "f", "fingerprint": current},
+        ]
+        assert de._attested_ok("f", [("m.py", "f", src)])
+        assert not de._attested_ok("f", [("m.py", "f", src + "# edited\n")])
+        # a stale copy of every real pin, listed first, changes nothing
+        de.INFRA_ATTESTATIONS[:] = [
+            {**a, "fingerprint": "0" * 16} for a in saved
+        ] + [dict(a) for a in saved]
+        assert de.stale_queries() == baseline
+    finally:
+        de.INFRA_ATTESTATIONS[:] = saved
