@@ -1,5 +1,7 @@
-"""Embedding similarity search: brute-force cosine top-k (baseline) and
-sign-LSH bucketed ANN (the scale path).
+"""Embedding similarity search: brute-force cosine top-k (the exact
+baseline) and the approximate candidate paths — sign-LSH buckets,
+multiprobe LSH, IVF cells and PQ codes — all ranked by one exact
+kernel.
 
 The ``embeddings`` table carries ``embedding array<float>`` (dim 64).
 Cosine is a left-to-right sequential sum of per-dimension double
@@ -11,20 +13,30 @@ operation sequence ⇒ bit-identical results (engine-internal kernels
 like ``list_cosine_similarity`` use float intermediates and would
 drift).
 
-Scale design:
+One kernel: every top-k path projects its query and corpus sides with
+:func:`_side` and ends in :func:`_top_k_exact` — drop the self pair,
+exact cosine, ``row_number()`` over (cosine desc, neighbor_id), keep
+rank ≤ k. The paths differ only in which (query, neighbor) pairs they
+hand the kernel:
 
 - Brute force is a broadcast nested-loop: the (small) query set is
   broadcast, the corpus streams — O(|corpus| x |queries|) with no
-  shuffle of the corpus; per-query top-k via window rank. Right answer
-  up to thousands of queries; the baseline for recall measurement.
+  shuffle of the corpus. Right answer up to thousands of queries; the
+  baseline for recall measurement.
 - Sign-LSH buckets vectors by the sign pattern of the first
   ``SIG_BITS`` dimensions (axis-aligned random-hyperplane LSH — for
   already-whitened/random embeddings axis signs ARE random
   hyperplanes). Candidates = same bucket → the join is an equi-join on
   an 8-bit key; work drops by the bucket-occupancy factor (~256x here).
-  The bucketing is deterministic, so even the ANN path is
-  oracle-checked. An IVF variant would replace the signature with
-  nearest-centroid assignment; same join shape.
+  Multiprobe adds the Hamming-distance-1 buckets.
+- IVF replaces the signature with nearest-centroid cells on a
+  quantized-integer grid (:func:`_ivf_cells_and_probes` builds the
+  corpus cells and the ranked query probes once for a04 and a21); PQ
+  shortlists by approximate codebook scores and hands the shortlist to
+  the kernel for the exact rerank.
+
+Every candidate rule is deterministic, so even the ANN paths are
+oracle-checked.
 """
 
 from __future__ import annotations
@@ -102,6 +114,37 @@ def with_norm(emb: DataFrame, dim: int = DIM) -> DataFrame:
     return emb.withColumn("norm", _norm_col("embedding", dim))
 
 
+def _side(df: DataFrame, role: str, *extra: Column, dim: int = DIM) -> DataFrame:
+    """One side of a candidate join: ``role`` ``"q"`` (query) or ``"n"``
+    (corpus neighbor). ``vec_id`` becomes ``query_id``/``neighbor_id``,
+    the vector and its norm become ``{role}_emb``/``{role}_norm``, and
+    ``extra`` columns (a signature, a quantized vector) ride along."""
+    return with_norm(df, dim=dim).select(
+        F.col("vec_id").alias("query_id" if role == "q" else "neighbor_id"),
+        F.col("embedding").alias(f"{role}_emb"),
+        F.col("norm").alias(f"{role}_norm"),
+        *extra,
+    )
+
+
+def _top_k_exact(pairs: DataFrame, k: int, dim: int = DIM) -> DataFrame:
+    """The exact ranking kernel every top-k path ends in: drop the self
+    pair, score each (query, neighbor) candidate of ``pairs`` (built from
+    two :func:`_side` projections) by exact cosine, and keep the ``k``
+    best per query by (cosine desc, neighbor_id) — a total order, so the
+    result is deterministic. Output: (query_id, neighbor_id, rank,
+    cosine)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    cosine = _dot_col("q_emb", "n_emb", dim) / (F.col("q_norm") * F.col("n_norm"))
+    return (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", cosine.alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -114,33 +157,9 @@ def brute_force_topk(
     ``queries`` must have (vec_id, embedding); it is broadcast — the
     corpus is never shuffled.
     """
-    q = with_norm(queries, dim=dim).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    n = with_norm(emb, dim=dim).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    dot = _dot_col("q_emb", "n_emb", dim)
-    scored = (
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    q = _side(queries, "q", dim=dim)
+    n = _side(emb, "n", dim=dim)
+    return _top_k_exact(F.broadcast(q).crossJoin(n), k, dim)
 
 
 def brute_force_topk_sql(
@@ -173,36 +192,10 @@ def lsh_topk(
     """Approximate top-k: candidates restricted to the query's sign-LSH
     bucket, then exact cosine rank within candidates. Equi-join on the
     signature instead of a cross join — the 100 TB shape."""
-    sig = lambda c: _sig_col(c, SIG_BITS)  # noqa: E731
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        sig("embedding").alias("sig"),
-    )
-    n = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-        sig("embedding").alias("sig"),
-    )
-    dot = _dot_col("q_emb", "n_emb")
-    scored = (
-        F.broadcast(q)
-        .join(n, "sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    sig = _sig_col("embedding", SIG_BITS).alias("sig")
+    q = _side(queries, "q", sig)
+    n = _side(emb, "n", sig)
+    return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
 def lsh_topk_sql(
@@ -642,6 +635,31 @@ def ivf_train(
     return cents
 
 
+def _ivf_cells_and_probes(
+    emb: DataFrame, queries: DataFrame, centroids: list[list[int]]
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF index over one (corpus, query set, model): the corpus
+    vectors in their nearest-centroid cell (neighbor_id, n_emb, n_norm,
+    cid) and the queries with their ``max(PROBE_COUNTS)`` nearest cells
+    ranked (query_id, q_emb, q_norm, probe_cids). ``_with_cells_np``
+    orders probes sim-desc, cid-desc, so the probe set at width p is
+    the first p entries. Quantization (the only rounding) runs
+    JVM-side, then the k x dim sim fold runs as one Arrow-batched int64
+    matmul per batch — the interpreted HOF fold was the measured ANN
+    hot path (PERF.md r9)."""
+    vq = _vq_col("embedding").alias("__vq")
+    cells = _with_cells_np(_side(_valid_vecs(emb), "n", vq), centroids).select(
+        "neighbor_id", "n_emb", "n_norm", "cid"
+    )
+    probes = _with_cells_np(
+        _side(_valid_vecs(queries), "q", vq),
+        centroids,
+        n_probe=max(PROBE_COUNTS),
+        out_col="probe_cids",
+    ).select("query_id", "q_emb", "q_norm", "probe_cids")
+    return cells, probes
+
+
 def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -649,8 +667,8 @@ def ivf_topk(
     centroids: list[list[int]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their
-    nearest-centroid cell; each query probes its 4 nearest
-    cells; exact cosine ranks the candidates.
+    nearest-centroid cell; each query probes its ``max(PROBE_COUNTS)``
+    (4) nearest cells; exact cosine ranks the candidates.
 
     Same equi-join shape as the sign-LSH path (a02/a03) — corpus is
     never cross-joined — but cells adapt to the DATA distribution
@@ -662,46 +680,11 @@ def ivf_topk(
     the whole query is hash-exact against :func:`ivf_topk_sql`."""
     if centroids is None:
         centroids = ivf_train(emb, N_CENTROIDS)
-    # quantize JVM-side (the only rounding), then run the k x dim sim
-    # fold as one Arrow-batched int64 matmul per batch — the
-    # interpreted HOF fold was the measured ANN hot path (PERF.md r9)
-    n = _with_cells_np(
-        with_norm(_valid_vecs(emb)).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            F.col("norm").alias("n_norm"),
-            _vq_col("embedding").alias("__vq"),
-        ),
-        centroids,
-    ).select("neighbor_id", "n_emb", "n_norm", "cid")
-    q = _with_cells_np(
-        with_norm(_valid_vecs(queries)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            _vq_col("embedding").alias("__vq"),
-        ),
-        centroids,
-        n_probe=4,
-        out_col="probe_cids",
-    ).select("query_id", "q_emb", "q_norm", F.explode("probe_cids").alias("cid"))
-    dot = _dot_col("q_emb", "n_emb")
-    scored = (
-        F.broadcast(q)
-        .join(n, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-        )
+    cells, probes = _ivf_cells_and_probes(emb, queries, centroids)
+    q = probes.select(
+        "query_id", "q_emb", "q_norm", F.explode("probe_cids").alias("cid")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k_exact(F.broadcast(q).join(cells, "cid"), k)
 
 
 def _kmeans_sql_ctes(
@@ -889,7 +872,7 @@ WHERE rank <= {k}
 
 def ivf_cell_balance(
     emb: DataFrame,
-    centroids: list[list[int]] | None = None,
+    centroids: list[list[int]],
 ) -> DataFrame:
     """IVF cell-occupancy audit: one row per centroid cell with its
     corpus population, share, and skew-vs-uniform ratio — the
@@ -904,8 +887,6 @@ def ivf_cell_balance(
     count per cid and a 1-row broadcast total join-back. Integer
     counts, one IEEE division per output row ⇒ hash-exact against
     :func:`ivf_cell_balance_sql` (same unrolled Lloyd CTEs as a04)."""
-    if centroids is None:
-        centroids = ivf_train(emb, N_CENTROIDS)
     cells = _with_cells_np(
         _valid_vecs(emb).select(
             "vec_id", _vq_col("embedding").alias("__vq")
@@ -1097,37 +1078,15 @@ def lsh_topk_multiprobe(
     probes = F.array(
         F.lit(0), *[F.lit(1 << b) for b in range(SIG_BITS)]
     )
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
+    q = _side(
+        queries,
+        "q",
         F.explode(
             F.transform(probes, lambda m: _sig_col("embedding", SIG_BITS).bitwiseXOR(m))
         ).alias("sig"),
     )
-    n = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-        _sig_col("embedding", SIG_BITS).alias("sig"),
-    )
-    dot = _dot_col("q_emb", "n_emb")
-    scored = (
-        F.broadcast(q)
-        .join(n, "sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    n = _side(emb, "n", _sig_col("embedding", SIG_BITS).alias("sig"))
+    return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
 def lsh_topk_multiprobe_sql(
@@ -1172,7 +1131,7 @@ def pq_train(
     emb: DataFrame,
     n_subspaces: int = 4,
     n_codes: int = 16,
-) -> list[list[list[float]]]:
+) -> list[list[list[int]]]:
     """Per-subspace codebooks (n_subspaces x n_codes x dim/n_subspaces):
     the embedding is split into contiguous coordinate blocks and each
     block gets its own k-means codebook — :func:`ivf_train`'s seeding
@@ -1305,11 +1264,8 @@ def pq_topk(
         with_recon_sq=True,
     ).select("neighbor_id", "codes", "recon_sq")
 
-    q = with_norm(_valid_vecs(queries)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        _vq_col("embedding").alias("q_vq"),
+    q = _side(
+        _valid_vecs(queries), "q", _vq_col("embedding").alias("q_vq")
     ).withColumn("q_aq", _aq_col(F.col("q_vq")))
 
     # approx dot via the classic ADC lookup table: dot(q_s, codeword)
@@ -1349,23 +1305,7 @@ def pq_topk(
     )
 
     # exact rerank: fetch the real vectors for the shortlist only
-    corpus = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    dot = _dot_col("q_emb", "n_emb")
-    rescored = shortlist.join(corpus, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k_exact(shortlist.join(_side(emb, "n"), "neighbor_id"), k)
 
 
 def pq_topk_sql(
@@ -1578,43 +1518,20 @@ def ivf_recall_curve(
 
     ``exact`` is the materialized brute-force top-k over the SAME
     (emb, queries, k) — the session ground-truth artifact. The corpus
-    cell assignment and the query probe RANKING are computed once per
-    invocation and shared by every leg (r15, guide §4/§5: left to
-    ivf_topk each leg re-ran the corpus numpy-assign seam — 3 seams and
-    3 full corpus passes per run; the DuckDB twin always shared them
-    via its materialized cells/probe_rank CTEs). A leg's probe set at
-    width p is exactly the first p entries of the max-width ranking
-    (``_with_cells_np`` orders probes sim-desc, cid-desc), so each leg
-    is just a slice + candidate join + top-k; the corpus is never
-    shuffled."""
+    cell assignment and the query probe RANKING are the a04 build
+    (:func:`_ivf_cells_and_probes`), materialized once per invocation
+    and shared by every leg (r15, guide §4/§5: left to ivf_topk each
+    leg re-ran the corpus numpy-assign seam — 3 seams and 3 full corpus
+    passes per run; the DuckDB twin always shared them via its
+    materialized cells/probe_rank CTEs). A leg's probe set at width p
+    is exactly the first p entries of the max-width ranking, so each
+    leg is just a slice + candidate join + the exact top-k kernel; the
+    corpus is never shuffled."""
     exact_pairs = exact.select("query_id", "neighbor_id")
-    cells = scoped_checkpoint(
-        "ivf_recall_curve.cells",
-        _with_cells_np(
-            with_norm(_valid_vecs(emb)).select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("n_emb"),
-                F.col("norm").alias("n_norm"),
-                _vq_col("embedding").alias("__vq"),
-            ),
-            centroids,
-        ).select("neighbor_id", "n_emb", "n_norm", "cid"),
-    )
-    q_ranked = scoped_checkpoint(
-        "ivf_recall_curve.probes",
-        _with_cells_np(
-            with_norm(_valid_vecs(queries)).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("norm").alias("q_norm"),
-                _vq_col("embedding").alias("__vq"),
-            ),
-            centroids,
-            n_probe=max(PROBE_COUNTS),
-            out_col="probe_cids",
-        ).select("query_id", "q_emb", "q_norm", "probe_cids"),
-    )
-    dot = _dot_col("q_emb", "n_emb")
+    cells, probes = _ivf_cells_and_probes(emb, queries, centroids)
+    cells = scoped_checkpoint("ivf_recall_curve.cells", cells)
+    q_ranked = scoped_checkpoint("ivf_recall_curve.probes", probes)
+    n_exact = exact_pairs.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     legs = []
     for p in PROBE_COUNTS:
         q = q_ranked.select(
@@ -1623,34 +1540,10 @@ def ivf_recall_curve(
             "q_norm",
             F.explode(F.slice("probe_cids", 1, p)).alias("cid"),
         )
-        scored = (
-            F.broadcast(q)
-            .join(cells, "cid")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (dot / (F.col("q_norm") * F.col("n_norm"))).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        approx = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
+        approx = _top_k_exact(F.broadcast(q).join(cells, "cid"), TOP_K)
         legs.append(
-            exact_pairs.join(
-                approx, ["query_id", "neighbor_id"], "left_semi"
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-            .crossJoin(
-                exact_pairs.agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_exact")
-                )
-            )
+            _hits_against(exact_pairs, approx, "n_hit")
+            .crossJoin(n_exact)
             .select(
                 F.lit(p).cast("int").alias("n_probe"),
                 "n_exact",
@@ -1832,7 +1725,7 @@ def ivf_recall_audit(
     queries: DataFrame,
     exact: DataFrame,
     lsh: DataFrame,
-    centroids: list[list[float]] | None = None,
+    centroids: list[list[int]],
 ) -> DataFrame:
     """Single-row IVF quality audit: (n_queries, n_exact, lsh_recall,
     ivf_at_least_lsh, ivf_above_floor). The first three are deterministic
@@ -1899,7 +1792,7 @@ def pq_recall_audit(
     queries: DataFrame,
     exact: DataFrame,
     lsh: DataFrame,
-    books: list[list[list[float]]] | None = None,
+    books: list[list[list[int]]],
 ) -> DataFrame:
     """Single-row PQ quality audit: (n_queries, n_exact, lsh_recall,
     pq_at_least_lsh, rerank_scores_exact). rerank_scores_exact recomputes
@@ -1923,16 +1816,8 @@ def pq_recall_audit(
         F.countDistinct("query_id").alias("n_queries"),
         F.count(F.lit(1)).alias("n_exact"),
     )
-    qv = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    nv = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
+    qv = _side(queries, "q")
+    nv = _side(emb, "n")
     recomputed = _dot_col("q_emb", "n_emb") / (
         F.col("q_norm") * F.col("n_norm")
     )

@@ -726,7 +726,7 @@ def _knn_graph_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (seeded from the lowest vec_ids), so reuse changes no semantics.
 
 
-def _ivf_model(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+def _ivf_model(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     return session_artifact(
         "ivf_model",
         spark,
@@ -756,7 +756,7 @@ def a04_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # like the IVF model (see _ivf_model's comment for the rationale).
 
 
-def _pq_model(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+def _pq_model(spark: SparkSession, sf_dir: str) -> list[list[list[int]]]:
     return session_artifact(
         "pq_model",
         spark,

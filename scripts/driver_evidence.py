@@ -260,7 +260,46 @@ _NO_OPTION_NOTE = (
     "verifications stand. d11 is NOT excused: its memo-consolidation "
     "change is still unattested and it holds a window slot."
 )
+_ANN_KERNEL_NOTE = (
+    "One exact top-k kernel for the ANN operators: in "
+    "operators/similarity.py the cosine ranking tail (drop the self pair, "
+    "exact cosine, row_number over cosine desc and neighbor_id, keep rank "
+    "<= k) is one helper, _top_k_exact, where brute force, LSH, multiprobe, "
+    "IVF, the PQ rerank and each a21 leg carried a copy; the 14 query and "
+    "corpus side projections are one helper, _side; ivf_topk and "
+    "ivf_recall_curve share one cell and probe build, "
+    "_ivf_cells_and_probes; the a21 legs count hits with _hits_against. "
+    "ivf_cell_balance, ivf_recall_audit and pq_recall_audit take their "
+    "model as a required argument, and the model type hints say int grids "
+    "(pq_train, _ivf_model, _pq_model). The optimized logical plans of the "
+    "26 queries that reach similarity.py (d05, d13, a01-a24) at sf0.001, "
+    "expression ids and lambda-variable suffixes masked, are identical to "
+    "the parent's (26 of 26), and ORACLES is byte-identical. Post-change, "
+    "all 26 hash-match their oracles at sf0.001, and "
+    "tests/test_oracle_parity.py, tests/test_plan_shapes.py, "
+    "tests/test_ivf_recall.py and the NULL, empty and extreme-value "
+    "suites are green. This pin supersedes the earlier pins of the same "
+    "functions, whose verifications stand. d11 is NOT excused: its "
+    "memo-consolidation change is still unattested and it holds a window "
+    "slot."
+)
 INFRA_ATTESTATIONS: list[dict] = [
+    {"function": f, "fingerprint": fp, "round": 16, "note": _ANN_KERNEL_NOTE}
+    for f, fp in [
+        ("_ivf_model", "b037b6c99da4bcd5"),
+        ("_pq_model", "0a95a8896bfed6df"),
+        ("brute_force_topk", "06e8e7f5deb6b5a2"),
+        ("ivf_cell_balance", "d1de3b3a54eb98ff"),
+        ("ivf_recall_audit", "58aa58dea7f0bd7c"),
+        ("ivf_recall_curve", "0adfc5972a703606"),
+        ("ivf_topk", "d58f9b6cdf004aea"),
+        ("lsh_topk", "45a00eb8b5ac7234"),
+        ("lsh_topk_multiprobe", "d98724a683caad16"),
+        ("pq_recall_audit", "773d26e881658c7b"),
+        ("pq_topk", "8d6077c98aebd082"),
+        ("pq_train", "593c4e769632cb23"),
+    ]
+] + [
     {"function": f, "fingerprint": fp, "round": 16, "note": _NO_OPTION_NOTE}
     for f, fp in [
         ("_chunk_signatures", "2561440c180b4a36"),

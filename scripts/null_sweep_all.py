@@ -106,6 +106,11 @@ _PAR = " pellentesque habitant morbi tristique senectus et netus et malesuada fa
 
 
 def build_docs(out: str, spark) -> None:
+    """Planted documents: every NULL/degenerate corner the synthetic
+    corpus lacks (NULL text, lang, source, an all-NULL row), plus enough
+    normal/near-dup content that the dedup paths stay non-vacuous. d15
+    requires texts >= 16 chars or < 16 uniformly — keep every non-NULL
+    text >= 16 chars."""
     _clone_except(SF, out, {"documents"})
     base = (
         "the quick brown fox jumps over the lazy dog while seventeen "

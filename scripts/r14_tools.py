@@ -2,7 +2,8 @@
 
 Usage:
   python scripts/r14_tools.py explain <tag> <query> [query ...]
-      -> writes plans/r14/<query>_<tag>.txt (explain formatted)
+      -> writes plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt (explain
+         formatted; default plans/r15/, created on demand, not tracked)
   python scripts/r14_tools.py time [-n N] <query> [query ...]
       -> warm + min-of-N noop-sink timing per query (bench methodology)
   python scripts/r14_tools.py parity [--sf DIR] <query> [query ...]

@@ -23,22 +23,18 @@ from end_to_end_sales_etl_de_project_spark.testing import (
     run_oracle,
 )
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+# The 0-row fixture comes from scripts/null_sweep_all.py's builder
+# (single source of the fixture text so the script and the suite
+# cannot drift).
+from scripts import null_sweep_all
+from scripts.null_sweep_all import ALL_TABLES
 
 
 @pytest.fixture(scope="module")
 def empty_sf_dir(sf_dir, tmp_path_factory):
+    assert null_sweep_all.SF == sf_dir
     d = tmp_path_factory.mktemp("empty-sf")
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{sf_dir}/{name}.parquet') LIMIT 0) "
-            f"TO '{d / (name + '.parquet')}' (FORMAT PARQUET)"
-        )
-    con.close()
+    null_sweep_all.build_empty(str(d))
     return str(d)
 
 
@@ -114,7 +110,7 @@ def test_rollup_grand_total_divergence_is_pinned(spark, empty_sf_dir, empty_con)
 
 def test_empty_fixture_is_actually_empty(empty_sf_dir):
     con = duckdb.connect()
-    for name in TABLES:
+    for name in ALL_TABLES:
         n = con.execute(
             f"SELECT COUNT(*) FROM read_parquet('{os.path.join(empty_sf_dir, name)}.parquet')"
         ).fetchone()[0]

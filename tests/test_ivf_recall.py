@@ -8,7 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from end_to_end_sales_etl_de_project_spark.operators import similarity
+from end_to_end_sales_etl_de_project_spark.plans.documents import _ann_baselines
 from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
 K = 5
@@ -86,6 +88,25 @@ def test_ivf_scan_fraction_bounded(spark, sf_dir):
     # no empty training: every centroid keeps a cell; worst cell must not
     # swallow the corpus (that would be the all-pairs shape again)
     assert max(sizes.values()) < 0.5 * n, sizes
+
+
+def test_a21_full_width_leg_scores_a04(spark, sf_dir):
+    """a04 and a21's widest leg share the IVF cell/probe build and the
+    exact ranking kernel, so that leg's row is a04's output scored
+    against the same session ground truth (``_ann_baselines``)."""
+    exact, _ = _ann_baselines(spark, sf_dir)
+    exact_pairs = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
+    a04_pairs = {
+        (r["query_id"], r["neighbor_id"])
+        for r in E.queries()["a04_ann_ivf"](spark, sf_dir).collect()
+    }
+    [row] = [
+        r
+        for r in E.queries()["a21_ivf_recall_curve"](spark, sf_dir).collect()
+        if r["n_probe"] == max(similarity.PROBE_COUNTS)
+    ]
+    assert row["n_exact"] == len(exact_pairs)
+    assert row["n_hit"] == len(exact_pairs & a04_pairs) > 0
 
 
 def test_topk_pairs_are_distinct(spark, sf_dir):

@@ -15,7 +15,6 @@ r8+ follow-up), keeping fixes staleness-safe by construction.
 from __future__ import annotations
 
 import os
-import shutil
 
 import duckdb
 import pytest
@@ -29,6 +28,11 @@ from end_to_end_sales_etl_de_project_spark.testing import (
     compare_spark_to_oracle,
     run_oracle,
 )
+
+# The planted corpus comes from scripts/null_sweep_all.py's builder
+# (single source of the fixture text so the script and the suite
+# cannot drift).
+from scripts import null_sweep_all
 
 # In-window document-readers deliberately OUTSIDE the parity sweep,
 # each with its own dedicated pin below. An exclusion must name a
@@ -52,54 +56,17 @@ WINDOW_DOC_QUERIES = sorted(
     if n in ORACLES and _READER_PAT.search(ORACLES[n]) and n not in SWEEP_EXCLUSIONS
 )
 
-_PAR = " pellentesque habitant morbi tristique senectus et netus et malesuada fames"
-
-
-def _planted_rows():
-    """Docs exercising every NULL/degenerate corner the synthetic
-    corpus lacks, plus enough normal/near-dup content that the dedup
-    paths stay non-vacuous. d15 requires texts >= 16 chars or < 16
-    uniformly — keep every non-NULL text >= 16 chars."""
-    base = (
-        "the quick brown fox jumps over the lazy dog while seventeen "
-        "sleepy badgers watch from the old stone bridge" + _PAR * 3
-    )
-    rows = [
-        (0, base, "en", "web", len(base)),
-        (1, base + " appended tail words here", "en", "web", len(base) + 25),
-        (2, base, "en", "books", len(base)),  # exact dup of 0, other source
-        (3, "completely different arctic penguins assemble quietly near "
-            "the frozen shoreline under pale green auroras tonight" + _PAR * 2,
-         "fr", "web", 113),
-        (4, None, "en", "web", 0),            # NULL text
-        (5, base[:40] + " un texte distinct pour la suite du corpus" + _PAR,
-         None, "web", 82),                    # NULL lang
-        (6, "another moderately long document about rivers mountains "
-            "oceans forests and the deserts beyond them" + _PAR * 2,
-         "en", None, 98),                     # NULL source
-        (7, None, None, None, None),          # all NULL
-    ]
-    return rows
-
-
 @pytest.fixture(scope="module")
 def null_sf_dir(spark, sf_dir, tmp_path_factory):
     """A full sf-dir clone whose documents.parquet is the planted
-    corpus — queries and oracles both read it through their normal
-    loaders, so NULL semantics are compared end-to-end."""
+    corpus (``null_sweep_all.build_docs``: every NULL/degenerate corner
+    the synthetic corpus lacks, plus enough normal/near-dup content that
+    the dedup paths stay non-vacuous) — queries and oracles both read it
+    through their normal loaders, so NULL semantics are compared
+    end-to-end."""
+    assert null_sweep_all.SF == sf_dir
     d = tmp_path_factory.mktemp("null-corpus")
-    for name in os.listdir(sf_dir):
-        if name != "documents.parquet":
-            shutil.copy(os.path.join(sf_dir, name), d / name)
-    df = spark.createDataFrame(
-        _planted_rows(),
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    staged = str(d / "_docs_staged")
-    df.coalesce(1).write.parquet(staged)
-    part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(staged, part), d / "documents.parquet")
-    shutil.rmtree(staged)
+    null_sweep_all.build_docs(str(d), spark)
     return str(d)
 
 
@@ -158,7 +125,7 @@ def test_m03_null_payload_emits_no_frames(spark, null_sf_dir):
     oracle-parity check runs in the sweep below; this pin keeps the
     specific regression visible by name."""
     frames = E.queries()["m03_frame_sample"](spark, null_sf_dir)
-    null_doc_ids = {4, 7}  # _planted_rows: the NULL-text docs
+    null_doc_ids = {4, 7}  # build_docs: the NULL-text docs
     got = {r["asset_id"] for r in frames.select("asset_id").distinct().collect()}
     assert not (got & null_doc_ids), "NULL-payload docs emitted frames"
     assert got, "non-NULL docs must still emit frames"

@@ -19,11 +19,8 @@ the documented exclusion list.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
@@ -36,6 +33,11 @@ from end_to_end_sales_etl_de_project_spark.testing import (
     duckdb_connection,
     run_oracle,
 )
+
+# The planted fixture comes from scripts/null_sweep_all.py's builder
+# (single source of the fixture text so the script and the suite
+# cannot drift).
+from scripts import null_sweep_all
 
 # In-window embeddings-readers deliberately OUTSIDE the parity sweep,
 # each with a documented reason (and a dedicated pin if behavior-
@@ -58,39 +60,15 @@ WINDOW_EMB_QUERIES = sorted(
 @pytest.fixture(scope="module")
 def null_emb_dir(sf_dir, tmp_path_factory):
     """A full sf-dir clone whose embeddings.parquet is the REAL corpus
-    plus planted rows exercising every NULL/shape corner. Written by
-    DuckDB so the parquet keeps the FLOAT[] physical type of the
-    canonical file."""
+    plus planted rows exercising every NULL/shape corner, among them a
+    full-LENGTH vector with a NULL element: it passes the size gate but
+    must be excluded by the element-nullity predicate (ADVICE r9 — the
+    numpy seams would otherwise crash where DuckDB NULL-propagates).
+    Written by DuckDB (``null_sweep_all.build_emb``) so the parquet
+    keeps the FLOAT[] physical type of the canonical file."""
+    assert null_sweep_all.SF == sf_dir
     d = tmp_path_factory.mktemp("null-emb")
-    for name in os.listdir(sf_dir):
-        if name != "embeddings.parquet":
-            shutil.copy(os.path.join(sf_dir, name), d / name)
-    full = "[" + ", ".join(f"{(i % 7 - 3) / 8:.3f}" for i in range(64)) + "]"
-    # full-LENGTH vector with a NULL element: passes the size gate but
-    # must be excluded by the element-nullity predicate (ADVICE r9 —
-    # the numpy seams would otherwise crash where DuckDB NULL-propagates)
-    holed = (
-        "["
-        + ", ".join("NULL" if i == 17 else f"{(i % 5 - 2) / 8:.3f}" for i in range(64))
-        + "]"
-    )
-    duckdb.connect().execute(
-        f"""
-COPY (
-  SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')
-  UNION ALL
-  SELECT * FROM (VALUES
-    (9000001, NULL,                                  CAST(3 AS INTEGER)),
-    (9000002, CAST([] AS FLOAT[]),                   CAST(1 AS INTEGER)),
-    (9000003, CAST([0.25, -0.5, 0.125] AS FLOAT[]),  CAST(2 AS INTEGER)),
-    (9000004, CAST({full} AS FLOAT[]),               NULL),
-    (NULL,    CAST({full} AS FLOAT[]),               CAST(4 AS INTEGER)),
-    (9000006, NULL, NULL),
-    (9000007, CAST({holed} AS FLOAT[]),              CAST(5 AS INTEGER))
-  ) t(vec_id, embedding, label)
-) TO '{d / "embeddings.parquet"}' (FORMAT PARQUET)
-"""
-    )
+    null_sweep_all.build_emb(str(d))
     return str(d)
 
 

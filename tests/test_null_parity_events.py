@@ -12,11 +12,8 @@ the sweep or on the documented exclusion list.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
@@ -29,6 +26,11 @@ from end_to_end_sales_etl_de_project_spark.testing import (
     duckdb_connection,
     run_oracle,
 )
+
+# The planted fixture comes from scripts/null_sweep_all.py's builder
+# (single source of the fixture text so the script and the suite
+# cannot drift).
+from scripts import null_sweep_all
 
 # In-window event-readers deliberately OUTSIDE the parity sweep, each
 # with a documented reason (and a dedicated pin if behavior-bearing).
@@ -53,30 +55,13 @@ def null_ev_dir(sf_dir, tmp_path_factory):
     """A full sf-dir clone whose events.parquet is the REAL corpus plus
     planted rows exercising every NULL corner: NULL ts, NULL user_id,
     NULL event_type, NULL value, NULL props, and an all-NULL row.
-    Written by DuckDB so the parquet keeps the TIMESTAMP_NS physical
-    type of the canonical file (Spark reads it through the same
-    nanos-as-long normalization either way)."""
+    Written by DuckDB (``null_sweep_all.build_events``) so the parquet
+    keeps the TIMESTAMP_NS physical type of the canonical file (Spark
+    reads it through the same nanos-as-long normalization either
+    way)."""
+    assert null_sweep_all.SF == sf_dir
     d = tmp_path_factory.mktemp("null-events")
-    for name in os.listdir(sf_dir):
-        if name != "events.parquet":
-            shutil.copy(os.path.join(sf_dir, name), d / name)
-    duckdb.connect().execute(
-        f"""
-COPY (
-  SELECT * FROM read_parquet('{sf_dir}/events.parquet')
-  UNION ALL
-  SELECT * FROM (VALUES
-    (9000001, NULL,                              CAST(7 AS BIGINT),
-     'click', CAST(1.5 AS DOUBLE), '{{"plan": "a", "n": 1}}'),
-    (9000002, TIMESTAMP '2024-01-02 03:04:05',   NULL,
-     'view',  CAST(2.0 AS DOUBLE), NULL),
-    (9000003, TIMESTAMP '2024-01-02 03:04:06',   CAST(7 AS BIGINT),
-     NULL,    NULL,                '{{"plan": "b", "n": 2}}'),
-    (9000004, NULL, NULL, NULL, NULL, NULL)
-  ) t(event_id, ts, user_id, event_type, value, props)
-) TO '{d / "events.parquet"}' (FORMAT PARQUET)
-"""
-    )
+    null_sweep_all.build_events(str(d))
     return str(d)
 
 

@@ -14,11 +14,8 @@ oracle references a sales table must be swept or excluded by name.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
@@ -32,7 +29,11 @@ from end_to_end_sales_etl_de_project_spark.testing import (
     run_oracle,
 )
 
-SALES_TABLES = ["lineitem", "orders", "customer", "supplier", "part", "nation", "region"]
+# The mutation masks come from scripts/null_sweep_all.py's builder
+# (single source of the fixture text so the script and the suite
+# cannot drift).
+from scripts import null_sweep_all
+from scripts.null_sweep_all import SALES_TABLES
 
 # In-window sales-readers deliberately OUTSIDE the parity sweep, each
 # with a documented reason (and a dedicated pin if behavior-bearing).
@@ -50,55 +51,14 @@ WINDOW_SALES_QUERIES = sorted(
     if n in ORACLES and _READER_PAT.search(ORACLES[n]) and n not in SWEEP_EXCLUSIONS
 )
 
-# per-table NULL masks: (column, modulus) — key % modulus == 0 nulls
-# the column for that row; moduli are distinct primes so the NULL
-# patterns overlap but never coincide entirely
-_MUTATIONS = {
-    "lineitem": (
-        "l_orderkey",
-        [
-            ("l_quantity", 97),
-            ("l_extendedprice", 89),
-            ("l_discount", 83),
-            ("l_returnflag", 79),
-            ("l_linestatus", 73),
-            ("l_shipdate", 71),
-            ("l_tax", 67),
-        ],
-    ),
-    "orders": (
-        "o_orderkey",
-        [
-            ("o_totalprice", 97),
-            ("o_orderdate", 89),
-            ("o_orderpriority", 83),
-            ("o_orderstatus", 79),
-        ],
-    ),
-    "supplier": ("s_suppkey", [("s_name", 7), ("s_nationkey", 11), ("s_acctbal", 5)]),
-    "nation": ("n_nationkey", [("n_name", 5)]),
-    "region": ("r_regionkey", [("r_name", 3)]),
-}
-
-
 @pytest.fixture(scope="module")
 def null_sales_dir(sf_dir, tmp_path_factory):
+    """A full sf-dir clone with NULLs planted by ``null_sweep_all``'s
+    per-table ``key % prime`` masks (distinct primes, so the NULL
+    patterns overlap but never coincide entirely)."""
+    assert null_sweep_all.SF == sf_dir
     d = tmp_path_factory.mktemp("null-sales")
-    mutated = set(_MUTATIONS)
-    for name in os.listdir(sf_dir):
-        if name.removesuffix(".parquet") not in mutated:
-            shutil.copy(os.path.join(sf_dir, name), d / name)
-    con = duckdb.connect()
-    for table, (key, masks) in _MUTATIONS.items():
-        replaces = ", ".join(
-            f"CASE WHEN {key} % {mod} = 0 THEN NULL ELSE {col} END AS {col}"
-            for col, mod in masks
-        )
-        con.execute(
-            f"COPY (SELECT * REPLACE ({replaces}) "
-            f"FROM read_parquet('{sf_dir}/{table}.parquet')) "
-            f"TO '{d / (table + '.parquet')}' (FORMAT PARQUET)"
-        )
+    null_sweep_all.build_sales(str(d))
     return str(d)
 
 

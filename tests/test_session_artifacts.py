@@ -3,9 +3,11 @@ the package is taken by ``checkpoints.eager_checkpoint``, the only
 cross-call memo is the session-artifact memo in ``sources/tables.py``
 (``session_artifact``), and the artifacts are built only by the
 ``plans/documents.py`` builders — operators read the artifacts they are
-handed and never rebuild them. A new hand-rolled memo dict, a direct
-``localCheckpoint`` call or an operator fallback that rebuilds an
-artifact fails here instead of drifting in."""
+handed and never rebuild them. Every ANN top-k path ranks its
+candidates through the one exact kernel, ``similarity._top_k_exact``.
+A new hand-rolled memo dict, a direct ``localCheckpoint`` call, an
+operator fallback that rebuilds an artifact or a second copy of the
+cosine ranking fails here instead of drifting in."""
 
 from __future__ import annotations
 
@@ -96,3 +98,16 @@ def test_one_shingle_index_format():
         if word in p.read_text()
     ]
     assert not offenders, offenders
+
+
+def test_one_cosine_ranking_window():
+    """The (cosine desc, neighbor_id) ranking window is written once, in
+    ``similarity._top_k_exact``; brute force, LSH, multiprobe, IVF, the
+    PQ rerank and the a21 legs all call it."""
+    pat = re.compile(r'\.orderBy\(\s*F\.col\("cosine"\)\.desc\(\)')
+    found = [
+        p.relative_to(PKG).as_posix()
+        for p in _modules()
+        for _ in pat.finditer(p.read_text())
+    ]
+    assert found == ["operators/similarity.py"], found
