@@ -108,14 +108,12 @@ def contamination_report(sh_base: DataFrame) -> DataFrame:
     )
 
 
-def contamination_report_sql(
-    id_col: str = "doc_id", text_col: str = "text", k: int = 5, table: str = "documents"
-) -> str:
-    sh = word_shingles_sql(text_col, k)
-    split = corpus_split_sql(text_col)
+def contamination_report_sql() -> str:
+    sh = word_shingles_sql("text", CONTAMINATION_K)
+    split = corpus_split_sql("text")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc, {split} AS split, {sh} AS sh FROM {table}
+  SELECT doc_id AS doc, {split} AS split, {sh} AS sh FROM documents
 ),
 tests AS (SELECT doc, len(sh) AS n_shingles FROM base WHERE split = 'test'),
 test_sh AS (
@@ -130,7 +128,7 @@ hits AS (
   SELECT doc, COUNT(*) AS n_contaminated
   FROM test_sh JOIN train_set USING (h) GROUP BY 1
 )
-SELECT t.doc AS {id_col},
+SELECT t.doc AS doc_id,
        CAST(t.n_shingles AS BIGINT) AS n_shingles,
        CAST(COALESCE(h.n_contaminated, 0) AS BIGINT) AS n_contaminated,
        COALESCE(h.n_contaminated, 0) > 0 AS is_contaminated
@@ -206,15 +204,13 @@ def contamination_spans(toks_base: DataFrame) -> DataFrame:
     )
 
 
-def contamination_spans_sql(
-    id_col: str = "doc_id", text_col: str = "text", k: int = 5, table: str = "documents"
-) -> str:
-    split = corpus_split_sql(text_col)
-    pos_sh = positional_shingles_sql_from_toks("toks", k)
+def contamination_spans_sql() -> str:
+    split = corpus_split_sql("text")
+    pos_sh = positional_shingles_sql_from_toks("toks", CONTAMINATION_K)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc, {split} AS split, {tokens_sql(text_col)} AS toks
-  FROM {table}
+  SELECT doc_id AS doc, {split} AS split, {tokens_sql('text')} AS toks
+  FROM documents
 ),
 test AS (SELECT doc, toks FROM base WHERE split = 'test'),
 test_sh AS (SELECT doc, {pos_sh} AS shl FROM test),
@@ -244,9 +240,9 @@ per_doc AS (
   FROM per_run GROUP BY 1
 ),
 tests AS (
-  SELECT doc, greatest(len(toks) - {k - 1}, 0) AS n_windows FROM test
+  SELECT doc, greatest(len(toks) - {CONTAMINATION_K - 1}, 0) AS n_windows FROM test
 )
-SELECT t.doc AS {id_col},
+SELECT t.doc AS doc_id,
        CAST(t.n_windows AS BIGINT) AS n_windows,
        CAST(COALESCE(p.n_contaminated_pos, 0) AS BIGINT) AS n_contaminated_pos,
        CAST(COALESCE(p.n_runs, 0) AS BIGINT) AS n_runs,
@@ -301,17 +297,15 @@ def tfidf_top_terms(
     )
 
 
-def tfidf_top_terms_sql(
-    id_col: str = "doc_id", text_col: str = "text", top_n: int = 3, table: str = "documents"
-) -> str:
-    toks = tokens_sql(text_col)
+def tfidf_top_terms_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH tok AS (
-  SELECT {id_col} AS doc, unnest({toks}) AS token FROM {table}
+  SELECT doc_id AS doc, unnest({toks}) AS token FROM documents
 ),
 tf AS (SELECT doc, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-n AS (SELECT COUNT(*) AS n_docs FROM {table}),
+n AS (SELECT COUNT(*) AS n_docs FROM documents),
 scored AS (
   SELECT doc, token, tf, df,
          CAST(tf AS DOUBLE) * (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) AS score
@@ -322,9 +316,9 @@ ranked AS (
          ROW_NUMBER() OVER (PARTITION BY doc ORDER BY score DESC, token ASC) AS rank
   FROM scored
 )
-SELECT doc AS {id_col}, CAST(rank AS INTEGER) AS rank, token,
+SELECT doc AS doc_id, CAST(rank AS INTEGER) AS rank, token,
        CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, score
-FROM ranked WHERE rank <= {top_n}
+FROM ranked WHERE rank <= 3
 """
 
 
@@ -483,21 +477,15 @@ def training_manifest(kept: DataFrame) -> DataFrame:
     )
 
 
-def training_manifest_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 2048,
-    k: int = 5,
-    table: str = "documents",
-) -> str:
-    cur = curate_corpus_sql(id_col, text_col, table)
-    sh = word_shingles_sql("text", k)
+def training_manifest_sql() -> str:
+    cur = curate_corpus_sql()
+    sh = word_shingles_sql("text", CONTAMINATION_K)
     toks = tokens_sql("text")
     return f"""
 WITH cur AS (SELECT * FROM ({cur}) c0),
 kept AS (
-  SELECT c.{id_col} AS doc, c.split, d.{text_col} AS text
-  FROM cur c JOIN {table} d ON c.{id_col} = d.{id_col}
+  SELECT c.doc_id AS doc, c.split, d.text AS text
+  FROM cur c JOIN documents d ON c.doc_id = d.doc_id
   WHERE c.stage = 'kept'
 ),
 sh AS (
@@ -521,8 +509,8 @@ packed AS (
                   0) AS cum_before
   FROM sized
 )
-SELECT p.doc AS {id_col}, p.split, p.n_tokens,
-       CASE WHEN p.split = 'train' THEN CAST(p.cum_before // {budget} AS BIGINT)
+SELECT p.doc AS doc_id, p.split, p.n_tokens,
+       CASE WHEN p.split = 'train' THEN CAST(p.cum_before // 2048 AS BIGINT)
             ELSE NULL END AS bin_id,
        CASE WHEN p.split = 'test' THEN COALESCE(c.is_contaminated, FALSE)
             ELSE NULL END AS is_contaminated
@@ -579,16 +567,11 @@ def token_rarity(
     )
 
 
-def token_rarity_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    rare_max: int = 2,
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
+def token_rarity_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH tok AS (
-  SELECT {id_col} AS doc, unnest({toks}) AS token FROM {table}
+  SELECT doc_id AS doc, unnest({toks}) AS token FROM documents
 ),
 freq AS (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS freq FROM tok GROUP BY token
@@ -597,11 +580,11 @@ rolled AS (
   SELECT doc,
          CAST(COUNT(*) AS BIGINT) AS n_tokens,
          CAST(SUM(freq) AS BIGINT) AS freq_sum,
-         CAST(SUM(CASE WHEN freq <= {rare_max} THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
+         CAST(SUM(CASE WHEN freq <= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
   FROM tok JOIN freq USING (token)
   GROUP BY doc
 )
-SELECT doc AS {id_col}, n_tokens, freq_sum,
+SELECT doc AS doc_id, n_tokens, freq_sum,
        CAST(freq_sum AS DOUBLE) / n_tokens AS avg_token_freq,
        n_rare,
        CAST(n_rare AS DOUBLE) / n_tokens AS rare_ratio
@@ -653,22 +636,15 @@ def boilerplate_ngrams(
     )
 
 
-def boilerplate_ngrams_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    top: int = 5,
-    min_df: int = 2,
-    table: str = "documents",
-) -> str:
-    sh = word_shingles_sql(text_col, k)
+def boilerplate_ngrams_sql() -> str:
+    sh = word_shingles_sql("text", 3)
     return f"""
 WITH sh AS (
-  SELECT DISTINCT {id_col} AS doc, source, unnest({sh}) AS shingle FROM {table}
+  SELECT DISTINCT doc_id AS doc, source, unnest({sh}) AS shingle FROM documents
 ),
 counts AS (
   SELECT source, shingle, CAST(COUNT(*) AS BIGINT) AS df
-  FROM sh GROUP BY 1, 2 HAVING COUNT(*) >= {min_df}
+  FROM sh GROUP BY 1, 2 HAVING COUNT(*) >= 2
 ),
 ranked AS (
   SELECT source, shingle, df,
@@ -677,7 +653,7 @@ ranked AS (
   FROM counts
 )
 SELECT source, CAST(rank_in_source AS BIGINT) AS rank_in_source, shingle, df
-FROM ranked WHERE rank_in_source <= {top}
+FROM ranked WHERE rank_in_source <= 5
 """
 
 
@@ -727,17 +703,15 @@ def dataset_mix_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def dataset_mix_report_sql(
-    id_col: str = "doc_id", text_col: str = "text", table: str = "documents"
-) -> str:
-    split = corpus_split_sql(text_col)
-    tc = token_count_sql(text_col)
+def dataset_mix_report_sql() -> str:
+    split = corpus_split_sql("text")
+    tc = token_count_sql("text")
     return f"""
 WITH per AS (
   SELECT {split} AS split, source, lang,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM({tc}) AS BIGINT) AS n_tokens
-  FROM {table}
+  FROM documents
   GROUP BY 1, 2, 3
 )
 SELECT split, source, lang, n_docs, n_tokens,
@@ -749,17 +723,15 @@ FROM per
 """
 
 
-def curate_corpus_sql(
-    id_col: str = "doc_id", text_col: str = "text", table: str = "documents"
-) -> str:
-    qb = quality_bucket_sql(text_col)
-    th = h60_sql(text_col)
+def curate_corpus_sql() -> str:
+    qb = quality_bucket_sql("text")
+    th = h60_sql("text")
     pairs_sql = dedup.minhash_lsh_pairs_sql("doc", "text", table="surv")
     comp_sql = dedup.neardup_components_sql(pairs_sql, "doc", table="surv")
-    split = corpus_split_sql(f"d.{text_col}")
+    split = corpus_split_sql("d.text")
     return f"""
 WITH ok AS (
-  SELECT {id_col} AS doc, {text_col} AS text FROM {table} WHERE ({qb}) = 'ok'
+  SELECT doc_id AS doc, text AS text FROM documents WHERE ({qb}) = 'ok'
 ),
 canon AS (
   SELECT {h60_sql('text')} AS th, MIN(doc) AS canon_doc FROM ok GROUP BY 1
@@ -770,17 +742,17 @@ ex AS (
 ),
 surv AS (SELECT doc, text FROM ex WHERE doc = canon_doc),
 comp AS (SELECT * FROM ({comp_sql}) z)
-SELECT d.{id_col},
+SELECT d.doc_id,
        CASE WHEN e.canon_doc IS NULL THEN 'dropped_quality'
-            WHEN d.{id_col} <> e.canon_doc THEN 'dropped_exact_dup'
+            WHEN d.doc_id <> e.canon_doc THEN 'dropped_exact_dup'
             WHEN NOT comp.is_canonical THEN 'dropped_near_dup'
             ELSE 'kept' END AS stage,
-       CASE WHEN e.canon_doc IS NOT NULL AND d.{id_col} = e.canon_doc
+       CASE WHEN e.canon_doc IS NOT NULL AND d.doc_id = e.canon_doc
                  AND comp.is_canonical
             THEN {split} ELSE NULL END AS split
-FROM {table} d
-LEFT JOIN ex e ON d.{id_col} = e.doc
-LEFT JOIN comp ON d.{id_col} = comp.doc_id
+FROM documents d
+LEFT JOIN ex e ON d.doc_id = e.doc
+LEFT JOIN comp ON d.doc_id = comp.doc_id
 """
 
 
@@ -853,21 +825,15 @@ def weighted_source_sample(
     )
 
 
-def weighted_source_sample_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    target_frac: float = 0.5,
-    salt: str = "mix-v1",
-    table: str = "documents",
-) -> str:
-    tc = token_count_sql(text_col)
-    h = h60_sql(f"'{salt}' || CAST(d.{id_col} AS VARCHAR)")
+def weighted_source_sample_sql() -> str:
+    tc = token_count_sql("text")
+    h = h60_sql("'mix-v1' || CAST(d.doc_id AS VARCHAR)")
     return f"""
 WITH per AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM({tc}) AS BIGINT) AS n_tokens
-  FROM {table} GROUP BY 1
+  FROM documents GROUP BY 1
 ),
 rates AS (
   SELECT source,
@@ -875,13 +841,13 @@ rates AS (
               THEN LEAST(1.0,
                 CAST(CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS DOUBLE)
                   / SUM(CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE))) AS BIGINT)) OVER ()
-                  * (SUM(n_docs) OVER () * {target_frac})
+                  * (SUM(n_docs) OVER () * 0.5)
                   / n_docs)
          END AS keep_rate
   FROM per
 )
-SELECT d.{id_col}, d.source, r.keep_rate
-FROM {table} d JOIN rates r ON d.source = r.source
+SELECT d.doc_id, d.source, r.keep_rate
+FROM documents d JOIN rates r ON d.source = r.source
 WHERE ({h}) % 1000000 < CAST(FLOOR(r.keep_rate * 1000000.0) AS BIGINT)
 """
 
@@ -930,21 +896,15 @@ def training_shards(
     )
 
 
-def training_shards_sql(
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-    shard_salt: str = "shard-v1",
-    order_salt: str = "order-v1",
-    table: str = "documents",
-) -> str:
-    sh = h60_sql(f"'{shard_salt}' || CAST({id_col} AS VARCHAR)")
-    ok = h60_sql(f"'{order_salt}' || CAST({id_col} AS VARCHAR)")
+def training_shards_sql() -> str:
+    sh = h60_sql("'shard-v1' || CAST(doc_id AS VARCHAR)")
+    ok = h60_sql("'order-v1' || CAST(doc_id AS VARCHAR)")
     return f"""
 WITH sel AS (
-  SELECT {id_col}, ({sh}) % {n_shards} AS shard, {ok} AS ok FROM {table}
+  SELECT doc_id, ({sh}) % 8 AS shard, {ok} AS ok FROM documents
 )
-SELECT {id_col}, shard,
-       CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY ok, {id_col}) - 1
+SELECT doc_id, shard,
+       CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY ok, doc_id) - 1
             AS BIGINT) AS position
 FROM sel
 """
@@ -1011,12 +971,10 @@ def curriculum_phases(docs: DataFrame) -> DataFrame:
     )
 
 
-def curriculum_phases_sql(
-    id_col: str = "doc_id", text_col: str = "text", table: str = "documents"
-) -> str:
-    wc = word_count_sql(text_col)
+def curriculum_phases_sql() -> str:
+    wc = word_count_sql("text")
     return f"""
-WITH sized AS (SELECT {id_col}, {wc} AS n_words FROM {table}),
+WITH sized AS (SELECT doc_id, {wc} AS n_words FROM documents),
 hist AS (
   SELECT n_words AS v, COUNT(*) AS cnt FROM sized
   WHERE n_words IS NOT NULL GROUP BY 1),
@@ -1030,7 +988,7 @@ cuts AS (
     MIN(CASE WHEN cum >= CAST(CEIL(0.75 * n) AS BIGINT) THEN v END) AS c75
   FROM cum
 )
-SELECT {id_col}, CAST(n_words AS BIGINT) AS n_words,
+SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
        CASE WHEN n_words IS NOT NULL THEN
          CAST(1 + (CASE WHEN n_words > c25 THEN 1 ELSE 0 END)
                 + (CASE WHEN n_words > c50 THEN 1 ELSE 0 END)
@@ -1171,29 +1129,22 @@ def dsir_importance(
     )
 
 
-def dsir_importance_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    target_col: str = "lang",
-    target_value: str = "en",
-    n_buckets: int = 4096,
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
+def dsir_importance_sql() -> str:
+    toks = tokens_sql("text")
     bg = h60_sql("(w1 || ' ' || w2)")
     return f"""
 WITH toked AS (
-  SELECT {id_col} AS doc,
-         CASE WHEN {target_col} = '{target_value}' THEN 1 ELSE 0 END AS tgt,
+  SELECT doc_id AS doc,
+         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS tgt,
          {toks} AS toks
-  FROM {table}
+  FROM documents
 ),
 pairs AS (
   SELECT doc, tgt, CAST(i AS BIGINT) AS pos, toks[i] AS w1, toks[i + 1] AS w2
   FROM toked, UNNEST(range(1, len(toks))) AS t(i)
 ),
 feats AS (
-  SELECT doc, tgt, pos, {bg} % {n_buckets} AS bucket FROM pairs
+  SELECT doc, tgt, pos, {bg} % 4096 AS bucket FROM pairs
 ),
 counts AS (
   SELECT bucket,
@@ -1207,8 +1158,8 @@ tot AS (
 ),
 scored AS (
   SELECT f.doc, f.pos,
-         (CAST(c.ct + 1 AS DOUBLE) / CAST(tot.t_total + {n_buckets} AS DOUBLE))
-           / (CAST(c.cs + 1 AS DOUBLE) / CAST(tot.s_total + {n_buckets} AS DOUBLE))
+         (CAST(c.ct + 1 AS DOUBLE) / CAST(tot.t_total + 4096 AS DOUBLE))
+           / (CAST(c.cs + 1 AS DOUBLE) / CAST(tot.s_total + 4096 AS DOUBLE))
            AS ratio
   FROM feats f JOIN counts c USING (bucket), tot
 ),
@@ -1218,13 +1169,13 @@ agg AS (
                      (acc, x) -> acc + x) AS sum_ratio
   FROM scored GROUP BY 1
 )
-SELECT d.{id_col} AS doc_id,
-       CAST(CASE WHEN d.{target_col} = '{target_value}' THEN 1 ELSE 0 END AS BIGINT)
+SELECT d.doc_id AS doc_id,
+       CAST(CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS BIGINT)
          AS is_target,
        COALESCE(a.n_features, 0) AS n_features,
        COALESCE(a.sum_ratio, 0.0) AS sum_ratio,
        COALESCE(a.sum_ratio / a.n_features, 0.0) AS avg_ratio
-FROM {table} d LEFT JOIN agg a ON d.{id_col} = a.doc
+FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc
 """
 
 
@@ -1295,19 +1246,14 @@ def mixture_weights_from_totals(per_source: DataFrame) -> DataFrame:
     )
 
 
-def domain_mixture_sql(
-    source_col: str = "source",
-    text_col: str = "text",
-    table: str = "documents",
-    cap: float = MIXTURE_WEIGHT_CAP,
-) -> str:
-    toks = f"COALESCE({token_count_sql(text_col)}, 0)"
+def domain_mixture_sql() -> str:
+    toks = f"COALESCE({token_count_sql('text')}, 0)"
     return f"""
 WITH per_source AS (
-  SELECT {source_col} AS source,
+  SELECT source AS source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM({toks}) AS BIGINT) AS n_tokens
-  FROM {table} GROUP BY 1
+  FROM documents GROUP BY 1
 ),
 totals AS (
   SELECT CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
@@ -1316,8 +1262,8 @@ totals AS (
 )
 SELECT source, n_docs, n_tokens,
        CAST(n_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE) AS token_share,
-       CASE WHEN n_tokens = 0 THEN {float(cap)}
-            ELSE LEAST({float(cap)},
+       CASE WHEN n_tokens = 0 THEN {float(MIXTURE_WEIGHT_CAP)}
+            ELSE LEAST({float(MIXTURE_WEIGHT_CAP)},
                        (1.0 / CAST(n_sources AS DOUBLE))
                        / (CAST(n_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE)))
        END AS mix_weight
@@ -1384,23 +1330,17 @@ def diversity_sample(
     ).filter(F.col("bucket_rank") <= DIVERSITY_CAP)
 
 
-def diversity_sample_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-    bucket_bits: int = DIVERSITY_BUCKET_BITS,
-    cap: int = DIVERSITY_CAP,
-) -> str:
-    shift = dedup.SIMHASH_BITS - bucket_bits
+def diversity_sample_sql() -> str:
+    shift = dedup.SIMHASH_BITS - DIVERSITY_BUCKET_BITS
     return f"""
-WITH fp AS ({dedup.simhash_sql(id_col, text_col, table)}),
+WITH fp AS ({dedup.simhash_sql('doc_id', 'text')}),
 bucketed AS (
   SELECT doc_id, CAST(simhash >> {shift} AS BIGINT) AS bucket FROM fp
 ),
 scored AS (
-  SELECT {id_col} AS doc_id,
-         {composite_quality_sql(text_col)} AS quality_score
-  FROM {table}
+  SELECT doc_id AS doc_id,
+         {composite_quality_sql('text')} AS quality_score
+  FROM documents
 ),
 ranked AS (
   SELECT b.doc_id, b.bucket, s.quality_score,
@@ -1413,7 +1353,7 @@ ranked AS (
 )
 SELECT doc_id, bucket, quality_score,
        CAST(bucket_rank AS BIGINT) AS bucket_rank, bucket_size
-FROM ranked WHERE bucket_rank <= {cap}
+FROM ranked WHERE bucket_rank <= {DIVERSITY_CAP}
 """
 
 
@@ -1521,22 +1461,16 @@ def corpus_datasheet(
     )
 
 
-def corpus_datasheet_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-    table: str = "documents",
-) -> str:
-    toks = f"COALESCE({token_count_sql(text_col)}, 0)"
-    th = h60_sql(text_col)
+def corpus_datasheet_sql() -> str:
+    toks = f"COALESCE({token_count_sql('text')}, 0)"
+    th = h60_sql("text")
     return f"""
 WITH base AS (
-  SELECT {source_col} AS source, {lang_col} AS lang,
+  SELECT source AS source, lang AS lang,
          {toks} AS toks,
-         {text_col} IS NULL AS text_is_null,
+         text IS NULL AS text_is_null,
          {th} AS th
-  FROM {table}
+  FROM documents
 ),
 per_source AS (
   SELECT source,
@@ -1676,24 +1610,17 @@ def corpus_delta(
     )
 
 
-def corpus_delta_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    old_pct: int = 80,
-    salt: str = "snapshot-v1",
-    table: str = "documents",
-) -> str:
-    toks = f"COALESCE({token_count_sql(text_col)}, 0)"
-    salted = f"'{salt}' || CAST({id_col} AS VARCHAR)"
-    th = h60_sql(text_col)
+def corpus_delta_sql() -> str:
+    toks = f"COALESCE({token_count_sql('text')}, 0)"
+    salted = f"'{SNAPSHOT_SALT}' || CAST(doc_id AS VARCHAR)"
+    th = h60_sql("text")
     return f"""
 WITH base AS (
-  SELECT {source_col} AS source,
+  SELECT source AS source,
          {toks} AS toks,
          {th} AS th,
-         ({h60_sql(salted)}) % 100 < {old_pct} AS is_old
-  FROM {table}
+         ({h60_sql(salted)}) % 100 < {OLD_PCT} AS is_old
+  FROM documents
 ),
 per_side AS (
   SELECT source,
@@ -1790,22 +1717,15 @@ def length_drift(
     )
 
 
-def length_drift_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    old_pct: int = 80,
-    salt: str = "snapshot-v1",
-    table: str = "documents",
-) -> str:
-    toks = f"COALESCE({token_count_sql(text_col)}, 0)"
-    salted = f"'{salt}' || CAST({id_col} AS VARCHAR)"
+def length_drift_sql() -> str:
+    toks = f"COALESCE({token_count_sql('text')}, 0)"
+    salted = f"'{SNAPSHOT_SALT}' || CAST(doc_id AS VARCHAR)"
     return f"""
 WITH base AS (
-  SELECT {source_col} AS source,
+  SELECT source AS source,
          {toks} AS toks,
-         ({h60_sql(salted)}) % 100 < {old_pct} AS is_old
-  FROM {table}
+         ({h60_sql(salted)}) % 100 < {OLD_PCT} AS is_old
+  FROM documents
 ),
 hist AS (
   SELECT source, toks,

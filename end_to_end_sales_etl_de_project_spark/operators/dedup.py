@@ -31,7 +31,7 @@ from __future__ import annotations
 import math
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from end_to_end_sales_etl_de_project_spark.functions.hashing import (
@@ -77,12 +77,12 @@ def exact_dedup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
     )
 
 
-def exact_dedup_groups_sql(id_col: str, text_col: str, table: str = "documents") -> str:
+def exact_dedup_groups_sql(id_col: str, text_col: str) -> str:
     return f"""
 SELECT {h60_sql(text_col)} AS text_hash,
        MIN({id_col}) AS canonical_id,
        CAST(COUNT(*) AS BIGINT) AS n_copies
-FROM {table}
+FROM documents
 GROUP BY 1
 """
 
@@ -209,15 +209,13 @@ def jaccard_pairs(
     )
 
 
-def ngram_jaccard_pairs_sql(
-    id_col: str,
-    text_col: str,
-    k: int,
-    min_jaccard: float,
-    table: str = "documents",
-    max_df: int | None = None,
+def _shared_shingle_counts_sql(
+    id_col: str, text_col: str, k: int, max_df: int | None
 ) -> str:
-    sh = word_shingles_sql(text_col, k)
+    """The WITH block of the all-pairs shingle oracles (d02 Jaccard,
+    d16 containment): ``sizes`` per doc and ``inter``, the shared-shingle
+    count per doc pair, over the universe capped at ``max_df`` docs per
+    shingle when a cap is given (:func:`df_capped`)."""
     df_cap = (
         f"""
 shk AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
@@ -229,14 +227,20 @@ sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),"""
     )
     return f"""
 WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
+  SELECT {id_col} AS doc, unnest({word_shingles_sql(text_col, k)}) AS shingle FROM documents
 ),{df_cap}
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
 inter AS (
   SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc < b.doc
   GROUP BY 1, 2
-)
+)"""
+
+
+def ngram_jaccard_pairs_sql(
+    id_col: str, text_col: str, k: int, min_jaccard: float, max_df: int | None = None
+) -> str:
+    return _shared_shingle_counts_sql(id_col, text_col, k, max_df) + f"""
 SELECT doc_a, doc_b,
        n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
 FROM inter
@@ -301,23 +305,34 @@ def _pruned_buckets(
     return buckets.join(F.broadcast(hot), ["band", "key"], "left_anti")
 
 
+def band_keys(members: list[Column], n_bands: int) -> Column:
+    """The LSH band-key array of one signature: a (band, key) struct per
+    band, the key its ``rows_per_band`` consecutive ``members`` joined by
+    ``_``. The batch banding (over signature columns) and the streaming
+    probe (over per-row minhash folds) both build their keys here, so a
+    probe key equals the corpus key of the same signature."""
+    rows_per_band = len(members) // n_bands
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "_", *members[b * rows_per_band : (b + 1) * rows_per_band]
+                ).alias("key"),
+            )
+            for b in range(n_bands)
+        ]
+    )
+
+
 def _band_bucket_rows(
     signatures: DataFrame, n_bands: int, rows_per_band: int
 ) -> DataFrame:
     """(doc, band, key) rows from an mh0..mhN signature table — the LSH
     bucket membership shared by the self-join (dedup) and cross-join
     (decontamination) candidate generators."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    members = [F.col(f"mh{s}") for s in range(n_bands * rows_per_band)]
+    bands = band_keys(members, n_bands)
     return signatures.select("doc", F.explode(bands).alias("bk")).select(
         "doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
@@ -382,33 +397,43 @@ def minhash_lsh_pairs(
     return jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
 
 
-def minhash_lsh_pairs_sql(
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
-    rows_per_band = n_hashes // n_bands
-    sh = word_shingles_sql(text_col, k)
-    # `sh` below carries the 60-bit md5 of each shingle (column still
-    # named shingle): hashed ONCE, shared by the signature aggregation
-    # and the verify self-join — mirroring the Spark side, where both
-    # minhash_signatures and jaccard_pairs key on h60(shingle)
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
+def _shingle_ctes_sql(id_col: str, text_col: str, table: str, k: int) -> str:
+    """The shingle CTEs of the MinHash-LSH oracles: ``sh0`` holds each
+    doc's k-word shingles, ``sh`` their 60-bit md5 (column still named
+    shingle) — hashed ONCE, shared by the signature aggregation and the
+    verify self-join, mirroring the Spark side, where both
+    minhash_signatures and jaccard_pairs key on h60(shingle)."""
+    return f"""sh0 AS (
+  SELECT {id_col} AS doc, unnest({word_shingles_sql(text_col, k)}) AS shingle FROM {table}
+),
+sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0)"""
+
+
+def _sigs_cte_sql() -> str:
+    """``sigs``: one row per doc of ``sh`` with its ``N_HASHES`` MinHash
+    columns mh0..mh15 (:func:`minhash_signatures`)."""
+    cols = ", ".join(
+        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(N_HASHES)
     )
-    band_rows = " UNION ALL ".join(
+    return f"sigs AS (SELECT doc, {cols} FROM sh GROUP BY doc)"
+
+
+def _band_rows_sql(n_bands: int) -> str:
+    """(doc, band, key) rows of ``sigs`` cut into ``n_bands`` bands — the
+    SQL form of :func:`band_keys`."""
+    rows_per_band = N_HASHES // n_bands
+    return " UNION ALL ".join(
         f"SELECT doc, {b} AS band, "
         + " || '_' || ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
         + " AS key FROM sigs"
         for b in range(n_bands)
     )
-    if max_bucket_size is not None:
-        guard = f"""
+
+
+def _bucket_guard_sql(max_bucket_size: int) -> str:
+    """``pruned``: the ``buckets`` rows whose (band, key) bucket holds at
+    most ``max_bucket_size`` docs (:func:`_pruned_buckets`)."""
+    return f"""
 bucket_sizes AS (
   SELECT band, key, COUNT(*) AS n FROM buckets GROUP BY 1, 2
 ),
@@ -417,17 +442,22 @@ pruned AS (
   FROM buckets bu JOIN bucket_sizes bs ON bu.band = bs.band AND bu.key = bs.key
   WHERE bs.n <= {max_bucket_size}
 ),"""
-        cand_src = "pruned"
+
+
+def minhash_lsh_pairs_sql(
+    id_col: str,
+    text_col: str,
+    table: str = "documents",
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
+) -> str:
+    if max_bucket_size is None:
+        guard, cand_src = "", "buckets"
     else:
-        guard = ""
-        cand_src = "buckets"
+        guard, cand_src = _bucket_guard_sql(max_bucket_size), "pruned"
     return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc),
-buckets AS ({band_rows}),{guard}
+WITH {_shingle_ctes_sql(id_col, text_col, table, 3)},
+{_sigs_cte_sql()},
+buckets AS ({_band_rows_sql(N_BANDS)}),{guard}
 cands AS (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
   FROM {cand_src} a JOIN {cand_src} b
@@ -445,7 +475,7 @@ FROM inter i
 JOIN cands c ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
 JOIN sizes sa ON i.doc_a = sa.doc
 JOIN sizes sb ON i.doc_b = sb.doc
-WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
+WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {MIN_JACCARD}
 """
 
 
@@ -497,55 +527,17 @@ def fuzzy_decontaminate(
     )
 
 
-def fuzzy_decontaminate_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
-    rows_per_band = n_hashes // n_bands
-    sh = word_shingles_sql(text_col, k)
-    split = corpus_split_sql(text_col)
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc, {b} AS band, "
-        + " || '_' || ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-        + " AS key FROM sigs"
-        for b in range(n_bands)
-    )
-    if max_bucket_size is not None:
-        guard = f"""
-bucket_sizes AS (
-  SELECT band, key, COUNT(*) AS n FROM buckets GROUP BY 1, 2
-),
-pruned AS (
-  SELECT bu.doc, bu.band, bu.key
-  FROM buckets bu JOIN bucket_sizes bs ON bu.band = bs.band AND bu.key = bs.key
-  WHERE bs.n <= {max_bucket_size}
-),"""
-        cand_src = "pruned"
-    else:
-        guard = ""
-        cand_src = "buckets"
+def fuzzy_decontaminate_sql() -> str:
     return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-splits AS (SELECT {id_col} AS doc, {split} AS split FROM {table}),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc),
-buckets AS ({band_rows}),{guard}
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
+splits AS (SELECT doc_id AS doc, {corpus_split_sql('text')} AS split FROM documents),
+{_sigs_cte_sql()},
+buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
 cands AS (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM {cand_src} a
+  FROM pruned a
   JOIN splits sa ON a.doc = sa.doc AND sa.split = 'test'
-  JOIN {cand_src} b ON a.band = b.band AND a.key = b.key
+  JOIN pruned b ON a.band = b.band AND a.key = b.key
   JOIN splits sb ON b.doc = sb.doc AND sb.split = 'train'
 ),
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
@@ -561,7 +553,7 @@ SELECT i.doc_a AS test_doc, i.doc_b AS train_doc,
 FROM inter i
 JOIN sizes sa ON i.doc_a = sa.doc
 JOIN sizes sb ON i.doc_b = sb.doc
-WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
+WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {MIN_JACCARD}
 """
 
 
@@ -775,7 +767,7 @@ def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return per_doc.select(F.col("doc").alias("doc_id"), fingerprint.alias("simhash"))
 
 
-def simhash_sql(id_col: str, text_col: str, table: str = "documents") -> str:
+def simhash_sql(id_col: str, text_col: str) -> str:
     votes = ", ".join(
         f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(SIMHASH_BITS)
@@ -787,7 +779,7 @@ def simhash_sql(id_col: str, text_col: str, table: str = "documents") -> str:
     return f"""
 WITH tok AS (
   SELECT {id_col} AS doc, {h60_sql('token')} AS h
-  FROM (SELECT {id_col}, unnest({tokens_sql(text_col)}) AS token FROM {table})
+  FROM (SELECT {id_col}, unnest({tokens_sql(text_col)}) AS token FROM documents)
 ),
 votes AS (SELECT doc, {votes} FROM tok GROUP BY doc)
 SELECT doc AS doc_id, {fp} AS simhash FROM votes
@@ -854,53 +846,17 @@ def minhash_estimate_audit(
     )
 
 
-def minhash_estimate_audit_sql(
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
-    rows_per_band = n_hashes // n_bands
-    sh = word_shingles_sql(text_col, k)
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc, {b} AS band, "
-        + " || '_' || ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-        + " AS key FROM sigs"
-        for b in range(n_bands)
-    )
-    if max_bucket_size is not None:
-        guard = f"""
-bucket_sizes AS (
-  SELECT band, key, COUNT(*) AS n FROM buckets GROUP BY 1, 2
-),
-pruned AS (
-  SELECT bu.doc, bu.band, bu.key
-  FROM buckets bu JOIN bucket_sizes bs ON bu.band = bs.band AND bu.key = bs.key
-  WHERE bs.n <= {max_bucket_size}
-),"""
-        cand_src = "pruned"
-    else:
-        guard = ""
-        cand_src = "buckets"
+def minhash_estimate_audit_sql(id_col: str, text_col: str) -> str:
     est_expr = " + ".join(
-        f"CASE WHEN ga.mh{s} = gb.mh{s} THEN 1 ELSE 0 END" for s in range(n_hashes)
+        f"CASE WHEN ga.mh{s} = gb.mh{s} THEN 1 ELSE 0 END" for s in range(N_HASHES)
     )
     return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc),
-buckets AS ({band_rows}),{guard}
+WITH {_shingle_ctes_sql(id_col, text_col, 'documents', 3)},
+{_sigs_cte_sql()},
+buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
 cands AS (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM {cand_src} a JOIN {cand_src} b
+  FROM pruned a JOIN pruned b
     ON a.band = b.band AND a.key = b.key AND a.doc < b.doc
 ),
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
@@ -919,9 +875,9 @@ truej AS (
   JOIN sizes sb ON c.doc_b = sb.doc
 )
 SELECT t.doc_a, t.doc_b,
-       CAST({est_expr} AS DOUBLE) / {float(n_hashes)} AS est_jaccard,
+       CAST({est_expr} AS DOUBLE) / {float(N_HASHES)} AS est_jaccard,
        t.jaccard,
-       ABS(CAST({est_expr} AS DOUBLE) / {float(n_hashes)} - t.jaccard) AS abs_err
+       ABS(CAST({est_expr} AS DOUBLE) / {float(N_HASHES)} - t.jaccard) AS abs_err
 FROM truej t
 JOIN sigs ga ON t.doc_a = ga.doc
 JOIN sigs gb ON t.doc_b = gb.doc
@@ -988,24 +944,18 @@ def incremental_dedup(
     )
 
 
-def incremental_dedup_sql(
-    id_col: str,
-    text_col: str,
-    corpus_pct: int = 80,
-    salt: str = "ingest-v1",
-    table: str = "documents",
-) -> str:
+def incremental_dedup_sql(id_col: str, text_col: str) -> str:
     th = h60_sql(text_col)
-    salted = f"'{salt}' || CAST({id_col} AS VARCHAR)"
+    salted = f"'{INGEST_SALT}' || CAST({id_col} AS VARCHAR)"
     b = f"({h60_sql(salted)}) % 100"
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc, {th} AS th, {b} AS b FROM {table}
+  SELECT {id_col} AS doc, {th} AS th, {b} AS b FROM documents
 ),
 corpus_canon AS (
-  SELECT th, MIN(doc) AS corpus_canon FROM base WHERE b < {corpus_pct} GROUP BY 1
+  SELECT th, MIN(doc) AS corpus_canon FROM base WHERE b < {CORPUS_PCT} GROUP BY 1
 ),
-batch AS (SELECT doc, th FROM base WHERE b >= {corpus_pct}),
+batch AS (SELECT doc, th FROM base WHERE b >= {CORPUS_PCT}),
 batch_min AS (SELECT th, MIN(doc) AS batch_min FROM batch GROUP BY 1)
 SELECT bt.doc AS {id_col},
        CASE WHEN cc.corpus_canon IS NOT NULL THEN 'dup_of_corpus'
@@ -1071,29 +1021,9 @@ def containment_pairs_sql(
     text_col: str,
     k: int,
     min_containment: float,
-    table: str = "documents",
     max_df: int | None = None,
 ) -> str:
-    sh = word_shingles_sql(text_col, k)
-    df_cap = (
-        f"""
-shk AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-kept AS (SELECT shingle FROM shk GROUP BY 1 HAVING COUNT(*) <= {max_df}),
-sh AS (SELECT shk.doc, shk.shingle FROM shk JOIN kept USING (shingle)),"""
-        if max_df is not None
-        else f"""
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),"""
-    )
-    return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),{df_cap}
-sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
-inter AS (
-  SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc < b.doc
-  GROUP BY 1, 2
-)
+    return _shared_shingle_counts_sql(id_col, text_col, k, max_df) + f"""
 SELECT doc_a, doc_b,
        CAST(sa.n AS BIGINT) AS n_a,
        CAST(sb.n AS BIGINT) AS n_b,
@@ -1151,15 +1081,9 @@ def shingle_novelty(docs: DataFrame, hashed_shingles: DataFrame) -> DataFrame:
     )
 
 
-def shingle_novelty_sql(
-    id_col: str, text_col: str, k: int = 3, table: str = "documents"
-) -> str:
-    sh = word_shingles_sql(text_col, k)
+def shingle_novelty_sql(id_col: str, text_col: str, k: int = 3) -> str:
     return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
+WITH {_shingle_ctes_sql(id_col, text_col, 'documents', k)},
 first AS (SELECT shingle, MIN(doc) AS first_doc FROM sh GROUP BY 1),
 per AS (
   SELECT sh.doc,
@@ -1172,7 +1096,7 @@ SELECT d.{id_col} AS doc_id,
        COALESCE(per.n_shingles, 0) AS n_shingles,
        COALESCE(per.n_novel, 0) AS n_novel,
        COALESCE(CAST(per.n_novel AS DOUBLE) / per.n_shingles, 0.0) AS novelty
-FROM {table} d LEFT JOIN per ON d.{id_col} = per.doc
+FROM documents d LEFT JOIN per ON d.{id_col} = per.doc
 """
 
 
@@ -1252,15 +1176,7 @@ def substring_dup_groups(
     )
 
 
-def substring_dup_groups_sql(
-    id_col: str,
-    text_col: str,
-    win: int = 32,
-    anchor: int = 8,
-    modulus: int = 4,
-    table: str = "documents",
-    max_len: int = 65536,
-) -> str:
+def substring_dup_groups_sql(id_col: str, text_col: str, max_len: int = 65536) -> str:
     """DuckDB twin. generate_series can't take lateral column bounds
     (same constraint as m05's oracle), so positions come from a fixed
     ceiling well above any testdata doc length and an inequality join
@@ -1271,7 +1187,7 @@ def substring_dup_groups_sql(
     return f"""
 WITH d AS (
   SELECT {id_col} AS doc, {text_col} AS t, LENGTH({text_col}) AS n
-  FROM {table} WHERE LENGTH({text_col}) >= {win}
+  FROM documents WHERE LENGTH({text_col}) >= 32
 ),
 guard AS (
   SELECT CASE WHEN (SELECT COALESCE(MAX(n), 0) FROM d) > {max_len}
@@ -1281,9 +1197,9 @@ guard AS (
 ),
 pos AS (SELECT CAST(i AS INT) AS i FROM generate_series(1, {max_len}) s(i)),
 anch AS (
-  SELECT doc, {h60_sql(f"substr(t, i, {win})")} AS win_hash
-  FROM d JOIN pos ON pos.i <= d.n - {win - 1}
-  WHERE {h60_sql(f"substr(t, i, {anchor})")} % {modulus} = 0
+  SELECT doc, {h60_sql("substr(t, i, 32)")} AS win_hash
+  FROM d JOIN pos ON pos.i <= d.n - 31
+  WHERE {h60_sql("substr(t, i, 8)")} % 4 = 0
     AND (SELECT ok FROM guard) = 1
 )
 SELECT win_hash,
@@ -1376,59 +1292,19 @@ def incremental_neardup(
     )
 
 
-def incremental_neardup_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    min_jaccard: float = 0.5,
-    corpus_pct: int = 80,
-    salt: str = "ingest-v1",
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
-    rows_per_band = n_hashes // n_bands
-    sh = word_shingles_sql(text_col, k)
-    salted = f"'{salt}' || CAST({id_col} AS VARCHAR)"
-    b = f"({h60_sql(salted)}) % 100"
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc, {bb} AS band, "
-        + " || '_' || ".join(f"mh{bb * rows_per_band + r}" for r in range(rows_per_band))
-        + " AS key FROM sigs"
-        for bb in range(n_bands)
-    )
-    if max_bucket_size is not None:
-        guard = f"""
-bucket_sizes AS (
-  SELECT band, key, COUNT(*) AS n FROM buckets GROUP BY 1, 2
-),
-pruned AS (
-  SELECT bu.doc, bu.band, bu.key
-  FROM buckets bu JOIN bucket_sizes bs ON bu.band = bs.band AND bu.key = bs.key
-  WHERE bs.n <= {max_bucket_size}
-),"""
-        cand_src = "pruned"
-    else:
-        guard = ""
-        cand_src = "buckets"
+def incremental_neardup_sql() -> str:
+    salted = f"'{INGEST_SALT}' || CAST(doc_id AS VARCHAR)"
     return f"""
-WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-member AS (SELECT {id_col} AS doc, {b} AS bkt FROM {table}),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc),
-buckets AS ({band_rows}),{guard}
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
+member AS (SELECT doc_id AS doc, ({h60_sql(salted)}) % 100 AS bkt FROM documents),
+{_sigs_cte_sql()},
+buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
 cands AS (
   SELECT DISTINCT a.doc AS doc_a, bb.doc AS doc_b
-  FROM {cand_src} a
-  JOIN member ma ON a.doc = ma.doc AND ma.bkt >= {corpus_pct}
-  JOIN {cand_src} bb ON a.band = bb.band AND a.key = bb.key
-  JOIN member mb ON bb.doc = mb.doc AND mb.bkt < {corpus_pct}
+  FROM pruned a
+  JOIN member ma ON a.doc = ma.doc AND ma.bkt >= {CORPUS_PCT}
+  JOIN pruned bb ON a.band = bb.band AND a.key = bb.key
+  JOIN member mb ON bb.doc = mb.doc AND mb.bkt < {CORPUS_PCT}
 ),
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
 inter AS (
@@ -1444,7 +1320,7 @@ verified AS (
   FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc
   JOIN sizes sb ON i.doc_b = sb.doc
-  WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
+  WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {MIN_JACCARD}
 ),
 best AS (
   SELECT doc_a, doc_b, jaccard,
@@ -1453,14 +1329,14 @@ best AS (
          ) AS rn
   FROM verified
 )
-SELECT m.doc AS {id_col},
+SELECT m.doc AS doc_id,
        CASE WHEN b2.doc_b IS NULL THEN 'novel'
             ELSE 'near_dup_of_corpus' END AS decision,
        b2.doc_b AS matched_doc,
        b2.jaccard AS jaccard
 FROM member m
 LEFT JOIN (SELECT * FROM best WHERE rn = 1) b2 ON m.doc = b2.doc_a
-WHERE m.bkt >= {corpus_pct}
+WHERE m.bkt >= {CORPUS_PCT}
 """
 
 
@@ -1552,59 +1428,35 @@ def n_bands_ok(configs: tuple[tuple[int, int], ...], n_hashes: int) -> bool:
     return True
 
 
-def lsh_tuning_curve_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    configs: tuple[tuple[int, int], ...] = ((2, 8), (4, 4), (8, 2)),
-    min_jaccard: float = 0.5,
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
-    sh = word_shingles_sql(text_col, k)
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
-    )
+def _lsh_config_ctes_sql(verified_cols: str) -> str:
+    """The CTEs of the d19/d29 oracles: shingles, doc sizes and
+    signatures once, then per ``LSH_CONFIGS`` entry its guarded band
+    buckets, candidate pairs (``cands_b{n}r{r}``) and verified pairs
+    (``ver_b{n}r{r}``, projecting ``verified_cols``)."""
     ctes = [
-        f"""sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
+        f"""{_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc)"""
+{_sigs_cte_sql()}"""
     ]
-    legs = []
-    for nb, rpb in configs:
+    for nb, rpb in LSH_CONFIGS:
         tag = f"b{nb}r{rpb}"
-        band_rows = " UNION ALL ".join(
-            f"SELECT doc, {b} AS band, "
-            + " || '_' || ".join(f"mh{b * rpb + r}" for r in range(rpb))
-            + " AS key FROM sigs"
-            for b in range(nb)
-        )
-        guard = ""
-        src = f"buckets_{tag}"
-        if max_bucket_size is not None:
-            guard = f""",
+        ctes.append(
+            f"""buckets_{tag} AS ({_band_rows_sql(nb)}),
 pruned_{tag} AS (
   SELECT bu.doc, bu.band, bu.key
   FROM buckets_{tag} bu
   JOIN (SELECT band, key, COUNT(*) AS n
         FROM buckets_{tag} GROUP BY 1, 2) bs
     ON bu.band = bs.band AND bu.key = bs.key
-  WHERE bs.n <= {max_bucket_size}
-)"""
-            src = f"pruned_{tag}"
-        ctes.append(
-            f"""buckets_{tag} AS ({band_rows}){guard},
+  WHERE bs.n <= {DEFAULT_MAX_BUCKET_SIZE}
+),
 cands_{tag} AS (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM {src} a JOIN {src} b
+  FROM pruned_{tag} a JOIN pruned_{tag} b
     ON a.band = b.band AND a.key = b.key AND a.doc < b.doc
 ),
 ver_{tag} AS (
-  SELECT i.doc_a
+  SELECT {verified_cols}
   FROM (
     SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
     FROM cands_{tag} c
@@ -1614,21 +1466,31 @@ ver_{tag} AS (
   ) i
   JOIN sizes sa ON i.doc_a = sa.doc
   JOIN sizes sb ON i.doc_b = sb.doc
-  WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
+  WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {MIN_JACCARD}
 )"""
         )
-        legs.append(
-            f"""
+    return ",\n".join(ctes)
+
+
+def _lsh_curve_sql() -> str:
+    """The tuning curve over :func:`_lsh_config_ctes_sql`: one row per
+    ``LSH_CONFIGS`` entry, precision NULL when it has no candidates."""
+    return "\nUNION ALL\n".join(
+        f"""
 SELECT CAST({nb} AS BIGINT) AS n_bands,
        CAST({rpb} AS BIGINT) AS rows_per_band,
-       CAST((SELECT COUNT(*) FROM cands_{tag}) AS BIGINT) AS n_candidates,
-       CAST((SELECT COUNT(*) FROM ver_{tag}) AS BIGINT) AS n_verified,
-       CASE WHEN (SELECT COUNT(*) FROM cands_{tag}) > 0
-            THEN CAST((SELECT COUNT(*) FROM ver_{tag}) AS DOUBLE)
-                 / CAST((SELECT COUNT(*) FROM cands_{tag}) AS DOUBLE)
+       CAST((SELECT COUNT(*) FROM cands_b{nb}r{rpb}) AS BIGINT) AS n_candidates,
+       CAST((SELECT COUNT(*) FROM ver_b{nb}r{rpb}) AS BIGINT) AS n_verified,
+       CASE WHEN (SELECT COUNT(*) FROM cands_b{nb}r{rpb}) > 0
+            THEN CAST((SELECT COUNT(*) FROM ver_b{nb}r{rpb}) AS DOUBLE)
+                 / CAST((SELECT COUNT(*) FROM cands_b{nb}r{rpb}) AS DOUBLE)
        END AS precision"""
-        )
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(legs)
+        for nb, rpb in LSH_CONFIGS
+    )
+
+
+def lsh_tuning_curve_sql() -> str:
+    return f"WITH {_lsh_config_ctes_sql('i.doc_a')}\n{_lsh_curve_sql()}"
 
 
 # ---------------------------------------------------------------------------
@@ -1674,17 +1536,13 @@ def cross_source_dup_matrix(
     )
 
 
-def cross_source_dup_matrix_sql(
-    text_col: str = "text",
-    source_col: str = "source",
-    table: str = "documents",
-) -> str:
-    th = h60_sql(text_col)
+def cross_source_dup_matrix_sql() -> str:
+    th = h60_sql("text")
     return f"""
 WITH th_src AS (
-  SELECT DISTINCT {th} AS th, {source_col} AS src
-  FROM {table}
-  WHERE {text_col} IS NOT NULL AND {source_col} IS NOT NULL
+  SELECT DISTINCT {th} AS th, source AS src
+  FROM documents
+  WHERE text IS NOT NULL AND source IS NOT NULL
 )
 SELECT a.src AS source_a, b.src AS source_b,
        CAST(COUNT(*) AS BIGINT) AS n_shared_contents
@@ -1741,34 +1599,23 @@ def cross_source_neardup_matrix(
     )
 
 
-def cross_source_neardup_matrix_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    k: int = 3,
-    min_jaccard: float = 0.5,
-    scale: int = 100_000,
-    table: str = "documents",
-) -> str:
-    lsh = minhash_lsh_pairs_sql(
-        id_col, text_col, k=k, min_jaccard=min_jaccard, table=table
-    )
+def cross_source_neardup_matrix_sql() -> str:
     return f"""
-WITH pairs AS MATERIALIZED ({lsh}),
+WITH pairs AS MATERIALIZED ({minhash_lsh_pairs_sql('doc_id', 'text')}),
 srcs AS (
-  SELECT {id_col} AS doc, {source_col} AS src FROM {table}
-  WHERE {source_col} IS NOT NULL),
+  SELECT doc_id AS doc, source AS src FROM documents
+  WHERE source IS NOT NULL),
 lab AS (
   SELECT LEAST(sa.src, sb.src) AS source_a,
          GREATEST(sa.src, sb.src) AS source_b,
-         CAST(ROUND(p.jaccard * {scale}) AS BIGINT) AS qj
+         CAST(ROUND(p.jaccard * {FIXED_POINT_SCALE}) AS BIGINT) AS qj
   FROM pairs p
   JOIN srcs sa ON p.doc_a = sa.doc
   JOIN srcs sb ON p.doc_b = sb.doc
   WHERE sa.src <> sb.src)
 SELECT source_a, source_b,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       (CAST(SUM(qj) AS DOUBLE) / {float(scale)}) / CAST(COUNT(*) AS DOUBLE)
+       (CAST(SUM(qj) AS DOUBLE) / {float(FIXED_POINT_SCALE)}) / CAST(COUNT(*) AS DOUBLE)
          AS mean_jaccard
 FROM lab GROUP BY 1, 2
 """
@@ -1975,16 +1822,25 @@ def _bloom_bit_sql(s: int, m: int) -> str:
     return f"({h60_sql(salted)}) % {m}"
 
 
-def bloom_decontaminate_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    k: int = 3,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    n_seeds: int = BLOOM_N_SEEDS,
-    target_fp: float = BLOOM_TARGET_FP,
-    table: str = "documents",
-) -> str:
+def _bloom_probe_sql(m: int) -> tuple[str, str, str, str]:
+    """The SQL pieces of one ``m``-bit Bloom probe, shared by the d22,
+    d23 and d24 oracles: the ``bits_{m}`` CTE of the bits ``test_sh``
+    sets, the probe's per-seed bit columns, its LEFT JOINs against
+    ``bits_{m}``, and the all-bits-set predicate."""
+    seeds = range(BLOOM_N_SEEDS)
+    bit_union = " UNION ALL ".join(
+        f"SELECT {_bloom_bit_sql(s, m)} AS bit FROM test_sh" for s in seeds
+    )
+    bits = f"bits_{m} AS MATERIALIZED (SELECT DISTINCT bit FROM ({bit_union}))"
+    probe_bits = ", ".join(f"{_bloom_bit_sql(s, m)} AS b{s}" for s in seeds)
+    member_joins = "\n".join(
+        f"LEFT JOIN bits_{m} mk{s} ON p.b{s} = mk{s}.bit" for s in seeds
+    )
+    pos = " AND ".join(f"mk{s}.bit IS NOT NULL" for s in seeds)
+    return bits, probe_bits, member_joins, pos
+
+
+def bloom_decontaminate_sql() -> str:
     """Oracle twin of the curve-driven ``bloom_decontaminate``: one
     bits table per grid size, corpus-level fp_rate legs feeding the
     same smallest-qualifying-m chooser (MIN over a qualifying CASE,
@@ -1994,24 +1850,13 @@ def bloom_decontaminate_sql(
     data-dependent m, so the unchosen reports exist only in the oracle
     plan; the Spark side picks m with a |grid|-row control-plane
     collect and builds one probe."""
-    sh = word_shingles_sql(text_col, k)
-    split = corpus_split_sql(text_col)
+    sh = word_shingles_sql("text", 3)
+    split = corpus_split_sql("text")
     legs = []
-    for m in m_grid:
-        bit_union = " UNION ALL ".join(
-            f"SELECT {_bloom_bit_sql(s, m)} AS bit FROM test_sh"
-            for s in range(n_seeds)
-        )
-        probe_bits = ", ".join(
-            f"{_bloom_bit_sql(s, m)} AS b{s}" for s in range(n_seeds)
-        )
-        member_joins = "\n".join(
-            f"LEFT JOIN bits_{m} mk{s} ON p.b{s} = mk{s}.bit"
-            for s in range(n_seeds)
-        )
-        pos = " AND ".join(f"mk{s}.bit IS NOT NULL" for s in range(n_seeds))
+    for m in BLOOM_M_GRID:
+        bits, probe_bits, member_joins, pos = _bloom_probe_sql(m)
         legs.append(
-            f"""bits_{m} AS MATERIALIZED (SELECT DISTINCT bit FROM ({bit_union})),
+            f"""{bits},
 cflags_{m} AS (
   SELECT ({pos}) AS is_pos, (t.shingle IS NOT NULL) AS is_exact
   FROM (SELECT shingle, {probe_bits} FROM train_sh) p
@@ -2038,12 +1883,14 @@ rep_{m} AS (
   FROM sflags_{m} GROUP BY 1)"""
         )
     legs_sql = ",\n".join(legs)
-    curve_union = " UNION ALL ".join(f"SELECT * FROM curveleg_{m}" for m in m_grid)
-    rep_union = " UNION ALL ".join(f"SELECT * FROM rep_{m}" for m in m_grid)
+    curve_union = " UNION ALL ".join(
+        f"SELECT * FROM curveleg_{m}" for m in BLOOM_M_GRID
+    )
+    rep_union = " UNION ALL ".join(f"SELECT * FROM rep_{m}" for m in BLOOM_M_GRID)
     return f"""
 WITH d AS (
-  SELECT {id_col} AS doc, {split} AS split, {source_col} AS src, text
-  FROM {table} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id AS doc, {split} AS split, source AS src, text
+  FROM documents WHERE text IS NOT NULL),
 shx AS MATERIALIZED (
   SELECT DISTINCT doc, {h60_sql('u.s')} AS shingle
   FROM (SELECT doc, unnest({sh}) AS s FROM d) u),
@@ -2057,8 +1904,8 @@ train_src AS MATERIALIZED (
 {legs_sql},
 curve AS ({curve_union}),
 chosen AS (
-  SELECT COALESCE(MIN(CASE WHEN fp_rate <= {target_fp} THEN m_bits END),
-                  CAST({max(m_grid)} AS BIGINT)) AS m
+  SELECT COALESCE(MIN(CASE WHEN fp_rate <= {BLOOM_TARGET_FP} THEN m_bits END),
+                  CAST({max(BLOOM_M_GRID)} AS BIGINT)) AS m
   FROM curve),
 reps AS ({rep_union})
 SELECT source, m_bits, n_probe_shingles, n_bloom_pos, n_exact, n_false_pos
@@ -2174,32 +2021,14 @@ def bloom_sizing_curve(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def bloom_sizing_curve_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    n_seeds: int = BLOOM_N_SEEDS,
-    table: str = "documents",
-) -> str:
-    sh = word_shingles_sql(text_col, k)
-    split = corpus_split_sql(text_col)
+def bloom_sizing_curve_sql() -> str:
+    sh = word_shingles_sql("text", 3)
+    split = corpus_split_sql("text")
     legs = []
-    for m in m_grid:
-        bit_union = " UNION ALL ".join(
-            f"SELECT {_bloom_bit_sql(s, m)} AS bit FROM test_sh"
-            for s in range(n_seeds)
-        )
-        probe_bits = ", ".join(
-            f"{_bloom_bit_sql(s, m)} AS b{s}" for s in range(n_seeds)
-        )
-        member_joins = "\n".join(
-            f"LEFT JOIN bits_{m} mk{s} ON p.b{s} = mk{s}.bit"
-            for s in range(n_seeds)
-        )
-        pos = " AND ".join(f"mk{s}.bit IS NOT NULL" for s in range(n_seeds))
+    for m in BLOOM_M_GRID:
+        bits, probe_bits, member_joins, pos = _bloom_probe_sql(m)
         legs.append(
-            f"""bits_{m} AS MATERIALIZED (SELECT DISTINCT bit FROM ({bit_union})),
+            f"""{bits},
 flags_{m} AS (
   SELECT ({pos}) AS is_pos, (t.shingle IS NOT NULL) AS is_exact
   FROM (SELECT shingle, {probe_bits} FROM train_sh) p
@@ -2219,12 +2048,12 @@ leg_{m} AS (
            / CAST(COUNT(*) AS DOUBLE) AS fp_rate
   FROM flags_{m})"""
         )
-    leg_selects = " UNION ALL ".join(f"SELECT * FROM leg_{m}" for m in m_grid)
+    leg_selects = " UNION ALL ".join(f"SELECT * FROM leg_{m}" for m in BLOOM_M_GRID)
     legs_sql = ",\n".join(legs)
     return f"""
 WITH d AS (
-  SELECT {id_col} AS doc, {split} AS split, text
-  FROM {table} WHERE {text_col} IS NOT NULL),
+  SELECT doc_id AS doc, {split} AS split, text
+  FROM documents WHERE text IS NOT NULL),
 shx AS MATERIALIZED (
   SELECT DISTINCT doc, {h60_sql('u.s')} AS shingle
   FROM (SELECT doc, unnest({sh}) AS s FROM d) u),
@@ -2387,18 +2216,7 @@ def dedup_tier_attribution(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def dedup_tier_attribution_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    min_jaccard: float = 0.5,
-    min_containment: float = 0.9,
-    containment_max_df: int = 5,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    n_seeds: int = BLOOM_N_SEEDS,
-    target_fp: float = BLOOM_TARGET_FP,
-    table: str = "documents",
-) -> str:
+def dedup_tier_attribution_sql(containment_max_df: int = 5) -> str:
     """Oracle twin of the four-tier cascade. Tier 0 reproduces the d22
     pattern: SQL cannot parameterize the hash expressions by a
     data-dependent filter size, so the positive-shingle set exists per
@@ -2406,31 +2224,15 @@ def dedup_tier_attribution_sql(
     the unchosen legs live only in the oracle plan (the Spark side
     chooses m with a |grid|-row control-plane collect and builds ONE
     probe)."""
-    pairs = minhash_lsh_pairs_sql(
-        id_col, text_col, k, min_jaccard=min_jaccard, table=table
-    )
-    comp = neardup_components_sql(pairs, id_col, table)
-    cont = containment_pairs_sql(
-        id_col, text_col, k, min_containment, table=table, max_df=containment_max_df
-    )
-    sh = word_shingles_sql(text_col, k)
-    split = corpus_split_sql(text_col)
+    comp = neardup_components_sql(minhash_lsh_pairs_sql("doc_id", "text"), "doc_id")
+    cont = containment_pairs_sql("doc_id", "text", 3, 0.9, max_df=containment_max_df)
+    sh = word_shingles_sql("text", 3)
+    split = corpus_split_sql("text")
     legs = []
-    for m in m_grid:
-        bit_union = " UNION ALL ".join(
-            f"SELECT {_bloom_bit_sql(s, m)} AS bit FROM test_sh"
-            for s in range(n_seeds)
-        )
-        probe_bits = ", ".join(
-            f"{_bloom_bit_sql(s, m)} AS b{s}" for s in range(n_seeds)
-        )
-        member_joins = "\n".join(
-            f"LEFT JOIN bits_{m} mk{s} ON p.b{s} = mk{s}.bit"
-            for s in range(n_seeds)
-        )
-        pos = " AND ".join(f"mk{s}.bit IS NOT NULL" for s in range(n_seeds))
+    for m in BLOOM_M_GRID:
+        bits, probe_bits, member_joins, pos = _bloom_probe_sql(m)
         legs.append(
-            f"""bits_{m} AS MATERIALIZED (SELECT DISTINCT bit FROM ({bit_union})),
+            f"""{bits},
 bflags_{m} AS MATERIALIZED (
   SELECT p.shingle, ({pos}) AS is_pos,
          (t.shingle IS NOT NULL) AS is_exact
@@ -2446,13 +2248,15 @@ posleg_{m} AS (
   SELECT CAST({m} AS BIGINT) AS m_bits, shingle FROM bflags_{m} WHERE is_pos)"""
         )
     legs_sql = ",\n".join(legs)
-    curve_union = " UNION ALL ".join(f"SELECT * FROM curveleg_{m}" for m in m_grid)
-    pos_union = " UNION ALL ".join(f"SELECT * FROM posleg_{m}" for m in m_grid)
+    curve_union = " UNION ALL ".join(
+        f"SELECT * FROM curveleg_{m}" for m in BLOOM_M_GRID
+    )
+    pos_union = " UNION ALL ".join(f"SELECT * FROM posleg_{m}" for m in BLOOM_M_GRID)
     return f"""
 WITH d AS (
-  SELECT {id_col} AS doc, {text_col} AS txt, {split} AS split, {text_col}
-  FROM {table}
-  WHERE {text_col} IS NOT NULL),
+  SELECT doc_id AS doc, text AS txt, {split} AS split, text
+  FROM documents
+  WHERE text IS NOT NULL),
 shx AS MATERIALIZED (
   SELECT DISTINCT doc, {h60_sql('u.s')} AS shingle
   FROM (SELECT doc, unnest({sh}) AS s FROM d) u),
@@ -2463,8 +2267,8 @@ train_sh AS MATERIALIZED (
 {legs_sql},
 curve AS ({curve_union}),
 chosen AS (
-  SELECT COALESCE(MIN(CASE WHEN fp_rate <= {target_fp} THEN m_bits END),
-                  CAST({max(m_grid)} AS BIGINT)) AS m
+  SELECT COALESCE(MIN(CASE WHEN fp_rate <= {BLOOM_TARGET_FP} THEN m_bits END),
+                  CAST({max(BLOOM_M_GRID)} AS BIGINT)) AS m
   FROM curve),
 pos_sh AS (
   SELECT shingle FROM ({pos_union})
@@ -2648,41 +2452,34 @@ def cms_error_audit(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def cms_error_audit_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    w_grid: tuple[int, ...] = CMS_W_GRID,
-    depth: int = CMS_DEPTH,
-    table: str = "documents",
-) -> str:
+def cms_error_audit_sql() -> str:
     from end_to_end_sales_etl_de_project_spark.functions.hashing import (
         h60_seeded_sql,
     )
 
-    sh = word_shingles_sql(text_col, k)
+    sh = word_shingles_sql("text", 3)
     hash_cols = ", ".join(
         f"({h60_seeded_sql('CAST(shingle AS VARCHAR)', s)}) AS h{s}"
-        for s in range(depth)
+        for s in range(CMS_DEPTH)
     )
     legs = []
     leg_names = []
-    for w in w_grid:
-        bucket_cols = ", ".join(f"h{s} % {w} AS b{s}" for s in range(depth))
+    for w in CMS_W_GRID:
+        bucket_cols = ", ".join(f"h{s} % {w} AS b{s}" for s in range(CMS_DEPTH))
         sum_ctes = ",\n".join(
             f"s_{w}_{s} AS (SELECT b{s}, CAST(SUM(c) AS BIGINT) AS s{s} "
             f"FROM b_{w} GROUP BY b{s})"
-            for s in range(depth)
+            for s in range(CMS_DEPTH)
         )
-        sum_joins = " ".join(f"JOIN s_{w}_{s} USING (b{s})" for s in range(depth))
-        est = "least(" + ", ".join(f"s{s}" for s in range(depth)) + ")"
+        sum_joins = " ".join(f"JOIN s_{w}_{s} USING (b{s})" for s in range(CMS_DEPTH))
+        est = "least(" + ", ".join(f"s{s}" for s in range(CMS_DEPTH)) + ")"
         legs.append(
             f"""b_{w} AS (SELECT c, {bucket_cols} FROM ex),
 {sum_ctes},
 j_{w} AS (SELECT c, ({est}) - c AS err FROM b_{w} {sum_joins}),
 leg_{w} AS (
   SELECT CAST({w} AS BIGINT) AS w_buckets,
-         CAST({depth} AS BIGINT) AS depth,
+         CAST({CMS_DEPTH} AS BIGINT) AS depth,
          CAST(COUNT(*) AS BIGINT) AS n_keys,
          CAST(SUM(CASE WHEN err > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_over,
          CASE WHEN COUNT(*) > 0
@@ -2696,7 +2493,7 @@ leg_{w} AS (
     legs_sql = ",\n".join(legs)
     leg_selects = " UNION ALL ".join(f"SELECT * FROM {n}" for n in leg_names)
     return f"""
-WITH d AS (SELECT {id_col} AS doc, text FROM {table} WHERE {text_col} IS NOT NULL),
+WITH d AS (SELECT doc_id AS doc, text FROM documents WHERE text IS NOT NULL),
 shx AS MATERIALIZED (
   SELECT DISTINCT doc, {h60_sql('u.s')} AS shingle
   FROM (SELECT doc, unnest({sh}) AS s FROM d) u),
@@ -2777,114 +2574,34 @@ def tuned_neardup(
     )
 
 
-def tuned_neardup_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    configs: tuple[tuple[int, int], ...] = ((2, 8), (4, 4), (8, 2)),
-    min_jaccard: float = 0.5,
-    min_precision: float = LSH_TARGET_PRECISION,
-    table: str = "documents",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> str:
+def tuned_neardup_sql() -> str:
     """Oracle twin: every config's candidate/verified tables, the curve,
     the SAME qualifying-then-(n_verified DESC, n_candidates, n_bands)
     chooser as ORDER BY ... LIMIT 1, and the chosen config's pairs
     selected by join — the d22 oracle pattern (unchosen legs exist
     only in the oracle plan; Spark picks via the control-plane
     collect and builds one join)."""
-    sh = word_shingles_sql(text_col, k)
-    mh_cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(n_hashes)
+    verified = (
+        "i.doc_a, i.doc_b,\n"
+        "         n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard"
     )
-    ctes = [
-        f"""sh0 AS (
-  SELECT {id_col} AS doc, unnest({sh}) AS shingle FROM {table}
-),
-sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),
-sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
-sigs AS (SELECT doc, {mh_cols} FROM sh GROUP BY doc)"""
-    ]
-    curve_legs = []
-    pair_legs = []
-    for nb, rpb in configs:
-        tag = f"b{nb}r{rpb}"
-        band_rows = " UNION ALL ".join(
-            f"SELECT doc, {b} AS band, "
-            + " || '_' || ".join(f"mh{b * rpb + r}" for r in range(rpb))
-            + " AS key FROM sigs"
-            for b in range(nb)
-        )
-        guard = ""
-        src = f"buckets_{tag}"
-        if max_bucket_size is not None:
-            guard = f""",
-pruned_{tag} AS (
-  SELECT bu.doc, bu.band, bu.key
-  FROM buckets_{tag} bu
-  JOIN (SELECT band, key, COUNT(*) AS n
-        FROM buckets_{tag} GROUP BY 1, 2) bs
-    ON bu.band = bs.band AND bu.key = bs.key
-  WHERE bs.n <= {max_bucket_size}
-)"""
-            src = f"pruned_{tag}"
-        ctes.append(
-            f"""buckets_{tag} AS ({band_rows}){guard},
-cands_{tag} AS (
-  SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-  FROM {src} a JOIN {src} b
-    ON a.band = b.band AND a.key = b.key AND a.doc < b.doc
-),
-ver_{tag} AS (
-  SELECT i.doc_a, i.doc_b,
-         n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
-  FROM (
-    SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-    FROM cands_{tag} c
-    JOIN sh a ON c.doc_a = a.doc
-    JOIN sh b ON c.doc_b = b.doc AND a.shingle = b.shingle
-    GROUP BY 1, 2
-  ) i
-  JOIN sizes sa ON i.doc_a = sa.doc
-  JOIN sizes sb ON i.doc_b = sb.doc
-  WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
-)"""
-        )
-        curve_legs.append(
-            f"""
-SELECT CAST({nb} AS BIGINT) AS n_bands,
-       CAST({rpb} AS BIGINT) AS rows_per_band,
-       CAST((SELECT COUNT(*) FROM cands_{tag}) AS BIGINT) AS n_candidates,
-       CAST((SELECT COUNT(*) FROM ver_{tag}) AS BIGINT) AS n_verified,
-       CASE WHEN (SELECT COUNT(*) FROM cands_{tag}) > 0
-            THEN CAST((SELECT COUNT(*) FROM ver_{tag}) AS DOUBLE)
-                 / CAST((SELECT COUNT(*) FROM cands_{tag}) AS DOUBLE)
-       END AS precision"""
-        )
-        pair_legs.append(
-            f"""SELECT doc_a, doc_b, jaccard,
+    pairs_sql = "\nUNION ALL\n".join(
+        f"""SELECT doc_a, doc_b, jaccard,
        CAST({nb} AS BIGINT) AS n_bands,
        CAST({rpb} AS BIGINT) AS rows_per_band
-FROM ver_{tag}"""
-        )
-    curve_sql = "\nUNION ALL\n".join(curve_legs)
-    pairs_sql = "\nUNION ALL\n".join(pair_legs)
-    ctes.append(f"curve AS ({curve_sql})")
-    ctes.append(
-        f"""choice AS (
+FROM ver_b{nb}r{rpb}"""
+        for nb, rpb in LSH_CONFIGS
+    )
+    return f"""WITH {_lsh_config_ctes_sql(verified)},
+curve AS ({_lsh_curve_sql()}),
+choice AS (
   SELECT n_bands, rows_per_band FROM curve
   ORDER BY (CASE WHEN precision IS NOT NULL
-                  AND precision >= {min_precision} THEN 1 ELSE 0 END) DESC,
+                  AND precision >= {LSH_TARGET_PRECISION} THEN 1 ELSE 0 END) DESC,
            n_verified DESC, n_candidates ASC, n_bands ASC
   LIMIT 1
-)"""
-    )
-    ctes.append(f"allpairs AS ({pairs_sql})")
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + "\nSELECT p.doc_a, p.doc_b, p.jaccard, p.n_bands, p.rows_per_band"
-        + "\nFROM allpairs p JOIN choice c"
-        + "\n  ON p.n_bands = c.n_bands AND p.rows_per_band = c.rows_per_band"
-    )
+),
+allpairs AS ({pairs_sql})
+SELECT p.doc_a, p.doc_b, p.jaccard, p.n_bands, p.rows_per_band
+FROM allpairs p JOIN choice c
+  ON p.n_bands = c.n_bands AND p.rows_per_band = c.rows_per_band"""

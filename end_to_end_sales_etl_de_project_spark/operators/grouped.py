@@ -103,17 +103,17 @@ def interarrival_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def interarrival_stats_sql(table: str = "events") -> str:
+def interarrival_stats_sql() -> str:
     # gaps via INTEGER microsecond subtraction then one division —
     # subtracting epoch() doubles (~1.7e9 s) would carry ~2.4e-7 s of
     # representation noise that pandas' exact integer diff doesn't have
-    return f"""
+    return """
 WITH gaps AS (
   SELECT user_id,
          CAST(epoch_us(ts)
               - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) AS DOUBLE)
            / 1000000.0 AS gap_s
-  FROM {table}
+  FROM events
   WHERE ts IS NOT NULL
 )
 SELECT user_id,

@@ -384,17 +384,15 @@ def decode_batch_plan(assets: DataFrame, batch_size: int = 64) -> DataFrame:
     )
 
 
-def decode_batch_plan_sql(
-    batch_size: int = 64, bucket_bytes: int = 1024, table: str = "documents"
-) -> str:
+def decode_batch_plan_sql() -> str:
     """DuckDB twin over the documents-as-assets mapping (utf-8 payload
     size, format 'txt')."""
-    return f"""
+    return """
 WITH sel AS (
   SELECT doc_id AS asset_id, 'txt' AS format,
          CAST(FLOOR(CAST(octet_length(encode(text)) AS BIGINT)
-                    / {bucket_bytes}) AS BIGINT) AS size_bucket
-  FROM {table}
+                    / 1024) AS BIGINT) AS size_bucket
+  FROM documents
 ),
 numbered AS (
   SELECT asset_id, format, size_bucket,
@@ -403,8 +401,8 @@ numbered AS (
   FROM sel
 )
 SELECT asset_id, format, size_bucket,
-       CAST(FLOOR(rn / {batch_size}) AS BIGINT) AS batch_id,
-       CAST(rn % {batch_size} AS BIGINT) AS position_in_batch
+       CAST(FLOOR(rn / 64) AS BIGINT) AS batch_id,
+       CAST(rn % 64 AS BIGINT) AS position_in_batch
 FROM numbered
 """
 
@@ -666,7 +664,7 @@ def phash_neardup_pairs(assets: DataFrame) -> DataFrame:
     )
 
 
-def phash_neardup_sql(hamming_max: int = 3, table: str = "documents") -> str:
+def phash_neardup_sql() -> str:
     """DuckDB twin: recomputes the byte-4-gram SimHash from the text
     (ASCII corpus: one char == one byte) and compares ALL pairs — the
     oracle proves the banded join loses nothing. Same 65536 position
@@ -681,7 +679,7 @@ def phash_neardup_sql(hamming_max: int = 3, table: str = "documents") -> str:
     )
     return f"""
 WITH b AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n
-           FROM {table} WHERE text IS NOT NULL AND length(text) >= 4),
+           FROM documents WHERE text IS NOT NULL AND length(text) >= 4),
 guard AS (
   SELECT CASE WHEN (SELECT COALESCE(MAX(n), 0) FROM b) > 65536
     THEN error('m07 oracle position ceiling (65536) exceeded')
@@ -699,5 +697,5 @@ sigs AS (SELECT doc_id, {fp} AS sig FROM votes, guard WHERE guard.ok = 1)
 SELECT a.doc_id AS asset_a, b.doc_id AS asset_b,
        CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
 FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sig, b.sig)) <= {hamming_max}
+WHERE bit_count(xor(a.sig, b.sig)) <= 3
 """

@@ -146,33 +146,27 @@ def pack_sequences(
     )
 
 
-def pack_sequences_sql(
-    capacity: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
+def pack_sequences_sql() -> str:
     """DuckDB twin of :func:`pack_sequences` — the sequential prefix-sum
     form the distributed decomposition must equal bit-for-bit."""
     from end_to_end_sales_etl_de_project_spark.operators.text import token_count_sql
 
-    ntok = token_count_sql(text_col)
-    cap = int(capacity)
+    ntok = token_count_sql("text")
     return f"""
-WITH t AS (SELECT {id_col} AS doc, {ntok} AS n_tokens FROM {table}),
+WITH t AS (SELECT doc_id AS doc, {ntok} AS n_tokens FROM documents),
 c AS (
   SELECT doc, n_tokens,
          SUM(n_tokens) OVER (ORDER BY doc
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_end
   FROM t
 )
-SELECT doc AS {id_col},
+SELECT doc AS doc_id,
        CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST((cum_end - n_tokens) // {cap} AS BIGINT) AS first_seq,
+       CAST((cum_end - n_tokens) // 2048 AS BIGINT) AS first_seq,
        CAST(CASE WHEN n_tokens > 0
-                 THEN (cum_end - 1) // {cap} - (cum_end - n_tokens) // {cap} + 1
+                 THEN (cum_end - 1) // 2048 - (cum_end - n_tokens) // 2048 + 1
                  ELSE 0 END AS BIGINT) AS n_seqs,
-       CAST((cum_end - n_tokens) % {cap} AS BIGINT) AS seq_offset
+       CAST((cum_end - n_tokens) % 2048 AS BIGINT) AS seq_offset
 FROM c
 """
 
@@ -215,28 +209,17 @@ def packing_fragmentation(
     )
 
 
-def packing_fragmentation_sql(
-    capacity: int = 2048,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
-    packed = pack_sequences_sql(
-        capacity=capacity,
-        id_col=id_col,
-        text_col=text_col,
-        table=table,
-    )
+def packing_fragmentation_sql() -> str:
+    packed = pack_sequences_sql()
     return f"""
 WITH packed AS ({packed})
-SELECT d.{source_col} AS source,
+SELECT d.source AS source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(CASE WHEN p.n_seqs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS docs_cut,
        CAST(SUM(CASE WHEN p.n_seqs > 1 THEN p.n_seqs - 1 ELSE 0 END) AS BIGINT)
          AS cut_points,
        CAST(SUM(CASE WHEN p.n_seqs > 1 THEN 1 ELSE 0 END) AS DOUBLE)
          / CAST(COUNT(*) AS DOUBLE) AS frag_rate
-FROM packed p JOIN {table} d ON p.{id_col} = d.{id_col}
+FROM packed p JOIN documents d ON p.doc_id = d.doc_id
 GROUP BY 1
 """

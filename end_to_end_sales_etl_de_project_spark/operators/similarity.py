@@ -162,17 +162,15 @@ def brute_force_topk(
     return _top_k_exact(F.broadcast(q).crossJoin(n), k, dim)
 
 
-def brute_force_topk_sql(
-    query_pred: str, k: int = 5, dim: int = DIM, table: str = "embeddings"
-) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
+def brute_force_topk_sql(query_pred: str) -> str:
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
-  FROM {table} q, {table} n
+  FROM embeddings q, embeddings n
   WHERE ({query_pred}) AND q.vec_id <> n.vec_id
 )
 SELECT query_id, neighbor_id, rank, cosine FROM (
@@ -180,7 +178,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
                                       ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored
 )
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
@@ -198,23 +196,17 @@ def lsh_topk(
     return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
-def lsh_topk_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
-    qs = _sig_sql("q.embedding", sig_bits, one_based=True)
-    ns = _sig_sql("n.embedding", sig_bits, one_based=True)
+def lsh_topk_sql(query_pred: str) -> str:
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
+    qs = _sig_sql("q.embedding", SIG_BITS, one_based=True)
+    ns = _sig_sql("n.embedding", SIG_BITS, one_based=True)
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
-  FROM {table} q, {table} n
+  FROM embeddings q, embeddings n
   WHERE ({query_pred}) AND q.vec_id <> n.vec_id AND ({qs}) = ({ns})
 )
 SELECT query_id, neighbor_id, rank, cosine FROM (
@@ -222,7 +214,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
                                       ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored
 )
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
@@ -279,23 +271,17 @@ def embedding_neardup_pairs(
     )
 
 
-def embedding_neardup_pairs_sql(
-    threshold: float,
-    block_col: str = "label",
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    dot = _dot_sql("a.embedding", "b.embedding", dim, one_based=True)
-    an = _norm_sql("a.embedding", dim, one_based=True)
-    bn = _norm_sql("b.embedding", dim, one_based=True)
-    sa = _sig_sql("a.embedding", sig_bits, one_based=True)
-    sb = _sig_sql("b.embedding", sig_bits, one_based=True)
+def embedding_neardup_pairs_sql(threshold: float) -> str:
+    dot = _dot_sql("a.embedding", "b.embedding", DIM, one_based=True)
+    an = _norm_sql("a.embedding", DIM, one_based=True)
+    bn = _norm_sql("b.embedding", DIM, one_based=True)
+    sa = _sig_sql("a.embedding", SIG_BITS, one_based=True)
+    sb = _sig_sql("b.embedding", SIG_BITS, one_based=True)
     return f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        ({dot}) / (({an}) * ({bn})) AS cosine
-FROM {table} a JOIN {table} b
-  ON a.{block_col} = b.{block_col} AND ({sa}) = ({sb}) AND a.vec_id < b.vec_id
+FROM embeddings a JOIN embeddings b
+  ON a.label = b.label AND ({sa}) = ({sb}) AND a.vec_id < b.vec_id
 WHERE ({dot}) / (({an}) * ({bn})) >= {threshold}
 """
 
@@ -818,28 +804,19 @@ seed_vals AS MATERIALIZED (
   SELECT s.cid, q.lp AS pos, q.val AS c FROM seeds s JOIN vq q USING (vec_id))"""
 
 
-def ivf_topk_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
-    table: str = "embeddings",
-) -> str:
+def ivf_topk_sql(query_pred: str) -> str:
     """DuckDB twin of :func:`ivf_train` + :func:`ivf_topk` — the full
     quantized-grid Lloyd training unrolled as chained CTEs, then cell
     assignment, probing, and exact-cosine ranking. Bit-exact against
     the Spark plan (VERDICT r8 #4 promotion)."""
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", iterations, part_cols=[]
+        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(dim, scale, n_centroids, table)},
+WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
 {kmeans},
 cells AS (
   SELECT vec_id AS neighbor_id, cid FROM (
@@ -852,21 +829,21 @@ probes AS (
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid DESC) AS rn
     FROM {cfin}_sim
     WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({query_pred}))
-  ) WHERE rn <= {n_probe}),
+  ) WHERE rn <= {max(PROBE_COUNTS)}),
 scored AS (
   SELECT p.query_id, c.neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
   FROM probes p
   JOIN cells c ON c.cid = p.cid
-  JOIN {table} q ON q.vec_id = p.query_id
-  JOIN {table} n ON n.vec_id = c.neighbor_id
+  JOIN embeddings q ON q.vec_id = p.query_id
+  JOIN embeddings n ON n.vec_id = c.neighbor_id
   WHERE p.query_id <> c.neighbor_id)
 SELECT query_id, neighbor_id, rank, cosine FROM (
   SELECT scored.*,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
@@ -912,20 +889,14 @@ def ivf_cell_balance(
     )
 
 
-def ivf_cell_balance_sql(
-    dim: int = DIM,
-    n_centroids: int = 16,
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
-    table: str = "embeddings",
-) -> str:
+def ivf_cell_balance_sql() -> str:
     """DuckDB twin of :func:`ivf_cell_balance` — the a04 Lloyd unroll,
     then per-cell counts over the assignment."""
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", iterations, part_cols=[]
+        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(dim, scale, n_centroids, table)},
+WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
 {kmeans},
 cells AS (
   SELECT vec_id, cid FROM (
@@ -1016,21 +987,13 @@ def ivf_probe_cost(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def ivf_probe_cost_sql(
-    query_pred: str,
-    dim: int = DIM,
-    n_centroids: int = 16,
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
-    probe_counts: tuple[int, ...] = (1, 2, 4),
-    table: str = "embeddings",
-) -> str:
+def ivf_probe_cost_sql(query_pred: str) -> str:
     """DuckDB twin of :func:`ivf_probe_cost` — the a04 Lloyd unroll,
     cell counts, ranked probes, and one aggregated leg per width."""
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", iterations, part_cols=[]
+        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
     )
-    max_p = max(probe_counts)
+    max_p = max(PROBE_COUNTS)
     legs = "\nUNION ALL\n".join(
         f"""SELECT CAST({p} AS BIGINT) AS n_probe,
        CAST(COUNT(DISTINCT s.query_id) AS BIGINT) AS n_queries,
@@ -1039,10 +1002,10 @@ def ivf_probe_cost_sql(
        CAST(COALESCE(SUM(s.n_cell), 0) AS DOUBLE)
          / CAST(COUNT(DISTINCT s.query_id) * t.n_corpus AS DOUBLE) AS scan_frac
 FROM sized s CROSS JOIN tot t WHERE s.rn <= {p} GROUP BY t.n_corpus"""
-        for p in probe_counts
+        for p in PROBE_COUNTS
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(dim, scale, n_centroids, table)},
+WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
 {kmeans},
 cells AS MATERIALIZED (
   SELECT vec_id, cid FROM (
@@ -1089,24 +1052,18 @@ def lsh_topk_multiprobe(
     return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
-def lsh_topk_multiprobe_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
-    qs = _sig_sql("q.embedding", sig_bits, one_based=True)
-    ns = _sig_sql("n.embedding", sig_bits, one_based=True)
-    masks = ", ".join(str(m) for m in [0, *[1 << b for b in range(sig_bits)]])
+def lsh_topk_multiprobe_sql(query_pred: str, k: int = TOP_K) -> str:
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
+    qs = _sig_sql("q.embedding", SIG_BITS, one_based=True)
+    ns = _sig_sql("n.embedding", SIG_BITS, one_based=True)
+    masks = ", ".join(str(m) for m in [0, *[1 << b for b in range(SIG_BITS)]])
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
-  FROM {table} q, (SELECT unnest([{masks}]) AS m) masks, {table} n
+  FROM embeddings q, (SELECT unnest([{masks}]) AS m) masks, embeddings n
   -- no DISTINCT needed: the probe masks are pairwise distinct, so a
   -- (query, neighbor) pair matches exactly one mask (same invariant
   -- the Spark plan relies on)
@@ -1308,39 +1265,29 @@ def pq_topk(
     return _top_k_exact(shortlist.join(_side(emb, "n"), "neighbor_id"), k)
 
 
-def pq_topk_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    iterations: int = 2,
-    rerank_factor: int = 4,
-    scale: int = QUANT_SCALE,
-    table: str = "embeddings",
-) -> str:
+def pq_topk_sql(query_pred: str) -> str:
     """DuckDB twin of :func:`pq_train` + :func:`pq_topk`: per-subspace
     quantized-grid codebook training (shared CTE machinery with the IVF
     twin, partitioned by subspace), code assignment, integer approx
     scoring, shortlist, exact-cosine rerank. Bit-exact against the
     Spark plan (VERDICT r8 #4 promotion)."""
-    sub = dim // n_subspaces
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
+    sub = DIM // 4
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
     kmeans, cfin = _kmeans_sql_ctes(
-        "kb", "vqs", "asub", "seed_vals", iterations, part_cols=["s"]
+        "kb", "vqs", "asub", "seed_vals", KMEANS_ITERATIONS, part_cols=["s"]
     )
     return f"""
-WITH dimpos AS (SELECT unnest(range(1, {dim + 1})) AS pos),
+WITH dimpos AS (SELECT unnest(range(1, {DIM + 1})) AS pos),
 valid AS (
-  SELECT vec_id, embedding FROM {table}
+  SELECT vec_id, embedding FROM embeddings
   WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-    AND len(embedding) >= {dim}
-    AND len(list_filter(embedding[1:{dim}], x -> x IS NULL)) = 0),
+    AND len(embedding) >= {DIM}
+    AND len(list_filter(embedding[1:{DIM}], x -> x IS NULL)) = 0),
 vqs AS (
   SELECT v.vec_id, (d.pos - 1) // {sub} AS s, ((d.pos - 1) % {sub}) + 1 AS lp,
-         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {scale}) AS BIGINT) AS val
+         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) AS val
   FROM valid v, dimpos d),
 asub AS MATERIALIZED (
   SELECT vec_id, s,
@@ -1352,7 +1299,7 @@ afull AS MATERIALIZED (
   FROM vqs GROUP BY vec_id),
 seeds AS (
   SELECT vec_id, DENSE_RANK() OVER (ORDER BY vec_id) - 1 AS cid
-  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT {n_codes})),
+  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT 16)),
 seed_vals AS MATERIALIZED (
   SELECT q.s, se.cid, q.lp AS pos, q.val AS c
   FROM seeds se JOIN vqs q USING (vec_id)),
@@ -1387,19 +1334,19 @@ short AS (
     SELECT query_id, neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY query_id
                               ORDER BY ac DESC, neighbor_id) AS rn
-    FROM approx) WHERE rn <= {k * rerank_factor}),
+    FROM approx) WHERE rn <= {TOP_K * 4}),
 rescored AS (
   SELECT sh.query_id, sh.neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
   FROM short sh
-  JOIN {table} q ON q.vec_id = sh.query_id
-  JOIN {table} n ON n.vec_id = sh.neighbor_id)
+  JOIN embeddings q ON q.vec_id = sh.query_id
+  JOIN embeddings n ON n.vec_id = sh.neighbor_id)
 SELECT query_id, neighbor_id, rank, cosine FROM (
   SELECT rescored.*,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM rescored)
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 
@@ -1443,33 +1390,25 @@ def pq_distortion_by_label(
     )
 
 
-def pq_distortion_by_label_sql(
-    label_col: str = "label",
-    dim: int = DIM,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
-    table: str = "embeddings",
-) -> str:
+def pq_distortion_by_label_sql() -> str:
     """DuckDB twin of :func:`pq_distortion_by_label` — retrains the
     same quantized-grid codebooks (shared CTE machinery with the a05
     twin) and folds the identical integer error sums."""
-    sub = dim // n_subspaces
-    sq = float(scale) * float(scale)
+    sub = DIM // 4
+    sq = float(QUANT_SCALE) * float(QUANT_SCALE)
     kmeans, cfin = _kmeans_sql_ctes(
-        "kb", "vqs", "asub", "seed_vals", iterations, part_cols=["s"]
+        "kb", "vqs", "asub", "seed_vals", KMEANS_ITERATIONS, part_cols=["s"]
     )
     return f"""
-WITH dimpos AS (SELECT unnest(range(1, {dim + 1})) AS pos),
+WITH dimpos AS (SELECT unnest(range(1, {DIM + 1})) AS pos),
 valid AS (
-  SELECT vec_id, embedding, {label_col} FROM {table}
+  SELECT vec_id, embedding, label FROM embeddings
   WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-    AND len(embedding) >= {dim}
-    AND len(list_filter(embedding[1:{dim}], x -> x IS NULL)) = 0),
+    AND len(embedding) >= {DIM}
+    AND len(list_filter(embedding[1:{DIM}], x -> x IS NULL)) = 0),
 vqs AS (
   SELECT v.vec_id, (d.pos - 1) // {sub} AS s, ((d.pos - 1) % {sub}) + 1 AS lp,
-         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {scale}) AS BIGINT) AS val
+         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) AS val
   FROM valid v, dimpos d),
 asub AS MATERIALIZED (
   SELECT vec_id, s,
@@ -1477,7 +1416,7 @@ asub AS MATERIALIZED (
   FROM vqs GROUP BY vec_id, s),
 seeds AS (
   SELECT vec_id, DENSE_RANK() OVER (ORDER BY vec_id) - 1 AS cid
-  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT {n_codes})),
+  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT 16)),
 seed_vals AS MATERIALIZED (
   SELECT q.s, se.cid, q.lp AS pos, q.val AS c
   FROM seeds se JOIN vqs q USING (vec_id)),
@@ -1494,7 +1433,7 @@ err AS (
   JOIN codes cd ON cd.vec_id = q.vec_id AND cd.s = q.s
   JOIN {cfin} kk ON kk.s = cd.s AND kk.cid = cd.cid AND kk.pos = q.lp
   GROUP BY q.vec_id)
-SELECT v.{label_col} AS label,
+SELECT v.label AS label,
        CAST(COUNT(*) AS BIGINT) AS n_vecs,
        (CAST(SUM(err.e) AS DOUBLE) / {sq}) / CAST(COUNT(*) AS DOUBLE)
          AS mean_sq_err,
@@ -1559,28 +1498,19 @@ def ivf_recall_curve(
     return out
 
 
-def ivf_recall_curve_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    n_centroids: int = 16,
-    probe_counts: tuple[int, ...] = (1, 2, 4),
-    iterations: int = 2,
-    scale: int = QUANT_SCALE,
-    table: str = "embeddings",
-) -> str:
+def ivf_recall_curve_sql(query_pred: str) -> str:
     """DuckDB twin of :func:`ivf_recall_curve`: ONE quantized-grid
     Lloyd training + cell assignment + probe ranking, then one top-k +
     hit-count leg per probe width, unioned."""
-    dot = _dot_sql("q.embedding", "n.embedding", dim, one_based=True)
-    qn = _norm_sql("q.embedding", dim, one_based=True)
-    nn = _norm_sql("n.embedding", dim, one_based=True)
-    bf = brute_force_topk_sql(query_pred, k=k, dim=dim, table=table)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
+    qn = _norm_sql("q.embedding", DIM, one_based=True)
+    nn = _norm_sql("n.embedding", DIM, one_based=True)
+    bf = brute_force_topk_sql(query_pred)
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", iterations, part_cols=[]
+        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
     )
     legs = []
-    for p in probe_counts:
+    for p in PROBE_COUNTS:
         legs.append(
             f"""
 SELECT CAST({p} AS INTEGER) AS n_probe, tot.n_exact, h{p}.n_hit,
@@ -1597,15 +1527,15 @@ FROM tot, (
                ({dot}) / (({qn}) * ({nn})) AS cosine
         FROM probe_rank pr
         JOIN cells c ON c.cid = pr.cid
-        JOIN {table} q ON q.vec_id = pr.query_id
-        JOIN {table} n ON n.vec_id = c.neighbor_id
+        JOIN embeddings q ON q.vec_id = pr.query_id
+        JOIN embeddings n ON n.vec_id = c.neighbor_id
         WHERE pr.rn <= {p} AND pr.query_id <> c.neighbor_id) s)
-    WHERE rank <= {k}) a
+    WHERE rank <= {TOP_K}) a
   ON bf.query_id = a.query_id AND bf.neighbor_id = a.neighbor_id) h{p}"""
         )
     union = "\nUNION ALL\n".join(legs)
     return f"""
-WITH {_ivf_lloyd_preamble_sql(dim, scale, n_centroids, table)},
+WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
 {kmeans},
 cells AS MATERIALIZED (
   SELECT vec_id AS neighbor_id, cid FROM (
@@ -1668,17 +1598,9 @@ def ann_recall_report(exact: DataFrame, lsh: DataFrame) -> DataFrame:
     )
 
 
-def ann_recall_report_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    bf = brute_force_topk_sql(query_pred, k=k, dim=dim, table=table)
-    mp = lsh_topk_multiprobe_sql(
-        query_pred, k=k, dim=dim, sig_bits=sig_bits, table=table
-    )
+def ann_recall_report_sql(query_pred: str) -> str:
+    bf = brute_force_topk_sql(query_pred)
+    mp = lsh_topk_multiprobe_sql(query_pred)
     return f"""
 SELECT e.query_id,
        CAST(COUNT(*) AS BIGINT) AS n_exact,
@@ -1762,17 +1684,9 @@ def ivf_recall_audit(
     )
 
 
-def ivf_recall_audit_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    bf = brute_force_topk_sql(query_pred, k=k, dim=dim, table=table)
-    mp = lsh_topk_multiprobe_sql(
-        query_pred, k=k, dim=dim, sig_bits=sig_bits, table=table
-    )
+def ivf_recall_audit_sql(query_pred: str) -> str:
+    bf = brute_force_topk_sql(query_pred)
+    mp = lsh_topk_multiprobe_sql(query_pred)
     return f"""
 WITH e AS ({bf}), a AS ({mp}),
 tot AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
@@ -1842,17 +1756,9 @@ def pq_recall_audit(
     )
 
 
-def pq_recall_audit_sql(
-    query_pred: str,
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    bf = brute_force_topk_sql(query_pred, k=k, dim=dim, table=table)
-    mp = lsh_topk_multiprobe_sql(
-        query_pred, k=k, dim=dim, sig_bits=sig_bits, table=table
-    )
+def pq_recall_audit_sql(query_pred: str) -> str:
+    bf = brute_force_topk_sql(query_pred)
+    mp = lsh_topk_multiprobe_sql(query_pred)
     return f"""
 WITH e AS ({bf}), a AS ({mp}),
 tot AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
@@ -1917,13 +1823,8 @@ def knn_label_agreement(emb: DataFrame, graph: DataFrame) -> DataFrame:
     )
 
 
-def knn_label_agreement_sql(
-    k: int = 3,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    mp = lsh_topk_multiprobe_sql("TRUE", k=k, dim=dim, sig_bits=sig_bits, table=table)
+def knn_label_agreement_sql(k: int = 3) -> str:
+    mp = lsh_topk_multiprobe_sql("TRUE", k)
     return f"""
 WITH g AS ({mp})
 SELECT ql.label AS label,
@@ -1933,8 +1834,8 @@ SELECT ql.label AS label,
        CAST(SUM(CASE WHEN nl.label = ql.label THEN 1 ELSE 0 END) AS DOUBLE)
          / COUNT(*) AS agreement
 FROM g
-JOIN {table} ql ON g.query_id = ql.vec_id
-JOIN {table} nl ON g.neighbor_id = nl.vec_id
+JOIN embeddings ql ON g.query_id = ql.vec_id
+JOIN embeddings nl ON g.neighbor_id = nl.vec_id
 GROUP BY ql.label
 """
 
@@ -2009,30 +1910,28 @@ def quantization_audit(emb: DataFrame) -> DataFrame:
     )
 
 
-def quantization_audit_sql(
-    vec_col: str = "embedding", dim: int = DIM, table: str = "embeddings"
-) -> str:
-    g = ", ".join(f"ABS(CAST({vec_col}[{i + 1}] AS DOUBLE))" for i in range(dim))
-    wf = f"({vec_col} IS NOT NULL AND len({vec_col}) >= {dim})"
+def quantization_audit_sql() -> str:
+    g = ", ".join(f"ABS(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(DIM))
+    wf = f"(embedding IS NOT NULL AND len(embedding) >= {DIM})"
     max_abs = f"CASE WHEN {wf} THEN GREATEST({g}) END"
 
     def e(i: int) -> str:
-        xi = f"CAST({vec_col}[{i + 1}] AS DOUBLE)"
+        xi = f"CAST(embedding[{i + 1}] AS DOUBLE)"
         return (
             f"ABS({xi} - FLOOR({xi} * (127.0 / max_abs) + 0.5)"
-            f" / (127.0 / max_abs))"
+            " / (127.0 / max_abs))"
         )
 
-    max_err = "GREATEST(" + ", ".join(e(i) for i in range(dim)) + ")"
-    mse = " + ".join(f"{e(i)} * {e(i)}" for i in range(dim))
+    max_err = "GREATEST(" + ", ".join(e(i) for i in range(DIM)) + ")"
+    mse = " + ".join(f"{e(i)} * {e(i)}" for i in range(DIM))
     return f"""
 WITH m AS (
-  SELECT vec_id, {vec_col}, {max_abs} AS max_abs FROM {table}
+  SELECT vec_id, embedding, {max_abs} AS max_abs FROM embeddings
 )
 SELECT vec_id, max_abs,
        CASE WHEN max_abs > 0 THEN 127.0 / max_abs END AS scale,
        CASE WHEN max_abs > 0 THEN {max_err} END AS max_abs_err,
-       CASE WHEN max_abs > 0 THEN ({mse}) / {float(dim)} END AS mse
+       CASE WHEN max_abs > 0 THEN ({mse}) / {float(DIM)} END AS mse
 FROM m
 """
 
@@ -2107,38 +2006,33 @@ def source_drift_report(
     )
 
 
-def source_drift_report_sql(
-    vec_col: str = "embedding",
-    dim: int = DIM,
-    emb_table: str = "embeddings",
-    doc_table: str = "documents",
-) -> str:
+def source_drift_report_sql() -> str:
     row_max = "GREATEST(" + ", ".join(
-        f"ABS(CAST({vec_col}[{i + 1}] AS DOUBLE))" for i in range(dim)
+        f"ABS(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(DIM)
     ) + ")"
     qexpr = [
-        f"CAST(FLOOR(CAST({vec_col}[{i + 1}] AS DOUBLE) * (127.0 / g.gmax) + 0.5)"
+        f"CAST(FLOOR(CAST(embedding[{i + 1}] AS DOUBLE) * (127.0 / g.gmax) + 0.5)"
         f" AS BIGINT) AS q{i}"
-        for i in range(dim)
+        for i in range(DIM)
     ]
-    ssums = ", ".join(f"SUM(q{i}) AS s{i}" for i in range(dim))
-    tsums = ", ".join(f"SUM(q{i}) AS t{i}" for i in range(dim))
+    ssums = ", ".join(f"SUM(q{i}) AS s{i}" for i in range(DIM))
+    tsums = ", ".join(f"SUM(q{i}) AS t{i}" for i in range(DIM))
     dot = " + ".join(
-        f"CAST(p.s{i} AS DOUBLE) * CAST(t.t{i} AS DOUBLE)" for i in range(dim)
+        f"CAST(p.s{i} AS DOUBLE) * CAST(t.t{i} AS DOUBLE)" for i in range(DIM)
     )
     ns = " + ".join(
-        f"CAST(p.s{i} AS DOUBLE) * CAST(p.s{i} AS DOUBLE)" for i in range(dim)
+        f"CAST(p.s{i} AS DOUBLE) * CAST(p.s{i} AS DOUBLE)" for i in range(DIM)
     )
     nt = " + ".join(
-        f"CAST(t.t{i} AS DOUBLE) * CAST(t.t{i} AS DOUBLE)" for i in range(dim)
+        f"CAST(t.t{i} AS DOUBLE) * CAST(t.t{i} AS DOUBLE)" for i in range(DIM)
     )
     cos = f"({dot}) / (SQRT({ns}) * SQRT({nt}))"
     return f"""
-WITH g AS (SELECT MAX({row_max}) AS gmax FROM {emb_table}),
+WITH g AS (SELECT MAX({row_max}) AS gmax FROM embeddings),
 quantized AS (
   SELECT d.source, {", ".join(qexpr)}
-  FROM {emb_table} e
-  JOIN {doc_table} d ON e.vec_id = d.doc_id
+  FROM embeddings e
+  JOIN documents d ON e.vec_id = d.doc_id
   CROSS JOIN g
 ),
 per_src AS (
@@ -2213,25 +2107,19 @@ def semantic_decontaminate(
     )
 
 
-def semantic_decontaminate_sql(
-    threshold: float,
-    test_mod: int = 10,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    dot = _dot_sql("tr.embedding", "te.embedding", dim, one_based=True)
-    trn = _norm_sql("tr.embedding", dim, one_based=True)
-    ten = _norm_sql("te.embedding", dim, one_based=True)
-    str_ = _sig_sql("tr.embedding", sig_bits, one_based=True)
-    ste = _sig_sql("te.embedding", sig_bits, one_based=True)
+def semantic_decontaminate_sql(threshold: float) -> str:
+    dot = _dot_sql("tr.embedding", "te.embedding", DIM, one_based=True)
+    trn = _norm_sql("tr.embedding", DIM, one_based=True)
+    ten = _norm_sql("te.embedding", DIM, one_based=True)
+    str_ = _sig_sql("tr.embedding", SIG_BITS, one_based=True)
+    ste = _sig_sql("te.embedding", SIG_BITS, one_based=True)
     return f"""
 WITH cand AS (
   SELECT tr.vec_id AS train_id, te.vec_id AS matched_test_id,
          ({dot}) / (({trn}) * ({ten})) AS cosine
-  FROM {table} tr JOIN {table} te
+  FROM embeddings tr JOIN embeddings te
     ON ({str_}) = ({ste})
-   AND te.vec_id % {test_mod} = 0 AND tr.vec_id % {test_mod} <> 0
+   AND te.vec_id % 10 = 0 AND tr.vec_id % 10 <> 0
   WHERE ({dot}) / (({trn}) * ({ten})) >= {threshold}
 )
 SELECT train_id, matched_test_id, cosine FROM (
@@ -2295,21 +2183,14 @@ def recall_curve(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def recall_curve_sql(
-    query_pred: str,
-    ks: tuple[int, ...] = (1, 3, 5),
-    k: int = 5,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
-    bf = brute_force_topk_sql(query_pred, k=k, dim=dim, table=table)
-    mp = lsh_topk_multiprobe_sql(query_pred, k=k, dim=dim, sig_bits=sig_bits, table=table)
+def recall_curve_sql(query_pred: str) -> str:
+    bf = brute_force_topk_sql(query_pred)
+    mp = lsh_topk_multiprobe_sql(query_pred)
     per_k = "\nUNION ALL\n".join(
         f"""  SELECT CAST({kk} AS BIGINT) AS k,
          (SELECT CAST(COUNT(*) AS BIGINT) FROM e WHERE rank <= {kk}) AS n_exact,
          (SELECT CAST(COUNT(*) AS BIGINT) FROM p WHERE er <= {kk} AND ar <= {kk}) AS hits"""
-        for kk in ks
+        for kk in RECALL_KS
     )
     return f"""
 WITH e AS ({bf}), a AS ({mp}),
@@ -2416,14 +2297,7 @@ def knn_pagerank(
     )
 
 
-def knn_pagerank_sql(
-    k: int = 3,
-    damping: float = 0.85,
-    iterations: int = 2,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
+def knn_pagerank_sql(k: int = 3) -> str:
     """DuckDB twin: the same fixed power iterations with the in-sum as
     ``list_reduce(list_prepend(0.0, list(c ORDER BY src)), +)`` — the
     identical left fold the Spark side runs. The damping constants are
@@ -2431,10 +2305,10 @@ def knn_pagerank_sql(
     decimal-literal arithmetic is exact, Spark's is IEEE, so sharing
     the pre-folded double is the only way the CASE arithmetic can
     hash-match."""
-    graph = lsh_topk_multiprobe_sql("TRUE", k=k, dim=dim, sig_bits=sig_bits, table=table)
+    graph = lsh_topk_multiprobe_sql("TRUE", k)
     it_cte = []
     prev = "p0"
-    for i in range(1, iterations + 1):
+    for i in (1, 2):
         it_cte.append(f"""contrib{i} AS (
   SELECT e.dst, e.src, {prev}.p / CAST(d.outdeg AS DOUBLE) AS c
   FROM edges e JOIN deg d ON e.src = d.src JOIN {prev} ON {prev}.node = e.src
@@ -2447,9 +2321,9 @@ fold{i} AS (
 ),
 p{i} AS (
   SELECT v.vec_id AS node,
-         CAST('{1.0 - damping!r}' AS DOUBLE) / nn.n
-           + CAST('{damping!r}' AS DOUBLE) * COALESCE(f.s, 0.0) AS p
-  FROM {table} v CROSS JOIN nn LEFT JOIN fold{i} f ON v.vec_id = f.dst
+         CAST('{1.0 - PAGERANK_DAMPING!r}' AS DOUBLE) / nn.n
+           + CAST('{PAGERANK_DAMPING!r}' AS DOUBLE) * COALESCE(f.s, 0.0) AS p
+  FROM embeddings v CROSS JOIN nn LEFT JOIN fold{i} f ON v.vec_id = f.dst
 )""")
         prev = f"p{i}"
     iters = ",\n".join(it_cte)
@@ -2457,8 +2331,8 @@ p{i} AS (
 WITH graph AS ({graph}),
 edges AS (SELECT query_id AS src, neighbor_id AS dst FROM graph),
 deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg FROM edges GROUP BY src),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM {table}),
-p0 AS (SELECT vec_id AS node, 1.0 / nn.n AS p FROM {table} CROSS JOIN nn),
+nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM embeddings),
+p0 AS (SELECT vec_id AS node, 1.0 / nn.n AS p FROM embeddings CROSS JOIN nn),
 {iters}
 SELECT {prev}.node AS vec_id,
        COALESCE(d.outdeg, CAST(0 AS BIGINT)) AS outdeg,
@@ -2558,17 +2432,10 @@ def knn_triangles(emb: DataFrame, graph: DataFrame) -> DataFrame:
     )
 
 
-def knn_triangles_sql(
-    k: int = 3,
-    dim: int = DIM,
-    sig_bits: int = SIG_BITS,
-    table: str = "embeddings",
-) -> str:
+def knn_triangles_sql(k: int = 3) -> str:
     """DuckDB twin: identical symmetrize -> degree-orient -> wedge ->
     close pipeline over the shared multiprobe graph CTE."""
-    graph = lsh_topk_multiprobe_sql(
-        "TRUE", k=k, dim=dim, sig_bits=sig_bits, table=table
-    )
+    graph = lsh_topk_multiprobe_sql("TRUE", k)
     return f"""
 WITH graph AS ({graph}),
 und AS (
@@ -2610,7 +2477,7 @@ SELECT e.vec_id,
             THEN (2.0 * CAST(COALESCE(t.n_tri, 0) AS DOUBLE))
                  / (CAST(d.degree AS DOUBLE) * CAST(d.degree - 1 AS DOUBLE))
             ELSE 0.0 END AS lcc
-FROM {table} e
+FROM embeddings e
 LEFT JOIN deg d ON e.vec_id = d.node
 LEFT JOIN tcnt t ON e.vec_id = t.node
 """
@@ -2664,13 +2531,7 @@ def matryoshka_audit(
     return _reduce(lambda a, b: a.unionByName(b), reports)
 
 
-def matryoshka_audit_sql(
-    query_pred: str,
-    k: int = 5,
-    dims: tuple[int, ...] = (8, 16, 32),
-    full_dim: int = DIM,
-    table: str = "embeddings",
-) -> str:
+def matryoshka_audit_sql(query_pred: str) -> str:
     def topk_cte(name: str, d: int) -> str:
         dot = _dot_sql("q.embedding", "n.embedding", d, one_based=True)
         qn = _norm_sql("q.embedding", d, one_based=True)
@@ -2683,14 +2544,14 @@ def matryoshka_audit_sql(
              PARTITION BY q.vec_id
              ORDER BY ({dot}) / (({qn}) * ({nn})) DESC, n.vec_id
            ) AS rank
-    FROM {table} q, {table} n
+    FROM embeddings q, embeddings n
     WHERE ({query_pred}) AND q.vec_id <> n.vec_id
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {TOP_K}
 )"""
 
-    ctes = [topk_cte("exact_full", full_dim)]
+    ctes = [topk_cte("exact_full", DIM)]
     legs = []
-    for d in dims:
+    for d in (8, 16, 32):
         ctes.append(topk_cte(f"trunc_{d}", d))
         legs.append(f"""
 SELECT CAST({d} AS BIGINT) AS trunc_dim,
@@ -2760,29 +2621,23 @@ def norm_audit(
     )
 
 
-def norm_audit_sql(
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    dim: int = DIM,
-    scale: int = 100_000,
-    table: str = "embeddings",
-) -> str:
-    nrm = _norm_sql(vec_col, dim, one_based=True)
-    wf = f"({vec_col} IS NOT NULL AND len({vec_col}) >= {dim})"
+def norm_audit_sql() -> str:
+    nrm = _norm_sql("embedding", DIM, one_based=True)
+    wf = f"(embedding IS NOT NULL AND len(embedding) >= {DIM})"
     return f"""
 WITH q AS (
-  SELECT {label_col} AS label,
+  SELECT label AS label,
          CASE WHEN {wf} THEN {nrm} END AS nrm,
-         CASE WHEN {wf} THEN CAST(ROUND(({nrm}) * {scale}) AS BIGINT) END AS qn
-  FROM {table}
+         CASE WHEN {wf} THEN CAST(ROUND(({nrm}) * {FIXED_POINT_SCALE}) AS BIGINT) END AS qn
+  FROM embeddings
 )
 SELECT label,
        CAST(COUNT(*) AS BIGINT) AS n_vecs,
        CAST(SUM(CASE WHEN nrm IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_malformed,
        CAST(SUM(CASE WHEN nrm = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS zero_vectors,
-       CAST(MIN(qn) AS DOUBLE) / {float(scale)} AS min_norm,
-       CAST(MAX(qn) AS DOUBLE) / {float(scale)} AS max_norm,
-       (CAST(SUM(qn) AS DOUBLE) / {float(scale)}) / CAST(COUNT(qn) AS DOUBLE)
+       CAST(MIN(qn) AS DOUBLE) / {float(FIXED_POINT_SCALE)} AS min_norm,
+       CAST(MAX(qn) AS DOUBLE) / {float(FIXED_POINT_SCALE)} AS max_norm,
+       (CAST(SUM(qn) AS DOUBLE) / {float(FIXED_POINT_SCALE)}) / CAST(COUNT(qn) AS DOUBLE)
          AS mean_norm
 FROM q GROUP BY 1
 """
@@ -2847,20 +2702,14 @@ def isotropy_histogram(
     )
 
 
-def isotropy_histogram_sql(
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = DIM,
-    shift: int = ISOTROPY_SHIFT,
-    table: str = "embeddings",
-) -> str:
-    dot = _dot_sql("a.embedding", "b.embedding", dim, one_based=True)
-    na = _norm_sql("a.embedding", dim, one_based=True)
-    nb = _norm_sql("b.embedding", dim, one_based=True)
+def isotropy_histogram_sql() -> str:
+    dot = _dot_sql("a.embedding", "b.embedding", DIM, one_based=True)
+    na = _norm_sql("a.embedding", DIM, one_based=True)
+    nb = _norm_sql("b.embedding", DIM, one_based=True)
     return f"""
 WITH paired AS (
   SELECT ({dot}) / (({na}) * ({nb})) AS cos
-  FROM {table} a JOIN {table} b ON b.{id_col} = a.{id_col} + {shift}
+  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + {ISOTROPY_SHIFT}
   WHERE ({na}) > 0 AND ({nb}) > 0
 ),
 bucketed AS (

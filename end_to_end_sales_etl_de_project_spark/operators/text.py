@@ -310,13 +310,9 @@ def stratified_keep(
 
 
 def stratified_keep_sql(
-    strat_expr: str,
-    content_expr: str,
-    rates: dict[str, int],
-    default_pct: int,
-    salt: str = "sample-v1",
+    strat_expr: str, content_expr: str, rates: dict[str, int], default_pct: int
 ) -> str:
-    h = h60_sql(f"'{salt}' || {content_expr}")
+    h = h60_sql(f"'sample-v1' || {content_expr}")
     # build the CASE chain in the same last-wins order as the Spark
     # when()-fold (later dict entries override earlier ones)
     rate = str(default_pct)
@@ -350,15 +346,13 @@ def corpus_split(
     )
 
 
-def corpus_split_sql(
-    expr: str, train_pct: int = 90, val_pct: int = 5, salt: str = "split-v1"
-) -> str:
-    h = h60_sql(f"'{salt}' || {expr}")
+def corpus_split_sql(expr: str) -> str:
+    h = h60_sql(f"'split-v1' || {expr}")
     # h60 is non-negative (60-bit), so plain % matches Spark's pmod
     return (
-        f"CASE WHEN ({h}) % 100 < {train_pct} THEN 'train' "
-        f"WHEN ({h}) % 100 < {train_pct + val_pct} THEN 'val' "
-        f"ELSE 'test' END"
+        f"CASE WHEN ({h}) % 100 < 90 THEN 'train' "
+        f"WHEN ({h}) % 100 < 95 THEN 'val' "
+        "ELSE 'test' END"
     )
 
 
@@ -416,28 +410,22 @@ def doc_chunks(
     )
 
 
-def doc_chunks_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_size: int = 128,
-    stride: int = 96,
-    table: str = "documents",
-) -> str:
+def doc_chunks_sql(chunk_size: int = 128, stride: int = 96) -> str:
     if not 0 < stride <= chunk_size:
         raise ValueError(
             f"stride ({stride}) must be in (0, chunk_size={chunk_size}]: "
             "a larger stride drops tokens between windows"
         )
-    toks = tokens_sql(text_col)
+    toks = tokens_sql("text")
     return f"""
 WITH toked AS (
-  SELECT {id_col} AS doc, {toks} AS toks, len({toks}) AS n FROM {table}
+  SELECT doc_id AS doc, {toks} AS toks, len({toks}) AS n FROM documents
 ),
 expanded AS (
   SELECT doc, toks, n, unnest(generate_series(0, n - 1, {stride})) AS chunk_start
   FROM toked WHERE n > 0
 )
-SELECT doc AS {id_col},
+SELECT doc AS doc_id,
        CAST(chunk_start // {stride} AS BIGINT) AS chunk_id,
        CAST(chunk_start AS BIGINT) AS chunk_start,
        CAST(LEAST({chunk_size}, n - chunk_start) AS BIGINT) AS chunk_len,
@@ -527,17 +515,11 @@ def repetition_profile(
     )
 
 
-def repetition_profile_sql(
-    k: int = 3,
-    threshold: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
-    grams = positional_shingles_sql_from_toks("toks", k)
+def repetition_profile_sql() -> str:
+    toks = tokens_sql("text")
+    grams = positional_shingles_sql_from_toks("toks", 3)
     return f"""
-WITH toked AS (SELECT {id_col} AS doc, {toks} AS toks FROM {table}),
+WITH toked AS (SELECT doc_id AS doc, {toks} AS toks FROM documents),
 g AS (SELECT doc, unnest({grams}) AS g FROM toked),
 per_gram AS (
   SELECT doc, g, CAST(COUNT(*) AS BIGINT) AS cnt FROM g GROUP BY doc, g
@@ -549,14 +531,14 @@ per_doc AS (
          CAST(SUM(cnt * length(g)) AS BIGINT) AS total_chars
   FROM per_gram GROUP BY doc
 )
-SELECT d.{id_col} AS doc_id,
+SELECT d.doc_id AS doc_id,
        COALESCE(p.n_ngrams, 0) AS n_ngrams,
        COALESCE(p.dup_chars, 0) AS dup_chars,
        COALESCE(p.total_chars, 0) AS total_chars,
        CAST(p.dup_chars AS DOUBLE) / p.total_chars AS dup_char_frac,
-       COALESCE(CAST(p.dup_chars AS DOUBLE) / p.total_chars > {threshold}, FALSE)
+       COALESCE(CAST(p.dup_chars AS DOUBLE) / p.total_chars > 0.1, FALSE)
          AS repetitive
-FROM {table} d LEFT JOIN per_doc p ON d.{id_col} = p.doc
+FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc
 """
 
 
@@ -633,17 +615,12 @@ def vocab_overlap(
     )
 
 
-def vocab_overlap_sql(
-    source_col: str = "source",
-    text_col: str = "text",
-    top_k: int = 50,
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
+def vocab_overlap_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH counts AS (
-  SELECT {source_col} AS src, tok, COUNT(*) AS n
-  FROM {table}, UNNEST({toks}) AS u(tok)
+  SELECT source AS src, tok, COUNT(*) AS n
+  FROM documents, UNNEST({toks}) AS u(tok)
   GROUP BY 1, 2
 ),
 top AS (
@@ -651,7 +628,7 @@ top AS (
   FROM (SELECT src, tok,
                ROW_NUMBER() OVER (PARTITION BY src ORDER BY n DESC, tok ASC) AS rk
         FROM counts)
-  WHERE rk <= {top_k}
+  WHERE rk <= 50
 ),
 sizes AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS vocab FROM top GROUP BY src),
 common AS (
@@ -734,30 +711,24 @@ def zipf_slope(
     )
 
 
-def zipf_slope_sql(
-    source_col: str = "source",
-    text_col: str = "text",
-    top_k: int = 300,
-    scale: int = 100_000,
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
+def zipf_slope_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH counts AS (
-  SELECT {source_col} AS src, tok, COUNT(*) AS n
-  FROM {table}, UNNEST({toks}) AS u(tok)
+  SELECT source AS src, tok, COUNT(*) AS n
+  FROM documents, UNNEST({toks}) AS u(tok)
   GROUP BY 1, 2
 ),
 ranked AS (
   SELECT src, n,
          ROW_NUMBER() OVER (PARTITION BY src ORDER BY n DESC, tok ASC) AS rk
   FROM counts
-  QUALIFY rk <= {top_k}
+  QUALIFY rk <= 300
 ),
 quant AS (
   SELECT src,
-         CAST(ROUND(LN(CAST(rk AS DOUBLE)) * {scale}) AS BIGINT) AS xq,
-         CAST(ROUND(LN(CAST(n AS DOUBLE)) * {scale}) AS BIGINT) AS yq
+         CAST(ROUND(LN(CAST(rk AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT) AS xq,
+         CAST(ROUND(LN(CAST(n AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT) AS yq
   FROM ranked
 ),
 stats AS (
@@ -834,16 +805,12 @@ def token_concentration(
     )
 
 
-def token_concentration_sql(
-    source_col: str = "source",
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
-    toks = tokens_sql(text_col)
+def token_concentration_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH counts AS (
-  SELECT {source_col} AS src, tok, COUNT(*) AS n
-  FROM {table}, UNNEST({toks}) AS u(tok)
+  SELECT source AS src, tok, COUNT(*) AS n
+  FROM documents, UNNEST({toks}) AS u(tok)
   GROUP BY 1, 2
 ),
 ranked AS (
@@ -927,15 +894,11 @@ def bpe_pair_stats(
     ).filter(F.col("rnk") <= 50)
 
 
-def bpe_pair_stats_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    top_k: int = 50,
-) -> str:
-    return f"""
+def bpe_pair_stats_sql() -> str:
+    return """
 WITH words AS (
-  SELECT unnest(regexp_extract_all(lower({text_col}), '[a-z]+')) AS word
-  FROM {table}
+  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
+  FROM documents
 ),
 vocab AS (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS wc FROM words GROUP BY 1
@@ -954,7 +917,7 @@ ranked AS (
   FROM agg
 )
 SELECT pair, pair_count, n_vocab_words, CAST(rnk AS BIGINT) AS rnk
-FROM ranked WHERE rnk <= {top_k}
+FROM ranked WHERE rnk <= 50
 """
 
 
@@ -1131,17 +1094,12 @@ def char_entropy(
     )
 
 
-def char_entropy_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-    scale: int = 100_000,
-) -> str:
+def char_entropy_sql() -> str:
     return f"""
 WITH grams AS (
-  SELECT {id_col} AS doc, substring({text_col}, CAST(i AS INT), 2) AS g
-  FROM {table}, UNNEST(range(1, length({text_col}))) AS u(i)
-  WHERE length({text_col}) >= 2
+  SELECT doc_id AS doc, substring(text, CAST(i AS INT), 2) AS g
+  FROM documents, UNNEST(range(1, length(text))) AS u(i)
+  WHERE length(text) >= 2
 ),
 counts AS (
   SELECT doc, g, CAST(COUNT(*) AS BIGINT) AS c FROM grams GROUP BY 1, 2
@@ -1149,17 +1107,17 @@ counts AS (
 per_doc AS (
   SELECT doc,
          CAST(SUM(c) AS BIGINT) AS t,
-         CAST(SUM(c * CAST(ROUND(LN(CAST(c AS DOUBLE)) * {scale}) AS BIGINT))
+         CAST(SUM(c * CAST(ROUND(LN(CAST(c AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT))
               AS BIGINT) AS s
   FROM counts GROUP BY 1
 )
-SELECT d.{id_col} AS doc_id,
+SELECT d.doc_id AS doc_id,
        CAST(COALESCE(p.t, 0) AS BIGINT) AS n_bigrams,
-       CAST(CAST(ROUND(LN(CAST(p.t AS DOUBLE)) * {scale}) AS BIGINT) AS DOUBLE)
-           / {float(scale)}
-         - (CAST(p.s AS DOUBLE) / {float(scale)}) / CAST(p.t AS DOUBLE)
+       CAST(CAST(ROUND(LN(CAST(p.t AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT) AS DOUBLE)
+           / {float(FIXED_POINT_SCALE)}
+         - (CAST(p.s AS DOUBLE) / {float(FIXED_POINT_SCALE)}) / CAST(p.t AS DOUBLE)
          AS entropy_nats
-FROM {table} d LEFT JOIN per_doc p ON d.{id_col} = p.doc
+FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc
 """
 
 
@@ -1246,14 +1204,10 @@ def language_confidence(
     )
 
 
-def language_confidence_sql(
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
+def language_confidence_sql() -> str:
     langs = list(LANG_STOPWORDS)
-    pred = predicted_lang_sql(text_col)
-    score = {lg: stopword_hits_sql(text_col, lg) for lg in langs}
+    pred = predicted_lang_sql("text")
+    score = {lg: stopword_hits_sql("text", lg) for lg in langs}
 
     def second_for(elected: str) -> str:
         return "GREATEST(" + ", ".join(
@@ -1271,12 +1225,12 @@ def language_confidence_sql(
         + " END"
     )
     return f"""
-SELECT {id_col} AS doc_id,
+SELECT doc_id AS doc_id,
        {pred} AS predicted_lang,
        CAST({top} AS BIGINT) AS top_score,
        CAST({second} AS BIGINT) AS second_score,
        CAST(({top}) - ({second}) AS BIGINT) AS margin
-FROM {table}
+FROM documents
 """
 
 
@@ -1375,10 +1329,8 @@ def _gopher_parts_sql(expr: str) -> dict[str, str]:
     }
 
 
-def gopher_rules_sql(
-    id_col: str = "doc_id", text_col: str = "text", table: str = "documents"
-) -> str:
-    p = _gopher_parts_sql(text_col)
+def gopher_rules_sql() -> str:
+    p = _gopher_parts_sql("text")
     rules = {
         "r_word_count": f"{p['words']} >= 50 AND {p['words']} <= 100000",
         "r_mean_word_len": (
@@ -1393,10 +1345,10 @@ def gopher_rules_sql(
     cols = ",\n       ".join(f"({sql}) AS {name}" for name, sql in rules.items())
     conj = " AND ".join(f"({sql})" for sql in rules.values())
     return f"""
-SELECT {id_col} AS doc_id,
+SELECT doc_id AS doc_id,
        {cols},
        ({conj}) AS passes_all
-FROM {table}
+FROM documents
 """
 
 
@@ -1462,10 +1414,8 @@ def gopher_rule_attribution(docs: DataFrame) -> DataFrame:
     )
 
 
-def gopher_rule_attribution_sql(
-    id_col: str = "doc_id", text_col: str = "text", table: str = "documents"
-) -> str:
-    rules = gopher_rules_sql(id_col=id_col, text_col=text_col, table=table)
+def gopher_rule_attribution_sql() -> str:
+    rules = gopher_rules_sql()
     legs = "\nUNION ALL\n".join(
         f"""
 SELECT '{name}' AS rule,
@@ -1524,33 +1474,28 @@ def unigram_entropy(
     )
 
 
-def unigram_entropy_sql(
-    source_col: str = "source",
-    text_col: str = "text",
-    table: str = "documents",
-    scale: int = 100_000,
-) -> str:
-    toks = tokens_sql(text_col)
+def unigram_entropy_sql() -> str:
+    toks = tokens_sql("text")
     return f"""
 WITH counts AS (
-  SELECT {source_col} AS source, tok, CAST(COUNT(*) AS BIGINT) AS n
-  FROM {table}, UNNEST({toks}) AS u(tok)
+  SELECT source AS source, tok, CAST(COUNT(*) AS BIGINT) AS n
+  FROM documents, UNNEST({toks}) AS u(tok)
   GROUP BY 1, 2
 ),
 per_source AS (
   SELECT source,
          CAST(SUM(n) AS BIGINT) AS t,
          CAST(COUNT(*) AS BIGINT) AS vocab_size,
-         CAST(SUM(n * CAST(ROUND(LN(CAST(n AS DOUBLE)) * {scale}) AS BIGINT))
+         CAST(SUM(n * CAST(ROUND(LN(CAST(n AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT))
               AS BIGINT) AS s
   FROM counts GROUP BY 1
 )
 SELECT source,
        t AS n_tokens,
        vocab_size,
-       CAST(CAST(ROUND(LN(CAST(t AS DOUBLE)) * {scale}) AS BIGINT) AS DOUBLE)
-           / {float(scale)}
-         - (CAST(s AS DOUBLE) / {float(scale)}) / CAST(t AS DOUBLE)
+       CAST(CAST(ROUND(LN(CAST(t AS DOUBLE)) * {FIXED_POINT_SCALE}) AS BIGINT) AS DOUBLE)
+           / {float(FIXED_POINT_SCALE)}
+         - (CAST(s AS DOUBLE) / {float(FIXED_POINT_SCALE)}) / CAST(t AS DOUBLE)
          AS unigram_entropy
 FROM per_source
 """
@@ -1656,18 +1601,14 @@ def frequent_tokens(
     )
 
 
-def frequent_tokens_sql(
-    text_col: str = "text",
-    capacity: int = 128,
-    table: str = "documents",
-) -> str:
+def frequent_tokens_sql(capacity: int = 128) -> str:
     """DuckDB twin: the exact GROUP BY + strict HAVING the sketch-then-
     verify phases reproduce (the Misra-Gries guarantee makes the Spark
     output identical to this for every partitioning)."""
-    toks = tokens_sql(text_col)
+    toks = tokens_sql("text")
     return f"""
 WITH tok AS (
-  SELECT unnest({toks}) AS token FROM {table} WHERE {text_col} IS NOT NULL
+  SELECT unnest({toks}) AS token FROM documents WHERE text IS NOT NULL
 ),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total_tokens FROM tok),
 cnt AS (

@@ -1118,7 +1118,12 @@ def q34_partitioned_write_readback(spark: SparkSession, sf_dir: str) -> DataFram
     # guide §2.5: never rand() under retries) bounded by
     # SPARK_GRAFT_WRITE_SALT = ceil(max month bytes / target file size)
     # in production; the default of 1 keeps one file per month and the
-    # local bench comparable. File count stays |months| x n_salt. (The
+    # local bench comparable. File count is at most |months| x n_salt.
+    # The salt spreads a month over several files only when that month's
+    # shuffle data exceeds AQE's advisory partition size (64 MB): below
+    # it, AQE coalesces this REPARTITION_BY_COL shuffle back into one
+    # task per month (measured at sf0.001 with the salt at 4: every
+    # month still wrote one file). (The
     # AQE REBALANCE hint was measured instead and REJECTED here: at
     # bench scale optimizeSkewsInRebalancePartitions coalesces all 80
     # tiny months under one advisory-sized task — the serial write this

@@ -1706,9 +1706,10 @@ def a10_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _a11_oracle(k: int = 5) -> str:
+def _a11_oracle() -> str:
     from end_to_end_sales_etl_de_project_spark.operators.similarity import (
         DIM,
+        TOP_K,
         _dot_sql,
         _norm_sql,
     )
@@ -1728,7 +1729,7 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
                                       ORDER BY cosine DESC, neighbor_id) AS rank
   FROM scored
 )
-WHERE rank <= {k}
+WHERE rank <= {TOP_K}
 """
 
 

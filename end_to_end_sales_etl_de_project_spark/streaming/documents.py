@@ -283,13 +283,13 @@ def neardup_probe(
         MIN_JACCARD,
         N_BANDS,
         N_HASHES,
+        band_keys,
     )
     from end_to_end_sales_etl_de_project_spark.operators.text import (
         shingles_from_tokens,
         tokens,
     )
 
-    rpb = N_HASHES // N_BANDS
     sh_a = F.array_distinct(
         F.transform(shingles_from_tokens(tokens("text"), SHINGLE_K), lambda s: h60(s))
     )
@@ -299,19 +299,8 @@ def neardup_probe(
         return F.array_min(F.transform(sh_a, lambda h: minhash_family(h, i)))
 
     mh = [_mh_member(i) for i in range(N_HASHES)]
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[mh[b * rpb + r] for r in range(rpb)]).alias(
-                    "key"
-                ),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
     probe = docs.select(
-        "doc_id", sh_a.alias("sh_a"), F.explode(bands).alias("bk")
+        "doc_id", sh_a.alias("sh_a"), F.explode(band_keys(mh, N_BANDS)).alias("bk")
     ).select(
         "doc_id",
         "sh_a",

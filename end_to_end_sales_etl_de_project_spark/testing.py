@@ -135,7 +135,7 @@ def _to_pandas_resilient(spark_df: DataFrame) -> pd.DataFrame:
 
 
 def compare_spark_to_oracle(
-    name: str, spark_df: DataFrame, oracle_df: pd.DataFrame, max_report: int = 5
+    name: str, spark_df: DataFrame, oracle_df: pd.DataFrame
 ) -> CompareResult:
     sp = _to_pandas_resilient(spark_df)
     problems: list[str] = []
@@ -149,8 +149,8 @@ def compare_spark_to_oracle(
         srows, orows = _canon_rows(sp), _canon_rows(oracle_df)
         if srows != orows:
             sset, oset = set(srows), set(orows)
-            only_s = list(sset - oset)[:max_report]
-            only_o = list(oset - sset)[:max_report]
+            only_s = list(sset - oset)[:5]
+            only_o = list(oset - sset)[:5]
             problems.append(f"values differ: spark-only={only_s} oracle-only={only_o}")
     return CompareResult(
         name=name,

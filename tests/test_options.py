@@ -1,13 +1,15 @@
-"""One value, no option: every defaulted parameter of an engine function
+"""One value, no option: every defaulted parameter of a package function
 is set by some caller. A parameter that every caller leaves at its
 default is a constant with extra steps — it doubles the configurations
 that tests and benchmarks must cover while only one is ever run — so
 the scan below fails as soon as one appears.
 
-*Engine function*: a module-level function or a method of a
-module-level class in the package, except the oracle generators (names
-ending ``_sql`` or ``_oracle``) and ``testing.py``, the reference side
-the tests compare against.
+*Package function*: a module-level function or a method of a
+module-level class anywhere in the package — the engine, the DuckDB
+oracle generators (names ending ``_sql`` or ``_oracle``) and
+``testing.py`` alike. An oracle generator reads the engine's named
+constants for the values no caller varies, so the engine plan and its
+reference never carry two copies of one query parameter.
 
 *Set*: some call in the package, ``tests/``, ``scripts/``,
 ``perfbench/``, ``bench.py`` or ``__spark_entry__.py`` whose callee name
@@ -34,21 +36,17 @@ def _py_files(root: str) -> list[pathlib.Path]:
     return [p] if p.is_file() else sorted(p.rglob("*.py"))
 
 
-def _engine_functions() -> dict[tuple[str, str, str], ast.FunctionDef]:
+def _package_functions() -> dict[tuple[str, str, str], ast.FunctionDef]:
     """(module path, class or '', name) -> def."""
     out = {}
     for path in _py_files(PKG):
-        if path.name == "testing.py":
-            continue
         rel = path.relative_to(REPO).as_posix()
         for node in ast.parse(path.read_text()).body:
             members = [("", node)]
             if isinstance(node, ast.ClassDef):
                 members = [(node.name, m) for m in node.body]
             for cls, fn in members:
-                if isinstance(fn, ast.FunctionDef) and not fn.name.endswith(
-                    ("_sql", "_oracle")
-                ):
+                if isinstance(fn, ast.FunctionDef):
                     out[(rel, cls, fn.name)] = fn
     return out
 
@@ -117,8 +115,8 @@ def _calls() -> list[tuple[str, ast.Call, list[tuple[str, str, set[str]]]]]:
 
 def unset_parameters() -> set[tuple[str, str, str, str]]:
     """(module path, class or '', function, parameter) for every
-    defaulted engine parameter that no caller sets."""
-    fns = _engine_functions()
+    defaulted package parameter that no caller sets."""
+    fns = _package_functions()
     by_name = defaultdict(list)
     for key in fns:
         by_name[key[2]].append(key)
@@ -158,6 +156,6 @@ def unset_parameters() -> set[tuple[str, str, str, str]]:
 def test_every_engine_parameter_is_set_by_a_caller():
     unset = sorted(f"{m}:{c + '.' if c else ''}{f}({p})" for m, c, f, p in unset_parameters())
     assert not unset, (
-        f"{len(unset)} engine parameters are never set by any caller — make "
+        f"{len(unset)} package parameters are never set by any caller — make "
         "each a constant in its function body: " + ", ".join(unset)
     )
