@@ -38,8 +38,9 @@ def h60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS UBIGINT)::BIGINT"
 
 
-def h60_seeded_sql(expr: str, seed: int) -> str:
-    return h60_sql(f"({expr} || '#{seed}')")
+def h60_seeded_sql(seed: int) -> str:
+    """:func:`h60_seeded` of the ``shingle`` column (cast to text)."""
+    return h60_sql(f"(CAST(shingle AS VARCHAR) || '#{seed}')")
 
 
 # Universal-hash family for minhash permutations: one md5 per value,
@@ -70,6 +71,7 @@ def minhash_family(h_col: Column, i: int) -> Column:
     return (F.lit(a) * (h_col % MERSENNE_P) + F.lit(b)) % MERSENNE_P
 
 
-def minhash_family_sql(h_expr: str, i: int) -> str:
+def minhash_family_sql(i: int) -> str:
+    """:func:`minhash_family` of the already-hashed ``shingle`` column."""
     a, b = PERM_PARAMS[i]
-    return f"(({a} * (({h_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
+    return f"(({a} * ((shingle) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"

@@ -31,7 +31,6 @@ from end_to_end_sales_etl_de_project_spark.functions.scalar import full_name, mo
 from end_to_end_sales_etl_de_project_spark.operators.metrics import (
     grouped_monthly_sum,
     top_performer_incentive,
-    windowed_partition_sum,
 )
 
 
@@ -111,34 +110,23 @@ def sales_team_mart(enriched: DataFrame) -> DataFrame:
     )
 
 
-def customer_monthly_purchase(enriched: DataFrame, faithful: bool = False) -> DataFrame:
+def customer_monthly_purchase(enriched: DataFrame) -> DataFrame:
     """Metric 1 (transform.py:123-136): per-customer monthly spend.
 
-    ``faithful=True`` runs the reference's window+distinct plan;
-    default is the equivalent groupBy (map-side combine). Output
-    columns match the reference mart (transform.py:129-131).
+    The groupBy equivalent (map-side combine) of the reference's
+    window+distinct plan; tests/test_pipeline.py checks the two agree.
+    Output columns match the reference mart (transform.py:129-131).
     """
     base = enriched.withColumn("sales_date_month", month_key("sales_date"))
-    carry = ["full_name", "customer_address", "phone_number"]
     base = base.withColumn(
         "full_name", full_name("customer_first_name", "customer_last_name")
     )
-    if faithful:
-        out = windowed_partition_sum(
-            base,
-            partition_keys=["customer_id", "sales_date_month"],
-            measure="total_cost",
-            out_col="total_sales",
-            carry_cols=carry,
-        )
-    else:
-        out = grouped_monthly_sum(
-            base,
-            group_keys=["customer_id", "sales_date_month"],
-            measure="total_cost",
-            out_col="total_sales",
-            carry_cols=carry,
-        )
+    out = grouped_monthly_sum(
+        base,
+        group_keys=["customer_id", "sales_date_month"],
+        out_col="total_sales",
+        carry_cols=["full_name", "customer_address", "phone_number"],
+    )
     return out.select(
         "customer_id",
         "full_name",
@@ -149,30 +137,19 @@ def customer_monthly_purchase(enriched: DataFrame, faithful: bool = False) -> Da
     )
 
 
-def sales_team_incentive(enriched: DataFrame, faithful: bool = False) -> DataFrame:
+def sales_team_incentive(enriched: DataFrame) -> DataFrame:
     """Metric 2 (transform.py:139-158): monthly total per (store,
     person), rank within (store, month), 1% incentive to rank 1 — ties
     all paid (``rank()``)."""
     base = enriched.withColumn("sales_month", month_key("sales_date")).withColumn(
         "full_name", full_name("sales_person_first_name", "sales_person_last_name")
     )
-    keys = ["store_id", "sales_person_id", "sales_month"]
-    if faithful:
-        monthly = windowed_partition_sum(
-            base,
-            partition_keys=keys,
-            measure="total_cost",
-            out_col="total_sales_every_month",
-            carry_cols=["full_name"],
-        )
-    else:
-        monthly = grouped_monthly_sum(
-            base,
-            group_keys=keys,
-            measure="total_cost",
-            out_col="total_sales_every_month",
-            carry_cols=["full_name"],
-        )
+    monthly = grouped_monthly_sum(
+        base,
+        group_keys=["store_id", "sales_person_id", "sales_month"],
+        out_col="total_sales_every_month",
+        carry_cols=["full_name"],
+    )
     return top_performer_incentive(
         monthly,
         rank_partition=["store_id", "sales_month"],

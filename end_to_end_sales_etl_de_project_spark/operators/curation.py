@@ -206,7 +206,7 @@ def contamination_spans(toks_base: DataFrame) -> DataFrame:
 
 def contamination_spans_sql() -> str:
     split = corpus_split_sql("text")
-    pos_sh = positional_shingles_sql_from_toks("toks", CONTAMINATION_K)
+    pos_sh = positional_shingles_sql_from_toks(CONTAMINATION_K)
     return f"""
 WITH base AS (
   SELECT doc_id AS doc, {split} AS split, {tokens_sql('text')} AS toks
@@ -368,7 +368,7 @@ def curate_corpus(
     signature groupBy.
     """
     base = docs.select(F.col("doc_id").alias("doc"), F.col("text"))
-    ok = base.filter(quality_bucket("text") == "ok")
+    ok = base.filter(quality_bucket() == "ok")
     canon = (
         ok.select("doc", h60(F.col("text")).alias("th"))
         .groupBy("th")
@@ -400,7 +400,7 @@ def curate_corpus(
     return decided.select(
         F.col("doc").alias("doc_id"),
         stage.alias("stage"),
-        F.when(stage == "kept", corpus_split("text")).alias("split"),
+        F.when(stage == "kept", corpus_split()).alias("split"),
     )
 
 
@@ -674,7 +674,7 @@ def dataset_mix_report(docs: DataFrame) -> DataFrame:
 
     per = (
         docs.select(
-            corpus_split("text").alias("split"),
+            corpus_split().alias("split"),
             "source",
             "lang",
             token_count("text").cast("bigint").alias("toks"),
@@ -724,7 +724,7 @@ FROM per
 
 
 def curate_corpus_sql() -> str:
-    qb = quality_bucket_sql("text")
+    qb = quality_bucket_sql()
     th = h60_sql("text")
     pairs_sql = dedup.minhash_lsh_pairs_sql("doc", "text", table="surv")
     comp_sql = dedup.neardup_components_sql(pairs_sql, "doc", table="surv")
@@ -761,12 +761,13 @@ LEFT JOIN comp ON d.doc_id = comp.doc_id
 # ---------------------------------------------------------------------------
 
 
-def weighted_source_sample(
-    docs: DataFrame,
-    target_frac: float = 0.5,
-) -> DataFrame:
+# Share of the corpus's docs the rebalanced sample keeps.
+SAMPLE_TARGET_FRAC = 0.5
+
+
+def weighted_source_sample(docs: DataFrame) -> DataFrame:
     """Sqrt-temperature source rebalancing: each source's target share
-    of the sampled corpus is proportional to the SQUARE ROOT of its
+    of a ``SAMPLE_TARGET_FRAC`` sample of the corpus is proportional to the SQUARE ROOT of its
     token mass (the standard alpha=0.5 temperature that upweights small
     sources and flattens head-heavy mixes), and documents are kept by
     deterministic hash against the per-source keep rate. Output: one
@@ -808,7 +809,7 @@ def weighted_source_sample(
         F.lit(1.0),
         F.col("wt").cast("double")
         / total_wt
-        * (total_docs * F.lit(target_frac))
+        * (total_docs * F.lit(SAMPLE_TARGET_FRAC))
         / F.col("n_docs"),
     )
     rates = rates.select(
@@ -841,7 +842,7 @@ rates AS (
               THEN LEAST(1.0,
                 CAST(CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS DOUBLE)
                   / SUM(CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE))) AS BIGINT)) OVER ()
-                  * (SUM(n_docs) OVER () * 0.5)
+                  * (SUM(n_docs) OVER () * {SAMPLE_TARGET_FRAC})
                   / n_docs)
          END AS keep_rate
   FROM per
@@ -972,7 +973,7 @@ def curriculum_phases(docs: DataFrame) -> DataFrame:
 
 
 def curriculum_phases_sql() -> str:
-    wc = word_count_sql("text")
+    wc = word_count_sql()
     return f"""
 WITH sized AS (SELECT doc_id, {wc} AS n_words FROM documents),
 hist AS (
@@ -1333,13 +1334,13 @@ def diversity_sample(
 def diversity_sample_sql() -> str:
     shift = dedup.SIMHASH_BITS - DIVERSITY_BUCKET_BITS
     return f"""
-WITH fp AS ({dedup.simhash_sql('doc_id', 'text')}),
+WITH fp AS ({dedup.simhash_sql()}),
 bucketed AS (
   SELECT doc_id, CAST(simhash >> {shift} AS BIGINT) AS bucket FROM fp
 ),
 scored AS (
   SELECT doc_id AS doc_id,
-         {composite_quality_sql('text')} AS quality_score
+         {composite_quality_sql()} AS quality_score
   FROM documents
 ),
 ranked AS (

@@ -63,24 +63,24 @@ from end_to_end_sales_etl_de_project_spark.checkpoints import (
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """One row per distinct text: canonical (min) id + copy count.
     Grouping key is the md5-int of the text, not the text itself — the
     shuffle moves 8-byte keys."""
     return (
-        docs.select(F.col(id_col), h60(text_col).alias("text_hash"))
+        docs.select(F.col("doc_id"), h60("text").alias("text_hash"))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def exact_dedup_groups_sql(id_col: str, text_col: str) -> str:
+def exact_dedup_groups_sql() -> str:
     return f"""
-SELECT {h60_sql(text_col)} AS text_hash,
-       MIN({id_col}) AS canonical_id,
+SELECT {h60_sql('text')} AS text_hash,
+       MIN(doc_id) AS canonical_id,
        CAST(COUNT(*) AS BIGINT) AS n_copies
 FROM documents
 GROUP BY 1
@@ -92,9 +92,13 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def shingle_index(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+# Word count of one shingle, for every shingle index and its SQL twins.
+SHINGLE_K = 3
+
+
+def shingle_index(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The hashed shingle index every shingle operator reads: (doc,
-    shingle) — one row per distinct k-word shingle per doc, the shingle
+    shingle) — one row per distinct ``SHINGLE_K``-word shingle per doc, the shingle
     carried as its 60-bit md5 (``h60``), never as text.
 
     Hashing once here means every join/group key downstream is an
@@ -115,7 +119,7 @@ def shingle_index(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     )
     return toked.select(
         "doc",
-        F.explode(shingles_from_tokens(F.col("toks"), k)).alias("shingle"),
+        F.explode(shingles_from_tokens(F.col("toks"), SHINGLE_K)).alias("shingle"),
     ).select("doc", h60(F.col("shingle")).alias("shingle"))
 
 
@@ -209,9 +213,7 @@ def jaccard_pairs(
     )
 
 
-def _shared_shingle_counts_sql(
-    id_col: str, text_col: str, k: int, max_df: int | None
-) -> str:
+def _shared_shingle_counts_sql(max_df: int | None) -> str:
     """The WITH block of the all-pairs shingle oracles (d02 Jaccard,
     d16 containment): ``sizes`` per doc and ``inter``, the shared-shingle
     count per doc pair, over the universe capped at ``max_df`` docs per
@@ -227,7 +229,7 @@ sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0),"""
     )
     return f"""
 WITH sh0 AS (
-  SELECT {id_col} AS doc, unnest({word_shingles_sql(text_col, k)}) AS shingle FROM documents
+  SELECT doc_id AS doc, unnest({word_shingles_sql('text', SHINGLE_K)}) AS shingle FROM documents
 ),{df_cap}
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
 inter AS (
@@ -237,16 +239,14 @@ inter AS (
 )"""
 
 
-def ngram_jaccard_pairs_sql(
-    id_col: str, text_col: str, k: int, min_jaccard: float, max_df: int | None = None
-) -> str:
-    return _shared_shingle_counts_sql(id_col, text_col, k, max_df) + f"""
+def ngram_jaccard_pairs_sql(max_df: int | None = None) -> str:
+    return _shared_shingle_counts_sql(max_df) + f"""
 SELECT doc_a, doc_b,
        n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) AS jaccard
 FROM inter
 JOIN sizes sa ON doc_a = sa.doc
 JOIN sizes sb ON doc_b = sb.doc
-WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
+WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {MIN_JACCARD}
 """
 
 
@@ -255,22 +255,15 @@ WHERE n_common / CAST(sa.n + sb.n - n_common AS DOUBLE) >= {min_jaccard}
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(index: DataFrame, n_hashes: int) -> DataFrame:
-    """One row per doc with columns mh0..mh{n-1}: min over the doc's
-    shingles of each hash-family member. The ``index`` already carries
-    each shingle's md5 (:func:`shingle_index`); the n family members are
-    integer ops on that value (16x fewer md5s — minhash at corpus scale
-    is hash-bound). Single groupBy, map-side combinable."""
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import PERM_PARAMS
-
-    if n_hashes > len(PERM_PARAMS):
-        raise ValueError(
-            f"n_hashes={n_hashes} exceeds the {len(PERM_PARAMS)} fixed hash-family "
-            "parameters in functions/hashing.py — extend PERM_PARAMS (and the "
-            "oracle generator) to go wider"
-        )
+def minhash_signatures(index: DataFrame) -> DataFrame:
+    """One row per doc with columns mh0..mh15: min over the doc's
+    shingles of each of the ``N_HASHES`` hash-family members. The
+    ``index`` already carries each shingle's md5 (:func:`shingle_index`);
+    the family members are integer ops on that value (16x fewer md5s —
+    minhash at corpus scale is hash-bound). Single groupBy, map-side
+    combinable."""
     hashed = index.select("doc", F.col("shingle").alias("h"))
-    aggs = [F.min(minhash_family(F.col("h"), s)).alias(f"mh{s}") for s in range(n_hashes)]
+    aggs = [F.min(minhash_family(F.col("h"), s)).alias(f"mh{s}") for s in range(N_HASHES)]
     return hashed.groupBy("doc").agg(*aggs)
 
 
@@ -397,14 +390,14 @@ def minhash_lsh_pairs(
     return jaccard_pairs(hashed_shingles, MIN_JACCARD, candidates=cands)
 
 
-def _shingle_ctes_sql(id_col: str, text_col: str, table: str, k: int) -> str:
+def _shingle_ctes_sql(id_col: str, text_col: str, table: str) -> str:
     """The shingle CTEs of the MinHash-LSH oracles: ``sh0`` holds each
-    doc's k-word shingles, ``sh`` their 60-bit md5 (column still named
+    doc's ``SHINGLE_K``-word shingles, ``sh`` their 60-bit md5 (column still named
     shingle) — hashed ONCE, shared by the signature aggregation and the
     verify self-join, mirroring the Spark side, where both
     minhash_signatures and jaccard_pairs key on h60(shingle)."""
     return f"""sh0 AS (
-  SELECT {id_col} AS doc, unnest({word_shingles_sql(text_col, k)}) AS shingle FROM {table}
+  SELECT {id_col} AS doc, unnest({word_shingles_sql(text_col, SHINGLE_K)}) AS shingle FROM {table}
 ),
 sh AS (SELECT doc, {h60_sql('shingle')} AS shingle FROM sh0)"""
 
@@ -413,7 +406,7 @@ def _sigs_cte_sql() -> str:
     """``sigs``: one row per doc of ``sh`` with its ``N_HASHES`` MinHash
     columns mh0..mh15 (:func:`minhash_signatures`)."""
     cols = ", ".join(
-        f"MIN({minhash_family_sql('shingle', s)}) AS mh{s}" for s in range(N_HASHES)
+        f"MIN({minhash_family_sql(s)}) AS mh{s}" for s in range(N_HASHES)
     )
     return f"sigs AS (SELECT doc, {cols} FROM sh GROUP BY doc)"
 
@@ -455,7 +448,7 @@ def minhash_lsh_pairs_sql(
     else:
         guard, cand_src = _bucket_guard_sql(max_bucket_size), "pruned"
     return f"""
-WITH {_shingle_ctes_sql(id_col, text_col, table, 3)},
+WITH {_shingle_ctes_sql(id_col, text_col, table)},
 {_sigs_cte_sql()},
 buckets AS ({_band_rows_sql(N_BANDS)}),{guard}
 cands AS (
@@ -503,7 +496,7 @@ def fuzzy_decontaminate(
     n_hashes = signature_width(signatures)
     assert n_hashes % N_BANDS == 0
     splits = docs.select(
-        F.col("doc_id").alias("doc"), corpus_split("text").alias("split")
+        F.col("doc_id").alias("doc"), corpus_split().alias("split")
     )
     buckets = _pruned_buckets(
         _band_bucket_rows(signatures, N_BANDS, n_hashes // N_BANDS),
@@ -529,7 +522,7 @@ def fuzzy_decontaminate(
 
 def fuzzy_decontaminate_sql() -> str:
     return f"""
-WITH {_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents')},
 splits AS (SELECT doc_id AS doc, {corpus_split_sql('text')} AS split FROM documents),
 {_sigs_cte_sql()},
 buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
@@ -744,12 +737,12 @@ FROM reach GROUP BY node
 SIMHASH_BITS = 32
 
 
-def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc {SIMHASH_BITS}-bit SimHash over whitespace tokens (with
     multiplicity): bit b is the sign of the token-vote sum. One explode
     + one groupBy."""
     tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("token")
+        F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("token")
     ).withColumn("h", h60("token"))
     votes = [
         F.sum(
@@ -767,7 +760,7 @@ def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return per_doc.select(F.col("doc").alias("doc_id"), fingerprint.alias("simhash"))
 
 
-def simhash_sql(id_col: str, text_col: str) -> str:
+def simhash_sql() -> str:
     votes = ", ".join(
         f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(SIMHASH_BITS)
@@ -778,8 +771,8 @@ def simhash_sql(id_col: str, text_col: str) -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT {id_col} AS doc, {h60_sql('token')} AS h
-  FROM (SELECT {id_col}, unnest({tokens_sql(text_col)}) AS token FROM documents)
+  SELECT doc_id AS doc, {h60_sql('token')} AS h
+  FROM (SELECT doc_id, unnest({tokens_sql('text')}) AS token FROM documents)
 ),
 votes AS (SELECT doc, {votes} FROM tok GROUP BY doc)
 SELECT doc AS doc_id, {fp} AS simhash FROM votes
@@ -846,12 +839,12 @@ def minhash_estimate_audit(
     )
 
 
-def minhash_estimate_audit_sql(id_col: str, text_col: str) -> str:
+def minhash_estimate_audit_sql() -> str:
     est_expr = " + ".join(
         f"CASE WHEN ga.mh{s} = gb.mh{s} THEN 1 ELSE 0 END" for s in range(N_HASHES)
     )
     return f"""
-WITH {_shingle_ctes_sql(id_col, text_col, 'documents', 3)},
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents')},
 {_sigs_cte_sql()},
 buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
 cands AS (
@@ -894,11 +887,7 @@ CORPUS_PCT = 80
 INGEST_SALT = "ingest-v1"
 
 
-def incremental_dedup(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
+def incremental_dedup(docs: DataFrame) -> DataFrame:
     """The production ingest shape: a NEW batch of documents arrives
     against an EXISTING corpus, and each batch doc gets a decision —
     ``new`` (first sighting anywhere), ``dup_of_corpus`` (text already
@@ -916,10 +905,10 @@ def incremental_dedup(
     ingest keeps warm — this operator IS that index's refresh+probe.
     """
     base = docs.select(
-        F.col(id_col).alias("doc"),
-        h60(text_col).alias("th"),
+        F.col("doc_id").alias("doc"),
+        h60("text").alias("th"),
         F.pmod(
-            h60(F.concat(F.lit(INGEST_SALT), F.col(id_col).cast("string"))), F.lit(100)
+            h60(F.concat(F.lit(INGEST_SALT), F.col("doc_id").cast("string"))), F.lit(100)
         ).alias("b"),
     )
     corpus = base.filter(F.col("b") < CORPUS_PCT)
@@ -935,7 +924,7 @@ def incremental_dedup(
         batch.join(corpus_canon, "th", "left")
         .join(batch_min, "th")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             decision.alias("decision"),
             F.coalesce(F.col("corpus_canon"), F.col("batch_min")).alias(
                 "canonical_id"
@@ -944,20 +933,20 @@ def incremental_dedup(
     )
 
 
-def incremental_dedup_sql(id_col: str, text_col: str) -> str:
-    th = h60_sql(text_col)
-    salted = f"'{INGEST_SALT}' || CAST({id_col} AS VARCHAR)"
+def incremental_dedup_sql() -> str:
+    th = h60_sql("text")
+    salted = f"'{INGEST_SALT}' || CAST(doc_id AS VARCHAR)"
     b = f"({h60_sql(salted)}) % 100"
     return f"""
 WITH base AS (
-  SELECT {id_col} AS doc, {th} AS th, {b} AS b FROM documents
+  SELECT doc_id AS doc, {th} AS th, {b} AS b FROM documents
 ),
 corpus_canon AS (
   SELECT th, MIN(doc) AS corpus_canon FROM base WHERE b < {CORPUS_PCT} GROUP BY 1
 ),
 batch AS (SELECT doc, th FROM base WHERE b >= {CORPUS_PCT}),
 batch_min AS (SELECT th, MIN(doc) AS batch_min FROM batch GROUP BY 1)
-SELECT bt.doc AS {id_col},
+SELECT bt.doc AS doc_id,
        CASE WHEN cc.corpus_canon IS NOT NULL THEN 'dup_of_corpus'
             WHEN bt.doc <> bm.batch_min THEN 'dup_in_batch'
             ELSE 'new' END AS decision,
@@ -966,6 +955,12 @@ FROM batch bt
 LEFT JOIN corpus_canon cc ON bt.th = cc.th
 JOIN batch_min bm ON bt.th = bm.th
 """
+
+
+# The shingle containment a pair must reach, over the universe capped at
+# CONTAINMENT_MAX_DF docs per shingle (:func:`df_capped`).
+MIN_CONTAINMENT = 0.9
+CONTAINMENT_MAX_DF = 5
 
 
 def containment_pairs(index: DataFrame, min_containment: float) -> DataFrame:
@@ -1016,14 +1011,8 @@ def containment_pairs(index: DataFrame, min_containment: float) -> DataFrame:
     )
 
 
-def containment_pairs_sql(
-    id_col: str,
-    text_col: str,
-    k: int,
-    min_containment: float,
-    max_df: int | None = None,
-) -> str:
-    return _shared_shingle_counts_sql(id_col, text_col, k, max_df) + f"""
+def containment_pairs_sql(max_df: int | None = None) -> str:
+    return _shared_shingle_counts_sql(max_df) + f"""
 SELECT doc_a, doc_b,
        CAST(sa.n AS BIGINT) AS n_a,
        CAST(sb.n AS BIGINT) AS n_b,
@@ -1031,7 +1020,7 @@ SELECT doc_a, doc_b,
 FROM inter
 JOIN sizes sa ON doc_a = sa.doc
 JOIN sizes sb ON doc_b = sb.doc
-WHERE n_common / CAST(LEAST(sa.n, sb.n) AS DOUBLE) >= {min_containment}
+WHERE n_common / CAST(LEAST(sa.n, sb.n) AS DOUBLE) >= {MIN_CONTAINMENT}
 """
 
 
@@ -1081,9 +1070,9 @@ def shingle_novelty(docs: DataFrame, hashed_shingles: DataFrame) -> DataFrame:
     )
 
 
-def shingle_novelty_sql(id_col: str, text_col: str, k: int = 3) -> str:
+def shingle_novelty_sql() -> str:
     return f"""
-WITH {_shingle_ctes_sql(id_col, text_col, 'documents', k)},
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents')},
 first AS (SELECT shingle, MIN(doc) AS first_doc FROM sh GROUP BY 1),
 per AS (
   SELECT sh.doc,
@@ -1092,19 +1081,15 @@ per AS (
            AS n_novel
   FROM sh JOIN first f USING (shingle) GROUP BY 1
 )
-SELECT d.{id_col} AS doc_id,
+SELECT d.doc_id AS doc_id,
        COALESCE(per.n_shingles, 0) AS n_shingles,
        COALESCE(per.n_novel, 0) AS n_novel,
        COALESCE(CAST(per.n_novel AS DOUBLE) / per.n_shingles, 0.0) AS novelty
-FROM documents d LEFT JOIN per ON d.{id_col} = per.doc
+FROM documents d LEFT JOIN per ON d.doc_id = per.doc
 """
 
 
-def substring_dup_groups(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
+def substring_dup_groups(docs: DataFrame) -> DataFrame:
     """Substring-level duplicate detection: exact 32-char spans
     repeated across documents (the ExactSubstr signal of Lee et al.
     2022, "Deduplicating Training Data Makes Language Models Better"),
@@ -1139,7 +1124,7 @@ def substring_dup_groups(
     memorized passages).
     """
     base = docs.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("t")
+        F.col("doc_id").alias("doc"), F.col("text").alias("t")
     ).filter(F.length("t") >= 32)
     # the explode fans out ~len(text) rows per input row, so a
     # file-count-bound scan (one small parquet file = ONE partition)
@@ -1176,7 +1161,7 @@ def substring_dup_groups(
     )
 
 
-def substring_dup_groups_sql(id_col: str, text_col: str, max_len: int = 65536) -> str:
+def substring_dup_groups_sql(max_len: int = 65536) -> str:
     """DuckDB twin. generate_series can't take lateral column bounds
     (same constraint as m05's oracle), so positions come from a fixed
     ceiling well above any testdata doc length and an inequality join
@@ -1186,8 +1171,8 @@ def substring_dup_groups_sql(id_col: str, text_col: str, max_len: int = 65536) -
     hash mismatch attributed to the Spark side (ADVICE r7)."""
     return f"""
 WITH d AS (
-  SELECT {id_col} AS doc, {text_col} AS t, LENGTH({text_col}) AS n
-  FROM documents WHERE LENGTH({text_col}) >= 32
+  SELECT doc_id AS doc, text AS t, LENGTH(text) AS n
+  FROM documents WHERE LENGTH(text) >= 32
 ),
 guard AS (
   SELECT CASE WHEN (SELECT COALESCE(MAX(n), 0) FROM d) > {max_len}
@@ -1295,7 +1280,7 @@ def incremental_neardup(
 def incremental_neardup_sql() -> str:
     salted = f"'{INGEST_SALT}' || CAST(doc_id AS VARCHAR)"
     return f"""
-WITH {_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
+WITH {_shingle_ctes_sql('doc_id', 'text', 'documents')},
 member AS (SELECT doc_id AS doc, ({h60_sql(salted)}) % 100 AS bkt FROM documents),
 {_sigs_cte_sql()},
 buckets AS ({_band_rows_sql(N_BANDS)}),{_bucket_guard_sql(DEFAULT_MAX_BUCKET_SIZE)}
@@ -1370,7 +1355,7 @@ def lsh_tuning_curve(
     precision is one IEEE division (NULL when a config yields zero
     candidates, identically on both engines via the explicit guard).
     """
-    n_bands_ok(LSH_CONFIGS, signature_width(signatures))
+    n_bands_ok(signature_width(signatures))
     # r14: each leg references its candidate set twice (the volume
     # count and the verify join's probe side) — lazy, the banding
     # self-join chain ran twice per leg. Materialize the pair list
@@ -1417,9 +1402,10 @@ def lsh_tuning_curve(
     return _reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def n_bands_ok(configs: tuple[tuple[int, int], ...], n_hashes: int) -> bool:
-    """Every (n_bands, rows_per_band) must tile the signature exactly."""
-    for nb, rpb in configs:
+def n_bands_ok(n_hashes: int) -> bool:
+    """Every ``LSH_CONFIGS`` (n_bands, rows_per_band) must tile the
+    signature exactly."""
+    for nb, rpb in LSH_CONFIGS:
         if nb * rpb != n_hashes:
             raise ValueError(
                 f"config ({nb}, {rpb}) does not tile a {n_hashes}-hash "
@@ -1434,7 +1420,7 @@ def _lsh_config_ctes_sql(verified_cols: str) -> str:
     buckets, candidate pairs (``cands_b{n}r{r}``) and verified pairs
     (``ver_b{n}r{r}``, projecting ``verified_cols``)."""
     ctes = [
-        f"""{_shingle_ctes_sql('doc_id', 'text', 'documents', 3)},
+        f"""{_shingle_ctes_sql('doc_id', 'text', 'documents')},
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY 1),
 {_sigs_cte_sql()}"""
     ]
@@ -1670,7 +1656,7 @@ def split_shingle_tables(
     tables, refreshed with the corpus."""
     splits = docs.filter(F.col("text").isNotNull()).select(
         F.col("doc_id").alias("doc"),
-        corpus_split("text").alias("split"),
+        corpus_split().alias("split"),
         F.col("source").alias("src"),
     )
     labeled = hashed_shingles.join(splits, "doc")
@@ -1687,7 +1673,7 @@ def split_shingle_tables(
 
 
 def _bloom_probe(
-    probe: DataFrame, test_sh: DataFrame, m_bits: int, n_seeds: int
+    probe: DataFrame, test_sh: DataFrame, m_bits: int
 ) -> tuple[DataFrame, Column, DataFrame]:
     """Flag each probe row with Bloom membership against the test-set
     filter: returns (probe joined with markers, the ``is_pos`` AND-fold
@@ -1696,29 +1682,25 @@ def _bloom_probe(
     broadcast exact-verify marker; the probe side is never shuffled."""
     bits = test_sh.select(
         F.explode(
-            F.array(*[_bloom_bit(F.col("shingle"), s, m_bits) for s in range(n_seeds)])
+            F.array(*[_bloom_bit(F.col("shingle"), s, m_bits) for s in range(BLOOM_N_SEEDS)])
         ).alias("bit")
     ).distinct()
     probed = probe
-    for s in range(n_seeds):
+    for s in range(BLOOM_N_SEEDS):
         probed = probed.withColumn(f"b{s}", _bloom_bit(F.col("shingle"), s, m_bits))
         marker = bits.select(F.col("bit").alias(f"b{s}"), F.lit(1).alias(f"m{s}"))
         probed = probed.join(F.broadcast(marker), f"b{s}", "left")
     is_pos = reduce(
-        lambda a, b: a & b, [F.col(f"m{s}").isNotNull() for s in range(n_seeds)]
+        lambda a, b: a & b, [F.col(f"m{s}").isNotNull() for s in range(BLOOM_N_SEEDS)]
     )
     exact_marker = test_sh.select("shingle", F.lit(1).alias("mx"))
     flagged = probed.join(F.broadcast(exact_marker), "shingle", "left")
     return flagged, is_pos, bits
 
 
-def bloom_choose_m(
-    curve: DataFrame,
-    m_grid: tuple[int, ...] = BLOOM_M_GRID,
-    target_fp: float = BLOOM_TARGET_FP,
-) -> int:
+def bloom_choose_m(curve: DataFrame, m_grid: tuple[int, ...] = BLOOM_M_GRID) -> int:
     """Smallest grid filter size whose MEASURED corpus false-positive
-    rate meets ``target_fp``; the largest grid size if none qualifies.
+    rate meets ``BLOOM_TARGET_FP``; the largest grid size if none qualifies.
     The collect is control-plane and |m_grid|-row — the sizing decision
     a deployment makes once per corpus, not a data-path operation. NaN
     fp_rate (zero probes) never qualifies, mirroring SQL NaN-comparison
@@ -1729,7 +1711,7 @@ def bloom_choose_m(
         for r in rows
         if r["fp_rate"] is not None
         and not math.isnan(r["fp_rate"])
-        and r["fp_rate"] <= target_fp
+        and r["fp_rate"] <= BLOOM_TARGET_FP
     ]
     return min(ok) if ok else int(max(m_grid))
 
@@ -1786,7 +1768,7 @@ def bloom_decontaminate(
     test_sh, _, train_src = split_shingles
     # Map-side Bloom probe: one broadcast hash-lookup join per family
     # member, AND-folded — no shuffle of the probe side, no groupBy.
-    flagged, is_pos, _ = _bloom_probe(train_src, test_sh, m_bits, BLOOM_N_SEEDS)
+    flagged, is_pos, _ = _bloom_probe(train_src, test_sh, m_bits)
     report = flagged.select(
         "src",
         is_pos.alias("is_pos"),
@@ -1984,7 +1966,7 @@ def bloom_sizing_curve(
     test_sh, train_sh, _ = split_shingles
     legs = []
     for m in BLOOM_M_GRID:
-        probed, is_pos, bits = _bloom_probe(train_sh, test_sh, m, BLOOM_N_SEEDS)
+        probed, is_pos, bits = _bloom_probe(train_sh, test_sh, m)
         flagged = probed.select(
             is_pos.alias("is_pos"), F.col("mx").isNotNull().alias("is_exact")
         )
@@ -2122,9 +2104,9 @@ def dedup_tier_attribution(
     scoped = docs.filter(F.col("text").isNotNull())
     # tier 0: Bloom decontamination gate (d22's filter at doc grain)
     test_sh, train_sh, _ = split_shingles
-    probed, is_pos, _ = _bloom_probe(train_sh, test_sh, m_bits, BLOOM_N_SEEDS)
+    probed, is_pos, _ = _bloom_probe(train_sh, test_sh, m_bits)
     pos_sh = probed.filter(is_pos).select("shingle")
-    train_docs = scoped.filter(corpus_split("text") == "train").select(
+    train_docs = scoped.filter(corpus_split() == "train").select(
         F.col("doc_id").alias("doc")
     )
     # r14: each tier's flag set is referenced by every LATER tier's
@@ -2158,7 +2140,7 @@ def dedup_tier_attribution(
         .join(exact_f, "doc", "left_anti")
     )
     # tier 3: containment (df-capped universe, d16's exact semantics)
-    cpairs = containment_pairs(capped_shingles, 0.9)
+    cpairs = containment_pairs(capped_shingles, MIN_CONTAINMENT)
     contained = cpairs.select(
         F.when(F.col("n_a") < F.col("n_b"), F.col("doc_a"))
         .otherwise(F.col("doc_b"))
@@ -2216,7 +2198,7 @@ def dedup_tier_attribution(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def dedup_tier_attribution_sql(containment_max_df: int = 5) -> str:
+def dedup_tier_attribution_sql() -> str:
     """Oracle twin of the four-tier cascade. Tier 0 reproduces the d22
     pattern: SQL cannot parameterize the hash expressions by a
     data-dependent filter size, so the positive-shingle set exists per
@@ -2225,8 +2207,8 @@ def dedup_tier_attribution_sql(containment_max_df: int = 5) -> str:
     chooses m with a |grid|-row control-plane collect and builds ONE
     probe)."""
     comp = neardup_components_sql(minhash_lsh_pairs_sql("doc_id", "text"), "doc_id")
-    cont = containment_pairs_sql("doc_id", "text", 3, 0.9, max_df=containment_max_df)
-    sh = word_shingles_sql("text", 3)
+    cont = containment_pairs_sql(max_df=CONTAINMENT_MAX_DF)
+    sh = word_shingles_sql("text", SHINGLE_K)
     split = corpus_split_sql("text")
     legs = []
     for m in BLOOM_M_GRID:
@@ -2459,7 +2441,7 @@ def cms_error_audit_sql() -> str:
 
     sh = word_shingles_sql("text", 3)
     hash_cols = ", ".join(
-        f"({h60_seeded_sql('CAST(shingle AS VARCHAR)', s)}) AS h{s}"
+        f"({h60_seeded_sql(s)}) AS h{s}"
         for s in range(CMS_DEPTH)
     )
     legs = []

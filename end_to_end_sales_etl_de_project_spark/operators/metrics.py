@@ -20,8 +20,9 @@ Both forms are provided:
   (window + distinct). Physically this is a full shuffle on the window
   partition keys *plus* a second exchange for the distinct — the shape
   the reference actually runs.
-- ``grouped_monthly_sum`` is the idiomatic plan: ``groupBy().agg()``
-  gets map-side partial aggregation, so at 100 TB the shuffle carries
+- ``grouped_monthly_sum`` is the idiomatic plan the pipeline's marts
+  run over ``total_cost``: ``groupBy().agg()`` gets map-side partial
+  aggregation, so at 100 TB the shuffle carries
   pre-aggregated partials instead of raw rows. Equivalent iff the
   carried descriptive columns are functionally dependent on the group
   key — which the reference assumes via its ``distinct()``.
@@ -68,11 +69,11 @@ def windowed_partition_sum(
 def grouped_monthly_sum(
     df: DataFrame,
     group_keys: Sequence[str],
-    measure: str,
     out_col: str,
-    carry_cols: Sequence[str] = (),
+    carry_cols: Sequence[str],
 ) -> DataFrame:
-    """Idiomatic equivalent of :func:`windowed_partition_sum`.
+    """Idiomatic equivalent of :func:`windowed_partition_sum` over the
+    sales ``total_cost``.
 
     ``carry_cols`` are folded into the grouping key (exactly what the
     reference's distinct-over-projection does when they are functionally
@@ -80,7 +81,7 @@ def grouped_monthly_sum(
     """
     return (
         df.groupBy(*group_keys, *carry_cols)
-        .agg(F.sum(money(measure)).cast("double").alias(out_col))
+        .agg(F.sum(money("total_cost")).cast("double").alias(out_col))
     )
 
 

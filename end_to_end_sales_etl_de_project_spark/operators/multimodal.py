@@ -419,12 +419,16 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_assets(assets: DataFrame, factor: int = 4) -> DataFrame:
+# Downscale factor of the resize pass.
+RESIZE_FACTOR = 4
+
+
+def resize_assets(assets: DataFrame) -> DataFrame:
     """Downscale pass over opaque payloads via ``mapInPandas`` — the
     1:1 resize/transcode shape (decode → scale → re-encode) between
     ingest and feature extraction. With the stub, "resizing" keeps
-    every ``factor``-th byte (a deterministic stand-in with the real
-    op's size semantics: output ≈ input/factor, never empty for a
+    every ``RESIZE_FACTOR``-th byte (a deterministic stand-in with the real
+    op's size semantics: output ≈ input/RESIZE_FACTOR, never empty for a
     non-empty payload); a real pipeline swaps the slice for
     PIL.thumbnail / ffmpeg -s at the marked seam. Output carries the
     new size and checksum so downstream loss is detectable; payload
@@ -456,7 +460,7 @@ def resize_assets(assets: DataFrame, factor: int = 4) -> DataFrame:
                     cols["resized_checksum"].append(0)
                     continue
                 b = bytes(payload)
-                small = b[::factor] if b else b
+                small = b[::RESIZE_FACTOR] if b else b
                 cols["orig_bytes"].append(len(b))
                 cols["resized"].append(small)
                 cols["resized_bytes"].append(len(small))

@@ -29,6 +29,16 @@ from pyspark.sql import functions as F
 # kind ∈ {num, ts, str}
 ProfileCols = list[tuple[str, str]]
 
+# The lineitem columns of the q59 profile.
+LINEITEM_PROFILE: ProfileCols = [
+    ("l_orderkey", "num"),
+    ("l_linenumber", "num"),
+    ("l_quantity", "num"),
+    ("l_returnflag", "str"),
+    ("l_linestatus", "str"),
+    ("l_shipdate", "ts"),
+]
+
 
 def profile_columns(df: DataFrame, cols: ProfileCols) -> DataFrame:
     """One row per profiled column: (column_name, n_rows, n_nulls,
@@ -73,11 +83,12 @@ def profile_columns(df: DataFrame, cols: ProfileCols) -> DataFrame:
     )
 
 
-def profile_columns_sql(cols: ProfileCols, table: str) -> str:
-    """DuckDB twin: one independent SELECT per column, UNION ALL'd (the
-    oracle re-derives each row; only the engine's plan is single-pass)."""
+def profile_columns_sql() -> str:
+    """DuckDB twin over the ``LINEITEM_PROFILE`` columns: one
+    independent SELECT per column, UNION ALL'd (the oracle re-derives
+    each row; only the engine's plan is single-pass)."""
     rows = []
-    for col, kind in cols:
+    for col, kind in LINEITEM_PROFILE:
         mn = mx = "CAST(NULL AS DOUBLE)"
         mnt = mxt = "CAST(NULL AS TIMESTAMP)"
         if kind == "num":
@@ -90,7 +101,7 @@ def profile_columns_sql(cols: ProfileCols, table: str) -> str:
             f"       CAST(COUNT(DISTINCT {col}) AS BIGINT) AS n_distinct,\n"
             f"       {mn} AS min_value, {mx} AS max_value,\n"
             f"       {mnt} AS min_ts, {mxt} AS max_ts\n"
-            f"FROM {table}"
+            "FROM lineitem"
         )
     return "\nUNION ALL\n".join(rows)
 
@@ -136,11 +147,21 @@ def fk_orphans(fks: FkSpec) -> DataFrame:
     return out
 
 
-def fk_orphans_sql(fks: list[tuple[str, str, str, str, str]]) -> str:
-    """DuckDB twin: (fk_name, child_table, child_key, parent_table,
-    parent_key) tuples, same left-join-against-distinct-parent shape."""
+# The star schema's declared foreign keys (q63): (fk_name, child_table,
+# child_key, parent_table, parent_key).
+FOREIGN_KEYS = [
+    ("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
+    ("lineitem->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
+]
+
+
+def fk_orphans_sql() -> str:
+    """DuckDB twin over ``FOREIGN_KEYS``, same
+    left-join-against-distinct-parent shape."""
     rows = []
-    for name, child, ck, parent, pk in fks:
+    for name, child, ck, parent, pk in FOREIGN_KEYS:
         rows.append(
             f"SELECT '{name}' AS fk_name,\n"
             f"       CAST(COUNT(*) AS BIGINT) AS n_rows,\n"
@@ -161,6 +182,34 @@ def fk_orphans_sql(fks: list[tuple[str, str, str, str, str]]) -> str:
 # side).
 RowChecks = list[tuple[str, str]]
 UniqueChecks = list[tuple[str, list[str]]]
+
+# The q102 constraint suite over lineitem.
+LINEITEM_ROW_CHECKS: RowChecks = [
+    ("not_null_quantity", "l_quantity IS NULL"),
+    ("not_null_shipdate", "l_shipdate IS NULL"),
+    ("range_quantity", "l_quantity IS NOT NULL AND (l_quantity < 1 OR l_quantity > 60)"),
+    (
+        "accepted_returnflag",
+        "l_returnflag IS NOT NULL AND l_returnflag NOT IN ('A', 'N', 'R')",
+    ),
+    ("nonnegative_extendedprice", "l_extendedprice IS NOT NULL AND l_extendedprice < 0"),
+]
+LINEITEM_UNIQUE_CHECKS: UniqueChecks = [("unique_line_key", ["l_orderkey", "l_linenumber"])]
+
+# The live-monitor check list: the q102 contract applied to the event
+# stream (same three-valued-logic semantics). The spike check is a
+# monitoring rule, not an integrity rule — it fires on the clean
+# corpus, proving the monitor emits non-zero counts end-to-end.
+EVENT_CHECKS: RowChecks = [
+    ("null_value", "value IS NULL"),
+    ("negative_value", "value IS NOT NULL AND value < 0"),
+    (
+        "unknown_type",
+        "event_type IS NOT NULL AND event_type NOT IN "
+        "('signup','click','error','view','purchase')",
+    ),
+    ("value_spike", "value IS NOT NULL AND value > 250"),
+]
 
 
 def expectations_report(
@@ -242,27 +291,25 @@ def expectations_report(
     )
 
 
-def expectations_report_sql(
-    row_checks: RowChecks, unique_checks: UniqueChecks, table: str
-) -> str:
-    """DuckDB twin: one FILTER'd SELECT per row check, one grouped
-    rollup per uniqueness check, UNION ALL'd."""
+def expectations_report_sql() -> str:
+    """DuckDB twin over the lineitem suite: one FILTER'd SELECT per row
+    check, one grouped rollup per uniqueness check, UNION ALL'd."""
     rows = []
-    for name, pred in row_checks:
+    for name, pred in LINEITEM_ROW_CHECKS:
         rows.append(
             f"SELECT '{name}' AS check_name,\n"
             f"       CAST(COUNT(*) AS BIGINT) AS n_rows,\n"
             f"       CAST(COUNT(*) FILTER (WHERE {pred}) AS BIGINT)"
-            f" AS n_violations\nFROM {table}"
+            " AS n_violations\nFROM lineitem"
         )
-    for name, key_cols in unique_checks:
+    for name, key_cols in LINEITEM_UNIQUE_CHECKS:
         keys = ", ".join(key_cols)
         rows.append(
             f"SELECT '{name}' AS check_name,\n"
             f"       CAST(COALESCE(SUM(cnt), 0) AS BIGINT) AS n_rows,\n"
             f"       CAST(COALESCE(SUM(CASE WHEN cnt > 1 THEN cnt END), 0)"
             f" AS BIGINT) AS n_violations\n"
-            f"FROM (SELECT COUNT(*) AS cnt FROM {table} GROUP BY {keys})"
+            f"FROM (SELECT COUNT(*) AS cnt FROM lineitem GROUP BY {keys})"
         )
     union = "\nUNION ALL\n".join(rows)
     return (
@@ -313,9 +360,10 @@ def month_completeness(df: DataFrame, date_col: str) -> DataFrame:
     )
 
 
-def month_completeness_sql(date_col: str, table: str) -> str:
-    return f"""
-WITH dated AS (SELECT {date_col} AS d FROM {table} WHERE {date_col} IS NOT NULL),
+def month_completeness_sql() -> str:
+    """DuckDB twin over ``orders.o_orderdate`` (q103)."""
+    return """
+WITH dated AS (SELECT o_orderdate AS d FROM orders WHERE o_orderdate IS NOT NULL),
 bounds AS (
   SELECT date_trunc('month', MIN(d)) AS mn, date_trunc('month', MAX(d)) AS mx
   FROM dated
@@ -335,11 +383,8 @@ FROM spine s LEFT JOIN per_month p ON s.month_start = p.month_start
 """
 
 
-def violation_monitor_agg(
-    events: DataFrame,
-    row_checks: RowChecks,
-) -> DataFrame:
-    """Hourly-windowed violation totals for a declarative check list —
+def violation_monitor_agg(events: DataFrame) -> DataFrame:
+    """Hourly-windowed violation totals for the ``EVENT_CHECKS`` list —
     the SHARED aggregation body behind the batch audit and the live
     streaming monitor (``streaming/events.violation_monitor_stream``):
     one row per event-time window with the row count and each check's
@@ -355,7 +400,7 @@ def violation_monitor_agg(
         F.sum(F.when(F.expr(pred), 1).otherwise(0))
         .cast("bigint")
         .alias(f"{name}_violations")
-        for name, pred in row_checks
+        for name, pred in EVENT_CHECKS
     ]
     return (
         events.groupBy(F.window("ts", "1 hour").alias("w"))

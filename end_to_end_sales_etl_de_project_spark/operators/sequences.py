@@ -16,33 +16,27 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def streak_islands(
-    days: DataFrame, key_col: str = "user_id", day_col: str = "d"
-) -> DataFrame:
-    """Collapse a distinct (key, day) table into one row per
-    consecutive-day run: (key, anchor, streak_len).
+def streak_islands(days: DataFrame) -> DataFrame:
+    """Collapse a distinct (user_id, d) day table into one row per
+    consecutive-day run: (user_id, anchor, streak_len).
 
     The island key ``day - row_number`` is constant exactly within a
     consecutive run. The window sorts each key's DAY rows (≤ calendar
     span), never the raw fact — callers must pass an already-distinct
     day table.
     """
-    w = Window.partitionBy(key_col).orderBy(day_col)
+    w = Window.partitionBy("user_id").orderBy("d")
     return (
         days.withColumn("rn", F.row_number().over(w))
-        .withColumn("anchor", F.date_sub(F.col(day_col), F.col("rn")))
-        .groupBy(key_col, "anchor")
+        .withColumn("anchor", F.date_sub(F.col("d"), F.col("rn")))
+        .groupBy("user_id", "anchor")
         .agg(F.count(F.lit(1)).alias("streak_len"))
     )
 
 
-def swept_peaks(
-    pts: DataFrame,
-    t_col: str = "t",
-    delta_col: str = "delta",
-    bucket_s: int = 3600,
-) -> DataFrame:
-    """Per-bucket PEAK of the running sum of +1/-1 sweep deltas —
+def swept_peaks(pts: DataFrame, bucket_s: int = 3600) -> DataFrame:
+    """Per-bucket PEAK of the running sum of +1/-1 sweep ``delta``s at
+    times ``t`` —
     identical numbers to the sequential ``SUM(delta) OVER (ORDER BY t,
     delta ROWS UNBOUNDED PRECEDING)`` followed by a per-bucket MAX, but
     computed as a distributed two-level prefix sum:
@@ -57,9 +51,9 @@ def swept_peaks(
     intervals never double-count. Returns (bucket_s, peak) with the
     bucket column named ``hour_s`` for the default hour bucket.
     """
-    bucket = (F.col(t_col) - F.col(t_col) % F.lit(bucket_s)).alias("hour_s")
+    bucket = (F.col("t") - F.col("t") % F.lit(bucket_s)).alias("hour_s")
     pts = pts.withColumn("hour_s", bucket)
-    bucket_tot = pts.groupBy("hour_s").agg(F.sum(delta_col).alias("bucket_delta"))
+    bucket_tot = pts.groupBy("hour_s").agg(F.sum("delta").alias("bucket_delta"))
     w_spine = Window.orderBy("hour_s").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -68,11 +62,11 @@ def swept_peaks(
     ).select("hour_s", "offset")
     w_in = (
         Window.partitionBy("hour_s")
-        .orderBy(t_col, delta_col)
+        .orderBy("t", "delta")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        pts.withColumn("run", F.sum(delta_col).over(w_in))
+        pts.withColumn("run", F.sum("delta").over(w_in))
         .join(F.broadcast(offsets), "hour_s")
         .withColumn("live", F.col("run") + F.col("offset"))
         .groupBy("hour_s")

@@ -53,6 +53,13 @@ TOP_K = 5
 N_CENTROIDS = 16
 KMEANS_ITERATIONS = 2
 PROBE_COUNTS = (1, 2, 4)
+# The ANN oracles' query set, the neighbors per node of the kNN graph
+# (a09/a14/a16/a24), and the cosine a near-duplicate pair (d05) or a
+# contaminating train vector (d13) must reach.
+QUERY_PRED = "q.vec_id < 8"
+KNN_GRAPH_K = 3
+NEARDUP_MIN_COSINE = 0.25
+DECONTAM_MIN_COSINE = 0.25
 
 
 def _dot_col(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
@@ -69,49 +76,46 @@ def _dot_col(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _norm_col(a: Column | str, dim: int = DIM) -> Column:
-    return F.sqrt(_dot_col(a, a, dim))
+def _norm_col(dim: int = DIM) -> Column:
+    return F.sqrt(_dot_col("embedding", "embedding", dim))
 
 
-def _sig_col(a: Column | str, bits: int) -> Column:
-    ac = F.col(a) if isinstance(a, str) else a
+def _sig_col() -> Column:
+    """The ``SIG_BITS``-bit sign signature of ``embedding``."""
     out = F.lit(0)
-    for b in range(bits):
-        out = out + F.when(ac[b] >= 0, F.lit(1 << b)).otherwise(F.lit(0))
+    for b in range(SIG_BITS):
+        out = out + F.when(F.col("embedding")[b] >= 0, F.lit(1 << b)).otherwise(F.lit(0))
     return out
 
 
-def _dot_sql(a: str, b: str, dim: int, one_based: bool) -> str:
-    off = 1 if one_based else 0
+def _dot_sql(a: str, b: str, dim: int) -> str:
     return " + ".join(
-        f"CAST({a}[{i + off}] AS DOUBLE) * CAST({b}[{i + off}] AS DOUBLE)"
+        f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
         for i in range(dim)
     )
 
 
-def _norm_sql(a: str, dim: int, one_based: bool) -> str:
-    off = 1 if one_based else 0
+def _norm_sql(a: str, dim: int) -> str:
     return (
         "sqrt("
         + " + ".join(
-            f"CAST({a}[{i + off}] AS DOUBLE) * CAST({a}[{i + off}] AS DOUBLE)"
+            f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({a}[{i + 1}] AS DOUBLE)"
             for i in range(dim)
         )
         + ")"
     )
 
 
-def _sig_sql(a: str, bits: int, one_based: bool) -> str:
-    off = 1 if one_based else 0
+def _sig_sql(a: str) -> str:
     return " + ".join(
-        f"CASE WHEN {a}[{b + off}] >= 0 THEN {1 << b} ELSE 0 END" for b in range(bits)
+        f"CASE WHEN {a}[{b + 1}] >= 0 THEN {1 << b} ELSE 0 END" for b in range(SIG_BITS)
     )
 
 
 def with_norm(emb: DataFrame, dim: int = DIM) -> DataFrame:
     """Attach the L2 norm as a column (sequential fold — bit-equal to
     the SQL twin's unrolled sum)."""
-    return emb.withColumn("norm", _norm_col("embedding", dim))
+    return emb.withColumn("norm", _norm_col(dim))
 
 
 def _side(df: DataFrame, role: str, *extra: Column, dim: int = DIM) -> DataFrame:
@@ -162,16 +166,16 @@ def brute_force_topk(
     return _top_k_exact(F.broadcast(q).crossJoin(n), k, dim)
 
 
-def brute_force_topk_sql(query_pred: str) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
+def brute_force_topk_sql() -> str:
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
   FROM embeddings q, embeddings n
-  WHERE ({query_pred}) AND q.vec_id <> n.vec_id
+  WHERE ({QUERY_PRED}) AND q.vec_id <> n.vec_id
 )
 SELECT query_id, neighbor_id, rank, cosine FROM (
   SELECT scored.*, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -190,24 +194,24 @@ def lsh_topk(
     """Approximate top-k: candidates restricted to the query's sign-LSH
     bucket, then exact cosine rank within candidates. Equi-join on the
     signature instead of a cross join — the 100 TB shape."""
-    sig = _sig_col("embedding", SIG_BITS).alias("sig")
+    sig = _sig_col().alias("sig")
     q = _side(queries, "q", sig)
     n = _side(emb, "n", sig)
     return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
-def lsh_topk_sql(query_pred: str) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
-    qs = _sig_sql("q.embedding", SIG_BITS, one_based=True)
-    ns = _sig_sql("n.embedding", SIG_BITS, one_based=True)
+def lsh_topk_sql() -> str:
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
+    qs = _sig_sql("q.embedding")
+    ns = _sig_sql("n.embedding")
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
          ({dot}) / (({qn}) * ({nn})) AS cosine
   FROM embeddings q, embeddings n
-  WHERE ({query_pred}) AND q.vec_id <> n.vec_id AND ({qs}) = ({ns})
+  WHERE ({QUERY_PRED}) AND q.vec_id <> n.vec_id AND ({qs}) = ({ns})
 )
 SELECT query_id, neighbor_id, rank, cosine FROM (
   SELECT scored.*, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -218,11 +222,8 @@ WHERE rank <= {TOP_K}
 """
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Near-duplicate vector pairs (cosine ≥ threshold): candidates are
+def embedding_neardup_pairs(emb: DataFrame) -> DataFrame:
+    """Near-duplicate vector pairs (cosine ≥ ``NEARDUP_MIN_COSINE``): candidates are
     vectors sharing (block, sign-LSH bucket), then exact cosine verify.
 
     Scale shape: the join is an equi-join on (block, sig) — NEVER the
@@ -237,12 +238,12 @@ def embedding_neardup_pairs(
     (operators/dedup.lsh_candidate_pairs).
 
     Deterministic (sign bucketing + fixed-order fold) ⇒ fully
-    oracle-checked; threshold must be set from the corpus so the check
+    oracle-checked; the threshold is set from the corpus so the check
     is non-vacuous (random 64-dim embeddings top out near cosine 0.4
     within sign buckets — a 0.8 threshold would hash-match
     empty-vs-empty and prove nothing).
     """
-    sig = _sig_col("embedding", SIG_BITS)
+    sig = _sig_col()
     e = with_norm(emb)
     a = e.select(
         F.col("vec_id").alias("id_a"),
@@ -267,22 +268,22 @@ def embedding_neardup_pairs(
             "id_b",
             (dot / (F.col("norm_a") * F.col("norm_b"))).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= NEARDUP_MIN_COSINE)
     )
 
 
-def embedding_neardup_pairs_sql(threshold: float) -> str:
-    dot = _dot_sql("a.embedding", "b.embedding", DIM, one_based=True)
-    an = _norm_sql("a.embedding", DIM, one_based=True)
-    bn = _norm_sql("b.embedding", DIM, one_based=True)
-    sa = _sig_sql("a.embedding", SIG_BITS, one_based=True)
-    sb = _sig_sql("b.embedding", SIG_BITS, one_based=True)
+def embedding_neardup_pairs_sql() -> str:
+    dot = _dot_sql("a.embedding", "b.embedding", DIM)
+    an = _norm_sql("a.embedding", DIM)
+    bn = _norm_sql("b.embedding", DIM)
+    sa = _sig_sql("a.embedding")
+    sb = _sig_sql("b.embedding")
     return f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        ({dot}) / (({an}) * ({bn})) AS cosine
 FROM embeddings a JOIN embeddings b
   ON a.label = b.label AND ({sa}) = ({sb}) AND a.vec_id < b.vec_id
-WHERE ({dot}) / (({an}) * ({bn})) >= {threshold}
+WHERE ({dot}) / (({an}) * ({bn})) >= {NEARDUP_MIN_COSINE}
 """
 
 
@@ -334,10 +335,11 @@ def _valid_vecs(emb: DataFrame) -> DataFrame:
     )
 
 
-def _vq_col(vec_col: Column | str, dim: int = DIM) -> Column:
-    vc = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+def _vq_col() -> Column:
+    """``embedding`` on the quantized grid: its first ``DIM`` elements
+    times ``QUANT_SCALE``, rounded to BIGINT."""
     return F.transform(
-        F.slice(vc, 1, dim),
+        F.slice(F.col("embedding"), 1, DIM),
         lambda x: F.round(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("bigint"),
     )
 
@@ -591,7 +593,7 @@ def ivf_train(
     reproduced by :func:`ivf_topk_sql`'s DuckDB twin (promoted from
     rows-only, VERDICT r8 #4)."""
     base = _valid_vecs(emb).select(
-        "vec_id", _vq_col("embedding").alias("vq")
+        "vec_id", _vq_col().alias("vq")
     )
     cents = [
         [int(x) for x in r["vq"]]
@@ -633,7 +635,7 @@ def _ivf_cells_and_probes(
     JVM-side, then the k x dim sim fold runs as one Arrow-batched int64
     matmul per batch — the interpreted HOF fold was the measured ANN
     hot path (PERF.md r9)."""
-    vq = _vq_col("embedding").alias("__vq")
+    vq = _vq_col().alias("__vq")
     cells = _with_cells_np(_side(_valid_vecs(emb), "n", vq), centroids).select(
         "neighbor_id", "n_emb", "n_norm", "cid"
     )
@@ -649,11 +651,11 @@ def _ivf_cells_and_probes(
 def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
+    centroids: list[list[int]],
     k: int = 5,
-    centroids: list[list[int]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their
-    nearest-centroid cell; each query probes its ``max(PROBE_COUNTS)``
+    nearest-``centroids`` cell (:func:`ivf_train`); each query probes its ``max(PROBE_COUNTS)``
     (4) nearest cells; exact cosine ranks the candidates.
 
     Same equi-join shape as the sign-LSH path (a02/a03) — corpus is
@@ -664,8 +666,6 @@ def ivf_topk(
     probing run on the quantized grid (bit-deterministic, see the
     section comment); candidate ranking is the exact float cosine —
     the whole query is hash-exact against :func:`ivf_topk_sql`."""
-    if centroids is None:
-        centroids = ivf_train(emb, N_CENTROIDS)
     cells, probes = _ivf_cells_and_probes(emb, queries, centroids)
     q = probes.select(
         "query_id", "q_emb", "q_norm", F.explode("probe_cids").alias("cid")
@@ -677,12 +677,11 @@ def _kmeans_sql_ctes(
     prefix: str,
     vq: str,
     aq: str,
-    seeds: str,
-    iterations: int,
     part_cols: list[str],
 ) -> tuple[str, str]:
-    """Chained-CTE Lloyd iterations shared by the IVF and PQ oracle
-    twins. ``part_cols`` are the extra grouping columns of the codebook
+    """``KMEANS_ITERATIONS`` chained-CTE Lloyd iterations from the
+    ``seed_vals`` centroids, shared by the IVF and PQ oracle twins.
+    ``part_cols`` are the extra grouping columns of the codebook
     ([] for IVF, ['s'] for PQ subspaces). Returns (cte_sql, final_name)
     where ``{final_name}`` holds (part_cols..., cid, pos, c) and
     ``{final_name}_b`` its guarded per-centroid squared norms. Every
@@ -692,8 +691,8 @@ def _kmeans_sql_ctes(
     on_part = " AND ".join([f"q.{c} = c.{c}" for c in part_cols]) or "TRUE"
     ctes = []
     cur = f"{prefix}0"
-    ctes.append(f"{cur} AS MATERIALIZED (SELECT {pc}cid, pos, c FROM {seeds})")
-    for i in range(iterations):
+    ctes.append(f"{cur} AS MATERIALIZED (SELECT {pc}cid, pos, c FROM seed_vals)")
+    for i in range(KMEANS_ITERATIONS):
         nxt = f"{prefix}{i + 1}"
         a_on = " AND ".join(
             ["a.vec_id = q.vec_id"] + [f"a.{c} = c.{c}" for c in part_cols]
@@ -773,9 +772,7 @@ def _kmeans_sql_ctes(
     return ",\n".join(ctes), cur
 
 
-def _ivf_lloyd_preamble_sql(
-    dim: int, scale: int, n_centroids: int, table: str
-) -> str:
+def _ivf_lloyd_preamble_sql() -> str:
     """The shared opening CTE chain of every IVF oracle twin (validity
     gate -> quantized grid -> norms -> deterministic seeds): factored
     so a change to the validity predicate or the quantization
@@ -783,15 +780,15 @@ def _ivf_lloyd_preamble_sql(
     NULL-element clause had to be hand-replicated per twin before this
     (r11 review finding). MUST stay in lockstep with _valid_vecs and
     _vq_col; the PQ twins keep their subspace-shaped variant inline."""
-    return f"""dimpos AS (SELECT unnest(range(1, {dim + 1})) AS pos),
+    return f"""dimpos AS (SELECT unnest(range(1, {DIM + 1})) AS pos),
 valid AS (
-  SELECT vec_id, embedding FROM {table}
+  SELECT vec_id, embedding FROM embeddings
   WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-    AND len(embedding) >= {dim}
-    AND len(list_filter(embedding[1:{dim}], x -> x IS NULL)) = 0),
+    AND len(embedding) >= {DIM}
+    AND len(list_filter(embedding[1:{DIM}], x -> x IS NULL)) = 0),
 vq AS (
   SELECT v.vec_id, d.pos AS lp,
-         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {scale}) AS BIGINT) AS val
+         CAST(ROUND(CAST(v.embedding[d.pos] AS DOUBLE) * {QUANT_SCALE}) AS BIGINT) AS val
   FROM valid v, dimpos d),
 aq AS MATERIALIZED (
   SELECT vec_id,
@@ -799,24 +796,24 @@ aq AS MATERIALIZED (
   FROM vq GROUP BY vec_id),
 seeds AS (
   SELECT vec_id, DENSE_RANK() OVER (ORDER BY vec_id) - 1 AS cid
-  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT {n_centroids})),
+  FROM (SELECT vec_id FROM valid ORDER BY vec_id LIMIT {N_CENTROIDS})),
 seed_vals AS MATERIALIZED (
   SELECT s.cid, q.lp AS pos, q.val AS c FROM seeds s JOIN vq q USING (vec_id))"""
 
 
-def ivf_topk_sql(query_pred: str) -> str:
+def ivf_topk_sql() -> str:
     """DuckDB twin of :func:`ivf_train` + :func:`ivf_topk` — the full
     quantized-grid Lloyd training unrolled as chained CTEs, then cell
     assignment, probing, and exact-cosine ranking. Bit-exact against
     the Spark plan (VERDICT r8 #4 promotion)."""
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
+        "c", "vq", "aq", part_cols=[]
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
+WITH {_ivf_lloyd_preamble_sql()},
 {kmeans},
 cells AS (
   SELECT vec_id AS neighbor_id, cid FROM (
@@ -828,7 +825,7 @@ probes AS (
     SELECT vec_id, cid,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid DESC) AS rn
     FROM {cfin}_sim
-    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({query_pred}))
+    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({QUERY_PRED}))
   ) WHERE rn <= {max(PROBE_COUNTS)}),
 scored AS (
   SELECT p.query_id, c.neighbor_id,
@@ -866,7 +863,7 @@ def ivf_cell_balance(
     :func:`ivf_cell_balance_sql` (same unrolled Lloyd CTEs as a04)."""
     cells = _with_cells_np(
         _valid_vecs(emb).select(
-            "vec_id", _vq_col("embedding").alias("__vq")
+            "vec_id", _vq_col().alias("__vq")
         ),
         centroids,
     ).select("vec_id", "cid")
@@ -893,10 +890,10 @@ def ivf_cell_balance_sql() -> str:
     """DuckDB twin of :func:`ivf_cell_balance` — the a04 Lloyd unroll,
     then per-cell counts over the assignment."""
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
+        "c", "vq", "aq", part_cols=[]
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
+WITH {_ivf_lloyd_preamble_sql()},
 {kmeans},
 cells AS (
   SELECT vec_id, cid FROM (
@@ -937,7 +934,7 @@ def ivf_probe_cost(
     one assignment pass serves every leg. Exact integer counts, one
     IEEE division per row ⇒ hash-exact vs the unrolled DuckDB twin."""
     base = _valid_vecs(emb).select(
-        "vec_id", _vq_col("embedding").alias("__vq")
+        "vec_id", _vq_col().alias("__vq")
     )
     cells = _with_cells_np(base, centroids).select("vec_id", "cid")
     counts = cells.groupBy("cid").agg(
@@ -945,7 +942,7 @@ def ivf_probe_cost(
     )
     tot = cells.agg(F.count(F.lit(1)).cast("bigint").alias("n_corpus"))
     qv = _valid_vecs(queries).select(
-        F.col("vec_id").alias("query_id"), _vq_col("embedding").alias("__vq")
+        F.col("vec_id").alias("query_id"), _vq_col().alias("__vq")
     )
     max_p = max(PROBE_COUNTS)
     pr = _with_cells_np(qv, centroids, n_probe=max_p, out_col="probe_cids").select(
@@ -987,11 +984,11 @@ def ivf_probe_cost(
     return reduce(lambda a, b: a.unionByName(b), legs)
 
 
-def ivf_probe_cost_sql(query_pred: str) -> str:
+def ivf_probe_cost_sql() -> str:
     """DuckDB twin of :func:`ivf_probe_cost` — the a04 Lloyd unroll,
     cell counts, ranked probes, and one aggregated leg per width."""
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
+        "c", "vq", "aq", part_cols=[]
     )
     max_p = max(PROBE_COUNTS)
     legs = "\nUNION ALL\n".join(
@@ -1005,7 +1002,7 @@ FROM sized s CROSS JOIN tot t WHERE s.rn <= {p} GROUP BY t.n_corpus"""
         for p in PROBE_COUNTS
     )
     return f"""
-WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
+WITH {_ivf_lloyd_preamble_sql()},
 {kmeans},
 cells AS MATERIALIZED (
   SELECT vec_id, cid FROM (
@@ -1020,7 +1017,7 @@ probes AS (
     SELECT vec_id, cid,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid DESC) AS rn
     FROM {cfin}_sim
-    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({query_pred}))
+    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({QUERY_PRED}))
   ) WHERE rn <= {max_p}),
 sized AS (
   SELECT p.query_id, p.rn, COALESCE(c.n_cell, 0) AS n_cell
@@ -1045,19 +1042,19 @@ def lsh_topk_multiprobe(
         queries,
         "q",
         F.explode(
-            F.transform(probes, lambda m: _sig_col("embedding", SIG_BITS).bitwiseXOR(m))
+            F.transform(probes, lambda m: _sig_col().bitwiseXOR(m))
         ).alias("sig"),
     )
-    n = _side(emb, "n", _sig_col("embedding", SIG_BITS).alias("sig"))
+    n = _side(emb, "n", _sig_col().alias("sig"))
     return _top_k_exact(F.broadcast(q).join(n, "sig"), k)
 
 
 def lsh_topk_multiprobe_sql(query_pred: str, k: int = TOP_K) -> str:
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
-    qs = _sig_sql("q.embedding", SIG_BITS, one_based=True)
-    ns = _sig_sql("n.embedding", SIG_BITS, one_based=True)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
+    qs = _sig_sql("q.embedding")
+    ns = _sig_sql("n.embedding")
     masks = ", ".join(str(m) for m in [0, *[1 << b for b in range(SIG_BITS)]])
     return f"""
 WITH scored AS (
@@ -1084,12 +1081,13 @@ WHERE rank <= {k}
 # ---------------------------------------------------------------------------
 
 
-def pq_train(
-    emb: DataFrame,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-) -> list[list[list[int]]]:
-    """Per-subspace codebooks (n_subspaces x n_codes x dim/n_subspaces):
+# Coordinate blocks of the PQ codebooks (a 64x compression of a 64-dim
+# float vector).
+PQ_SUBSPACES = 4
+
+
+def pq_train(emb: DataFrame, n_codes: int = 16) -> list[list[list[int]]]:
+    """Per-subspace codebooks (PQ_SUBSPACES x n_codes x dim/PQ_SUBSPACES):
     the embedding is split into contiguous coordinate blocks and each
     block gets its own k-means codebook — :func:`ivf_train`'s seeding
     and Lloyd rounds applied to the sliced vectors (cosine assignment
@@ -1103,9 +1101,9 @@ def pq_train(
     IVF section comment): assignment sims and mean updates are exact
     integer arithmetic, so training is bit-deterministic and exactly
     reproduced by :func:`pq_topk_sql`'s DuckDB twin (VERDICT r8 #4)."""
-    sub = DIM // n_subspaces
+    sub = DIM // PQ_SUBSPACES
     base = _valid_vecs(emb).select(
-        "vec_id", _vq_col("embedding").alias("vq")
+        "vec_id", _vq_col().alias("vq")
     )
     seed_rows = base.orderBy("vec_id").limit(n_codes).collect()
     if not seed_rows:
@@ -1116,19 +1114,19 @@ def pq_train(
             [int(x) for x in r["vq"][s * sub : (s + 1) * sub]]
             for r in seed_rows[:n_codes]
         ]
-        for s in range(n_subspaces)
+        for s in range(PQ_SUBSPACES)
     ]
     # All subspaces train in ONE job per Lloyd round: each row emits
     # (subspace, nearest-code, slice) structs, one explode + one
     # groupBy computes every (subspace, code, dimension) SUM cell —
     # exact integers, map-side combinable. Per-subspace loops would
-    # rescan the corpus n_subspaces times per round — at 100 TB that
+    # rescan the corpus PQ_SUBSPACES times per round — at 100 TB that
     # multiplies the dominant cost (the scan) by the subspace count
     # for zero extra information.
     for _ in range(KMEANS_ITERATIONS):
         assigned = _with_codes_np(base.select("vq"), books, vq_col="vq")
         parts = []
-        for s in range(n_subspaces):
+        for s in range(PQ_SUBSPACES):
             sl = F.slice(F.col("vq"), s * sub + 1, sub)
             cid = F.element_at(F.col("codes"), s + 1)
             parts.append(
@@ -1153,7 +1151,7 @@ def pq_train(
                 else books[s][i]
                 for i in range(n_codes)
             ]
-            for s in range(n_subspaces)
+            for s in range(PQ_SUBSPACES)
         ]
     return books
 
@@ -1185,11 +1183,12 @@ def _pq_recon_sq_col(codes: Column, books: list[list[list[int]]]) -> Column:
 def pq_topk(
     emb: DataFrame,
     queries: DataFrame,
+    books: list[list[list[int]]],
     k: int = 5,
-    books: list[list[list[int]]] | None = None,
 ) -> DataFrame:
     """PQ approximate top-k — the memory-bound ANN shape: the corpus is
-    scanned as CODES (n_subspaces small ints per vector, a 64x
+    scanned as CODES of the ``books`` codebooks (:func:`pq_train`)
+    (``PQ_SUBSPACES`` small ints per vector, a 64x
     compression of a 64-dim float vector), each (query, code) score is
     a sum of n_subspaces codebook dot-products instead of a dim-term
     fold, the top ``k * 4`` candidates per query are
@@ -1204,25 +1203,20 @@ def pq_topk(
     approx scores are exact-integer folds divided once in double, the
     rerank is the exact float cosine — bit-deterministic end to end
     and hash-exact against :func:`pq_topk_sql` (VERDICT r8 #4)."""
-    n_subspaces = 4 if books is None else len(books)
-    sub = DIM // n_subspaces
-    if books is None:
-        books = pq_train(emb, n_subspaces)
-
     # quantize JVM-side, then per-subspace code assignment as one
     # Arrow-batched matmul per subspace (_with_codes_np — the measured
     # ANN hot path, PERF.md r9)
     codes_tbl = _with_codes_np(
         _valid_vecs(emb).select(
             F.col("vec_id").alias("neighbor_id"),
-            _vq_col("embedding").alias("__vq"),
+            _vq_col().alias("__vq"),
         ),
         books,
         with_recon_sq=True,
     ).select("neighbor_id", "codes", "recon_sq")
 
     q = _side(
-        _valid_vecs(queries), "q", _vq_col("embedding").alias("q_vq")
+        _valid_vecs(queries), "q", _vq_col().alias("q_vq")
     ).withColumn("q_aq", _aq_col(F.col("q_vq")))
 
     # approx dot via the classic ADC lookup table: dot(q_s, codeword)
@@ -1265,18 +1259,18 @@ def pq_topk(
     return _top_k_exact(shortlist.join(_side(emb, "n"), "neighbor_id"), k)
 
 
-def pq_topk_sql(query_pred: str) -> str:
+def pq_topk_sql() -> str:
     """DuckDB twin of :func:`pq_train` + :func:`pq_topk`: per-subspace
     quantized-grid codebook training (shared CTE machinery with the IVF
     twin, partitioned by subspace), code assignment, integer approx
     scoring, shortlist, exact-cosine rerank. Bit-exact against the
     Spark plan (VERDICT r8 #4 promotion)."""
     sub = DIM // 4
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
     kmeans, cfin = _kmeans_sql_ctes(
-        "kb", "vqs", "asub", "seed_vals", KMEANS_ITERATIONS, part_cols=["s"]
+        "kb", "vqs", "asub", part_cols=["s"]
     )
     return f"""
 WITH dimpos AS (SELECT unnest(range(1, {DIM + 1})) AS pos),
@@ -1326,7 +1320,7 @@ approx AS (
   JOIN {cfin} kk ON kk.s = cd.s AND kk.cid = cd.cid AND kk.pos = q.lp
   JOIN afull af ON af.vec_id = q.vec_id
   JOIN recon r ON r.vec_id = cd.vec_id
-  WHERE q.vec_id IN (SELECT q.vec_id FROM valid q WHERE ({query_pred}))
+  WHERE q.vec_id IN (SELECT q.vec_id FROM valid q WHERE ({QUERY_PRED}))
     AND q.vec_id <> cd.vec_id
   GROUP BY q.vec_id, cd.vec_id),
 short AS (
@@ -1373,7 +1367,7 @@ def pq_distortion_by_label(
     staged = _with_codes_np(
         _valid_vecs(emb).select(
             F.col("label"),
-            _vq_col("embedding").alias("__vq"),
+            _vq_col().alias("__vq"),
         ),
         books,
         out_col="__codes",
@@ -1397,7 +1391,7 @@ def pq_distortion_by_label_sql() -> str:
     sub = DIM // 4
     sq = float(QUANT_SCALE) * float(QUANT_SCALE)
     kmeans, cfin = _kmeans_sql_ctes(
-        "kb", "vqs", "asub", "seed_vals", KMEANS_ITERATIONS, part_cols=["s"]
+        "kb", "vqs", "asub", part_cols=["s"]
     )
     return f"""
 WITH dimpos AS (SELECT unnest(range(1, {DIM + 1})) AS pos),
@@ -1498,16 +1492,16 @@ def ivf_recall_curve(
     return out
 
 
-def ivf_recall_curve_sql(query_pred: str) -> str:
+def ivf_recall_curve_sql() -> str:
     """DuckDB twin of :func:`ivf_recall_curve`: ONE quantized-grid
     Lloyd training + cell assignment + probe ranking, then one top-k +
     hit-count leg per probe width, unioned."""
-    dot = _dot_sql("q.embedding", "n.embedding", DIM, one_based=True)
-    qn = _norm_sql("q.embedding", DIM, one_based=True)
-    nn = _norm_sql("n.embedding", DIM, one_based=True)
-    bf = brute_force_topk_sql(query_pred)
+    dot = _dot_sql("q.embedding", "n.embedding", DIM)
+    qn = _norm_sql("q.embedding", DIM)
+    nn = _norm_sql("n.embedding", DIM)
+    bf = brute_force_topk_sql()
     kmeans, cfin = _kmeans_sql_ctes(
-        "c", "vq", "aq", "seed_vals", KMEANS_ITERATIONS, part_cols=[]
+        "c", "vq", "aq", part_cols=[]
     )
     legs = []
     for p in PROBE_COUNTS:
@@ -1535,7 +1529,7 @@ FROM tot, (
         )
     union = "\nUNION ALL\n".join(legs)
     return f"""
-WITH {_ivf_lloyd_preamble_sql(DIM, QUANT_SCALE, N_CENTROIDS, 'embeddings')},
+WITH {_ivf_lloyd_preamble_sql()},
 {kmeans},
 cells AS MATERIALIZED (
   SELECT vec_id AS neighbor_id, cid FROM (
@@ -1547,7 +1541,7 @@ probe_rank AS MATERIALIZED (
     SELECT vec_id, cid,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid DESC) AS rn
     FROM {cfin}_sim
-    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({query_pred})))),
+    WHERE vec_id IN (SELECT q.vec_id FROM valid q WHERE ({QUERY_PRED})))),
 bf AS MATERIALIZED ({bf}),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM bf)
 {union}
@@ -1598,9 +1592,9 @@ def ann_recall_report(exact: DataFrame, lsh: DataFrame) -> DataFrame:
     )
 
 
-def ann_recall_report_sql(query_pred: str) -> str:
-    bf = brute_force_topk_sql(query_pred)
-    mp = lsh_topk_multiprobe_sql(query_pred)
+def ann_recall_report_sql() -> str:
+    bf = brute_force_topk_sql()
+    mp = lsh_topk_multiprobe_sql(QUERY_PRED)
     return f"""
 SELECT e.query_id,
        CAST(COUNT(*) AS BIGINT) AS n_exact,
@@ -1684,9 +1678,9 @@ def ivf_recall_audit(
     )
 
 
-def ivf_recall_audit_sql(query_pred: str) -> str:
-    bf = brute_force_topk_sql(query_pred)
-    mp = lsh_topk_multiprobe_sql(query_pred)
+def ivf_recall_audit_sql() -> str:
+    bf = brute_force_topk_sql()
+    mp = lsh_topk_multiprobe_sql(QUERY_PRED)
     return f"""
 WITH e AS ({bf}), a AS ({mp}),
 tot AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
@@ -1756,9 +1750,9 @@ def pq_recall_audit(
     )
 
 
-def pq_recall_audit_sql(query_pred: str) -> str:
-    bf = brute_force_topk_sql(query_pred)
-    mp = lsh_topk_multiprobe_sql(query_pred)
+def pq_recall_audit_sql() -> str:
+    bf = brute_force_topk_sql()
+    mp = lsh_topk_multiprobe_sql(QUERY_PRED)
     return f"""
 WITH e AS ({bf}), a AS ({mp}),
 tot AS (SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
@@ -1823,8 +1817,8 @@ def knn_label_agreement(emb: DataFrame, graph: DataFrame) -> DataFrame:
     )
 
 
-def knn_label_agreement_sql(k: int = 3) -> str:
-    mp = lsh_topk_multiprobe_sql("TRUE", k)
+def knn_label_agreement_sql() -> str:
+    mp = lsh_topk_multiprobe_sql("TRUE", KNN_GRAPH_K)
     return f"""
 WITH g AS ({mp})
 SELECT ql.label AS label,
@@ -2052,13 +2046,9 @@ FROM per_src p CROSS JOIN total t
 # ---------------------------------------------------------------------------
 
 
-def semantic_decontaminate(
-    emb: DataFrame,
-    test_pred: Column,
-    threshold: float,
-) -> DataFrame:
+def semantic_decontaminate(emb: DataFrame, test_pred: Column) -> DataFrame:
     """Train vectors semantically too close to ANY test vector (cosine ≥
-    threshold): the embedding-space analogue of d07's shingle
+    ``DECONTAM_MIN_COSINE``): the embedding-space analogue of d07's shingle
     decontamination — catches paraphrased/reworded eval leakage that
     lexical overlap misses (the reason modern pipelines run BOTH).
 
@@ -2074,7 +2064,7 @@ def semantic_decontaminate(
     ``embedding_neardup_pairs``: true matches have cosine near 1 and
     almost surely share the sign pattern.
     """
-    e = with_norm(emb).withColumn("sig", _sig_col("embedding", SIG_BITS))
+    e = with_norm(emb).withColumn("sig", _sig_col())
     test = e.filter(test_pred).select(
         F.col("vec_id").alias("matched_test_id"),
         F.col("embedding").alias("emb_t"),
@@ -2095,7 +2085,7 @@ def semantic_decontaminate(
             "matched_test_id",
             (dot / (F.col("norm_a") * F.col("norm_t"))).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= DECONTAM_MIN_COSINE)
     )
     best = cand.groupBy("train_id").agg(
         F.max(F.struct(F.col("cosine"), F.col("matched_test_id"))).alias("m")
@@ -2107,12 +2097,12 @@ def semantic_decontaminate(
     )
 
 
-def semantic_decontaminate_sql(threshold: float) -> str:
-    dot = _dot_sql("tr.embedding", "te.embedding", DIM, one_based=True)
-    trn = _norm_sql("tr.embedding", DIM, one_based=True)
-    ten = _norm_sql("te.embedding", DIM, one_based=True)
-    str_ = _sig_sql("tr.embedding", SIG_BITS, one_based=True)
-    ste = _sig_sql("te.embedding", SIG_BITS, one_based=True)
+def semantic_decontaminate_sql() -> str:
+    dot = _dot_sql("tr.embedding", "te.embedding", DIM)
+    trn = _norm_sql("tr.embedding", DIM)
+    ten = _norm_sql("te.embedding", DIM)
+    str_ = _sig_sql("tr.embedding")
+    ste = _sig_sql("te.embedding")
     return f"""
 WITH cand AS (
   SELECT tr.vec_id AS train_id, te.vec_id AS matched_test_id,
@@ -2120,7 +2110,7 @@ WITH cand AS (
   FROM embeddings tr JOIN embeddings te
     ON ({str_}) = ({ste})
    AND te.vec_id % 10 = 0 AND tr.vec_id % 10 <> 0
-  WHERE ({dot}) / (({trn}) * ({ten})) >= {threshold}
+  WHERE ({dot}) / (({trn}) * ({ten})) >= {DECONTAM_MIN_COSINE}
 )
 SELECT train_id, matched_test_id, cosine FROM (
   SELECT cand.*, ROW_NUMBER() OVER (
@@ -2183,9 +2173,9 @@ def recall_curve(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def recall_curve_sql(query_pred: str) -> str:
-    bf = brute_force_topk_sql(query_pred)
-    mp = lsh_topk_multiprobe_sql(query_pred)
+def recall_curve_sql() -> str:
+    bf = brute_force_topk_sql()
+    mp = lsh_topk_multiprobe_sql(QUERY_PRED)
     per_k = "\nUNION ALL\n".join(
         f"""  SELECT CAST({kk} AS BIGINT) AS k,
          (SELECT CAST(COUNT(*) AS BIGINT) FROM e WHERE rank <= {kk}) AS n_exact,
@@ -2297,7 +2287,7 @@ def knn_pagerank(
     )
 
 
-def knn_pagerank_sql(k: int = 3) -> str:
+def knn_pagerank_sql() -> str:
     """DuckDB twin: the same fixed power iterations with the in-sum as
     ``list_reduce(list_prepend(0.0, list(c ORDER BY src)), +)`` — the
     identical left fold the Spark side runs. The damping constants are
@@ -2305,7 +2295,7 @@ def knn_pagerank_sql(k: int = 3) -> str:
     decimal-literal arithmetic is exact, Spark's is IEEE, so sharing
     the pre-folded double is the only way the CASE arithmetic can
     hash-match."""
-    graph = lsh_topk_multiprobe_sql("TRUE", k)
+    graph = lsh_topk_multiprobe_sql("TRUE", KNN_GRAPH_K)
     it_cte = []
     prev = "p0"
     for i in (1, 2):
@@ -2432,10 +2422,10 @@ def knn_triangles(emb: DataFrame, graph: DataFrame) -> DataFrame:
     )
 
 
-def knn_triangles_sql(k: int = 3) -> str:
+def knn_triangles_sql() -> str:
     """DuckDB twin: identical symmetrize -> degree-orient -> wedge ->
     close pipeline over the shared multiprobe graph CTE."""
-    graph = lsh_topk_multiprobe_sql("TRUE", k)
+    graph = lsh_topk_multiprobe_sql("TRUE", KNN_GRAPH_K)
     return f"""
 WITH graph AS ({graph}),
 und AS (
@@ -2531,11 +2521,11 @@ def matryoshka_audit(
     return _reduce(lambda a, b: a.unionByName(b), reports)
 
 
-def matryoshka_audit_sql(query_pred: str) -> str:
+def matryoshka_audit_sql() -> str:
     def topk_cte(name: str, d: int) -> str:
-        dot = _dot_sql("q.embedding", "n.embedding", d, one_based=True)
-        qn = _norm_sql("q.embedding", d, one_based=True)
-        nn = _norm_sql("n.embedding", d, one_based=True)
+        dot = _dot_sql("q.embedding", "n.embedding", d)
+        qn = _norm_sql("q.embedding", d)
+        nn = _norm_sql("n.embedding", d)
         return f"""
 {name} AS (
   SELECT query_id, neighbor_id FROM (
@@ -2545,7 +2535,7 @@ def matryoshka_audit_sql(query_pred: str) -> str:
              ORDER BY ({dot}) / (({qn}) * ({nn})) DESC, n.vec_id
            ) AS rank
     FROM embeddings q, embeddings n
-    WHERE ({query_pred}) AND q.vec_id <> n.vec_id
+    WHERE ({QUERY_PRED}) AND q.vec_id <> n.vec_id
   ) WHERE rank <= {TOP_K}
 )"""
 
@@ -2594,7 +2584,7 @@ def norm_audit(
     rows — the plan survives any corpus size.
     """
     well_formed = F.col("embedding").isNotNull() & (F.size("embedding") >= DIM)
-    norm = F.when(well_formed, _norm_col("embedding"))
+    norm = F.when(well_formed, _norm_col())
     q = F.round(norm * FIXED_POINT_SCALE).cast("bigint")
     return (
         emb.select(F.col("label"), norm.alias("nrm"), q.alias("q"))
@@ -2622,7 +2612,7 @@ def norm_audit(
 
 
 def norm_audit_sql() -> str:
-    nrm = _norm_sql("embedding", DIM, one_based=True)
+    nrm = _norm_sql("embedding", DIM)
     wf = f"(embedding IS NOT NULL AND len(embedding) >= {DIM})"
     return f"""
 WITH q AS (
@@ -2703,9 +2693,9 @@ def isotropy_histogram(
 
 
 def isotropy_histogram_sql() -> str:
-    dot = _dot_sql("a.embedding", "b.embedding", DIM, one_based=True)
-    na = _norm_sql("a.embedding", DIM, one_based=True)
-    nb = _norm_sql("b.embedding", DIM, one_based=True)
+    dot = _dot_sql("a.embedding", "b.embedding", DIM)
+    na = _norm_sql("a.embedding", DIM)
+    nb = _norm_sql("b.embedding", DIM)
     return f"""
 WITH paired AS (
   SELECT ({dot}) / (({na}) * ({nb})) AS cos

@@ -52,16 +52,20 @@ def salted_sum(
     )
 
 
+# Salt values of the skew-safe join: copies of the small side, and the
+# tasks a hot key's rows spread over.
+N_SALTS = 8
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,
     big_key: str,
     small_key: str,
-    n_salts: int = 8,
 ) -> DataFrame:
-    """Skew-safe equi-join: the SMALL side is replicated ``n_salts``
+    """Skew-safe equi-join: the SMALL side is replicated ``N_SALTS``
     times (one copy per salt value) and the BIG side scatters each row
-    to one salt — so a hot key's rows spread over ``n_salts`` tasks
+    to one salt — so a hot key's rows spread over ``N_SALTS`` tasks
     instead of hammering one. This is the standard manual remedy when
     the skewed side is too large to broadcast and AQE's skew-join split
     (which this engine also enables) can't help — e.g. a single key
@@ -90,11 +94,11 @@ def salted_join(
                 "rename it first (the operator would silently clobber it)"
             )
     salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in big.columns], F.lit(41)), F.lit(n_salts)
+        F.xxhash64(*[F.col(c) for c in big.columns], F.lit(41)), F.lit(N_SALTS)
     )
     salted_big = big.withColumn("__salt", salt.cast("int"))
     replicated_small = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)]))
     )
     joined = salted_big.join(
         replicated_small,

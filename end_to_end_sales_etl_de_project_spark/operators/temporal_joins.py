@@ -26,25 +26,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Backward as-of join: latest right row (by ``on``) per ``by`` key
-    with ``right.on <= left.on``. Left rows keep all their columns;
+def asof_join(left: DataFrame, right: DataFrame, right_cols: list[str]) -> DataFrame:
+    """Backward as-of join: latest right row (by ``ts``) per ``user_id``
+    with ``right.ts <= left.ts``. Left rows keep all their columns;
     matched ``right_cols`` arrive suffixed ``_right``; unmatched → null (left
-    semantics). Ties on ``on``: an equal-timestamp right row IS matched
-    (DuckDB ASOF semantics); among DUPLICATE (by, on) right rows the
+    semantics). Ties on ``ts``: an equal-timestamp right row IS matched
+    (DuckDB ASOF semantics); among DUPLICATE (user_id, ts) right rows the
     max payload (struct ordering) wins — deterministic on any cluster
-    layout. Null-``on`` right rows never match; null-``on`` left rows
+    layout. Null-``ts`` right rows never match; null-``ts`` left rows
     match nothing (three-valued logic).
     """
     lcols = left.columns
     l_tagged = left.withColumn("__is_left", F.lit(1)).withColumn(
-        "__ts", F.col(on)
+        "__ts", F.col("ts")
     )
     # The right payload is carried as ONE struct: last(ignorenulls) over
     # per-column payloads would skip a column's NULL and tear the row
@@ -53,8 +47,8 @@ def asof_join(
     # matched row arrives whole — DuckDB ASOF semantics.
     r_tagged = (
         right.select(
-            F.col(by),
-            F.col(on).alias("__ts"),
+            F.col("user_id"),
+            F.col("ts").alias("__ts"),
             F.struct(*[F.col(c).alias(c + "_right") for c in right_cols]).alias(
                 "__right"
             ),
@@ -71,7 +65,7 @@ def asof_join(
     # otherwise make last() partition-layout-dependent. Struct ordering
     # picks the max payload deterministically (documented tie rule).
     w = (
-        Window.partitionBy(by)
+        Window.partitionBy("user_id")
         .orderBy(F.col("__ts"), F.col("__is_left"), F.col("__right"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -87,16 +81,10 @@ def asof_join(
     )
 
 
-def range_join_bucketed(
-    events: DataFrame,
-    by: str,
-    ts_col: str,
-    id_col: str,
-    max_gap_seconds: int,
-    payload_cols: list[str],
-) -> DataFrame:
-    """Self range-join: pairs (a, b) with the same ``by`` key,
-    ``a.id < b.id`` and ``|b.ts - a.ts| <= max_gap_seconds``.
+def range_join_bucketed(events: DataFrame, max_gap_seconds: int) -> DataFrame:
+    """Self range-join: event pairs (a, b) with the same ``user_id``,
+    ``a.event_id < b.event_id`` and ``|b.ts - a.ts| <= max_gap_seconds``,
+    each side's ``event_type`` carried along.
 
     Each row is assigned ``floor(epoch/gap)``; a candidate pair's
     timestamps differ by ≤ gap only if their buckets differ by ≤ 1, so
@@ -105,19 +93,19 @@ def range_join_bucketed(
     filter. Each true pair matches exactly once (the b row has one
     bucket) — no dedup pass needed.
     """
-    bucket = F.floor(F.unix_timestamp(F.col(ts_col)) / max_gap_seconds).cast("long")
+    bucket = F.floor(F.unix_timestamp(F.col("ts")) / max_gap_seconds).cast("long")
     a = events.select(
-        F.col(by).alias("__by"),
-        F.col(ts_col).alias("ts_a"),
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(c + "_a") for c in payload_cols],
+        F.col("user_id").alias("__by"),
+        F.col("ts").alias("ts_a"),
+        F.col("event_id").alias("id_a"),
+        F.col("event_type").alias("event_type_a"),
         F.explode(F.array(bucket - 1, bucket, bucket + 1)).alias("__bucket"),
     )
     b = events.select(
-        F.col(by).alias("__by"),
-        F.col(ts_col).alias("ts_b"),
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(c + "_b") for c in payload_cols],
+        F.col("user_id").alias("__by"),
+        F.col("ts").alias("ts_b"),
+        F.col("event_id").alias("id_b"),
+        F.col("event_type").alias("event_type_b"),
         bucket.alias("__bucket"),
     )
     gap = F.abs(F.col("ts_b").cast("double") - F.col("ts_a").cast("double"))
@@ -125,12 +113,12 @@ def range_join_bucketed(
         a.join(b, ["__by", "__bucket"])
         .filter((F.col("id_a") < F.col("id_b")) & (gap <= max_gap_seconds))
         .select(
-            F.col("__by").alias(by),
+            F.col("__by").alias("user_id"),
             "id_a",
             "id_b",
             "ts_a",
             "ts_b",
-            *[c + "_a" for c in payload_cols],
-            *[c + "_b" for c in payload_cols],
+            "event_type_a",
+            "event_type_b",
         )
     )

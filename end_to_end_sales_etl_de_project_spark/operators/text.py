@@ -33,6 +33,17 @@ PUNCT_REGEX = "[^A-Za-z0-9 ]"
 EMAIL_REGEX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_REGEX = r"\b\d{3}-\d{3}-\d{4}\b"
 
+# The synthetic corpus contains no real PII (verified: zero regex hits),
+# so the PII counters and the redaction run on text enriched with
+# DETERMINISTIC synthetic PII — this concat in the oracles, the same
+# expression as the ``pii_text`` column of the Spark side (t10/t39) —
+# making the hash check discriminate actual redaction behavior instead
+# of matching untouched-vs-untouched.
+PII_TEXT_SQL = (
+    "text || ' Contact: user' || CAST(doc_id AS VARCHAR) || '@example.com'"
+    " || CASE WHEN doc_id % 3 = 0 THEN ' or call 555-123-4567' ELSE '' END"
+)
+
 # Function-word stopword sets for the n-gram-free language-ID heuristic.
 # Ordered: ties resolve to the earlier language.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -69,8 +80,8 @@ def word_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(WORD_REGEX))
 
 
-def word_count_sql(expr: str) -> str:
-    return f"CAST(len(regexp_extract_all({expr}, '{WORD_REGEX}')) AS BIGINT)"
+def word_count_sql() -> str:
+    return f"CAST(len(regexp_extract_all(text, '{WORD_REGEX}')) AS BIGINT)"
 
 
 def punct_count(col: Column | str) -> Column:
@@ -78,8 +89,8 @@ def punct_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(PUNCT_REGEX))
 
 
-def punct_count_sql(expr: str) -> str:
-    return f"CAST(len(regexp_extract_all({expr}, '{PUNCT_REGEX}')) AS BIGINT)"
+def punct_count_sql() -> str:
+    return f"CAST(len(regexp_extract_all(text, '{PUNCT_REGEX}')) AS BIGINT)"
 
 
 def pii_email_count(col: Column | str) -> Column:
@@ -87,8 +98,8 @@ def pii_email_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(EMAIL_REGEX)).cast("bigint")
 
 
-def pii_email_count_sql(expr: str) -> str:
-    return f"CAST(len(regexp_extract_all({expr}, '{EMAIL_REGEX}')) AS BIGINT)"
+def pii_email_count_sql() -> str:
+    return f"CAST(len(regexp_extract_all({PII_TEXT_SQL}, '{EMAIL_REGEX}')) AS BIGINT)"
 
 
 def pii_phone_count(col: Column | str) -> Column:
@@ -96,24 +107,24 @@ def pii_phone_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(PHONE_REGEX)).cast("bigint")
 
 
-def pii_phone_count_sql(expr: str) -> str:
-    return f"CAST(len(regexp_extract_all({expr}, '{PHONE_REGEX}')) AS BIGINT)"
+def pii_phone_count_sql() -> str:
+    return f"CAST(len(regexp_extract_all({PII_TEXT_SQL}, '{PHONE_REGEX}')) AS BIGINT)"
 
 
-def redact_pii(col: Column | str) -> Column:
-    """Replace every email / phone occurrence with a typed placeholder —
-    the scrubbing stage a training corpus passes before release. Chained
-    ``regexp_replace`` (replace-all in both engines), JVM-side and
-    codegen'd; the pattern subset compiles identically under Java regex
-    and RE2 so the DuckDB twin is exact."""
-    c = F.col(col) if isinstance(col, str) else col
-    redacted = F.regexp_replace(c, EMAIL_REGEX, "<EMAIL>")
+def redact_pii() -> Column:
+    """The ``pii_text`` column with every email / phone occurrence
+    replaced by a typed placeholder — the scrubbing stage a training
+    corpus passes before release. Chained ``regexp_replace``
+    (replace-all in both engines), JVM-side and codegen'd; the pattern
+    subset compiles identically under Java regex and RE2 so the DuckDB
+    twin is exact."""
+    redacted = F.regexp_replace(F.col("pii_text"), EMAIL_REGEX, "<EMAIL>")
     return F.regexp_replace(redacted, PHONE_REGEX, "<PHONE>")
 
 
-def redact_pii_sql(expr: str) -> str:
+def redact_pii_sql() -> str:
     return (
-        f"regexp_replace(regexp_replace({expr}, '{EMAIL_REGEX}', '<EMAIL>', 'g'), "
+        f"regexp_replace(regexp_replace({PII_TEXT_SQL}, '{EMAIL_REGEX}', '<EMAIL>', 'g'), "
         f"'{PHONE_REGEX}', '<PHONE>', 'g')"
     )
 
@@ -124,22 +135,21 @@ def stopword_hits(col: Column | str, lang: str) -> Column:
     return F.size(F.filter(tokens(col), lambda t: t.isin(*words)))
 
 
-def stopword_hits_sql(expr: str, lang: str) -> str:
+def stopword_hits_sql(lang: str) -> str:
     inlist = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-    return f"CAST(len(list_filter({tokens_sql(expr)}, t -> t IN ({inlist}))) AS BIGINT)"
+    return f"CAST(len(list_filter({tokens_sql('text')}, t -> t IN ({inlist}))) AS BIGINT)"
 
 
-def predicted_lang(col: Column | str) -> Column:
-    """Argmax language by stopword hits; ties break in LANG_STOPWORDS
+def predicted_lang() -> Column:
+    """Argmax language of ``text`` by stopword hits; ties break in LANG_STOPWORDS
     declaration order (same CASE-chain in the SQL twin). NULL text →
     NULL prediction on BOTH engines: without the explicit guard Spark's
     score comparisons would see non-NULL zeros (size of an empty token
     array) and elect the first language while DuckDB's NULL conditions
     fall through the CASE — the divergence the planted-NULL sweep
     caught in round 7 (tests/test_null_parity.py)."""
-    c = F.col(col) if isinstance(col, str) else col
     langs = list(LANG_STOPWORDS)
-    scores = {lg: stopword_hits(col, lg) for lg in langs}
+    scores = {lg: stopword_hits("text", lg) for lg in langs}
     expr = F.lit(langs[-1])
     # build CASE chain from the end backwards: lang_i wins if its score
     # >= every later language's score
@@ -149,13 +159,13 @@ def predicted_lang(col: Column | str) -> Column:
             cj = scores[langs[i]] >= scores[langs[j]]
             cond = cj if cond is None else (cond & cj)
         expr = F.when(cond, langs[i]).otherwise(expr)
-    return F.when(c.isNotNull(), expr)
+    return F.when(F.col("text").isNotNull(), expr)
 
 
-def predicted_lang_sql(expr: str) -> str:
+def predicted_lang_sql() -> str:
     langs = list(LANG_STOPWORDS)
-    score = {lg: stopword_hits_sql(expr, lg) for lg in langs}
-    clauses = [f"WHEN {expr} IS NULL THEN NULL"]
+    score = {lg: stopword_hits_sql(lg) for lg in langs}
+    clauses = ["WHEN text IS NULL THEN NULL"]
     for i in range(len(langs) - 1):
         conds = " AND ".join(
             f"{score[langs[i]]} >= {score[langs[j]]}" for j in range(i + 1, len(langs))
@@ -165,10 +175,12 @@ def predicted_lang_sql(expr: str) -> str:
 
 
 def shingles_from_tokens(toks: Column, k: int) -> Column:
-    """Distinct k-word shingles from an ALREADY-MATERIALIZED token-array
-    column. Callers that can afford a two-step projection
-    (``select(tokens) → select(shingles)``) should use this instead of
-    :func:`word_shingles`: when the token expression is inlined, Catalyst
+    """Distinct k-word shingles (space-joined; empty for docs shorter than
+    k words — Spark ``sequence(0, n)`` with n<0 counts DOWN, so that case
+    is guarded, not clamped) from an ALREADY-MATERIALIZED token-array
+    column — the unit for n-gram Jaccard, minhash and fingerprinting. Callers take the
+    two-step projection (``select(tokens) → select(shingles)``) rather
+    than inlining :func:`tokens`: when the token expression is inlined, Catalyst
     evaluates the whole lower+split+filter chain once PER SHINGLE inside
     the ``transform`` lambda (~6.5x slower on the shingle explode,
     measured at sf0.1 — 2.16 s vs 0.33 s); a separate projection step
@@ -185,20 +197,9 @@ def shingles_from_tokens(toks: Column, k: int) -> Column:
     return F.when(F.size(toks) >= k, sh).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(col: Column | str, k: int) -> Column:
-    """Distinct k-word shingles (space-joined) — the unit for n-gram
-    Jaccard, minhash, and fingerprinting. Empty array for docs shorter
-    than k words (NB: Spark ``sequence(0, n)`` with n<0 counts DOWN, so
-    the short-doc case must be guarded, not clamped).
-
-    Single-expression form; in hot paths prefer materializing
-    :func:`tokens` in its own projection and calling
-    :func:`shingles_from_tokens` (see its docstring for why)."""
-    return shingles_from_tokens(tokens(col), k)
-
-
 def word_shingles_sql(expr: str, k: int) -> str:
-    """DuckDB twin of :func:`word_shingles` (1-based list indexing;
+    """DuckDB twin of :func:`shingles_from_tokens` over the tokens of
+    ``expr`` (1-based list indexing;
     ``range(1, n)`` with n<=1 is already empty, no guard needed).
 
     The token array is LET-BOUND once via a single-element-list lambda
@@ -230,43 +231,45 @@ def positional_shingles_from_tokens(toks: Column, k: int) -> Column:
     return F.when(F.size(toks) >= k, sh).otherwise(F.array().cast("array<string>"))
 
 
-def positional_shingles_sql_from_toks(toks_expr: str, k: int) -> str:
-    """DuckDB twin of :func:`positional_shingles_from_tokens` over an
-    already-aliased token-list expression (no dedup, document order)."""
-    parts = " || ' ' || ".join(f"{toks_expr}[i + {j}]" for j in range(k))
+def positional_shingles_sql_from_toks(k: int) -> str:
+    """DuckDB twin of :func:`positional_shingles_from_tokens` over the
+    already-aliased token list ``toks`` (no dedup, document order)."""
+    parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(k))
     return (
-        f"list_transform(range(1, greatest(len({toks_expr}) - {k - 1}, 0) + 1), "
+        f"list_transform(range(1, greatest(len(toks) - {k - 1}, 0) + 1), "
         f"i -> {parts})"
     )
 
 
-def doc_fingerprint_from_tokens(toks: Column, k: int = 4) -> Column:
-    """:func:`doc_fingerprint` over a pre-materialized token array —
-    use with a two-step projection in hot paths (see
-    :func:`shingles_from_tokens`)."""
-    return F.array_min(F.transform(shingles_from_tokens(toks, k), lambda s: h60(s)))
+# Shingle width of the document fingerprint.
+FINGERPRINT_K = 4
 
 
-def doc_fingerprint(col: Column | str) -> Column:
-    """Single-permutation minhash fingerprint: min 60-bit hash over the
-    doc's k-word shingles (null for docs shorter than k words)."""
-    return doc_fingerprint_from_tokens(tokens(col))
+def doc_fingerprint_from_tokens(toks: Column) -> Column:
+    """Single-permutation minhash fingerprint over a pre-materialized
+    token array: min 60-bit hash over the doc's ``FINGERPRINT_K``-word
+    shingles (null for docs shorter than that) — use with a two-step
+    projection in hot paths (see :func:`shingles_from_tokens`)."""
+    return F.array_min(
+        F.transform(shingles_from_tokens(toks, FINGERPRINT_K), lambda s: h60(s))
+    )
 
 
-def doc_fingerprint_sql(expr: str, k: int = 4) -> str:
-    return f"list_min(list_transform({word_shingles_sql(expr, k)}, s -> {h60_sql('s')}))"
+def doc_fingerprint_sql() -> str:
+    return (
+        f"list_min(list_transform({word_shingles_sql('text', FINGERPRINT_K)}, "
+        f"s -> {h60_sql('s')}))"
+    )
 
 
-def quality_bucket(
-    col: Column | str, min_words: int = 10, max_punct: float = 0.2
-) -> Column:
-    """Routing bucket of the composite quality filter (length +
+def quality_bucket(min_words: int = 10, max_punct: float = 0.2) -> Column:
+    """Routing bucket of ``text`` under the composite quality filter (length +
     punctuation density) — the drop/keep decision a curation pipeline
     acts on. Shared by the t03 scoring query and the c01 curation
     capstone so both stages apply identical thresholds; the thresholds
     are parameters so policy changes can be impact-analyzed (c04)
     before they ship."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     words = word_count(c)
     punct_ratio = punct_count(c) / F.length(c).cast("double")
     return (
@@ -276,55 +279,48 @@ def quality_bucket(
     )
 
 
-def quality_bucket_sql(
-    expr: str, min_words: int = 10, max_punct: float = 0.2
-) -> str:
+def quality_bucket_sql(min_words: int = 10, max_punct: float = 0.2) -> str:
     return (
-        f"CASE WHEN {word_count_sql(expr)} < {min_words} THEN 'too_short' "
-        f"WHEN {punct_count_sql(expr)} / CAST(length({expr}) AS DOUBLE) > {max_punct} "
+        f"CASE WHEN {word_count_sql()} < {min_words} THEN 'too_short' "
+        f"WHEN {punct_count_sql()} / CAST(length(text) AS DOUBLE) > {max_punct} "
         f"THEN 'too_puncty' ELSE 'ok' END"
     )
 
 
-def stratified_keep(
-    strat_col: Column | str,
-    content_col: Column | str,
-    rates: dict[str, int],
-    default_pct: int,
-) -> Column:
-    """Deterministic per-stratum downsampling decision: keep a row iff
-    its salted content-hash bucket (0-99) falls under the stratum's
-    keep percentage. The training-mix primitive — e.g. downsample the
-    dominant language while keeping the tail — with the same guarantees
-    as :func:`corpus_split`: reproducible across engines/cluster sizes,
-    stable under corpus growth, zero RNG. Per-row projection, no
-    shuffle; the rate lookup is a literal CASE chain (codegen'd), never
-    a join."""
-    sc = F.col(strat_col) if isinstance(strat_col, str) else strat_col
-    cc = F.col(content_col) if isinstance(content_col, str) else content_col
-    bucket = F.pmod(h60(F.concat(F.lit("sample-v1"), cc)), F.lit(100))
-    rate: Column = F.lit(default_pct)
-    for stratum, pct in rates.items():
-        rate = F.when(sc == stratum, F.lit(pct)).otherwise(rate)
+# Keep percentage per ``lang`` stratum of the training mix, and for
+# every stratum not listed.
+SAMPLE_RATES = {"en": 10}
+SAMPLE_DEFAULT_PCT = 60
+
+
+def stratified_keep() -> Column:
+    """Deterministic per-``lang`` downsampling decision: keep a row iff
+    its salted ``text``-hash bucket (0-99) falls under the stratum's
+    keep percentage (``SAMPLE_RATES``, else ``SAMPLE_DEFAULT_PCT``). The
+    training-mix primitive — e.g. downsample the dominant language while
+    keeping the tail — with the same guarantees as :func:`corpus_split`:
+    reproducible across engines/cluster sizes, stable under corpus
+    growth, zero RNG. Per-row projection, no shuffle; the rate lookup is
+    a literal CASE chain (codegen'd), never a join."""
+    bucket = F.pmod(h60(F.concat(F.lit("sample-v1"), F.col("text"))), F.lit(100))
+    rate: Column = F.lit(SAMPLE_DEFAULT_PCT)
+    for stratum, pct in SAMPLE_RATES.items():
+        rate = F.when(F.col("lang") == stratum, F.lit(pct)).otherwise(rate)
     return bucket < rate
 
 
-def stratified_keep_sql(
-    strat_expr: str, content_expr: str, rates: dict[str, int], default_pct: int
-) -> str:
-    h = h60_sql(f"'sample-v1' || {content_expr}")
+def stratified_keep_sql() -> str:
+    h = h60_sql("'sample-v1' || text")
     # build the CASE chain in the same last-wins order as the Spark
     # when()-fold (later dict entries override earlier ones)
-    rate = str(default_pct)
-    for stratum, pct in rates.items():
-        rate = f"CASE WHEN {strat_expr} = '{stratum}' THEN {pct} ELSE {rate} END"
+    rate = str(SAMPLE_DEFAULT_PCT)
+    for stratum, pct in SAMPLE_RATES.items():
+        rate = f"CASE WHEN lang = '{stratum}' THEN {pct} ELSE {rate} END"
     return f"(({h}) % 100) < ({rate})"
 
 
-def corpus_split(
-    col: Column | str,
-) -> Column:
-    """Deterministic train/val/test assignment by content hash — the
+def corpus_split() -> Column:
+    """Deterministic train/val/test assignment by ``text`` hash — the
     reproducible-sampling primitive of a training-data pipeline: the
     same document lands in the same split on every run, every engine,
     every cluster size (no RNG, no partition-order dependence — Spark's
@@ -337,8 +333,7 @@ def corpus_split(
     documents never moves an existing document between splits, unlike
     percentile- or sort-based splits.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    bucket = F.pmod(h60(F.concat(F.lit("split-v1"), c)), F.lit(100))
+    bucket = F.pmod(h60(F.concat(F.lit("split-v1"), F.col("text"))), F.lit(100))
     return (
         F.when(bucket < 90, "train")
         .when(bucket < 95, "val")
@@ -435,8 +430,8 @@ FROM expanded
 """
 
 
-def normalized_text_pandas(col: Column | str) -> Column:
-    """Scalar Pandas UDF text normalization: NFC-normalize, lowercase,
+def normalized_text_pandas() -> Column:
+    """Scalar Pandas UDF normalization of ``text``: NFC-normalize, lowercase,
     collapse whitespace. The ONE text op that genuinely needs Python
     (unicodedata isn't in Spark SQL); Arrow-vectorized per batch, and
     the UDF is a closure — pickled by value, no worker PYTHONPATH
@@ -458,17 +453,18 @@ def normalized_text_pandas(col: Column | str) -> Column:
             ]
         )
 
-    c = F.col(col) if isinstance(col, str) else col
-    return _normalize(c)
+    return _normalize(F.col("text"))
 
 
-def repetition_profile(
-    docs: DataFrame,
-    k: int = 3,
-) -> DataFrame:
+# Gram width (tokens) of the repetition profile.
+REPETITION_K = 3
+
+
+def repetition_profile(docs: DataFrame) -> DataFrame:
     """Duplicated n-gram CHARACTER mass per document (the Gopher /
     MassiveText quality filter, Rae et al. 2021 §A1.1): of all the
-    characters flowing through the doc's k-gram occurrence stream, the
+    characters flowing through the doc's k-gram occurrence stream
+    (k = ``REPETITION_K``), the
     fraction belonging to occurrences BEYOND the first of their gram —
     templated/looping text (boilerplate headers, generation loops)
     carries most of its mass in repeats and gets dropped before
@@ -489,7 +485,8 @@ def repetition_profile(
         F.col("doc_id").alias("doc"), tokens("text").alias("toks")
     )
     grams = toked.select(
-        "doc", F.explode(positional_shingles_from_tokens(F.col("toks"), k)).alias("g")
+        "doc",
+        F.explode(positional_shingles_from_tokens(F.col("toks"), REPETITION_K)).alias("g"),
     )
     per_gram = grams.groupBy("doc", "g").agg(F.count(F.lit(1)).alias("cnt"))
     glen = F.length("g").cast("bigint")
@@ -517,7 +514,7 @@ def repetition_profile(
 
 def repetition_profile_sql() -> str:
     toks = tokens_sql("text")
-    grams = positional_shingles_sql_from_toks("toks", 3)
+    grams = positional_shingles_sql_from_toks(REPETITION_K)
     return f"""
 WITH toked AS (SELECT doc_id AS doc, {toks} AS toks FROM documents),
 g AS (SELECT doc, unnest({grams}) AS g FROM toked),
@@ -937,29 +934,26 @@ def composite_quality(col: Column | str) -> Column:
     )
 
 
-def composite_quality_sql(expr: str) -> str:
+def composite_quality_sql() -> str:
     return (
-        f"least({word_count_sql(expr)} / 100.0, 1.0) * 0.5"
-        f" + least({stopword_hits_sql(expr, 'en')}"
-        f"         / CAST({word_count_sql(expr)} AS DOUBLE) / 0.1, 1.0) * 0.3"
-        f" + (1.0 - least({punct_count_sql(expr)}"
-        f"               / CAST(length({expr}) AS DOUBLE) / 0.2, 1.0)) * 0.2"
+        f"least({word_count_sql()} / 100.0, 1.0) * 0.5"
+        f" + least({stopword_hits_sql('en')}"
+        f"         / CAST({word_count_sql()} AS DOUBLE) / 0.1, 1.0) * 0.3"
+        f" + (1.0 - least({punct_count_sql()}"
+        f"               / CAST(length(text) AS DOUBLE) / 0.2, 1.0)) * 0.2"
     )
 
 
-def _bigram_grid_stats_np(
-    docs: DataFrame, id_col: str, text_col: str, scale: int
-) -> DataFrame:
+def _bigram_grid_stats_np(docs: DataFrame) -> DataFrame:
     """(doc, t, s) bigram-grid statistics via a numpy sliding window —
     the m07 template applied to t34 (VERDICT r8 #5): one Arrow-batched
-    pass computes per-doc T = Σc and S = Σ c·round(ln(c)·scale)
+    pass computes per-doc T = Σc and S = Σ c·round(ln(c)·FIXED_POINT_SCALE)
     without exploding one row per character through a hash aggregate.
-    Bit-compatibility with the JVM explode path: rounding uses the
-    shortest-decimal HALF_UP rule (Decimal(repr(x))) — the same rule
-    java.math.BigDecimal.valueOf applies inside F.round — and the
-    ln-grid absorbs libm-vs-Math.log ulp noise exactly as on the
-    explode path. The udf is a closure (pickled by value, repo
-    invariant)."""
+    Bit-compatibility with Spark's ``F.round`` and the DuckDB twin:
+    rounding uses the shortest-decimal HALF_UP rule (Decimal(repr(x)))
+    — the same rule java.math.BigDecimal.valueOf applies inside
+    F.round — and the ln-grid absorbs libm-vs-Math.log ulp noise. The
+    udf is a closure (pickled by value, repo invariant)."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -982,7 +976,7 @@ def _bigram_grid_stats_np(
         def qc_of(c: int) -> int:
             v = qc_cache.get(c)
             if v is None:
-                x = math.log(float(c)) * scale
+                x = math.log(float(c)) * FIXED_POINT_SCALE
                 v = qc_cache[c] = int(
                     Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP)
                 )
@@ -990,7 +984,7 @@ def _bigram_grid_stats_np(
 
         for pdf in batches:
             out_doc, out_t, out_s = [], [], []
-            for did, txt in zip(pdf[id_col], pdf[text_col]):
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
                 if txt is None or len(txt) < 2:
                     continue
                 cp = np.frombuffer(
@@ -1018,13 +1012,10 @@ def _bigram_grid_stats_np(
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(stat_batches, out_schema)
+    return docs.select("doc_id", "text").mapInPandas(stat_batches, out_schema)
 
 
-def char_entropy(
-    docs: DataFrame,
-    impl: str = "explode",
-) -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-doc character-bigram Shannon entropy (nats) — the
     compression-ratio quality signal: templated/looping junk compresses
     well and sits far below natural text's ~3 nats, so a low-entropy
@@ -1042,35 +1033,13 @@ def char_entropy(
     headroom: c·qc ≤ T·ln(T)·scale ≈ 3e15 for a 1-GB doc — far under
     2^63.
 
-    Scale shape: the bigram explode collapses into (doc, gram) counts
-    INSIDE the scan stage (partial aggregation before the exchange), so
-    the shuffle carries at most |alphabet|² rows per doc, not one row
-    per character. Docs with <2 chars (and NULL text) re-enter via the
-    left join with n_bigrams=0 and NULL entropy — same on both engines.
+    Scale shape: one Arrow-batched numpy pass per doc
+    (:func:`_bigram_grid_stats_np`) yields (doc, T, S) — no row per
+    character ever reaches a hash aggregate or the shuffle. Docs with
+    <2 chars (and NULL text) re-enter via the left join with
+    n_bigrams=0 and NULL entropy — same on both engines.
     """
-    if impl == "numpy":
-        per_doc = _bigram_grid_stats_np(docs, "doc_id", "text", FIXED_POINT_SCALE)
-    else:
-        grams = (
-            docs.filter(F.length("text") >= 2)
-            .select(
-                F.col("doc_id").alias("doc"),
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, length(text) - 1),"
-                        " i -> substring(text, i, 2))"
-                    )
-                ).alias("g"),
-            )
-        )
-        counts = grams.groupBy("doc", "g").agg(F.count(F.lit(1)).alias("c"))
-        qc = F.round(F.log(F.col("c").cast("double")) * FIXED_POINT_SCALE).cast(
-            "bigint"
-        )
-        per_doc = counts.groupBy("doc").agg(
-            F.sum("c").cast("bigint").alias("t"),
-            F.sum(F.col("c") * qc).cast("bigint").alias("s"),
-        )
+    per_doc = _bigram_grid_stats_np(docs)
     # ln(T) must ride the SAME quantized grid as the ln(c) terms:
     # jvm Math.log and libm log disagree by 1 ulp on some inputs, and
     # a raw ln(T) leaks that ulp straight into the hash (observed on
@@ -1206,8 +1175,8 @@ def language_confidence(
 
 def language_confidence_sql() -> str:
     langs = list(LANG_STOPWORDS)
-    pred = predicted_lang_sql("text")
-    score = {lg: stopword_hits_sql("text", lg) for lg in langs}
+    pred = predicted_lang_sql()
+    score = {lg: stopword_hits_sql(lg) for lg in langs}
 
     def second_for(elected: str) -> str:
         return "GREATEST(" + ", ".join(
@@ -1307,30 +1276,30 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     )
 
 
-def _gopher_parts_sql(expr: str) -> dict[str, str]:
+def _gopher_parts_sql() -> dict[str, str]:
     inlist = ", ".join(f"'{w}'" for w in GOPHER_STOP_PRESENCE)
     return {
-        "words": word_count_sql(expr),
-        "alnum": f"CAST(len(regexp_extract_all({expr}, '[A-Za-z0-9]')) AS BIGINT)",
+        "words": word_count_sql(),
+        "alnum": f"CAST(len(regexp_extract_all(text, '[A-Za-z0-9]')) AS BIGINT)",
         "alpha_words": (
-            f"CAST(len(regexp_extract_all({expr},"
+            f"CAST(len(regexp_extract_all(text,"
             f" '[0-9]*[A-Za-z][A-Za-z0-9]*')) AS BIGINT)"
         ),
-        "lines": f"CAST(len(regexp_extract_all({expr}, '\\n')) + 1 AS BIGINT)",
-        "bullets": f"CAST(len(regexp_extract_all({expr}, '(?m)^[-*]')) AS BIGINT)",
+        "lines": f"CAST(len(regexp_extract_all(text, '\\n')) + 1 AS BIGINT)",
+        "bullets": f"CAST(len(regexp_extract_all(text, '(?m)^[-*]')) AS BIGINT)",
         "ellipsis": (
-            f"CAST(len(regexp_extract_all({expr}, '(?m)\\.\\.\\.$')) AS BIGINT)"
+            f"CAST(len(regexp_extract_all(text, '(?m)\\.\\.\\.$')) AS BIGINT)"
         ),
-        "hashes": f"CAST(len(regexp_extract_all({expr}, '#|\\.\\.\\.')) AS BIGINT)",
+        "hashes": f"CAST(len(regexp_extract_all(text, '#|\\.\\.\\.')) AS BIGINT)",
         "stops": (
-            f"CAST(len(list_distinct(list_filter({tokens_sql(expr)},"
+            f"CAST(len(list_distinct(list_filter({tokens_sql('text')},"
             f" t -> t IN ({inlist})))) AS BIGINT)"
         ),
     }
 
 
 def gopher_rules_sql() -> str:
-    p = _gopher_parts_sql("text")
+    p = _gopher_parts_sql()
     rules = {
         "r_word_count": f"{p['words']} >= 50 AND {p['words']} <= 100000",
         "r_mean_word_len": (
@@ -1507,9 +1476,13 @@ FROM per_source
 # ---------------------------------------------------------------------------
 
 
+# Misra-Gries counters per partition of the t42 frequent-token sketch.
+FREQUENT_TOKENS_CAPACITY = 128
+
+
 def frequent_tokens(
     docs: DataFrame,
-    capacity: int = 128,
+    capacity: int = FREQUENT_TOKENS_CAPACITY,
 ) -> DataFrame:
     """Corpus-wide heavy-hitter tokens — every token whose exact count
     exceeds ``total/capacity`` — via the two-phase sketch-then-verify
@@ -1601,7 +1574,7 @@ def frequent_tokens(
     )
 
 
-def frequent_tokens_sql(capacity: int = 128) -> str:
+def frequent_tokens_sql() -> str:
     """DuckDB twin: the exact GROUP BY + strict HAVING the sketch-then-
     verify phases reproduce (the Misra-Gries guarantee makes the Spark
     output identical to this for every partitioning)."""
@@ -1617,5 +1590,5 @@ cnt AS (
 SELECT c.token, c.n_token, t.total_tokens,
        CAST(c.n_token AS DOUBLE) / CAST(t.total_tokens AS DOUBLE) AS share
 FROM cnt c CROSS JOIN tot t
-WHERE c.n_token * {capacity} > t.total_tokens
+WHERE c.n_token * {FREQUENT_TOKENS_CAPACITY} > t.total_tokens
 """

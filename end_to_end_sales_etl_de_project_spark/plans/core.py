@@ -24,7 +24,6 @@ and the oracle SQL (driver hash-compares by sorted column name).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,24 +33,12 @@ from end_to_end_sales_etl_de_project_spark.operators.metrics import (
     top_performer_incentive,
     windowed_partition_sum,
 )
+from end_to_end_sales_etl_de_project_spark.plans.registry import register
 from end_to_end_sales_etl_de_project_spark.sources.tables import (
     load_table,
     session_artifact,
     spread,
 )
-
-CORE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-CORE_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        CORE_QUERIES[name] = fn
-        if oracle is not None:
-            CORE_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +56,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register("q01_customer_monthly_spend", _Q01_ORACLE)
+@register("q01_customer_monthly_spend", _Q01_ORACLE)
 def q01_customer_monthly_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly spend per customer — the reference's flagship query.
 
@@ -96,7 +83,7 @@ def q01_customer_monthly_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("customer_id", "customer_name", "sales_month", "total_sales")
 
 
-@_register("q01g_customer_monthly_spend_grouped", _Q01_ORACLE)
+@register("q01g_customer_monthly_spend_grouped", _Q01_ORACLE)
 def q01g_customer_monthly_spend_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idiomatic groupBy form of q01 — one exchange with map-side combine
     instead of window-shuffle + distinct-shuffle. Same oracle."""
@@ -144,7 +131,7 @@ FROM (
 """
 
 
-@_register("q02_sales_team_incentive", _Q02_ORACLE)
+@register("q02_sales_team_incentive", _Q02_ORACLE)
 def q02_sales_team_incentive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-performer incentive — rank suppliers per (nation, month) by
     revenue; rank-1 (ties included, ``rank()`` semantics per
@@ -196,7 +183,7 @@ WHERE l_shipdate < TIMESTAMP '1997-01-01 00:00:00' AND l_quantity > 45
 """
 
 
-@_register("q03_projection_filter", _Q03_ORACLE)
+@register("q03_projection_filter", _Q03_ORACLE)
 def q03_projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + conjunctive predicate; both reach the parquet scan
     (PushedFilters / ReadSchema — verified in tests)."""
@@ -214,7 +201,7 @@ WHERE c_mktsegment IN ('BUILDING', 'MACHINERY') AND c_acctbal > 100.0
 """
 
 
-@_register("q04_filter_isin", _Q04_ORACLE)
+@register("q04_filter_isin", _Q04_ORACLE)
 def q04_filter_isin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list + range predicate (the staging-ledger filter shape,
     SURVEY §2.2 P6)."""
@@ -236,7 +223,7 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 """
 
 
-@_register("q05_join_inner_broadcast", _Q05_ORACLE)
+@register("q05_join_inner_broadcast", _Q05_ORACLE)
 def q05_join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: fact ⋈ dim inner equi-join (`src/transform/transform.py:93-97`).
 
@@ -261,7 +248,7 @@ JOIN region ON n_regionkey = r_regionkey
 """
 
 
-@_register("q06_join_chain", _Q06_ORACLE)
+@register("q06_join_chain", _Q06_ORACLE)
 def q06_join_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1→J2→J3 linear dim chain (`src/transform/transform.py:88-117`):
     two broadcast hash joins, zero shuffles."""
@@ -287,7 +274,7 @@ WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 """
 
 
-@_register("q15_join_semi", _Q15_ORACLE)
+@register("q15_join_semi", _Q15_ORACLE)
 def q15_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (EXISTS) — beyond the reference's inner-only
     surface (SURVEY §2.3 'not present'), free from Catalyst."""
@@ -306,7 +293,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
 """
 
 
-@_register("q16_join_anti", _Q16_ORACLE)
+@register("q16_join_anti", _Q16_ORACLE)
 def q16_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (NOT EXISTS) — against a selective order subset:
     every customer has SOME order in this data, so the unfiltered form
@@ -328,7 +315,7 @@ GROUP BY 1
 """
 
 
-@_register("q17_join_left_agg", _Q17_ORACLE)
+@register("q17_join_left_agg", _Q17_ORACLE)
 def q17_join_left_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER join + aggregate, keeping order-less customers with
     count 0 / spend 0."""
@@ -357,7 +344,7 @@ SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem WHERE
 """
 
 
-@_register("q07_union_all", _Q07_ORACLE)
+@register("q07_union_all", _Q07_ORACLE)
 def q07_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: positional UNION ALL fold (`src/transform/transform.py:75-79`).
     Columns are pre-normalized by selects, as the reference guarantees
@@ -374,7 +361,7 @@ SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 """
 
 
-@_register("q08_distinct", _Q08_ORACLE)
+@register("q08_distinct", _Q08_ORACLE)
 def q08_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: distinct over a projection."""
     return load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
@@ -392,7 +379,7 @@ FROM orders
 """
 
 
-@_register("q09_window_sum", _Q09_ORACLE)
+@register("q09_window_sum", _Q09_ORACLE)
 def q09_window_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: whole-partition window sum (no orderBy ⇒ unbounded frame),
     kept on every row (`src/transform/transform.py:124-128`)."""
@@ -418,7 +405,7 @@ WHERE rnk = 1
 """
 
 
-@_register("q10_rank_top1", _Q10_ORACLE)
+@register("q10_rank_top1", _Q10_ORACLE)
 def q10_rank_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 + top-k: rank-then-filter top-1 per group
     (`src/transform/transform.py:150-152`), with a deterministic
@@ -440,7 +427,7 @@ LIMIT 10
 """
 
 
-@_register("q19_orderby_limit", _Q19_ORACLE)
+@register("q19_orderby_limit", _Q19_ORACLE)
 def q19_orderby_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans TakeOrderedAndProject — per-partition
     top-k then a k-row driver merge; no full sort at any scale."""
@@ -469,7 +456,7 @@ FROM customer
 """
 
 
-@_register("q11_scalar_funcs", _Q11_ORACLE)
+@register("q11_scalar_funcs", _Q11_ORACLE)
 def q11_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F7 in one projection: concat, concat_ws, substring,
     decimal-round, when/otherwise, lit, arithmetic
@@ -508,7 +495,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q12_pricing_summary", _Q12_ORACLE)
+@register("q12_pricing_summary", _Q12_ORACLE)
 def q12_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: multi-aggregate groupBy with
     map-side partial aggregation — the canonical 100 TB-safe agg.
@@ -542,7 +529,7 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
-@_register("q18_rollup", _Q18_ORACLE)
+@register("q18_rollup", _Q18_ORACLE)
 def q18_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (grouping-sets family; 'not present' in
     the reference, SURVEY §2.4)."""
@@ -564,7 +551,7 @@ GROUP BY 1
 """
 
 
-@_register("q20_pivot", _Q20_ORACLE)
+@register("q20_pivot", _Q20_ORACLE)
 def q20_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot on an explicit value list (explicit list avoids the extra
     distinct-values job — required practice at scale)."""
@@ -593,7 +580,7 @@ JOIN nation   ON c_nationkey = n_nationkey
 """
 
 
-@_register("q13_customer_mart", _Q13_ORACLE)
+@register("q13_customer_mart", _Q13_ORACLE)
 def q13_customer_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer data mart (reference 8-col select,
     `src/main_1.py:423-432`): enriched fact detail, one row per order."""
@@ -628,7 +615,7 @@ JOIN nation   ON s_nationkey = n_nationkey
 """
 
 
-@_register("q14_sales_team_mart", _Q14_ORACLE)
+@register("q14_sales_team_mart", _Q14_ORACLE)
 def q14_sales_team_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sales-team mart (reference 12-col select + SQL-expr month,
     `src/main_1.py:486-499`); written partitioned by
@@ -668,7 +655,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
 
-@_register("q21_cube", _Q21_ORACLE)
+@register("q21_cube", _Q21_ORACLE)
 def q21_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dimensions (all 4 grouping sets in one pass)."""
     return (
@@ -685,7 +672,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@_register("q22_except", _Q22_ORACLE)
+@register("q22_except", _Q22_ORACLE)
 def q22_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (set difference; ``subtract`` is Spark's EXCEPT DISTINCT —
     ``exceptAll`` would keep multiplicity, which SQL EXCEPT does not)."""
@@ -702,7 +689,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@_register("q23_intersect", _Q23_ORACLE)
+@register("q23_intersect", _Q23_ORACLE)
 def q23_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -727,7 +714,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate NULLS FIRST, o_orderkey
 """
 
 
-@_register("q25_window_analytics", _Q25_ORACLE)
+@register("q25_window_analytics", _Q25_ORACLE)
 def q25_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead/dense_rank/ntile + explicit-frame running sum — the
     analytic-window family the reference lacks (SURVEY §2.5). NULL
@@ -766,7 +753,7 @@ FROM orders
 """
 
 
-@_register("q26_date_functions", _Q26_ORACLE)
+@register("q26_date_functions", _Q26_ORACLE)
 def q26_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time function family (the reference never parses dates —
     SURVEY §2.8 'not present')."""
@@ -795,7 +782,7 @@ FROM customer
 """
 
 
-@_register("q27_string_functions", _Q27_ORACLE)
+@register("q27_string_functions", _Q27_ORACLE)
 def q27_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function family: case, trim, replace, regexp, pad."""
     cust = load_table(spark, sf_dir, "customer")
@@ -821,7 +808,7 @@ FROM customer
 """
 
 
-@_register("q28_null_handling", _Q28_ORACLE)
+@register("q28_null_handling", _Q28_ORACLE)
 def q28_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """coalesce/nullif/is-null/if — null-handling family."""
     cust = load_table(spark, sf_dir, "customer")
@@ -847,7 +834,7 @@ HAVING COUNT(*) >= 15
 """
 
 
-@_register("q29_having", _Q29_ORACLE)
+@register("q29_having", _Q29_ORACLE)
 def q29_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING (post-aggregation predicate)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -870,7 +857,7 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
 """
 
 
-@_register("q30_sql_subqueries", _Q30_ORACLE)
+@register("q30_sql_subqueries", _Q30_ORACLE)
 def q30_sql_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-API entry point: scalar subquery + correlated EXISTS through
     ``spark.sql`` over temp views — Catalyst decorrelates both; the
@@ -895,7 +882,7 @@ GROUP BY 1
 """
 
 
-@_register("q31_salted_agg", _Q31_ORACLE)
+@register("q31_salted_agg", _Q31_ORACLE)
 def q31_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe salted two-phase sum (operators/skew.py). The oracle
     is the PLAIN single-phase sum — decimal exactness makes the salted
@@ -906,7 +893,7 @@ def q31_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_sum(li, ["l_suppkey"], "l_extendedprice", "revenue", salt_buckets=16)
 
 
-@_register("q32_approx_aggs", None)  # sketch-based: no exact oracle by design
+@register("q32_approx_aggs", None)  # sketch-based: no exact oracle by design
 def q32_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate aggregates (HyperLogLog++ distinct, GK quantiles) —
     the sketches the reference lacks (SURVEY §2.4 'not present').
@@ -1004,7 +991,7 @@ def _staging_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
     return f"{tmp}/engine-{tag}-{key}"
 
 
-@_register("q33_csv_roundtrip", _Q33_ORACLE)
+@register("q33_csv_roundtrip", _Q33_ORACLE)
 def q33_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 CSV scan under the correctness gate: project orders to a
     CSV-safe shape (ints/strings/exact decimal), write CSV, read it
@@ -1031,7 +1018,7 @@ def q33_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("q56_orc_roundtrip", _Q33_ORACLE)
+@register("q56_orc_roundtrip", _Q33_ORACLE)
 def q56_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + scan under the correctness gate (columnar alternative
     the reference lacks; Spark ships the reader/writer built in). Same
@@ -1051,7 +1038,7 @@ def q56_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("q57_jsonl_roundtrip", _Q33_ORACLE)
+@register("q57_jsonl_roundtrip", _Q33_ORACLE)
 def q57_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-Lines sink + schema'd scan under the correctness gate — the
     interchange format training-data pipelines ingest most. Read back
@@ -1086,7 +1073,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q34_partitioned_write_readback", _Q34_ORACLE)
+@register("q34_partitioned_write_readback", _Q34_ORACLE)
 def q34_partitioned_write_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 partitioned parquet sink under the correctness gate: write
     orders Hive-partitioned by month (the sales-mart layout,
@@ -1159,7 +1146,7 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 """
 
 
-@_register("q35_shipping_priority", _Q35_ORACLE)
+@register("q35_shipping_priority", _Q35_ORACLE)
 def q35_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on all three tables pushed to
     the scans, then a fact-fact join + grouped revenue. The segment
@@ -1200,7 +1187,7 @@ GROUP BY 1
 """
 
 
-@_register("q36_local_supplier_volume", _Q36_ORACLE)
+@register("q36_local_supplier_volume", _Q36_ORACLE)
 def q36_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-table join with a same-nation constraint
     (customer and supplier nation must match) — the deepest join chain
@@ -1243,7 +1230,7 @@ GROUP BY 1
 """
 
 
-@_register("q37_product_revenue", _Q37_ORACLE)
+@register("q37_product_revenue", _Q37_ORACLE)
 def q37_product_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-dimension join. The reference DECLARES a product dim but
     never joins it (the join is commented out, `src/main_0.py:156-160`;
@@ -1269,7 +1256,7 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """
 
 
-@_register("q38_grouping_sets", _Q38_ORACLE)
+@register("q38_grouping_sets", _Q38_ORACLE)
 def q38_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (finer control than rollup/cube) via the
     SQL API — Catalyst expands to one pass."""
@@ -1297,7 +1284,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate NULLS FIRST, o_orderkey
 """
 
 
-@_register("q39_window_distribution", _Q39_ORACLE)
+@register("q39_window_distribution", _Q39_ORACLE)
 def q39_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: percent_rank, cume_dist,
     first/last value with an explicit full-partition frame. NULL order
@@ -1369,7 +1356,7 @@ FROM moments
 """
 
 
-@_register("q41_exact_moment_stats", _Q41_ORACLE)
+@register("q41_exact_moment_stats", _Q41_ORACLE)
 def q41_exact_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample variance/stddev/correlation per return flag via exact
     decimal moments (see _Q41_MOMENTS note). One map-side-combinable
@@ -1394,7 +1381,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@_register("q42_union_distinct", _Q42_ORACLE)
+@register("q42_union_distinct", _Q42_ORACLE)
 def q42_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct semantics) — completes the set-op family with
     q07 (UNION ALL), q22 (EXCEPT), q23 (INTERSECT)."""
@@ -1411,7 +1398,7 @@ WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000
 """
 
 
-@_register("q43_not_in_subquery", _Q43_ORACLE)
+@register("q43_not_in_subquery", _Q43_ORACLE)
 def q43_not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN subquery (null-aware anti join — Catalyst plans the
     three-valued-logic variant, distinct from q16's NOT EXISTS)."""
@@ -1439,7 +1426,7 @@ WHERE rn = 1
 """
 
 
-@_register("q44_dedup_keep_latest", _Q44_ORACLE)
+@register("q44_dedup_keep_latest", _Q44_ORACLE)
 def q44_dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style keep-latest dedup: one row per key, newest by event
     time (deterministic tiebreak on the id) — the read-side half of
@@ -1465,7 +1452,7 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 """
 
 
-@_register("q45_orc_roundtrip", _Q45_ORACLE)
+@register("q45_orc_roundtrip", _Q45_ORACLE)
 def q45_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink under the correctness gate: write nation as ORC,
     read it back — the engine's columnar-format surface beyond parquet
@@ -1482,7 +1469,7 @@ FROM supplier
 """
 
 
-@_register("q46_json_roundtrip", _Q46_ORACLE)
+@register("q46_json_roundtrip", _Q46_ORACLE)
 def q46_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source/sink under the correctness gate: write supplier
     as JSONL, read back with an EXPLICIT schema (decimal text roundtrip
@@ -1507,7 +1494,7 @@ WHERE p_type LIKE '%AND%' AND p_name NOT LIKE '%green%' AND p_size >= 10
 """
 
 
-@_register("q47_like_patterns", _Q47_ORACLE)
+@register("q47_like_patterns", _Q47_ORACLE)
 def q47_like_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE / NOT LIKE pattern predicates + regexp group extraction
     (the pattern-matching family; uses the otherwise-untouched
@@ -1535,7 +1522,7 @@ FROM orders
 """
 
 
-@_register("q48_range_frame", _Q48_ORACLE)
+@register("q48_range_frame", _Q48_ORACLE)
 def q48_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-based RANGE window frame (vs q25's ROWS frames): for each
     order, how many of the customer's orders cost within 10000 below
@@ -1564,7 +1551,7 @@ GROUP BY 1
 """
 
 
-@_register("q49_array_agg", _Q49_ORACLE)
+@register("q49_array_agg", _Q49_ORACLE)
 def q49_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation: collect per-group values into a SORTED array
     (collect_list order is shuffle-dependent — sort_array makes it
@@ -1593,7 +1580,7 @@ FROM region
 """
 
 
-@_register("q50_map_functions", _Q50_ORACLE)
+@register("q50_map_functions", _Q50_ORACLE)
 def q50_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-type functions: build a map column, then explode it back to
     flat rows (maps themselves don't hash cross-engine; the roundtrip
@@ -1608,7 +1595,7 @@ def q50_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("r_regionkey", "region_name", "map_key")
 
 
-@_register("q02w_sales_team_incentive_windowed", _Q02_ORACLE)
+@register("q02w_sales_team_incentive_windowed", _Q02_ORACLE)
 def q02w_sales_team_incentive_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-faithful plan shape for the incentive metric:
     window-sum + distinct (transform.py:139-147) instead of q02's
@@ -1652,7 +1639,7 @@ GROUP BY 1
 """
 
 
-@_register("q51_filtered_aggregates", _Q51_ORACLE)
+@register("q51_filtered_aggregates", _Q51_ORACLE)
 def q51_filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-clause aggregates (per-aggregate predicates in one pass —
     the one-scan alternative to N filtered subqueries)."""
@@ -1681,7 +1668,7 @@ WHERE doc_id < 10 AND token <> ''
 """
 
 
-@_register("q53_posexplode_tokens", _Q53_ORACLE)
+@register("q53_posexplode_tokens", _Q53_ORACLE)
 def q53_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral positional explode: one row per (doc, position, token) —
     the flattening primitive under every token-level pipeline stage."""
@@ -1707,7 +1694,7 @@ FROM lineitem GROUP BY 1
 """
 
 
-@_register("q54_unpivot", _Q54_ORACLE)
+@register("q54_unpivot", _Q54_ORACLE)
 def q54_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide→long) via ``stack`` — the inverse of q20's pivot;
     the oracle expresses the same reshape as a UNION ALL."""
@@ -1727,7 +1714,7 @@ GROUP BY 1
 """
 
 
-@_register("q55_string_agg", _Q55_ORACLE)
+@register("q55_string_agg", _Q55_ORACLE)
 def q55_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation (LISTAGG shape): collect, sort for
     determinism, join — collect_list order alone is shuffle-dependent.
@@ -1758,7 +1745,7 @@ GROUP BY 1
 """
 
 
-@_register("q58_sorted_layout_readback", _Q58_ORACLE)
+@register("q58_sorted_layout_readback", _Q58_ORACLE)
 def q58_sorted_layout_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping layout: write lineitem range-partitioned + sorted
     by l_shipdate, re-read with a date predicate, aggregate. The layout
@@ -1800,22 +1787,13 @@ def q58_sorted_layout_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from end_to_end_sales_etl_de_project_spark.operators.profiling import (  # noqa: E402
+    LINEITEM_PROFILE,
     profile_columns,
     profile_columns_sql,
 )
 
-_Q59_PROFILE_COLS: list[tuple[str, str]] = [
-    # (column, kind) — kind ∈ {num, ts, str}
-    ("l_orderkey", "num"),
-    ("l_linenumber", "num"),
-    ("l_quantity", "num"),
-    ("l_returnflag", "str"),
-    ("l_linestatus", "str"),
-    ("l_shipdate", "ts"),
-]
 
-
-@_register("q59_data_profile", profile_columns_sql(_Q59_PROFILE_COLS, "lineitem"))
+@register("q59_data_profile", profile_columns_sql())
 def q59_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profile audit over the fact table — one row per profiled
     column with row/null/distinct counts and min/max, via
@@ -1827,9 +1805,7 @@ def q59_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand — N profiled columns multiply every fact row, and that
     fan-out otherwise partial-aggregates on ONE core (no-op at real
     scale)."""
-    return profile_columns(
-        spread(load_table(spark, sf_dir, "lineitem")), _Q59_PROFILE_COLS
-    )
+    return profile_columns(spread(load_table(spark, sf_dir, "lineitem")), LINEITEM_PROFILE)
 
 
 # ---------------------------------------------------------------------------
@@ -1858,7 +1834,7 @@ GROUP BY 1
 """
 
 
-@_register("q60_star_join", _Q60_ORACLE)
+@register("q60_star_join", _Q60_ORACLE)
 def q60_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: local-supplier revenue per nation inside one
     region and a 2-year window. The fact shuffles ONCE for the
@@ -1918,7 +1894,7 @@ FROM orders
 """
 
 
-@_register("q61_union_by_name", _Q61_ORACLE)
+@register("q61_union_by_name", _Q61_ORACLE)
 def q61_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution under the correctness gate: generation 1 is
     written WITHOUT the ``priority`` column, generation 2 adds it; the
@@ -1978,7 +1954,7 @@ GROUP BY l_returnflag
 """
 
 
-@_register("q62_incremental_agg", _Q62_ORACLE)
+@register("q62_incremental_agg", _Q62_ORACLE)
 def q62_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental mart maintenance: the fact is split into a BASE
     partition and a DELTA batch (by ship date), partial aggregates are
@@ -2022,19 +1998,12 @@ def q62_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from end_to_end_sales_etl_de_project_spark.operators.profiling import (  # noqa: E402
+    FOREIGN_KEYS,
     fk_orphans,
     fk_orphans_sql,
 )
 
-_Q63_FKS_SQL = [
-    ("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-    ("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
-    ("lineitem->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-    ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
-]
-
-
-@_register("q63_fk_orphans", fk_orphans_sql(_Q63_FKS_SQL))
+@register("q63_fk_orphans", fk_orphans_sql())
 def q63_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across the whole star: every
     declared FK gets (n_rows, n_null_keys, n_orphans) from one
@@ -2042,17 +2011,10 @@ def q63_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit a production warehouse runs after every load — clean data
     reports zero orphans (this corpus does), and the planted-orphan
     unit test (tests/test_profiling.py) proves the detector fires."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    part = load_table(spark, sf_dir, "part")
-    supplier = load_table(spark, sf_dir, "supplier")
-    customer = load_table(spark, sf_dir, "customer")
     return fk_orphans(
         [
-            ("lineitem->orders", li, "l_orderkey", orders, "o_orderkey"),
-            ("lineitem->part", li, "l_partkey", part, "p_partkey"),
-            ("lineitem->supplier", li, "l_suppkey", supplier, "s_suppkey"),
-            ("orders->customer", orders, "o_custkey", customer, "c_custkey"),
+            (name, load_table(spark, sf_dir, child), ck, load_table(spark, sf_dir, parent), pk)
+            for name, child, ck, parent, pk in FOREIGN_KEYS
         ]
     )
 
@@ -2076,7 +2038,7 @@ GROUP BY 1
 """
 
 
-@_register("q64_numeric_histogram", _Q64_ORACLE)
+@register("q64_numeric_histogram", _Q64_ORACLE)
 def q64_numeric_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of order value — the distribution audit
     behind skew detection and bucket-boundary choices. Fixed origin +
@@ -2125,7 +2087,7 @@ GROUP BY s.s_name
 """
 
 
-@_register("q65_sole_late_supplier", _Q65_ORACLE)
+@register("q65_sole_late_supplier", _Q65_ORACLE)
 def q65_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21's correlated-subquery shape on this schema: per
     supplier, the number of finished multi-supplier orders where THIS
@@ -2182,7 +2144,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@_register("q66_except_all", _Q66_ORACLE)
+@register("q66_except_all", _Q66_ORACLE)
 def q66_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (bag semantics): multiplicity-aware difference —
     a customer with 3 open and 1 filled order survives twice, which
@@ -2210,7 +2172,7 @@ GROUP BY l.l_orderkey
 """
 
 
-@_register("q67_salted_join", _Q67_ORACLE)
+@register("q67_salted_join", _Q67_ORACLE)
 def q67_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manually salted fact⋈dim join: orders is replicated 8× (one copy
     per salt), lineitem scatters per-row — a hot order key's lineitems
@@ -2226,7 +2188,7 @@ def q67_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderpriority")
     )
-    joined = salted_join(li, orders, "l_orderkey", "o_orderkey", n_salts=8)
+    joined = salted_join(li, orders, "l_orderkey", "o_orderkey")
     return joined.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(money("l_extendedprice")).cast("double").alias("total_price"),
@@ -2257,7 +2219,7 @@ FROM booked b FULL OUTER JOIN shipped s ON b.month = s.month
 """
 
 
-@_register("q68_full_outer_reconcile", _Q68_ORACLE)
+@register("q68_full_outer_reconcile", _Q68_ORACLE)
 def q68_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-ledger reconciliation via FULL OUTER join — months booked
     (orders) vs months shipped (lineitem), with one-sided months
@@ -2300,7 +2262,7 @@ FROM orders
 """
 
 
-@_register("q69_csv_quoted_roundtrip", _Q69_ORACLE)
+@register("q69_csv_quoted_roundtrip", _Q69_ORACLE)
 def q69_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV quoting under the correctness gate: a synthesized column
     carrying BOTH the delimiter and the quote character round-trips
@@ -2347,7 +2309,7 @@ GROUP BY 1
 """
 
 
-@_register("q70_fuzzy_name_match", _Q70_ORACLE)
+@register("q70_fuzzy_name_match", _Q70_ORACLE)
 def q70_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy entity matching, the MDM/record-linkage shape: BLOCK
     (equi-join on a discriminating key), then score candidates with
@@ -2409,7 +2371,10 @@ def q70_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order (Morton) curve key: 2-D data-skipping layout
 # ---------------------------------------------------------------------------
 
-def _z16_sql(a: str, b: str) -> str:
+def _z16_sql() -> str:
+    """Morton interleave of q71's two 16-bit coordinates."""
+    a = "(o_custkey & 65535)"
+    b = "(CAST(FLOOR(o_totalprice / 100.0) AS BIGINT) & 65535)"
     terms = []
     for i in range(16):
         terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
@@ -2419,14 +2384,13 @@ def _z16_sql(a: str, b: str) -> str:
 
 _Q71_ORACLE = f"""
 SELECT o_orderkey,
-       CAST({_z16_sql('(o_custkey & 65535)',
-                      '(CAST(FLOOR(o_totalprice / 100.0) AS BIGINT) & 65535)')}
+       CAST({_z16_sql()}
             AS BIGINT) AS z_key
 FROM orders
 """
 
 
-@_register("q71_zorder_key", _Q71_ORACLE)
+@register("q71_zorder_key", _Q71_ORACLE)
 def q71_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton/Z-order curve key over (customer, price-bucket) — the
     2-D generalization of q58's sorted layout: writing the fact
@@ -2478,7 +2442,7 @@ WINDOW w AS (PARTITION BY o_custkey
 """
 
 
-@_register("q72_scd2_segments", _Q72_ORACLE)
+@register("q72_scd2_segments", _Q72_ORACLE)
 def q72_scd2_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type 2 build from a change log: treat
     each customer's order stream as observations of their priority
@@ -2554,7 +2518,7 @@ FROM ranked WHERE rnk <= 100
 """
 
 
-@_register("q73_market_basket_lift", _Q73_ORACLE)
+@register("q73_market_basket_lift", _Q73_ORACLE)
 def q73_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: top-100 within-order part pairs by
     support, with exact lift = P(a,b)·N / (P(a)·P(b)) — the
@@ -2636,7 +2600,7 @@ SELECT l_returnflag, l_linestatus, 'n_rows', n_rows FROM base
 """
 
 
-@_register("q74_unpivot", _Q74_ORACLE)
+@register("q74_unpivot", _Q74_ORACLE)
 def q74_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt — wide metric columns to tall (metric, value) rows,
     the inverse reshape of q20's pivot (feeding generic metric sinks /
@@ -2679,7 +2643,7 @@ WHERE p.p_brand = 'Brand#1' AND l.l_quantity < a.qty_lim
 """
 
 
-@_register("q75_small_qty_revenue", _Q75_ORACLE)
+@register("q75_small_qty_revenue", _Q75_ORACLE)
 def q75_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: revenue from below-average-quantity line items
     of one brand — the correlated scalar subquery (per-part 0.2×avg
@@ -2728,7 +2692,7 @@ JOIN customer c ON o.o_custkey = c.c_custkey
 """
 
 
-@_register("q76_large_orders", _Q76_ORACLE)
+@register("q76_large_orders", _Q76_ORACLE)
 def q76_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total line quantity exceeds 250,
     decorated with customer — the HAVING-on-aggregate then join-back
@@ -2776,7 +2740,7 @@ WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
 """
 
 
-@_register("q77_disjunctive_join", _Q77_ORACLE)
+@register("q77_disjunctive_join", _Q77_ORACLE)
 def q77_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: revenue under a DISJUNCTION of (brand, size,
     quantity) predicate groups that mix columns from both join sides —
@@ -2842,7 +2806,7 @@ WHERE part_revenue > 0.0005 * t.total
 """
 
 
-@_register("q78_revenue_share", _Q78_ORACLE)
+@register("q78_revenue_share", _Q78_ORACLE)
 def q78_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose revenue exceeds a FRACTION OF THE
     GLOBAL TOTAL — the HAVING-against-a-scalar-subquery pattern.
@@ -2898,7 +2862,7 @@ FROM churned GROUP BY 1
 """
 
 
-@_register("q79_churned_rich_customers", _Q79_ORACLE)
+@register("q79_churned_rich_customers", _Q79_ORACLE)
 def q79_churned_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: per-segment count/balance of above-average-
     balance customers with NO recent orders — scalar-subquery average +
@@ -2956,7 +2920,7 @@ CROSS JOIN mx WHERE r.total_revenue = mx.m
 """
 
 
-@_register("q80_top_revenue_supplier", _Q80_ORACLE)
+@register("q80_top_revenue_supplier", _Q80_ORACLE)
 def q80_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) achieving the quarter's MAXIMUM
     revenue — the create-view-then-max pattern, ties preserved (a
@@ -3018,7 +2982,7 @@ FROM monthly
 """
 
 
-@_register("q81_cumulative_distinct", _Q81_ORACLE)
+@register("q81_cumulative_distinct", _Q81_ORACLE)
 def q81_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running DISTINCT count per key — months in which each customer
     first bought each part, rolled to (new_parts, cumulative distinct
@@ -3098,7 +3062,7 @@ FROM m
 """
 
 
-@_register("q82_mom_growth", _Q82_ORACLE)
+@register("q82_mom_growth", _Q82_ORACLE)
 def q82_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue growth per market segment — the lag
     comparison every KPI dashboard runs. The window's input is the
@@ -3161,7 +3125,7 @@ FROM seq GROUP BY 1
 """
 
 
-@_register("q83_repeat_rate", _Q83_ORACLE)
+@register("q83_repeat_rate", _Q83_ORACLE)
 def q83_repeat_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly repeat-purchase rate: of each month's active customers,
     the fraction who ALSO purchased in the immediately preceding
@@ -3215,7 +3179,7 @@ FROM oc GROUP BY c_count
 """
 
 
-@_register("q84_order_count_histogram", _Q84_ORACLE)
+@register("q84_order_count_histogram", _Q84_ORACLE)
 def q84_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: the customer order-count distribution. The
     defining feature is the predicate INSIDE the outer-join condition
@@ -3271,7 +3235,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register("q85_nation_volume", _Q85_ORACLE)
+@register("q85_nation_volume", _Q85_ORACLE)
 def q85_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: shipping volume between a nation PAIR in both
     directions, by ship year. The join graph touches the fact twice
@@ -3355,7 +3319,7 @@ GROUP BY 1
 """
 
 
-@_register("q86_market_share", _Q86_ORACLE)
+@register("q86_market_share", _Q86_ORACLE)
 def q86_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of ECONOMY-part revenue sold
     into ASIA-region customers, per order year. The share is a
@@ -3434,7 +3398,7 @@ LIMIT 20
 """
 
 
-@_register("q87_returned_items", _Q87_ORACLE)
+@register("q87_returned_items", _Q87_ORACLE)
 def q87_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: the 20 customers who returned the most revenue
     in a half-year window — join + grouped revenue + top-k. The orderBy
@@ -3487,7 +3451,7 @@ GROUP BY o_orderpriority
 """
 
 
-@_register("q88_priority_delay_check", _Q88_ORACLE)
+@register("q88_priority_delay_check", _Q88_ORACLE)
 def q88_priority_delay_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: per order priority, how many of a quarter's
     orders had at least one line item shipped >30 days after the order
@@ -3542,7 +3506,7 @@ GROUP BY 1
 """
 
 
-@_register("q89_promo_revenue_share", _Q89_ORACLE)
+@register("q89_promo_revenue_share", _Q89_ORACLE)
 def q89_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: the percentage of each ship month's revenue
     coming from promoted (ECONOMY-type) parts — conditional-sum ratio
@@ -3596,7 +3560,7 @@ GROUP BY p_brand, p_size
 """
 
 
-@_register("q90_supplier_diversity", _Q90_ORACLE)
+@register("q90_supplier_diversity", _Q90_ORACLE)
 def q90_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: per (brand, size), how many DISTINCT suppliers
     have shipped the part — excluding an undesirable-supplier list
@@ -3635,7 +3599,7 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 """
 
 
-@_register("q91_jdbc_roundtrip", _Q91_ORACLE)
+@register("q91_jdbc_roundtrip", _Q91_ORACLE)
 def q91_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2+S7 under real execution: the nation dim is APPENDED to a JDBC
     table (reference utility.py:63-77 writes, :51-60 reads) and read
@@ -3699,7 +3663,7 @@ GROUP BY l_returnflag
 """
 
 
-@_register("q92_approx_error_bounds", _Q92_ORACLE)
+@register("q92_approx_error_bounds", _Q92_ORACLE)
 def q92_approx_error_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q32's audit twin: the sketch outputs themselves are
     engine-specific (rows-only by design), but their ERROR CONTRACTS
@@ -3768,7 +3732,7 @@ GROUP BY o_orderstatus
 """
 
 
-@_register("q93_permissive_rescue", _Q93_ORACLE)
+@register("q93_permissive_rescue", _Q93_ORACLE)
 def q93_permissive_rescue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level malformed-record rescue, driver-checked end to end.
 
@@ -3862,7 +3826,7 @@ WHERE p.p_size <= 10 AND p.p_type = 'PROMO'
 """
 
 
-@_register("q94_min_cost_supplier", _Q94_ORACLE)
+@register("q94_min_cost_supplier", _Q94_ORACLE)
 def q94_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape without partsupp: for every small PROMO part,
     the region-1 supplier(s) with the MINIMUM account balance among
@@ -3934,7 +3898,7 @@ GROUP BY c_nationkey
 """
 
 
-@_register("q95_sales_opportunity", _Q95_ORACLE)
+@register("q95_sales_opportunity", _Q95_ORACLE)
 def q95_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: rich-but-inactive customers per nation —
     account balance above the global positive-balance average, no
@@ -3989,7 +3953,7 @@ GROUP BY s_name
 """
 
 
-@_register("q96_dominant_supplier", _Q96_ORACLE)
+@register("q96_dominant_supplier", _Q96_ORACLE)
 def q96_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supply-concentration audit (the Q11/Q20 family): suppliers who
     shipped more than half of a part's total quantity, counted per
@@ -4058,7 +4022,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q97_waiting_orders", _Q97_ORACLE)
+@register("q97_waiting_orders", _Q97_ORACLE)
 def q97_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: region-2 suppliers who were the SOLE late
     shipper in a finished multi-supplier order (late = shipped >60
@@ -4140,7 +4104,7 @@ GROUP BY 1
 """
 
 
-@_register("q98_line_priority", _Q98_ORACLE)
+@register("q98_line_priority", _Q98_ORACLE)
 def q98_line_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (the testdata carries no shipmode, so line
     status stands in for it): lines shipped in 1996, split per status
@@ -4188,7 +4152,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q99_profit_by_nation", _Q99_ORACLE)
+@register("q99_profit_by_nation", _Q99_ORACLE)
 def q99_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit on 'widget' parts per supplier nation
     and order year (the testdata has no partsupp, so retail price *
@@ -4252,7 +4216,7 @@ WHERE n_regionkey = 0
 """
 
 
-@_register("q100_heavy_small_part_suppliers", _Q100_ORACLE)
+@register("q100_heavy_small_part_suppliers", _Q100_ORACLE)
 def q100_heavy_small_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: region-0 suppliers who shipped more than 30
     units of some 'small'-prefix part during 1996 — the nested
@@ -4344,7 +4308,7 @@ def _bucketed_join_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return session_artifact("bucket_tables", spark, sf_dir, build=build)
 
 
-@_register("q101_bucketed_join", _Q101_ORACLE)
+@register("q101_bucketed_join", _Q101_ORACLE)
 def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located fact-fact join readback: both join sides are
     written ONCE per (session, corpus) as external tables bucketed (and
@@ -4381,29 +4345,16 @@ def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from end_to_end_sales_etl_de_project_spark.operators.profiling import (  # noqa: E402
+    LINEITEM_ROW_CHECKS,
+    LINEITEM_UNIQUE_CHECKS,
     expectations_report,
     expectations_report_sql,
     month_completeness,
     month_completeness_sql,
 )
 
-_Q102_ROW_CHECKS = [
-    ("not_null_quantity", "l_quantity IS NULL"),
-    ("not_null_shipdate", "l_shipdate IS NULL"),
-    ("range_quantity", "l_quantity IS NOT NULL AND (l_quantity < 1 OR l_quantity > 60)"),
-    (
-        "accepted_returnflag",
-        "l_returnflag IS NOT NULL AND l_returnflag NOT IN ('A', 'N', 'R')",
-    ),
-    ("nonnegative_extendedprice", "l_extendedprice IS NOT NULL AND l_extendedprice < 0"),
-]
-_Q102_UNIQUE_CHECKS = [("unique_line_key", ["l_orderkey", "l_linenumber"])]
 
-
-@_register(
-    "q102_constraint_audit",
-    expectations_report_sql(_Q102_ROW_CHECKS, _Q102_UNIQUE_CHECKS, "lineitem"),
-)
+@register("q102_constraint_audit", expectations_report_sql())
 def q102_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality expectations over the fact table
     (not-null, range, accepted-values, non-negative, unique line key)
@@ -4412,10 +4363,10 @@ def q102_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks ride one conditional aggregation over one scan; the unique
     check is one groupBy whose rollup derives n_rows as SUM(cnt)."""
     li = load_table(spark, sf_dir, "lineitem")
-    return expectations_report(li, _Q102_ROW_CHECKS, _Q102_UNIQUE_CHECKS)
+    return expectations_report(li, LINEITEM_ROW_CHECKS, LINEITEM_UNIQUE_CHECKS)
 
 
-@_register("q103_partition_completeness", month_completeness_sql("o_orderdate", "orders"))
+@register("q103_partition_completeness", month_completeness_sql())
 def q103_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-spine completeness over orders: every calendar month
     between the table's first and last order, with its row count and a
@@ -4443,7 +4394,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 """
 
 
-@_register("q104_promo_revenue", _Q104_ORACLE)
+@register("q104_promo_revenue", _Q104_ORACLE)
 def q104_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: the forecast-revenue-change scalar — how much
     revenue the discounts of 1996 gave away on small-quantity lines.
@@ -4492,7 +4443,7 @@ WHERE p.p_brand = 'Brand#13' AND p.p_size < 15
 """
 
 
-@_register("q105_small_qty_revenue", _Q105_ORACLE)
+@register("q105_small_qty_revenue", _Q105_ORACLE)
 def q105_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape (small-quantity-order revenue): lines whose
     quantity is under 20% of their part's average, summed — written as
@@ -4550,7 +4501,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register("q106_volume_shipping", _Q106_ORACLE)
+@register("q106_volume_shipping", _Q106_ORACLE)
 def q106_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 (volume shipping): the SCALE-CORRECT restatement of
     q85's reference-faithful form. q85 keeps the reference's idioms —
@@ -4629,7 +4580,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register("q107_supplier_part_breadth", _Q107_ORACLE)
+@register("q107_supplier_part_breadth", _Q107_ORACLE)
 def q107_supplier_part_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 (parts/supplier relationship) restated over the fact
     table: how many distinct suppliers can ship each surviving
@@ -4706,7 +4657,7 @@ FROM base
 """
 
 
-@_register("q108_cohort_ltv", _Q108_ORACLE)
+@register("q108_cohort_ltv", _Q108_ORACLE)
 def q108_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-cohort lifetime value: cohort = month of a customer's
     FIRST order; per (cohort, months-since-first) — order count,
@@ -4774,7 +4725,7 @@ GROUP BY 1
 """
 
 
-@_register("q109_return_rate_by_brand", _Q109_ORACLE)
+@register("q109_return_rate_by_brand", _Q109_ORACLE)
 def q109_return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return-rate profile per brand: line counts, returned share, and
     discounted revenue tied up in returns (the merchandising QA view).
@@ -4833,7 +4784,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q110_decile_spend_profile", _Q110_ORACLE)
+@register("q110_decile_spend_profile", _Q110_ORACLE)
 def q110_decile_spend_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation customer-spend deciles: each nation's purchasing
     customers NTILE(10)-bucketed by lifetime spend, with per-decile
@@ -4904,7 +4855,7 @@ HAVING COUNT(gap_days) > 0
 """
 
 
-@_register("q111_reorder_gap_profile", _Q111_ORACLE)
+@register("q111_reorder_gap_profile", _Q111_ORACLE)
 def q111_reorder_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reorder cadence per repeat customer: day gaps between consecutive
     orders (lag window), average and max per customer — the churn-model
@@ -4954,7 +4905,7 @@ GROUP BY 1
 """
 
 
-@_register("q112_discount_band_profile", _Q112_ORACLE)
+@register("q112_discount_band_profile", _Q112_ORACLE)
 def q112_discount_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discount-band histogram: lines bucketed by integer percent band
     (floor(discount*100)), with revenue and mean quantity per band —
@@ -5022,7 +4973,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("q113_pareto_coverage", _Q113_ORACLE)
+@register("q113_pareto_coverage", _Q113_ORACLE)
 def q113_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration per nation: the smallest number of
     customers whose cumulative revenue reaches half the nation's total
@@ -5133,7 +5084,7 @@ GROUP BY col_name
 """
 
 
-@_register("q114_key_skew_audit", _Q114_ORACLE)
+@register("q114_key_skew_audit", _Q114_ORACLE)
 def q114_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join skew profile of the fact's three join keys — the table
     you read BEFORE picking a salting factor or trusting AQE's skew

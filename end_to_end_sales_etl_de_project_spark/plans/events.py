@@ -15,8 +15,6 @@ Python.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,20 +28,8 @@ from end_to_end_sales_etl_de_project_spark.operators.windows import (
     sliding_agg,
     tumbling_agg,
 )
+from end_to_end_sales_etl_de_project_spark.plans.registry import register
 from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
-
-EVENT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-EVENT_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        EVENT_QUERIES[name] = fn
-        if oracle is not None:
-            EVENT_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 _E01_ORACLE = """
@@ -57,7 +43,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e01_tumbling_hourly", _E01_ORACLE)
+@register("e01_tumbling_hourly", _E01_ORACLE)
 def e01_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window per event type. Spark's ``window()`` start
     is epoch-aligned, identical to ``date_trunc('hour')``."""
@@ -79,7 +65,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e02_sliding_hourly_30m", _E02_ORACLE)
+@register("e02_sliding_hourly_30m", _E02_ORACLE)
 def e02_sliding_hourly_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour window, 30-minute slide, per event type."""
     return sliding_agg(load_table(spark, sf_dir, "events"))
@@ -114,7 +100,7 @@ GROUP BY user_id, session_id
 """
 
 
-@_register("e03_session_window", _E03_ORACLE)
+@register("e03_session_window", _E03_ORACLE)
 def e03_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessionization with a 30-minute inactivity gap, via
     Spark's native ``session_window`` (no Python state)."""
@@ -132,7 +118,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e04_user_activity_rollup", _E04_ORACLE)
+@register("e04_user_activity_rollup", _E04_ORACLE)
 def e04_user_activity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user/type activity profile (hypertable-rollup shape: one
     groupBy, bounded output)."""
@@ -172,7 +158,7 @@ FROM l LEFT JOIN (SELECT * FROM cand WHERE rn = 1) c
 """
 
 
-@_register("e05_asof_join", _E05_ORACLE)
+@register("e05_asof_join", _E05_ORACLE)
 def e05_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the user's latest
     prior-or-equal signup. One keyed window shuffle — no native Spark
@@ -182,7 +168,7 @@ def e05_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "value"
     )
     signups = ev.filter(F.col("event_type") == "signup").select("user_id", "ts", "value")
-    return asof_join(purchases, signups, on="ts", by="user_id", right_cols=["ts", "value"])
+    return asof_join(purchases, signups, right_cols=["ts", "value"])
 
 
 _E06_ORACLE = """
@@ -195,27 +181,20 @@ FROM events a JOIN events b
 """
 
 
-@_register("e06_range_join", _E06_ORACLE)
+@register("e06_range_join", _E06_ORACLE)
 def e06_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: same-user event pairs within 10 minutes, via
     time-bucket banding (equi-join on (key, bucket), never a theta
     join). The oracle is the naive theta join — same result."""
     ev = load_table(spark, sf_dir, "events")
-    return range_join_bucketed(
-        ev,
-        by="user_id",
-        ts_col="ts",
-        id_col="event_id",
-        max_gap_seconds=600,
-        payload_cols=["event_type"],
-    )
+    return range_join_bucketed(ev, max_gap_seconds=600)
 
 
 # Lag+cumsum sessionization — the window-function formulation of e03
 # (same sessions as session_window; both forms provided because the
 # lag/cumsum shape generalizes to gap conditions session_window cannot
 # express, e.g. value-dependent gaps). Same oracle as e03.
-@_register("e07_sessionize_lag", _E03_ORACLE)
+@register("e07_sessionize_lag", _E03_ORACLE)
 def e07_sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via lag + running sum of session-break flags —
     one window pass, no native session_window."""
@@ -253,7 +232,7 @@ from end_to_end_sales_etl_de_project_spark.operators.grouped import (  # noqa: E
 )
 
 
-@_register("e08_interarrival_stats", interarrival_stats_sql())
+@register("e08_interarrival_stats", interarrival_stats_sql())
 def e08_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user inter-arrival gap stats via applyInPandas (grouped-map
     Arrow path) — order statistics the window API can't express
@@ -273,7 +252,7 @@ def e08_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hatch for per-group logic that genuinely needs Python. Both engines
 # interpolate the even-count median as lower + (upper-lower)*0.5 over
 # exact integer-second gaps, so the hash matches bit-for-bit.
-@_register("e14_interarrival_native", interarrival_stats_sql())
+@register("e14_interarrival_native", interarrival_stats_sql())
 def e14_interarrival_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user inter-arrival stats, built-ins only: one window shuffle
     on user_id (lag), reused by the grouping; percentile() is Spark's
@@ -307,7 +286,7 @@ FROM events
 """
 
 
-@_register("e09_json_extract", _E09_ORACLE)
+@register("e09_json_extract", _E09_ORACLE)
 def e09_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured access: extract a typed field from the JSON
     ``props`` column (get_json_object — JVM-side, codegen'd; the
@@ -338,7 +317,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e12_cohort_retention", _E12_ORACLE)
+@register("e12_cohort_retention", _E12_ORACLE)
 def e12_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users bucketed by first-seen week, counted
     distinct per (cohort week, activity week) — the retention-triangle
@@ -403,7 +382,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e11_ohlc_hourly", _E11_ORACLE)
+@register("e11_ohlc_hourly", _E11_ORACLE)
 def e11_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC (open/high/low/close) per event type — the
     hypertable/candlestick rollup time-series stores ship natively.
@@ -474,7 +453,7 @@ GROUP BY user_id, event_type, run_id
 """
 
 
-@_register("e13_change_intervals", _E13_ORACLE)
+@register("e13_change_intervals", _E13_ORACLE)
 def e13_change_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-log → effective-dated intervals (SCD Type-2 / CDC shape):
     consecutive same-state runs per user collapse to one
@@ -511,7 +490,7 @@ def e13_change_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("e10_value_deciles", _E10_ORACLE)
+@register("e10_value_deciles", _E10_ORACLE)
 def e10_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type value deciles (quantile bucketing — the curriculum /
     difficulty-binning primitive): ntile over a total order, then
@@ -574,7 +553,7 @@ LEFT JOIN s3 ON s1.user_id = s3.user_id
 """
 
 
-@_register("e15_funnel", _E15_ORACLE)
+@register("e15_funnel", _E15_ORACLE)
 def e15_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel per user: first view, first click strictly after
     it, first purchase strictly after that, and the step reached."""
@@ -630,7 +609,7 @@ WINDOW w AS (PARTITION BY user_id
 """
 
 
-@_register("e16_rolling_1h", _E16_ORACLE)
+@register("e16_rolling_1h", _E16_ORACLE)
 def e16_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-1-hour rolling count/sum per user — the RANGE-frame
     window (frame bounds in event-time seconds, not row counts) behind
@@ -687,7 +666,7 @@ LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hour = h.hour
 """
 
 
-@_register("e17_gap_fill_locf", _E17_ORACLE)
+@register("e17_gap_fill_locf", _E17_ORACLE)
 def e17_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization: per-user hourly resample over a
     dense hour spine (each user's own active span), missing hours
@@ -771,7 +750,7 @@ WINDOW w AS (PARTITION BY user_id
 """
 
 
-@_register("e18_rolling_zscore", _E18_ORACLE)
+@register("e18_rolling_zscore", _E18_ORACLE)
 def e18_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event anomaly score: how far this event's value sits from
     its user's trailing-1h mean, in trailing-1h standard deviations —
@@ -844,7 +823,7 @@ GROUP BY event_type
 """
 
 
-@_register("e19_exact_quantiles", _E19_ORACLE)
+@register("e19_exact_quantiles", _E19_ORACLE)
 def e19_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-type quantile VALUES by the discrete (type-7-free)
     definition: the element at rank ceil(p·n) of the sorted values. No
@@ -909,7 +888,7 @@ GROUP BY user_id
 """
 
 
-@_register("e20_late_event_audit", _E20_ORACLE)
+@register("e20_late_event_audit", _E20_ORACLE)
 def e20_late_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-delay sizing from the data: per key, how far events
     arrive behind that key's event-time high-water mark (arrival order
@@ -961,7 +940,7 @@ GROUP BY 1
 """
 
 
-@_register("e21_hourly_active_users", _E21_ORACLE)
+@register("e21_hourly_active_users", _E21_ORACLE)
 def e21_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly active users — the DAU/HAU primitive: per tumbling hour,
     events, exact distinct users, and distinct purchasers. The two
@@ -997,7 +976,7 @@ GROUP BY user_id
 """
 
 
-@_register("e22_ewma", _E22_ORACLE)
+@register("e22_ewma", _E22_ORACLE)
 def e22_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA of event value (alpha = 0.5): s1 = x1,
     s_i = 0.5*x_i + 0.5*s_{i-1} — the classic smoothed-load / trend
@@ -1034,7 +1013,7 @@ def e22_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.select("user_id", "n_events", "last_ts", ewma.alias("ewma_value"))
 
 
-@_register("e23_quantiles_histogram", _E19_ORACLE)
+@register("e23_quantiles_histogram", _E19_ORACLE)
 def e23_quantiles_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """e19's exact discrete quantiles by the HISTOGRAM plan — the scale
     path: instead of row_number over a full per-group sort of the
@@ -1101,7 +1080,7 @@ ASOF LEFT JOIN (
 """
 
 
-@_register("e24_attribution_last_touch", _E24_ORACLE)
+@register("e24_attribution_last_touch", _E24_ORACLE)
 def e24_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAST-TOUCH ATTRIBUTION: each purchase credited to the user's
     most recent prior non-purchase event (the touch), falling back to
@@ -1123,9 +1102,7 @@ def e24_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("event_type").alias("event_type"))
     )
-    joined = asof_join(
-        purchases, touches, on="ts", by="user_id", right_cols=["ts", "event_type"]
-    )
+    joined = asof_join(purchases, touches, right_cols=["ts", "event_type"])
     within = F.col("ts_right").isNotNull() & (
         F.unix_micros("ts") - F.unix_micros("ts_right") <= F.lit(_E24_LOOKBACK_US)
     )
@@ -1161,7 +1138,7 @@ FROM ranked WHERE rnk <= 3
 """
 
 
-@_register("e25_hourly_leaderboard", _E25_ORACLE)
+@register("e25_hourly_leaderboard", _E25_ORACLE)
 def e25_hourly_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hour top-3 purchasers by exact spend — the windowed
     leaderboard shape (dashboards, abuse detection). The rank window
@@ -1216,7 +1193,7 @@ FROM islands GROUP BY 1
 """
 
 
-@_register("e26_daily_streaks", _E26_ORACLE)
+@register("e26_daily_streaks", _E26_ORACLE)
 def e26_daily_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest run of CONSECUTIVE active days per user — the
     gaps-and-islands pattern (engagement streaks, SLA uptime runs).
@@ -1234,7 +1211,7 @@ def e26_daily_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     days = ev.select("user_id", F.col("ts").cast("date").alias("d")).distinct()
-    islands = streak_islands(days, "user_id", "d")
+    islands = streak_islands(days)
     return islands.groupBy("user_id").agg(
         F.max("streak_len").alias("longest_streak"),
         F.count(F.lit(1)).alias("n_streaks"),
@@ -1265,7 +1242,7 @@ FROM counts
 """
 
 
-@_register("e27_event_transitions", _E27_ORACLE)
+@register("e27_event_transitions", _E27_ORACLE)
 def e27_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: count and conditional probability of each (event_type →
@@ -1330,7 +1307,7 @@ FROM swept GROUP BY 1
 """
 
 
-@_register("e28_concurrency_peak", _E28_ORACLE)
+@register("e28_concurrency_peak", _E28_ORACLE)
 def e28_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hour PEAK number of simultaneously-open view intervals
     (interval = [ts, ts + value minutes]) — the sweep-line +1/-1
@@ -1366,7 +1343,7 @@ def e28_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = iv.select(F.col("start_s").alias("t"), F.lit(1).alias("delta")).unionAll(
         iv.select(F.col("end_s").alias("t"), F.lit(-1).alias("delta"))
     )
-    return swept_peaks(pts, "t", "delta", 3600)
+    return swept_peaks(pts, 3600)
 
 
 # ---------------------------------------------------------------------------
@@ -1392,7 +1369,7 @@ FROM h, s, m
 """
 
 
-@_register("e29_hourly_mad_outliers", _E29_ORACLE)
+@register("e29_hourly_mad_outliers", _E29_ORACLE)
 def e29_hourly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly detection on hourly event volume: flag hours
     whose count deviates from the corpus MEDIAN by more than 3.5
@@ -1478,7 +1455,7 @@ FROM r, c
 """
 
 
-@_register("e30_rfm_segments", _E30_ORACLE)
+@register("e30_rfm_segments", _E30_ORACLE)
 def e30_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: per purchasing user, recency (seconds since
     their last purchase, against the corpus max), frequency (purchase
@@ -1555,7 +1532,7 @@ FROM k GROUP BY 1
 """
 
 
-@_register("e31_variant_shred", _E31_ORACLE)
+@register("e31_variant_shred", _E31_ORACLE)
 def e31_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured shredding through Spark 4's VARIANT type: parse
     the JSON payload ONCE into a binary variant (``parse_json``), then
@@ -1599,7 +1576,7 @@ GROUP BY 1
 """
 
 
-@_register("e32_daily_type_profile", _E32_ORACLE)
+@register("e32_daily_type_profile", _E32_ORACLE)
 def e32_daily_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day activity profile: the SORTED distinct event-type set
     (serialized — collect_set order is shuffle-dependent, sorting +
@@ -1653,7 +1630,7 @@ FROM scored
 """
 
 
-@_register("e33_burst_detection", _E33_ORACLE)
+@register("e33_burst_detection", _E33_ORACLE)
 def e33_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type burst detector: a minute is a burst when its event
     count reaches 2x the type's trailing-hour per-active-minute
@@ -1728,7 +1705,7 @@ FROM cells
 """
 
 
-@_register("e34_weekly_seasonality", _E34_ORACLE)
+@register("e34_weekly_seasonality", _E34_ORACLE)
 def e34_weekly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekday-hour seasonality matrix: event share per (weekday,
     hour) cell — the traffic-shape baseline capacity planning reads
@@ -1776,7 +1753,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("e35_dwell_histogram", _E35_ORACLE)
+@register("e35_dwell_histogram", _E35_ORACLE)
 def e35_dwell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-of-magnitude dwell-time histogram per event type: the gap
     from each event to the same user's NEXT event of the same type,

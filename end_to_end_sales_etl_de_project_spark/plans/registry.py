@@ -1,9 +1,10 @@
 """Assembled query/oracle registry — the single source consumed by
 ``__spark_entry__.py`` and ``bench.py``.
 
-Modules register into their own dicts; this module merges them. Names
-are globally unique; every oracle key must have a query key (enforced at
-import time).
+The plan modules (``core``, ``events``, ``documents``, imported in that
+order) register each query with ``@register(name, oracle)`` into one
+pair of dicts. Names are globally unique; every oracle key must have a
+query key (enforced at import time).
 
 Ordering matters: the driver's correctness run checks the FIRST
 ``DRIVER_WINDOW_SIZE`` entries of ``queries()`` in dict-insertion order
@@ -23,9 +24,27 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from end_to_end_sales_etl_de_project_spark.plans.core import CORE_ORACLES, CORE_QUERIES
-from end_to_end_sales_etl_de_project_spark.plans.documents import DOC_ORACLES, DOC_QUERIES
-from end_to_end_sales_etl_de_project_spark.plans.events import EVENT_ORACLES, EVENT_QUERIES
+_ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+
+def register(name: str, oracle: str | None):
+    """Register the decorated ``(spark, sf_dir)`` query as ``name``,
+    with its DuckDB ``oracle`` SQL (None for the rows-only allowlist)."""
+
+    def deco(fn):
+        if name in _ALL_QUERIES:
+            raise ValueError(f"duplicate query name {name!r}")
+        _ALL_QUERIES[name] = fn
+        if oracle is not None:
+            ORACLES[name] = oracle
+        return fn
+
+    return deco
+
+
+# Registration order is the order after the driver window.
+from end_to_end_sales_etl_de_project_spark.plans import core, events, documents  # noqa: E402,F401,I001
 
 DRIVER_WINDOW_SIZE = 50
 
@@ -141,20 +160,6 @@ ROWS_ONLY_ALLOWLIST: frozenset[str] = frozenset(
         "q32_approx_aggs",  # approx_count_distinct/percentile: sketch internals differ by design
     }
 )
-
-_ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-for _queries, _oracles in (
-    (CORE_QUERIES, CORE_ORACLES),
-    (EVENT_QUERIES, EVENT_ORACLES),
-    (DOC_QUERIES, DOC_ORACLES),
-):
-    for _name, _fn in _queries.items():
-        if _name in _ALL_QUERIES:
-            raise ValueError(f"duplicate query name {_name!r}")
-        _ALL_QUERIES[_name] = _fn
-    ORACLES.update(_oracles)
 
 _missing = [n for n in DRIVER_WINDOW if n not in _ALL_QUERIES]
 if _missing:

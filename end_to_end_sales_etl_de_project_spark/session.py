@@ -149,10 +149,7 @@ def get_spark_session(
     return spark
 
 
-def runtime_filter_conf(
-    creation_side_threshold: str = "10MB",
-    application_side_scan_threshold: str = "10GB",
-) -> dict[str, str]:
+def runtime_filter_conf() -> dict[str, str]:
     """Runtime-filter (row-level Bloom) preset for large shuffled
     joins — the Catalyst-native sibling of the explicit d22 prefilter.
     Pass as ``extra_conf`` to :func:`get_spark_session`.
@@ -166,9 +163,8 @@ def runtime_filter_conf(
     pruning: DPP prunes whole partitions by partition column; the
     runtime Bloom prunes row-level on arbitrary join keys.
 
-    The thresholds are cluster-sized on purpose (build side ≤
-    ``creation_side_threshold`` so the filter build never dominates;
-    probe side ≥ ``application_side_scan_threshold`` so tiny scans
+    The thresholds are cluster-sized on purpose (build side ≤ 10 MB
+    so the filter build never dominates; probe side ≥ 10 GB so tiny scans
     skip the overhead) — local[] test corpora never cross the 10 GB
     application floor, which is why the plan-shape pin
     (``tests/test_plan_shapes.py::test_runtime_bloom_filter_injection``)
@@ -181,12 +177,8 @@ def runtime_filter_conf(
     """
     return {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
-            creation_side_threshold
-        ),
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": (
-            application_side_scan_threshold
-        ),
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
         "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems": "1000000",
         "spark.sql.optimizer.runtime.bloomFilter.maxNumBits": "67108864",
         "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": "false",

@@ -159,10 +159,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Spread a file-count-bound scan across the session's shuffle
     width before FAN-OUT-HEAVY work (explode, per-row vector math,

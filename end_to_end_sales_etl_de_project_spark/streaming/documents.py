@@ -49,18 +49,15 @@ DOCUMENTS_SCHEMA = T.StructType(
 SHINGLE_K = 3
 
 
-def read_documents_stream(
-    spark: SparkSession,
-    src_dir: str,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """File-source stream over a documents landing zone. Reads with
-    the canonical documents schema so ingestion can be armed on an
-    EMPTY directory (no batch peek needed)."""
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(src_dir)
+def read_documents_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """File-source stream over a documents landing zone, one file per
+    trigger. Reads with the canonical documents schema so ingestion can
+    be armed on an EMPTY directory (no batch peek needed)."""
+    return (
+        spark.readStream.schema(DOCUMENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
 
 
 def quality_gate(docs: DataFrame) -> DataFrame:
@@ -70,9 +67,9 @@ def quality_gate(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         "source",
-        quality_bucket("text").alias("bucket"),
+        quality_bucket().alias("bucket"),
         token_count("text").cast("bigint").alias("n_tokens"),
-        (quality_bucket("text") == "ok").alias("admitted"),
+        (quality_bucket() == "ok").alias("admitted"),
     )
 
 

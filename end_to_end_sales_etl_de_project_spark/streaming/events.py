@@ -65,10 +65,10 @@ def read_events_stream(
     return normalize_event_ts(reader.parquet(src_dir))
 
 
-def tumbling_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+def tumbling_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling window — SAME aggregation body as
     ``e01_tumbling_hourly`` (operators/windows.py)."""
-    return tumbling_agg(events.withWatermark("ts", watermark))
+    return tumbling_agg(events.withWatermark("ts", WATERMARK))
 
 
 def sliding_stream(events: DataFrame) -> DataFrame:
@@ -241,28 +241,13 @@ def anomaly_score_stream(
     )
 
 
-# The default live-monitor check list: the q102 contract applied to the
-# event stream (same three-valued-logic semantics). The spike check is
-# a monitoring rule, not an integrity rule — it fires on the clean
-# corpus, proving the monitor emits non-zero counts end-to-end.
-EVENT_CHECKS: list[tuple[str, str]] = [
-    ("null_value", "value IS NULL"),
-    ("negative_value", "value IS NOT NULL AND value < 0"),
-    (
-        "unknown_type",
-        "event_type IS NOT NULL AND event_type NOT IN "
-        "('signup','click','error','view','purchase')",
-    ),
-    ("value_spike", "value IS NOT NULL AND value > 250"),
-]
-
-
 def violation_monitor_stream(
     events: DataFrame,
 ) -> DataFrame:
     """Live data-quality monitor: the declarative expectations contract
     (q102 / ``profiling.expectations_report``) running continuously —
-    per event-time hour, the row count and each check's violation
+    per event-time hour, the row count and each
+    ``profiling.EVENT_CHECKS`` check's violation
     count, emitted as windows close. SAME aggregation body as the
     batch form (``profiling.violation_monitor_agg``), so the alert
     thresholds a team tunes on batch history apply unchanged to the
@@ -273,6 +258,4 @@ def violation_monitor_stream(
         violation_monitor_agg,
     )
 
-    return violation_monitor_agg(
-        events.withWatermark("ts", WATERMARK), EVENT_CHECKS
-    )
+    return violation_monitor_agg(events.withWatermark("ts", WATERMARK))

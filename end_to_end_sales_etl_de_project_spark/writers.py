@@ -145,14 +145,9 @@ def write_jdbc(
     df.write.jdbc(url=url, table=table, mode=mode, properties=properties or {})
 
 
-def delete_keys_parquet(
-    spark,
-    path: str,
-    keys_df: DataFrame,
-    key_col: str,
-) -> int:
+def delete_keys_parquet(spark, path: str, keys_df: DataFrame) -> int:
     """Targeted-row deletion by key — the right-to-be-forgotten /
-    retention-expiry rewrite: every row whose ``key_col`` appears in
+    retention-expiry rewrite: every row whose ``id`` appears in
     ``keys_df`` is dropped and the table is swapped in from a staged
     sibling with :func:`swap_in` (same as :func:`compact_parquet`).
     Returns the number of rows deleted.
@@ -174,8 +169,8 @@ def delete_keys_parquet(
 
     heal(path)
     current = spark.read.parquet(path)
-    doomed = keys_df.select(F.col(key_col).alias("__dk")).distinct()
-    kept = current.join(doomed, current[key_col] == F.col("__dk"), "left_anti")
+    doomed = keys_df.select(F.col("id").alias("__dk")).distinct()
+    kept = current.join(doomed, current["id"] == F.col("__dk"), "left_anti")
     n_before = current.count()
     staged = f"{path}.staged-{uuid.uuid4().hex[:8]}"
     kept.write.mode("overwrite").parquet(staged)

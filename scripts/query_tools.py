@@ -1,22 +1,38 @@
-"""Round-14 optimization tooling: plan dumps, isolated timing, parity.
+"""Per-query tooling: plan dumps, plan fingerprints, isolated timing,
+parity.
 
 Usage:
-  python scripts/r14_tools.py explain <tag> <query> [query ...]
+  python scripts/query_tools.py explain <tag> <query> [query ...]
       -> writes plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt (explain
          formatted; default plans/r15/, created on demand, not tracked)
-  python scripts/r14_tools.py time [-n N] <query> [query ...]
+  python scripts/query_tools.py fingerprint --sf DIR OUT.json [query ...]
+      -> OUT.json: one sha256 per query (default: every registered query,
+         in registry order) of its masked optimized logical plan plus the
+         masked plans of every DataFrame checkpointed while it is built
+         (--sf defaults to $SPARK_GRAFT_SF_DIR)
+  python scripts/query_tools.py --diff A.json B.json
+      -> the queries whose fingerprints differ between two such files
+  python scripts/query_tools.py time [-n N] <query> [query ...]
       -> warm + min-of-N noop-sink timing per query (bench methodology)
-  python scripts/r14_tools.py parity [--sf DIR] <query> [query ...]
+  python scripts/query_tools.py parity [--sf DIR] <query> [query ...]
       -> driver-style DuckDB oracle hash comparison per query
 
-All three build the same session bench.py does (local[$SPARK_GRAFT_CPUS]),
+All build the same session bench.py does (local[$SPARK_GRAFT_CPUS]),
 so plan shapes and timings match the driver's environment.
+
+"Optimized plans unchanged" across a refactor is two fingerprint runs
+(one per tree, same --sf) and one --diff. Two runs on ONE tree first
+show which queries vary run to run (staging paths, data-driven build
+choices); only differences beyond those are real plan changes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
+import json
 import os
+import re
 import sys
 import time
 from contextlib import redirect_stdout
@@ -32,7 +48,7 @@ PLAN_DIR = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r
 
 def _spark():
     return get_spark_session(
-        app_name="r14-tools",
+        app_name="query-tools",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
@@ -57,6 +73,62 @@ def cmd_explain(tag: str, names: list[str]) -> None:
             f"EvalPython={txt.count('EvalPython') + txt.count('MapInPandas') + txt.count('FlatMapGroupsInPandas')} "
             f"-> {os.path.relpath(path, REPO)}"
         )
+
+
+# Run-specific tokens of a plan string: expression ids (#123, #123L),
+# lambda variables (x_17: a global counter), and the physical-plan
+# stage ids (codegen *(3), AQE query stages) should a plan carry them.
+_PLAN_MASKS = (
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"(QueryStage|codegen id : |WholeStageCodegen \()\d+"), r"\1N"),
+)
+
+
+def masked_plan(df) -> str:
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    for pattern, repl in _PLAN_MASKS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def cmd_fingerprint(out: str, names: list[str], sf_dir: str) -> None:
+    from pyspark.sql import DataFrame
+
+    spark = _spark()
+    checkpointed: list[str] = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(masked_plan(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    shas = {}
+    try:
+        for name in names or list(QUERIES):
+            checkpointed.clear()
+            plan = masked_plan(QUERIES[name](spark, sf_dir))
+            blob = "\n----\n".join([*checkpointed, plan])
+            shas[name] = hashlib.sha256(blob.encode()).hexdigest()
+            print(f"{name} {shas[name][:16]}", flush=True)
+    finally:
+        DataFrame.localCheckpoint = local_checkpoint
+    with open(out, "w") as f:
+        json.dump({"sf_dir": sf_dir, "queries": shas}, f, indent=1)
+
+
+def cmd_diff(a: str, b: str) -> None:
+    with open(a) as f:
+        qa = json.load(f)["queries"]
+    with open(b) as f:
+        qb = json.load(f)["queries"]
+    differ = sorted(n for n in qa.keys() & qb.keys() if qa[n] != qb[n])
+    only = sorted(qa.keys() ^ qb.keys())
+    print(f"{len(qa.keys() & qb.keys())} common queries, {len(differ)} differ: {differ}")
+    if only:
+        print(f"in one file only: {only}")
 
 
 def cmd_time(names: list[str], n: int = 2) -> None:
@@ -129,6 +201,17 @@ def main() -> None:
     if cmd == "explain":
         tag = args.pop(0)
         cmd_explain(tag, args)
+    elif cmd == "fingerprint":
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR")
+        if args and args[0] == "--sf":
+            args.pop(0)
+            sf = args.pop(0)
+        if not sf:
+            raise SystemExit("fingerprint needs --sf DIR or SPARK_GRAFT_SF_DIR")
+        out = args.pop(0)
+        cmd_fingerprint(out, args, sf)
+    elif cmd == "--diff":
+        cmd_diff(*args)
     elif cmd == "time":
         n = 2
         if args and args[0] == "-n":

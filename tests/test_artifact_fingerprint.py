@@ -78,11 +78,11 @@ def test_shingle_index_rebuilds_after_rewrite(spark, mutable_sf):
     memo served the OLD corpus's checkpointed shingle index after the
     rewrite; the fingerprinted key must rebuild it."""
     docs_before = load_table(spark, mutable_sf, "documents").count()
-    idx_before = doc_plans._shingle_index(spark, mutable_sf, 3)
+    idx_before = doc_plans._shingle_index(spark, mutable_sf)
     n_before = idx_before.select("doc").distinct().count()
     assert n_before > 0
     _shrink_documents(mutable_sf)
-    idx_after = doc_plans._shingle_index(spark, mutable_sf, 3)
+    idx_after = doc_plans._shingle_index(spark, mutable_sf)
     n_after = idx_after.select("doc").distinct().count()
     docs_after = load_table(spark, mutable_sf, "documents").count()
     assert docs_after < docs_before

@@ -20,7 +20,7 @@ def test_asof_null_payload_not_torn(spark):
         [(9, T(2024, 1, 1, 10, 0), 5.0), (9, T(2024, 1, 1, 11, 0), None)],
         "user_id long, ts timestamp, value double",
     )
-    out = asof_join(left, right, on="ts", by="user_id", right_cols=["ts", "value"]).collect()
+    out = asof_join(left, right, right_cols=["ts", "value"]).collect()
     assert len(out) == 1
     r = out[0]
     # latest right row at 11:00 has value NULL: must match WITH its null,

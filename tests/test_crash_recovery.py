@@ -399,7 +399,7 @@ def test_delete_keys_parquet_heals_crash_between_renames(spark, tmp_path):
     os.rename(path, path + ".bak")
 
     doomed = spark.createDataFrame([(3,)], "id long")
-    assert delete_keys_parquet(spark, path, doomed, "id") == 1
+    assert delete_keys_parquet(spark, path, doomed) == 1
     after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after == [r for r in before if r[0] != 3]
     assert not os.path.exists(path + ".bak")

@@ -16,8 +16,8 @@ LONG_B = " ".join(f"delta{i} epsilon{i} zeta{i}" for i in range(20))
 def _index_and_sigs(docs):
     """The k=3 shingle index and its 16-hash signature table — the two
     artifacts the near-dup operators read."""
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
-    return sh, dedup.minhash_signatures(sh, 16)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
+    return sh, dedup.minhash_signatures(sh)
 
 
 def _split_toks(docs):
@@ -25,7 +25,7 @@ def _split_toks(docs):
     decontamination operators."""
     return docs.select(
         F.col("doc_id").alias("doc"),
-        text.corpus_split("text").alias("split"),
+        text.corpus_split().alias("split"),
         text.tokens("text").alias("toks"),
     )
 
@@ -75,7 +75,7 @@ def test_contamination_planted(spark):
     splits = {
         r["doc_id"]: r["split"]
         for r in docs.select(
-            "doc_id", text.corpus_split("text").alias("split")
+            "doc_id", text.corpus_split().alias("split")
         ).collect()
     }
     train_ids = [i for i, s in splits.items() if s == "train"]
@@ -107,7 +107,7 @@ def test_stratified_keep_rates(spark):
     rows = [(i, "en" if i % 2 == 0 else "fr", f"text body number {i}") for i in range(2000)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     kept = (
-        docs.filter(text.stratified_keep("lang", "text", {"en": 10}, 60))
+        docs.filter(text.stratified_keep())
         .groupBy("lang")
         .count()
         .collect()
@@ -118,7 +118,7 @@ def test_stratified_keep_rates(spark):
     assert 500 <= by_lang["fr"] <= 700
     # determinism: second evaluation is identical
     again = (
-        docs.filter(text.stratified_keep("lang", "text", {"en": 10}, 60))
+        docs.filter(text.stratified_keep())
         .groupBy("lang")
         .count()
         .collect()
@@ -257,7 +257,7 @@ def test_weighted_source_sample_rates(spark):
         (1000 + i, "w " * 50, "tail") for i in range(25)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    kept = weighted_source_sample(docs, target_frac=0.5).collect()
+    kept = weighted_source_sample(docs).collect()
     rate = {}
     n_kept: dict = {}
     for r in kept:
@@ -308,7 +308,7 @@ def test_contamination_spans_planted(spark):
         df = spark.createDataFrame(cands, "i long, text string")
         got = {
             r["i"]: r["split"]
-            for r in df.select("i", text.corpus_split("text").alias("split")).collect()
+            for r in df.select("i", text.corpus_split().alias("split")).collect()
         }
         for i, t in cands:
             if got[i] == want:
@@ -346,7 +346,7 @@ def test_fuzzy_decontaminate_planted(spark):
         df = spark.createDataFrame(cands, "i long, text string")
         got = {
             r["i"]: r["split"]
-            for r in df.select("i", text.corpus_split("text").alias("split")).collect()
+            for r in df.select("i", text.corpus_split().alias("split")).collect()
         }
         for i, t in cands:
             if got[i] == want:

@@ -26,8 +26,8 @@ def _corpus(spark, n_boiler: int):
 
 def test_guard_drops_boilerplate_bucket(spark):
     docs = _corpus(spark, n_boiler=100)
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
-    sigs = dedup.minhash_signatures(sh, 16)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
+    sigs = dedup.minhash_signatures(sh)
 
     unguarded = dedup.lsh_candidate_pairs(sigs, 4, 4, max_bucket_size=None)
     guarded = dedup.lsh_candidate_pairs(sigs, 4, 4, max_bucket_size=32)
@@ -42,8 +42,8 @@ def test_guard_drops_boilerplate_bucket(spark):
 def test_guard_off_below_threshold(spark):
     # with fewer boilerplate copies than the cap, guard changes nothing
     docs = _corpus(spark, n_boiler=5)
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
-    sigs = dedup.minhash_signatures(sh, 16)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
+    sigs = dedup.minhash_signatures(sh)
     a = {
         (r["doc_a"], r["doc_b"])
         for r in dedup.lsh_candidate_pairs(sigs, 4, 4, max_bucket_size=None).collect()
@@ -67,7 +67,7 @@ def test_stop_shingle_cap_removes_boilerplate_pairs(spark):
     rows = [(i, f"unique words row{i} anchor{i} filler{i} end{i}" + footer) for i in range(30)]
     rows += [(1000, greek + " one"), (1001, greek + " two")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
 
     uncapped = {
         (r["doc_a"], r["doc_b"]) for r in dedup.jaccard_pairs(sh, 0.0).collect()
@@ -100,7 +100,7 @@ def test_containment_cap_removes_boilerplate_pairs(spark):
     # small doc fully embedded in a larger one: containment ~1.0
     rows += [(1000, greek), (1001, greek + " plus extra trailing context words here")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
 
     # threshold 0: the guard is about CANDIDATE generation (the O(df²)
     # equi-join rows exist before any threshold filters them)
@@ -122,8 +122,8 @@ def test_containment_cap_removes_boilerplate_pairs(spark):
 def test_containment_capped_sql_matches_flag(spark):
     """The guard is mirrored in the SQL twin: max_df emits the HAVING
     df-cap CTE; without it the cap is absent."""
-    sql_on = dedup.containment_pairs_sql("doc_id", "text", 3, 0.9, max_df=5)
-    sql_off = dedup.containment_pairs_sql("doc_id", "text", 3, 0.9)
+    sql_on = dedup.containment_pairs_sql(max_df=5)
+    sql_off = dedup.containment_pairs_sql()
     assert "HAVING COUNT(*) <= 5" in sql_on
     assert "HAVING" not in sql_off
 
@@ -145,12 +145,12 @@ def test_lsh_pairs_subset_of_exact_jaccard(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.jaccard_pairs(sh, 0.5).collect()
     }
-    sigs = dedup.minhash_signatures(sh, 16)
+    sigs = dedup.minhash_signatures(sh)
     lsh = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.minhash_lsh_pairs(sh, sigs).collect()
@@ -176,8 +176,8 @@ def test_minhash_estimate_audit_bounds(spark):
         (4, "unrelated content words only once each time period"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
-    out = minhash_estimate_audit(sh, dedup.minhash_signatures(sh, 16))
+    sh = dedup.shingle_index(docs, "doc_id", "text")
+    out = minhash_estimate_audit(sh, dedup.minhash_signatures(sh))
     rows_out = {(r["doc_a"], r["doc_b"]): r for r in out.collect()}
     assert rows_out, "no candidate pairs — planted dups not detected"
     exact = rows_out[(1, 2)]
@@ -214,7 +214,7 @@ def test_incremental_dedup_decisions(spark):
     texts[b0] = texts[c0]          # cross-side duplicate
     texts[b_hi] = texts[b_lo]      # within-batch duplicate
     docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
-    out = {r["doc_id"]: r for r in incremental_dedup(docs, "doc_id", "text").collect()}
+    out = {r["doc_id"]: r for r in incremental_dedup(docs).collect()}
     assert set(out) == set(batch_ids)  # one row per batch doc, none for corpus
     assert out[b0]["decision"] == "dup_of_corpus"
     assert out[b0]["canonical_id"] == c0
@@ -268,8 +268,8 @@ def test_skewed_bucket_prunes_and_balances_partitions(spark):
     import statistics
 
     docs = _corpus(spark, n_boiler=400)
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
-    sigs = dedup.minhash_signatures(sh, 16)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
+    sigs = dedup.minhash_signatures(sh)
 
     # (a) the guard's own drop-list is non-empty on this fixture
     buckets = dedup._band_bucket_rows(sigs, 4, 4)
@@ -317,10 +317,10 @@ def test_substring_oracle_ceiling_fails_loudly():
     # ceiling below the doc length -> loud error
     with pytest.raises(Exception, match="position ceiling"):
         con.execute(
-            dedup.substring_dup_groups_sql("doc_id", "text", max_len=128)
+            dedup.substring_dup_groups_sql(max_len=128)
         ).fetchall()
     # ceiling above -> runs clean and still finds the planted dup spans
     rows = con.execute(
-        dedup.substring_dup_groups_sql("doc_id", "text", max_len=1024)
+        dedup.substring_dup_groups_sql(max_len=1024)
     ).fetchall()
     assert rows and all(r[1] == 2 for r in rows)

@@ -35,7 +35,9 @@ def test_ivf_recall_beats_lsh_multiprobe(spark, sf_dir):
 
     exact = _topk_sets(similarity.brute_force_topk(emb, queries, k=K))
     lsh = _topk_sets(similarity.lsh_topk_multiprobe(emb, queries, k=K))
-    ivf = _topk_sets(similarity.ivf_topk(emb, queries, k=K))
+    ivf = _topk_sets(
+        similarity.ivf_topk(emb, queries, similarity.ivf_train(emb, similarity.N_CENTROIDS), k=K)
+    )
 
     r_lsh, r_ivf = _recall(lsh, exact), _recall(ivf, exact)
     # a03 measured 9/40 on this corpus in round 1; IVF probing 4/16
@@ -55,7 +57,7 @@ def test_pq_rerank_recall(spark, sf_dir):
 
     exact_df = similarity.brute_force_topk(emb, queries, k=K)
     exact = _topk_sets(exact_df)
-    pq_df = similarity.pq_topk(emb, queries, k=K)
+    pq_df = similarity.pq_topk(emb, queries, similarity.pq_train(emb), k=K)
     pq = _topk_sets(pq_df)
 
     lsh = _topk_sets(similarity.lsh_topk_multiprobe(emb, queries, k=K))
@@ -78,7 +80,7 @@ def test_ivf_scan_fraction_bounded(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     cents = similarity.ivf_train(emb, 16)
     n = emb.count()
-    vq = similarity._vq_col("embedding", similarity.DIM)
+    vq = similarity._vq_col()
     assigned = emb.select(
         F.array_max(
             similarity._centroid_sims_q(vq, similarity._aq_col(vq), cents)
@@ -118,12 +120,14 @@ def test_topk_pairs_are_distinct(spark, sf_dir):
     driver hash parity."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
+    cents = similarity.ivf_train(emb, similarity.N_CENTROIDS)
+    books = similarity.pq_train(emb)
     for name, fn in (
         ("brute_force", similarity.brute_force_topk),
         ("lsh", similarity.lsh_topk),
         ("lsh_multiprobe", similarity.lsh_topk_multiprobe),
-        ("ivf", similarity.ivf_topk),
-        ("pq", similarity.pq_topk),
+        ("ivf", lambda e, q, k: similarity.ivf_topk(e, q, cents, k=k)),
+        ("pq", lambda e, q, k: similarity.pq_topk(e, q, books, k=k)),
     ):
         pairs = fn(emb, queries, k=K).select("query_id", "neighbor_id")
         total = pairs.count()
@@ -143,7 +147,7 @@ def test_numpy_seam_equals_expression_reference(spark, sf_dir):
     books = similarity.pq_train(emb)
     sub = similarity.DIM // len(books)
     staged = similarity._valid_vecs(emb).select(
-        "vec_id", similarity._vq_col("embedding", similarity.DIM).alias("__vq")
+        "vec_id", similarity._vq_col().alias("__vq")
     ).withColumn("__aq", similarity._aq_col(F.col("__vq")))
 
     ref_cells = {

@@ -90,7 +90,8 @@ def test_scalar_pandas_udf_normalization(spark):
         [(1, "  Café   NAÏVE\ttext  "), (2, None), (3, "Café")],  # combining accent
         "doc_id long, text string",
     )
-    got = {r.doc_id: r.n for r in df.select("doc_id", normalized_text_pandas("text").alias("n")).collect()}
+    rows = df.select("doc_id", normalized_text_pandas().alias("n")).collect()
+    got = {r.doc_id: r.n for r in rows}
     assert got[1] == "café naïve text"
     assert got[2] is None
     assert got[3] == "café"  # NFC composes e+combining-accent
@@ -167,9 +168,7 @@ def test_resize_assets_stub_semantics(spark):
 
     rows = [(1, "abcdefgh" * 4, "s"), (2, "xy", "s"), (3, "", "s")]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r["asset_id"]: r for r in resize_assets(
-        documents_as_assets(docs), factor=4
-    ).collect()}
+    out = {r["asset_id"]: r for r in resize_assets(documents_as_assets(docs)).collect()}
     one = out[1]
     assert one["orig_bytes"] == 32 and one["resized_bytes"] == 8
     assert bytes(one["resized"]) == ("abcdefgh" * 4).encode()[::4]
@@ -476,7 +475,7 @@ def test_ivf_pq_train_all_identical_corpus(spark):
     # seeds are identical, every round reassigns everything to one cell,
     # retained centroids stay identical (and equal to the quantized seed)
     assert all(c == cents[0] for c in cents)
-    books = similarity.pq_train(emb, n_subspaces=4, n_codes=4)
+    books = similarity.pq_train(emb, n_codes=4)
     assert len(books) == 4 and all(len(b) == 4 for b in books)
     for b in books:
         assert all(code == b[0] for code in b)

@@ -117,11 +117,22 @@ def test_quarantine_moves_files(spark, env):
 
 
 def test_faithful_and_grouped_metrics_agree(spark, env):
-    """Window+distinct (reference plan) ≡ groupBy (engine plan)."""
+    """Window+distinct (reference plan, built here from the operators
+    q01/q02 run) ≡ groupBy (the marts' plan) on the same cached frame."""
+    from pyspark.sql import functions as F
+
+    from end_to_end_sales_etl_de_project_spark.functions.scalar import (
+        full_name,
+        month_key,
+    )
     from end_to_end_sales_etl_de_project_spark.marts import (
         customer_monthly_purchase,
         enrich_sales,
         sales_team_incentive,
+    )
+    from end_to_end_sales_etl_de_project_spark.operators.metrics import (
+        top_performer_incentive,
+        windowed_partition_sum,
     )
     from end_to_end_sales_etl_de_project_spark.sources.csv_source import (
         read_sales_csv,
@@ -135,12 +146,47 @@ def test_faithful_and_grouped_metrics_agree(spark, env):
     def canon(df):
         return sorted(tuple(r) for r in df.collect())
 
-    assert canon(customer_monthly_purchase(enriched, faithful=True)) == canon(
-        customer_monthly_purchase(enriched, faithful=False)
+    customers = enriched.withColumn(
+        "sales_date_month", month_key("sales_date")
+    ).withColumn("full_name", full_name("customer_first_name", "customer_last_name"))
+    faithful_purchase = windowed_partition_sum(
+        customers,
+        partition_keys=["customer_id", "sales_date_month"],
+        measure="total_cost",
+        out_col="total_sales",
+        carry_cols=["full_name", "customer_address", "phone_number"],
+    ).select(
+        "customer_id",
+        "full_name",
+        F.col("customer_address").alias("address"),
+        "phone_number",
+        "sales_date_month",
+        "total_sales",
     )
-    assert canon(sales_team_incentive(enriched, faithful=True)) == canon(
-        sales_team_incentive(enriched, faithful=False)
+    team = enriched.withColumn("sales_month", month_key("sales_date")).withColumn(
+        "full_name", full_name("sales_person_first_name", "sales_person_last_name")
     )
+    faithful_incentive = top_performer_incentive(
+        windowed_partition_sum(
+            team,
+            partition_keys=["store_id", "sales_person_id", "sales_month"],
+            measure="total_cost",
+            out_col="total_sales_every_month",
+            carry_cols=["full_name"],
+        ),
+        rank_partition=["store_id", "sales_month"],
+        total_col="total_sales_every_month",
+    ).select(
+        "store_id",
+        "sales_person_id",
+        "full_name",
+        "sales_month",
+        "total_sales_every_month",
+        "incentive",
+    )
+
+    assert canon(faithful_purchase) == canon(customer_monthly_purchase(enriched))
+    assert canon(faithful_incentive) == canon(sales_team_incentive(enriched))
 
 
 def test_crash_detected_even_after_inputs_archived(spark, env):

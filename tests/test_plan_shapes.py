@@ -1119,9 +1119,9 @@ def test_runtime_bloom_filter_injection(spark):
     Conf is session-scoped, so restore around the pin."""
     from end_to_end_sales_etl_de_project_spark.session import runtime_filter_conf
 
-    conf = runtime_filter_conf(
-        creation_side_threshold="100MB", application_side_scan_threshold="0"
-    )
+    conf = runtime_filter_conf()
+    conf["spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"] = "100MB"
+    conf["spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"] = "0"
     # the rule (correctly) declines when the dim would broadcast anyway
     # — a BHJ never pays the shuffle the filter exists to prune — so
     # the pin must also force the shuffle-join regime

@@ -97,7 +97,7 @@ def test_salted_join_spreads_hot_key(spark):
         "k long, row_id long, v double",
     )
     small = spark.createDataFrame([(1, "hot"), (2, "cold")], "sk long, label string")
-    out = salted_join(big, small, "k", "sk", n_salts=8)
+    out = salted_join(big, small, "k", "sk")
     plain = big.join(small, big["k"] == small["sk"])
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, plain.collect()))
     # the spread itself: recompute the operator's default salt expression
@@ -199,7 +199,7 @@ def test_streak_islands_match_sequential_reference(spark, pairs):
     df = spark.createDataFrame(rows, "user_id int, d date")
     got = {
         (r["user_id"], r["anchor"]): r["streak_len"]
-        for r in streak_islands(df, "user_id", "d").collect()
+        for r in streak_islands(df).collect()
     }
     # sequential reference: walk each user's sorted days
     want: dict[tuple, int] = {}
@@ -232,7 +232,7 @@ def test_swept_peaks_match_sequential_prefix_sum(spark, pts, bucket):
     df = spark.createDataFrame(pts, "t long, delta int").repartition(5)
     got = {
         r["hour_s"]: r["peak_concurrency"]
-        for r in swept_peaks(df, "t", "delta", bucket).collect()
+        for r in swept_peaks(df, bucket).collect()
     }
     # sequential reference: one global running sum in (t, delta) order
     want: dict[int, int] = {}
@@ -255,7 +255,7 @@ def test_containment_dominates_jaccard_on_shared_corpus(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
     cont = {
         (r["doc_a"], r["doc_b"]): r
         for r in dedup.containment_pairs(sh, 0.0).collect()
@@ -334,7 +334,7 @@ def test_repetition_profile_flags_looping_text(spark):
         (3, "hi"),                                       # shorter than k
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in repetition_profile(df, k=3).collect()}
+    out = {r["doc_id"]: r for r in repetition_profile(df).collect()}
     assert out[1]["repetitive"] and out[1]["dup_char_frac"] > 0.9
     assert not out[2]["repetitive"] and out[2]["dup_char_frac"] == 0.0
     assert out[3]["n_ngrams"] == 0 and out[3]["dup_char_frac"] is None

@@ -15,12 +15,12 @@ def _curve(spark, rows):
 
 def test_choose_m_takes_smallest_qualifying(spark):
     c = _curve(spark, [(8_192, 0.5), (16_384, 0.005), (65_536, 0.001)])
-    assert dedup.bloom_choose_m(c, GRID, 0.01) == 16_384
+    assert dedup.bloom_choose_m(c, GRID) == 16_384
 
 
 def test_choose_m_falls_back_to_largest_when_none_qualify(spark):
     c = _curve(spark, [(8_192, 0.5), (16_384, 0.2), (65_536, 0.1)])
-    assert dedup.bloom_choose_m(c, GRID, 0.01) == 65_536
+    assert dedup.bloom_choose_m(c, GRID) == 65_536
 
 
 def test_choose_m_nan_and_null_never_qualify(spark):
@@ -28,9 +28,9 @@ def test_choose_m_nan_and_null_never_qualify(spark):
     NaN compares false against the target in Python, Spark, and DuckDB
     alike, so it must neither qualify nor crash; NULL likewise."""
     c = _curve(spark, [(8_192, float("nan")), (16_384, None), (65_536, 0.001)])
-    assert dedup.bloom_choose_m(c, GRID, 0.01) == 65_536
+    assert dedup.bloom_choose_m(c, GRID) == 65_536
     c2 = _curve(spark, [(8_192, float("nan")), (16_384, None), (65_536, None)])
-    assert dedup.bloom_choose_m(c2, GRID, 0.01) == 65_536  # fallback
+    assert dedup.bloom_choose_m(c2, GRID) == 65_536  # fallback
 
 
 def test_d24_tier_attribution_laws(spark):

@@ -73,9 +73,7 @@ def test_e33_flags_a_planted_spike(spark):
     exist."""
     import datetime as dt
 
-    from end_to_end_sales_etl_de_project_spark.plans.events import (
-        EVENT_QUERIES,  # noqa: F401 — registration side effect
-    )
+    import end_to_end_sales_etl_de_project_spark.plans.events  # noqa: F401 — registration side effect
     from pyspark.sql import functions as F
 
     base = dt.datetime(2024, 1, 1, 0, 0, 0)

@@ -229,7 +229,7 @@ def test_watermark_drops_late_data(spark, tmpdir):
 
     stream = read_events_stream(spark, land, max_files_per_trigger=1)
     q = (
-        tumbling_stream(stream, watermark="2 hours")
+        tumbling_stream(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("wm_test")
@@ -492,7 +492,7 @@ def test_doc_dedup_stream_admits_each_content_once(spark, sf_dir, docs_src):
         read_documents_stream,
     )
 
-    stream = read_documents_stream(spark, docs_src, max_files_per_trigger=1)
+    stream = read_documents_stream(spark, docs_src)
     result = run_to_memory_sink(
         dedup_documents_stream(stream), "doc_dedup_test", "append"
     )
@@ -564,7 +564,6 @@ def test_violation_monitor_stream_equals_batch(spark, sf_dir, events_src):
     )
     from end_to_end_sales_etl_de_project_spark.sources.tables import load_table
     from end_to_end_sales_etl_de_project_spark.streaming.events import (
-        EVENT_CHECKS,
         violation_monitor_stream,
     )
 
@@ -572,7 +571,7 @@ def test_violation_monitor_stream_equals_batch(spark, sf_dir, events_src):
     result = run_to_memory_sink(
         violation_monitor_stream(stream), "violmon_test", "complete"
     )
-    batch = violation_monitor_agg(load_table(spark, sf_dir, "events"), EVENT_CHECKS)
+    batch = violation_monitor_agg(load_table(spark, sf_dir, "events"))
     assert _canon(result) == _canon(batch)
     rows = result.collect()
     assert sum(r["value_spike_violations"] for r in rows) > 0
@@ -615,9 +614,9 @@ def _test_bloom_words(spark, sf_dir):
     from end_to_end_sales_etl_de_project_spark.operators.text import corpus_split
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    sh = dedup.shingle_index(docs, "doc_id", "text")
     splits = docs.filter(F.col("text").isNotNull()).select(
-        F.col("doc_id").alias("doc"), corpus_split("text").alias("split")
+        F.col("doc_id").alias("doc"), corpus_split().alias("split")
     )
     test_sh = (
         sh.join(splits, "doc")
@@ -667,7 +666,7 @@ def test_decontamination_gate_stream_equals_batch(spark, sf_dir, docs_src):
     landing = spark.read.parquet(docs_src)
     exact_docs = {
         r.doc
-        for r in dedup.shingle_index(landing, "doc_id", "text", 3)
+        for r in dedup.shingle_index(landing, "doc_id", "text")
         .join(test_sh, "shingle", "semi")
         .select("doc")
         .distinct()
@@ -708,9 +707,9 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
     )
     corpus = docs.join(member.filter(F.col("b") < 80).select("doc_id"), "doc_id")
     batch = docs.join(member.filter(F.col("b") >= 80).select("doc_id"), "doc_id")
-    corpus_sh = dedup.shingle_index(corpus, "doc_id", "text", 3)
+    corpus_sh = dedup.shingle_index(corpus, "doc_id", "text")
     idx = dedup.corpus_lsh_index(
-        corpus_sh, dedup.minhash_signatures(corpus_sh, 16)
+        corpus_sh, dedup.minhash_signatures(corpus_sh)
     ).localCheckpoint(eager=True)
 
     # batch docs land as TWO files so the gate crosses a trigger boundary
@@ -754,11 +753,11 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
     mart = spark.read.parquet(f"{tmpdir}/neardup-decisions")
     assert mart.count() == len(got)
     assert by_doc(mart) == got
-    docs_sh = dedup.shingle_index(docs, "doc_id", "text", 3)
+    docs_sh = dedup.shingle_index(docs, "doc_id", "text")
     want = {
         r["doc_id"]: (r["decision"], r["matched_doc"], r["jaccard"])
         for r in dedup.incremental_neardup(
-            docs, docs_sh, dedup.minhash_signatures(docs_sh, 16)
+            docs, docs_sh, dedup.minhash_signatures(docs_sh)
         ).collect()
     }
     assert got == want  # gate ≡ d18 on the same split, bit-exact
@@ -844,7 +843,7 @@ def test_cms_probe_stream_equals_batch(spark, sf_dir, docs_src):
 
     landing = spark.read.parquet(docs_src)
     exact = (
-        dedup.shingle_index(landing, "doc_id", "text", 3)
+        dedup.shingle_index(landing, "doc_id", "text")
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     )
@@ -909,7 +908,7 @@ def test_cms_probe_stream_state_survives_restart(spark, sf_dir, tmpdir):
     from end_to_end_sales_etl_de_project_spark.operators import dedup
 
     top = (
-        dedup.shingle_index(landing1, "doc_id", "text", 3)
+        dedup.shingle_index(landing1, "doc_id", "text")
         .groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.desc("df"), "shingle")

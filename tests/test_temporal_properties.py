@@ -42,7 +42,7 @@ def test_asof_matches_pandas_merge_asof(spark, left, right):
     )
     got = {
         r["event_id"]: (r["ts_right"], r["value_right"])
-        for r in asof_join(ldf, rdf, on="ts", by="user_id", right_cols=["ts", "value"]).collect()
+        for r in asof_join(ldf, rdf, right_cols=["ts", "value"]).collect()
     }
 
     lp = pd.DataFrame(
@@ -77,10 +77,7 @@ def test_range_join_matches_bruteforce(spark, events, gap):
     ev = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp, event_type string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in range_join_bucketed(
-            ev, by="user_id", ts_col="ts", id_col="event_id", max_gap_seconds=gap,
-            payload_cols=["event_type"],
-        ).collect()
+        for r in range_join_bucketed(ev, max_gap_seconds=gap).collect()
     }
     want = set()
     for i, (ka, sa) in enumerate(events):

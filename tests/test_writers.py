@@ -66,7 +66,7 @@ def test_delete_keys_parquet_removes_only_doomed(spark, tmp_path):
     path = str(tmp_path / "tbl")
     spark.range(0, 100).withColumn("v", F.col("id") * 2).write.parquet(path)
     doomed = spark.createDataFrame([(3,), (7,), (7,), (999,)], "id long")
-    n_deleted = delete_keys_parquet(spark, path, doomed, "id")
+    n_deleted = delete_keys_parquet(spark, path, doomed)
     assert n_deleted == 2  # 999 absent, 7 listed twice but one row
     rows = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert set(rows) == set(range(100)) - {3, 7}
