@@ -1,8 +1,1 @@
-from end_to_end_sales_etl_de_project_spark.functions.scalar import (
-    full_name,
-    money,
-    money_sum,
-    month_key,
-)
-
-__all__ = ["full_name", "money", "money_sum", "month_key"]
+"""Package marker: import the submodules."""

@@ -8,6 +8,7 @@ standardized. We take the first 15 hex chars (60 bits — fits a signed
 
 - Spark:  ``conv(substr(md5(x), 1, 15), 16, 10)`` cast to bigint
 - DuckDB: ``CAST(('0x' || substr(md5(x), 1, 15)) AS UBIGINT)::BIGINT``
+- Python: ``int(md5(x.encode()).hexdigest()[:15], 16)`` (driver side)
 
 Verified equal across engines including UTF-8 inputs. At 100 TB this is
 still the right shape: md5 is computed JVM-side inside codegen, no
@@ -15,6 +16,8 @@ Python involved.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,6 +39,12 @@ def h60_seeded(col: Column | str, seed: int) -> Column:
 def h60_sql(expr: str) -> str:
     """DuckDB SQL snippet computing the same hash of ``expr``."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS UBIGINT)::BIGINT"
+
+
+def h60_py(s: str) -> int:
+    """Driver-side Python twin of :func:`h60` (md5 of the UTF-8 bytes,
+    same prefix parse), for hashing keys without a Spark job."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def h60_seeded_sql(seed: int) -> str:

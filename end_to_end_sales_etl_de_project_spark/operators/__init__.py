@@ -1,69 +1,1 @@
-from end_to_end_sales_etl_de_project_spark.operators.curation import (
-    contamination_report,
-    curate_corpus,
-    dataset_mix_report,
-    token_rarity,
-    training_manifest,
-)
-from end_to_end_sales_etl_de_project_spark.operators.dedup import (
-    exact_dedup_groups,
-    jaccard_pairs,
-    minhash_lsh_pairs,
-    neardup_components,
-    simhash,
-)
-from end_to_end_sales_etl_de_project_spark.operators.grouped import interarrival_stats
-from end_to_end_sales_etl_de_project_spark.operators.metrics import (
-    grouped_monthly_sum,
-    top_performer_incentive,
-    windowed_partition_sum,
-)
-from end_to_end_sales_etl_de_project_spark.operators.profiling import profile_columns
-from end_to_end_sales_etl_de_project_spark.operators.similarity import (
-    brute_force_topk,
-    embedding_neardup_pairs,
-    lsh_topk,
-    lsh_topk_multiprobe,
-)
-from end_to_end_sales_etl_de_project_spark.operators.skew import salted_sum
-from end_to_end_sales_etl_de_project_spark.operators.temporal_joins import (
-    asof_join,
-    range_join_bucketed,
-)
-from end_to_end_sales_etl_de_project_spark.operators.text import doc_chunks
-from end_to_end_sales_etl_de_project_spark.operators.upsert import upsert_parquet
-from end_to_end_sales_etl_de_project_spark.operators.windows import (
-    session_agg,
-    sliding_agg,
-    tumbling_agg,
-)
-
-__all__ = [
-    "asof_join",
-    "brute_force_topk",
-    "contamination_report",
-    "curate_corpus",
-    "dataset_mix_report",
-    "doc_chunks",
-    "embedding_neardup_pairs",
-    "exact_dedup_groups",
-    "grouped_monthly_sum",
-    "interarrival_stats",
-    "jaccard_pairs",
-    "lsh_topk",
-    "lsh_topk_multiprobe",
-    "minhash_lsh_pairs",
-    "neardup_components",
-    "profile_columns",
-    "range_join_bucketed",
-    "salted_sum",
-    "session_agg",
-    "simhash",
-    "sliding_agg",
-    "token_rarity",
-    "top_performer_incentive",
-    "training_manifest",
-    "tumbling_agg",
-    "upsert_parquet",
-    "windowed_partition_sum",
-]
+"""Package marker: import the submodules."""

@@ -814,18 +814,17 @@ def a13_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Intra-document repetition: total k-gram windows vs distinct shingles.
-# n_windows uses the same guarded sequence as shingles_from_tokens (docs
-# shorter than k words have 0 windows, ratio 0).
-_T07_K = 3
+# Intra-document repetition: total k-gram windows vs distinct shingles
+# (k = dedup.SHINGLE_K). n_windows uses the same guarded sequence as
+# shingles_from_tokens (docs shorter than k words have 0 windows, ratio 0).
 _T07_ORACLE = f"""
 SELECT doc_id,
-       CAST(greatest(len({text.tokens_sql('text')}) - {_T07_K - 1}, 0) AS BIGINT)
+       CAST(greatest(len({text.tokens_sql('text')}) - {dedup.SHINGLE_K - 1}, 0) AS BIGINT)
          AS n_windows,
-       CAST(len({text.word_shingles_sql('text', _T07_K)}) AS BIGINT) AS n_distinct,
-       CASE WHEN greatest(len({text.tokens_sql('text')}) - {_T07_K - 1}, 0) > 0
-            THEN 1.0 - CAST(len({text.word_shingles_sql('text', _T07_K)}) AS DOUBLE)
-                       / CAST(greatest(len({text.tokens_sql('text')}) - {_T07_K - 1}, 0) AS DOUBLE)
+       CAST(len({text.word_shingles_sql('text', dedup.SHINGLE_K)}) AS BIGINT) AS n_distinct,
+       CASE WHEN greatest(len({text.tokens_sql('text')}) - {dedup.SHINGLE_K - 1}, 0) > 0
+            THEN 1.0 - CAST(len({text.word_shingles_sql('text', dedup.SHINGLE_K)}) AS DOUBLE)
+                       / CAST(greatest(len({text.tokens_sql('text')}) - {dedup.SHINGLE_K - 1}, 0) AS DOUBLE)
             ELSE 0.0 END AS repetition_ratio
 FROM documents
 """
@@ -839,13 +838,13 @@ def t07_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-step tokenization; zero shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("doc_id", text.tokens("text").alias("toks"))
-    toks = F.col("toks")
+    toks, k = F.col("toks"), dedup.SHINGLE_K
     n_windows = (
-        F.when(F.size(toks) >= _T07_K, F.size(toks) - (_T07_K - 1))
+        F.when(F.size(toks) >= k, F.size(toks) - (k - 1))
         .otherwise(0)
         .cast("bigint")
     )
-    n_distinct = F.size(text.shingles_from_tokens(toks, _T07_K)).cast("bigint")
+    n_distinct = F.size(text.shingles_from_tokens(toks, k)).cast("bigint")
     ratio = (
         F.when(
             n_windows > 0,

@@ -1,13 +1,1 @@
-from end_to_end_sales_etl_de_project_spark.streaming.events import (
-    read_events_stream,
-    session_stream,
-    sliding_stream,
-    tumbling_stream,
-)
-
-__all__ = [
-    "read_events_stream",
-    "session_stream",
-    "sliding_stream",
-    "tumbling_stream",
-]
+"""Package marker: import the submodules."""

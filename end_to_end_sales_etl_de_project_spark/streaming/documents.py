@@ -26,14 +26,18 @@ files; the gate routes rows).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from end_to_end_sales_etl_de_project_spark.operators.dedup import SHINGLE_K
 from end_to_end_sales_etl_de_project_spark.operators.text import (
     quality_bucket,
     token_count,
 )
+from end_to_end_sales_etl_de_project_spark.writers import swap_in
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -44,10 +48,6 @@ DOCUMENTS_SCHEMA = T.StructType(
         T.StructField("n_chars", T.LongType()),
     ]
 )
-
-# Word-shingle size of every gate below (the batch corpus operators' k).
-SHINGLE_K = 3
-
 
 def read_documents_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream over a documents landing zone, one file per
@@ -164,10 +164,13 @@ def start_mixture_monitor(
     |sources|-row totals table; ``foreachBatch`` applies the SHARED
     batch math (``curation.mixture_weights_from_totals`` — the same
     expression tree t32 ships, so live and batch weights are
-    bit-identical on identical totals) and overwrites the parquet mart
-    the loader/dashboard reads. State is |sources| rows; the
-    per-trigger fold work is |sources| rows; nothing here scales with
-    corpus size except the stateless gate projection upstream."""
+    bit-identical on identical totals) and rewrites the parquet mart
+    the loader/dashboard reads: staged sibling + ``writers.swap_in``,
+    like every rewrite of an existing directory, so a trigger whose
+    write fails leaves the previous mart in place. State is |sources|
+    rows; the per-trigger fold work is |sources| rows; nothing here
+    scales with corpus size except the stateless gate projection
+    upstream."""
     from end_to_end_sales_etl_de_project_spark.operators.curation import (
         mixture_weights_from_totals,
     )
@@ -176,9 +179,9 @@ def start_mixture_monitor(
     totals = source_token_totals(quality_gate(docs))
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        mixture_weights_from_totals(batch_df).write.mode("overwrite").parquet(
-            mart_path
-        )
+        staged = mart_path + ".staged"
+        mixture_weights_from_totals(batch_df).write.mode("overwrite").parquet(staged)
+        swap_in(staged, mart_path)
 
     return (
         totals.writeStream.outputMode("complete")
@@ -352,15 +355,25 @@ def start_neardup_gate(
 ):
     """Continuous near-dup gate: as document files land, probe the
     static corpus LSH index (stream-static join, zero streaming state)
-    and append each micro-batch's elected decisions to the decisions
+    and add each micro-batch's elected decisions to the decisions
     mart. The election runs inside ``foreachBatch`` in batch mode —
     the same ``neardup_decisions`` the batch path uses, so live and
-    nightly decisions are bit-identical on identical input."""
+    nightly decisions are bit-identical on identical input.
+
+    Exactly once per epoch: micro-batch ``n`` owns the partition
+    directory ``epoch=n`` of the mart, written to a staged sibling of
+    the mart and committed with ``writers.swap_in``. An epoch that Spark
+    replays after a crash between the write and its commit-log entry
+    replaces its own output instead of adding a second copy, so the
+    mart holds one decision per document."""
     stream = read_documents_stream(spark, src_dir)
     rows = neardup_probe(stream, corpus_index)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        neardup_decisions(batch_df).write.mode("append").parquet(decisions_path)
+        staged = f"{decisions_path}.staged-epoch={epoch_id}"
+        neardup_decisions(batch_df).write.mode("overwrite").parquet(staged)
+        os.makedirs(decisions_path, exist_ok=True)
+        swap_in(staged, os.path.join(decisions_path, f"epoch={epoch_id}"))
 
     return (
         rows.writeStream.outputMode("append")
@@ -376,14 +389,6 @@ def start_neardup_gate(
 
 CMS_STREAM_W = 1024
 CMS_STREAM_DEPTH = 4
-
-
-def _py_h60(s: str) -> int:
-    """Driver-side twin of functions/hashing.h60 (same md5-prefix
-    parse), for bucketing PROBE keys without a Spark job."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def _doc_shingle_rows(docs: DataFrame) -> DataFrame:
@@ -448,10 +453,13 @@ def cms_probe_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60_seeded
+    from end_to_end_sales_etl_de_project_spark.functions.hashing import (
+        h60_py,
+        h60_seeded,
+    )
 
     probe_buckets = {
-        s: [(int(p), _py_h60(f"{p}#{s}") % CMS_STREAM_W) for p in probes]
+        s: [(int(p), h60_py(f"{p}#{s}") % CMS_STREAM_W) for p in probes]
         for s in range(CMS_STREAM_DEPTH)
     }
     seeded = _doc_shingle_rows(docs).select(
@@ -515,7 +523,10 @@ def cms_probe_batch(
     emission because counter updates are integer sums. One bounded
     (<= w-row) aggregate per hash row; probe lookup joins are against
     a driver-built <= |probes|-row frame."""
-    from end_to_end_sales_etl_de_project_spark.functions.hashing import h60_seeded
+    from end_to_end_sales_etl_de_project_spark.functions.hashing import (
+        h60_py,
+        h60_seeded,
+    )
 
     rows = _doc_shingle_rows(docs)
     spark = docs.sparkSession
@@ -532,7 +543,7 @@ def cms_probe_batch(
             .agg(F.count(F.lit(1)).cast("bigint").alias("est"))
         )
         pb = spark.createDataFrame(
-            [(s, int(p), _py_h60(f"{p}#{s}") % CMS_STREAM_W) for p in probes],
+            [(s, int(p), h60_py(f"{p}#{s}") % CMS_STREAM_W) for p in probes],
             "row_idx int, probe long, bucket long",
         )
         legs.append(

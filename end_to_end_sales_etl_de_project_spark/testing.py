@@ -107,9 +107,15 @@ class CompareResult:
     oracle_rows: int
     match: bool
     mismatches: list[str] = field(default_factory=list)
+    # set by oracle_parity when timestamps were compared as strings
+    ts_as_string: bool = False
 
     def __bool__(self) -> bool:
         return self.match
+
+    @property
+    def detail(self) -> str:
+        return "" if self.match else str(self.mismatches[:2])[:300]
 
 
 def _to_pandas_resilient(spark_df: DataFrame) -> pd.DataFrame:
@@ -247,3 +253,52 @@ def run_oracle(con: duckdb.DuckDBPyConnection, sql: str) -> pd.DataFrame:
                     raise
                 return _run_oracle_subprocess(sf_dir, sql)
     raise AssertionError("unreachable")
+
+
+def oracle_parity(
+    spark, sf_dir: str, con: duckdb.DuckDBPyConnection, name: str
+) -> CompareResult:
+    """Compare registered query ``name`` on ``sf_dir`` with its oracle
+    over ``con`` (a ``duckdb_connection(sf_dir)``) — the one
+    oracle-parity check of the Tier-1 suites, the degenerate-data sweep
+    and ``scripts/query_tools.py parity``.
+
+    pandas (the compare layer on BOTH sides) cannot hold timestamps
+    outside the ns range [1677, 2262]; the engines can. Only when that
+    conversion fails is the comparison re-run with every timestamp and
+    date column rendered as a string on both engines — rendering
+    equality is already a cross-engine contract (month_key is a
+    substring of the cast). The result then has ``ts_as_string`` set."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    from end_to_end_sales_etl_de_project_spark.plans.registry import ORACLES, QUERIES
+
+    sql = ORACLES[name]
+    try:
+        return compare_spark_to_oracle(
+            name, QUERIES[name](spark, sf_dir), run_oracle(con, sql)
+        )
+    except Exception as e:  # noqa: BLE001 — only the ns-range failure falls back
+        if "out of bounds timestamp" not in str(e):
+            raise
+    # DATE goes through TIMESTAMP first on both sides: the base
+    # comparator normalizes date vs timestamp_ntz to the same
+    # datetime64, so the string form must render them identically too
+    # ("... 00:00:00", never the bare date).
+    df = QUERIES[name](spark, sf_dir)
+    df = df.select(*[
+        F.col(f.name).cast("timestamp_ntz").cast("string").alias(f.name)
+        if isinstance(f.dataType, (TimestampType, TimestampNTZType, DateType))
+        else F.col(f.name)
+        for f in df.schema.fields
+    ])
+    cols = ", ".join(
+        f'CAST(CAST("{c}" AS TIMESTAMP) AS VARCHAR) AS "{c}"'
+        if t.startswith("TIMESTAMP") or t == "DATE"
+        else f'"{c}"'
+        for c, t, *_ in con.execute(f"DESCRIBE SELECT * FROM ({sql}) q").fetchall()
+    )
+    r = compare_spark_to_oracle(name, df, run_oracle(con, f"SELECT {cols} FROM ({sql}) q"))
+    r.ts_as_string = True
+    return r

@@ -557,6 +557,21 @@ INFRA_ATTESTATIONS: list[dict] = [
         "round": 16,
         "note": _A20_DOC_NOTE,
     },
+    {
+        "function": "t07_repetition",
+        "fingerprint": "151372af939184cc",
+        "round": 16,
+        "note": (
+            "One shingle width, one name: t07's private _T07_K = 3 is gone; "
+            "t07_repetition and its oracle read dedup.SHINGLE_K, which is 3. "
+            "The query builds the same plan: scripts/query_tools.py "
+            "fingerprint at sf0.001 gives df80c5675677b946 on the parent "
+            "and on the change. ORACLES is byte-identical (sha256 "
+            "726723716a8b3797bab86df84b53805028f04505dfa6a9a72787df26fb247911 "
+            "over 264 oracles), and the extreme_docs suite "
+            "(tests/test_extreme_values.py) keeps t07 hash-green."
+        ),
+    },
 ]
 
 

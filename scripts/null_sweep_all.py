@@ -1,31 +1,39 @@
-"""Full-registry planted-NULL + empty-corpus sweep (r11 proactive pass).
+"""Degenerate-data oracle sweep over the whole registry, and the one
+table of degenerate-data axes.
 
-The in-suite NULL sweeps are scoped to the driver window, so a NULL-
+``FIXTURES`` below holds one record per axis: its builder, its table
+family, the Tier-1 scope, the sweep exclusions and the divergences
+pinned in the Tier-1 suites. This script reads it for the full sweep;
+the seven Tier-1 suites (``tests/test_null_parity*.py``,
+``tests/test_empty_corpus.py``, ``tests/test_extreme_values.py``,
+``tests/test_degenerate_duplication.py``) read it through the ``axis``
+factory in ``tests/conftest.py``. Both compare through
+``testing.oracle_parity``.
+
+The Tier-1 NULL suites are scoped to the driver window, so a NULL-
 semantics divergence in an out-of-window query hides until a rotation
-carries it in (r11 caught q72/q81/m05 exactly that way). This script
-rebuilds the four suites' fixtures verbatim (sales mutation masks,
-planted documents corpus, planted events rows, planted embeddings
-rows) and sweeps EVERY registered oracle whose SQL references the
-mutated family — the whole class at once instead of 50 per round.
+carries it in (r11 caught q72/q81/m05 exactly that way). The sweep runs
+EVERY registered oracle whose SQL references the axis's table family —
+the whole class at once instead of 50 per round. The axes:
 
-Round 12 adds the degenerate-duplication axes (VERDICT r11 #5): an
-all-identical-documents corpus (one 40-clique — the hot-bucket guard's
-worst case, every text score tied) and a two-document near-dup corpus
-(the smallest non-empty pairwise input), both swept over every oracle
-that reads the documents table.
+- planted NULLs: sales mutation masks, planted documents corpus,
+  planted events rows, planted embeddings rows (r11);
+- the empty corpus: every table 0 rows (r11);
+- degenerate duplication: an all-identical-documents corpus (one
+  40-clique — the hot-bucket guard's worst case, every text score
+  tied), a two-document near-dup corpus (the smallest non-empty
+  pairwise input) (r12), and all-identical sales measures, event
+  timestamps and embeddings (r14);
+- extreme values: sales decimal/date edge rows (r12), edge documents
+  (max-length / single-char / all-whitespace / empty /
+  one-token-repeated), edge event timestamps (year 9999, pre-epoch,
+  epoch, duplicate-ts ties) and values, and edge embeddings
+  (zero-norm, max-magnitude, one-hot-huge) (r13).
 
-Round 13 adds the extreme-values axes for the remaining three scopes
-(VERDICT r12 #4): edge documents (max-length / single-char /
-all-whitespace / empty / one-token-repeated), edge event timestamps
-(year 9999, pre-epoch, epoch, duplicate-ts ties) and values (±1e300),
-and edge embeddings (zero-norm, max-magnitude, one-hot-huge).
-
-Usage:  python scripts/null_sweep_all.py \
-            [sales|docs|events|emb|empty|identical|twodoc|extreme|
-             extreme_docs|extreme_events|extreme_emb ...]
-Prints one PASS/FAIL line per (fixture, query); exits non-zero on any
-FAIL. Slow (~10-20 min for all four at sf0.001); run on an idle
-machine.
+Usage:  python scripts/null_sweep_all.py [axis ...]   (default: all)
+Prints one PASS/FAIL/XFAIL(pinned) line per (axis, query); exits
+non-zero on any FAIL. Slow (~10-20 min per axis at sf0.001); run on an
+idle machine.
 """
 
 from __future__ import annotations
@@ -35,23 +43,28 @@ import re
 import shutil
 import sys
 import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import __spark_entry__ as E  # noqa: E402
+from end_to_end_sales_etl_de_project_spark.plans.registry import (  # noqa: E402
+    DRIVER_WINDOW,
+    ORACLES,
+)
 from end_to_end_sales_etl_de_project_spark.session import get_spark_session  # noqa: E402
+from end_to_end_sales_etl_de_project_spark.sources.tables import TABLES  # noqa: E402
 from end_to_end_sales_etl_de_project_spark.testing import (  # noqa: E402
-    compare_spark_to_oracle,
     duckdb_connection,
-    run_oracle,
+    oracle_parity,
 )
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-SALES_TABLES = ["lineitem", "orders", "customer", "supplier", "part", "nation", "region"]
+SALES_TABLES = ("lineitem", "orders", "customer", "supplier", "part", "nation", "region")
 _SALES_MUTATIONS = {
     "lineitem": (
         "l_orderkey",
@@ -88,6 +101,9 @@ def _clone_except(sf_dir: str, out: str, skip: set[str]) -> None:
 
 
 def build_sales(out: str) -> None:
+    """NULLs planted by per-table ``key % prime`` masks (distinct
+    primes, so the NULL patterns overlap but never coincide entirely);
+    schemas and row counts stay canonical."""
     _clone_except(SF, out, set(_SALES_MUTATIONS))
     con = duckdb.connect()
     for table, (key, masks) in _SALES_MUTATIONS.items():
@@ -105,7 +121,25 @@ def build_sales(out: str) -> None:
 _PAR = " pellentesque habitant morbi tristique senectus et netus et malesuada fames"
 
 
-def build_docs(out: str, spark) -> None:
+def _docs_values(rows: list[tuple]) -> str:
+    """``SELECT`` of (doc_id, text, lang, source, n_chars) rows with the
+    canonical documents types."""
+
+    def lit(v) -> str:
+        if v is None:
+            return "NULL"
+        return "'" + v.replace("'", "''") + "'" if isinstance(v, str) else str(v)
+
+    values = ", ".join("(" + ", ".join(map(lit, r)) + ")" for r in rows)
+    return (
+        "SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(text AS VARCHAR) AS text, "
+        "CAST(lang AS VARCHAR) AS lang, CAST(source AS VARCHAR) AS source, "
+        "CAST(n_chars AS BIGINT) AS n_chars "
+        f"FROM (VALUES {values}) t(doc_id, text, lang, source, n_chars)"
+    )
+
+
+def build_docs(out: str) -> None:
     """Planted documents: every NULL/degenerate corner the synthetic
     corpus lacks (NULL text, lang, source, an all-NULL row), plus enough
     normal/near-dup content that the dedup paths stay non-vacuous. d15
@@ -131,17 +165,16 @@ def build_docs(out: str, spark) -> None:
          "en", None, 98),
         (7, None, None, None, None),
     ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    duckdb.connect().execute(
+        f"COPY ({_docs_values(rows)}) TO '{out}/documents.parquet' (FORMAT PARQUET)"
     )
-    staged = os.path.join(out, "_docs_staged")
-    df.coalesce(1).write.mode("overwrite").parquet(staged)
-    part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(staged, part), os.path.join(out, "documents.parquet"))
-    shutil.rmtree(staged)
 
 
 def build_events(out: str) -> None:
+    """The real events plus planted rows exercising every NULL corner:
+    NULL ts, NULL user_id, NULL event_type, NULL value, NULL props, and
+    an all-NULL row. Written by DuckDB so the parquet keeps the
+    timestamp physical type of the canonical file."""
     _clone_except(SF, out, {"events"})
     duckdb.connect().execute(
         f"""
@@ -166,35 +199,11 @@ def build_empty(out: str) -> None:
     """Every table present with its canonical schema and ZERO rows —
     the fully-pruned-slice / first-day-of-feed case."""
     con = duckdb.connect()
-    for name in ALL_TABLES:
+    for name in TABLES:
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{SF}/{name}.parquet') LIMIT 0) "
             f"TO '{out}/{name}.parquet' (FORMAT PARQUET)"
         )
-
-
-# Expected divergences on the EMPTY fixture, each pinned in
-# tests/test_empty_corpus.py with its rationale: the IVF/PQ paths
-# fail loudly on an empty training corpus (deliberate guard), and
-# upstream Spark emits zero rows for ROLLUP/CUBE/GROUPING SETS over
-# empty input where ANSI/DuckDB emit the grand-total row.
-EMPTY_EXPECTED = {
-    "a04_ann_ivf", "a05_ann_pq", "a12_ivf_recall_audit",
-    "a13_pq_recall_audit", "a20_pq_distortion", "a21_ivf_recall_curve",
-    "a22_ivf_cell_balance", "a23_ivf_probe_cost",
-    "q18_rollup", "q21_cube", "q38_grouping_sets",
-}
-
-# Expected divergences on the EXTREME fixture: q26's due_date lands in
-# year 10000 (9999-12-31 + 30 days) and the two engines RENDER
-# five-digit years differently — Spark uses the ISO-8601 expanded-year
-# sign ("+10000-01-30"), DuckDB does not ("10000-01-30"). Values agree;
-# only the text form differs, and only via the ts-as-string fallback
-# (pandas cannot represent the value at all). Upstream rendering
-# behavior on data outside any real domain — pinned, not patched
-# (matching DuckDB would mean changing timestamp→string semantics that
-# month_key and every string-rendered date rely on).
-EXTREME_EXPECTED = {"q26_date_functions"}
 
 
 def build_extreme(out: str) -> None:
@@ -258,26 +267,7 @@ COPY (
     )
 
 
-# Expected divergences on the three r13 extreme axes, pinned in
-# tests/test_extreme_values.py with rationale.
-# d15: the engine's own fail-loud guard — prefix blocking requires
-# every text >= the 16-char block width, and the axis plants 1-char /
-# empty docs. The guard exists precisely so short texts can't silently
-# vanish from the prefix index (its message says to lower the block
-# width to the corpus minimum); erroring here is the designed behavior,
-# same class as IVF/PQ on the empty corpus (EMPTY_EXPECTED above).
-EXTREME_DOCS_EXPECTED: set[str] = {"d15_prefix_duplicates"}
-# e03/e07: the session END timestamp for a year-9999 event lands in
-# year 10000 (9999-12-31 23:59:59 + the 30-min gap window) and the two
-# engines RENDER five-digit years differently (Spark ISO-8601 expanded
-# "+10000-...", DuckDB "10000-..."). Values agree; only the
-# ts-as-string fallback's text differs — the exact q26 class pinned on
-# the r12 sales axis (EXTREME_EXPECTED above).
-EXTREME_EVENTS_EXPECTED: set[str] = {"e03_session_window", "e07_sessionize_lag"}
-EXTREME_EMB_EXPECTED: set[str] = set()
-
-
-def build_extreme_docs(out: str, spark) -> None:
+def build_extreme_docs(out: str) -> None:
     """Extreme-values axis for the documents scope (VERDICT r12 #4):
     APPEND edge documents to the real corpus — max-length (~60k chars,
     the shingle/entropy families' widest per-doc fan-out), single-char,
@@ -289,7 +279,6 @@ def build_extreme_docs(out: str, spark) -> None:
     edges, not charset semantics. Originals kept so corpus-level
     statistics stay non-degenerate."""
     _clone_except(SF, out, {"documents"})
-    base = spark.read.parquet(f"{SF}/documents.parquet")
     long_text = (
         "the quick brown fox jumps over the lazy dog near the river " * 1000
     ).rstrip()
@@ -302,14 +291,11 @@ def build_extreme_docs(out: str, spark) -> None:
         (8000006, ("spam " * 3000).rstrip(), "de", "wiki", 5 * 3000 - 1),
         (8000007, "a" * 5000, "en", "code", 5000),
     ]
-    extra = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    duckdb.connect().execute(
+        f"COPY (SELECT * FROM read_parquet('{SF}/documents.parquet') "
+        f"UNION ALL {_docs_values(rows)}) "
+        f"TO '{out}/documents.parquet' (FORMAT PARQUET)"
     )
-    staged = os.path.join(out, "_docs_staged")
-    base.unionByName(extra).coalesce(1).write.mode("overwrite").parquet(staged)
-    part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(staged, part), os.path.join(out, "documents.parquet"))
-    shutil.rmtree(staged)
 
 
 def build_extreme_events(out: str) -> None:
@@ -536,6 +522,12 @@ COPY (
 
 
 def build_emb(out: str) -> None:
+    """The real embeddings plus planted rows exercising every NULL/shape
+    corner, among them a full-LENGTH vector with a NULL element: it
+    passes the size gate but must be excluded by the element-nullity
+    predicate (ADVICE r9 — the numpy seams would otherwise crash where
+    DuckDB NULL-propagates). Written by DuckDB so the parquet keeps the
+    FLOAT[] physical type of the canonical file."""
     _clone_except(SF, out, {"embeddings"})
     full = "[" + ", ".join(f"{(i % 7 - 3) / 8:.3f}" for i in range(64)) + "]"
     holed = (
@@ -562,119 +554,220 @@ COPY (
     )
 
 
-ALL_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+@dataclass(frozen=True)
+class Axis:
+    """One degenerate-data axis.
 
-FIXTURES = {
-    "sales": (build_sales, SALES_TABLES),
-    "docs": (None, ["documents"]),  # builder needs spark; special-cased below
-    "events": (build_events, ["events"]),
-    "emb": (build_emb, ["embeddings"]),
-    "empty": (build_empty, None),  # scope = every registered oracle
-    # degenerate-duplication axes (VERDICT r11 #5): same scope as the
-    # docs family — every oracle reading the documents table
-    "identical": (build_identical, ["documents"]),
-    "identical_emb": (build_identical_emb, ["embeddings"]),
-    "identical_events": (build_identical_events, ["events"]),
-    "identical_sales": (build_identical_sales, SALES_TABLES),
-    "twodoc": (build_twodoc, ["documents"]),
+    - ``build(out)`` writes a full sf-dir clone with the axis planted;
+    - ``tables`` is the table family: the full sweep runs every oracle
+      that reads one of them (every oracle when None);
+    - ``tier1`` is the Tier-1 suite's hand list, or None for the
+      window-derived scope: every in-window query of the family minus
+      ``exclusions``, so rotations update it by construction (the r9
+      failure mode — d23 displaced e17 after a hand list was written —
+      cannot recur);
+    - ``expected`` holds the divergences pinned in the Tier-1 suite;
+      the sweep reports them as XFAIL(pinned).
+    """
+
+    build: Callable[[str], None]
+    tables: tuple[str, ...] | None
+    tier1: tuple[str, ...] | None = ()
+    exclusions: frozenset[str] = frozenset()
+    expected: frozenset[str] = frozenset()
+
+    def sweep_scope(self) -> list[str]:
+        if self.tables is None:
+            return sorted(ORACLES)
+        pat = re.compile(r"\b(" + "|".join(self.tables) + r")\b")
+        return sorted(n for n, sql in ORACLES.items() if pat.search(sql))
+
+    def tier1_scope(self) -> list[str]:
+        if self.tier1 is not None:
+            return list(self.tier1)
+        return [
+            n for n in self.sweep_scope()
+            if n in DRIVER_WINDOW and n not in self.exclusions
+        ]
+
+
+# Tier-1 representatives on the two degenerate-duplication corpora:
+# exact-dup grouping, banded LSH (hot-bucket worst case), SimHash,
+# all-pairs Jaccard/containment, component resolution + histogram,
+# tier attribution (all four tiers hit the same clique), chunk-grain
+# near-dup, substring/prefix dedup, and the tie-heavy curation ranks.
+_DEGENERATE_DUP_TIER1 = (
+    "d01_dedup_exact",
+    "d03_minhash_lsh",
+    "d04_simhash",
+    "d02_ngram_jaccard",
+    "d06_neardup_resolve",
+    "d11_chunk_neardup",
+    "d14_cluster_size_histogram",
+    "d15_prefix_duplicates",
+    "d16_containment_pairs",
+    "d17_substring_dedup",
+    "d24_dedup_tier_attribution",
+    "d26_neardup_survivors",
+    "t18_chunk_dedup",
+    "c01_curate_corpus",
+    "c02_training_manifest",
+    "c11_diversity_sample",
+    "t23_vocab_coverage",
+)
+_DOCS = ("documents",)
+_EVENTS = ("events",)
+_EMB = ("embeddings",)
+
+FIXTURES: dict[str, Axis] = {
+    "sales": Axis(build_sales, SALES_TABLES, tier1=None),
+    "docs": Axis(
+        build_docs, _DOCS, tier1=None,
+        # fail-loud precondition, pinned in tests/test_null_parity.py
+        exclusions=frozenset({"d15_prefix_duplicates"}),
+    ),
+    "events": Axis(build_events, _EVENTS, tier1=None),
+    "emb": Axis(build_emb, _EMB, tier1=None),
+    "empty": Axis(
+        build_empty, None,
+        # one per operator family, plus every query the r11 empty-corpus
+        # sweep fixed (q34 schema-on-readback, q102/c15 SUM-over-zero
+        # coalesce) so the regressions stay visible by name
+        tier1=(
+            "q12_pricing_summary",      # grouped agg
+            "q34_partitioned_write_readback",  # r11 fix: schema on empty readback
+            "q102_constraint_audit",    # r11 fix: empty batch passes its checks
+            "c15_rule_attribution",     # r11 fix: zero evaluated, zero failed
+            "q61_union_by_name",        # schema-evolution union of two empty gens
+            "q92_approx_error_bounds",  # sketch audit over zero groups
+            "q81_cumulative_distinct",  # window over empty spine
+            "q106_volume_shipping",     # multi-join
+            "d01_dedup_exact",          # dedup family
+            "d03_minhash_lsh",          # LSH family (artifact over empty corpus)
+            "d24_dedup_tier_attribution",  # full cascade: all tiers zero
+            "t01_text_stats",           # text family
+            "t23_vocab_coverage",       # top-k prune over empty vocab
+            "e01_tumbling_hourly",      # events family
+            "a01_ann_bruteforce",       # ANN exact baseline (no training)
+            "c01_curate_corpus",        # curation capstone
+        ),
+        # pinned in tests/test_empty_corpus.py: the IVF/PQ paths fail
+        # loudly on an empty training corpus (deliberate guard), and
+        # upstream Spark emits zero rows for ROLLUP/CUBE/GROUPING SETS
+        # over empty input where ANSI/DuckDB emit the grand-total row
+        expected=frozenset({
+            "a04_ann_ivf", "a05_ann_pq", "a12_ivf_recall_audit",
+            "a13_pq_recall_audit", "a20_pq_distortion", "a21_ivf_recall_curve",
+            "a22_ivf_cell_balance", "a23_ivf_probe_cost",
+            "q18_rollup", "q21_cube", "q38_grouping_sets",
+        }),
+    ),
+    # degenerate-duplication axes (VERDICT r11 #5): each swept over
+    # every oracle reading its family
+    "identical": Axis(build_identical, _DOCS, tier1=_DEGENERATE_DUP_TIER1),
+    "identical_emb": Axis(build_identical_emb, _EMB),
+    "identical_events": Axis(build_identical_events, _EVENTS),
+    "identical_sales": Axis(build_identical_sales, SALES_TABLES),
+    "twodoc": Axis(build_twodoc, _DOCS, tier1=_DEGENERATE_DUP_TIER1),
     # extreme-values axis (r12): sales facts with edge rows appended
-    "extreme": (build_extreme, ["lineitem", "orders"]),
-    # extreme-values axes (r13, VERDICT r12 #4): the other three scopes
-    "extreme_docs": (None, ["documents"]),  # builder needs spark; special-cased
-    "extreme_events": (build_extreme_events, ["events"]),
-    "extreme_emb": (build_extreme_emb, ["embeddings"]),
+    "extreme": Axis(
+        build_extreme, ("lineitem", "orders"),
+        # the r12 q41 fix by name, decimal-heavy aggregates,
+        # negative-revenue ranking, set ops over the duplicated line,
+        # FK-orphan handling, and month keys at the year-5/9999 edges
+        tier1=(
+            "q41_exact_moment_stats",  # the r12 fix: DECIMAL(19,2) squared terms
+            "q12_pricing_summary",     # decimal sums over negative/edge money
+            "q01_customer_monthly_spend",  # month keys at 0005/9999 boundaries
+            "q02_sales_team_incentive",    # rank with negative revenue months
+            "q10_rank_top1",
+            "q63_fk_orphans",          # the planted orphans, both directions
+            "q08_distinct",            # duplicated line collapses identically
+            "q17_join_left_agg",
+            "q107_supplier_part_breadth",
+            "q108_cohort_ltv",         # cohort index at year-5/9999 months
+        ),
+        # q26's due_date lands in year 10000 (9999-12-31 + 30 days) and
+        # the two engines RENDER five-digit years differently — Spark
+        # uses the ISO-8601 expanded-year sign ("+10000-01-30"), DuckDB
+        # does not ("10000-01-30"). Values agree; only the text form
+        # differs, and only via the ts-as-string fallback (pandas cannot
+        # represent the value at all). Upstream rendering behavior on
+        # data outside any real domain — pinned, not patched (matching
+        # DuckDB would mean changing timestamp→string semantics that
+        # month_key and every string-rendered date rely on).
+        expected=frozenset({"q26_date_functions"}),
+    ),
+    # extreme-values axes (r13, VERDICT r12 #4): the other three scopes,
+    # their divergences pinned in tests/test_extreme_values.py
+    "extreme_docs": Axis(
+        build_extreme_docs, _DOCS,
+        # per-doc stats over empty/whitespace/single-char texts
+        # (size(NULL)/empty-array edges), the repetition family on the
+        # 3000x one-token doc, shingle/LSH over the 60k-char doc,
+        # chunking at both length extremes, and the stopword profile
+        # (whose explicit NULL-text drop the axis exists to prove)
+        tier1=(
+            "t01_text_stats",
+            "t07_repetition",
+            "t14_doc_chunking",
+            "t34_char_entropy",
+            "t40_stopword_profile",
+            "d03_minhash_lsh",
+        ),
+        # d15: the engine's own fail-loud guard — prefix blocking
+        # requires every text >= the 16-char block width, and the axis
+        # plants 1-char / empty docs. The guard exists precisely so short
+        # texts can't silently vanish from the prefix index (its message
+        # says to lower the block width to the corpus minimum); erroring
+        # here is the designed behavior, same class as IVF/PQ on the
+        # empty corpus.
+        expected=frozenset({"d15_prefix_duplicates"}),
+    ),
+    "extreme_events": Axis(
+        build_extreme_events, _EVENTS,
+        # the e08 epoch-micros fix (year-9999 gap through the Python
+        # stage), the e18 DECIMAL(19,2) widening at the money edge,
+        # tumbling sums over edge values, and burst scoring over the
+        # planted duplicate-timestamp minute
+        tier1=(
+            "e01_tumbling_hourly",
+            "e08_interarrival_stats",
+            "e18_rolling_zscore",
+            "e33_burst_detection",
+        ),
+        # e03/e07: the session END timestamp for a year-9999 event lands
+        # in year 10000 (9999-12-31 23:59:59 + the 30-min gap window) —
+        # the q26 rendering class of the extreme axis above
+        expected=frozenset({"e03_session_window", "e07_sessionize_lag"}),
+    ),
+    "extreme_emb": Axis(
+        build_extreme_emb, _EMB,
+        # brute-force cosine over the zero-norm vector (0/0 guard), norm
+        # audit at max magnitude, and the PQ path at the quantized
+        # grid's working edge
+        tier1=("a01_ann_bruteforce", "a18_norm_audit", "a05_ann_pq"),
+    ),
 }
 
 
-def _ts_as_string_compare(name, spark, con, queries, oracles, out):
-    """Compare with timestamp columns cast to strings on BOTH engines —
-    the fallback for values pandas' ns timestamps cannot represent."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
-
-    # DATE goes through TIMESTAMP first on both sides: the base
-    # comparator normalizes date vs timestamp_ntz to the same
-    # datetime64, so the string fallback must render them identically
-    # too ("... 00:00:00", never the bare date).
-    df = queries[name](spark, out)
-    casts = [
-        F.col(f.name).cast("timestamp_ntz").cast("string").alias(f.name)
-        if isinstance(f.dataType, (TimestampType, TimestampNTZType, DateType))
-        else F.col(f.name)
-        for f in df.schema.fields
-    ]
-    df2 = df.select(*casts)
-    desc = con.execute(f"DESCRIBE SELECT * FROM ({oracles[name]}) q").fetchall()
-    cols = ", ".join(
-        f'CAST(CAST("{c}" AS TIMESTAMP) AS VARCHAR) AS "{c}"'
-        if t.startswith("TIMESTAMP") or t == "DATE"
-        else f'"{c}"'
-        for c, t, *_ in desc
-    )
-    r = compare_spark_to_oracle(
-        name, df2, run_oracle(con, f"SELECT {cols} FROM ({oracles[name]}) q")
-    )
-    return r.match, "" if r.match else str(r.mismatches[:2])[:300]
-
-
 def main() -> int:
-    which = sys.argv[1:] or list(FIXTURES)
     spark = get_spark_session(master="local[16]", shuffle_partitions=16)
-    oracles = E.oracle_sql()
-    queries = E.queries()
     failures: list[tuple[str, str, str]] = []
-    for fam in which:
-        builder, tables = FIXTURES[fam]
-        if tables is None:
-            scope = sorted(oracles)
-        else:
-            pat = re.compile(r"\b(" + "|".join(tables) + r")\b")
-            scope = sorted(n for n, sql in oracles.items() if pat.search(sql))
-        expected = {
-            "empty": EMPTY_EXPECTED,
-            "extreme": EXTREME_EXPECTED,
-            "extreme_docs": EXTREME_DOCS_EXPECTED,
-            "extreme_events": EXTREME_EVENTS_EXPECTED,
-            "extreme_emb": EXTREME_EMB_EXPECTED,
-        }.get(fam, set())
+    for fam in sys.argv[1:] or list(FIXTURES):
+        axis = FIXTURES[fam]
+        scope = axis.sweep_scope()
         out = tempfile.mkdtemp(prefix=f"nullsweep-{fam}-")
-        if fam == "docs":
-            build_docs(out, spark)
-        elif fam == "extreme_docs":
-            build_extreme_docs(out, spark)
-        else:
-            builder(out)
+        axis.build(out)
         con = duckdb_connection(out)
         print(f"== {fam}: {len(scope)} queries ==", flush=True)
         for name in scope:
             try:
-                r = compare_spark_to_oracle(
-                    name, queries[name](spark, out), run_oracle(con, oracles[name])
-                )
-                ok, detail = r.match, "" if r.match else str(r.mismatches[:2])[:300]
+                r = oracle_parity(spark, out, con, name)
+                ok, detail = r.match, r.detail
             except Exception as e:  # noqa: BLE001
-                if "out of bounds timestamp" in str(e):
-                    # pandas/Arrow (the compare layer on BOTH sides)
-                    # cannot hold timestamps outside the ns range
-                    # [1677, 2262]; the ENGINES are fine. Re-compare
-                    # with every timestamp column rendered to string
-                    # on both sides — rendering equality is already a
-                    # cross-engine contract (month_key is substring of
-                    # the cast).
-                    try:
-                        ok, detail = _ts_as_string_compare(
-                            name, spark, con, queries, oracles, out
-                        )
-                        if ok:
-                            detail = "(ts-as-string: out-of-ns-range values)"
-                    except Exception as e2:  # noqa: BLE001
-                        ok, detail = False, f"{type(e2).__name__}: {e2}"[:300]
-                else:
-                    ok, detail = False, f"{type(e).__name__}: {e}"[:300]
-            if not ok and name in expected:
+                ok, detail = False, f"{type(e).__name__}: {e}"[:300]
+            if not ok and name in axis.expected:
                 print("XFAIL(pinned)", fam, name, flush=True)
                 continue
             print(("PASS" if ok else f"FAIL {detail}"), fam, name, flush=True)

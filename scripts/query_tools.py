@@ -12,10 +12,17 @@ Usage:
          (--sf defaults to $SPARK_GRAFT_SF_DIR)
   python scripts/query_tools.py --diff A.json B.json
       -> the queries whose fingerprints differ between two such files
-  python scripts/query_tools.py time [-n N] <query> [query ...]
-      -> warm + min-of-N noop-sink timing per query (bench methodology)
-  python scripts/query_tools.py parity [--sf DIR] <query> [query ...]
-      -> driver-style DuckDB oracle hash comparison per query
+  python scripts/query_tools.py time [-n N] [query ...]
+      -> warm + min-of-N noop-sink timing per query (bench methodology),
+         with the plan-build and execute seconds of each timed run
+         (default: every bench.HEADLINE query; --sf is
+         $SPARK_GRAFT_SF_DIR, default sf0.1)
+  python scripts/query_tools.py parity [--sf DIR] [query ...]
+      -> the driver's verify loop: one session, DuckDB oracle hash
+         comparison per query (testing.oracle_parity; rows-only queries
+         are collected), then the driver/JVM/Python-worker RSS and the
+         persisted RDDs and storage MB after it (default: every
+         DRIVER_WINDOW query at sf0.01)
 
 All build the same session bench.py does (local[$SPARK_GRAFT_CPUS]),
 so plan shapes and timings match the driver's environment.
@@ -131,66 +138,129 @@ def cmd_diff(a: str, b: str) -> None:
         print(f"in one file only: {only}")
 
 
-def cmd_time(names: list[str], n: int = 2) -> None:
+def cmd_time(names: list[str], n: int) -> None:
     spark = _spark()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def run(name: str) -> None:
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    def run(name: str) -> tuple[float, float]:
+        """(plan-build s, execute s): build = calling the registered
+        function (py4j tree building, analysis, eager artifact work),
+        execute = saving that DataFrame to the noop sink."""
+        t0 = time.perf_counter()
+        df = QUERIES[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        return t1 - t0, time.perf_counter() - t1
 
     # canary first (machine-state context, bench methodology)
-    t0 = time.perf_counter()
-    run("q10_rank_top1")
-    warm = time.perf_counter() - t0
-    steady = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        run("q10_rank_top1")
-        steady = min(steady, time.perf_counter() - t0)
+    warm = sum(run("q10_rank_top1"))
+    steady = min(sum(run("q10_rank_top1")) for _ in range(2))
     print(f"canary: warm={warm:.3f} steady={steady:.3f}")
+    builds: list[tuple[float, str]] = []
     for name in names:
         spark.sparkContext.setJobDescription(name)
-        t0 = time.perf_counter()
-        run(name)  # warm
-        warm = time.perf_counter() - t0
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            run(name)
-            best = min(best, time.perf_counter() - t0)
+        try:
+            warm = sum(run(name))
+            runs = [run(name) for _ in range(n)]
+        except Exception as e:  # noqa: BLE001 — a long list must finish
+            print(f"{name}: ERR {type(e).__name__}: {e}"[:300], flush=True)
+            continue
+        finally:
+            spark.sparkContext.setJobDescription(None)
         # trailing canary: the sandbox throttles after sustained CPU
         # use, so each measurement carries its own machine-state stamp
-        t0 = time.perf_counter()
-        run("q10_rank_top1")
-        post = time.perf_counter() - t0
-        print(f"{name}: warm={warm:.3f} steady={best:.3f} (canary_after={post:.3f})")
-        spark.sparkContext.setJobDescription(None)
+        post = sum(run("q10_rank_top1"))
+        split = " ".join(f"{b:.3f}/{e:.3f}" for b, e in runs)
+        print(
+            f"{name}: warm={warm:.3f} steady={min(map(sum, runs)):.3f} "
+            f"build/exec={split} (canary_after={post:.3f})",
+            flush=True,
+        )
+        builds.append((min(b for b, _ in runs), name))
+    if len(builds) > 1:
+        print("\n== top plan-build costs ==")
+        for b, name in sorted(builds, reverse=True)[:15]:
+            print(f"{b:7.3f} {name}")
+
+
+def _rss_mb(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return 0
+
+
+def _descendants() -> dict[int, str]:
+    """pid -> command line of every process below this one: the Spark
+    JVM and the Python workers it forks."""
+    parent: dict[int, int] = {}
+    for d in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                parent[int(d)] = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+    out: dict[int, str] = {}
+    todo = [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        for child, pp in parent.items():
+            if pp == pid and child not in out:
+                try:
+                    with open(f"/proc/{child}/cmdline", "rb") as f:
+                        out[child] = f.read().decode("utf-8", "replace")
+                except OSError:
+                    out[child] = ""
+                todo.append(child)
+    return out
 
 
 def cmd_parity(names: list[str], sf_dir: str) -> None:
-    import __spark_entry__ as E
+    from end_to_end_sales_etl_de_project_spark.plans.registry import (
+        DRIVER_WINDOW,
+        ORACLES,
+    )
     from end_to_end_sales_etl_de_project_spark.testing import (
-        compare_spark_to_oracle,
         duckdb_connection,
-        run_oracle,
+        oracle_parity,
     )
 
     spark = _spark()
+    jsc = spark.sparkContext._jsc
     con = duckdb_connection(sf_dir)
-    oracles = E.oracle_sql()
+    print(
+        f"{'status':6} {'query':34} {'py_mb':>6} {'jvm_mb':>6} {'workers_mb':>10} "
+        f"{'n_workers':>9} {'persisted':>9} {'storage_mem_mb':>14} {'storage_disk_mb':>15}"
+    )
     failures = 0
-    for name in names:
-        if name not in oracles:
-            print(f"SKIP {name} (no oracle)")
-            continue
-        r = compare_spark_to_oracle(
-            name, E.queries()[name](spark, sf_dir), run_oracle(con, oracles[name])
-        )
-        if r.match:
-            print(f"PASS {name}")
+    for name in names or DRIVER_WINDOW:
+        detail = ""
+        if name in ORACLES:
+            r = oracle_parity(spark, sf_dir, con, name)
+            status, detail = ("PASS" if r.match else "FAIL"), r.detail
+            failures += not r.match
         else:
-            failures += 1
-            print(f"FAIL {name}: {r.mismatches[:3]}")
+            QUERIES[name](spark, sf_dir).collect()
+            status = "ROWS"
+        procs = _descendants()
+        jvm = [p for p, cmd in procs.items() if "java" in cmd]
+        workers = [p for p, cmd in procs.items() if "pyspark.daemon" in cmd]
+        infos = jsc.sc().getRDDStorageInfo()
+        mem = sum(i.memSize() for i in infos) >> 20
+        disk = sum(i.diskSize() for i in infos) >> 20
+        print(
+            f"{status:6} {name:34} {_rss_mb(os.getpid()):6d} "
+            f"{sum(map(_rss_mb, jvm)):6d} {sum(map(_rss_mb, workers)):10d} "
+            f"{len(workers):9d} {jsc.getPersistentRDDs().size():9d} {mem:14d} {disk:15d}",
+            flush=True,
+        )
+        if detail:
+            print(f"       {detail}")
+    print(f"# failures={failures}")
     if failures:
         sys.exit(1)
 
@@ -217,6 +287,10 @@ def main() -> None:
         if args and args[0] == "-n":
             args.pop(0)
             n = int(args.pop(0))
+        if not args:
+            import bench
+
+            args = [q for q in bench.HEADLINE if q in QUERIES]
         cmd_time(args, n)
     elif cmd == "parity":
         sf = "/root/testdata/sf0.01"

@@ -27,3 +27,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="module")
+def axis(sf_dir, tmp_path_factory):
+    """Factory over ``scripts/null_sweep_all.FIXTURES``, the one table of
+    degenerate-data axes: ``axis(name)`` builds that axis at most once
+    per module and returns (fixture dir, DuckDB connection over it)."""
+    from end_to_end_sales_etl_de_project_spark.testing import duckdb_connection
+    from scripts import null_sweep_all
+
+    assert null_sweep_all.SF == sf_dir
+    built: dict[str, tuple[str, object]] = {}
+
+    def get(name: str):
+        if name not in built:
+            d = str(tmp_path_factory.mktemp(name))
+            null_sweep_all.FIXTURES[name].build(d)
+            built[name] = (d, duckdb_connection(d))
+        return built[name]
+
+    yield get
+    for _, con in built.values():
+        con.close()

@@ -10,82 +10,40 @@ where it is weakest —
 - TWO-DOC: a two-document near-dup corpus, the smallest non-empty
   pairwise input (exactly one candidate pair; n=2 statistics).
 
-The full 85-query documents-scope sweep lives in
-scripts/null_sweep_all.py (fixtures ``identical`` / ``twodoc``; run
-per-round on an idle box — r12 first run: 170/170 PASS, zero
-divergences, no allowlist needed). This suite keeps a bounded
-representative set pinned in CI: the dedup/component/containment
-family plus the tie-heavy rank shapes.
+The full documents-scope sweep lives in scripts/null_sweep_all.py
+(axes ``identical`` / ``twodoc``; run per-round on an idle box — r12
+first run: 170/170 PASS, zero divergences, no allowlist needed). This
+suite keeps a bounded representative set pinned in CI: the
+dedup/component/containment family plus the tie-heavy rank shapes.
+
+Both corpora and the representative set are the "identical" and
+"twodoc" records of ``scripts/null_sweep_all.FIXTURES``, the one table
+of degenerate-data axes that the script and the suites share; the
+``axis`` factory in conftest.py builds each once per module.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
-from end_to_end_sales_etl_de_project_spark.testing import (
-    compare_spark_to_oracle,
-    duckdb_connection,
-    run_oracle,
-)
+from end_to_end_sales_etl_de_project_spark.testing import oracle_parity
 
-# Mirrors scripts/null_sweep_all.py's builders (single source of the
-# fixture text so the script and the suite cannot drift).
-from scripts.null_sweep_all import build_identical, build_twodoc
+from scripts.null_sweep_all import FIXTURES
 
 
 @pytest.fixture(scope="module", params=["identical", "twodoc"])
-def degen_sf_dir(request, tmp_path_factory):
-    d = tmp_path_factory.mktemp(f"degen-{request.param}")
-    {"identical": build_identical, "twodoc": build_twodoc}[request.param](str(d))
-    return str(d)
+def degen(request, axis):
+    return axis(request.param)
 
 
-@pytest.fixture(scope="module")
-def degen_con(degen_sf_dir):
-    con = duckdb_connection(degen_sf_dir)
-    yield con
-    con.close()
-
-
-# Representative spread over the families the fixtures stress:
-# exact-dup grouping, banded LSH (hot-bucket worst case), SimHash,
-# all-pairs Jaccard/containment, component resolution + histogram,
-# tier attribution (all four tiers hit the same clique), chunk-grain
-# near-dup, substring/prefix dedup, and the tie-heavy curation ranks.
-PARITY_QUERIES = [
-    "d01_dedup_exact",
-    "d03_minhash_lsh",
-    "d04_simhash",
-    "d02_ngram_jaccard",
-    "d06_neardup_resolve",
-    "d11_chunk_neardup",
-    "d14_cluster_size_histogram",
-    "d15_prefix_duplicates",
-    "d16_containment_pairs",
-    "d17_substring_dedup",
-    "d24_dedup_tier_attribution",
-    "d26_neardup_survivors",
-    "t18_chunk_dedup",
-    "c01_curate_corpus",
-    "c02_training_manifest",
-    "c11_diversity_sample",
-    "t23_vocab_coverage",
-]
-
-
-@pytest.mark.parametrize("name", PARITY_QUERIES)
-def test_degenerate_duplication_oracle_parity(spark, degen_sf_dir, degen_con, name):
-    r = compare_spark_to_oracle(
-        name,
-        E.queries()[name](spark, degen_sf_dir),
-        run_oracle(degen_con, E.oracle_sql()[name]),
-    )
+@pytest.mark.parametrize("name", FIXTURES["identical"].tier1_scope())
+def test_degenerate_duplication_oracle_parity(spark, degen, name):
+    r = oracle_parity(spark, *degen, name)
     assert r.match, f"{name} diverges on degenerate-dup corpus: {r.mismatches[:3]}"
 
 
-def test_identical_corpus_tier_cascade(spark, tmp_path_factory):
+def test_identical_corpus_tier_cascade(spark, axis):
     """Structural invariants, not just parity — both engines agreeing
     on a wrong shape would slip past the oracle compare. On the
     all-identical corpus the DOCUMENTED division of labor between
@@ -107,26 +65,25 @@ def test_identical_corpus_tier_cascade(spark, tmp_path_factory):
     If the guard semantics change (e.g. per-bucket sampling instead of
     dropping), this pins where the 39 duplicates must still be caught.
     """
-    d = tmp_path_factory.mktemp("degen-clique")
-    build_identical(str(d))
-    exact = E.queries()["d01_dedup_exact"](spark, str(d)).collect()
+    d, _ = axis("identical")
+    exact = E.queries()["d01_dedup_exact"](spark, d).collect()
     assert len(exact) == 1
     assert (exact[0]["canonical_id"], exact[0]["n_copies"]) == (0, 40)
 
-    hist = E.queries()["d14_cluster_size_histogram"](spark, str(d)).collect()
+    hist = E.queries()["d14_cluster_size_histogram"](spark, d).collect()
     sizes = {r["cluster_size"]: r["n_clusters"] for r in hist}
     assert sizes == {1: 40}, f"near-dup components should be empty: {sizes}"
 
     tiers = {
         r["tier"]: (r["n_flagged_new"], r["n_flagged_cum"])
-        for r in E.queries()["d24_dedup_tier_attribution"](spark, str(d)).collect()
+        for r in E.queries()["d24_dedup_tier_attribution"](spark, d).collect()
     }
     assert tiers["1_exact"] == (39, 39), tiers
     assert tiers["2_neardup"] == (0, 39), tiers
     assert tiers["3_containment"] == (0, 39), tiers
 
 
-def test_twodoc_cascade_catches_the_pair(spark, tmp_path_factory):
+def test_twodoc_cascade_catches_the_pair(spark, axis):
     """The two-doc corpus holds exactly one true near-dup pair
     (3-shingle Jaccard 0.8667). Pins the measured division of labor:
 
@@ -140,26 +97,23 @@ def test_twodoc_cascade_catches_the_pair(spark, tmp_path_factory):
       tier (tier 3), n_flagged_cum = 1 — the defense-in-depth the
       multi-tier design exists for.
     """
-    d = tmp_path_factory.mktemp("degen-pair")
-    build_twodoc(str(d))
-    exact_pairs = E.queries()["d02_ngram_jaccard"](spark, str(d)).collect()
+    d, _ = axis("twodoc")
+    exact_pairs = E.queries()["d02_ngram_jaccard"](spark, d).collect()
     assert len(exact_pairs) == 1
     assert round(exact_pairs[0]["jaccard"], 4) == 0.8667
 
-    assert E.queries()["d03_minhash_lsh"](spark, str(d)).count() == 0
+    assert E.queries()["d03_minhash_lsh"](spark, d).count() == 0
 
     tiers = {
         r["tier"]: r["n_flagged_cum"]
-        for r in E.queries()["d24_dedup_tier_attribution"](spark, str(d)).collect()
+        for r in E.queries()["d24_dedup_tier_attribution"](spark, d).collect()
     }
     assert tiers["3_containment"] == 1, tiers
 
 
-def test_twodoc_corpus_shape(tmp_path_factory):
-    d = tmp_path_factory.mktemp("degen-two")
-    build_twodoc(str(d))
-    n, dist = duckdb.connect().execute(
-        f"SELECT count(*), count(DISTINCT text) "
-        f"FROM read_parquet('{d}/documents.parquet')"
+def test_twodoc_corpus_shape(axis):
+    _, con = axis("twodoc")
+    n, dist = con.execute(
+        "SELECT count(*), count(DISTINCT text) FROM documents"
     ).fetchone()
     assert (n, dist) == (2, 2)

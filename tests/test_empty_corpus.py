@@ -4,79 +4,35 @@ partition, a new feed's first day, a decontamination pass that drops
 everything — and the engine must keep its oracle contract there, not
 crash on driver-side folds or diverge on SUM-over-zero-rows NULLs.
 
-The full 242-query sweep lives in scripts/null_sweep_all.py's sibling
-pass (run per-round); this suite keeps a bounded representative set +
-the r11 fixes + the documented divergences pinned in CI.
+The full sweep over every registered oracle is scripts/null_sweep_all.py
+(axis ``empty``); this suite keeps a bounded representative set + the
+r11 fixes + the documented divergences pinned in CI. The fixture, the
+representative set and the divergence allowlist are the "empty" record
+of ``scripts/null_sweep_all.FIXTURES``, the one table of degenerate-data
+axes that the script and the suites share; the ``axis`` factory in
+conftest.py builds it once per module.
 """
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
 import __spark_entry__ as E
-from end_to_end_sales_etl_de_project_spark.testing import (
-    compare_spark_to_oracle,
-    duckdb_connection,
-    run_oracle,
-)
+from end_to_end_sales_etl_de_project_spark.sources.tables import TABLES
+from end_to_end_sales_etl_de_project_spark.testing import oracle_parity, run_oracle
 
-# The 0-row fixture comes from scripts/null_sweep_all.py's builder
-# (single source of the fixture text so the script and the suite
-# cannot drift).
-from scripts import null_sweep_all
-from scripts.null_sweep_all import ALL_TABLES
+from scripts.null_sweep_all import FIXTURES
 
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(sf_dir, tmp_path_factory):
-    assert null_sweep_all.SF == sf_dir
-    d = tmp_path_factory.mktemp("empty-sf")
-    null_sweep_all.build_empty(str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def empty_con(empty_sf_dir):
-    return duckdb_connection(empty_sf_dir)
-
-
-# Representative spread: one per operator family, plus every query the
-# r11 empty-corpus sweep fixed (q34 schema-on-readback, q102/c15
-# SUM-over-zero coalesce) so the regressions stay visible by name.
-PARITY_QUERIES = [
-    "q12_pricing_summary",      # grouped agg
-    "q34_partitioned_write_readback",  # r11 fix: schema on empty readback
-    "q102_constraint_audit",    # r11 fix: empty batch passes its checks
-    "c15_rule_attribution",     # r11 fix: zero evaluated, zero failed
-    "q61_union_by_name",        # schema-evolution union of two empty gens
-    "q92_approx_error_bounds",  # sketch audit over zero groups
-    "q81_cumulative_distinct",  # window over empty spine
-    "q106_volume_shipping",     # multi-join
-    "d01_dedup_exact",          # dedup family
-    "d03_minhash_lsh",          # LSH family (artifact over empty corpus)
-    "d24_dedup_tier_attribution",  # full cascade: all tiers zero
-    "t01_text_stats",           # text family
-    "t23_vocab_coverage",       # top-k prune over empty vocab
-    "e01_tumbling_hourly",      # events family
-    "a01_ann_bruteforce",       # ANN exact baseline (no training)
-    "c01_curate_corpus",        # curation capstone
-]
+PARITY_QUERIES = FIXTURES["empty"].tier1_scope()
 
 
 @pytest.mark.parametrize("name", PARITY_QUERIES)
-def test_empty_corpus_oracle_parity(spark, empty_sf_dir, empty_con, name):
-    r = compare_spark_to_oracle(
-        name,
-        E.queries()[name](spark, empty_sf_dir),
-        run_oracle(empty_con, E.oracle_sql()[name]),
-    )
+def test_empty_corpus_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("empty"), name)
     assert r.match, f"{name} diverges on the empty corpus: {r.mismatches[:3]}"
 
 
-def test_ann_index_training_fails_loudly_on_empty_corpus(spark, empty_sf_dir):
+def test_ann_index_training_fails_loudly_on_empty_corpus(spark, axis):
     """DOCUMENTED DIVERGENCE: the IVF/PQ paths (a04/a05/a12/a13/a20/
     a21/a22) ERROR on an empty corpus instead of returning the oracle's
     zero rows — training an ANN index over nothing is a deployment
@@ -89,10 +45,10 @@ def test_ann_index_training_fails_loudly_on_empty_corpus(spark, empty_sf_dir):
         ("a22_ivf_cell_balance", "empty corpus"),
     ]:
         with pytest.raises(Exception, match=msg):
-            E.queries()[name](spark, empty_sf_dir).collect()
+            E.queries()[name](spark, axis("empty")[0]).collect()
 
 
-def test_rollup_grand_total_divergence_is_pinned(spark, empty_sf_dir, empty_con):
+def test_rollup_grand_total_divergence_is_pinned(spark, axis):
     """DOCUMENTED DIVERGENCE (upstream Spark): GROUP BY ROLLUP/CUBE/
     GROUPING SETS over EMPTY input emits zero rows in Spark (the
     Expand-based implementation produces no rows to aggregate), while
@@ -101,6 +57,7 @@ def test_rollup_grand_total_divergence_is_pinned(spark, empty_sf_dir, empty_con)
     surfaces here instead of silently flipping the empty-input shape.
     Non-empty inputs hash-match exactly (driver evidence: q18/q21/q38).
     """
+    empty_sf_dir, empty_con = axis("empty")
     for name in ["q18_rollup", "q21_cube", "q38_grouping_sets"]:
         spark_rows = E.queries()[name](spark, empty_sf_dir).count()
         oracle_rows = len(run_oracle(empty_con, E.oracle_sql()[name]))
@@ -108,10 +65,8 @@ def test_rollup_grand_total_divergence_is_pinned(spark, empty_sf_dir, empty_con)
         assert oracle_rows == 1, f"{name}: oracle grand-total row missing"
 
 
-def test_empty_fixture_is_actually_empty(empty_sf_dir):
-    con = duckdb.connect()
-    for name in ALL_TABLES:
-        n = con.execute(
-            f"SELECT COUNT(*) FROM read_parquet('{os.path.join(empty_sf_dir, name)}.parquet')"
-        ).fetchone()[0]
+def test_empty_fixture_is_actually_empty(axis):
+    _, con = axis("empty")
+    for name in TABLES:
+        n = con.execute(f"SELECT COUNT(*) FROM {name}").fetchone()[0]
         assert n == 0, name

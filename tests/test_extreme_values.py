@@ -20,101 +20,53 @@ DECIMAL(18) squared-term overflow as q41 (widened); e08's grouped-map
 stage died on year-9999 timestamps (Arrow's us→ns pandas cast — fixed
 by feeding the UDF epoch micros); e03/e07 inherit the pinned
 five-digit-year rendering divergence.
+
+The four fixtures, the representative sets and the divergence
+allowlists are the "extreme", "extreme_docs", "extreme_events" and
+"extreme_emb" records of ``scripts/null_sweep_all.FIXTURES``, the one
+table of degenerate-data axes that the script and the suites share; the
+``axis`` factory in conftest.py builds each once per module. Timestamps
+outside pandas' ns range fall back to the string-rendered compare inside
+``testing.oracle_parity``, the sweep's path.
 """
 
 from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as E
-from end_to_end_sales_etl_de_project_spark.testing import (
-    compare_spark_to_oracle,
-    duckdb_connection,
-    run_oracle,
-)
-from scripts.null_sweep_all import (
-    _ts_as_string_compare,
-    build_extreme,
-    build_extreme_docs,
-    build_extreme_emb,
-    build_extreme_events,
-)
+from end_to_end_sales_etl_de_project_spark.testing import oracle_parity
+
+from scripts.null_sweep_all import FIXTURES
 
 
-@pytest.fixture(scope="module")
-def extreme_sf_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme-sf")
-    build_extreme(str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def extreme_con(extreme_sf_dir):
-    con = duckdb_connection(extreme_sf_dir)
-    yield con
-    con.close()
-
-
-# Representative spread: the r12 q41 fix by name, decimal-heavy
-# aggregates, negative-revenue ranking, set ops over the duplicated
-# line, FK-orphan handling, and month keys at the year-5/9999 edges.
-PARITY_QUERIES = [
-    "q41_exact_moment_stats",  # the r12 fix: DECIMAL(19,2) squared terms
-    "q12_pricing_summary",     # decimal sums over negative/edge money
-    "q01_customer_monthly_spend",  # month keys at 0005/9999 boundaries
-    "q02_sales_team_incentive",    # rank with negative revenue months
-    "q10_rank_top1",
-    "q63_fk_orphans",          # the planted orphans, both directions
-    "q08_distinct",            # duplicated line collapses identically
-    "q17_join_left_agg",
-    "q107_supplier_part_breadth",
-    "q108_cohort_ltv",         # cohort index at year-5/9999 months
-]
-
-
-@pytest.mark.parametrize("name", PARITY_QUERIES)
-def test_extreme_values_oracle_parity(spark, extreme_sf_dir, extreme_con, name):
-    r = compare_spark_to_oracle(
-        name,
-        E.queries()[name](spark, extreme_sf_dir),
-        run_oracle(extreme_con, E.oracle_sql()[name]),
-    )
+@pytest.mark.parametrize("name", FIXTURES["extreme"].tier1_scope())
+def test_extreme_values_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("extreme"), name)
     assert r.match, f"{name} diverges on extreme-values corpus: {r.mismatches[:3]}"
 
 
-def test_out_of_ns_timestamps_compare_as_strings(spark, extreme_sf_dir, extreme_con):
+def test_out_of_ns_timestamps_compare_as_strings(spark, axis):
     """Timestamps outside pandas' ns range [1677, 2262] cannot ride the
     normal comparator (Arrow refuses the cast on BOTH engines' paths) —
     the engines themselves agree; proven via the string-rendered
     compare. q44 returns raw year-9999/year-5 timestamps."""
-    ok, detail = _ts_as_string_compare(
-        "q44_dedup_keep_latest",
-        spark,
-        extreme_con,
-        E.queries(),
-        E.oracle_sql(),
-        extreme_sf_dir,
-    )
-    assert ok, detail
+    r = oracle_parity(spark, *axis("extreme"), "q44_dedup_keep_latest")
+    assert r.ts_as_string
+    assert r.match, r.detail
 
 
-def test_year_10000_rendering_divergence_is_pinned(spark, extreme_sf_dir, extreme_con):
+def test_year_10000_rendering_divergence_is_pinned(spark, axis):
     """DOCUMENTED DIVERGENCE (upstream rendering): five-digit years
     render with the ISO-8601 expanded-year sign in Spark
     ("+10000-01-30") but without it in DuckDB ("10000-01-30"). q26's
     due_date = 9999-12-31 + 30 days is the one synthetic row that
     crosses the boundary. Values agree; only the text form differs.
     Pinned so an upstream change in either renderer surfaces here."""
-    ok, detail = _ts_as_string_compare(
-        "q26_date_functions",
-        spark,
-        extreme_con,
-        E.queries(),
-        E.oracle_sql(),
-        extreme_sf_dir,
-    )
-    assert not ok, "year-10000 rendering now AGREES — update the pin and the sweep allowlist"
-    assert "+10000" in detail and "'10000" in detail, detail
+    r = oracle_parity(spark, *axis("extreme"), "q26_date_functions")
+    assert r.ts_as_string
+    assert not r.match, "year-10000 rendering now AGREES — update the pin and the sweep allowlist"
+    assert "+10000" in r.detail and "'10000" in r.detail, r.detail
+    assert "q26_date_functions" in FIXTURES["extreme"].expected
 
 
 # ---------------------------------------------------------------------------
@@ -122,130 +74,34 @@ def test_year_10000_rendering_divergence_is_pinned(spark, extreme_sf_dir, extrem
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def extreme_docs_dir(tmp_path_factory, spark):
-    d = tmp_path_factory.mktemp("extreme-docs")
-    build_extreme_docs(str(d), spark)
-    return str(d)
+@pytest.mark.parametrize("name", FIXTURES["extreme_docs"].tier1_scope())
+def test_extreme_docs_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("extreme_docs"), name)
+    assert r.match, f"{name} diverges on extreme-docs corpus: {r.mismatches[:3]}"
 
 
-@pytest.fixture(scope="module")
-def extreme_events_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme-events")
-    build_extreme_events(str(d))
-    return str(d)
+@pytest.mark.parametrize("name", FIXTURES["extreme_events"].tier1_scope())
+def test_extreme_events_oracle_parity(spark, axis, name):
+    """Queries returning raw year-9999 timestamps (e01's window_start,
+    e18's ts) cannot ride the pandas comparator; oracle_parity
+    re-compares them string-rendered on BOTH engines."""
+    r = oracle_parity(spark, *axis("extreme_events"), name)
+    assert r.match, f"{name} diverges on extreme-events corpus: {r.detail}"
 
 
-@pytest.fixture(scope="module")
-def extreme_emb_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme-emb")
-    build_extreme_emb(str(d))
-    return str(d)
-
-
-# Representatives: per-doc stats over empty/whitespace/single-char
-# texts (size(NULL)/empty-array edges), the repetition family on the
-# 3000x one-token doc, shingle/LSH over the 60k-char doc, chunking at
-# both length extremes, and the new stopword profile (whose explicit
-# NULL-text drop the axis exists to prove).
-DOCS_PARITY = [
-    "t01_text_stats",
-    "t07_repetition",
-    "t14_doc_chunking",
-    "t34_char_entropy",
-    "t40_stopword_profile",
-    "d03_minhash_lsh",
-]
-
-
-@pytest.mark.parametrize("name", DOCS_PARITY)
-def test_extreme_docs_oracle_parity(spark, extreme_docs_dir, name):
-    con = duckdb_connection(extreme_docs_dir)
-    try:
-        r = compare_spark_to_oracle(
-            name,
-            E.queries()[name](spark, extreme_docs_dir),
-            run_oracle(con, E.oracle_sql()[name]),
-        )
-        assert r.match, f"{name} diverges on extreme-docs corpus: {r.mismatches[:3]}"
-    finally:
-        con.close()
-
-
-# Representatives: the e08 epoch-micros fix (year-9999 gap through the
-# Python stage), the e18 DECIMAL(19,2) widening at the money edge,
-# tumbling sums over edge values, and burst scoring over the planted
-# duplicate-timestamp minute.
-EVENTS_PARITY = [
-    "e01_tumbling_hourly",
-    "e08_interarrival_stats",
-    "e18_rolling_zscore",
-    "e33_burst_detection",
-]
-
-
-@pytest.mark.parametrize("name", EVENTS_PARITY)
-def test_extreme_events_oracle_parity(spark, extreme_events_dir, name):
-    """Same fallback discipline as the sweep: queries returning raw
-    year-9999 timestamps (e01's window_start, e18's ts) cannot ride
-    the pandas comparator — re-compare string-rendered on BOTH
-    engines, exactly scripts/null_sweep_all.py's path."""
-    con = duckdb_connection(extreme_events_dir)
-    try:
-        try:
-            r = compare_spark_to_oracle(
-                name,
-                E.queries()[name](spark, extreme_events_dir),
-                run_oracle(con, E.oracle_sql()[name]),
-            )
-            ok, detail = r.match, str(r.mismatches[:3])
-        except Exception as e:  # noqa: BLE001
-            if "out of bounds timestamp" not in str(e):
-                raise
-            ok, detail = _ts_as_string_compare(
-                name, spark, con, E.queries(), E.oracle_sql(), extreme_events_dir
-            )
-        assert ok, f"{name} diverges on extreme-events corpus: {detail}"
-    finally:
-        con.close()
-
-
-def test_extreme_events_session_end_rendering_pinned(spark, extreme_events_dir):
+def test_extreme_events_session_end_rendering_pinned(spark, axis):
     """e03/e07's session END for the year-9999 event lands in year
     10000 — the SAME pinned five-digit-year rendering divergence as
     q26 on the sales axis (values agree, ISO expanded-year sign
     differs). Pinned so an upstream renderer change surfaces here."""
-    con = duckdb_connection(extreme_events_dir)
-    try:
-        ok, detail = _ts_as_string_compare(
-            "e03_session_window", spark, con, E.queries(), E.oracle_sql(),
-            extreme_events_dir,
-        )
-        assert not ok, "year-10000 rendering now AGREES — update the pin and EXTREME_EVENTS_EXPECTED"
-        assert "+10000" in detail and "'10000" in detail, detail
-    finally:
-        con.close()
+    r = oracle_parity(spark, *axis("extreme_events"), "e03_session_window")
+    assert r.ts_as_string
+    assert not r.match, "year-10000 rendering now AGREES — update the pin and the extreme_events allowlist"
+    assert "+10000" in r.detail and "'10000" in r.detail, r.detail
+    assert "e03_session_window" in FIXTURES["extreme_events"].expected
 
 
-# Representatives: brute-force cosine over the zero-norm vector (0/0
-# guard), norm audit at max magnitude, and the PQ path at the
-# quantized grid's working edge.
-EMB_PARITY = [
-    "a01_ann_bruteforce",
-    "a18_norm_audit",
-    "a05_ann_pq",
-]
-
-
-@pytest.mark.parametrize("name", EMB_PARITY)
-def test_extreme_emb_oracle_parity(spark, extreme_emb_dir, name):
-    con = duckdb_connection(extreme_emb_dir)
-    try:
-        r = compare_spark_to_oracle(
-            name,
-            E.queries()[name](spark, extreme_emb_dir),
-            run_oracle(con, E.oracle_sql()[name]),
-        )
-        assert r.match, f"{name} diverges on extreme-emb corpus: {r.mismatches[:3]}"
-    finally:
-        con.close()
+@pytest.mark.parametrize("name", FIXTURES["extreme_emb"].tier1_scope())
+def test_extreme_emb_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("extreme_emb"), name)
+    assert r.match, f"{name} diverges on extreme-emb corpus: {r.mismatches[:3]}"

@@ -8,73 +8,37 @@ fixed while the query already holds a window slot (so re-earning
 driver evidence is already scheduled), never discovered later.
 
 Scope is deliberately the window ∩ documents-readers: out-of-window
-queries are exercised as they rotate in (extending this corpus is the
-r8+ follow-up), keeping fixes staleness-safe by construction.
+queries are exercised as they rotate in (the full-registry sweep is
+scripts/null_sweep_all.py), keeping fixes staleness-safe by
+construction.
+
+The corpus, the scope and its exclusions are the "docs" record of
+``scripts/null_sweep_all.FIXTURES``, the one table of degenerate-data
+axes that the script and the suites share; the ``axis`` factory in
+conftest.py builds it once per module.
 """
 
 from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
-from end_to_end_sales_etl_de_project_spark.plans.registry import (
-    DRIVER_WINDOW,
-    ORACLES,
-)
-from end_to_end_sales_etl_de_project_spark.testing import (
-    compare_spark_to_oracle,
-    run_oracle,
-)
+from end_to_end_sales_etl_de_project_spark.plans.registry import ORACLES
+from end_to_end_sales_etl_de_project_spark.testing import oracle_parity
 
-# The planted corpus comes from scripts/null_sweep_all.py's builder
-# (single source of the fixture text so the script and the suite
-# cannot drift).
-from scripts import null_sweep_all
+from scripts.null_sweep_all import FIXTURES
 
 # In-window document-readers deliberately OUTSIDE the parity sweep,
 # each with its own dedicated pin below. An exclusion must name a
 # registered oracle (test_exclusions_are_registered) so it cannot
 # silently outlive a query rename/removal.
-SWEEP_EXCLUSIONS = {
-    "d15_prefix_duplicates",  # fail-loud precondition, pinned below
-}
-
-import re as _re
-
-_READER_PAT = _re.compile(r"\bdocuments\b")
+SWEEP_EXCLUSIONS = FIXTURES["docs"].exclusions
 
 # Sweep scope is DERIVED (VERDICT r9 #1): window ∩ oracle-references-
-# documents, minus the documented exclusions. Rotations update the
-# sweep automatically — the r9 failure mode (d23 displaced e17 after
-# the hand list was written) cannot recur by construction.
-WINDOW_DOC_QUERIES = sorted(
-    n
-    for n in DRIVER_WINDOW
-    if n in ORACLES and _READER_PAT.search(ORACLES[n]) and n not in SWEEP_EXCLUSIONS
-)
-
-@pytest.fixture(scope="module")
-def null_sf_dir(spark, sf_dir, tmp_path_factory):
-    """A full sf-dir clone whose documents.parquet is the planted
-    corpus (``null_sweep_all.build_docs``: every NULL/degenerate corner
-    the synthetic corpus lacks, plus enough normal/near-dup content that
-    the dedup paths stay non-vacuous) — queries and oracles both read it
-    through their normal loaders, so NULL semantics are compared
-    end-to-end."""
-    assert null_sweep_all.SF == sf_dir
-    d = tmp_path_factory.mktemp("null-corpus")
-    null_sweep_all.build_docs(str(d), spark)
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def null_con(null_sf_dir):
-    from end_to_end_sales_etl_de_project_spark.testing import duckdb_connection
-
-    return duckdb_connection(null_sf_dir)
+# documents, minus the documented exclusions.
+WINDOW_DOC_QUERIES = FIXTURES["docs"].tier1_scope()
 
 
 def test_exclusions_are_registered():
@@ -90,7 +54,7 @@ def test_sweep_is_nonvacuous():
     assert WINDOW_DOC_QUERIES, "no in-window documents-readers — sweep vacuous"
 
 
-def test_d15_guard_fires_on_short_text_not_null(spark, tmp_path, null_sf_dir):
+def test_d15_guard_fires_on_short_text_not_null(spark, tmp_path, axis):
     """d15's documented precondition (every text >= 16 chars for the
     16-byte prefix blocks) must still fail LOUDLY on a SHORT non-NULL
     text — but NULL text is outside prefix-dedup scope (r11: the raise
@@ -99,6 +63,7 @@ def test_d15_guard_fires_on_short_text_not_null(spark, tmp_path, null_sf_dir):
     hash-checks in the parity sweep below instead of raising."""
     import shutil
 
+    null_sf_dir, _ = axis("docs")
     d = tmp_path / "short"
     d.mkdir()
     for name in os.listdir(null_sf_dir):
@@ -118,12 +83,13 @@ def test_d15_guard_fires_on_short_text_not_null(spark, tmp_path, null_sf_dir):
         E.queries()["d15_prefix_duplicates"](spark, str(d)).collect()
 
 
-def test_m03_null_payload_emits_no_frames(spark, null_sf_dir):
+def test_m03_null_payload_emits_no_frames(spark, axis):
     """r7 debt pin FLIPPED (r8): sample_frames now skips NULL payloads
     (no frames — nothing to decode), matching the oracle where NULL
     lengths fall out of every frame-window predicate. The full
     oracle-parity check runs in the sweep below; this pin keeps the
     specific regression visible by name."""
+    null_sf_dir, _ = axis("docs")
     frames = E.queries()["m03_frame_sample"](spark, null_sf_dir)
     null_doc_ids = {4, 7}  # build_docs: the NULL-text docs
     got = {r["asset_id"] for r in frames.select("asset_id").distinct().collect()}
@@ -132,10 +98,6 @@ def test_m03_null_payload_emits_no_frames(spark, null_sf_dir):
 
 
 @pytest.mark.parametrize("name", WINDOW_DOC_QUERIES)
-def test_null_corpus_oracle_parity(spark, null_sf_dir, null_con, name):
-    r = compare_spark_to_oracle(
-        name,
-        E.queries()[name](spark, null_sf_dir),
-        run_oracle(null_con, E.oracle_sql()[name]),
-    )
+def test_null_corpus_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("docs"), name)
     assert r.match, f"{name} diverges on NULLs: {r.mismatches[:3]}"

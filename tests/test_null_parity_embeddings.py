@@ -15,70 +15,31 @@ fixed query set (vec_id < 8) is unchanged.
 Scope is self-checking like the other sweeps: every in-window query
 whose oracle references the embeddings table must be in the sweep or on
 the documented exclusion list.
+
+The planted rows, the scope and its exclusions are the "emb" record
+of ``scripts/null_sweep_all.FIXTURES``, the one table of degenerate-data
+axes that the script and the suites share; the ``axis`` factory in
+conftest.py builds it once per module.
 """
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
-import __spark_entry__ as E
-from end_to_end_sales_etl_de_project_spark.plans.registry import (
-    DRIVER_WINDOW,
-    ORACLES,
-)
-from end_to_end_sales_etl_de_project_spark.testing import (
-    compare_spark_to_oracle,
-    duckdb_connection,
-    run_oracle,
-)
+from end_to_end_sales_etl_de_project_spark.plans.registry import ORACLES
+from end_to_end_sales_etl_de_project_spark.testing import oracle_parity
 
-# The planted fixture comes from scripts/null_sweep_all.py's builder
-# (single source of the fixture text so the script and the suite
-# cannot drift).
-from scripts import null_sweep_all
-
-# In-window embeddings-readers deliberately OUTSIDE the parity sweep,
-# each with a documented reason (and a dedicated pin if behavior-
-# bearing). Exclusions must name registered oracles
-# (test_exclusions_are_registered).
-SWEEP_EXCLUSIONS: set[str] = set()
-
-_READER_PAT = re.compile(r"\bembeddings\b")
+from scripts.null_sweep_all import FIXTURES
 
 # Sweep scope is DERIVED (VERDICT r9 #1): window ∩ oracle-references-
-# embeddings, minus the documented exclusions. Rotations update the
-# sweep automatically.
-WINDOW_EMB_QUERIES = sorted(
-    n
-    for n in DRIVER_WINDOW
-    if n in ORACLES and _READER_PAT.search(ORACLES[n]) and n not in SWEEP_EXCLUSIONS
-)
-
-
-@pytest.fixture(scope="module")
-def null_emb_dir(sf_dir, tmp_path_factory):
-    """A full sf-dir clone whose embeddings.parquet is the REAL corpus
-    plus planted rows exercising every NULL/shape corner, among them a
-    full-LENGTH vector with a NULL element: it passes the size gate but
-    must be excluded by the element-nullity predicate (ADVICE r9 — the
-    numpy seams would otherwise crash where DuckDB NULL-propagates).
-    Written by DuckDB (``null_sweep_all.build_emb``) so the parquet
-    keeps the FLOAT[] physical type of the canonical file."""
-    assert null_sweep_all.SF == sf_dir
-    d = tmp_path_factory.mktemp("null-emb")
-    null_sweep_all.build_emb(str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def null_emb_con(null_emb_dir):
-    return duckdb_connection(null_emb_dir)
+# the-family, minus the documented exclusions (each must name a
+# registered oracle — test_exclusions_are_registered). Rotations update
+# the sweep automatically.
+WINDOW_EMB_QUERIES = FIXTURES["emb"].tier1_scope()
 
 
 def test_exclusions_are_registered():
-    for name in SWEEP_EXCLUSIONS:
+    for name in FIXTURES["emb"].exclusions:
         assert name in ORACLES, f"stale sweep exclusion: {name}"
 
 
@@ -87,10 +48,6 @@ def test_sweep_is_nonvacuous():
 
 
 @pytest.mark.parametrize("name", WINDOW_EMB_QUERIES)
-def test_null_embeddings_oracle_parity(spark, null_emb_dir, null_emb_con, name):
-    r = compare_spark_to_oracle(
-        name,
-        E.queries()[name](spark, null_emb_dir),
-        run_oracle(null_emb_con, E.oracle_sql()[name]),
-    )
+def test_null_embeddings_oracle_parity(spark, axis, name):
+    r = oracle_parity(spark, *axis("emb"), name)
     assert r.match, f"{name} diverges on NULLs: {r.mismatches[:3]}"

@@ -450,3 +450,38 @@ def test_neardup_components_matches_union_find(spark, edges):
     for i in range(n):
         assert got[i][0] == expect[i], (i, got[i], expect[i])
         assert got[i][1] == (i == expect[i]), (i, got[i])
+
+
+def test_h60_forms_agree_on_ascii_and_utf8(spark):
+    """The three forms of the 60-bit hash in functions/hashing — Spark
+    ``h60``, DuckDB ``h60_sql`` and the driver-side ``h60_py`` — agree on
+    ASCII and on multi-byte UTF-8 (2-, 3- and 4-byte sequences): every
+    engine hashes the UTF-8 bytes."""
+    import duckdb
+
+    from end_to_end_sales_etl_de_project_spark.functions.hashing import (
+        h60,
+        h60_py,
+        h60_sql,
+    )
+
+    texts = [
+        "", "a", "the quick brown fox", "17#3", "café crème", "ß" * 40,
+        "naïve — dash", "中文分词测试", "emoji 🚀 four-byte", "mixed é中🚀",
+    ]
+    on_spark = {
+        r["s"]: r["h"]
+        for r in spark.createDataFrame([(t,) for t in texts], "s string")
+        .select("s", h60("s").alias("h"))
+        .collect()
+    }
+    on_duckdb = dict(
+        duckdb.connect().execute(
+            f"SELECT s, {h60_sql('s')} FROM (SELECT unnest(?::VARCHAR[]) AS s)",
+            [texts],
+        ).fetchall()
+    )
+    in_python = {t: h60_py(t) for t in texts}
+    assert on_spark == on_duckdb == in_python
+    assert len(set(in_python.values())) == len(texts)
+    assert all(0 <= h < 1 << 60 for h in in_python.values())

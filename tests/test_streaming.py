@@ -605,6 +605,48 @@ def test_mixture_monitor_stream_equals_t32_batch(spark, docs_src, tmpdir):
     assert len(want) > 1 and got == want
 
 
+def test_mixture_monitor_failed_rewrite_keeps_previous_mart(
+    spark, docs_src, tmpdir, monkeypatch
+):
+    """A trigger whose mart write fails must leave the previous
+    trigger's mart readable: the rewrite is staged and swapped in, never
+    a delete-then-write of the live directory. The landing zone has two
+    files, so the monitor runs two triggers; the second one's weights
+    frame fails while it is written."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.utils import StreamingQueryException
+
+    from end_to_end_sales_etl_de_project_spark.operators import curation
+    from end_to_end_sales_etl_de_project_spark.streaming.documents import (
+        start_mixture_monitor,
+    )
+
+    weights = curation.mixture_weights_from_totals
+    written = []
+
+    def second_write_fails(totals):
+        out = weights(totals)
+        written.append(_canon(out))
+        if len(written) == 1:
+            return out
+        return out.withColumn(
+            "n_docs",
+            F.when(F.col("n_docs") >= 0, F.raise_error(F.lit("injected write failure")))
+            .otherwise(F.col("n_docs")),
+        )
+
+    monkeypatch.setattr(curation, "mixture_weights_from_totals", second_write_fails)
+    mart = f"{tmpdir}/mixture-mart"
+    q = start_mixture_monitor(spark, docs_src, mart, f"{tmpdir}/mixture-ckpt")
+    try:
+        with pytest.raises(StreamingQueryException, match="injected write failure"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(written) == 2 and written[0]
+    assert _canon(spark.read.parquet(mart)) == written[0]
+
+
 def _test_bloom_words(spark, sf_dir):
     """Bitmap over the sf corpus's test-split shingles — the artifact a
     deployed gate would load from the decontamination build."""
@@ -762,6 +804,58 @@ def test_neardup_gate_stream_equals_batch_and_d18(spark, sf_dir, tmpdir):
     }
     assert got == want  # gate ≡ d18 on the same split, bit-exact
     assert sum(1 for v in got.values() if v[0] != "novel") > 0  # non-vacuous
+
+
+def test_neardup_gate_replayed_epoch_keeps_one_decision_per_doc(spark, sf_dir, tmpdir):
+    """A run that dies after an epoch's decisions are written but before
+    Spark logs the epoch's commit replays that epoch on restart. The
+    replay must replace the epoch's output, not add a second copy:
+    after the restart the mart holds exactly one decision per
+    document."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from end_to_end_sales_etl_de_project_spark.operators import dedup
+    from end_to_end_sales_etl_de_project_spark.streaming.documents import (
+        start_neardup_gate,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus_sh = dedup.shingle_index(docs, "doc_id", "text")
+    idx = dedup.corpus_lsh_index(
+        corpus_sh, dedup.minhash_signatures(corpus_sh)
+    ).localCheckpoint(eager=True)
+    src = f"{tmpdir}/replay-landing"
+    os.makedirs(src)
+    for i in range(2):
+        staged = f"{src}-stage-{i}"
+        docs.filter(F.col("doc_id") % 2 == i).coalesce(1).write.parquet(staged)
+        pf = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
+        shutil.move(os.path.join(staged, pf), f"{src}/docs-{i:03d}.parquet")
+        shutil.rmtree(staged)
+    mart, ckpt = f"{tmpdir}/replay-decisions", f"{tmpdir}/replay-ckpt"
+
+    def run_gate():
+        gate = start_neardup_gate(spark, src, idx, mart, ckpt)
+        try:
+            gate.processAllAvailable()
+        finally:
+            gate.stop()
+
+    run_gate()
+    commits = f"{ckpt}/commits"
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1  # two files, one per trigger
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    run_gate()
+    assert os.path.exists(os.path.join(commits, str(last)))  # the epoch re-ran
+    decided = spark.read.parquet(mart)
+    n_docs = docs.count()
+    assert decided.count() == n_docs
+    assert decided.select("doc_id").distinct().count() == n_docs
 
 
 def test_burst_stream_equals_batch(spark, sf_dir, events_src):
